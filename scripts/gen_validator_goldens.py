@@ -28,7 +28,7 @@ RUN_DATE = "2026-01-15"
 
 def canon_details(d) -> dict:  # noqa: ANN001
     """Canonicalize a reference details dict to the MAP<STRING,STRING>
-    the Spark battery emits (webxtract/ops/validators.py::_dmap):
+    the battery kernel emits (webxtract/ops/validators.py, module docstring):
     bool -> true/false, round(x,1) floats -> %.1f, ints -> str,
     list[str] -> '; '-joined, list[dict] -> compact JSON."""
     out = {}

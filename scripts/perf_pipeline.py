@@ -1,9 +1,7 @@
 """Focused A/B timing of the extraction+validation pipeline hot path.
 
 Usage: python scripts/perf_pipeline.py [n_rows] [n_passes]
-Times run_pipeline over the cached bench corpus; set
-WEBXTRACT_STUB_DETAILS=1 to A/B the validator-details layer (test-only
-hook in ops.validators)."""
+Times run_pipeline over the cached bench corpus."""
 
 from __future__ import annotations
 
@@ -82,8 +80,6 @@ def main() -> None:
             "cpu_core_s": cpus,
             "gc_s": gcs,
             "run_core_s": runs,
-            "stub_details": os.environ.get("WEBXTRACT_STUB_DETAILS", "0"),
-            "dmap_mode": os.environ.get("WEBXTRACT_DMAP_MODE", ""),
         }
     )
     spark.stop()

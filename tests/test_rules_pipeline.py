@@ -231,11 +231,11 @@ def test_luhn_known_specimen(spark):
     algorithm (ontario_health_card.py:28-59); 5584486673 is the valid
     checksum variant."""
     from webxtract.ops.fake import fake_result_expr
-    from webxtract.ops.validators import _luhn_valid_expr
+    from webxtract.ops.validators import luhn_valid_expr
 
     df = spark.createDataFrame(
         [{"n": "5584486674"}, {"n": "5584486673"}, {"n": "79927398713"}]
-    ).select("n", _luhn_valid_expr(F.col("n")).alias("luhn"))
+    ).select("n", luhn_valid_expr(F.col("n")).alias("luhn"))
     res = {r["n"]: r["luhn"] for r in df.collect()}
     assert res["5584486674"] is False
     assert res["5584486673"] is True
@@ -430,3 +430,25 @@ def test_run_pipeline_cached_plan_physical_identity(spark, corpus):
         return re.sub(r"plan_id=\d+", "plan_id=x", s)
 
     assert phys(analyzed) == phys(opt)
+
+
+def test_run_pipeline_plan_cache_honors_unpersist(spark, corpus):
+    """An input that was persisted when the producer call planned must
+    not pin its cached relation into the plan cache: after unpersist(),
+    a cache hit plans against the files again and returns the same
+    rows."""
+    from webxtract import pipeline as P
+
+    pages_path, _ = corpus
+    run_date = "2026-02-02"  # a fresh cache key for this test
+    pages = spark.read.parquet(pages_path).persist()
+    pages.count()
+    df1 = run_pipeline(pages, run_date=run_date)
+    assert "InMemoryRelation" in df1._jdf.queryExecution().optimizedPlan().toString()
+    want = sorted(map(str, df1.select("url", "success").collect()))
+    pages.unpersist(blocking=True)
+    n_before = len(P._PLAN_CACHE)
+    df2 = run_pipeline(spark.read.parquet(pages_path), run_date=run_date)
+    assert len(P._PLAN_CACHE) == n_before  # a hit
+    assert "InMemoryRelation" not in df2._jdf.queryExecution().optimizedPlan().toString()
+    assert sorted(map(str, df2.select("url", "success").collect())) == want

@@ -23,8 +23,8 @@ from webxtract.ops.extract import extract_pages
 from webxtract.ops.fake import fake_result_expr
 from webxtract.ops.fields import field_expr
 from webxtract.ops.validators import (
-    _luhn_valid_expr,
     document_expiry_validator,
+    luhn_valid_expr,
     validation_results_expr,
     validation_summary_expr,
     with_parsed_dates,
@@ -402,14 +402,14 @@ def q_validator_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_luhn_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """V11's Luhn mod-10 as a higher-order aggregate over derived
-    10-digit numbers."""
+    """V11's Luhn mod-10 over derived 10-digit numbers, through the
+    battery's own ``luhn_valid`` (one Arrow kernel call)."""
     d = _t(spark, sf_dir, "documents").select("doc_id")
     number = F.lpad((F.col("doc_id") * 37 % 1_000_000_000).cast("string"), 10, "7")
     return d.select(
         "doc_id",
         number.alias("number"),
-        _luhn_valid_expr(number).alias("luhn_valid"),
+        luhn_valid_expr(number).alias("luhn_valid"),
     )
 
 

@@ -2,8 +2,8 @@
 
 ``bind_once`` is the load-bearing trick of this engine's rule layer:
 Catalyst inlines a named subexpression at every reference site, and
-interpreted (non-codegen) contexts — higher-order-function lambdas, the
-validator dispatch — re-evaluate each inlined copy per row. Binding the
+interpreted (non-codegen) contexts — higher-order-function lambdas —
+re-evaluate each inlined copy per row. Binding the
 value as a single-element ``transform`` lambda variable guarantees (a)
 exactly one copy of the subtree in the plan and (b) exactly one
 evaluation per row, with every reference a cheap lambda-var access.

@@ -1,185 +1,204 @@
 """The validation battery (operators V1-V46 + V-agg, SURVEY.md §2.5) as
-generated Catalyst column expressions.
+one vectorized Arrow kernel.
 
 The reference runs 5 base validators + 1 type-specific validator per
-document on a thread pool (validation_service.py:306-327); here each
-validator is an independent column expression and the whole battery is
-one codegen'd projection — parallelism is across rows, not checks.
+document on a thread pool (validation_service.py:306-327). Here the
+whole battery is ONE scalar Arrow UDF (``_battery``): Spark hands it a
+batch of the columns the rules read — the 13 field strings, the three
+dates parsed by ``with_parsed_dates`` (date semantics stay in Catalyst),
+``doc_type_enum``, ``run_date`` and ``minimum_age`` — and it returns the
+``array<ValidatorResult>`` column in one Arrow batch. The physical plan
+carries a single ``ArrowEvalPython`` node for the battery; no rule logic
+is analyzed, optimized or code-generated by Catalyst.
 
-Plan-size discipline (the round-1 lesson — a 34 MiB serialized task and
-minutes of janino compile): the 15 provincial/state DL validators and
-the 10 national passport validators are NOT inlined per type. Each
-family is ONE parametrized expression whose constants come from a
-*literal array of config structs*; the per-document config is selected
-with ``filter(cfg_array, c -> c.name == doc_type_enum)`` and bound via
-a ``transform`` lambda, so the plan carries exactly one copy of each
-family's logic plus a constant-folded rule table. Non-matching rows
-never evaluate the lambda (empty filter result), so dispatch cost is
-data-dependent exactly like the reference's dispatch map
-(validation_service.py:129-239).
+Each validator is a plain Python function over one document, written
+close to the reference class it replicates: the 5 base validators, the
+DL and passport families (one function each, parametrized by the
+per-province / per-country config tables below), and the six bespoke
+validators. Statuses (passed/failed/warning/skipped), skip conditions,
+thresholds, check order AND message strings replicate the reference
+byte-for-byte: tests/test_validator_messages.py and
+tests/test_validator_messages_family.py pin every (status, message,
+details) triple against goldens generated by running the reference's
+own validator classes (scripts/gen_validator_goldens.py).
+ValidatorResult.details is a MAP<STRING,STRING> replicating the
+reference's per-check detail dicts under a fixed value
+canonicalization shared with the golden generator:
+  bool       -> "true"/"false"
+  int        -> decimal string
+  round(x,1) -> Spark format_number(x, 1) (HALF_EVEN, thousands grouping)
+  list[str]  -> "; "-joined           (checks_performed, issues, ...)
+  list[dict] -> compact JSON          (document_format matched_patterns)
+Entries keep insertion order, so written map bytes are stable. The
+Verifik external lookup runs in its disabled default (config.py:7
+VERIFIK_API_ENABLED=false), surfaced as details.verifik_api_enabled=
+false on the ON/BC DL results — it changes no status.
 
-Statuses (passed/failed/warning/skipped), skip conditions, thresholds,
-check order AND message strings replicate the reference byte-for-byte:
-the per-validator string constants live in DL_MSGS below (transcribed
-with file:line citations), and tests/test_validator_messages.py pins
-every (status, message) pair against goldens generated by running the
-reference's own validator classes (scripts/gen_validator_goldens.py)
-over the 21 ported cases, and tests/test_validator_messages_family.py
-does the same for the passport/PR/photo/health/US-DL family (105
-cases covering every fail-path string — the reference's warn-branch
-message is always the fixed header, so warning texts live only in
-details). ValidatorResult.details is a MAP<STRING,STRING> replicating
-the reference's per-check detail dicts in full — checks_performed,
-calculated values (ages, day counts, validity years), verdict booleans,
-and the "; "-joined issues/warnings copies of the fail/warn branches
-(ontario_dl.py:236-241) — under the fixed value canonicalization
-documented at _dmap below; tests/test_validator_messages*.py assert
-(status, message, details) triples against reference-generated goldens.
-The Verifik external
-lookup runs in its disabled default (config.py:7 VERIFIK_API_ENABLED=
-false), surfaced as details.verifik_api_enabled=false on the ON/BC DL
-results (ontario_dl.py:223-226, bc_dl.py:244-248) — it changes no
-status.
-
-Date handling: the 27-format tolerant parser (validators/base.py:56-98)
-becomes an ordered coalesce of try_to_date; "now" is the frozen
-``run_date`` job parameter (SURVEY.md §7.4.3).
+The kernel reproduces Spark's string semantics, not Python's defaults:
+``trim`` strips spaces only, regexes follow Java (ASCII ``\\d``/``\\s``,
+``$`` also matching before a final line terminator), and dates are
+passed as epoch days so out-of-range years (0, negative, >9999) that
+``try_to_date`` can produce format exactly as ``date_format`` does.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import json
+import re
 
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import ArrayType, BooleanType
 
 from webxtract.exprs import gateway_cached
-from webxtract.rules import COUNTRY_CODES, DATE_FORMATS_SPARK
+from webxtract.rules import (
+    COUNTRY_CODES,
+    DATE_FORMATS_SPARK,
+    DL_CONFIGS,
+    DL_MSG_DEFAULTS,
+    DL_MSGS,
+    DOCUMENT_FORMAT_PATTERNS,
+    PASSPORT_CONFIGS,
+    PP_FMT_PREFIX,
+    US_LETTER_MATCH_STATES,
+    US_STATE_FORMATS,
+    US_STATE_INDICATORS,
+)
+from webxtract.schemas import FIELD_NAMES, VALIDATOR_RESULT_TYPE
+
+RESULTS_TYPE = ArrayType(VALIDATOR_RESULT_TYPE)
+_RESULTS_ARROW = to_arrow_type(RESULTS_TYPE)
+
+# ------------------------------------------------------ Spark semantics
+
+# Java's `$` (no MULTILINE) also matches before one final line terminator.
+_JAVA_EOL = "(?=(?:\r\n|[\n\r\u0085\u2028\u2029])?\\Z)"
 
 
-def _empty_arr():
-    return F.array().cast("array<string>")
+def _jre(pattern: str) -> re.Pattern:
+    """Compile a Java regex for ``rlike``/``regexp_like`` find semantics
+    (use ``.search``): ASCII character classes, Java ``$``."""
+    return re.compile(pattern.replace("$", _JAVA_EOL), re.ASCII)
 
 
-def _empty_map():
-    return F.map_from_arrays(_empty_arr(), _empty_arr())
+_SEP = _jre(r"[\s\-]")
+_SEP_SLASH = _jre(r"[\s\-/]")
+_WS = _jre(r"\s+")
+_NON_AZ = _jre("[^A-Z]")
+_NON_DIGIT = _jre("[^0-9]")
+_ALPHA = _jre("[A-Z]")
+_ONE_ALPHA = _jre("^[A-Z]$")
+_TWO_ALPHA = _jre("^[A-Z]{2}$")
+_DIGITS = _jre(r"^\d+$")
+_FRANCE_NEAR = _jre("^[A-Z0-9]{9}$")
 
 
-# --------------------------------------------------------- details plumbing
-#
-# ValidatorResult.details replicates the reference's per-check detail
-# dicts (checks_performed lists, calculated values, verdict booleans —
-# e.g. ontario_dl.py:66-226) as MAP<STRING,STRING> with a fixed value
-# canonicalization shared with scripts/gen_validator_goldens.py:
-#   bool       -> "true"/"false"
-#   int        -> decimal string
-#   round(x,1) -> format_number(x, 1)   (both sides HALF_EVEN on the
-#                 same IEEE double; matches the f"{x:.1f}" messages
-#                 already proven byte-exact by the golden suite)
-#   list[str]  -> "; "-joined           (checks_performed, issues, ...)
-#   list[dict] -> compact JSON          (document_format matched_patterns)
+def _trim(s: str) -> str:
+    return s.strip(" ")
 
 
-def _dmap(*pairs) -> Column:
-    """Details map from (key, value) pairs; an entry is present exactly
-    when its value is non-NULL (conditional keys are F.when with no
-    otherwise). Keys may be Columns (config-driven key names, NULL key
-    drops the entry). Entry order is pair order.
-
-    A/B'd alternative (WEBXTRACT_DMAP_MODE=concat): map_concat of
-    per-pair conditional singleton maps — when/create_map/map_concat
-    are codegen expressions, but the battery already evaluates inside
-    HOF lambdas (bind_once/_pick), so the subtree is interpreted either
-    way and the 13 singleton maps + concat copy just allocate more.
-    Measured on the 100k-doc pipeline (executorCpuTime over completed
-    stages, 4 passes each): entries 94-98 core-s/pass, concat
-    111-142 — the entries form stays the default.
-
-    WEBXTRACT_STUB_DETAILS=1 (perf A/B hook, scripts/perf_pipeline.py)
-    replaces every details map with an empty map so the cost of the
-    details layer is directly measurable; correctness tests never set
-    it."""
-    import os
-
-    mode = os.environ.get("WEBXTRACT_DMAP_MODE", "")
-    if os.environ.get("WEBXTRACT_STUB_DETAILS") == "1" or mode == "empty":
-        return _empty_map()
-    if mode == "litvals":  # keep plumbing, replace value exprs
-        pairs = [(k, F.lit("x")) for k, _v in pairs]
-    if mode == "concat":  # codegen-shaped A/B alternative (slower, above)
-        singletons = []
-        for k, v in pairs:
-            kc = F.lit(k) if isinstance(k, str) else k
-            vc = F.lit(v) if isinstance(v, str) else v
-            cond = vc.isNotNull() if isinstance(k, str) else (
-                kc.isNotNull() & vc.isNotNull()
-            )
-            singletons.append(
-                F.when(cond, F.create_map(kc, vc)).otherwise(_empty_map())
-            )
-        return F.map_concat(*singletons) if singletons else _empty_map()
-    entries = F.array(
-        *[
-            F.struct(
-                (F.lit(k) if isinstance(k, str) else k).alias("key"),
-                (F.lit(v) if isinstance(v, str) else v).alias("value"),
-            )
-            for k, v in pairs
-        ]
-    )
-    return F.map_from_entries(
-        F.filter(entries, lambda e: e["key"].isNotNull() & e["value"].isNotNull())
-    )
+def _blank(s: str | None) -> bool:
+    return s is None or _trim(s) == ""
 
 
-def _dv(cond: Column, val) -> Column:
-    """Detail value present only under ``cond``."""
-    return F.when(cond, F.lit(val) if isinstance(val, str) else val)
+def _clean(s: str | None) -> str:
+    """``regexp_replace(upper(trim(coalesce(s, ''))), '[\\s\\-]', '')``."""
+    return _SEP.sub("", _trim(s or "").upper())
 
 
-def _dtrue(cond: Column) -> Column:
-    """The reference's ``details[k] = True`` shape: "true" when cond."""
-    return F.when(cond, F.lit("true"))
+def _fmt1(x: float) -> str:
+    """``format_number(x, 1)``."""
+    return f"{x:,.1f}"
 
 
-def _dbool(present: Column, true_cond: Column) -> Column:
-    """``details[k] = <bool>`` shape: both values emitted."""
-    return F.when(present, F.when(true_cond, "true").otherwise("false"))
+def _ymd(days: int) -> tuple[int, int, int]:
+    """Proleptic-Gregorian (year, month, day) of an epoch day, for any
+    year Spark can hold (days-from-civil inverse)."""
+    z = days + 719468
+    era = z // 146097
+    doe = z - era * 146097
+    yoe = (doe - doe // 1460 + doe // 36524 - doe // 146096) // 365
+    doy = doe - (365 * yoe + yoe // 4 - yoe // 100)
+    mp = (5 * doy + 2) // 153
+    d = doy - (153 * mp + 2) // 5 + 1
+    m = mp + 3 if mp < 10 else mp - 9
+    return yoe + era * 400 + (m <= 2), m, d
 
 
-def _d1f(cond: Column, x: Column) -> Column:
-    """The reference's ``details[k] = round(x, 1)`` shape."""
-    return F.when(cond, F.format_number(x, 1))
+def _fmt_date(days: int) -> str:
+    """``date_format(d, 'yyyy-MM-dd')``: sign only outside 0..9999."""
+    y, m, d = _ymd(days)
+    ys = f"{y:04d}" if 0 <= y <= 9999 else (f"+{y}" if y > 0 else f"-{-y:04d}")
+    return f"{ys}-{m:02d}-{d:02d}"
 
 
-# ---------------------------------------------------- literal-struct helpers
+def _md(days: int, sep: str) -> str:
+    _y, m, d = _ymd(days)
+    return f"{m:02d}{sep}{d:02d}"
 
 
-def _lit_s(v) -> Column:  # noqa: ANN001
-    return F.lit(v) if v is not None else F.lit(None).cast("string")
+def _age(ref: int, dob: int) -> int:
+    """Exact reference age algorithm (age_validator.py:36-38): year diff
+    minus the (month, day) tuple comparison — NOT months_between."""
+    ry, rm, rd = _ymd(ref)
+    by, bm, bd = _ymd(dob)
+    return ry - by - ((rm, rd) < (bm, bd))
 
 
-def _lit_i(v) -> Column:  # noqa: ANN001
-    return F.lit(int(v)) if v is not None else F.lit(None).cast("int")
+_EPOCH_1985 = 5479  # 1985-01-01 as an epoch day
 
 
-def _lit_d(v) -> Column:  # noqa: ANN001
-    return F.lit(float(v)) if v is not None else F.lit(None).cast("double")
+class Doc:
+    """One document as the battery sees it: raw field strings (``None``
+    when NULL), parsed dates as epoch days, and the run parameters."""
+
+    __slots__ = (*FIELD_NAMES, "dob", "issue", "exp", "run", "minimum_age")
+
+    def __init__(self, fields, dob, issue, exp, run, minimum_age):  # noqa: ANN001
+        for name, v in zip(FIELD_NAMES, fields):
+            setattr(self, name, v)
+        self.dob, self.issue, self.exp = dob, issue, exp
+        self.run, self.minimum_age = run, minimum_age
 
 
-def _lit_b(v) -> Column:  # noqa: ANN001
-    return F.lit(bool(v))
+def _result(name: str, issues: list, warnings: list, fail: str, warn: str,
+            ok: str, details: dict, copy_iw: bool = True) -> tuple:
+    """ValidatorResult with the reference's FAILED > WARNING > PASSED
+    precedence (e.g. ontario_dl.py:231-258). ``copy_iw`` is the
+    type-specific shape: the fail message is ``f"{fail}: {'; '.join(
+    issues)}"`` and details gain the joined issues/warnings copies (the
+    warnings key even when empty, ontario_dl.py:234-245). Base
+    validators pass ``copy_iw=False`` with branch-complete messages."""
+    if issues:
+        status = "failed"
+        msg = f"{fail}: {'; '.join(issues)}" if copy_iw else fail
+        if copy_iw:
+            details["issues"] = "; ".join(issues)
+            details["warnings"] = "; ".join(warnings)
+    elif warnings:
+        status, msg = "warning", warn
+        if copy_iw:
+            details["warnings"] = "; ".join(warnings)
+    else:
+        status, msg = "passed", ok
+    return name, status, msg, details
 
 
-def _pick(arr: Column, build) -> Column:  # noqa: ANN001
-    """Bind the (0- or 1-element) config array via a transform lambda and
-    build the result; NULL when the array is empty. The lambda variable is
-    bound once, so ``build``'s expression tree appears exactly once in the
-    plan regardless of how many configs exist."""
-    return F.try_element_at(F.transform(arr, build), F.lit(1))
+def _skipped(name: str, missing: list[str]) -> tuple:
+    """Skip branch of the base validators (base.py:41-53)."""
+    return (name, "skipped", "Required fields missing: " + ", ".join(missing),
+            {"missing_fields": "; ".join(missing)})
 
 
-# ------------------------------------------------------------- primitives
+def _put(d: dict, key: str | None, value: str | None) -> None:
+    """Details entry present only when key and value are set."""
+    if key is not None and value is not None:
+        d[key] = value
+
+
+# ------------------------------------------------------------ date parse
 
 
 def parse_date_expr(col: Column) -> Column:
@@ -197,208 +216,8 @@ def parse_date_expr(col: Column) -> Column:
     return F.coalesce(*attempts)
 
 
-def _age_expr(ref: Column, dob: Column) -> Column:
-    """Exact reference age algorithm (age_validator.py:36-38):
-    year diff minus (month, day) tuple comparison — NOT months_between."""
-    tuple_lt = (F.month(ref) < F.month(dob)) | (
-        (F.month(ref) == F.month(dob)) & (F.dayofmonth(ref) < F.dayofmonth(dob))
-    )
-    return F.year(ref) - F.year(dob) - F.when(tuple_lt, 1).otherwise(0)
-
-
-def _blank(col: Column) -> Column:
-    return col.isNull() | (F.trim(col) == F.lit(""))
-
-
-def _iw(cond: Column, msg: Column | str) -> Column:
-    """Conditional singleton message array."""
-    m = F.lit(msg) if isinstance(msg, str) else msg
-    return F.when(cond, F.array(m)).otherwise(_empty_arr())
-
-
-def _result(name: str | Column, issues: list[Column], warnings: list[Column],
-            fail_msg: str | Column, warn_msg: str | Column, pass_msg: str | Column,
-            skip_cond: Column | None = None, skip_msg: str | Column = "",
-            details=None, join_issues: bool = True,  # noqa: ANN001
-            copy_iw: bool = True, skip_details: Column | None = None,
-            inline_bind: bool = False) -> Column:
-    """Assemble a ValidatorResult struct with the reference's
-    FAILED > WARNING > PASSED precedence (e.g. ontario_dl.py:231-258).
-    The issue/warning arrays are bound once (status + message both read
-    them; unbound they would be evaluated twice per row).
-
-    ``join_issues=True`` is the type-specific-validator shape
-    (``f"{header} failed: {'; '.join(issues)}"``, ontario_dl.py:234,
-    with the warning message a fixed string, :245); ``join_issues=
-    False`` is the base-validator shape where each branch carries a
-    complete message (document_expiry.py:37-64: the fail/warn/pass
-    messages are used verbatim, issues only drive the status).
-
-    ``details`` is a map Column or a callable ``(pi, pw) -> Column``
-    receiving the BOUND issue/warning arrays (for keys that depend on
-    the final verdict, e.g. verifik_api_skipped_reason,
-    ontario_dl.py:226). ``copy_iw=True`` is the type-specific spread
-    (fail: details + issues + warnings — warnings key even when the
-    list is empty, ontario_dl.py:235-241; warn: details + warnings);
-    base validators pass branch-complete details with copy_iw=False.
-    ``skip_details`` replaces details on the skip branch
-    ({"missing_fields": ...}, base.py:49-53)."""
-    from webxtract.exprs import bind_once
-
-    def _c(v):  # noqa: ANN001
-        return F.lit(v) if isinstance(v, str) else v
-
-    iss = F.flatten(F.array(*issues)) if issues else _empty_arr()
-    wrn = F.flatten(F.array(*warnings)) if warnings else _empty_arr()
-
-    def build(p: Column) -> Column:
-        pi, pw = p["iss"], p["wrn"]
-        status = (
-            F.when(F.size(pi) > 0, "failed")
-            .when(F.size(pw) > 0, "warning")
-            .otherwise("passed")
-        )
-        if join_issues:
-            fail_full = F.concat(_c(fail_msg), F.lit(": "), F.array_join(pi, "; "))
-            warn_full = _c(warn_msg)
-        else:
-            fail_full, warn_full = _c(fail_msg), _c(warn_msg)
-        message = (
-            F.when(F.size(pi) > 0, fail_full)
-            .when(F.size(pw) > 0, warn_full)
-            .otherwise(_c(pass_msg))
-        )
-        if skip_cond is not None:
-            status = F.when(skip_cond, "skipped").otherwise(status)
-            message = F.when(skip_cond, _c(skip_msg)).otherwise(message)
-        det = details(pi, pw) if callable(details) else details
-        det = det if det is not None else _empty_map()
-        if copy_iw:
-            det = F.when(
-                F.size(pi) > 0,
-                F.map_concat(
-                    det,
-                    F.create_map(
-                        F.lit("issues"), F.array_join(pi, "; "),
-                        F.lit("warnings"), F.array_join(pw, "; "),
-                    ),
-                ),
-            ).when(
-                F.size(pw) > 0,
-                F.map_concat(det, F.create_map(F.lit("warnings"), F.array_join(pw, "; "))),
-            ).otherwise(det)
-        if skip_cond is not None:
-            det = F.when(
-                skip_cond,
-                skip_details if skip_details is not None else _empty_map(),
-            ).otherwise(det)
-        return F.struct(
-            _c(name).alias("validator_name"),
-            status.alias("status"),
-            message.alias("message"),
-            det.alias("details"),
-        )
-
-    # ``inline_bind``: skip the bind_once HOF so the result struct stays
-    # a codegen-able expression. ONLY valid when the validator sits
-    # directly in a projection (the base five): there
-    # SimplifyExtractValueOps inlines the struct fields and codegen's
-    # common-subexpression elimination restores eval-once semantics.
-    # Inside an interpreted HOF lambda (the _pick-dispatched families)
-    # inlining would RE-EVALUATE iss/wrn per reference — those keep the
-    # bind_once form.
-    if inline_bind:
-        return build(F.struct(iss.alias("iss"), wrn.alias("wrn")))
-    return bind_once(F.struct(iss.alias("iss"), wrn.alias("wrn")), build)
-
-
-def _last_name_param(variant: Column, prefix: str) -> Column:
-    """The three last-name extraction variants (SURVEY.md §2.5), selected
-    per row by the config's ``name_variant``:
-    - "first_word": comma-part else FIRST word else last_name field
-      (ontario_dl.py:28-59; also QC/MB/NS/NL)
-    - "bc": comma-part else last_name field else LAST word (bc_dl.py:27-53)
-    - "field_first": last_name field else comma-part else LAST word
-      (california_dl.py:23-39; also TX, US)
-    """
-    full = F.coalesce(F.col(prefix + "full_name"), F.lit(""))
-    last_field = F.trim(F.coalesce(F.col(prefix + "last_name"), F.lit("")))
-    comma_part = F.trim(F.element_at(F.split(full, ",", 2), 1))
-    words = F.split(F.trim(full), r"\s+")
-    first_word = F.trim(F.element_at(words, 1))
-    last_word = F.trim(F.element_at(words, -1))
-    has_comma = full.contains(",")
-
-    fw = (
-        F.when((full != "") & has_comma & (comma_part != ""), comma_part)
-        .when((full != "") & ~has_comma & (first_word != ""), first_word)
-        .when(last_field != "", last_field)
-        .otherwise(F.lit(""))
-    )
-    bc = (
-        F.when((full != "") & has_comma & (comma_part != ""), comma_part)
-        .when(last_field != "", last_field)
-        .when((full != "") & (F.size(words) >= 2), last_word)
-        .otherwise(F.lit(""))
-    )
-    ff = (
-        F.when(last_field != "", last_field)
-        .when((full != "") & has_comma, comma_part)
-        .when((full != "") & (F.size(words) >= 2), last_word)
-        .otherwise(F.lit(""))
-    )
-    return (
-        F.when(variant == "first_word", fw)
-        .when(variant == "bc", bc)
-        .when(variant == "field_first", ff)
-        .otherwise(F.lit(""))
-    )
-
-
-def _last_name_src_param(variant: Column, prefix: str) -> Column:
-    """Source label matching _last_name_param's chosen branch — the
-    reference interpolates it into the first-letter mismatch issue
-    ("... (from {name_source})", ontario_dl.py:104-107; labels
-    :47-59, california_dl.py:27-39)."""
-    full = F.coalesce(F.col(prefix + "full_name"), F.lit(""))
-    last_field = F.trim(F.coalesce(F.col(prefix + "last_name"), F.lit("")))
-    comma_part = F.trim(F.element_at(F.split(full, ",", 2), 1))
-    words = F.split(F.trim(full), r"\s+")
-    first_word = F.trim(F.element_at(words, 1))
-    has_comma = full.contains(",")
-
-    fw = (
-        F.when((full != "") & has_comma & (comma_part != ""), "full_name_comma_format")
-        .when((full != "") & ~has_comma & (first_word != ""), "full_name_first_word")
-        .when(last_field != "", "last_name_field")
-        .otherwise(F.lit("not_found"))
-    )
-    bc = (
-        # BC's comma-branch label is "full_name_parsed", not the
-        # "full_name_comma_format" of the first_word family (bc_dl.py:40)
-        F.when((full != "") & has_comma & (comma_part != ""), "full_name_parsed")
-        .when(last_field != "", "last_name_field")
-        .when((full != "") & (F.size(words) >= 2), "full_name_last_word")
-        .otherwise(F.lit("not_found"))
-    )
-    ff = (
-        F.when(last_field != "", "last_name_field")
-        .when((full != "") & has_comma, "full_name_parsed")
-        .when((full != "") & (F.size(words) >= 2), "full_name_last_word")
-        .otherwise(F.lit("not_found"))
-    )
-    return (
-        F.when(variant == "first_word", fw)
-        .when(variant == "bc", bc)
-        .when(variant == "field_first", ff)
-        .otherwise(F.lit("not_found"))
-    )
-
-
-# Pre-parsed date columns: parsing the three date fields once per row and
-# letting every validator reference the resulting attribute keeps the
-# expression tree linear (inlining the 33-format parse at each of the
-# ~60 use sites blows up plan analysis).
+# Pre-parsed date columns: the three date fields are parsed once per row
+# in Catalyst and handed to the kernel as epoch days.
 DOB_COL, ISSUE_COL, EXP_COL = "__dob_d", "__issue_d", "__exp_d"
 
 
@@ -411,2313 +230,1030 @@ def _parsed_date_exprs(prefix: str) -> dict:
     }
 
 
-def with_parsed_dates(df, prefix: str = ""):
+def with_parsed_dates(df, prefix: str = ""):  # noqa: ANN001, ANN201
     return df.withColumns(_parsed_date_exprs(prefix))
-
-
-def _dates():
-    return F.col(DOB_COL), F.col(ISSUE_COL), F.col(EXP_COL)
 
 
 # ------------------------------------------------------------- base five
 
 
-def data_consistency_validator(run_date: Column, prefix: str = "") -> Column:
+def data_consistency(d: Doc) -> tuple:
     """V1 (validators/data_consistency.py:13-72)."""
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    skip = _blank(col("date_of_birth")) | _blank(col("expiry_date"))
-    dob, issue, exp = _dates()
-    age = F.floor(F.datediff(run_date, dob) / 365)
-    validity = F.floor(F.datediff(exp, issue) / 365)
-    issues = [
-        _iw(dob.isNotNull() & issue.isNotNull() & (dob >= issue),
-            "Date of birth is not before issue date"),
-        _iw(issue.isNotNull() & exp.isNotNull() & (issue >= exp),
-            "Issue date is not before expiry date"),
-        _iw(dob.isNotNull() & ((age > 150) | (age < 0)),
-            F.concat(F.lit("Unrealistic age calculated: "), age.cast("string"), F.lit(" years"))),
-        _iw(issue.isNotNull() & exp.isNotNull() & (validity > 50),
-            F.concat(F.lit("Unusual document validity period: "), validity.cast("string"), F.lit(" years"))),
-    ]
-    # skip message lists the actually-missing fields (base.py:41-53)
-    skip_msg = F.concat(
-        F.lit("Required fields missing: "),
-        F.array_join(
-            F.concat(
-                F.when(_blank(col("date_of_birth")), F.array(F.lit("date_of_birth")))
-                .otherwise(_empty_arr()),
-                F.when(_blank(col("expiry_date")), F.array(F.lit("expiry_date")))
-                .otherwise(_empty_arr()),
-            ),
-            ", ",
-        ),
-    )
-    missing_det = F.array_join(
-        F.concat(
-            F.when(_blank(col("date_of_birth")), F.array(F.lit("date_of_birth")))
-            .otherwise(_empty_arr()),
-            F.when(_blank(col("expiry_date")), F.array(F.lit("expiry_date")))
-            .otherwise(_empty_arr()),
-        ),
-        "; ",
-    )
+    missing = [f for f in ("date_of_birth", "expiry_date") if _blank(getattr(d, f))]
+    if missing:
+        return _skipped("data_consistency", missing)
+    dob, issue, exp = d.dob, d.issue, d.exp
+    issues = []
+    if dob is not None and issue is not None and dob >= issue:
+        issues.append("Date of birth is not before issue date")
+    if issue is not None and exp is not None and issue >= exp:
+        issues.append("Issue date is not before expiry date")
+    if dob is not None:
+        age = (d.run - dob) // 365
+        if age > 150 or age < 0:
+            issues.append(f"Unrealistic age calculated: {age} years")
+    if issue is not None and exp is not None and (exp - issue) // 365 > 50:
+        issues.append(f"Unusual document validity period: {(exp - issue) // 365} years")
+    # the fail message is the fixed string (data_consistency.py:63); the
+    # issue texts go to details only (:64-72)
     return _result(
-        "data_consistency", issues, [],
-        # fail message is the fixed string (data_consistency.py:63);
-        # the issue texts go to details in the reference, not the message
-        "Data consistency issues found", "",
+        "data_consistency", issues, [], "Data consistency issues found", "",
         "All date relationships are consistent",
-        skip_cond=skip, skip_msg=skip_msg, join_issues=False, copy_iw=False,
-        # fail -> {"issues": [...]} only; pass -> {} (data_consistency.py:64-72)
-        details=lambda pi, pw: _dmap(
-            ("issues", _dv(F.size(pi) > 0, F.array_join(pi, "; "))),
-        ),
-        skip_details=_dmap(("missing_fields", missing_det)),
-        inline_bind=True,
+        {"issues": "; ".join(issues)} if issues else {}, copy_iw=False,
     )
 
 
-def document_expiry_validator(run_date: Column, prefix: str = "") -> Column:
-    """V2 (validators/document_expiry.py:13-64)."""
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    skip = _blank(col("expiry_date"))
-    _dob_u, _issue_u, exp = _dates()
-    days = F.datediff(exp, run_date)
-    issues = [_iw(exp.isNotNull() & (days < 0),
-                  F.concat(F.lit("Document expired "), F.abs(days).cast("string"), F.lit(" days ago")))]
-    warnings = [
-        _iw(exp.isNull(), "Could not parse expiry date format"),
-        _iw(exp.isNotNull() & (days >= 0) & (days < 30),
-            F.concat(F.lit("Document expires in "), days.cast("string"), F.lit(" days"))),
-    ]
-    # each branch carries its complete message (document_expiry.py:37-64)
-    fail_msg = F.concat(F.lit("Document expired "), F.abs(days).cast("string"),
-                        F.lit(" days ago"))
-    warn_msg = F.when(exp.isNull(), F.lit("Could not parse expiry date format")).otherwise(
-        F.concat(F.lit("Document expires in "), days.cast("string"), F.lit(" days"))
-    )
-    pass_msg = F.concat(F.lit("Document valid for "), days.cast("string"), F.lit(" days"))
-    # branch-complete details (document_expiry.py:28,39-46,49-56,59-64)
-    det = _dmap(
-        ("raw_expiry_date", _dv(exp.isNull(), F.coalesce(col("expiry_date"), F.lit("")))),
-        ("expiry_date", _dv(exp.isNotNull(), F.date_format(exp, "yyyy-MM-dd"))),
-        ("days_expired", _dv(exp.isNotNull() & (days < 0), F.abs(days).cast("string"))),
-        ("days_until_expiry", _dv(exp.isNotNull() & (days >= 0), days.cast("string"))),
-    )
-    return _result(
-        "document_expiry", issues, warnings,
-        fail_msg, warn_msg, pass_msg,
-        skip_cond=skip, skip_msg="Required fields missing: expiry_date",
-        join_issues=False, copy_iw=False, details=det,
-        skip_details=_dmap(("missing_fields", "expiry_date")),
-        inline_bind=True,
-    )
+def document_expiry(d: Doc) -> tuple:
+    """V2 (validators/document_expiry.py:13-64); each branch carries its
+    complete message and details."""
+    if _blank(d.expiry_date):
+        return _skipped("document_expiry", ["expiry_date"])
+    exp = d.exp
+    if exp is None:
+        return ("document_expiry", "warning", "Could not parse expiry date format",
+                {"raw_expiry_date": d.expiry_date})
+    days = exp - d.run
+    det = {"expiry_date": _fmt_date(exp)}
+    if days < 0:
+        det["days_expired"] = str(-days)
+        return ("document_expiry", "failed", f"Document expired {-days} days ago", det)
+    det["days_until_expiry"] = str(days)
+    if days < 30:
+        return ("document_expiry", "warning", f"Document expires in {days} days", det)
+    return ("document_expiry", "passed", f"Document valid for {days} days", det)
 
 
-def age_validator(run_date: Column, minimum_age: int, prefix: str = "") -> Column:
-    """V3 (validators/age_validator.py:16-60) — warn (not fail) under min."""
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    skip = _blank(col("date_of_birth"))
-    dob, _issue_u, _exp_u = _dates()
-    age = _age_expr(run_date, dob)
-    warnings = [
-        _iw(dob.isNull(), "Could not parse date of birth format"),
-        _iw(dob.isNotNull() & (age < minimum_age),
-            F.concat(F.lit("Person is "), age.cast("string"),
-                     F.lit(f" years old, minimum required is {minimum_age}"))),
-    ]
-    # branch messages verbatim (age_validator.py:27-60)
-    warn_msg = F.when(dob.isNull(), F.lit("Could not parse date of birth format")).otherwise(
-        F.concat(F.lit("Person is "), age.cast("string"),
-                 F.lit(f" years old, minimum required is {minimum_age}"))
-    )
-    pass_msg = F.concat(F.lit("Age verification passed ("), age.cast("string"),
-                        F.lit(" years old)"))
-    # branch-complete details (age_validator.py:31,44-48,55-58)
-    det = _dmap(
-        ("raw_dob", _dv(dob.isNull(), F.coalesce(col("date_of_birth"), F.lit("")))),
-        ("calculated_age", _dv(dob.isNotNull(), age.cast("string"))),
-        ("minimum_age", _dv(dob.isNotNull(), str(minimum_age))),
-        ("date_of_birth",
-         _dv(dob.isNotNull() & (age < minimum_age), F.date_format(dob, "yyyy-MM-dd"))),
-    )
-    return _result(
-        "age_validation", [], warnings,
-        "", warn_msg, pass_msg,
-        skip_cond=skip, skip_msg="Required fields missing: date_of_birth",
-        join_issues=False, copy_iw=False, details=det,
-        skip_details=_dmap(("missing_fields", "date_of_birth")),
-        inline_bind=True,
-    )
+def age_validation(d: Doc) -> tuple:
+    """V3 (validators/age_validator.py:16-60) — warn (not fail) under the
+    minimum age."""
+    if _blank(d.date_of_birth):
+        return _skipped("age_validation", ["date_of_birth"])
+    if d.dob is None:
+        return ("age_validation", "warning", "Could not parse date of birth format",
+                {"raw_dob": d.date_of_birth})
+    age, minimum = _age(d.run, d.dob), d.minimum_age
+    det = {"calculated_age": str(age), "minimum_age": str(minimum)}
+    if age < minimum:
+        det["date_of_birth"] = _fmt_date(d.dob)
+        return ("age_validation", "warning",
+                f"Person is {age} years old, minimum required is {minimum}", det)
+    return ("age_validation", "passed", f"Age verification passed ({age} years old)", det)
 
 
-# 18 named patterns + descriptions (validators/document_format.py:13-38)
-DOCUMENT_FORMAT_PATTERNS = [
-    ("CA_ONTARIO_DL", r"^[A-Z]\d{4}-?\d{5}-?\d{5}$", "Ontario Driver's Licence"),
-    ("CA_BC_DL", r"^(DL:?)?\d{6,7}$", "BC Driver's Licence"),
-    ("CA_ALBERTA_DL", r"^\d{6}-?\d{3}$", "Alberta Driver's Licence"),
-    ("CA_QUEBEC_DL", r"^[A-Z]\d{12}$", "Quebec Driver's Licence"),
-    ("CA_MANITOBA_DL", r"^[A-Z]{4}\d{6}$", "Manitoba Driver's Licence"),
-    ("CA_PASSPORT", r"^[A-Z]{2}\d{6}$", "Canadian Passport"),
-    ("US_PASSPORT", r"^[A-Z]\d{8}$", "US Passport"),
-    ("US_DL_CALIFORNIA", r"^[A-Z]\d{7}$", "California Driver's License"),
-    ("US_DL_TEXAS", r"^\d{8}$", "Texas Driver's License"),
-    ("US_DL_FLORIDA", r"^[A-Z]\d{12}$", "Florida Driver's License"),
-    ("US_DL_NEW_YORK", r"^\d{9}$", "New York Driver's License"),
-    ("US_DL_OHIO", r"^[A-Z]{2}\d{6}$", "Ohio Driver's License"),
-    ("US_DRIVERS_LICENSE", r"^[A-Z]{1,2}\d{6,14}$", "US Driver's License (generic)"),
-    ("UK_PASSPORT", r"^\d{9}$", "UK Passport"),
-    ("UK_DRIVERS_LICENSE", r"^[A-Z]{5}\d{6}[A-Z]{2}\d{2}$", "UK Driver's License"),
-    ("EU_ID", r"^[A-Z]{2}\d{7}$", "European ID Card"),
-    ("GENERIC_NUMERIC", r"^\d{6,12}$", "Generic numeric ID"),
-    ("GENERIC_ALPHANUMERIC", r"^[A-Z0-9]{6,15}$", "Generic alphanumeric ID"),
+_FORMAT_RES = [
+    (_jre(p), json.dumps({"pattern_name": n, "description": desc}, separators=(",", ":")))
+    for n, p, desc in DOCUMENT_FORMAT_PATTERNS
 ]
 
 
-def document_format_validator(prefix: str = "") -> Column:
+def document_format(d: Doc) -> tuple:
     """V4 (validators/document_format.py:40-82): PASS if any of the 18
-    patterns match raw or dash-stripped number, else WARN. The pattern
-    table is a constant-folded literal array — one exists() in the plan,
-    not 36 inlined rlikes.
-
-    Codegen shape: the match result (``matches``/``n_match``/``js``) is
-    shared across the warning condition, details entries, and pass
-    message by PROJECTION-LEVEL common-subexpression elimination —
-    this validator sits directly in the battery projection (no
-    bind_once wrapper), so codegen evaluates the 18x2-regex filter
-    exactly once per row while the whole subtree stays compilable.
-    (The filter lambda re-evaluates raw/clean per element, but those
-    are a trim/upper and one regexp_replace — noise next to the 36
-    pattern regexes the filter itself runs.)"""
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    skip = _blank(col("document_number"))
-    raw_e = F.upper(F.trim(F.coalesce(col("document_number"), F.lit(""))))
-    clean = F.regexp_replace(raw_e, r"[\s\-]", "")
-    patterns = F.array(
-        *[
-            F.struct(
-                F.lit(name).alias("pattern_name"),
-                F.lit(p).alias("fmt"),
-                F.lit(desc).alias("description"),
-            )
-            for name, p, desc in DOCUMENT_FORMAT_PATTERNS
-        ]
-    )
-    matches = F.filter(
-        patterns,
-        lambda p: F.regexp_like(raw_e, p["fmt"])
-        | F.regexp_like(clean, p["fmt"]),
-    )
-    n_match = F.size(matches)
-    # matched (name, description) rows feed details.matched_patterns as
-    # compact JSON (the reference's list-of-dicts, :55-70); count feeds
-    # the pass message (document_format.py:64-70).
-    js = F.to_json(
-        F.transform(
-            matches,
-            lambda p: F.struct(
-                p["pattern_name"].alias("pattern_name"),
-                p["description"].alias("description"),
-            ),
-        )
-    )
-    warnings = [
-        _iw(n_match == 0, "Document number does not match common formats")
-    ]
-    det = _dmap(
-        ("document_number", raw_e),
-        ("matched_patterns", _dv(n_match > 0, js)),
-        ("note", _dv(n_match == 0,
-                     "May still be valid - format not in known patterns")),
-    )
-    return _result(
-        "document_format", [], warnings,
-        "", "Document number does not match common formats",
-        F.concat(F.lit("Document number matches "), n_match.cast("string"),
-                 F.lit(" known format(s)")),
-        skip_cond=skip, skip_msg="Required fields missing: document_number",
-        join_issues=False, copy_iw=False, details=det,
-        skip_details=_dmap(("missing_fields", "document_number")),
-        inline_bind=True,
-    )
+    patterns match the raw or dash-stripped number, else WARN."""
+    if _blank(d.document_number):
+        return _skipped("document_format", ["document_number"])
+    raw = _trim(d.document_number).upper()
+    clean = _SEP.sub("", raw)
+    matched = [js for rx, js in _FORMAT_RES if rx.search(raw) or rx.search(clean)]
+    if not matched:
+        return ("document_format", "warning", "Document number does not match common formats",
+                {"document_number": raw,
+                 "note": "May still be valid - format not in known patterns"})
+    # matched (name, description) rows as compact JSON (:55-70)
+    return ("document_format", "passed",
+            f"Document number matches {len(matched)} known format(s)",
+            {"document_number": raw, "matched_patterns": "[" + ",".join(matched) + "]"})
 
 
-def face_matching_validator() -> Column:
+def face_matching(_d: Doc) -> tuple:
     """V5 (validators/face_matching.py:18-49): always SKIPPED (no selfie)."""
-    return F.struct(
-        F.lit("face_matching").alias("validator_name"),
-        F.lit("skipped").alias("status"),
-        F.lit("Face matching skipped - no selfie provided").alias("message"),
-        # face_matching.py:27-29
-        _dmap(("note", "Provide selfie image to enable face matching")).alias(
-            "details"
-        ),
-    )
+    return ("face_matching", "skipped", "Face matching skipped - no selfie provided",
+            {"note": "Provide selfie image to enable face matching"})
+
+
+BASE_VALIDATORS = (data_consistency, document_expiry, age_validation, document_format,
+                   face_matching)
+
+
+def _last_name(variant: str | None, d: Doc) -> tuple[str, str]:
+    """(last name, source label) by the three extraction variants
+    (SURVEY.md §2.5); the label is interpolated into first-letter
+    mismatch issues (ontario_dl.py:104-107):
+    - "first_word": comma-part else FIRST word else last_name field
+      (ontario_dl.py:28-59; also QC/MB/NS/NL)
+    - "bc": comma-part else last_name field else LAST word (bc_dl.py:27-53)
+    - "field_first": last_name field else comma-part else LAST word
+      (california_dl.py:23-39; also TX, US)"""
+    full = d.full_name or ""
+    field = _trim(d.last_name or "")
+    comma = _trim(full.split(",", 1)[0])
+    words = _WS.split(_trim(full))
+    has_comma = "," in full
+    if variant == "first_word":
+        if full and has_comma and comma:
+            return comma, "full_name_comma_format"
+        if full and not has_comma and _trim(words[0]):
+            return _trim(words[0]), "full_name_first_word"
+        if field:
+            return field, "last_name_field"
+    elif variant == "bc":
+        # BC's comma label is "full_name_parsed" (bc_dl.py:40)
+        if full and has_comma and comma:
+            return comma, "full_name_parsed"
+        if field:
+            return field, "last_name_field"
+        if full and len(words) >= 2:
+            return _trim(words[-1]), "full_name_last_word"
+    elif variant == "field_first":
+        if field:
+            return field, "last_name_field"
+        if full and has_comma:
+            return comma, "full_name_parsed"
+        if full and len(words) >= 2:
+            return _trim(words[-1]), "full_name_last_word"
+    return "", "not_found"
 
 
 # -------------------------------------------------------- DL family (V10-23, V44-45)
 
 
-@dataclass
-class DLConfig:
-    """Declarative knobs distilled from the per-province validators —
-    the files differ only in these constants (e.g. nwt_dl.py vs
-    nunavut_dl.py vs yukon_dl.py)."""
-
-    name: str
-    display: str
-    format_pattern: str
-    near_miss: str | None          # "digits:lo:hi" | "len:N:alpha" | "len:N" | None
-    fail_age: int
-    warn_age_tiers: tuple[int, ...]          # ascending warn thresholds
-    name_variant: str | None = None          # first_word | bc | field_first
-    first_letter: str | None = None          # "fail" | "warn" | None
-    ns_prefix: bool = False
-    validity_low: float | None = 1.5
-    validity_high: float | None = 6.0
-    validity_div: float = 365.25
-    expired_check: bool = True
-    expiry_warn_60: bool = False             # CA/TX second tier
-    issue_check_min_age: int | None = None
-    ontario_dob_encoding: bool = False
-    bc_prefix_strip: bool = False
-    strip_slash: bool = False                # Manitoba strips "/" too
-    verifik: bool = False                    # ON/BC registry lookup (disabled path)
-    # ---- details-map knobs (each file's details[...] keys; the checks
-    # list and key spellings vary per province: license/licence/document)
-    d_checks: tuple = ()                     # checks_performed, in order
-    d_ln_src: bool = True                    # last_name_source + extracted_last_name
-    d_num_key: str | None = None             # CA/TX unconditional license_number
-    d_valid_key: str = "licence_number_valid"
-    d_digits: str | None = None              # const "6".."9" | "len" | "slice1" | "slice5"
-    d_digits_near: bool = False              # licence_digits = len(clean) on near-miss
-    d_letter: bool = False                   # QC/NL licence_letter on valid/near
-    d_clean_key: str | None = "clean_licence_number"
-    d_fl: str | None = None                  # first-letter keys: "ontario"|"std"|"ca"
-    d_age_key: str = "calculated_age"        # CA/TX use current_age
-    d_age_dob: bool = False                  # CA/TX also emit date_of_birth
-    d_bday_both: bool = False                # CA/TX expires_on_birthday true AND false
-    d_state: str | None = None               # CA/TX constant details["state"]
-
-
-DL_CONFIGS: dict[str, DLConfig] = {
-    "ontario_drivers_license": DLConfig(
-        "ontario_drivers_license", "Ontario DL", r"^[A-Z]\d{4}-\d{5}-\d{5}$",
-        "len:15:alpha", 16, (18,), name_variant="first_word",
-        first_letter="fail", validity_low=None, validity_high=6.0,
-        validity_div=365.0, expired_check=False, issue_check_min_age=None,
-        ontario_dob_encoding=True, verifik=True,
-        d_checks=("license_number_format", "first_letter_match",
-                  "minimum_age_ontario", "expiry_on_birthday",
-                  "validity_period", "dob_encoded_in_license",
-                  "verifik_api_validation"),
-        d_valid_key="license_number_valid", d_clean_key=None, d_fl="ontario",
-    ),
-    "bc_drivers_license": DLConfig(
-        "bc_drivers_license", "BC DL", r"^\d{6,7}$", "digits:5:8",
-        16, (17, 19), name_variant="bc", issue_check_min_age=16,
-        bc_prefix_strip=True, verifik=True,
-        d_checks=("licence_number_format", "minimum_age_bc",
-                  "expiry_on_birthday", "validity_period", "expiry_check",
-                  "issue_date_check", "verifik_api_validation"),
-        d_digits="len", d_digits_near=True,
-    ),
-    "alberta_drivers_license": DLConfig(
-        "alberta_drivers_license", "Alberta DL", r"^\d{9}$", "digits:8:10",
-        14, (16, 18), name_variant="first_word", issue_check_min_age=14,
-        d_checks=("licence_number_format", "minimum_age_alberta",
-                  "expiry_on_birthday", "validity_period", "expiry_check",
-                  "issue_date_check"),
-        d_digits="9", d_digits_near=True,
-    ),
-    "quebec_drivers_license": DLConfig(
-        "quebec_drivers_license", "Quebec DL", r"^[A-Z]\d{12}$", "len:13:alpha",
-        16, (18,), name_variant="first_word", first_letter="fail",
-        validity_low=3.5, validity_high=8.5, issue_check_min_age=16,
-        d_checks=("licence_number_format", "first_letter_match",
-                  "minimum_age_quebec", "expiry_on_birthday",
-                  "validity_period", "expiry_check", "issue_date_check"),
-        d_letter=True, d_fl="std",
-    ),
-    "manitoba_drivers_license": DLConfig(
-        "manitoba_drivers_license", "Manitoba DL", r"^\d{9}$", "digits:7:10",
-        16, (18,), name_variant="first_word", issue_check_min_age=16,
-        strip_slash=True,
-        d_checks=("document_number_format", "minimum_age_manitoba",
-                  "expiry_on_birthday", "validity_period", "expiry_check",
-                  "issue_date_check"),
-        d_valid_key="document_number_valid",
-        d_clean_key="clean_document_number",
-    ),
-    "saskatchewan_drivers_license": DLConfig(
-        "saskatchewan_drivers_license", "Saskatchewan DL", r"^\d{8}$",
-        "digits:7:9", 16, (18,), name_variant="first_word",
-        issue_check_min_age=16,
-        d_checks=("licence_number_format", "minimum_age_saskatchewan",
-                  "expiry_on_birthday", "validity_period", "expiry_check",
-                  "issue_date_check"),
-        d_digits="8", d_digits_near=True,
-    ),
-    "nova_scotia_drivers_license": DLConfig(
-        "nova_scotia_drivers_license", "Nova Scotia DL", r"^[A-Z]{5}\d{9}$",
-        "len:14", 16, (18,), name_variant="first_word", ns_prefix=True,
-        issue_check_min_age=16,
-        d_checks=("licence_number_format", "surname_prefix_check",
-                  "minimum_age_nova_scotia", "expiry_on_birthday",
-                  "validity_period", "expiry_check", "issue_date_check"),
-        d_digits="slice5",
-    ),
-    "new_brunswick_drivers_license": DLConfig(
-        "new_brunswick_drivers_license", "New Brunswick DL", r"^\d{7}$",
-        "digits:6:8", 16, (18,), name_variant="first_word",
-        validity_high=5.0, issue_check_min_age=16,
-        d_checks=("licence_number_format", "minimum_age_new_brunswick",
-                  "expiry_on_birthday", "validity_period", "expiry_check",
-                  "issue_date_check"),
-        d_digits="7", d_digits_near=True,
-    ),
-    "pei_drivers_license": DLConfig(
-        "pei_drivers_license", "PEI DL", r"^\d{1,6}$", "digits:1:8",
-        16, (17,), name_variant="first_word", validity_low=1.0,
-        issue_check_min_age=16,
-        d_checks=("licence_number_format", "minimum_age_pei",
-                  "expiry_on_birthday", "validity_period", "expiry_check",
-                  "issue_date_check"),
-        d_digits="len", d_digits_near=True,
-    ),
-    "newfoundland_drivers_license": DLConfig(
-        "newfoundland_drivers_license", "Newfoundland DL", r"^[A-Z]\d{9}$",
-        "len:10:alpha", 16, (18,), name_variant="first_word",
-        first_letter="fail", validity_high=5.0, issue_check_min_age=16,
-        d_checks=("licence_number_format", "first_letter_match",
-                  "minimum_age_newfoundland", "expiry_on_birthday",
-                  "validity_period", "expiry_check", "issue_date_check"),
-        d_digits="slice1", d_letter=True, d_fl="std",
-    ),
-    "nwt_drivers_license": DLConfig(
-        "nwt_drivers_license", "NWT DL", r"^\d{6}$", "digits:5:7",
-        15, (16, 18), name_variant="first_word", issue_check_min_age=15,
-        d_checks=("licence_number_format", "minimum_age_nwt",
-                  "expiry_on_birthday", "validity_period", "expiry_check",
-                  "issue_date_check"),
-        d_digits="6", d_digits_near=True,
-    ),
-    "nunavut_drivers_license": DLConfig(
-        "nunavut_drivers_license", "Nunavut DL", r"^\d{6}$", "digits:5:7",
-        15, (16, 18), name_variant="first_word", issue_check_min_age=15,
-        d_checks=("licence_number_format", "minimum_age_nunavut",
-                  "expiry_on_birthday", "validity_period", "expiry_check",
-                  "issue_date_check"),
-        d_digits="6", d_digits_near=True,
-    ),
-    "yukon_drivers_license": DLConfig(
-        "yukon_drivers_license", "Yukon DL", r"^\d{6}$", "digits:5:7",
-        15, (16, 18), name_variant="first_word", issue_check_min_age=15,
-        d_checks=("licence_number_format", "minimum_age_yukon",
-                  "expiry_on_birthday", "validity_period", "expiry_check",
-                  "issue_date_check"),
-        d_digits="6", d_digits_near=True,
-    ),
-    "california_drivers_license": DLConfig(
-        "california_drivers_license", "California DL", r"^[A-Z]\d{7}$", None,
-        16, (18,), name_variant="field_first", first_letter="warn",
-        validity_low=4.0, validity_high=6.0, expiry_warn_60=True,
-        issue_check_min_age=None,
-        d_checks=("license_number_format", "first_letter_check", "age_check",
-                  "expiry_check", "expiry_on_birthday", "validity_period"),
-        d_ln_src=False, d_num_key="license_number",
-        d_valid_key="format_valid", d_clean_key=None, d_fl="ca",
-        d_age_key="current_age", d_age_dob=True, d_bday_both=True,
-        d_state="California",
-    ),
-    "texas_drivers_license": DLConfig(
-        "texas_drivers_license", "Texas DL", r"^\d{8}$", None,
-        16, (18,), name_variant="field_first",
-        validity_low=5.0, validity_high=8.5, expiry_warn_60=True,
-        issue_check_min_age=None,
-        d_checks=("license_number_format", "age_check", "expiry_check",
-                  "expiry_on_birthday", "validity_period"),
-        d_ln_src=False, d_num_key="license_number",
-        d_valid_key="format_valid", d_clean_key=None,
-        d_age_key="current_age", d_age_dob=True, d_bday_both=True,
-        d_state="Texas",
-    ),
-}
-
-
-# Byte-exact message constants transcribed from the per-province
-# validators (these strings ARE the response contract; file:line cited
-# per family below). Shapes:
-#   missing            -> used verbatim
-#   fmt_prefix + raw   -> format-invalid issue
-#   near: w3 present   -> w1 + raw + w2 + len(clean) + w3   (digit-count shape)
-#         w3 absent    -> w1 + raw + w2                     (ON/QC/NS/NL shapes)
-#   fl_head + letter + fl_mid + initial + "'" [+ " (from " + src + ")"]
-#   noname_head + letter + noname_tail
-#   "Person is " + age + age_fail_tail          (underage issue)
-#   "Person is " + age + ". " + tierN_tail      (licence-class warning)
-#   bday std: "Expiry date (" + MM-dd + ") is not on birthday (" + MM-dd + "). " + bday_tail
-#   bday us:  bday_name + " typically expires on birthday. DOB: " + MM/dd + ", Expiry: " + MM/dd
-#   "Short validity period (" + v + " years). " + vshort_tail
-#   vlong_head + v + vlong_tail
-#   expired_head + n + " days ago" / expires_head + n + " days" / soon_head + n + " days)"
-#   "Person was " + age + issue_tail            (issue-date minimum age)
-_DL_MSG_DEFAULTS = {
-    "near_w1": "Licence number '", "near_w2": "' has ", "near_w3": None,
-    "fl_head": None, "fl_mid": "' does not match last name initial '",
-    "fl_src": False, "noname_head": None, "noname_tail": "",
-    "tier2_tail": None, "bday_std": True, "bday_name": "",
-    "vshort_tail": "May be a learner licence.",
-    "vlong_head": "Validity period (",
-    "expired_head": "Licence expired ", "expires_head": "Licence expires in ",
-    "soon_head": None, "issue_tail": None, "missing": "Missing licence number",
-}
-
-DL_MSGS: dict[str, dict] = {
-    # ontario_dl.py:82-125,139,154,234-255
-    "ontario_drivers_license": {
-        "fail_header": "Ontario DL validation failed",
-        "warn_full": "Ontario DL validation passed with warnings",
-        "pass_full": "Ontario Driver's License validation passed",
-        "missing": "Missing license number",
-        "fmt_prefix": "Invalid Ontario DL format. Expected: A1234-12345-12345, Got: ",
-        "near_w1": "License number format non-standard but may be valid: ",
-        "near_w2": "",
-        "fl_head": "License first letter '", "fl_src": True,
-        "noname_head": "Cannot verify license letter '",
-        "noname_tail": "' - no last name found. Ontario DL format: 'LASTNAME, FIRSTNAME'",
-        "age_fail_tail": " years old. Ontario requires minimum 16 for G1 license",
-        "tier1_tail": "May only hold G1/G2 license (full G requires 18+)",
-        "bday_tail": "Ontario DL typically expires on holder's birthday",
-        "vshort_tail": None,
-        "vlong_tail": " years) exceeds typical 5-year Ontario DL term",
-    },
-    # bc_dl.py:103-226,256-277
-    "bc_drivers_license": {
-        "fail_header": "BC Driver's Licence validation failed",
-        "warn_full": "BC Driver's Licence validation passed with warnings",
-        "pass_full": "BC Driver's Licence validation passed",
-        "fmt_prefix": "Invalid BC licence format. Expected: DL:XXXXXX (6 digits) or 7 digits, Got: ",
-        "near_w3": " digits. BC licence typically has 6 digits (DL:XXXXXX) or 7 digits.",
-        "age_fail_tail": " years old. BC requires minimum 16 for Class 7L (Learner)",
-        "tier1_tail": "Can only hold Class 7L (Learner) licence",
-        "tier2_tail": "May hold Class 7 (Novice/N) or Class 7L",
-        "bday_tail": "BC DL typically expires on holder's birthday",
-        "vshort_tail": "May be a new driver or restricted licence.",
-        "vlong_tail": " years) exceeds typical 5-year BC licence term",
-        "issue_tail": " at issue date. BC requires minimum 16 for any licence",
-    },
-    # alberta_dl.py:82-193,201-222
-    "alberta_drivers_license": {
-        "fail_header": "Alberta Driver's Licence validation failed",
-        "warn_full": "Alberta Driver's Licence validation passed with warnings",
-        "pass_full": "Alberta Driver's Licence validation passed",
-        "fmt_prefix": "Invalid Alberta licence format. Expected: 9 digits (e.g., 123456-789), Got: ",
-        "near_w3": " digits. Alberta licence typically has 9 digits (XXXXXX-XXX).",
-        "age_fail_tail": " years old. Alberta requires minimum 14 for Class 7 Learner",
-        "tier1_tail": "Can only hold Class 7 Learner (GDL) licence",
-        "tier2_tail": "Likely holds Class 5 GDL (probationary) licence",
-        "bday_tail": "Alberta DL typically expires on holder's birthday",
-        "vshort_tail": "May be a learner or probationary licence.",
-        "vlong_tail": " years) exceeds typical 5-year Alberta licence term",
-        "issue_tail": " at issue date. Alberta requires minimum 14 for any licence",
-    },
-    # quebec_dl.py:83-214,222-243
-    "quebec_drivers_license": {
-        "fail_header": "Quebec Driver's Licence validation failed",
-        "warn_full": "Quebec Driver's Licence validation passed with warnings",
-        "pass_full": "Quebec Driver's Licence validation passed",
-        "fmt_prefix": "Invalid Quebec licence format. Expected: Letter + 12 digits (e.g., S1234-567890-12), Got: ",
-        "near_w2": "' may have format issues. Quebec licence: Letter + 12 digits (e.g., S1234-567890-12)",
-        "fl_head": "Licence first letter '", "fl_src": True,
-        "noname_head": "Cannot verify licence letter '",
-        "noname_tail": "' - no last name found",
-        "age_fail_tail": " years old. Quebec requires minimum 16 for Class 5 Learner",
-        "tier1_tail": "May hold probationary licence",
-        "bday_tail": "Quebec DL typically expires on holder's birthday",
-        "vshort_tail": "May be a probationary or restricted licence.",
-        "vlong_tail": " years) exceeds maximum 8-year Quebec licence term",
-        "issue_tail": " at issue date. Quebec requires minimum 16 for any licence",
-    },
-    # manitoba_dl.py:81-187,195-216
-    "manitoba_drivers_license": {
-        "fail_header": "Manitoba Driver's Licence validation failed",
-        "warn_full": "Manitoba Driver's Licence validation passed with warnings",
-        "pass_full": "Manitoba Driver's Licence validation passed",
-        "missing": "Missing document number (DD/RÉF)",
-        "fmt_prefix": "Invalid Manitoba document number format. Expected: 9 digits, Got: ",
-        "near_w1": "Document number '",
-        "near_w3": " digits. Manitoba DD/RÉF is typically 9 digits.",
-        "age_fail_tail": " years old. Manitoba requires minimum 16 for Class 5L Learner",
-        "tier1_tail": "May hold Class 5L (Learner) or Class 5I (Intermediate) licence",
-        "bday_tail": "Manitoba DL typically expires on holder's birthday",
-        "vshort_tail": "May be a learner or intermediate licence.",
-        "vlong_tail": " years) exceeds typical 5-year Manitoba licence term",
-        "issue_tail": " at issue date. Manitoba requires minimum 16 for any licence",
-    },
-    # saskatchewan_dl.py:82-189,197-218
-    "saskatchewan_drivers_license": {
-        "fail_header": "Saskatchewan Driver's Licence validation failed",
-        "warn_full": "Saskatchewan Driver's Licence validation passed with warnings",
-        "pass_full": "Saskatchewan Driver's Licence validation passed",
-        "fmt_prefix": "Invalid Saskatchewan licence format. Expected: 8 digits (e.g., 12345678), Got: ",
-        "near_w3": " digits. Saskatchewan licence typically has 8 digits.",
-        "age_fail_tail": " years old. Saskatchewan requires minimum 16 for Class 7 Learner",
-        "tier1_tail": "May hold Class 7 (Learner) or novice Class 5 licence",
-        "bday_tail": "Saskatchewan DL typically expires on holder's birthday",
-        "vshort_tail": "May be a learner or novice licence.",
-        "vlong_tail": " years) exceeds typical 5-year Saskatchewan licence term",
-        "issue_tail": " at issue date. Saskatchewan requires minimum 16 for any licence",
-    },
-    # nova_scotia_dl.py:88-210,217-238
-    "nova_scotia_drivers_license": {
-        "fail_header": "Nova Scotia Driver's Licence validation failed",
-        "warn_full": "Nova Scotia Driver's Licence validation passed with warnings",
-        "pass_full": "Nova Scotia Driver's Licence validation passed",
-        "fmt_prefix": "Invalid Nova Scotia licence format. Expected: 5 letters + 9 digits, Got: ",
-        "near_w2": "' may have format issues. Nova Scotia licence: 5 letters + 9 digits (e.g., SMITH123456789)",
-        "age_fail_tail": " years old. Nova Scotia requires minimum 16 for Class 7 Learner",
-        "tier1_tail": "May hold Class 7 (Graduated) licence",
-        "bday_tail": "Nova Scotia DL typically expires on holder's birthday",
-        "vshort_tail": "May be a learner or graduated licence.",
-        "vlong_tail": " years) exceeds typical 5-year Nova Scotia licence term",
-        "issue_tail": " at issue date. Nova Scotia requires minimum 16 for any licence",
-    },
-    # new_brunswick_dl.py:77-183,190-211
-    "new_brunswick_drivers_license": {
-        "fail_header": "New Brunswick Driver's Licence validation failed",
-        "warn_full": "New Brunswick Driver's Licence validation passed with warnings",
-        "pass_full": "New Brunswick Driver's Licence validation passed",
-        "fmt_prefix": "Invalid New Brunswick licence format. Expected: 7 digits (e.g., 1234567), Got: ",
-        "near_w3": " digits. New Brunswick licence typically has 7 digits.",
-        "age_fail_tail": " years old. New Brunswick requires minimum 16 for Class 7 Learner",
-        "tier1_tail": "May hold Class 7 (Learner) licence with restrictions",
-        "bday_tail": "New Brunswick DL typically expires on holder's birthday",
-        "vlong_tail": " years) exceeds typical 4-year New Brunswick licence term",
-        "issue_tail": " at issue date. New Brunswick requires minimum 16 for any licence",
-    },
-    # pei_dl.py:77-183,190-211
-    "pei_drivers_license": {
-        "fail_header": "PEI Driver's Licence validation failed",
-        "warn_full": "PEI Driver's Licence validation passed with warnings",
-        "pass_full": "PEI Driver's Licence validation passed",
-        "fmt_prefix": "Invalid PEI licence format. Expected: 1-6 digits, Got: ",
-        "near_w3": " digits. PEI licence typically has 1-6 digits.",
-        "age_fail_tail": " years old. PEI requires minimum 16 for Class 7 Learner",
-        "tier1_tail": "Holds Class 7 (Learner) licence",
-        "bday_tail": "PEI DL typically expires on holder's birthday",
-        "vlong_tail": " years) exceeds typical 5-year PEI licence term",
-        "issue_tail": " at issue date. PEI requires minimum 16 for any licence",
-    },
-    # newfoundland_dl.py:83-206,misc footer
-    "newfoundland_drivers_license": {
-        "fail_header": "Newfoundland Driver's Licence validation failed",
-        "warn_full": "Newfoundland Driver's Licence validation passed with warnings",
-        "pass_full": "Newfoundland Driver's Licence validation passed",
-        "fmt_prefix": "Invalid Newfoundland licence format. Expected: Letter + 9 digits (e.g., A123456789), Got: ",
-        "near_w2": "' may have format issues. Newfoundland licence: Letter + 9 digits (e.g., A123456789)",
-        "fl_head": "Licence first letter '", "fl_src": True,
-        "noname_head": "Cannot verify licence letter '",
-        "noname_tail": "' - no last name found",
-        "age_fail_tail": " years old. Newfoundland requires minimum 16 for Class 7 Learner",
-        "tier1_tail": "May hold Class 7 (Learner) licence",
-        "bday_tail": "Newfoundland DL typically expires on holder's birthday",
-        "vlong_tail": " years) exceeds typical 4-year Newfoundland licence term",
-        "issue_tail": " at issue date. Newfoundland requires minimum 16 for any licence",
-    },
-    # nwt_dl.py:82-187
-    "nwt_drivers_license": {
-        "fail_header": "NWT Driver's Licence validation failed",
-        "warn_full": "NWT Driver's Licence validation passed with warnings",
-        "pass_full": "NWT Driver's Licence validation passed",
-        "fmt_prefix": "Invalid NWT licence format. Expected: 6 digits (e.g., 123456), Got: ",
-        "near_w3": " digits. NWT licence typically has 6 digits.",
-        "age_fail_tail": " years old. NWT requires minimum 15 for Class 7 Learner",
-        "tier1_tail": "Holds Class 7 (Learner) licence",
-        "tier2_tail": "May hold Class 7 or novice Class 5 licence",
-        "bday_tail": "NWT DL typically expires on holder's birthday",
-        "vlong_tail": " years) exceeds typical 5-year NWT licence term",
-        "issue_tail": " at issue date. NWT requires minimum 15 for any licence",
-    },
-    # nunavut_dl.py:83-188
-    "nunavut_drivers_license": {
-        "fail_header": "Nunavut Driver's Licence validation failed",
-        "warn_full": "Nunavut Driver's Licence validation passed with warnings",
-        "pass_full": "Nunavut Driver's Licence validation passed",
-        "fmt_prefix": "Invalid Nunavut licence format. Expected: 6 digits (e.g., 123456), Got: ",
-        "near_w3": " digits. Nunavut licence typically has 6 digits.",
-        "age_fail_tail": " years old. Nunavut requires minimum 15 for Class 7 Learner",
-        "tier1_tail": "Holds Class 7 (Learner) licence",
-        "tier2_tail": "May hold Class 7 or novice Class 5 licence",
-        "bday_tail": "Nunavut DL typically expires on holder's birthday",
-        "vlong_tail": " years) exceeds typical 5-year Nunavut licence term",
-        "issue_tail": " at issue date. Nunavut requires minimum 15 for any licence",
-    },
-    # yukon_dl.py:82-187
-    "yukon_drivers_license": {
-        "fail_header": "Yukon Driver's Licence validation failed",
-        "warn_full": "Yukon Driver's Licence validation passed with warnings",
-        "pass_full": "Yukon Driver's Licence validation passed",
-        "fmt_prefix": "Invalid Yukon licence format. Expected: 6 digits (e.g., 123456), Got: ",
-        "near_w3": " digits. Yukon licence typically has 6 digits.",
-        "age_fail_tail": " years old. Yukon requires minimum 15 for Class 7 Learner",
-        "tier1_tail": "Holds Class 7 (Learner) licence (requires parental consent)",
-        "tier2_tail": "May hold Class 7 or novice Class 5 licence",
-        "bday_tail": "Yukon DL typically expires on holder's birthday",
-        "vlong_tail": " years) exceeds typical 5-year Yukon licence term",
-        "issue_tail": " at issue date. Yukon requires minimum 15 for any licence",
-    },
-    # california_dl.py:62-149,156-170
-    "california_drivers_license": {
-        "fail_header": "California DL validation failed",
-        "warn_full": "California DL validation passed with warnings",
-        "pass_full": "California DL validation passed",
-        "missing": "Missing license number",
-        "fmt_prefix": "Invalid California DL format. Expected: 1 letter + 7 digits (e.g., A1234567), Got: ",
-        "fl_head": "License first letter '",
-        "fl_mid": "' doesn't match last name initial '",
-        "age_fail_tail": " years old. Minimum age for California learner's permit is 16",
-        "tier1_tail": "Provisional license restrictions may apply",
-        "bday_std": False, "bday_name": "California DL", "bday_tail": "",
-        "vshort_tail": "Standard is 5 years",
-        "vlong_head": "Long validity period (",
-        "vlong_tail": " years). Standard is 5 years",
-        "expired_head": "California DL expired ",
-        "expires_head": "California DL expires in ",
-        "soon_head": "California DL expires soon (",
-    },
-    # texas_dl.py:61-131,138-152
-    "texas_drivers_license": {
-        "fail_header": "Texas DL validation failed",
-        "warn_full": "Texas DL validation passed with warnings",
-        "pass_full": "Texas DL validation passed",
-        "missing": "Missing license number",
-        "fmt_prefix": "Invalid Texas DL format. Expected: 8 digits (e.g., 12345678), Got: ",
-        "age_fail_tail": " years old. Minimum age for Texas learner's permit is 16",
-        "tier1_tail": "Provisional license restrictions may apply",
-        "bday_std": False, "bday_name": "Texas DL", "bday_tail": "",
-        "vshort_tail": "Standard is 6 years",
-        "vlong_head": "Long validity period (",
-        "vlong_tail": " years). Standard is 6-8 years",
-        "expired_head": "Texas DL expired ",
-        "expires_head": "Texas DL expires in ",
-        "soon_head": "Texas DL expires soon (",
-    },
-}
-
-
 def _dl_msgs(name: str) -> dict:
-    return {**_DL_MSG_DEFAULTS, **DL_MSGS[name]}
+    return {**DL_MSG_DEFAULTS, **DL_MSGS[name]}
 
 
 def _parse_near(spec: str | None) -> tuple[str | None, int | None, int | None]:
+    """Near-miss spec of a DL / passport config -> (kind, lo, hi):
+    "digits:lo:hi", "len:N" (DL), "len:N:<alpha|alpha2|egd>",
+    "minlen:N:alpha", "len89:alpha2", "france"."""
     if spec is None:
         return None, None, None
-    parts = spec.split(":")
-    if parts[0] == "digits":
-        return "digits", int(parts[1]), int(parts[2])
-    if parts[0] == "len" and len(parts) == 3:
-        return "len_alpha", int(parts[1]), None
-    return "len", int(parts[1]), None
+    if spec in ("france", "len89:alpha2"):
+        return spec.replace(":", "_"), None, None
+    kind, n, *rest = spec.split(":")
+    if kind == "digits":
+        return "digits", int(n), int(rest[0])
+    if kind == "minlen":
+        return "minlen_alpha", int(n), None
+    return (f"len_{rest[0]}" if rest else "len"), int(n), None
 
 
-def _dl_cfg_struct(c: DLConfig) -> Column:
-    kind, lo, hi = _parse_near(c.near_miss)
-    tiers = list(c.warn_age_tiers)
-    m = _dl_msgs(c.name)
-    msg_fields = [
-        _lit_s(m[k]).alias(f"m_{k}")
-        for k in (
-            "fail_header", "warn_full", "pass_full", "missing", "fmt_prefix",
-            "near_w1", "near_w2", "near_w3", "fl_head", "fl_mid",
-            "noname_head", "noname_tail", "age_fail_tail", "tier1_tail",
-            "tier2_tail", "bday_name", "bday_tail", "vshort_tail",
-            "vlong_head", "vlong_tail", "expired_head", "expires_head",
-            "soon_head", "issue_tail",
-        )
-    ] + [
-        _lit_b(m["fl_src"]).alias("m_fl_src"),
-        _lit_b(m["bday_std"]).alias("m_bday_std"),
-    ]
-    return F.struct(
-        *msg_fields,
-        _lit_s(c.name).alias("name"),
-        _lit_s(c.display).alias("display"),
-        _lit_s(c.format_pattern).alias("fmt"),
-        _lit_s(kind).alias("near_kind"),
-        _lit_i(lo).alias("near_lo"),
-        _lit_i(hi).alias("near_hi"),
-        _lit_i(c.fail_age).alias("fail_age"),
-        _lit_i(tiers[0] if tiers else None).alias("tier1"),
-        _lit_i(tiers[1] if len(tiers) > 1 else None).alias("tier2"),
-        _lit_s(c.name_variant).alias("name_variant"),
-        _lit_s(c.first_letter).alias("first_letter"),
-        _lit_b(c.ns_prefix).alias("ns_prefix"),
-        _lit_d(c.validity_low).alias("validity_low"),
-        _lit_d(c.validity_high).alias("validity_high"),
-        _lit_d(c.validity_div).alias("validity_div"),
-        _lit_b(c.expired_check).alias("expired_check"),
-        _lit_b(c.expiry_warn_60).alias("expiry_warn_60"),
-        _lit_i(c.issue_check_min_age).alias("issue_min"),
-        _lit_b(c.ontario_dob_encoding).alias("ont_dob"),
-        _lit_b(c.bc_prefix_strip).alias("bc_strip"),
-        _lit_b(c.strip_slash).alias("strip_slash"),
-        _lit_b(c.verifik).alias("verifik"),
-        _lit_s("; ".join(c.d_checks)).alias("d_checks"),
-        _lit_b(c.d_ln_src).alias("d_ln_src"),
-        _lit_s(c.d_num_key).alias("d_num_key"),
-        _lit_s(c.d_valid_key).alias("d_valid_key"),
-        _lit_s(c.d_digits).alias("d_digits"),
-        _lit_b(c.d_digits_near).alias("d_digits_near"),
-        _lit_b(c.d_letter).alias("d_letter"),
-        _lit_s(c.d_clean_key).alias("d_clean_key"),
-        _lit_s(c.d_fl).alias("d_fl"),
-        _lit_s(c.d_age_key).alias("d_age_key"),
-        _lit_b(c.d_age_dob).alias("d_age_dob"),
-        _lit_b(c.d_bday_both).alias("d_bday_both"),
-        _lit_s(c.d_state).alias("d_state"),
-    )
+def _near_miss(kind: str | None, lo: int | None, hi: int | None, clean: str) -> bool:
+    """Whether a number that fails the format is a near miss (warn, not fail)."""
+    n = len(clean)
+    if kind == "digits":
+        return bool(_DIGITS.search(clean)) and lo <= n <= hi
+    if kind == "france":
+        return bool(_FRANCE_NEAR.search(clean))
+    if kind == "len_egd":
+        return n == lo and clean[:1] in ("E", "G", "D")
+    if kind == "len89_alpha2":
+        return n in (8, 9) and bool(_TWO_ALPHA.search(clean[:2]))
+    if kind == "len_alpha2":
+        return n == lo and bool(_TWO_ALPHA.search(clean[:2]))
+    if kind in ("minlen_alpha", "len_alpha"):
+        return (n >= lo if kind == "minlen_alpha" else n == lo) and bool(_ALPHA.search(clean[:1]))
+    if kind == "len":
+        return n == lo
+    return False
 
 
-def _dl_cfg_array() -> Column:
-    return F.array(*[_dl_cfg_struct(c) for c in DL_CONFIGS.values()])
+# name -> (config, merged messages, near-miss spec, compiled format)
+_DL = {
+    name: (c, _dl_msgs(name), _parse_near(c.near_miss), _jre(c.format_pattern))
+    for name, c in DL_CONFIGS.items()
+}
 
 
-def _dl_result(cfg: Column, run_date: Column, prefix: str = "") -> Column:
-    """One parametrized DL validator over a bound config struct — the
-    single-copy form of the 15 per-province validators (SURVEY.md §2.5
-    V10-V23/V44-V45; the per-file logic differs only in the constants
-    carried by ``cfg``). The derived per-row values (cleaned number,
-    extracted last name, ages, validity, days-to-expiry) are bound once
-    and referenced as lambda variables."""
-    from webxtract.exprs import bind_once
-
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    raw_e = F.upper(F.trim(F.coalesce(col("document_number"), F.lit(""))))
-
+def dl_validator(name: str, d: Doc) -> tuple:
+    """One parametrized DL validator — the single form of the 15
+    per-province validators (SURVEY.md §2.5 V10-V23/V44-V45; the files
+    differ only in the constants carried by DLConfig and DL_MSGS)."""
+    c, m, (kind, lo, hi), fmt_re = _DL[name]
+    run, dob, issue_d, exp = d.run, d.dob, d.issue, d.exp
+    disp = d.document_number or ""
+    raw = _trim(disp).upper()
     # NDL:/NDL/DL:/DL prefix strip for BC (bc_dl.py:74-96); Manitoba also
     # strips "/" (manitoba_dl.py:70-76); default strips spaces/dashes.
-    bc_clean = (
-        F.when(raw_e.startswith("NDL:"), F.trim(F.substring(raw_e, 5, 100)))
-        .when(raw_e.startswith("NDL"), F.trim(F.substring(raw_e, 4, 100)))
-        .when(raw_e.startswith("DL:"), F.trim(F.substring(raw_e, 4, 100)))
-        .when(raw_e.startswith("DL"), F.trim(F.substring(raw_e, 3, 100)))
-        .otherwise(F.regexp_replace(raw_e, r"[\s\-]", ""))
-    )
-    clean_e = (
-        F.when(cfg["bc_strip"], bc_clean)
-        .when(cfg["strip_slash"], F.regexp_replace(raw_e, r"[\s\-/]", ""))
-        .otherwise(F.regexp_replace(raw_e, r"[\s\-]", ""))
-    )
-    dob_e, issue_e, exp_e = _dates()
-    derived = F.struct(
-        raw_e.alias("raw"),
-        clean_e.alias("clean"),
-        # messages interpolate the document number as given, not the
-        # upper-trimmed working copy (e.g. ontario_dl.py:89 "Got:
-        # {document_number}")
-        F.coalesce(col("document_number"), F.lit("")).alias("disp"),
-        _last_name_param(cfg["name_variant"], prefix).alias("last_name"),
-        _last_name_src_param(cfg["name_variant"], prefix).alias("name_src"),
-        _age_expr(run_date, dob_e).alias("age"),
-        _age_expr(issue_e, dob_e).alias("age_at_issue"),
-        (F.datediff(exp_e, issue_e) / cfg["validity_div"]).alias("validity"),
-        F.datediff(exp_e, run_date).alias("days"),
-    )
-    return bind_once(derived, lambda v: _dl_body(cfg, v, run_date, prefix))
+    if c.bc_prefix_strip and raw.startswith(("NDL", "DL")):
+        cut = next(n for p, n in (("NDL:", 4), ("NDL", 3), ("DL:", 3), ("DL", 2))
+                   if raw.startswith(p))
+        clean = _trim(raw[cut:cut + 100])
+    else:
+        clean = (_SEP_SLASH if c.strip_slash else _SEP).sub("", raw)
+    last_name, name_src = _last_name(c.name_variant, d)
+    issues: list[str] = []
+    warnings: list[str] = []
 
+    # number format. The pattern is tried against the raw upper-trimmed
+    # number AND the stripped one — only Ontario's pattern contains its
+    # hyphens (ontario_dl.py:79), every other matches the stripped form.
+    fmt_ok = bool(fmt_re.search(raw) or fmt_re.search(clean))
+    near = _near_miss(kind, lo, hi, clean)
+    if clean == "":
+        issues.append(m["missing"])
+    elif not fmt_ok and not near:
+        issues.append(m["fmt_prefix"] + disp)
+    elif not fmt_ok:
+        # digit-count shape when near_w3 is set (bc_dl.py:111-114), free
+        # shape otherwise (ontario_dl.py:87, quebec_dl.py:89-92)
+        tail = f"{len(clean)}{m['near_w3']}" if m["near_w3"] is not None else ""
+        warnings.append(m["near_w1"] + disp + m["near_w2"] + tail)
 
-def _dl_body(cfg: Column, v: Column, run_date: Column, prefix: str) -> Column:
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    raw, clean = v["raw"], v["clean"]
-
-    issues: list[Column] = []
-    warnings: list[Column] = []
-
-    # check 1: number format. The pattern is evaluated against the raw
-    # upper-trimmed number AND the stripped one — the Ontario pattern
-    # requires its hyphens (ontario_dl.py:79 matches the un-stripped
-    # number), every other config's digits-only pattern matches the
-    # stripped form; a raw match is never spurious because only the
-    # Ontario pattern contains separators.
-    fmt_ok = F.regexp_like(raw, cfg["fmt"]) | F.regexp_like(clean, cfg["fmt"])
-    near = (
-        F.when(
-            cfg["near_kind"] == "digits",
-            clean.rlike(r"^\d+$")
-            & (F.length(clean) >= cfg["near_lo"])
-            & (F.length(clean) <= cfg["near_hi"]),
-        )
-        .when(
-            cfg["near_kind"] == "len_alpha",
-            (F.length(clean) == cfg["near_lo"])
-            & F.substring(clean, 1, 1).rlike("[A-Z]"),
-        )
-        .when(cfg["near_kind"] == "len", F.length(clean) == cfg["near_lo"])
-        .otherwise(F.lit(False))
-    )
-    disp = v["disp"]
-    issues.append(_iw(clean == "", cfg["m_missing"]))
-    issues.append(
-        _iw((clean != "") & ~fmt_ok & ~near,
-            F.concat(cfg["m_fmt_prefix"], disp))
-    )
-    # near-miss warning: digit-count shape when near_w3 is set
-    # (bc_dl.py:111-114), free shape otherwise (ontario_dl.py:87,
-    # quebec_dl.py:89-92)
-    near_msg = F.when(
-        cfg["m_near_w3"].isNotNull(),
-        F.concat(cfg["m_near_w1"], disp, cfg["m_near_w2"],
-                 F.length(clean).cast("string"), cfg["m_near_w3"]),
-    ).otherwise(F.concat(cfg["m_near_w1"], disp, cfg["m_near_w2"]))
-    warnings.append(_iw((clean != "") & ~fmt_ok & near, near_msg))
-
-    # first-letter / NS-prefix name checks
-    last_name = v["last_name"]
-    letter = F.substring(clean, 1, 1)
-    has_fl = cfg["first_letter"].isNotNull()
-    # reference compares clean_number[0] unconditionally once the number
-    # is non-empty (ontario_dl.py:95-114) — no alpha gate
-    cond_mismatch = (
-        has_fl
-        & (clean != "")
-        & (last_name != "")
-        & (letter != F.upper(F.substring(last_name, 1, 1)))
-    )
-    cond_noname = has_fl & (clean != "") & (last_name == "")
-    fl_msg = F.concat(
-        cfg["m_fl_head"], letter, cfg["m_fl_mid"],
-        F.upper(F.substring(last_name, 1, 1)), F.lit("'"),
-        F.when(cfg["m_fl_src"],
-               F.concat(F.lit(" (from "), v["name_src"], F.lit(")")))
-        .otherwise(F.lit("")),
-    )
-    issues.append(_iw(cond_mismatch & (cfg["first_letter"] == "fail"), fl_msg))
-    warnings.append(_iw(cond_mismatch & (cfg["first_letter"] == "warn"), fl_msg))
-    warnings.append(
-        _iw(cond_noname & cfg["m_noname_head"].isNotNull(),
-            F.concat(cfg["m_noname_head"], letter, cfg["m_noname_tail"]))
-    )
+    # first letter vs last-name initial: compared unconditionally once
+    # the number is non-empty (ontario_dl.py:95-114) — no alpha gate
+    letter = clean[:1]
+    initial = last_name[:1].upper()
+    fl_issue = fl_warn = None
+    if c.first_letter is not None and clean != "":
+        if last_name and letter != initial:
+            msg = f"{m['fl_head']}{letter}{m['fl_mid']}{initial}'"
+            if m["fl_src"]:
+                msg += f" (from {name_src})"
+            if c.first_letter == "fail":
+                fl_issue = msg
+            else:
+                fl_warn = msg
+        elif not last_name and m["noname_head"] is not None:
+            fl_warn = m["noname_head"] + letter + m["noname_tail"]
+    if fl_issue:
+        issues.append(fl_issue)
+    if fl_warn:
+        warnings.append(fl_warn)
     # surname -> 5-letter X-padded prefix; warn on first-letter mismatch
     # only (nova_scotia_dl.py:51-60,106-120)
-    ln_clean = F.regexp_replace(F.upper(last_name), "[^A-Z]", "")
-    expected = F.rpad(F.substring(ln_clean, 1, 5), 5, "X")
-    warnings.append(
-        _iw(
-            cfg["ns_prefix"] & (clean != "") & (F.length(clean) >= 5)
-            & (last_name != "")
-            & (F.substring(clean, 1, 1) != F.substring(expected, 1, 1)),
-            F.concat(F.lit("Licence prefix '"), F.substring(clean, 1, 5),
-                     F.lit("' may not match surname '"), last_name, F.lit("'")),
-        )
-    )
+    expected = _NON_AZ.sub("", last_name.upper())[:5].ljust(5, "X")
+    ns_gate = c.ns_prefix and len(clean) >= 5 and last_name != ""
+    if ns_gate and clean[:1] != expected[:1]:
+        warnings.append(f"Licence prefix '{clean[:5]}' may not match surname '{last_name}'")
 
     # minimum-age tiers
-    dob, issue_d, exp = _dates()
-    age = v["age"]
-    has_dob = dob.isNotNull()
-    issues.append(
-        _iw(has_dob & (age < cfg["fail_age"]),
-            F.concat(F.lit("Person is "), age.cast("string"),
-                     cfg["m_age_fail_tail"]))
-    )
-    warnings.append(
-        _iw(cfg["tier1"].isNotNull() & has_dob
-            & (age >= cfg["fail_age"]) & (age < cfg["tier1"]),
-            F.concat(F.lit("Person is "), age.cast("string"), F.lit(". "),
-                     cfg["m_tier1_tail"]))
-    )
-    warnings.append(
-        _iw(cfg["tier2"].isNotNull() & has_dob
-            & (age >= cfg["tier1"]) & (age < cfg["tier2"]),
-            F.concat(F.lit("Person is "), age.cast("string"), F.lit(". "),
-                     cfg["m_tier2_tail"]))
-    )
+    age = _age(run, dob) if dob is not None else None
+    tiers = c.warn_age_tiers
+    if age is not None:
+        if age < c.fail_age:
+            issues.append(f"Person is {age}{m['age_fail_tail']}")
+        elif age < tiers[0]:
+            warnings.append(f"Person is {age}. {m['tier1_tail']}")
+        elif len(tiers) > 1 and age < tiers[1]:
+            warnings.append(f"Person is {age}. {m['tier2_tail']}")
 
-    # expiry-on-birthday (warn). Two shapes: the Canadian "Expiry date
-    # (MM-dd) is not on birthday (MM-dd). ..." (ontario_dl.py:139-142)
-    # and the CA/TX "X typically expires on birthday. DOB: MM/dd,
-    # Expiry: MM/dd" (california_dl.py:130-133).
-    bday_msg = F.when(
-        cfg["m_bday_std"],
-        F.concat(F.lit("Expiry date ("), F.date_format(exp, "MM-dd"),
-                 F.lit(") is not on birthday ("), F.date_format(dob, "MM-dd"),
-                 F.lit("). "), cfg["m_bday_tail"]),
-    ).otherwise(
-        F.concat(cfg["m_bday_name"],
-                 F.lit(" typically expires on birthday. DOB: "),
-                 F.date_format(dob, "MM/dd"), F.lit(", Expiry: "),
-                 F.date_format(exp, "MM/dd"))
-    )
-    warnings.append(
-        _iw(
-            has_dob & exp.isNotNull()
-            & ((F.month(dob) != F.month(exp)) | (F.dayofmonth(dob) != F.dayofmonth(exp))),
-            bday_msg,
-        )
-    )
+    # expiry-on-birthday (warn): the Canadian "Expiry date (MM-dd) is not
+    # on birthday (MM-dd). ..." shape (ontario_dl.py:139-142) and the
+    # CA/TX "X typically expires on birthday. DOB: MM/dd, Expiry: MM/dd"
+    # shape (california_dl.py:130-133)
+    bday_known = dob is not None and exp is not None
+    bday_match = bday_known and _md(dob, "-") == _md(exp, "-")
+    if bday_known and not bday_match:
+        if m["bday_std"]:
+            warnings.append(f"Expiry date ({_md(exp, '-')}) is not on birthday "
+                            f"({_md(dob, '-')}). {m['bday_tail']}")
+        else:
+            warnings.append(f"{m['bday_name']} typically expires on birthday. "
+                            f"DOB: {_md(dob, '/')}, Expiry: {_md(exp, '/')}")
 
     # validity window (warn)
-    validity = v["validity"]
-    has_validity = issue_d.isNotNull() & exp.isNotNull()
-    # {validity_years:.1f} — format_number(v, 1) matches Python's %.1f
-    # for every non-tie value (ties are unreachable: validity is
-    # days/365[.25], never an exact multiple of 0.05)
-    v1 = F.format_number(validity, 1)
-    warnings.append(
-        _iw(cfg["validity_low"].isNotNull() & has_validity
-            & (validity < cfg["validity_low"]),
-            F.concat(F.lit("Short validity period ("), v1,
-                     F.lit(" years). "), cfg["m_vshort_tail"]))
-    )
-    warnings.append(
-        _iw(cfg["validity_high"].isNotNull() & has_validity
-            & (validity > cfg["validity_high"]),
-            F.concat(cfg["m_vlong_head"], v1, cfg["m_vlong_tail"]))
-    )
+    validity = (exp - issue_d) / c.validity_div if issue_d is not None and exp is not None else None
+    if validity is not None:
+        if c.validity_low is not None and validity < c.validity_low:
+            warnings.append(f"Short validity period ({_fmt1(validity)} years). {m['vshort_tail']}")
+        if c.validity_high is not None and validity > c.validity_high:
+            warnings.append(m["vlong_head"] + _fmt1(validity) + m["vlong_tail"])
 
     # expired check
-    days = v["days"]
-    issues.append(
-        _iw(cfg["expired_check"] & exp.isNotNull() & (exp < run_date),
-            F.concat(cfg["m_expired_head"], (-days).cast("string"), F.lit(" days ago")))
-    )
-    warnings.append(
-        _iw(cfg["expired_check"] & exp.isNotNull() & (exp >= run_date) & (days < 30),
-            F.concat(cfg["m_expires_head"], days.cast("string"), F.lit(" days")))
-    )
-    warnings.append(
-        _iw(cfg["expired_check"] & cfg["expiry_warn_60"] & exp.isNotNull()
-            & (exp >= run_date) & (days >= 30) & (days < 60),
-            F.concat(cfg["m_soon_head"], days.cast("string"), F.lit(" days)")))
-    )
+    days = exp - run if exp is not None else None
+    if c.expired_check and days is not None:
+        if days < 0:
+            issues.append(f"{m['expired_head']}{-days} days ago")
+        elif days < 30:
+            warnings.append(f"{m['expires_head']}{days} days")
+        elif c.expiry_warn_60 and days < 60:
+            warnings.append(f"{m['soon_head']}{days} days)")
 
     # issue-date sanity
-    age_at_issue = v["age_at_issue"]
-    has_issue_check = cfg["issue_min"].isNotNull()
-    issues.append(_iw(has_issue_check & issue_d.isNotNull() & (issue_d > run_date),
-                      "Issue date cannot be in the future"))
-    issues.append(
-        _iw(has_issue_check & issue_d.isNotNull() & has_dob & (issue_d < dob),
-            "Issue date cannot be before date of birth")
-    )
-    issues.append(
-        _iw(
-            has_issue_check & issue_d.isNotNull() & has_dob & (issue_d >= dob)
-            & (age_at_issue < cfg["issue_min"]),
-            F.concat(F.lit("Person was "), age_at_issue.cast("string"),
-                     cfg["m_issue_tail"]),
-        )
-    )
+    age_at_issue = None
+    if c.issue_check_min_age is not None and issue_d is not None:
+        if issue_d > run:
+            issues.append("Issue date cannot be in the future")
+        if dob is not None:
+            if issue_d < dob:
+                issues.append("Issue date cannot be before date of birth")
+            else:
+                age_at_issue = _age(issue_d, dob)
+                if age_at_issue < c.issue_check_min_age:
+                    issues.append(f"Person was {age_at_issue}{m['issue_tail']}")
 
     # Ontario DOB-in-number encoding (ontario_dl.py:156-202)
-    no_hyphen = F.regexp_replace(clean, r"[\s\-]", "")
-    last6 = F.substring(no_hyphen, -6, 6)
-    yy = F.date_format(dob, "yy")
-    male = F.concat(yy, F.date_format(dob, "MM"), F.date_format(dob, "dd"))
-    female = F.concat(yy, F.lpad((F.month(dob) + 50).cast("string"), 2, "0"),
-                      F.date_format(dob, "dd"))
-    gender = F.upper(F.trim(F.coalesce(col("gender"), F.lit(""))))
-    checkable = cfg["ont_dob"] & (clean != "") & has_dob
-    issues.append(
-        _iw(checkable & (last6 != male) & (last6 != female),
-            F.concat(F.lit("Last 6 digits of license '"), last6,
-                     F.lit("' do not match DOB encoding. Expected '"), male,
-                     F.lit("' (male) or '"), female,
-                     F.lit("' (female with month +50)")))
-    )
-    warnings.append(
-        _iw(checkable & (last6 == male) & gender.isin("F", "FEMALE"),
-            F.concat(F.lit("License uses male DOB encoding but gender is '"),
-                     gender,
-                     F.lit("'. Expected female encoding with month +50.")))
-    )
-    warnings.append(
-        _iw(checkable & (last6 == female) & gender.isin("M", "MALE"),
-            F.concat(
-                F.lit("License uses female DOB encoding (month +50) but gender is '"),
-                gender, F.lit("'.")))
-    )
+    gender = _trim(d.gender or "").upper()
+    checkable = c.ontario_dob_encoding and clean != "" and dob is not None
+    if checkable:
+        last6 = _SEP.sub("", clean)[-6:]
+        y, mo, dd = _ymd(dob)
+        yy = f"{abs(y) % 100:02d}"
+        male, female = f"{yy}{mo:02d}{dd:02d}", f"{yy}{mo + 50:02d}{dd:02d}"
+        if last6 != male and last6 != female:
+            issues.append(f"Last 6 digits of license '{last6}' do not match DOB encoding. "
+                          f"Expected '{male}' (male) or '{female}' (female with month +50)")
+        if last6 == male and gender in ("F", "FEMALE"):
+            warnings.append(f"License uses male DOB encoding but gender is '{gender}'. "
+                            "Expected female encoding with month +50.")
+        if last6 == female and gender in ("M", "MALE"):
+            warnings.append("License uses female DOB encoding (month +50) but gender is "
+                            f"'{gender}'.")
 
-    # ---- details map (each province's details[...] sites; conditions
-    # mirror the reference's per-check blocks, e.g. alberta_dl.py:62-188,
-    # bc_dl.py:62-248, ontario_dl.py:66-226, california_dl.py:54-143)
-    def det_fn(pi: Column, pw: Column) -> Column:
-        valid_cond = (clean != "") & fmt_ok
-        near_cond = (clean != "") & ~fmt_ok & near
-        dspec = cfg["d_digits"]
-        digits_val = (
-            F.when(valid_cond & (dspec == "len"), F.length(clean).cast("string"))
-            .when(valid_cond & (dspec == "slice1"), F.substring(clean, 2, 64))
-            .when(valid_cond & (dspec == "slice5"), F.substring(clean, 6, 64))
-            .when(valid_cond & dspec.rlike("^[0-9]+$"), dspec)
-            .when(near_cond & cfg["d_digits_near"], F.length(clean).cast("string"))
-        )
-        # BC NDL:/DL: prefix detection flags (bc_dl.py:74-96)
-        is_ndl = cfg["bc_strip"] & raw.startswith("NDL")
-        is_dl = cfg["bc_strip"] & ~raw.startswith("NDL") & raw.startswith("DL")
-        neither = cfg["bc_strip"] & ~is_ndl & ~is_dl
-        # NS surname-prefix check (nova_scotia_dl.py:89-120)
-        ns_gate = (
-            cfg["ns_prefix"] & (clean != "") & (F.length(clean) >= 5)
-            & (last_name != "")
-        )
-        # first-letter keys: ontario_dl.py:95-110 (no alpha gate,
-        # "license_" spelling), quebec_dl.py:104-118 / newfoundland
-        # ("licence_", alpha-gated), california_dl.py:73-86 (alpha +
-        # last-name gated, adds name_extraction_source)
-        fl = cfg["d_fl"]
-        letter_alpha = letter.rlike("^[A-Z]$")
-        fl_gate = (
-            F.when(fl == "ontario", clean != "")
-            .when(fl == "std", (clean != "") & letter_alpha)
-            .when(fl == "ca", (clean != "") & letter_alpha & (last_name != ""))
-            .otherwise(F.lit(False))
-        )
-        fl_key = F.when(
-            fl.isin("ontario", "ca"), "license_first_letter"
-        ).otherwise(F.lit("licence_first_letter"))
-        ln_initial = F.upper(F.substring(last_name, 1, 1))
-        bday_known = has_dob & exp.isNotNull()
-        bday_match = (F.month(dob) == F.month(exp)) & (
-            F.dayofmonth(dob) == F.dayofmonth(exp)
-        )
-        issue_key_cond = (
-            cfg["issue_min"].isNotNull() & issue_d.isNotNull()
-            & (issue_d <= run_date) & has_dob & (issue_d >= dob)
-        )
-        return _dmap(
-            ("checks_performed", cfg["d_checks"]),
-            ("state", cfg["d_state"]),
-            ("last_name_source", _dv(cfg["d_ln_src"], v["name_src"])),
-            ("extracted_last_name",
-             _dv(cfg["d_ln_src"] & (last_name != ""), last_name)),
-            (cfg["d_num_key"], clean),
-            ("has_ndl_prefix",
-             _dv(is_ndl | neither, F.when(is_ndl, "true").otherwise("false"))),
-            ("has_dl_prefix",
-             _dv(is_dl | neither, F.when(is_dl, "true").otherwise("false"))),
-            ("prefix_type",
-             _dv(is_ndl | is_dl, F.when(is_ndl, "NDL").otherwise("DL"))),
-            (cfg["d_valid_key"], _dtrue(valid_cond)),
-            ("licence_letter",
-             _dv(cfg["d_letter"] & (valid_cond | near_cond),
-                 F.substring(clean, 1, 1))),
-            ("licence_digits", digits_val),
-            (cfg["d_clean_key"], clean),
-            ("licence_prefix",
-             _dv((cfg["ns_prefix"] & valid_cond) | ns_gate,
-                 F.substring(clean, 1, 5))),
-            ("expected_prefix", _dv(ns_gate, expected)),
-            ("prefix_matches_surname",
-             _dtrue(ns_gate
-                    & (F.substring(clean, 1, 1) == F.substring(expected, 1, 1)))),
-            (fl_key, _dv(fl_gate, letter)),
-            ("last_name_initial", _dv(fl_gate & (last_name != ""), ln_initial)),
-            ("name_extraction_source", _dv((fl == "ca") & fl_gate, v["name_src"])),
-            ("first_letter_matches",
-             _dtrue(fl_gate & (last_name != "") & (letter == ln_initial))),
-            (cfg["d_age_key"], _dv(has_dob, age.cast("string"))),
-            ("date_of_birth",
-             _dv(cfg["d_age_dob"] & has_dob, F.date_format(dob, "yyyy-MM-dd"))),
-            ("expiry_on_birthday",
-             _dtrue(~cfg["d_bday_both"] & bday_known & bday_match)),
-            ("expires_on_birthday",
-             _dv(cfg["d_bday_both"] & bday_known,
-                 F.when(bday_match, "true").otherwise("false"))),
-            ("validity_years", _d1f(has_validity, validity)),
-            ("days_until_expiry",
-             _dv(cfg["expired_check"] & exp.isNotNull() & (days >= 0),
-                 days.cast("string"))),
-            ("age_at_issue", _dv(issue_key_cond, age_at_issue.cast("string"))),
-            ("license_last_6", _dv(checkable, last6)),
-            ("expected_dob_male", _dv(checkable, male)),
-            ("expected_dob_female", _dv(checkable, female)),
-            ("document_gender",
-             _dv(checkable,
-                 F.when(gender == "", "not_provided").otherwise(gender))),
-            ("dob_encoded_in_license",
-             _dtrue(checkable & ((last6 == male) | (last6 == female)))),
-            ("detected_encoding",
-             _dv(checkable & ((last6 == male) | (last6 == female)),
-                 F.when(last6 == male, "male").otherwise("female"))),
-            # Verifik registry lookup — disabled default (config.py:7;
-            # ontario_dl.py:223-226, bc_dl.py:245-248)
-            ("verifik_api_enabled", _dv(cfg["verifik"], "false")),
-            ("verifik_api_skipped_reason",
-             _dv(cfg["verifik"] & (F.size(pi) > 0), "local_validation_failed")),
-        )
-
-    return _result(
-        cfg["name"], issues, warnings,
-        cfg["m_fail_header"], cfg["m_warn_full"], cfg["m_pass_full"],
-        details=det_fn,
-    )
-
-
-def dl_validator(cfg: DLConfig, run_date: Column, prefix: str = "") -> Column:
-    """Single-config convenience wrapper (tests / ad-hoc use)."""
-    return _pick(
-        F.array(_dl_cfg_struct(cfg)),
-        lambda c: _dl_result(c, run_date, prefix),
-    )
+    # ---- details (each province's details[...] sites, e.g.
+    # alberta_dl.py:62-188, bc_dl.py:62-248, ontario_dl.py:66-226,
+    # california_dl.py:54-143); entries in the reference's key order
+    valid = clean != "" and fmt_ok
+    near_ok = clean != "" and not fmt_ok and near
+    det: dict = {"checks_performed": "; ".join(c.d_checks)}
+    _put(det, "state", c.d_state)
+    if c.d_ln_src:
+        det["last_name_source"] = name_src
+        if last_name:
+            det["extracted_last_name"] = last_name
+    _put(det, c.d_num_key, clean)
+    if c.bc_prefix_strip:  # NDL:/DL: prefix flags (bc_dl.py:74-96)
+        ndl, dl = raw.startswith("NDL"), not raw.startswith("NDL") and raw.startswith("DL")
+        if ndl or not dl:
+            det["has_ndl_prefix"] = "true" if ndl else "false"
+        if dl or not ndl:
+            det["has_dl_prefix"] = "true" if dl else "false"
+        if ndl or dl:
+            det["prefix_type"] = "NDL" if ndl else "DL"
+    if valid:
+        det[c.d_valid_key] = "true"
+    if c.d_letter and (valid or near_ok):
+        det["licence_letter"] = letter
+    spec = c.d_digits
+    if valid and spec is not None:
+        _put(det, "licence_digits", {"len": str(len(clean)), "slice1": clean[1:65],
+                                     "slice5": clean[5:69]}.get(spec, spec))
+    elif near_ok and c.d_digits_near:
+        det["licence_digits"] = str(len(clean))
+    _put(det, c.d_clean_key, clean)
+    if (c.ns_prefix and valid) or ns_gate:
+        det["licence_prefix"] = clean[:5]
+    if ns_gate:
+        det["expected_prefix"] = expected
+        if clean[:1] == expected[:1]:
+            det["prefix_matches_surname"] = "true"
+    # first-letter keys: ontario_dl.py:95-110 (no alpha gate, "license_"
+    # spelling), quebec_dl.py:104-118 / newfoundland ("licence_",
+    # alpha-gated), california_dl.py:73-86 (alpha + last-name gated,
+    # adds name_extraction_source)
+    fl = c.d_fl
+    alpha = bool(_ONE_ALPHA.search(letter))
+    if clean != "" and (fl == "ontario" or (fl == "std" and alpha)
+                        or (fl == "ca" and alpha and last_name)):
+        det["license_first_letter" if fl in ("ontario", "ca") else "licence_first_letter"] = letter
+        if last_name:
+            det["last_name_initial"] = initial
+        if fl == "ca":
+            det["name_extraction_source"] = name_src
+        if last_name and letter == initial:
+            det["first_letter_matches"] = "true"
+    if age is not None:
+        det[c.d_age_key] = str(age)
+        if c.d_age_dob:
+            det["date_of_birth"] = _fmt_date(dob)
+    if bday_known:
+        if c.d_bday_both:
+            det["expires_on_birthday"] = "true" if bday_match else "false"
+        elif bday_match:
+            det["expiry_on_birthday"] = "true"
+    if validity is not None:
+        det["validity_years"] = _fmt1(validity)
+    if c.expired_check and days is not None and days >= 0:
+        det["days_until_expiry"] = str(days)
+    if age_at_issue is not None and issue_d <= run:
+        det["age_at_issue"] = str(age_at_issue)
+    if checkable:
+        det["license_last_6"] = last6
+        det["expected_dob_male"] = male
+        det["expected_dob_female"] = female
+        det["document_gender"] = gender or "not_provided"
+        if last6 in (male, female):
+            det["dob_encoded_in_license"] = "true"
+            det["detected_encoding"] = "male" if last6 == male else "female"
+    # Verifik registry lookup — disabled default (config.py:7;
+    # ontario_dl.py:223-226, bc_dl.py:245-248)
+    if c.verifik:
+        det["verifik_api_enabled"] = "false"
+        if issues:
+            det["verifik_api_skipped_reason"] = "local_validation_failed"
+    return _result(name, issues, warnings, m["fail_header"], m["warn_full"], m["pass_full"], det)
 
 
 # ----------------------------------------------------- passports (V30-41)
 
 
-@dataclass
-class PassportConfig:
-    name: str
-    display: str
-    country_code: str
-    format_pattern: str
-    near_miss: str | None          # as DLConfig, plus "france" special
-    child_age: int | None          # age_at_issue threshold; None = no tiers
-    child_window: tuple[float, float] | None
-    adult_window: tuple[float, float] = (9.5, 10.5)
-    no_age_fallback: bool = False  # warn when neither window matches
-    fixed_window_only: bool = False  # colombia: adult window always
-    always_window: bool = False    # nigeria: either window, no age check
-    invalid_letters: str | None = None  # germany
-    # country-specific tail of the invalid-characters issue message
-    # (germany_passport.py:66-68) — lives here so a future config with
-    # invalid letters doesn't inherit the Germany wording
-    invalid_letters_msg: str | None = None
-    # ---- details-map knobs
-    d_prefix: int | None = None    # passport_prefix = clean[:n] on valid
-    d_china_type: bool = False     # passport_type from E/G/D prefix
-    d_validity_key: str = "validity_matches_age"  # or "validity_valid"
-    d_country: str = ""            # constant details["country"] initializer
-    # ---- byte-exact warning tails (now part of the details contract:
-    # the "; "-joined warnings copy). Shapes in _pp_body.
-    w_near: str | None = None      # near-miss tail (digits- or desc-shape)
-    w_child_head: str | None = None  # "Child passport "/"Minor passport "/
-    #                                  "Passport "; None -> no-age shape
-    w_child_tail: str = ""
-    w_adult_tail: str = ""
-    w_window_tail: str | None = None  # no-age / always / fixed window tail
-
-
-PASSPORT_CONFIGS: dict[str, PassportConfig] = {
-    "us_passport": PassportConfig(
-        "us_passport", "US Passport", "USA", r"^\d{9}$", "digits:8:10",
-        16, (4.5, 5.5), d_country="United States",
-        w_near="US passport numbers are typically 9 digits.",
-        w_child_head="Child passport ",
-        w_child_tail="Expected ~5 years for applicants under 16.",
-        w_adult_tail="Expected ~10 years for applicants 16+."),
-    "uk_passport": PassportConfig(
-        "uk_passport", "UK Passport", "GBR", r"^\d{9}$", "digits:8:10",
-        16, (4.5, 5.5), d_country="United Kingdom",
-        w_near="UK passport numbers are typically 9 digits.",
-        w_child_head="Child passport ",
-        w_child_tail="Expected ~5 years for applicants under 16.",
-        w_adult_tail="Expected ~10 years for applicants 16+."),
-    "india_passport": PassportConfig(
-        "india_passport", "India Passport", "IND", r"^[A-Z]\d{7}$", "len:8:alpha",
-        18, (4.5, 5.5), d_prefix=1, d_country="India",
-        w_near="India passport: 1 letter + 7 digits (e.g., A1234567)",
-        w_child_head="Minor passport ",
-        w_child_tail="Expected ~5 years for applicants under 18.",
-        w_adult_tail="Expected ~10 years for applicants 18+."),
-    "australia_passport": PassportConfig(
-        "australia_passport", "Australia Passport", "AUS", r"^[A-Z]{1,2}\d{7}$",
-        "minlen:8:alpha", 16, (4.5, 5.5), d_country="Australia",
-        w_near="Australia passport: 1-2 letters + 7 digits (e.g., N1234567)",
-        w_child_head="Child passport ",
-        w_child_tail="Expected ~5 years for applicants under 16.",
-        w_adult_tail="Expected ~10 years for applicants 16+."),
-    "germany_passport": PassportConfig(
-        "germany_passport", "Germany Passport", "DEU", r"^[A-Z0-9]{9}$", None,
-        24, (5.5, 6.5), invalid_letters="IOQS",
-        invalid_letters_msg=". German passports do not use letters I, O, Q, S.", d_country="Germany",
-        w_child_head="Passport ",
-        w_child_tail="Expected ~6 years for applicants under 24.",
-        w_adult_tail="Expected ~10 years for applicants 24+."),
-    "france_passport": PassportConfig(
-        "france_passport", "France Passport", "FRA", r"^\d{2}[A-Z]{2}\d{5}$",
-        "france", 18, (4.5, 5.5), d_country="France",
-        w_child_head="Minor passport ",
-        w_child_tail="Expected ~5 years for applicants under 18.",
-        w_adult_tail="Expected ~10 years for applicants 18+."),
-    "nigeria_passport": PassportConfig(
-        "nigeria_passport", "Nigeria Passport", "NGA", r"^[A-Z]\d{8}$", "len:9:alpha",
-        None, (4.5, 5.5), always_window=True, d_prefix=1,
-        d_validity_key="validity_valid", d_country="Nigeria",
-        w_near="Nigeria passport: 1 letter + 8 digits (e.g., A12345678)",
-        w_window_tail="Nigeria passports are typically 5 years (32-page) or 10 years (64-page)."),
-    "china_passport": PassportConfig(
-        "china_passport", "China Passport", "CHN", r"^[EGD]\d{8}$", "len:9:egd",
-        16, (4.5, 5.5), no_age_fallback=True, d_prefix=1, d_china_type=True,
-        d_validity_key="validity_valid", d_country="China",
-        w_near="China passport: E/G/D + 8 digits (e.g., E12345678)",
-        w_child_tail="China passports for minors (under 16) are typically valid for 5 years.",
-        w_adult_tail="China passports for adults (16+) are typically valid for 10 years.",
-        w_window_tail="China passports are typically 5 years (minors) or 10 years (adults)."),
-    "colombia_passport": PassportConfig(
-        "colombia_passport", "Colombia Passport", "COL", r"^[A-Z]{2}\d{6,7}$",
-        "len89:alpha2", None, None, fixed_window_only=True, d_prefix=2,
-        d_validity_key="validity_valid", d_country="Colombia",
-        w_near="Colombia passport: 2 letters + 6-7 digits (e.g., AZ573250)",
-        w_window_tail="Colombia passports are typically valid for 10 years."),
-    "ukraine_passport": PassportConfig(
-        "ukraine_passport", "Ukraine Passport", "UKR", r"^[A-Z]{2}\d{6}$",
-        "len:8:alpha2", 18, (3.5, 4.5), no_age_fallback=True, d_prefix=2,
-        d_validity_key="validity_valid", d_country="Ukraine",
-        w_near="Ukraine passport: 2 letters + 6 digits (e.g., AA123456)",
-        w_child_tail="Ukraine passports for minors (under 18) are typically valid for 4 years.",
-        w_adult_tail="Ukraine passports for adults (18+) are typically valid for 10 years.",
-        w_window_tail="Ukraine passports are typically 4 years (minors) or 10 years (adults)."),
+_PP = {
+    name: (c, _parse_near(c.near_miss), _jre(c.format_pattern))
+    for name, c in PASSPORT_CONFIGS.items()
 }
 
 
-# Byte-exact format-failure prefixes (each file's "Invalid X passport
-# format. Expected: ..., Got: {document_number}" wording; file:line in
-# the greps cited on DL_MSGS). The raw document number as given is
-# appended.
-PP_FMT_PREFIX: dict[str, str] = {
-    "us_passport": "Invalid US passport format. Expected: 9 digits, Got: ",
-    "uk_passport": "Invalid UK passport format. Expected: 9 digits, Got: ",
-    "india_passport": (
-        "Invalid India passport format. Expected: 1 letter + 7 digits (e.g., A1234567), Got: "
-    ),
-    "australia_passport": (
-        "Invalid Australia passport format. Expected: 1-2 letters + 7 digits, Got: "
-    ),
-    "germany_passport": (
-        "Invalid Germany passport format. Expected: 9 alphanumeric characters, Got: "
-    ),
-    "france_passport": (
-        "Invalid France passport format. Expected: 9 characters (e.g., 12AB34567), Got: "
-    ),
-    "nigeria_passport": (
-        "Invalid Nigeria passport format. Expected: 1 letter + 8 digits (e.g., A12345678), Got: "
-    ),
-    "china_passport": (
-        "Invalid China passport format. Expected: E/G/D + 8 digits (e.g., E12345678), Got: "
-    ),
-    "colombia_passport": (
-        "Invalid Colombia passport format. Expected: 2 letters + 6-7 digits (e.g., AZ573250), Got: "
-    ),
-    "ukraine_passport": (
-        "Invalid Ukraine passport format. Expected: 2 letters + 6 digits (e.g., AA123456), Got: "
-    ),
-}
+def _within(v: float, window: tuple[float, float] | None) -> bool | None:
+    """``lo <= v <= hi``; None (SQL NULL) without a window."""
+    return None if window is None else window[0] <= v <= window[1]
 
 
-def _parse_pp_near(spec: str | None) -> tuple[str | None, int | None, int | None]:
-    if spec is None:
-        return None, None, None
-    if spec == "france":
-        return "france", None, None
-    if spec == "len89:alpha2":
-        return "len89_alpha2", None, None
-    parts = spec.split(":")
-    if parts[0] == "digits":
-        return "digits", int(parts[1]), int(parts[2])
-    if parts[0] == "minlen":
-        return "minlen_alpha", int(parts[1]), None
-    # len:N:egd | len:N:alpha2 | len:N:alpha
-    return f"len_{parts[2]}", int(parts[1]), None
-
-
-def _pp_cfg_struct(c: PassportConfig) -> Column:
-    kind, lo, hi = _parse_pp_near(c.near_miss)
-    c_lo, c_hi = c.child_window if c.child_window else (None, None)
-    a_lo, a_hi = c.adult_window
-    return F.struct(
-        _lit_s(c.name).alias("name"),
-        _lit_s(c.display).alias("display"),
-        _lit_s(PP_FMT_PREFIX[c.name]).alias("fmt_prefix"),
-        _lit_s(c.country_code).alias("cc"),
-        _lit_s(c.format_pattern).alias("fmt"),
-        _lit_s(kind).alias("near_kind"),
-        _lit_i(lo).alias("near_lo"),
-        _lit_i(hi).alias("near_hi"),
-        _lit_i(c.child_age).alias("child_age"),
-        _lit_d(c_lo).alias("child_lo"),
-        _lit_d(c_hi).alias("child_hi"),
-        _lit_d(a_lo).alias("adult_lo"),
-        _lit_d(a_hi).alias("adult_hi"),
-        _lit_b(c.no_age_fallback).alias("no_age_fallback"),
-        _lit_b(c.fixed_window_only).alias("fixed_window_only"),
-        _lit_b(c.always_window).alias("always_window"),
-        _lit_s(c.invalid_letters).alias("inv_letters"),
-        _lit_s(c.invalid_letters_msg).alias("inv_tail"),
-        _lit_i(c.d_prefix).alias("d_prefix"),
-        _lit_b(c.d_china_type).alias("d_china_type"),
-        _lit_s(c.d_validity_key).alias("d_validity_key"),
-        _lit_s(c.d_country).alias("d_country"),
-        _lit_s(c.w_near).alias("w_near"),
-        _lit_s(c.w_child_head).alias("w_child_head"),
-        _lit_s(c.w_child_tail).alias("w_child_tail"),
-        _lit_s(c.w_adult_tail).alias("w_adult_tail"),
-        _lit_s(c.w_window_tail).alias("w_window_tail"),
-    )
-
-
-def _pp_cfg_array() -> Column:
-    return F.array(*[_pp_cfg_struct(c) for c in PASSPORT_CONFIGS.values()])
-
-
-def _pp_result(cfg: Column, run_date: Column, prefix: str = "") -> Column:
-    """One parametrized national-passport validator (V31-V40) over a
-    bound config struct. Derived per-row values are bound once."""
-    from webxtract.exprs import bind_once
-
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    raw_e = F.trim(F.coalesce(col("document_number"), F.lit("")))
-    dob_e, issue_e, exp_e = _dates()
-    derived = F.struct(
-        F.upper(F.trim(F.coalesce(col("country_code"), F.lit("")))).alias("cc"),
-        raw_e.alias("raw"),
-        # messages interpolate the number exactly as given (e.g.
-        # us_passport.py:61 "Got: {document_number}")
-        F.coalesce(col("document_number"), F.lit("")).alias("disp"),
-        F.regexp_replace(F.upper(raw_e), r"[\s\-]", "").alias("clean"),
-        _age_expr(issue_e, dob_e).alias("age_at_issue"),
-        (F.datediff(exp_e, issue_e) / 365.25).alias("validity"),
-        F.datediff(exp_e, run_date).alias("days"),
-    )
-    return bind_once(derived, lambda v: _pp_body(cfg, v, run_date, prefix))
-
-
-def _pp_body(cfg: Column, v: Column, run_date: Column, prefix: str) -> Column:
-    cc, raw, clean = v["cc"], v["raw"], v["clean"]
-
-    issues: list[Column] = []
-    warnings: list[Column] = []
+def passport_validator(name: str, d: Doc) -> tuple:
+    """One parametrized national-passport validator (V31-V40)."""
+    c, (kind, lo, hi), fmt_re = _PP[name]
+    run, dob, issue_d, exp = d.run, d.dob, d.issue, d.exp
+    cc = _trim(d.country_code or "").upper()
+    # messages interpolate the number exactly as given (us_passport.py:61)
+    disp = d.document_number or ""
+    clean = _clean(disp)
+    issues: list[str] = []
+    warnings: list[str] = []
 
     # country-code check -> WARNING on mismatch (us_passport.py:36-43)
-    warnings.append(
-        _iw((cc != "") & (cc != cfg["cc"]),
-            F.concat(F.lit("Country code '"), cc,
-                     F.lit("' does not match expected '"), cfg["cc"], F.lit("'")))
-    )
+    if cc and cc != c.country_code:
+        warnings.append(f"Country code '{cc}' does not match expected '{c.country_code}'")
+    fmt_ok = bool(fmt_re.search(clean))
+    near = _near_miss(kind, lo, hi, clean)
+    bad = [ch for ch in clean if ch in c.invalid_letters] if c.invalid_letters else []
+    if clean == "":
+        issues.append("Missing passport number")
+    elif c.invalid_letters is not None:
+        if not fmt_ok:
+            issues.append(PP_FMT_PREFIX[name] + disp)
+        elif bad:
+            issues.append("Passport number contains invalid characters: "
+                          + ", ".join(bad) + c.invalid_letters_msg)
+    elif not fmt_ok and not near:
+        issues.append(PP_FMT_PREFIX[name] + disp)
+    elif not fmt_ok:
+        # three byte-exact shapes: digit-count (us_passport.py:55-58),
+        # description (india_passport.py:56-59), France's accepted
+        # fallback (france_passport.py:63-66)
+        if kind == "digits":
+            warnings.append(f"Passport number '{disp}' has {len(clean)} digits. {c.w_near}")
+        elif kind == "france":
+            warnings.append(f"Passport number '{disp}' accepted but may not match standard "
+                            "French format (2 digits + 2 letters + 5 digits).")
+        else:
+            warnings.append(f"Passport number '{disp}' may have format issues. {c.w_near}")
 
-    fmt_ok = F.regexp_like(clean, cfg["fmt"])
-    near = (
-        F.when(
-            cfg["near_kind"] == "digits",
-            clean.rlike(r"^\d+$")
-            & F.length(clean).between(cfg["near_lo"], cfg["near_hi"]),
-        )
-        .when(cfg["near_kind"] == "france", clean.rlike(r"^[A-Z0-9]{9}$"))
-        .when(
-            cfg["near_kind"] == "len_egd",
-            (F.length(clean) == cfg["near_lo"])
-            & F.substring(clean, 1, 1).isin("E", "G", "D"),
-        )
-        .when(
-            cfg["near_kind"] == "len89_alpha2",
-            F.length(clean).isin(8, 9) & F.substring(clean, 1, 2).rlike("^[A-Z]{2}$"),
-        )
-        .when(
-            cfg["near_kind"] == "len_alpha2",
-            (F.length(clean) == cfg["near_lo"])
-            & F.substring(clean, 1, 2).rlike("^[A-Z]{2}$"),
-        )
-        .when(
-            cfg["near_kind"] == "minlen_alpha",
-            (F.length(clean) >= cfg["near_lo"])
-            & F.substring(clean, 1, 1).rlike("[A-Z]"),
-        )
-        .when(
-            cfg["near_kind"] == "len_alpha",
-            (F.length(clean) == cfg["near_lo"])
-            & F.substring(clean, 1, 1).rlike("[A-Z]"),
-        )
-        .otherwise(F.lit(False))
-    )
-    has_inv = cfg["inv_letters"].isNotNull()
-    bad = F.size(
-        F.filter(F.split(clean, ""), lambda ch: F.contains(cfg["inv_letters"], ch))
-    )
-    disp = v["disp"]
-    issues.append(_iw(clean == "", "Missing passport number"))
-    issues.append(
-        _iw(has_inv & (clean != "") & fmt_ok & (bad > 0),
-            F.concat(
-                F.lit("Passport number contains invalid characters: "),
-                F.array_join(
-                    F.filter(F.split(clean, ""),
-                             lambda ch: F.contains(cfg["inv_letters"], ch)),
-                    ", ",
-                ),
-                cfg["inv_tail"],
-            ))
-    )
-    issues.append(
-        _iw(has_inv & (clean != "") & ~fmt_ok,
-            F.concat(cfg["fmt_prefix"], disp))
-    )
-    issues.append(
-        _iw(~has_inv & (clean != "") & ~fmt_ok & ~near,
-            F.concat(cfg["fmt_prefix"], disp))
-    )
-    # near-miss warning, three byte-exact shapes: digit-count
-    # (us_passport.py:55-58), description (india_passport.py:56-59),
-    # France's accepted-fallback (france_passport.py:63-66)
-    near_msg = (
-        F.when(
-            cfg["near_kind"] == "digits",
-            F.concat(F.lit("Passport number '"), disp, F.lit("' has "),
-                     F.length(clean).cast("string"), F.lit(" digits. "),
-                     cfg["w_near"]),
-        )
-        .when(
-            cfg["near_kind"] == "france",
-            F.concat(F.lit("Passport number '"), disp,
-                     F.lit("' accepted but may not match standard French"
-                           " format (2 digits + 2 letters + 5 digits).")),
-        )
-        .otherwise(
-            F.concat(F.lit("Passport number '"), disp,
-                     F.lit("' may have format issues. "), cfg["w_near"])
-        )
-    )
-    warnings.append(_iw(~has_inv & (clean != "") & ~fmt_ok & near, near_msg))
+    has_age = dob is not None and issue_d is not None
+    age_at_issue = _age(issue_d, dob) if has_age else None
+    if has_age and issue_d < dob:
+        issues.append("Issue date cannot be before date of birth")
 
-    dob, issue_d, exp = _dates()
-    age_at_issue = v["age_at_issue"]
-    has_age = dob.isNotNull() & issue_d.isNotNull()
-
-    issues.append(_iw(has_age & (issue_d < dob), "Issue date cannot be before date of birth"))
-
-    validity = v["validity"]
-    has_validity = issue_d.isNotNull() & exp.isNotNull()
-    in_adult = (validity >= cfg["adult_lo"]) & (validity <= cfg["adult_hi"])
-    in_child = (validity >= cfg["child_lo"]) & (validity <= cfg["child_hi"])
-    # byte-exact validity warnings. Age-interpolating shape
-    # (us_passport.py:94-104 and siblings) when w_child_head is set;
-    # "Passport has X year validity." shape otherwise
-    # (china_passport.py:109-120); no-age/always/fixed window shape
-    # shares the latter with w_window_tail (nigeria :95-98, colombia
+    # validity windows. Age-interpolating warning shape (us_passport.py:
+    # 94-104 and siblings) when w_child_head is set; "Passport has X year
+    # validity." shape otherwise (china_passport.py:109-120), shared by
+    # the no-age/always/fixed window tails (nigeria :95-98, colombia
     # :95-98, china :127-129).
-    v1 = F.format_number(validity, 1)
-    val_head = F.concat(F.lit("Passport has "), v1, F.lit(" year validity. "))
-    age_shape = cfg["w_child_head"].isNotNull()
-    child_msg = F.when(
-        age_shape,
-        F.concat(cfg["w_child_head"], F.lit("(age "),
-                 age_at_issue.cast("string"), F.lit(" at issue) has "), v1,
-                 F.lit(" year validity. "), cfg["w_child_tail"]),
-    ).otherwise(F.concat(val_head, cfg["w_child_tail"]))
-    adult_msg = F.when(
-        age_shape,
-        F.concat(F.lit("Adult passport (age "), age_at_issue.cast("string"),
-                 F.lit(" at issue) has "), v1, F.lit(" year validity. "),
-                 cfg["w_adult_tail"]),
-    ).otherwise(F.concat(val_head, cfg["w_adult_tail"]))
-    window_msg = F.concat(val_head, cfg["w_window_tail"])
-    warnings.append(
-        _iw(cfg["fixed_window_only"] & has_validity & ~in_adult, window_msg)
-    )
-    warnings.append(
-        _iw(cfg["always_window"] & has_validity & ~in_child & ~in_adult,
-            window_msg)
-    )
-    tiered = ~cfg["fixed_window_only"] & ~cfg["always_window"]
-    warnings.append(
-        _iw(tiered & has_validity & has_age
-            & (age_at_issue < cfg["child_age"]) & ~in_child, child_msg)
-    )
-    warnings.append(
-        _iw(tiered & has_validity & has_age
-            & (age_at_issue >= cfg["child_age"]) & ~in_adult, adult_msg)
-    )
-    warnings.append(
-        _iw(tiered & cfg["no_age_fallback"] & has_validity & ~has_age
-            & ~in_child & ~in_adult, window_msg)
-    )
+    tiered = not c.fixed_window_only and not c.always_window
+    validity = valid_age = None
+    if issue_d is not None and exp is not None:
+        validity = (exp - issue_d) / 365.25
+        v1 = _fmt1(validity)
+        in_child, in_adult = _within(validity, c.child_window), _within(validity, c.adult_window)
+        head = f"Passport has {v1} year validity. "
+        if c.fixed_window_only:
+            valid_age = in_adult
+            if not in_adult:
+                warnings.append(head + c.w_window_tail)
+        elif c.always_window:
+            valid_age = in_child or in_adult
+            if not valid_age:
+                warnings.append(head + c.w_window_tail)
+        elif has_age:
+            child = age_at_issue < c.child_age
+            valid_age = in_child if child else in_adult
+            if not valid_age:
+                tail = c.w_child_tail if child else c.w_adult_tail
+                if c.w_child_head is None:
+                    warnings.append(head + tail)
+                else:
+                    who = c.w_child_head if child else "Adult passport "
+                    warnings.append(f"{who}(age {age_at_issue} at issue) has {v1} "
+                                    f"year validity. {tail}")
+        elif c.no_age_fallback:
+            valid_age = in_child or in_adult
+            if not valid_age:
+                warnings.append(head + c.w_window_tail)
 
     # expiry: FAIL expired, WARN <180 days
-    days = v["days"]
-    issues.append(
-        _iw(exp.isNotNull() & (exp < run_date),
-            F.concat(F.lit("Passport expired "), (-days).cast("string"), F.lit(" days ago")))
-    )
-    warnings.append(
-        _iw(exp.isNotNull() & (exp >= run_date) & (days < 180),
-            F.concat(F.lit("Passport expires in "), days.cast("string"),
-                     F.lit(" days. Many countries require 6+ months validity"
-                           " for entry.")))
-    )
+    days = exp - run if exp is not None else None
+    if days is not None and days < 0:
+        issues.append(f"Passport expired {-days} days ago")
+    elif days is not None and days < 180:
+        warnings.append(f"Passport expires in {days} days. Many countries require 6+ months "
+                        "validity for entry.")
 
-    # ---- details map (the 10 files share one skeleton: checks list,
-    # country_code_verified, passport_number_valid [+ per-country prefix/
-    # type keys], age_at_issue, validity_years + verdict key,
-    # days_until_expiry — e.g. us_passport.py:36-120, china_passport.py:
-    # 40-145, nigeria_passport.py:37-117, france_passport.py:45-127)
-    is_france = cfg["near_kind"] == "france"
-    pp_valid = (clean != "") & (
-        (fmt_ok & (~has_inv | (bad == 0))) | (is_france & ~fmt_ok & near)
-    )
-    in_either = in_child | in_adult
-    vv_cond = has_validity & (
-        (tiered & has_age
-         & F.when(age_at_issue < cfg["child_age"], in_child).otherwise(in_adult))
-        | (tiered & cfg["no_age_fallback"] & ~has_age & in_either)
-        | (cfg["always_window"] & in_either)
-        | (cfg["fixed_window_only"] & in_adult)
-    )
-    ptype = (
-        F.when(
-            cfg["d_china_type"] & pp_valid,
-            F.when(F.substring(clean, 1, 1) == "E", "Ordinary")
-            .when(F.substring(clean, 1, 1) == "G", "Official")
-            .otherwise(F.lit("Diplomatic")),
-        )
-        .when(cfg["always_window"] & has_validity & in_child, "32-page (5 years)")
-        .when(cfg["always_window"] & has_validity & in_adult, "64-page (10 years)")
-    )
-    details = _dmap(
-        ("checks_performed",
-         "country_code_check; passport_number_format; age_at_issue; "
-         "validity_period; expiry_check"),
-        # constant initializer keys (e.g. us_passport.py:28)
-        ("country", cfg["d_country"]),
-        ("country_code", cfg["cc"]),
-        ("country_code_verified", _dtrue((cc != "") & (cc == cfg["cc"]))),
-        ("passport_number_valid", _dtrue(pp_valid)),
-        ("format_type",
-         _dv(is_france & pp_valid,
-             F.when(fmt_ok, "standard").otherwise("alphanumeric"))),
-        ("passport_prefix",
-         _dv(pp_valid & cfg["d_prefix"].isNotNull(),
-             F.substring(clean, F.lit(1), cfg["d_prefix"]))),
-        ("passport_type", ptype),
-        ("age_at_issue", _dv(has_age, age_at_issue.cast("string"))),
-        ("validity_years", _d1f(has_validity, validity)),
-        (cfg["d_validity_key"], _dtrue(vv_cond)),
-        ("days_until_expiry",
-         _dv(exp.isNotNull() & (exp >= run_date), days.cast("string"))),
-    )
-    return _result(
-        cfg["name"], issues, warnings,
-        F.concat(cfg["display"], F.lit(" validation failed")),
-        F.concat(cfg["display"], F.lit(" validation passed with warnings")),
-        F.concat(cfg["display"], F.lit(" validation passed")),
-        details=details,
-    )
+    # ---- details (the 10 files share one skeleton, e.g. us_passport.py:
+    # 36-120, china_passport.py:40-145, nigeria_passport.py:37-117,
+    # france_passport.py:45-127)
+    is_france = kind == "france"
+    pp_valid = clean != "" and ((fmt_ok and not bad) or (is_france and not fmt_ok and near))
+    det = {
+        "checks_performed": "country_code_check; passport_number_format; age_at_issue; "
+                            "validity_period; expiry_check",
+        "country": c.d_country,
+        "country_code": c.country_code,
+    }
+    if cc and cc == c.country_code:
+        det["country_code_verified"] = "true"
+    if pp_valid:
+        det["passport_number_valid"] = "true"
+        if is_france:
+            det["format_type"] = "standard" if fmt_ok else "alphanumeric"
+        if c.d_prefix is not None:
+            det["passport_prefix"] = clean[: c.d_prefix]
+    if c.d_china_type and pp_valid:
+        det["passport_type"] = {"E": "Ordinary", "G": "Official"}.get(clean[:1], "Diplomatic")
+    elif c.always_window and validity is not None and (in_child or in_adult):
+        det["passport_type"] = "32-page (5 years)" if in_child else "64-page (10 years)"
+    if has_age:
+        det["age_at_issue"] = str(age_at_issue)
+    if validity is not None:
+        det["validity_years"] = v1
+        if valid_age:
+            det[c.d_validity_key] = "true"
+    if days is not None and days >= 0:
+        det["days_until_expiry"] = str(days)
+    return _result(name, issues, warnings, f"{c.display} validation failed",
+                   f"{c.display} validation passed with warnings",
+                   f"{c.display} validation passed", det)
 
 
-def passport_validator(cfg: PassportConfig, run_date: Column, prefix: str = "") -> Column:
-    """Single-config convenience wrapper (tests / ad-hoc use)."""
-    return _pick(
-        F.array(_pp_cfg_struct(cfg)),
-        lambda c: _pp_result(c, run_date, prefix),
-    )
-
-
-def canadian_passport_validator(run_date: Column, prefix: str = "") -> Column:
+def canadian_passport(d: Doc) -> tuple:
     """V30 (validators/canadian_passport.py): no format FAIL, validity
     tiers by age-at-issue (<16: ~5y / 16+: ~10y), >10.5y FAILS when age
     unknown, current age >120 FAILS, pre-1985 issue warns. No expiry check."""
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    dob, issue_d, exp = _dates()
-    age_at_issue = _age_expr(issue_d, dob)
-    has_age = dob.isNotNull() & issue_d.isNotNull()
-    current_age = _age_expr(run_date, dob)
-    clean = F.regexp_replace(
-        F.upper(F.trim(F.coalesce(col("document_number"), F.lit("")))),
-        r"[\s\-]", "",
-    )
-
-    validity = F.datediff(exp, issue_d) / 365.25
-    has_validity = issue_d.isNotNull() & exp.isNotNull()
-
-    issues = [
-        _iw(has_age & (issue_d < dob), "Issue date cannot be before date of birth"),
-        _iw(has_validity & ~has_age & (validity > 10.5),
-            F.concat(F.lit("Invalid validity period: "),
-                     F.format_number(validity, 1),
-                     F.lit(" years. Canadian passports are valid for max 10 years."))),
-        _iw(dob.isNotNull() & (current_age < 0), "Date of birth is in the future"),
-        _iw(dob.isNotNull() & (current_age > 120),
-            F.concat(F.lit("Unrealistic age: "), current_age.cast("string"), F.lit(" years"))),
-        _iw(issue_d.isNotNull() & (issue_d > run_date), "Issue date cannot be in the future"),
-    ]
-    # byte-exact warning texts (canadian_passport.py:77-95,128-133) —
-    # part of the details "warnings" copy
-    v1 = F.format_number(validity, 1)
-    warnings = [
-        _iw(has_validity & has_age & (age_at_issue < 16)
-            & ((validity < 4.5) | (validity > 5.5)),
-            F.concat(F.lit("Child passport (age "),
-                     age_at_issue.cast("string"), F.lit(" at issue) has "),
-                     v1, F.lit(" year validity. Expected ~5 years for"
-                               " applicants under 16."))),
-        _iw(has_validity & has_age & (age_at_issue >= 16)
-            & ((validity < 9.5) | (validity > 10.5)),
-            F.concat(F.lit("Adult passport (age "),
-                     age_at_issue.cast("string"), F.lit(" at issue) has "),
-                     v1, F.lit(" year validity. Expected ~10 years for"
-                               " applicants 16+."))),
-        _iw(has_validity & ~has_age & (validity < 4.5),
-            F.concat(F.lit("Unusual short validity period: "), v1,
-                     F.lit(" years"))),
-        _iw(issue_d.isNotNull() & (issue_d <= run_date)
-            & (issue_d < F.to_date(F.lit("1985-01-01"))),
-            F.concat(F.lit("Issue date "),
-                     F.date_format(issue_d, "yyyy-MM-dd"),
-                     F.lit(" predates modern passport format"))),
-    ]
+    run, dob, issue_d, exp = d.run, d.dob, d.issue, d.exp
+    clean = _clean(d.document_number)
+    has_age = dob is not None and issue_d is not None
+    aai = _age(issue_d, dob) if has_age else None
+    current = _age(run, dob) if dob is not None else None
+    validity = (exp - issue_d) / 365.25 if issue_d is not None and exp is not None else None
+    v1 = _fmt1(validity) if validity is not None else None
+    issues, warnings = [], []
+    if has_age and issue_d < dob:
+        issues.append("Issue date cannot be before date of birth")
+    if validity is not None and not has_age and validity > 10.5:
+        issues.append(f"Invalid validity period: {v1} years. Canadian passports are valid "
+                      "for max 10 years.")
+    if current is not None and current < 0:
+        issues.append("Date of birth is in the future")
+    if current is not None and current > 120:
+        issues.append(f"Unrealistic age: {current} years")
+    if issue_d is not None and issue_d > run:
+        issues.append("Issue date cannot be in the future")
+    # byte-exact warning texts (canadian_passport.py:77-95,128-133)
+    matches_age = None
+    if validity is not None and has_age:
+        child = aai < 16
+        matches_age = 4.5 <= validity <= 5.5 if child else 9.5 <= validity <= 10.5
+        if not matches_age:
+            warnings.append(
+                f"Child passport (age {aai} at issue) has {v1} year validity. Expected ~5 "
+                "years for applicants under 16." if child else
+                f"Adult passport (age {aai} at issue) has {v1} year validity. Expected ~10 "
+                "years for applicants 16+.")
+    elif validity is not None and validity < 4.5:
+        warnings.append(f"Unusual short validity period: {v1} years")
+    if issue_d is not None and issue_d <= run and issue_d < _EPOCH_1985:
+        warnings.append(f"Issue date {_fmt_date(issue_d)} predates modern passport format")
     # details sites: canadian_passport.py:36-136
-    details = _dmap(
-        ("checks_performed",
-         "passport_number_check; age_at_issue; validity_period; "
-         "current_age; issue_date_reasonable"),
-        ("passport_number", _dv(clean != "", clean)),
-        ("passport_prefix", _dv(F.length(clean) >= 2, F.substring(clean, 1, 2))),
-        ("age_at_issue", _dv(has_age, age_at_issue.cast("string"))),
-        ("validity_years", _d1f(has_validity, validity)),
-        ("validity_matches_age",
-         _dtrue(has_validity & has_age
-                & F.when(age_at_issue < 16,
-                         (validity >= 4.5) & (validity <= 5.5))
-                .otherwise((validity >= 9.5) & (validity <= 10.5)))),
-        ("current_age", _dv(dob.isNotNull(), current_age.cast("string"))),
-        ("issue_date_reasonable",
-         _dtrue(issue_d.isNotNull() & (issue_d <= run_date)
-                & (issue_d >= F.to_date(F.lit("1985-01-01"))))),
-    )
-    return _result(
-        "canadian_passport", issues, warnings,
-        "Canadian Passport validation failed",
-        "Canadian Passport validation passed with warnings",
-        "Canadian Passport validation passed",
-        details=details,
-    )
+    det = {"checks_performed": "passport_number_check; age_at_issue; validity_period; "
+                               "current_age; issue_date_reasonable"}
+    if clean:
+        det["passport_number"] = clean
+    if len(clean) >= 2:
+        det["passport_prefix"] = clean[:2]
+    if has_age:
+        det["age_at_issue"] = str(aai)
+    _put(det, "validity_years", v1)
+    if matches_age:
+        det["validity_matches_age"] = "true"
+    if current is not None:
+        det["current_age"] = str(current)
+    if issue_d is not None and _EPOCH_1985 <= issue_d <= run:
+        det["issue_date_reasonable"] = "true"
+    return _result("canadian_passport", issues, warnings, "Canadian Passport validation failed",
+                   "Canadian Passport validation passed with warnings",
+                   "Canadian Passport validation passed", det)
 
 
-def generic_passport_validator(run_date: Column, prefix: str = "") -> Column:
+_GENERIC_PP = _jre(r"^[A-Z0-9]{6,12}$")
+
+
+def generic_passport(d: Doc) -> tuple:
     """V41 (validators/generic_passport.py)."""
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    cc = F.upper(F.trim(F.coalesce(col("country_code"), F.lit(""))))
-    raw = F.trim(F.coalesce(col("document_number"), F.lit("")))
-    clean = F.regexp_replace(F.upper(raw), r"[\s\-]", "")
-
-    fmt_ok = clean.rlike(r"^[A-Z0-9]{6,12}$")
-    dob, issue_d, exp = _dates()
-    validity = F.datediff(exp, issue_d) / 365.25
-    has_validity = issue_d.isNotNull() & exp.isNotNull()
-    days = F.datediff(exp, run_date)
-
-    issues = [
-        _iw(clean == "", "Missing passport number"),
-        _iw(dob.isNotNull() & issue_d.isNotNull() & (issue_d < dob),
-            "Issue date cannot be before date of birth"),
-        _iw(exp.isNotNull() & (exp < run_date),
-            F.concat(F.lit("Passport expired "), (-days).cast("string"), F.lit(" days ago"))),
-    ]
-    warnings = [
-        _iw((cc != "") & ~cc.isin(list(COUNTRY_CODES)),
-            F.concat(F.lit("Country code '"), cc,
-                     F.lit("' is not a recognized ISO 3166-1 alpha-3 code"))),
-        _iw(cc == "", "No country code found on passport"),
-        _iw((clean != "") & ~fmt_ok & (F.length(clean) < 6),
-            F.concat(F.lit("Passport number '"),
-                     F.coalesce(col("document_number"), F.lit("")),
-                     F.lit("' seems too short. Most passports have 6-12"
-                           " alphanumeric characters."))),
-        _iw((clean != "") & ~fmt_ok & (F.length(clean) > 12),
-            F.concat(F.lit("Passport number '"),
-                     F.coalesce(col("document_number"), F.lit("")),
-                     F.lit("' seems too long. Most passports have 6-12"
-                           " alphanumeric characters."))),
-        _iw((clean != "") & ~fmt_ok & F.length(clean).between(6, 12),
-            F.concat(F.lit("Passport number '"),
-                     F.coalesce(col("document_number"), F.lit("")),
-                     F.lit("' may have format issues."))),
-        _iw(has_validity & (validity < 1),
-            F.concat(F.lit("Passport has very short validity ("),
-                     F.format_number(validity, 1),
-                     F.lit(" years). This may indicate an issue."))),
-        _iw(has_validity & (validity > 12),
-            F.concat(F.lit("Passport has unusually long validity ("),
-                     F.format_number(validity, 1),
-                     F.lit(" years). Most passports are valid for 5-10 years."))),
-        _iw(exp.isNotNull() & (exp >= run_date) & (days < 180),
-            F.concat(F.lit("Passport expires in "), days.cast("string"),
-                     F.lit(" days. Many countries require 6+ months validity"
-                           " for entry."))),
-    ]
-    # headers interpolate the ISO-resolved country name, falling back to
-    # "International" when the code is missing/unknown
-    # (generic_passport.py:141-160: country_name = details.get("country",
-    # "International"))
-    cpairs: list[Column] = []
-    for code, cname in COUNTRY_CODES.items():
-        cpairs.append(F.lit(code))
-        cpairs.append(F.lit(cname))
-    cc_map = F.create_map(*cpairs)
-    country_name = F.coalesce(cc_map[cc], F.lit("International"))
+    run, dob, issue_d, exp = d.run, d.dob, d.issue, d.exp
+    cc = _trim(d.country_code or "").upper()
+    disp = d.document_number or ""
+    clean = _clean(disp)
+    fmt_ok = bool(_GENERIC_PP.search(clean))
+    validity = (exp - issue_d) / 365.25 if issue_d is not None and exp is not None else None
+    days = exp - run if exp is not None else None
+    issues, warnings = [], []
+    if clean == "":
+        issues.append("Missing passport number")
+    if dob is not None and issue_d is not None and issue_d < dob:
+        issues.append("Issue date cannot be before date of birth")
+    if days is not None and days < 0:
+        issues.append(f"Passport expired {-days} days ago")
+    if cc and cc not in COUNTRY_CODES:
+        warnings.append(f"Country code '{cc}' is not a recognized ISO 3166-1 alpha-3 code")
+    if not cc:
+        warnings.append("No country code found on passport")
+    if clean and not fmt_ok:
+        n = len(clean)
+        warnings.append(
+            f"Passport number '{disp}' seems too short. Most passports have 6-12 alphanumeric "
+            "characters." if n < 6 else
+            f"Passport number '{disp}' seems too long. Most passports have 6-12 alphanumeric "
+            "characters." if n > 12 else
+            f"Passport number '{disp}' may have format issues.")
+    if validity is not None and validity < 1:
+        warnings.append(f"Passport has very short validity ({_fmt1(validity)} years). This may "
+                        "indicate an issue.")
+    if validity is not None and validity > 12:
+        warnings.append(f"Passport has unusually long validity ({_fmt1(validity)} years). Most "
+                        "passports are valid for 5-10 years.")
+    if days is not None and 0 <= days < 180:
+        warnings.append(f"Passport expires in {days} days. Many countries require 6+ months "
+                        "validity for entry.")
+    # headers name the ISO-resolved country, "International" when the
+    # code is missing/unknown (generic_passport.py:141-160)
+    country = COUNTRY_CODES.get(cc)
+    title = country or "International"
     # details sites: generic_passport.py:38-131
-    age_at_issue = _age_expr(issue_d, dob)
-    has_age = dob.isNotNull() & issue_d.isNotNull()
-    details = _dmap(
-        ("checks_performed",
-         "country_code_check; passport_number_format; age_at_issue; "
-         "validity_period; expiry_check"),
-        ("country_code", _dv(cc != "", cc)),
-        ("country", _dv((cc != "") & cc_map[cc].isNotNull(), cc_map[cc])),
-        ("country_code_valid", _dbool(cc != "", cc_map[cc].isNotNull())),
-        ("passport_number_valid", _dtrue((clean != "") & fmt_ok)),
-        ("passport_number_length",
-         _dv((clean != "") & fmt_ok, F.length(clean).cast("string"))),
-        ("age_at_issue", _dv(has_age, age_at_issue.cast("string"))),
-        ("validity_years", _d1f(has_validity, validity)),
-        ("validity_valid",
-         _dtrue(has_validity & (validity >= 1) & (validity <= 12))),
-        ("days_until_expiry",
-         _dv(exp.isNotNull() & (exp >= run_date), days.cast("string"))),
-    )
-    return _result(
-        "generic_passport", issues, warnings,
-        F.concat(country_name, F.lit(" Passport validation failed")),
-        F.concat(country_name, F.lit(" Passport validation passed with warnings")),
-        F.concat(country_name, F.lit(" Passport validation passed")),
-        details=details,
-    )
+    det = {"checks_performed": "country_code_check; passport_number_format; age_at_issue; "
+                               "validity_period; expiry_check"}
+    if cc:
+        det["country_code"] = cc
+        _put(det, "country", country)
+        det["country_code_valid"] = "true" if country is not None else "false"
+    if clean and fmt_ok:
+        det["passport_number_valid"] = "true"
+        det["passport_number_length"] = str(len(clean))
+    if dob is not None and issue_d is not None:
+        det["age_at_issue"] = str(_age(issue_d, dob))
+    if validity is not None:
+        det["validity_years"] = _fmt1(validity)
+        if 1 <= validity <= 12:
+            det["validity_valid"] = "true"
+    if days is not None and days >= 0:
+        det["days_until_expiry"] = str(days)
+    return _result("generic_passport", issues, warnings, f"{title} Passport validation failed",
+                   f"{title} Passport validation passed with warnings",
+                   f"{title} Passport validation passed", det)
 
 
-# ------------------------------------------- photo ID / PR card / OHIP / US DL
+def _id_card_issues(d: Doc, label: str) -> tuple[list, int | None, int | None, float | None]:
+    """Shared date checks of the photo-ID and PR-card validators
+    (generic_photo_id.py, canada_pr_card.py): issues, age, days to
+    expiry, validity years."""
+    run, dob, issue_d, exp = d.run, d.dob, d.issue, d.exp
+    age = _age(run, dob) if dob is not None else None
+    days = exp - run if exp is not None else None
+    validity = (exp - issue_d) / 365.25 if issue_d is not None and exp is not None else None
+    issues = []
+    if _clean(d.document_number) == "":
+        issues.append("Missing document number")
+    if dob is not None and dob > run:
+        issues.append("Date of birth cannot be in the future")
+    elif dob is not None and age < 0:
+        issues.append("Invalid date of birth")
+    if issue_d is not None and issue_d > run:
+        issues.append("Issue date cannot be in the future")
+    elif issue_d is not None and dob is not None and issue_d < dob:
+        issues.append("Issue date cannot be before date of birth")
+    if days is not None and days < 0:
+        issues.append(f"{label} expired {-days} days ago")
+    return issues, age, days, validity
 
 
-def generic_photo_id_validator(run_date: Column, prefix: str = "") -> Column:
+def _id_card_details(checks: str, number: dict, age, days, validity) -> dict:  # noqa: ANN001
+    det = {"checks_performed": checks, **number}
+    if age is not None:
+        det["calculated_age"] = str(age)
+    if days is not None and days >= 0:
+        det["days_until_expiry"] = str(days)
+    if validity is not None:
+        det["validity_years"] = _fmt1(validity)
+    return det
+
+
+def generic_photo_id(d: Doc) -> tuple:
     """V42 (validators/generic_photo_id.py) — also serves ON/BC/AB photo
     cards (validation_service.py:212-223)."""
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    raw = F.trim(F.coalesce(col("document_number"), F.lit("")))
-    clean = F.regexp_replace(F.upper(raw), r"[\s\-]", "")
-    dob, issue_d, exp = _dates()
-    age = _age_expr(run_date, dob)
-    validity = F.datediff(exp, issue_d) / 365.25
-    has_validity = issue_d.isNotNull() & exp.isNotNull()
-    days = F.datediff(exp, run_date)
-
-    issues = [
-        _iw(clean == "", "Missing document number"),
-        _iw(dob.isNotNull() & (dob > run_date), "Date of birth cannot be in the future"),
-        _iw(dob.isNotNull() & (dob <= run_date) & (age < 0), "Invalid date of birth"),
-        _iw(issue_d.isNotNull() & (issue_d > run_date), "Issue date cannot be in the future"),
-        _iw(issue_d.isNotNull() & (issue_d <= run_date) & dob.isNotNull() & (issue_d < dob),
-            "Issue date cannot be before date of birth"),
-        _iw(exp.isNotNull() & (exp < run_date),
-            F.concat(F.lit("Photo ID expired "), (-days).cast("string"), F.lit(" days ago"))),
-    ]
-    warnings = [
-        _iw((clean != "") & (F.length(clean) < 4),
-            F.concat(F.lit("Document number '"),
-                     F.coalesce(col("document_number"), F.lit("")),
-                     F.lit("' seems too short"))),
-        _iw(exp.isNotNull() & (exp >= run_date) & (days < 30),
-            F.concat(F.lit("Photo ID expires in "), days.cast("string"), F.lit(" days"))),
-        _iw(has_validity & (validity < 1),
-            F.concat(F.lit("Photo ID has very short validity ("),
-                     F.format_number(validity, 1), F.lit(" years)"))),
-        _iw(has_validity & (validity > 10),
-            F.concat(F.lit("Photo ID has unusually long validity ("),
-                     F.format_number(validity, 1), F.lit(" years)"))),
-    ]
+    clean = _clean(d.document_number)
+    issues, age, days, validity = _id_card_issues(d, "Photo ID")
+    warnings = []
+    if clean and len(clean) < 4:
+        warnings.append(f"Document number '{d.document_number or ''}' seems too short")
+    if days is not None and 0 <= days < 30:
+        warnings.append(f"Photo ID expires in {days} days")
+    if validity is not None and validity < 1:
+        warnings.append(f"Photo ID has very short validity ({_fmt1(validity)} years)")
+    if validity is not None and validity > 10:
+        warnings.append(f"Photo ID has unusually long validity ({_fmt1(validity)} years)")
     # details sites: generic_photo_id.py:35-96
-    details = _dmap(
-        ("checks_performed",
-         "document_number_check; date_of_birth_check; issue_date_check; "
-         "expiry_check; validity_period"),
-        ("document_number_valid", _dtrue((clean != "") & (F.length(clean) >= 4))),
-        ("document_number_length",
-         _dv((clean != "") & (F.length(clean) >= 4),
-             F.length(clean).cast("string"))),
-        ("calculated_age", _dv(dob.isNotNull(), age.cast("string"))),
-        ("days_until_expiry",
-         _dv(exp.isNotNull() & (exp >= run_date), days.cast("string"))),
-        ("validity_years", _d1f(has_validity, validity)),
-    )
-    return _result(
-        "generic_photo_id", issues, warnings,
-        "Photo ID validation failed",
-        "Photo ID validation passed with warnings",
-        "Photo ID validation passed",
-        details=details,
-    )
+    number = ({"document_number_valid": "true", "document_number_length": str(len(clean))}
+              if len(clean) >= 4 else {})
+    det = _id_card_details("document_number_check; date_of_birth_check; issue_date_check; "
+                           "expiry_check; validity_period", number, age, days, validity)
+    return _result("generic_photo_id", issues, warnings, "Photo ID validation failed",
+                   "Photo ID validation passed with warnings", "Photo ID validation passed", det)
 
 
-def canada_pr_card_validator(run_date: Column, prefix: str = "") -> Column:
+_PR_FORMAT = _jre(r"^[A-Z]{2}\d{6}$")
+
+
+def canada_pr_card(d: Doc) -> tuple:
     """V43 (validators/canada_pr_card.py): format warn-only, under-18
     warn, expiry warn tiers 180/365, validity ~5y window 4-6."""
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    raw = F.trim(F.coalesce(col("document_number"), F.lit("")))
-    clean = F.regexp_replace(F.upper(raw), r"[\s\-]", "")
-    dob, issue_d, exp = _dates()
-    age = _age_expr(run_date, dob)
-    validity = F.datediff(exp, issue_d) / 365.25
-    has_validity = issue_d.isNotNull() & exp.isNotNull()
-    days = F.datediff(exp, run_date)
-
-    issues = [
-        _iw(clean == "", "Missing document number"),
-        _iw(dob.isNotNull() & (dob > run_date), "Date of birth cannot be in the future"),
-        _iw(dob.isNotNull() & (dob <= run_date) & (age < 0), "Invalid date of birth"),
-        _iw(issue_d.isNotNull() & (issue_d > run_date), "Issue date cannot be in the future"),
-        _iw(issue_d.isNotNull() & (issue_d <= run_date) & dob.isNotNull() & (issue_d < dob),
-            "Issue date cannot be before date of birth"),
-        _iw(exp.isNotNull() & (exp < run_date),
-            F.concat(F.lit("PR Card expired "), (-days).cast("string"), F.lit(" days ago"))),
-    ]
-    warnings = [
-        _iw((clean != "") & ~clean.rlike(r"^[A-Z]{2}\d{6}$"),
-            F.concat(F.lit("Document number '"), raw,
-                     F.lit("' does not match expected PR Card format (2 letters + 6 digits)"))),
-        _iw(dob.isNotNull() & (dob <= run_date) & (age >= 0) & (age < 18),
-            F.concat(F.lit("Holder is under 18 years old (age: "), age.cast("string"), F.lit(")"))),
-        _iw(exp.isNotNull() & (exp >= run_date) & (days < 180),
-            F.concat(F.lit("PR Card expires in "), days.cast("string"),
-                     F.lit(" days - renewal recommended within 6 months of expiry"))),
-        _iw(exp.isNotNull() & (exp >= run_date) & (days >= 180) & (days < 365),
-            F.concat(F.lit("PR Card expires in "), days.cast("string"), F.lit(" days"))),
-        _iw(has_validity & (validity < 4),
-            F.concat(F.lit("PR Card has shorter than expected validity ("),
-                     F.format_number(validity, 1),
-                     F.lit(" years, expected ~5 years)"))),
-        _iw(has_validity & (validity > 6),
-            F.concat(F.lit("PR Card has longer than expected validity ("),
-                     F.format_number(validity, 1), F.lit(" years)"))),
-    ]
+    raw = _trim(d.document_number or "")
+    clean = _SEP.sub("", raw.upper())
+    issues, age, days, validity = _id_card_issues(d, "PR Card")
+    pr_ok = bool(_PR_FORMAT.search(clean))
+    warnings = []
+    if clean and not pr_ok:
+        warnings.append(f"Document number '{raw}' does not match expected PR Card format "
+                        "(2 letters + 6 digits)")
+    if age is not None and d.dob <= d.run and 0 <= age < 18:
+        warnings.append(f"Holder is under 18 years old (age: {age})")
+    if days is not None and 0 <= days < 180:
+        warnings.append(f"PR Card expires in {days} days - renewal recommended within 6 months "
+                        "of expiry")
+    elif days is not None and 180 <= days < 365:
+        warnings.append(f"PR Card expires in {days} days")
+    if validity is not None and validity < 4:
+        warnings.append(f"PR Card has shorter than expected validity ({_fmt1(validity)} years, "
+                        "expected ~5 years)")
+    if validity is not None and validity > 6:
+        warnings.append(f"PR Card has longer than expected validity ({_fmt1(validity)} years)")
     # details sites: canada_pr_card.py:34-103
-    pr_ok = clean.rlike(r"^[A-Z]{2}\d{6}$")
-    details = _dmap(
-        ("checks_performed",
-         "document_number_format; date_of_birth_check; issue_date_check; "
-         "expiry_check; validity_period"),
-        ("document_number_valid", _dbool(clean != "", pr_ok)),
-        ("document_number_format",
-         _dv((clean != "") & pr_ok,
-             "Valid PR Card format (2 letters + 6 digits)")),
-        ("calculated_age", _dv(dob.isNotNull(), age.cast("string"))),
-        ("days_until_expiry",
-         _dv(exp.isNotNull() & (exp >= run_date), days.cast("string"))),
-        ("validity_years", _d1f(has_validity, validity)),
-    )
-    return _result(
-        "canada_pr_card", issues, warnings,
-        "PR Card validation failed",
-        "PR Card validation passed with warnings",
-        "PR Card validation passed",
-        details=details,
-    )
+    number = {}
+    if clean:
+        number["document_number_valid"] = "true" if pr_ok else "false"
+        if pr_ok:
+            number["document_number_format"] = "Valid PR Card format (2 letters + 6 digits)"
+    det = _id_card_details("document_number_format; date_of_birth_check; issue_date_check; "
+                           "expiry_check; validity_period", number, age, days, validity)
+    return _result("canada_pr_card", issues, warnings, "PR Card validation failed",
+                   "PR Card validation passed with warnings", "PR Card validation passed", det)
 
 
-def _luhn_valid_expr(digits: Column) -> Column:
-    """Luhn mod-10 over a digit string (ontario_health_card.py:28-59),
-    as a higher-order aggregate: double every second digit from the
-    right, subtract 9 when >9, sum, mod 10 == 0. Non-digit input is
-    False without evaluating the casts (the reference's ``if not
-    number.isdigit(): return False``; CaseWhen branches are lazy, so
-    this is also the ANSI-cast guard)."""
-    n = F.length(digits)
-    arr = F.split(digits, "")
-    # position from right (0-indexed) = n - i for 1-based element i
-    total = F.aggregate(
-        F.sequence(F.lit(1), n),
-        F.lit(0),
-        lambda acc, i: acc
-        + F.when(
-            ((n - i) % 2) == 1,
-            F.when(
-                F.element_at(arr, i).cast("int") * 2 > 9,
-                F.element_at(arr, i).cast("int") * 2 - 9,
-            ).otherwise(F.element_at(arr, i).cast("int") * 2),
-        ).otherwise(F.element_at(arr, i).cast("int")),
-    )
-    return F.when(digits.rlike(r"^[0-9]+$"), (total % 10) == 0).otherwise(
-        F.lit(False)
-    )
+def luhn_valid(number: str | None) -> bool:
+    """Luhn mod-10 over a digit string (ontario_health_card.py:28-59):
+    double every second digit from the right, subtract 9 when >9, sum,
+    mod 10 == 0. Non-digit (or NULL) input is False (the reference's
+    ``if not number.isdigit(): return False``)."""
+    if not number or not (number.isascii() and number.isdigit()):
+        return False
+    total = 0
+    for i, ch in enumerate(reversed(number)):
+        v = ord(ch) - 48
+        if i % 2 == 1:
+            v = v * 2 - 9 if v > 4 else v * 2
+        total += v
+    return total % 10 == 0
 
 
-def ontario_health_card_validator(run_date: Column, prefix: str = "") -> Column:
+@F.arrow_udf(BooleanType())
+def luhn_valid_expr(numbers: pa.Array) -> pa.Array:
+    """``luhn_valid`` over a string column, as one Arrow kernel."""
+    return pa.array([luhn_valid(n) for n in numbers.to_pylist()], pa.bool_())
+
+
+_HC_FULL = _jre(r"^\d{10}[A-Z]{2}$")
+_HC_DIGITS = _jre(r"^\d{10}$")
+
+
+def ontario_health_card(d: Doc) -> tuple:
     """V11 (validators/ontario_health_card.py): 10 digits + 2-letter
     version code, Luhn checksum FAIL, version letters not in {I,O,Q,U},
     expired FAIL / <90d warn, DOB-not-future, no-version-code warns."""
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    raw = F.trim(F.coalesce(col("document_number"), F.lit("")))
-    clean = F.regexp_replace(F.upper(raw), r"[\s\-]", "")
-    digits = F.regexp_replace(clean, r"[^0-9]", "")
-    letters = F.regexp_replace(clean, r"[^A-Z]", "")
-    is_valid_format = (
-        clean.rlike(r"^\d{10}[A-Z]{2}$")
-        | clean.rlike(r"^\d{10}$")
-        | ((F.length(digits) == 10) & F.length(letters).isin(0, 2))
-    )
+    run, dob, exp = d.run, d.dob, d.exp
+    raw = _trim(d.document_number or "")
+    clean = _SEP.sub("", raw.upper())
+    digits, letters = _NON_DIGIT.sub("", clean), _NON_AZ.sub("", clean)
+    is_format = bool(_HC_FULL.search(clean) or _HC_DIGITS.search(clean)
+                     or (len(digits) == 10 and len(letters) in (0, 2)))
     # _parse_health_card_number fallthrough (ontario_health_card.py:61-96):
-    # 10 digits extracted -> digits; else the whole cleaned string (the
-    # invalid case returns `clean`, not ""), "" for an empty input
-    health_number = (
-        F.when(raw == "", F.lit(""))
-        .when(F.length(digits) == 10, digits)
-        .otherwise(clean)
-    )
-    version = F.when(
-        (F.length(digits) == 10) & (F.length(letters) == 2), letters
-    ).otherwise(F.lit(""))
-    luhn_ok = _luhn_valid_expr(health_number)
-    has_bad_version_letter = (
-        F.size(F.filter(F.split(version, ""), lambda c: c.isin("I", "O", "Q", "U"))) > 0
-    )
-    dob = parse_date_expr(col("date_of_birth"))
-    _dob_u, _issue_u, exp = _dates()
-    days = F.datediff(exp, run_date)
-
-    bad_version_letters = F.array_join(
-        F.filter(F.split(version, ""), lambda c: c.isin("I", "O", "Q", "U")), ", "
-    )
-    issues = [
-        _iw(raw == "", "Missing health card number"),
-        _iw((raw != "") & ~is_valid_format,
-            F.concat(
-                F.lit("Invalid Ontario Health Card format. Expected: 10 digits"
-                      " + 2-letter version code (e.g., 1234567890AB), Got: "),
-                raw)),
-        _iw((F.length(health_number) == 10) & ~luhn_ok,
-            F.concat(F.lit("Health card number '"), health_number,
-                     F.lit("' failed Luhn checksum validation. The number may"
-                           " be incorrectly entered or invalid."))),
-        _iw((raw != "") & is_valid_format & (version != "") & has_bad_version_letter,
-            F.concat(
-                F.lit("Invalid version code: Version code contains invalid"
-                      " letter(s): "),
-                bad_version_letters,
-                F.lit(". Letters I, O, Q, U are not used in Ontario Health"
-                      " Card version codes."))),
-        _iw(exp.isNotNull() & (exp < run_date),
-            F.concat(F.lit("Health card expired "), (-days).cast("string"), F.lit(" days ago"))),
-        _iw(dob.isNotNull() & (dob > run_date), "Date of birth cannot be in the future"),
-    ]
-    warnings = [
-        _iw((raw != "") & is_valid_format & (version == ""),
-            "No version code found. This may be an old-style (red and white)"
-            " health card which is being phased out."),
-        _iw(exp.isNotNull() & (exp >= run_date) & (days < 90),
-            F.concat(F.lit("Health card expires in "), days.cast("string"),
-                     F.lit(" days. Consider renewing soon."))),
-        _iw(_blank(col("expiry_date")) & (version == ""),
-            "No expiry date. Old-style health cards without photo are being"
-            " phased out. Please update to a photo health card."),
-    ]
+    # 10 digits extracted -> digits; else the whole cleaned string
+    number = "" if raw == "" else digits if len(digits) == 10 else clean
+    version = letters if len(digits) == 10 and len(letters) == 2 else ""
+    is_10 = len(number) == 10
+    luhn_ok = luhn_valid(number)
+    bad = ", ".join(ch for ch in version if ch in "IOQU")
+    bad_msg = (f"Version code contains invalid letter(s): {bad}. Letters I, O, Q, U are not "
+               "used in Ontario Health Card version codes.")
+    days = exp - run if exp is not None else None
+    issues, warnings = [], []
+    if raw == "":
+        issues.append("Missing health card number")
+    elif not is_format:
+        issues.append("Invalid Ontario Health Card format. Expected: 10 digits + 2-letter "
+                      f"version code (e.g., 1234567890AB), Got: {raw}")
+    if is_10 and not luhn_ok:
+        issues.append(f"Health card number '{number}' failed Luhn checksum validation. The "
+                      "number may be incorrectly entered or invalid.")
+    if is_format and bad:
+        issues.append("Invalid version code: " + bad_msg)
+    if days is not None and days < 0:
+        issues.append(f"Health card expired {-days} days ago")
+    if dob is not None and dob > run:
+        issues.append("Date of birth cannot be in the future")
+    if is_format and not version:
+        warnings.append("No version code found. This may be an old-style (red and white) "
+                        "health card which is being phased out.")
+    if days is not None and 0 <= days < 90:
+        warnings.append(f"Health card expires in {days} days. Consider renewing soon.")
+    if _blank(d.expiry_date) and not version:
+        warnings.append("No expiry date. Old-style health cards without photo are being "
+                        "phased out. Please update to a photo health card.")
     # details sites: ontario_health_card.py:147-228; version_code_message
-    # values from _validate_version_code (:100-131; the len!=2 and
-    # non-alpha branches are unreachable — version is "" or 2 letters by
-    # construction)
-    version_msg = (
-        F.when(version == "", "No version code (may be old-style card)")
-        .when(
-            has_bad_version_letter,
-            F.concat(
-                F.lit("Version code contains invalid letter(s): "),
-                bad_version_letters,
-                F.lit(". Letters I, O, Q, U are not used in Ontario Health"
-                      " Card version codes."),
-            ),
-        )
-        .otherwise(F.concat(F.lit("Valid version code: "), version))
-    )
-    is_10 = F.length(health_number) == 10
-    details = _dmap(
-        ("checks_performed",
-         "health_card_format; luhn_checksum; version_code_validation; "
-         "expiry_check; age_validation"),
-        ("raw_document_number", F.coalesce(col("document_number"), F.lit(""))),
-        ("health_number", health_number),
-        ("version_code", F.when(version == "", "none").otherwise(version)),
-        ("format_valid", _dtrue((raw != "") & is_valid_format)),
-        ("luhn_valid", _dbool(is_10, luhn_ok)),
-        ("luhn_checksum_passed", _dtrue(is_10 & luhn_ok)),
-        ("version_code_valid",
-         _dbool(is_valid_format, ~has_bad_version_letter)),
-        ("version_code_message", _dv(is_valid_format, version_msg)),
-        ("days_until_expiry",
-         _dv(exp.isNotNull() & (exp >= run_date), days.cast("string"))),
-        ("calculated_age",
-         _dv(dob.isNotNull() & (dob <= run_date),
-             _age_expr(run_date, dob).cast("string"))),
-    )
-    return _result(
-        "ontario_health_card", issues, warnings,
-        "Ontario Health Card validation failed",
-        "Ontario Health Card validation passed with warnings",
-        "Ontario Health Card validation passed",
-        details=details,
-    )
+    # from _validate_version_code (:100-131; version is "" or 2 letters)
+    det = {
+        "checks_performed": "health_card_format; luhn_checksum; version_code_validation; "
+                            "expiry_check; age_validation",
+        "raw_document_number": d.document_number or "",
+        "health_number": number,
+        "version_code": version or "none",
+    }
+    if is_format:
+        det["format_valid"] = "true"
+    if is_10:
+        det["luhn_valid"] = "true" if luhn_ok else "false"
+        if luhn_ok:
+            det["luhn_checksum_passed"] = "true"
+    if is_format:
+        det["version_code_valid"] = "false" if bad else "true"
+        det["version_code_message"] = (
+            "No version code (may be old-style card)" if not version
+            else bad_msg if bad else f"Valid version code: {version}")
+    if days is not None and days >= 0:
+        det["days_until_expiry"] = str(days)
+    if dob is not None and dob <= run:
+        det["calculated_age"] = str(_age(run, dob))
+    return _result("ontario_health_card", issues, warnings,
+                   "Ontario Health Card validation failed",
+                   "Ontario Health Card validation passed with warnings",
+                   "Ontario Health Card validation passed", det)
 
 
-# V46 state table (us_drivers_license.py:10-95), format_desc verbatim
-US_STATE_FORMATS = [
-    ("california", "California", r"^[A-Z]\d{7}$", 16, 5,
-     "A1234567 (1 letter + 7 digits)"),
-    ("texas", "Texas", r"^\d{8}$", 16, 6, "12345678 (8 digits)"),
-    ("florida", "Florida", r"^[A-Z]\d{12}$", 16, 8,
-     "A123456789012 (1 letter + 12 digits)"),
-    ("new_york", "New York", r"^\d{9}$", 16, 8, "123456789 (9 digits)"),
-    ("illinois", "Illinois", r"^[A-Z]\d{11,12}$", 16, 4,
-     "A12345678901 (1 letter + 11-12 digits)"),
-    ("pennsylvania", "Pennsylvania", r"^\d{8}$", 16, 4, "12345678 (8 digits)"),
-    ("ohio", "Ohio", r"^[A-Z]{2}\d{6}$", 16, 4, "AB123456 (2 letters + 6 digits)"),
-    ("georgia", "Georgia", r"^\d{9}$", 16, 8, "123456789 (9 digits)"),
-    ("michigan", "Michigan", r"^[A-Z]\d{12}$", 16, 4,
-     "A123456789012 (1 letter + 12 digits)"),
-    ("arizona", "Arizona", r"^[A-Z]\d{8}$|^\d{9}$", 16, 12,
-     "A12345678 or 123456789"),
-    ("washington", "Washington", r"^[A-Z]{1,7}[A-Z0-9*]{1,11}$", 16, 6,
-     "LASTNAME*FN*MN + numbers"),
-    ("new_jersey", "New Jersey", r"^[A-Z]\d{14}$", 17, 4,
-     "A12345678901234 (1 letter + 14 digits)"),
+
+_US_STATES = [
+    (key, name, _jre(fmt), min_age, vy, desc, US_STATE_INDICATORS[key])
+    for key, name, fmt, min_age, vy, desc in US_STATE_FORMATS
 ]
-
-_US_STATE_INDICATORS = {
-    "california": ["CA", "CALIFORNIA"], "texas": ["TX", "TEXAS"],
-    "florida": ["FL", "FLORIDA"], "new_york": ["NY", "NEW YORK"],
-    "illinois": ["IL", "ILLINOIS"], "pennsylvania": ["PA", "PENNSYLVANIA"],
-    "ohio": ["OH", "OHIO"], "georgia": ["GA", "GEORGIA"],
-    "michigan": ["MI", "MICHIGAN"], "arizona": ["AZ", "ARIZONA"],
-    "washington": ["WA", "WASHINGTON"], "new_jersey": ["NJ", "NEW JERSEY"],
-}
-
-_LETTER_MATCH_STATES = {"california", "florida", "michigan", "illinois", "new_jersey"}
+_US_GENERIC = _jre(r"^[A-Z0-9]{6,16}$")
 
 
-def _us_state_table() -> Column:
-    """Literal struct array of the 12-state table (key, fmt, min_age,
-    validity_years, first-letter-check flag, address indicators)."""
-    rows = []
-    for key, name, fmt, min_age, vy, fmt_desc in US_STATE_FORMATS:
-        rows.append(
-            F.struct(
-                _lit_s(key).alias("key"),
-                _lit_s(name).alias("state_name"),
-                _lit_s(fmt).alias("fmt"),
-                _lit_s(fmt_desc).alias("fmt_desc"),
-                _lit_i(min_age).alias("min_age"),
-                _lit_i(vy).alias("validity_years"),
-                _lit_b(key in _LETTER_MATCH_STATES).alias("letter_check"),
-                F.array(
-                    *[F.lit(i) for i in _US_STATE_INDICATORS[key]]
-                ).alias("indicators"),
-            )
-        )
-    return F.array(*rows)
-
-
-def us_drivers_license_validator(run_date: Column, prefix: str = "") -> Column:
+def us_drivers_license(d: Doc) -> tuple:
     """V46 (validators/us_drivers_license.py:173-352): state from address
     (else by format match), per-state format FAIL, first-letter warn for
-    CA/FL/MI/IL/NJ, state min-age, expiry, validity + 2y slack. The
-    12-state table is a constant-folded literal array; per-state values
-    come from first-match filters over it, not inlined when-chains."""
-    col = lambda n: F.col(prefix + n)  # noqa: E731
-    address = F.upper(F.coalesce(col("address"), F.lit("")))
-    raw = F.trim(F.coalesce(col("document_number"), F.lit("")))
-    clean = F.regexp_replace(F.upper(raw), r"[\s\-]", "")
-
-    table = _us_state_table()
-    by_addr = F.try_element_at(
-        F.filter(
-            table,
-            lambda s: F.exists(s["indicators"], lambda i: address.contains(i)),
-        ),
-        F.lit(1),
-    )
-    by_fmt = F.try_element_at(
-        F.filter(table, lambda s: F.regexp_like(clean, s["fmt"])), F.lit(1)
-    )
-    # Bind (address-match, format-match) once; everything below
-    # references the lambda variables (tree appears once, evaluated once
-    # per row). The separate legs also drive details.detection_method
-    # (us_drivers_license.py:197-209).
-    from webxtract.exprs import bind_once
-
-    pre = F.struct(by_addr.alias("a"), by_fmt.alias("f"))
-
-    def build_pre(p: Column) -> Column:
-        method = (
-            F.when(p["a"].isNotNull(), "address")
-            .when(p["f"].isNotNull(), "format_match")
-            .otherwise(F.lit("none"))
-        )
-        return bind_once(
-            F.coalesce(p["a"], p["f"]), lambda st: build(st, method)
-        )
-
-    def build(st: Column, method: Column) -> Column:
-        state = st["key"]
-        has_state = state.isNotNull()
-        fmt_ok_for_state = F.when(
-            has_state, F.regexp_like(clean, st["fmt"])
-        ).otherwise(F.lit(False))
-        min_age_for_state = F.coalesce(st["min_age"], F.lit(16))
-        validity_for_state = st["validity_years"]
-        letter_state = F.coalesce(st["letter_check"], F.lit(False))
-
-        generic_ok = clean.rlike(r"^[A-Z0-9]{6,16}$")
-        last_name = _last_name_param(F.lit("field_first"), prefix)
-        letter = F.substring(clean, 1, 1)
-
-        dob, issue_d, exp = _dates()
-        age = _age_expr(run_date, dob)
-        days = F.datediff(exp, run_date)
-        validity = F.datediff(exp, issue_d) / 365.25
-        has_validity = issue_d.isNotNull() & exp.isNotNull()
-
-        disp = F.coalesce(col("document_number"), F.lit(""))
-        issues = [
-            _iw(clean == "", "Missing license number"),
-            _iw((clean != "") & has_state & ~fmt_ok_for_state,
-                F.concat(F.lit("License number doesn't match "), st["state_name"],
-                         F.lit(" format. Expected: "), st["fmt_desc"],
-                         F.lit(", Got: "), disp)),
-            _iw((clean != "") & ~has_state & ~generic_ok,
-                F.concat(F.lit("Invalid US license format. Expected 6-16"
-                               " alphanumeric characters, Got: "), disp)),
-            _iw(dob.isNotNull() & (age < min_age_for_state),
-                F.concat(F.lit("Person is "), age.cast("string"),
-                         F.lit(" years old. Minimum age for driver's license is "),
-                         min_age_for_state.cast("string"))),
-            _iw(exp.isNotNull() & (exp < run_date),
-                F.concat(F.lit("License expired "), (-days).cast("string"), F.lit(" days ago"))),
-        ]
-        warnings = [
-            _iw((clean != "") & ~has_state & generic_ok,
-                "Could not determine specific state. Using generic US format validation."),
-            _iw((clean != "") & (last_name != "") & letter_state & letter.rlike("[A-Z]")
-                & (letter != F.upper(F.substring(last_name, 1, 1))),
-                F.concat(F.lit("License first letter '"), letter,
-                         F.lit("' may not match last name initial '"),
-                         F.upper(F.substring(last_name, 1, 1)),
-                         F.lit("' (common in "),
-                         F.coalesce(st["state_name"], F.lit("this state")),
-                         F.lit(")"))),
-            _iw(dob.isNotNull() & (age >= min_age_for_state) & (age < 18),
-                F.concat(F.lit("Person is "), age.cast("string"),
-                         F.lit(". May have restricted license (graduated licensing)"))),
-            _iw(exp.isNotNull() & (exp >= run_date) & (days < 30),
-                F.concat(F.lit("License expires in "), days.cast("string"), F.lit(" days"))),
-            _iw(has_validity & has_state
-                & (validity > validity_for_state.cast("double") + 2),
-                F.concat(F.lit("Validity period ("), F.format_number(validity, 1),
-                         F.lit(" years) exceeds typical "), st["state_name"],
-                         F.lit(" license term ("),
-                         validity_for_state.cast("string"), F.lit(" years)"))),
-        ]
-        # pass message names the detected state
-        # (us_drivers_license.py:348-349)
-        pass_msg = F.when(
-            has_state,
-            F.concat(F.lit("US Driver's License validation passed ("),
-                     st["state_name"], F.lit(" format)")),
-        ).otherwise(F.lit("US Driver's License validation passed"))
-        # details sites: us_drivers_license.py:187-319
-        fmt_valid = (clean != "") & (
-            (has_state & fmt_ok_for_state) | (~has_state & generic_ok)
-        )
-        fl_gate = (
-            (clean != "") & (last_name != "") & letter_state
-            & letter.rlike("^[A-Z]$")
-        )
-        ln_initial = F.upper(F.substring(last_name, 1, 1))
-        details = _dmap(
-            ("checks_performed",
-             "state_detection; license_number_format; first_letter_check; "
-             "minimum_age; expiry_check; validity_period; real_id_check"),
-            ("license_number", clean),
-            ("detected_state", F.coalesce(st["state_name"], F.lit("Unknown"))),
-            ("detection_method", method),
-            ("format_valid", _dtrue(fmt_valid)),
-            ("format_matched",
-             _dv(fmt_valid,
-                 F.coalesce(st["state_name"], F.lit("Generic US")))),
-            ("license_first_letter", _dv(fl_gate, letter)),
-            ("last_name_initial", _dv(fl_gate, ln_initial)),
-            ("first_letter_matches", _dtrue(fl_gate & (letter == ln_initial))),
-            ("current_age", _dv(dob.isNotNull(), age.cast("string"))),
-            ("minimum_age_required",
-             _dv(dob.isNotNull(), min_age_for_state.cast("string"))),
-            ("days_until_expiry",
-             _dv(exp.isNotNull() & (exp >= run_date), days.cast("string"))),
-            ("validity_years", _d1f(has_validity, validity)),
-            ("real_id_status", "not_verified"),
-        )
-        return _result(
-            "us_drivers_license", issues, warnings,
-            "US Driver's License validation failed",
-            "US Driver's License validation passed with warnings",
-            pass_msg,
-            details=details,
-        )
-
-    # the resolved state row may be NULL (no state detected) —
-    # bind_once's transform over a 1-element array still binds it once;
-    # build() handles NULL fields.
-    return bind_once(pre, build_pre)
+    CA/FL/MI/IL/NJ, state min-age, expiry, validity + 2y slack."""
+    run, dob, issue_d, exp = d.run, d.dob, d.issue, d.exp
+    address = (d.address or "").upper()
+    disp = d.document_number or ""
+    clean = _clean(disp)
+    state = next((s for s in _US_STATES if any(i in address for i in s[6])), None)
+    method = "address"
+    if state is None:
+        state = next((s for s in _US_STATES if s[2].search(clean)), None)
+        method = "format_match" if state else "none"
+    key, state_name, fmt_re, min_age, state_years, desc, _ind = state or (None,) * 7
+    min_age = min_age or 16
+    fmt_ok = bool(state and fmt_re.search(clean))
+    generic_ok = bool(_US_GENERIC.search(clean))
+    last_name, _src = _last_name("field_first", d)
+    letter, initial = clean[:1], last_name[:1].upper()
+    age = _age(run, dob) if dob is not None else None
+    days = exp - run if exp is not None else None
+    validity = (exp - issue_d) / 365.25 if issue_d is not None and exp is not None else None
+    issues, warnings = [], []
+    if clean == "":
+        issues.append("Missing license number")
+    elif state and not fmt_ok:
+        issues.append(f"License number doesn't match {state_name} format. Expected: {desc}, "
+                      f"Got: {disp}")
+    elif not state and not generic_ok:
+        issues.append("Invalid US license format. Expected 6-16 alphanumeric characters, "
+                      f"Got: {disp}")
+    if age is not None and age < min_age:
+        issues.append(f"Person is {age} years old. Minimum age for driver's license is {min_age}")
+    if days is not None and days < 0:
+        issues.append(f"License expired {-days} days ago")
+    if clean and not state and generic_ok:
+        warnings.append("Could not determine specific state. Using generic US format validation.")
+    letter_check = clean != "" and last_name != "" and key in US_LETTER_MATCH_STATES
+    if letter_check and _ALPHA.search(letter) and letter != initial:
+        warnings.append(f"License first letter '{letter}' may not match last name initial "
+                        f"'{initial}' (common in {state_name or 'this state'})")
+    if age is not None and min_age <= age < 18:
+        warnings.append(f"Person is {age}. May have restricted license (graduated licensing)")
+    if days is not None and 0 <= days < 30:
+        warnings.append(f"License expires in {days} days")
+    if validity is not None and state and validity > state_years + 2:
+        warnings.append(f"Validity period ({_fmt1(validity)} years) exceeds typical "
+                        f"{state_name} license term ({state_years} years)")
+    # details sites: us_drivers_license.py:187-319
+    fmt_valid = clean != "" and (fmt_ok if state else generic_ok)
+    det = {
+        "checks_performed": "state_detection; license_number_format; first_letter_check; "
+                            "minimum_age; expiry_check; validity_period; real_id_check",
+        "license_number": clean,
+        "detected_state": state_name or "Unknown",
+        "detection_method": method,
+    }
+    if fmt_valid:
+        det["format_valid"] = "true"
+        det["format_matched"] = state_name or "Generic US"
+    if letter_check and _ONE_ALPHA.search(letter):
+        det["license_first_letter"] = letter
+        det["last_name_initial"] = initial
+        if letter == initial:
+            det["first_letter_matches"] = "true"
+    if age is not None:
+        det["current_age"] = str(age)
+        det["minimum_age_required"] = str(min_age)
+    if days is not None and days >= 0:
+        det["days_until_expiry"] = str(days)
+    if validity is not None:
+        det["validity_years"] = _fmt1(validity)
+    det["real_id_status"] = "not_verified"
+    # the pass message names the detected state (us_drivers_license.py:348-349)
+    ok = "US Driver's License validation passed"
+    return _result("us_drivers_license", issues, warnings,
+                   "US Driver's License validation failed",
+                   "US Driver's License validation passed with warnings",
+                   f"{ok} ({state_name} format)" if state else ok, det)
 
 
 # ------------------------------------------------------------- dispatch
 
-
-def type_specific_validator(doc_type_enum: Column, run_date: Column, prefix: str = "") -> Column:
-    """The 36-entry dispatch map (validation_service.py:129-239): the DL
-    and passport families resolve their config row by name from literal
-    config arrays (one copy of each family's logic in the plan); the six
-    bespoke validators dispatch on the enum. NULL when the type has no
-    validator (e.g. unknown)."""
-    dl = _pick(
-        F.filter(_dl_cfg_array(), lambda c: c["name"] == doc_type_enum),
-        lambda c: _dl_result(c, run_date, prefix),
-    )
-    pp = _pick(
-        F.filter(_pp_cfg_array(), lambda c: c["name"] == doc_type_enum),
-        lambda c: _pp_result(c, run_date, prefix),
-    )
-    return F.coalesce(
-        dl,
-        pp,
-        F.when(doc_type_enum == "ontario_health_card",
-               ontario_health_card_validator(run_date, prefix)),
-        F.when(doc_type_enum == "canadian_passport",
-               canadian_passport_validator(run_date, prefix)),
-        F.when(doc_type_enum == "generic_passport",
-               generic_passport_validator(run_date, prefix)),
-        F.when(
-            doc_type_enum.isin(
-                "ontario_photo_card", "bc_photo_id", "alberta_photo_id", "generic_photo_id"
-            ),
-            generic_photo_id_validator(run_date, prefix),
-        ),
-        F.when(doc_type_enum == "canada_pr_card",
-               canada_pr_card_validator(run_date, prefix)),
-        F.when(doc_type_enum == "us_drivers_license",
-               us_drivers_license_validator(run_date, prefix)),
-    )
+# The 36-entry dispatch map (validation_service.py:129-239).
+_SPECIFIC = {
+    **{n: (lambda d, n=n: dl_validator(n, d)) for n in DL_CONFIGS},
+    **{n: (lambda d, n=n: passport_validator(n, d)) for n in PASSPORT_CONFIGS},
+    "ontario_health_card": ontario_health_card,
+    "canadian_passport": canadian_passport,
+    "generic_passport": generic_passport,
+    "ontario_photo_card": generic_photo_id,
+    "bc_photo_id": generic_photo_id,
+    "alberta_photo_id": generic_photo_id,
+    "generic_photo_id": generic_photo_id,
+    "canada_pr_card": canada_pr_card,
+    "us_drivers_license": us_drivers_license,
+}
 
 
-def doc_type_enum_expr(document_type: Column) -> Column:
-    """document_type string -> validator-lookup enum: dynamic
-    ``<country>_passport`` types map to generic_passport
-    (document_type_detector.py:449-461 + DocumentTypeInfo.document_type_enum)."""
-    known = (
-        set(DL_CONFIGS)
-        | set(PASSPORT_CONFIGS)
-        | {
-            "ontario_health_card", "canadian_passport", "generic_passport",
-            "ontario_photo_card", "bc_photo_id", "alberta_photo_id",
-            "generic_photo_id", "canada_pr_card", "us_drivers_license",
-            "generic_id", "unknown",
-        }
-    )
-    return (
-        F.when(document_type.isin(*known), document_type)
-        .when(document_type.endswith("_passport"), F.lit("generic_passport"))
-        .otherwise(F.lit("unknown"))
+def validate(doc_type_enum: str | None, d: Doc) -> list[tuple]:
+    """The full battery for one document (validation_service.py:283-295):
+    5 base validators + the dispatched type-specific one, when the type
+    has a validator."""
+    out = [v(d) for v in BASE_VALIDATORS]
+    specific = _SPECIFIC.get(doc_type_enum)
+    if specific is not None:
+        out.append(specific(d))
+    return out
+
+
+_SELECT = {
+    "battery": validate,
+    "specific": lambda e, d: [_SPECIFIC[e](d)] if e in _SPECIFIC else [],
+    "document_expiry": lambda _e, d: [document_expiry(d)],
+}
+
+
+@F.arrow_udf(RESULTS_TYPE)
+def _battery(which: pa.Array, enum: pa.Array, run: pa.Array, minimum_age: pa.Array,
+             *cols: pa.Array) -> pa.Array:
+    """The battery kernel over one Arrow batch: ``which`` selects the
+    battery, the type-specific validator only, or document expiry only;
+    ``cols`` are the 13 field columns then dob/issue/expiry epoch days."""
+    n = len(enum)
+    if n == 0:
+        return pa.array([], _RESULTS_ARROW)
+    select = _SELECT[which[0].as_py()]
+    py = [c.to_pylist() for c in (enum, run, minimum_age, *cols)]
+    out = []
+    for e, r, age, *vals in zip(*py):
+        doc = Doc(vals[:-3], *vals[-3:], r, age)
+        out.append([
+            {"validator_name": v, "status": s, "message": m, "details": det}
+            for v, s, m, det in select(e, doc)
+        ])
+    return pa.array(out, _RESULTS_ARROW)
+
+
+def _kernel(which: str, doc_type_enum: Column, run_date: Column, minimum_age: int,
+            prefix: str) -> Column:
+    return _battery(
+        F.lit(which), doc_type_enum, F.unix_date(run_date), F.lit(minimum_age),
+        *[F.col(prefix + f) for f in FIELD_NAMES],
+        *[F.unix_date(F.col(c)) for c in (DOB_COL, ISSUE_COL, EXP_COL)],
     )
 
 
@@ -2725,27 +1261,36 @@ def validation_results_expr(
     doc_type_enum: Column, run_date: Column, minimum_age: int = 18, prefix: str = ""
 ) -> Column:
     """Full battery: 5 base validators + the dispatched type-specific one
-    (validation_service.py:283-295)."""
-    base = F.array(
-        data_consistency_validator(run_date, prefix),
-        document_expiry_validator(run_date, prefix),
-        age_validator(run_date, minimum_age, prefix),
-        document_format_validator(prefix),
-        face_matching_validator(),
+    (validation_service.py:283-295), over a frame that went through
+    ``with_parsed_dates``. Never NULL."""
+    return F.coalesce(
+        _kernel("battery", doc_type_enum, run_date, minimum_age, prefix),
+        F.array().cast(RESULTS_TYPE),
     )
-    specific = type_specific_validator(doc_type_enum, run_date, prefix)
-    # when/concat, not filter(concat(...), isNotNull): an ArrayFilter
-    # here is a CodegenFallback ROOT, which would drag the entire
-    # battery array — including the five codegen-shaped base validators
-    # — into interpreted eval. With when/concat only the dispatched
-    # type-specific subtree (the _pick HOFs) is interpreted; CSE
-    # evaluates `specific` once per row.
-    empty = F.array().cast(
-        "array<struct<validator_name:string,status:string,"
-        "message:string,details:map<string,string>>>"
+
+
+def type_specific_validator(doc_type_enum: Column, run_date: Column, prefix: str = "") -> Column:
+    """The dispatched type-specific ValidatorResult; NULL when the type
+    has no validator (e.g. unknown)."""
+    return F.try_element_at(_kernel("specific", doc_type_enum, run_date, 18, prefix), F.lit(1))
+
+
+def document_expiry_validator(run_date: Column, prefix: str = "") -> Column:
+    """V2 alone, as a ValidatorResult struct."""
+    return F.try_element_at(
+        _kernel("document_expiry", F.lit(None).cast("string"), run_date, 18, prefix), F.lit(1)
     )
-    return F.concat(
-        base, F.when(specific.isNotNull(), F.array(specific)).otherwise(empty)
+
+
+def doc_type_enum_expr(document_type: Column) -> Column:
+    """document_type string -> validator-lookup enum: dynamic
+    ``<country>_passport`` types map to generic_passport
+    (document_type_detector.py:449-461 + DocumentTypeInfo.document_type_enum)."""
+    known = sorted(set(_SPECIFIC) | {"generic_id", "unknown"})
+    return (
+        F.when(document_type.isin(*known), document_type)
+        .when(document_type.endswith("_passport"), F.lit("generic_passport"))
+        .otherwise(F.lit("unknown"))
     )
 
 
@@ -2764,13 +1309,17 @@ def _round_half_even_2(x: Column) -> Column:
 
 def validation_summary_expr(results: Column) -> Column:
     """V-agg (validation_service.py:390-428): score =
-    (passed + 0.5*warnings) / active; FAILED > WARNING > PASSED > SKIPPED."""
+    (passed + 0.5*warnings) / active; FAILED > WARNING > PASSED > SKIPPED.
+    Status counts are ``size - size(array_remove(statuses, s))`` — no
+    lambda, so the summary stays a code-generated projection."""
+    statuses = results["status"]
+    total = F.size(results)
+
     def count(status: str) -> Column:
-        return F.size(F.filter(results, lambda r: r["status"] == status))
+        return total - F.size(F.array_remove(statuses, status))
 
     passed, failed = count("passed"), count("failed")
     warnings, skipped = count("warning"), count("skipped")
-    total = F.size(results)
     active = total - skipped
     score = F.when(
         active > 0,

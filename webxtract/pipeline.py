@@ -2,13 +2,20 @@
 flagship request lifecycle, POST /ocr/extract/image?validate=true —
 SURVEY.md §3.3):
 
-    extract (UDF legs) -> fields (exprs) -> doc type (exprs)
-    -> fake scoring (exprs) -> validator battery (exprs)
-    -> summary + integrity + success (exprs)
+    extract (Arrow UDF legs) -> fields, doc type, fake scoring (exprs)
+    -> salted url-hash exchange
+    -> integrity + doc_type_enum (exprs) -> validator battery (one Arrow
+       kernel) -> summary + success (exprs)
 
-Everything after the extraction UDFs fuses into one whole-stage-codegen
-projection; the full-pipeline plan has zero wide dependencies
-(SURVEY.md §4.4). Partitioning/salting + audit live in webxtract.audit.
+The physical plan Spark builds has two stages around ONE Exchange (the
+salted repartition of ``audit.partition_by_url``; none without
+``bucket_by_url``). Map side: the parquet scan, the extraction legs'
+``ArrowEvalPython`` nodes, and the fields/detection/fake projections.
+Reduce side: a projection computing the integrity struct, the enum and
+the three parsed dates, then a single ``ArrowEvalPython`` node running
+``ops.validators._battery`` (it reuses the extraction's Python workers),
+then the summary/success projection. Partitioning/salting + audit live
+in webxtract.audit.
 """
 
 from __future__ import annotations
@@ -80,12 +87,13 @@ def _rule_exprs(run_date: str, minimum_age: int) -> dict:
     """The full rule-layer Column set for one (run_date, minimum_age).
 
     Construction is driver-side py4j chatter — one round trip per
-    Column operator, ~24 s for this tree measured at 100k-doc bench —
-    while the resulting Column objects are immutable expression trees,
-    reusable across DataFrames (and sessions on the same JVM gateway).
-    A long-running cluster job builds its plan once, so caching here
-    makes repeated invocations (bench passes, the driver contract's
-    entry+queries, incremental runs) match that amortized behavior."""
+    Column operator (the fields/detection/fake trees dominate; the
+    validator battery is a single UDF call) — while the resulting
+    Column objects are immutable expression trees, reusable across
+    DataFrames (and sessions on the same JVM gateway). A long-running
+    cluster job builds its plan once, so caching here makes repeated
+    invocations (bench passes, the driver contract's entry+queries,
+    incremental runs) match that amortized behavior."""
     run = F.to_date(F.lit(run_date))
     missing = missing_fields_expr()
     return {
@@ -112,11 +120,15 @@ def _rule_exprs(run_date: str, minimum_age: int) -> dict:
 # QueryExecution; the first hit swaps it for that QE's OPTIMIZED
 # logical plan and drops the QE reference (so no physical/executed
 # state is retained). Caching the optimized plan — not just the
-# analyzed one — matters because Catalyst re-optimization of the
-# megabyte rule tree costs ~5-6.5 s warm per pass, while re-running
-# the optimizer over an already-optimized tree converges in ~1.5 s
-# (measured, 100k-doc plan): the fixed-point batches find nothing
-# left to rewrite after one sweep. The optimizer is semantics-
+# analyzed one — saves the Catalyst passes over the fields/detection/
+# fake rule trees: on a 2000-page input (local[4], 4-core host) a warm
+# call costs 0.19 s of build + planning on a hit against 1.03 s with
+# the cache bypassed. The optimizer re-run over an already-optimized
+# tree finds nothing left to rewrite after one sweep. An optimized
+# plan that embeds an InMemoryRelation (the input, or a subtree of it,
+# was persisted when the producer planned) is NOT cached: it would pin
+# the cached relation past a later unpersist(), so such entries keep
+# the analyzed plan and every hit re-applies cache substitution. The optimizer is semantics-
 # preserving by contract and every hit still builds a fresh Dataset
 # (own QueryExecution / physical plan / RDDs), so — exactly as with
 # the analyzed-plan form — no shuffle output or result can be reused
@@ -150,9 +162,9 @@ def run_pipeline(
     output is bucketed for the resume anti-join and downstream joins,
     (b) byte-skew from hot hosts is spread (SURVEY.md §4.3.1), and (c)
     the exchange is an optimizer barrier that guarantees the detection
-    struct is materialized exactly once instead of being re-expanded
-    inside the validator dispatch (measured 3-4x stage speedup). With
-    it off the plan is fully narrow (zero shuffles).
+    and fake structs are materialized exactly once, map-side, before the
+    reduce side reads them. With it off the plan is fully narrow (zero
+    shuffles).
 
     Plan reuse: repeated calls with a semantically identical ``pages``
     plan and the same parameters return a FRESH DataFrame wrapped
@@ -162,12 +174,13 @@ def run_pipeline(
     Only the driver-side plan artifact is reused: every call builds a
     new Dataset, so each action gets its own QueryExecution, physical
     plan and RDDs — physical planning, AQE and every executor stage
-    re-run in full, and no shuffle output, cached data or result can
-    leak between calls (verified: consecutive calls produce distinct
-    RDD ids). The optimizer also re-runs over the cached tree (a
-    ~1.5 s idempotent sweep vs ~5-6.5 s from the analyzed form; the
-    optimizer preserves semantics and root output by contract, so the
-    wrapped plan is a valid input exactly like any analyzed plan).
+    re-run in full, and no shuffle output or result can leak between
+    calls (verified: consecutive calls produce distinct RDD ids). A
+    producer plan that read persisted data is cached in analyzed form,
+    so a later unpersist() is honored. The optimizer also re-runs over
+    the cached tree (an idempotent sweep; the optimizer preserves
+    semantics and root output by contract, so the wrapped plan is a
+    valid input exactly like any analyzed plan).
     Session confs that change OPTIMIZER behavior (not physical
     planning — that re-runs) are assumed stable across same-key calls,
     as they are for Spark's own CacheManager. Matching
@@ -205,10 +218,17 @@ def run_pipeline(
             ):
                 if isinstance(ent[6], _PendingQE):
                     # One-time swap: take the optimized logical plan
-                    # (already computed if the producer executed) and
+                    # (already computed if the producer executed), or
+                    # the analyzed one when it embeds cached data, and
                     # release the QueryExecution so no physical or
                     # executed-plan state stays referenced.
-                    ent[6] = ent[6].qe.optimizedPlan()
+                    qe = ent[6].qe
+                    opt = qe.optimizedPlan()
+                    ent[6] = (
+                        qe.analyzed()
+                        if "InMemoryRelation" in opt.toString()
+                        else opt
+                    )
                 jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
                     spark._jsparkSession, ent[6]
                 )
@@ -234,7 +254,7 @@ def run_pipeline(
     )
 
     # The exchange sits directly after step1: everything below
-    # (integrity struct, summary distillation, validator dispatch) only
+    # (integrity struct, summary distillation, doc_type_enum) only
     # *references* the detection/fake structs, so shuffling here sends
     # the heavy expression work map-side and leaves the reduce side
     # with cheap field accesses — the shuffle payload is identical

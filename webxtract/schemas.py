@@ -18,6 +18,7 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
+    MapType,
     StringType,
     StructField,
     StructType,
@@ -139,11 +140,14 @@ FAKE_RESULT_TYPE = StructType(
 
 # ---------------------------------------------------------------- validation
 
+# One validator result; the battery's return element type and the
+# empty-array cast of validation_results.
 VALIDATOR_RESULT_TYPE = StructType(
     [
-        StructField("validator_name", StringType(), False),
-        StructField("status", StringType(), False),  # passed|failed|warning|skipped
+        StructField("validator_name", StringType(), True),
+        StructField("status", StringType(), True),  # passed|failed|warning|skipped
         StructField("message", StringType(), True),
+        StructField("details", MapType(StringType(), StringType()), True),
     ]
 )
 

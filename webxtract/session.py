@@ -8,6 +8,7 @@ tests, bench and production jobs agree.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -22,11 +23,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in this sandbox;
-    on a real cluster it is supplied by spark-submit and must be left None.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when that variable
+    is set; on a real cluster it is supplied by spark-submit and must be
+    left None. The heap and shuffle-partition defaults follow the thread
+    count of a local master (``local_threads``).
     """
     if master is None and os.environ.get("SPARK_GRAFT_CPUS"):
-        master = f"local[{os.environ['SPARK_GRAFT_CPUS']}]"
+        cpus = os.environ["SPARK_GRAFT_CPUS"]
+        master = f"local[{local_threads(f'local[{cpus}]')}]"
+    n_threads = local_threads(master)
 
     builder = SparkSession.builder.appName(app_name)
     if master:
@@ -47,9 +52,8 @@ def get_spark(
     # (capped at 64g: half this machine class's RAM — the A/B saw no
     # further win past 64g, and -Xms must stay clear of the OS +
     # Python-worker footprint whatever core count the env reports)
-    n_threads = int(os.environ.get("SPARK_GRAFT_CPUS", "16") or 16)
     driver_mem = os.environ.get(
-        "WEBXTRACT_DRIVER_MEM", f"{min(64, 2 * n_threads)}g"
+        "WEBXTRACT_DRIVER_MEM", f"{min(64, 2 * (n_threads or 16))}g"
     )
 
     conf = {
@@ -74,7 +78,7 @@ def get_spark(
         "spark.sql.shuffle.partitions": str(
             shuffle_partitions
             if shuffle_partitions is not None
-            else int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+            else n_threads or 32
         ),
         # local mode: driver heap hosts all executor threads, each of
         # which deserializes its own copy of the (large) task binary —
@@ -145,6 +149,19 @@ def get_spark(
     return spark
 
 
+def local_threads(master: str | None) -> int | None:
+    """Executor threads of a ``local``, ``local[N]``, ``local[N,F]`` or
+    ``local[*]`` master, at least 1; ``*`` or a count that is not a
+    number means every CPU of the host. None for a non-local master."""
+    m = re.fullmatch(r"local(?:\[([^\],]*)(?:,[^\]]*)?\])?", master or "")
+    if m is None:
+        return None
+    n = m.group(1)
+    if n is None:
+        return 1
+    return max(1, int(n)) if n.isdigit() else os.cpu_count() or 1
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Ship the webxtract package to Python workers.
 
@@ -166,8 +183,9 @@ def _ship_package(spark: SparkSession) -> None:
 
 def build_pyfiles_zip(zip_path: str) -> str:
     """Build the ``--py-files`` archive: every .py in the webxtract
-    package, rooted so ``import webxtract`` resolves from the zip.
-    Used in-code by ``_ship_package`` and offline by
+    package, rooted so ``import webxtract`` resolves from the zip —
+    except ``oracles.py``, the DuckDB oracle SQL that only the driver
+    and tests read. Used in-code by ``_ship_package`` and offline by
     ``python -m webxtract.cli --build-pyfiles`` for spark-submit."""
     import pathlib
     import zipfile
@@ -175,5 +193,7 @@ def build_pyfiles_zip(zip_path: str) -> str:
     pkg_dir = pathlib.Path(__file__).resolve().parent
     with zipfile.ZipFile(zip_path, "w") as zf:
         for py in sorted(pkg_dir.rglob("*.py")):
+            if py == pkg_dir / "oracles.py":
+                continue
             zf.write(py, arcname=str(py.relative_to(pkg_dir.parent)))
     return zip_path
