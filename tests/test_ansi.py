@@ -76,12 +76,13 @@ def test_contract_queries_ansi_neutral(spark):
 def test_expression_layer_survives_garbage_ansi(spark):
     """Adversarial field rows — NULL, empty, whitespace, non-numeric
     dates/numbers, empty-split edge cases — through the full
-    detection/fake/validation expression stack with ANSI on. Proves the
-    bounds-safety arguments (element_at on split results, Luhn guards,
-    year casts) hold on the inputs that would violate them."""
+    detection/fake/validation entry points with ANSI on. Proves the
+    bounds-safety arguments (split results, Luhn guards, year casts, the
+    Catalyst date parse feeding the kernels) hold on the inputs that
+    would violate them."""
     from pyspark.sql import functions as F
 
-    from webxtract.ops.detect_type import doc_type_expr, with_detection_inputs
+    from webxtract.ops.detect_type import doc_type_expr
     from webxtract.ops.fake import fake_result_expr
     from webxtract.ops.validators import (
         validation_results_expr,
@@ -111,7 +112,7 @@ def test_expression_layer_survives_garbage_ansi(spark):
     def run():
         from webxtract.ops.validators import type_specific_validator
 
-        fields = with_parsed_dates(with_detection_inputs(df))
+        fields = with_parsed_dates(df)
         dt = doc_type_expr()
         fd = fake_result_expr()
         vr = validation_results_expr(

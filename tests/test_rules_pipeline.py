@@ -382,73 +382,3 @@ def test_integrity_result_shape(full):
                 else:
                     assert details.get("issues"), (v["validator_name"], details)
     assert seen_failed > 0
-
-
-def test_run_pipeline_plan_cache_fresh_execution(spark, corpus):
-    """Repeated run_pipeline calls on a semantically identical input
-    reuse the cached OPTIMIZED plan but must return independent
-    DataFrames: same results, distinct RDD lineage (so no shuffle
-    output or result can be reused across calls), and a different
-    parameterization must bypass the cache."""
-    from webxtract import pipeline as P
-
-    pages_path, _ = corpus
-    df1 = run_pipeline(spark.read.parquet(pages_path), run_date=RUN_DATE)
-    n_before = len(P._PLAN_CACHE)
-    df2 = run_pipeline(spark.read.parquet(pages_path), run_date=RUN_DATE)
-    # second call hit the cache (no new entry) ...
-    assert len(P._PLAN_CACHE) == n_before
-    # ... but execution state is NOT shared: fresh QueryExecution/RDD
-    rdd1 = df1._jdf.queryExecution().toRdd().id()
-    rdd2 = df2._jdf.queryExecution().toRdd().id()
-    assert rdd1 != rdd2
-    # identical results row-for-row
-    a = sorted(map(str, df1.select("url", "success", "doc_type.document_type").collect()))
-    b = sorted(map(str, df2.select("url", "success", "doc_type.document_type").collect()))
-    assert a == b
-    # a different run_date is a different plan: new cache entry
-    run_pipeline(spark.read.parquet(pages_path), run_date="2026-03-01")
-    assert len(P._PLAN_CACHE) == n_before + 1
-
-
-def test_run_pipeline_cached_plan_physical_identity(spark, corpus):
-    """A cache hit wraps the producer's OPTIMIZED logical plan; the
-    physical plan Spark derives from it must be identical (modulo
-    expression ids) to the one the analyzed plan produces — i.e. the
-    cache changes driver time only, never what executors run."""
-    import re
-
-    pages_path, _ = corpus
-    df = run_pipeline(spark.read.parquet(pages_path), run_date=RUN_DATE)
-    qe = df._jdf.queryExecution()
-    analyzed, opt = qe.analyzed(), qe.optimizedPlan()
-    ofrows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
-
-    def phys(plan):
-        s = ofrows(spark._jsparkSession, plan).queryExecution().executedPlan().toString()
-        s = re.sub(r"#\d+", "#x", s)
-        return re.sub(r"plan_id=\d+", "plan_id=x", s)
-
-    assert phys(analyzed) == phys(opt)
-
-
-def test_run_pipeline_plan_cache_honors_unpersist(spark, corpus):
-    """An input that was persisted when the producer call planned must
-    not pin its cached relation into the plan cache: after unpersist(),
-    a cache hit plans against the files again and returns the same
-    rows."""
-    from webxtract import pipeline as P
-
-    pages_path, _ = corpus
-    run_date = "2026-02-02"  # a fresh cache key for this test
-    pages = spark.read.parquet(pages_path).persist()
-    pages.count()
-    df1 = run_pipeline(pages, run_date=run_date)
-    assert "InMemoryRelation" in df1._jdf.queryExecution().optimizedPlan().toString()
-    want = sorted(map(str, df1.select("url", "success").collect()))
-    pages.unpersist(blocking=True)
-    n_before = len(P._PLAN_CACHE)
-    df2 = run_pipeline(spark.read.parquet(pages_path), run_date=run_date)
-    assert len(P._PLAN_CACHE) == n_before  # a hit
-    assert "InMemoryRelation" not in df2._jdf.queryExecution().optimizedPlan().toString()
-    assert sorted(map(str, df2.select("url", "success").collect())) == want

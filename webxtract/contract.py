@@ -18,7 +18,7 @@ from pyspark.sql.window import Window
 
 from webxtract import dedup, similarity, textops
 from webxtract.ops import assemble
-from webxtract.ops.detect_type import doc_type_expr, with_detection_inputs
+from webxtract.ops.detect_type import doc_type_expr
 from webxtract.ops.extract import extract_pages
 from webxtract.ops.fake import fake_result_expr
 from webxtract.ops.fields import field_expr
@@ -355,7 +355,7 @@ def _derived_fields_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_doc_type_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D1-D8 detection cascade on modulo-derived fields — the oracle is
     the statically-known branch per modulo class."""
-    df = with_detection_inputs(_derived_fields_df(spark, sf_dir))
+    df = _derived_fields_df(spark, sf_dir)
     dt = doc_type_expr()
     return df.select(
         "doc_id",

@@ -1,68 +1,21 @@
-"""Expression-plan utilities.
+"""Expression-plan utilities for the Catalyst text operators
+(textops, dedup, curation, warc).
 
-``bind_once`` is the load-bearing trick of this engine's rule layer:
+``bind_once`` works around a cost of higher-order-function lambdas:
 Catalyst inlines a named subexpression at every reference site, and
-interpreted (non-codegen) contexts — higher-order-function lambdas —
-re-evaluate each inlined copy per row. Binding the
-value as a single-element ``transform`` lambda variable guarantees (a)
-exactly one copy of the subtree in the plan and (b) exactly one
-evaluation per row, with every reference a cheap lambda-var access.
+interpreted (non-codegen) contexts — those lambdas — re-evaluate each
+inlined copy per row. Binding the value as a single-element
+``transform`` lambda variable guarantees (a) exactly one copy of the
+subtree in the plan and (b) exactly one evaluation per row, with every
+reference a cheap lambda-var access. The document rules (detection,
+fake scoring, validators) are Python functions in one Arrow kernel and
+use none of this.
 """
 
 from __future__ import annotations
 
-import functools
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def gateway_cached(maxsize: int = 4):
-    """lru_cache keyed ALSO on the active py4j gateway.
-
-    Classic-mode Column objects hold JVM expression refs through the
-    gateway; plain lru_cache would keep serving them after a gateway
-    teardown/relaunch (classic<->connect switch, crash recovery) and
-    every later call would fail until process restart. Adding the live
-    gateway's identity to the key makes a relaunch a natural cache
-    miss; stale entries age out of the small LRU."""
-
-    def deco(fn):
-        cached = functools.lru_cache(maxsize=maxsize)(
-            lambda _gw, *args, **kw: fn(*args, **kw)
-        )
-
-        @functools.wraps(fn)
-        def wrapper(*args, **kw):
-            from pyspark import SparkContext
-
-            gw = getattr(SparkContext, "_gateway", None)
-            # key on the gateway OBJECT (hashable by identity), not
-            # id(gw): the lru_cache key keeps it alive, so a torn-down
-            # gateway's address can never be recycled into a cache hit
-            # on stale JVM refs (bounded retention: maxsize entries)
-            return cached(_IdKey(gw) if gw is not None else None, *args, **kw)
-
-        wrapper.cache_clear = cached.cache_clear
-        return wrapper
-
-    return deco
-
-
-class _IdKey:
-    """Identity-hashable wrapper holding a strong reference, so equal
-    keys imply the SAME live object (never a recycled address)."""
-
-    __slots__ = ("obj",)
-
-    def __init__(self, obj):  # noqa: ANN001
-        self.obj = obj
-
-    def __hash__(self):
-        return id(self.obj)
-
-    def __eq__(self, other):  # noqa: ANN001
-        return isinstance(other, _IdKey) and other.obj is self.obj
 
 
 def bind_once(value: Column, build) -> Column:  # noqa: ANN001
@@ -70,12 +23,6 @@ def bind_once(value: Column, build) -> Column:  # noqa: ANN001
     lambda variable. ``value`` may be any type (struct/array/scalar) and
     may be NULL — the lambda still runs (build must tolerate NULL)."""
     return F.try_element_at(F.transform(F.array(value), build), F.lit(1))
-
-
-def pick_first(arr: Column, build) -> Column:  # noqa: ANN001
-    """First-match binding: ``arr`` is a (possibly empty) filtered array;
-    returns build(first element) or NULL when empty."""
-    return F.try_element_at(F.transform(arr, build), F.lit(1))
 
 
 def first_wins_argmax(

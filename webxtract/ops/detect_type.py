@@ -1,657 +1,182 @@
-"""Document-type detection (operators D1-D8, SURVEY.md §2.3) — the
-columnar form of the reference's three-step first-match-wins cascade
-(document_type_detector.py:237-554):
+"""Document-type detection (operators D1-D8, SURVEY.md §2.3): the
+reference's three-step first-match-wins cascade
+(document_type_detector.py:237-554) as one plain Python function over
+one document, ``detect``:
 
   STEP 1 keyword + province/state/country rules (conf 0.75-0.9)
   STEP 2 document-number format fallback      (conf 0.7)
   STEP 3 pattern-match scoring fallback       (argmax, <0.3 -> UNKNOWN)
 
-Plan-size discipline (round-1 lesson): every rule table (province maps,
-DL-type maps, the D6 format cascade, the D7 29-pattern scoring table)
-is a constant-folded *literal array of structs* scanned with
-filter/transform/aggregate higher-order functions — ONE copy of each
-matching/scoring expression in the plan instead of one inlined
-when-branch per rule row. detected_features strings are reproduced for
-ALL branches, including step-3's per-component features
-("country_code_match: ...", "document_number_format_match",
-"keywords_found: <matched keywords in table order>",
-"ontario_address_indicator: <first hit>" — detector :592-649). No
-joins, no shuffles, no Python.
+Inside ``run_pipeline`` it runs in the reduce-side rule kernel
+(``pipeline._rule_kernel``); ``doc_type_expr`` / ``with_doc_type`` run
+the same function as a standalone scalar Arrow UDF. Every rule table is
+read from ``webxtract.rules`` in its order. ``detected_features``
+strings are reproduced for ALL branches, including step 3's
+per-component features ("country_code_match: ...",
+"document_number_format_match", "keywords_found: <matched keywords in
+table order>", "ontario_address_indicator: <first hit>" — detector
+:592-649). Strings follow Spark's semantics, as the expression form
+this replaced did: space-only trim, Java regexes (``validators._jre``).
 """
 
 from __future__ import annotations
 
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from webxtract.exprs import gateway_cached
-
 from webxtract import rules
-from webxtract.schemas import FIELD_NAMES
+from webxtract.ops.validators import _SEP, Doc, _jre, _trim, row_udf
+from webxtract.schemas import DOC_TYPE_INFO_TYPE, FIELD_NAMES
 
+# D3 lookups (detector :556-581): first key contained in the text wins,
+# full names before abbreviations; "québec" normalizes to "quebec".
+_PROVINCE_NAMES = {k: "quebec" if k == "québec" else k for k in rules.PROVINCE_MAPPING}
+_STATE_NAMES = {k: k for k in rules.US_STATE_MAPPING}
 
-def _lit_s(v) -> Column:  # noqa: ANN001
-    return F.lit(v) if v is not None else F.lit(None).cast("string")
+# US DL rows: the two specific state types at conf 0.85 (detector
+# :383-404), the generic us_drivers_license at 0.8 for every other
+# mapped state (:405-417).
+_US_DL = {
+    key: (*rules.US_DL_TYPES[key], 0.85) if key in rules.US_DL_TYPES
+    else ("us_drivers_license", name, f"{name} Driver's License", 0.8)
+    for key, name in rules.US_STATE_MAPPING.items()
+}
 
+# Specific passports: first DOCUMENT_PATTERNS entry per country code
+# (detector :431-448).
+_SPECIFIC_PASSPORTS: dict[str, tuple] = {}
+for _dtype, _name, _country, _cc, *_ in rules.DOCUMENT_PATTERNS:
+    if _cc:
+        _SPECIFIC_PASSPORTS.setdefault(_cc, (_dtype, _country, _name))
 
-def _empty_sarr() -> Column:
-    return F.array().cast("array<string>")
-
-
-def _contains_any(text: Column, keywords: list[str]) -> Column:
-    return F.exists(
-        F.array(*[F.lit(k) for k in keywords]), lambda k: F.contains(text, k)
-    )
-
-
-def _lower(col: Column) -> Column:
-    return F.lower(F.coalesce(col, F.lit("")))
-
-
-def _type_struct(
-    document_type: Column | str,
-    confidence: float | Column,
-    country: Column | str | None,
-    state_province: Column | str | None,
-    document_name: Column | str,
-    features: Column | list[str],
-) -> Column:
-    def _c(v, name):  # noqa: ANN001
-        if isinstance(v, Column):
-            return v.alias(name)
-        return F.lit(v).cast("string").alias(name)
-
-    conf = confidence if isinstance(confidence, Column) else F.lit(float(confidence))
-    feats = (
-        features
-        if isinstance(features, Column)
-        else F.array(*[F.lit(x) for x in features])
-        if features
-        else F.array().cast("array<string>")
-    )
-    return F.struct(
-        _c(document_type, "document_type"),
-        conf.cast("double").alias("confidence"),
-        _c(country, "country"),
-        _c(state_province, "state_province"),
-        _c(document_name, "document_name"),
-        feats.alias("detected_features"),
-    )
-
-
-def _kv_array(mapping: dict[str, str]) -> Column:
-    return F.array(
-        *[
-            F.struct(F.lit(k).alias("k"), F.lit(v).alias("v"))
-            for k, v in mapping.items()
-        ]
-    )
-
-
-def _first_match(text: Column, mapping: dict[str, str]) -> Column:
-    """Ordered substring-scan lookup: first key contained in ``text`` wins
-    (detector :556-581). Returns the mapped value or NULL. The table is a
-    constant-folded literal array; filter preserves insertion order."""
-    hit = F.try_element_at(
-        F.filter(_kv_array(mapping), lambda e: F.contains(text, e["k"])), F.lit(1)
-    )
-    return hit["v"]
-
-
-# Precomputed detection-input columns. Detection references the
-# assembled full text / cleaned number / province in ~200 predicate
-# sites; materializing them once per row keeps the expression tree
-# linear and lets codegen/CSE work (a 20x stage speedup at bench).
-_TMP = [
-    "__dt_ft", "__dt_numu", "__dt_numc", "__dt_title",
-    "__dt_prov", "__dt_state", "__dt_cc", "__dt_cname",
-]
-
-
-def _country_name_expr(country_code: Column) -> Column:
-    """ISO alpha-3 -> country name via a literal map (D8,
-    document_types.py:323-377)."""
-    pairs: list[Column] = []
-    for code, name in rules.COUNTRY_CODES.items():
-        pairs.append(F.lit(code))
-        pairs.append(F.lit(name))
-    return F.create_map(*pairs)[country_code]
-
-
-@gateway_cached(maxsize=4)
-def _detection_input_exprs(prefix: str) -> tuple[dict, dict]:
-    """Two withColumns batches (the second references ``__dt_ft`` from
-    the first). Cached per process: expression construction is py4j-
-    round-trip-bound and the trees are pure functions of ``prefix``."""
-    col = lambda name: F.col(prefix + name)  # noqa: E731
-
-    # D1 full-text assembly (detector :584-590): lower-cased join of the
-    # non-empty string fields in schema order.
-    full_text_lower = F.lower(
-        F.concat_ws(
-            " ",
-            F.filter(
-                F.array(*[col(n) for n in FIELD_NAMES]),
-                lambda v: v.isNotNull() & (v != F.lit("")),
-            ),
-        )
-    )
-    document_number = F.coalesce(col("document_number"), F.lit(""))
-    cc = F.upper(F.coalesce(col("country_code"), F.lit("")))
-    group1 = {
-        "__dt_ft": full_text_lower,
-        "__dt_numu": F.upper(F.trim(document_number)),
-        "__dt_numc": F.regexp_replace(
-            F.upper(F.trim(document_number)), r"[\s\-]", ""
-        ),
-        "__dt_title": _lower(col("document_title")),
-        "__dt_cc": cc,
-        "__dt_cname": _country_name_expr(cc),
-    }
-    # D3 province / US-state detection (detector :556-581): full names
-    # first, then abbreviations; "québec" normalizes to "quebec".
-    ft = F.col("__dt_ft")
-    province_names = {
-        k: ("quebec" if k == "québec" else k) for k in rules.PROVINCE_MAPPING
-    }
-    group2 = {
-        "__dt_prov": F.coalesce(
-            _first_match(ft, province_names),
-            _first_match(ft, rules.PROVINCE_ABBREV),
-        ),
-        "__dt_state": F.coalesce(
-            _first_match(ft, {k: k for k in rules.US_STATE_MAPPING}),
-            _first_match(ft, rules.US_STATE_ABBREV),
-        ),
-    }
-    return group1, group2
-
-
-def with_detection_inputs(df: DataFrame, prefix: str = "") -> DataFrame:
-    group1, group2 = _detection_input_exprs(prefix)
-    return df.withColumns(group1).withColumns(group2)
-
-
-# ------------------------------------------------------- literal rule tables
-
-
-def _dl_types_array() -> Column:
-    """(prov, dtype, state, name) rows for the Canadian DL branch."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(prov).alias("prov"),
-                F.lit(dtype).alias("dtype"),
-                F.lit(state).alias("state"),
-                F.lit(name).alias("dname"),
-            )
-            for prov, (dtype, state, name) in rules.DL_TYPES.items()
-        ]
-    )
-
-
-def _photo_types_array() -> Column:
-    return F.array(
-        *[
-            F.struct(
-                F.lit(prov).alias("prov"),
-                F.lit(dtype).alias("dtype"),
-                F.lit(state).alias("state"),
-                F.lit(name).alias("dname"),
-            )
-            for prov, (dtype, state, name) in rules.PHOTO_ID_TYPES.items()
-        ]
-    )
-
-
-def _us_dl_array() -> Column:
-    """US DL rows: the two specific state types at conf 0.85
-    (detector :383-404), then the generic us_drivers_license per mapped
-    state at conf 0.8 (:405-417). Distinct keys, so first-match over the
-    merged array equals the reference's if/elif order."""
-    rows = []
-    for state_key, (dtype, state, name) in rules.US_DL_TYPES.items():
-        rows.append((state_key, dtype, state, name, 0.85))
-    for state_key, state_name in rules.US_STATE_MAPPING.items():
-        if state_key in rules.US_DL_TYPES:
-            continue
-        rows.append(
-            (state_key, "us_drivers_license", state_name,
-             f"{state_name} Driver's License", 0.8)
-        )
-    return F.array(
-        *[
-            F.struct(
-                F.lit(k).alias("skey"),
-                F.lit(d).alias("dtype"),
-                F.lit(s).alias("state"),
-                F.lit(n).alias("dname"),
-                F.lit(c).alias("conf"),
-            )
-            for k, d, s, n, c in rows
-        ]
-    )
-
-
-def _specific_passport_array() -> Column:
-    """cc-bearing DOCUMENT_PATTERNS rows (detector :431-448), in order."""
-    rows = [
-        (cc, dtype, country, name)
-        for dtype, name, country, cc, _state, _fmt, _kws in rules.DOCUMENT_PATTERNS
-        if cc
-    ]
-    return F.array(
-        *[
-            F.struct(
-                F.lit(cc).alias("cc"),
-                F.lit(dtype).alias("dtype"),
-                _lit_s(country).alias("country"),
-                F.lit(name).alias("dname"),
-            )
-            for cc, dtype, country, name in rows
-        ]
-    )
-
-
-def _doc_number_formats_array() -> Column:
-    """D6 ordered format table (detector :480-494)."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(dtype).alias("dtype"),
-                F.lit(pattern).alias("pattern"),
-                _lit_s(country).alias("country"),
-                _lit_s(state).alias("state"),
-                F.lit(name).alias("dname"),
-            )
-            for dtype, pattern, country, state, name in rules.DOC_NUMBER_FORMATS
-        ]
-    )
-
+_FORMATS = [(_jre(p), p, dtype, country, state, name)
+            for dtype, p, country, state, name in rules.DOC_NUMBER_FORMATS]
 
 _ONTARIO_ADDR_INDICATORS = [
     "ontario", " on ", ", on", "on,", "toronto", "ottawa", "mississauga",
 ]
 
+# D7 scoring table (document_types.py:65-319): the country code scores
+# only on passport rows; keywords match lower-cased but are reported as
+# written (detector :628-637).
+_SCORED = [
+    (dtype, name, country, cc if cc and "passport" in name.lower() else None, state,
+     _jre(fmt) if fmt else None, [(k.lower(), k) for k in keywords],
+     dtype == "ontario_drivers_license")
+    for dtype, name, country, cc, state, fmt, keywords in rules.DOCUMENT_PATTERNS
+]
 
-def _score_patterns_array() -> Column:
-    """D7 scoring table (document_types.py:65-319) with per-row scoring
-    flags precomputed Python-side (is a passport type / has the Ontario
-    address bonus)."""
-    rows = []
-    for dtype, name, country, cc, state, fmt, keywords in rules.DOCUMENT_PATTERNS:
-        rows.append(
-            F.struct(
-                F.lit(dtype).alias("dtype"),
-                F.lit(name).alias("dname"),
-                _lit_s(country).alias("country"),
-                _lit_s(cc if (cc and "passport" in name.lower()) else None).alias("cc"),
-                _lit_s(state).alias("state"),
-                _lit_s(fmt).alias("fmt"),
-                # original case: the reference matches on keyword.lower()
-                # but interpolates the keyword as written into the
-                # "keywords_found: ..." feature (detector :628-637)
-                F.array(*[F.lit(k) for k in keywords]).alias("keywords"),
-                F.lit(dtype == "ontario_drivers_license").alias("ontario_bonus"),
-            )
-        )
-    return F.array(*rows)
+_UNKNOWN = ("unknown", 0.0, None, None, "Unknown Document", [])
+
+
+def _lookup(text: str, table: dict) -> str | None:
+    return next((v for k, v in table.items() if k in text), None)
+
+
+def _any(text: str, keywords: list[str]) -> bool:
+    return any(k in text for k in keywords)
+
+
+def detect(d: Doc) -> tuple:
+    """DocumentTypeInfo of one document: (document_type, confidence,
+    country, state_province, document_name, detected_features)."""
+    # D1 full text (detector :584-590): the non-empty fields in schema
+    # order, joined, then lower-cased
+    ft = " ".join(filter(None, (getattr(d, n) for n in FIELD_NAMES))).lower()
+    title = (d.document_title or "").lower()
+    num_u = _trim(d.document_number or "").upper()
+    num_c = _SEP.sub("", num_u)
+    cc = (d.country_code or "").upper()
+    country = rules.COUNTRY_CODES.get(cc)
+    prov = _lookup(ft, _PROVINCE_NAMES) or _lookup(ft, rules.PROVINCE_ABBREV)
+    state = _lookup(ft, _STATE_NAMES) or _lookup(ft, rules.US_STATE_ABBREV)
+
+    # D2 keyword flags (detector :267-281), D4 country (:289-305). The
+    # title is part of ft, so the reference's title tests for
+    # "permanent" and "passport" reduce to ft tests, and its "government
+    # of canada" test to "canada".
+    passport_kw = _any(ft, rules.PASSPORT_KEYWORDS)
+    dl_kw = _any(ft, rules.DL_KEYWORDS)
+    is_canada = "canada" in ft or cc == "CAN" or prov is not None
+
+    # D5: STEP 1 cascade, exact branch order (detector :314-473)
+    if (_any(ft, rules.PR_CARD_KEYWORDS) or "permanent" in ft) and is_canada:
+        return ("canada_pr_card", 0.9, "Canada", None, "Canada Permanent Residence Card",
+                ["pr_card_keyword_found", "country: Canada"])
+    if ((_any(ft, rules.PHOTO_ID_KEYWORDS)
+         or _any(title, ["photo", "identification", "identity", "services card", "bcid"]))
+            and not passport_kw and not dl_kw):
+        if prov in rules.PHOTO_ID_TYPES:
+            dtype, st, name = rules.PHOTO_ID_TYPES[prov]
+            return (dtype, 0.9, "Canada", st, name,
+                    ["photo_id_keyword_found", f"province: {prov}"])
+        return ("generic_photo_id", 0.7, None, None, "Photo ID", ["photo_id_keyword_found"])
+    # only the Ontario/ohip inner branch of the health-card rule returns
+    if (_any(ft, rules.HEALTH_CARD_KEYWORDS) and not passport_kw
+            and (prov == "ontario" or "ohip" in ft)):
+        return ("ontario_health_card", 0.9, "Canada", "Ontario", "Ontario Health Card",
+                ["health_card_keyword_found", "province: ontario"])
+    if dl_kw and not passport_kw:
+        if prov in rules.DL_TYPES:
+            dtype, st, name = rules.DL_TYPES[prov]
+            return (dtype, 0.85, "Canada", st, name, ["dl_keyword_found", f"province: {prov}"])
+        if state in _US_DL:
+            dtype, st, name, conf = _US_DL[state]
+            return (dtype, conf, "United States", st, name,
+                    ["dl_keyword_found", f"us_state: {state}"])
+    if passport_kw:
+        found = ["passport_keyword_found", f"country_code: {cc}"]
+        if cc in _SPECIFIC_PASSPORTS:
+            dtype, pcountry, name = _SPECIFIC_PASSPORTS[cc]
+            return (dtype, 0.9, pcountry, None, name, found)
+        if country is not None:  # generic passport by ISO code (:449-461)
+            return (f"{country.replace(' ', '_').lower()}_passport", 0.85, country, None,
+                    f"{country} Passport", found)
+        if cc == "":
+            return ("generic_passport", 0.75, None, None, "Passport",
+                    ["passport_keyword_found", "no_country_code"])
+
+    # D6: STEP 2, first document-number format that matches (:480-494)
+    if num_c != "":
+        for rx, pattern, dtype, pcountry, st, name in _FORMATS:
+            if rx.search(num_u) or rx.search(num_c):
+                return (dtype, 0.7, pcountry, st, name,
+                        ["document_number_format_match", f"pattern: {pattern}"])
+
+    # D7: STEP 3, pattern-match scoring (:497-554, :592-649); the first
+    # strict maximum wins ties. The reference's 0.6 last resort
+    # (:524-538: passport keyword + ISO code) is unreachable, since step
+    # 1's ISO-passport branch takes every such document.
+    addr = (d.address or "").lower()
+    ont = next((i for i in _ONTARIO_ADDR_INDICATORS if i in addr or i in ft), None)
+    best, best_score = None, -1.0
+    for dtype, name, pcountry, pcc, st, fmt, keywords, bonus in _SCORED:
+        cc_hit = cc == pcc
+        fmt_hit = fmt is not None and fmt.search(num_u) is not None
+        matched = [k for low, k in keywords if low in ft]
+        ont_hit = bonus and ont is not None
+        score = ((0.5 if cc_hit else 0.0) + (0.4 if fmt_hit else 0.0)
+                 + (min(len(matched) * 0.15, 0.45) if matched else 0.0)
+                 + (0.15 if ont_hit else 0.0))
+        if score > best_score:
+            feats = [f"country_code_match: {cc}"] if cc_hit else []
+            feats += ["document_number_format_match"] if fmt_hit else []
+            feats += [f"keywords_found: {', '.join(matched)}"] if matched else []
+            feats += [f"ontario_address_indicator: {ont}"] if ont_hit else []
+            best, best_score = (dtype, score, pcountry, st, name, feats), score
+    return best if best_score >= 0.3 else _UNKNOWN
+
+
+@row_udf(DOC_TYPE_INFO_TYPE)
+def _doc_type(*fields: str | None) -> tuple:
+    return detect(Doc(fields))
 
 
 def doc_type_expr(prefix: str = "") -> Column:
-    """Build the DocumentTypeInfo struct. Requires the precomputed
-    detection-input columns (apply with_detection_inputs first, or use
-    with_doc_type which wraps both)."""
-    col = lambda name: F.col(prefix + name)  # noqa: E731
-
-    address = F.coalesce(col("address"), F.lit(""))
-    country_code = F.col("__dt_cc")
-    document_title = F.col("__dt_title")
-    full_text_lower = F.col("__dt_ft")
-    clean_doc_number = F.col("__dt_numc")
-    doc_number_upper = F.col("__dt_numu")
-    detected_province = F.col("__dt_prov")
-    detected_us_state = F.col("__dt_state")
-    country_name = F.col("__dt_cname")
-
-    # D2 keyword flags (detector :267-281)
-    has_passport_kw = _contains_any(full_text_lower, rules.PASSPORT_KEYWORDS)
-    has_dl_kw = _contains_any(full_text_lower, rules.DL_KEYWORDS)
-    has_health_kw = _contains_any(full_text_lower, rules.HEALTH_CARD_KEYWORDS)
-    has_photo_kw = _contains_any(full_text_lower, rules.PHOTO_ID_KEYWORDS)
-    has_pr_kw = _contains_any(full_text_lower, rules.PR_CARD_KEYWORDS)
-    has_permanent = full_text_lower.contains("permanent") | document_title.contains(
-        "permanent"
-    )
-
-    is_pr_by_title = document_title.contains("permanent resident") | (
-        document_title.contains("résident permanent")
-    )
-    is_passport_by_title = document_title.contains("passport") & ~document_title.contains(
-        "permanent"
-    )
-    is_photo_by_title = (
-        document_title.contains("photo")
-        | document_title.contains("identification")
-        | document_title.contains("identity")
-        | document_title.contains("services card")
-        | document_title.contains("bcid")
-    )
-
-    # D4 country inference (detector :289-305)
-    has_gov_canada = full_text_lower.contains(
-        "government of canada"
-    ) | full_text_lower.contains("gouvernement du canada")
-    is_canada = (
-        full_text_lower.contains("canada")
-        | (country_code == "CAN")
-        | detected_province.isNotNull()
-        | has_gov_canada
-    )
-
-    # ---------------------------------------------------------------- D5
-    # STEP 1 cascade, exact branch order (detector :314-473).
-    chain = F.when(
-        (has_pr_kw | has_permanent | is_pr_by_title) & is_canada,
-        _type_struct(
-            "canada_pr_card", 0.9, "Canada", None,
-            "Canada Permanent Residence Card",
-            ["pr_card_keyword_found", "country: Canada"],
-        ),
-    )
-
-    # 1b photo card / photo id (per-province rows, generic fallback)
-    photo_cond = (has_photo_kw | is_photo_by_title) & ~has_passport_kw & ~has_dl_kw
-    photo_hits = F.filter(
-        _photo_types_array(), lambda e: e["prov"] == detected_province
-    )
-    photo_struct = F.try_element_at(
-        F.transform(
-            photo_hits,
-            lambda e: _type_struct(
-                e["dtype"], 0.9, "Canada", e["state"], e["dname"],
-                F.array(
-                    F.lit("photo_id_keyword_found"),
-                    F.concat(F.lit("province: "), e["prov"]),
-                ),
-            ),
-        ),
-        F.lit(1),
-    )
-    chain = chain.when(
-        photo_cond,
-        F.coalesce(
-            photo_struct,
-            _type_struct(
-                "generic_photo_id", 0.7, None, None, "Photo ID",
-                ["photo_id_keyword_found"],
-            ),
-        ),
-    )
-
-    # 1c health card (only the Ontario/ohip inner branch returns)
-    chain = chain.when(
-        has_health_kw
-        & ~has_passport_kw
-        & ((detected_province == "ontario") | full_text_lower.contains("ohip")),
-        _type_struct(
-            "ontario_health_card", 0.9, "Canada", "Ontario",
-            "Ontario Health Card",
-            ["health_card_keyword_found", "province: ontario"],
-        ),
-    )
-
-    # 1d driver's licence — Canadian provinces then US states, each a
-    # first-match over a literal rule array (detector :360-417)
-    dl_cond = has_dl_kw & ~has_passport_kw
-    ca_hits = F.filter(_dl_types_array(), lambda e: e["prov"] == detected_province)
-    chain = chain.when(
-        dl_cond & (F.size(ca_hits) > 0),
-        F.try_element_at(
-            F.transform(
-                ca_hits,
-                lambda e: _type_struct(
-                    e["dtype"], 0.85, "Canada", e["state"], e["dname"],
-                    F.array(
-                        F.lit("dl_keyword_found"),
-                        F.concat(F.lit("province: "), e["prov"]),
-                    ),
-                ),
-            ),
-            F.lit(1),
-        ),
-    )
-    us_hits = F.filter(_us_dl_array(), lambda e: e["skey"] == detected_us_state)
-    chain = chain.when(
-        dl_cond & (F.size(us_hits) > 0),
-        F.try_element_at(
-            F.transform(
-                us_hits,
-                lambda e: _type_struct(
-                    e["dtype"], e["conf"], "United States", e["state"], e["dname"],
-                    F.array(
-                        F.lit("dl_keyword_found"),
-                        F.concat(F.lit("us_state: "), e["skey"]),
-                    ),
-                ),
-            ),
-            F.lit(1),
-        ),
-    )
-
-    # 1e passport
-    pass_cond = has_passport_kw | is_passport_by_title
-    has_cc = country_code != F.lit("")
-    # specific passports: first DOCUMENT_PATTERNS entry with matching
-    # country_code (detector :431-448)
-    pp_hits = F.filter(_specific_passport_array(), lambda e: e["cc"] == country_code)
-    chain = chain.when(
-        pass_cond & has_cc & (F.size(pp_hits) > 0),
-        F.try_element_at(
-            F.transform(
-                pp_hits,
-                lambda e: _type_struct(
-                    e["dtype"], 0.9, e["country"], None, e["dname"],
-                    F.array(
-                        F.lit("passport_keyword_found"),
-                        F.concat(F.lit("country_code: "), country_code),
-                    ),
-                ),
-            ),
-            F.lit(1),
-        ),
-    )
-    # generic passport by ISO country (detector :449-461): dynamic type
-    in_iso = country_code.isin(list(rules.COUNTRY_CODES))
-    chain = chain.when(
-        pass_cond & has_cc & in_iso,
-        _type_struct(
-            F.concat(
-                F.lower(F.regexp_replace(country_name, " ", "_")),
-                F.lit("_passport"),
-            ),
-            0.85,
-            country_name,
-            None,
-            F.concat(country_name, F.lit(" Passport")),
-            F.array(
-                F.lit("passport_keyword_found"),
-                F.concat(F.lit("country_code: "), country_code),
-            ),
-        ),
-    )
-    # passport keyword, no country code at all (detector :462-473)
-    chain = chain.when(
-        pass_cond & ~has_cc,
-        _type_struct(
-            "generic_passport", 0.75, None, None, "Passport",
-            ["passport_keyword_found", "no_country_code"],
-        ),
-    )
-
-    # ---------------------------------------------------------------- D6
-    # STEP 2: doc-number format fallback (detector :480-494), conf 0.7 —
-    # ordered first-match over the literal format table.
-    fmt_hits = F.filter(
-        _doc_number_formats_array(),
-        lambda e: F.regexp_like(doc_number_upper, e["pattern"])
-        | F.regexp_like(clean_doc_number, e["pattern"]),
-    )
-    chain = chain.when(
-        (clean_doc_number != "") & (F.size(fmt_hits) > 0),
-        F.try_element_at(
-            F.transform(
-                fmt_hits,
-                lambda e: _type_struct(
-                    e["dtype"], 0.7, e["country"], e["state"], e["dname"],
-                    F.array(
-                        F.lit("document_number_format_match"),
-                        F.concat(F.lit("pattern: "), e["pattern"]),
-                    ),
-                ),
-            ),
-            F.lit(1),
-        ),
-    )
-
-    # ---------------------------------------------------------------- D7
-    # STEP 3: pattern-match scoring (detector :497-554, :592-649) as one
-    # transform over the literal 29-row table + a first-strict-max
-    # aggregate (the reference uses `>` so earlier entries win ties).
-    ont_inds = F.array(*[F.lit(i) for i in _ONTARIO_ADDR_INDICATORS])
-    addr_lower = F.lower(address)
-
-    def _score_feats(p: Column) -> tuple[Column, Column]:
-        """(score, detected_features) exactly as _calculate_match_score
-        (detector :592-649): one feature string per scoring component,
-        in component order; keywords_found lists matched keywords in
-        table order; the Ontario address feature names the FIRST
-        matching indicator (the reference breaks on first hit)."""
-        cc_hit = p["cc"].isNotNull() & (country_code != "") & (country_code == p["cc"])
-        fmt_hit = (
-            p["fmt"].isNotNull()
-            & (doc_number_upper != "")
-            & F.regexp_like(doc_number_upper, p["fmt"])
-        )
-        matched_kws = F.filter(
-            p["keywords"], lambda k: F.contains(full_text_lower, F.lower(k))
-        )
-        kw_hits = F.size(matched_kws)
-        # try_element_at: the filtered array is empty when no indicator
-        # matches, and bare element_at throws under ANSI mode (Spark 4
-        # default) instead of returning NULL.
-        ont_first = F.try_element_at(
-            F.filter(
-                ont_inds,
-                lambda i: F.contains(addr_lower, i) | F.contains(full_text_lower, i),
-            ),
-            F.lit(1),
-        )
-        ont_hit = p["ontario_bonus"] & ont_first.isNotNull()
-        s = (
-            F.when(cc_hit, 0.5).otherwise(0.0)
-            + F.when(fmt_hit, 0.4).otherwise(0.0)
-            + F.when(
-                kw_hits > 0, F.least(kw_hits.cast("double") * 0.15, F.lit(0.45))
-            ).otherwise(0.0)
-            + F.when(ont_hit, 0.15).otherwise(0.0)
-        )
-        feats = F.concat(
-            F.when(
-                cc_hit,
-                F.array(F.concat(F.lit("country_code_match: "), country_code)),
-            ).otherwise(_empty_sarr()),
-            F.when(fmt_hit, F.array(F.lit("document_number_format_match"))).otherwise(
-                _empty_sarr()
-            ),
-            F.when(
-                kw_hits > 0,
-                F.array(
-                    F.concat(F.lit("keywords_found: "), F.array_join(matched_kws, ", "))
-                ),
-            ).otherwise(_empty_sarr()),
-            F.when(
-                ont_hit,
-                F.array(F.concat(F.lit("ontario_address_indicator: "), ont_first)),
-            ).otherwise(_empty_sarr()),
-        )
-        return s, feats
-
-    def _scored_struct(p: Column) -> Column:
-        s, feats = _score_feats(p)
-        return F.struct(
-            s.alias("score"),
-            p["dtype"].alias("dtype"),
-            p["dname"].alias("dname"),
-            p["country"].alias("country"),
-            p["state"].alias("state"),
-            feats.alias("feats"),
-        )
-
-    scored = F.transform(_score_patterns_array(), _scored_struct)
-    zero = F.struct(
-        F.lit(-1.0).alias("score"),
-        F.lit(None).cast("string").alias("dtype"),
-        F.lit(None).cast("string").alias("dname"),
-        F.lit(None).cast("string").alias("country"),
-        F.lit(None).cast("string").alias("state"),
-        _empty_sarr().alias("feats"),
-    )
-    best = F.aggregate(
-        scored, zero, lambda acc, s: F.when(s["score"] > acc["score"], s).otherwise(acc)
-    )
-
-    # last resort (detector :524-538): passport kw + ISO cc -> 0.6 dynamic
-    last_resort = F.when(
-        has_passport_kw & has_cc & in_iso,
-        _type_struct(
-            F.concat(
-                F.lower(F.regexp_replace(country_name, " ", "_")),
-                F.lit("_passport"),
-            ),
-            0.6,
-            country_name,
-            None,
-            F.concat(country_name, F.lit(" Passport")),
-            F.array(
-                F.lit("passport_keyword_found"),
-                F.concat(F.lit("country_code: "), country_code),
-            ),
-        ),
-    ).otherwise(
-        _type_struct("unknown", 0.0, None, None, "Unknown Document", [])
-    )
-
-    # bind `best` once (transform-lambda binding) — referencing the
-    # aggregate six times would re-inline and re-evaluate it per field
-    step3 = F.try_element_at(
-        F.transform(
-            F.array(best),
-            lambda b: F.when(
-                b["score"] >= 0.3,
-                _type_struct(
-                    b["dtype"], b["score"], b["country"], b["state"],
-                    b["dname"], b["feats"],
-                ),
-            ).otherwise(last_resort),
-        ),
-        F.lit(1),
-    )
-
-    return chain.otherwise(step3)
-
-
-def _first_map_lookup(country_code: Column) -> Column:
-    """Back-compat alias for the D8 ISO lookup."""
-    return _country_name_expr(country_code)
+    """The DocumentTypeInfo struct of the 13 field columns."""
+    return _doc_type(*[F.col(prefix + n) for n in FIELD_NAMES])
 
 
 def with_doc_type(df: DataFrame, prefix: str = "") -> DataFrame:
-    """Append the ``doc_type`` struct column (precompute inputs, build
-    the cascade, drop the temps)."""
-    return (
-        with_detection_inputs(df, prefix)
-        .withColumn("doc_type", doc_type_expr(prefix))
-        .drop(*_TMP)
-    )
+    """Append the ``doc_type`` struct column."""
+    return df.withColumn("doc_type", doc_type_expr(prefix))

@@ -1,388 +1,184 @@
 """Fake/specimen document detection (operators F1-F6 + F-agg,
-SURVEY.md §2.4) as pure column expressions.
+SURVEY.md §2.4) as one plain Python function over one document,
+``fake_result``.
 
 Replicates app/services/fake_document_detector.py:123-410:
 6 weighted checks summed; confidence = round(min(total/2, 1.0), 2);
-is_fake = confidence >= 0.4 or total >= 0.8.
+is_fake = confidence >= 0.4 or total >= 0.8. Inside ``run_pipeline`` it
+runs in the reduce-side rule kernel (``pipeline._rule_kernel``);
+``fake_result_expr`` / ``with_fake_detection`` run the same function as
+a standalone scalar Arrow UDF. Rule tables (fake-name pairs, single
+names, address patterns, number patterns, specimen keywords) are read
+from ``webxtract.rules`` in their order.
 
-Plan/eval discipline: the assembled lower-cased full text (which
-includes the multi-KB extracted page text) and the other derived inputs
-are bound ONCE via ``bind_once`` — inlined at their ~40 reference sites
-they were re-lowercased and re-concatenated per site per row, the
-dominant cost of the round-1 pipeline. Rule tables (fake-name pairs,
-single names, address patterns, number patterns, specimen keywords) are
-constant-folded literal arrays scanned with filter/exists.
+Strings follow Spark's semantics, as the expression form this replaced
+did: space-only trim, Java regexes (``validators._jre``), Spark's
+string-to-int cast of the birth year, and HALF_UP ``round``.
 
 Deliberate reference-quirk decisions (SURVEY.md §7.4.5):
 - the MRZ all-filler check (:381) is dead code in the reference (its
   condition is always falsy); replicated-as-spec by omission.
 - reasons[] strings reproduce the reference's formats for the checks
-  our tests assert on; .title()-casing of names uses initcap (equal on
-  the ascii names in the rule tables).
+  our tests assert on; .title()-casing of names equals the reference's
+  on the ascii names in the rule tables.
 """
 
 from __future__ import annotations
+
+import re
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from webxtract import rules
-from webxtract.exprs import bind_once
-from webxtract.schemas import FIELD_NAMES
+from webxtract.ops.validators import _DIGITS, _SEP, Doc, _jre, _trim, row_udf
+from webxtract.schemas import FAKE_RESULT_TYPE, FIELD_NAMES
+
+_NUMBER_PATTERNS = [_jre(f"(?i){p}") for p in rules.FAKE_DOC_NUMBER_PATTERNS]
+
+CHECKS_PERFORMED = [
+    "specimen_keywords", "fake_names", "fake_document_numbers",
+    "suspicious_dates", "mrz_anomalies", "fake_addresses",
+]
+
+# Spark's ``try_cast(s AS INT)``: an optional sign and ASCII digits (no
+# fractional part), inside ASCII whitespace / control chars, in range.
+_CAST_TRIM = "".join(map(chr, range(33))) + "\x7f"
+_CAST_INT = re.compile(r"[+-]?[0-9]+")
 
 
-def _empty_arr():
-    return F.array().cast("array<string>")
+def _cast_int(s: str) -> int | None:
+    """The reference's ``int()`` in try/except, as Spark casts it."""
+    s = s.strip(_CAST_TRIM)
+    v = int(s) if _CAST_INT.fullmatch(s) else None
+    return v if v is not None and -(2**31) <= v < 2**31 else None
+
+
+def _birth_year(dob: str) -> int | None:
+    """Year part of a date string (:340-346): "-" -> first part; "/" ->
+    last part if 4 chars else first part."""
+    if "-" in dob:
+        return _cast_int(dob.split("-")[0])
+    if "/" in dob:
+        parts = dob.split("/")
+        return _cast_int(parts[-1] if len(parts[-1]) == 4 else parts[0])
+    return None
+
+
+def _sequential_ratio(num: str) -> float:
+    """Share of steps of +1 (or of -1, whichever is larger) between
+    consecutive digits (:291-312); a character that is not an ASCII
+    digit (a final line terminator that Java's ``$`` lets through) is
+    never part of a step."""
+    v = [ord(c) - 48 if "0" <= c <= "9" else None for c in num]
+    steps = list(zip(v, v[1:]))
+    up = sum(a is not None and b is not None and b == a + 1 for a, b in steps)
+    down = sum(a is not None and b is not None and b == a - 1 for a, b in steps)
+    return max(up, down) / (len(v) - 1)
+
+
+def _round2(x: float) -> float:
+    """Spark ``round(x, 2)``: HALF_UP on the double's shortest decimal."""
+    return float(Decimal(repr(x)).quantize(Decimal("0.01"), ROUND_HALF_UP))
+
+
+def fake_result(d: Doc, raw_text: str | None = None) -> tuple:
+    """FakeDocumentResult of one document (+ optional raw extracted text,
+    mirroring detect()'s raw_text param): (is_fake, confidence, reasons,
+    checks_performed)."""
+    parts = [raw_text, *(getattr(d, n) for n in FIELD_NAMES)]
+    text = " ".join(filter(None, parts)).lower()
+    first, last, full, addr = (_trim(getattr(d, n) or "").lower()
+                               for n in ("first_name", "last_name", "full_name", "address"))
+    num = _trim(d.document_number or "").upper()
+    cnum = _SEP.sub("", num)
+    checks: list[tuple[float, list[str]]] = []
+
+    def check(cond: bool, score: float, reason: str) -> None:
+        checks.append((score, [reason]) if cond else (0.0, []))
+
+    # ---- F1 specimen keywords (:210-220): every match counts
+    matched = [k for k in rules.SPECIMEN_KEYWORDS if k in text]
+    check(bool(matched), min(len(matched) * 0.5, 1.0),
+          f"Specimen keyword found: {', '.join(matched)}")
+
+    # ---- F2 fake names (:223-264): the first pair matching exactly or
+    # by containment wins
+    pair = next(((f, l) for f, l in rules.FAKE_NAME_PAIRS
+                 if (first == f and last == l) or (f in first and l in last)), None)
+    if pair is None:
+        checks.append((0.0, []))
+    elif pair == (first, last):
+        checks.append((1.0, [f"Known fake name: {pair[0].title()} {pair[1].title()}"]))
+    else:
+        checks.append((0.7, [f"Suspicious name pattern: contains '{pair[0]}' and '{pair[1]}'"]))
+    single = next((s for s in rules.FAKE_SINGLE_NAMES if s in first or s in last or s in full),
+                  None)
+    check(single is not None, 0.8, f"Fake name indicator: '{single}'")
+    # repeated-character names (>=4 chars, <=2 distinct)
+    for which, name in (("first", first), ("last", last)):
+        clean = name.replace(" ", "")
+        check(len(clean) >= 4 and len(set(clean)) <= 2, 0.5,
+              f"Suspicious {which} name: '{name}' (repeated characters)")
+
+    # ---- F3 fake document numbers (:267-314)
+    check(cnum != "" and cnum in rules.KNOWN_SPECIMEN_DOC_NUMBERS, 1.0,
+          f"Known specimen document number: {num}")
+    check(cnum != "" and any(p.search(cnum) for p in _NUMBER_PATTERNS), 0.8,
+          f"Suspicious document number pattern: {num}")
+    ratio = _sequential_ratio(cnum) if _DIGITS.search(cnum) and len(cnum) >= 5 else 0.0
+    if ratio == 1.0:
+        checks.append((0.9, [f"Sequential document number: {num}"]))
+    elif ratio >= 0.7:
+        checks.append((0.7, [f"Nearly sequential document number: {num}"]))
+    else:
+        check(ratio >= 0.5, 0.5, f"Partially sequential document number: {num}")
+
+    # ---- F4 suspicious dates (:317-361); a known date skips the
+    # birth-year checks (`continue`)
+    for field in ("date_of_birth", "issue_date", "expiry_date"):
+        value = _trim(getattr(d, field) or "")
+        known = value in rules.SUSPICIOUS_DATES
+        check(value != "" and known, 0.6, f"Suspicious {field}: {value}")
+        if field == "date_of_birth":
+            year = _birth_year(value) if value != "" and not known else None
+            a = year in rules.SUSPICIOUS_BIRTH_YEARS
+            b = year is not None and year < 1920
+            checks.append(((0.4 if a else 0.0) + (0.5 if b else 0.0),
+                           [f"Suspicious birth year: {year}"] * a
+                           + [f"Unrealistic birth year: {year}"] * b))
+
+    # ---- F5 MRZ anomalies (:364-391); (:381) the all-filler check is
+    # dead code in the reference — omitted.
+    mrz = (d.mrz or "").upper()
+    check("SPECIMEN" in mrz or "SAMPLE" in mrz, 1.0, "MRZ contains SPECIMEN/SAMPLE text")
+    check("DOEDOE" in mrz or "JOHNJOHN" in mrz, 0.7, "MRZ contains repeated name patterns")
+
+    # ---- F6 fake addresses (:394-410): first matching pattern only
+    pattern = next((a for a in rules.FAKE_ADDRESS_PATTERNS if a in addr), None)
+    check(pattern is not None, 0.8, f"Fake address pattern: '{pattern}'")
+
+    # ---- F-agg (:184-198); summed in check order like Spark's aggregate
+    # (sum() compensates float error on Python 3.12+)
+    total = 0.0
+    for score, _ in checks:
+        total += score
+    confidence = _round2(min(total / 2.0, 1.0))
+    reasons = [r for _, rs in checks for r in rs]
+    return confidence >= 0.4 or total >= 0.8, confidence, reasons, CHECKS_PERFORMED
+
+
+@row_udf(FAKE_RESULT_TYPE)
+def _fake_detection(raw_text: str | None, *fields: str | None) -> tuple:
+    return fake_result(Doc(fields), raw_text)
 
 
 def fake_result_expr(prefix: str = "", raw_text: Column | None = None) -> Column:
-    """Build the FakeDocumentResult struct from field columns (+ optional
-    raw extracted text, mirroring detect()'s raw_text param)."""
-    col = lambda name: F.col(prefix + name)  # noqa: E731
-
-    parts = [raw_text] if raw_text is not None else []
-    parts += [col(n) for n in FIELD_NAMES]
-    full_text = F.concat_ws(
-        " ",
-        F.filter(
-            F.array(*parts), lambda v: v.isNotNull() & (v != F.lit(""))
-        ),
-    )
-    doc_number_e = F.upper(F.trim(F.coalesce(col("document_number"), F.lit(""))))
-    inputs = F.struct(
-        F.lower(full_text).alias("tl"),
-        F.lower(F.trim(F.coalesce(col("first_name"), F.lit("")))).alias("first"),
-        F.lower(F.trim(F.coalesce(col("last_name"), F.lit("")))).alias("last"),
-        F.lower(F.trim(F.coalesce(col("full_name"), F.lit("")))).alias("full"),
-        doc_number_e.alias("num"),
-        F.regexp_replace(doc_number_e, r"[\s\-]", "").alias("cnum"),
-        F.lower(F.trim(F.coalesce(col("address"), F.lit("")))).alias("addr"),
-        F.upper(F.coalesce(col("mrz"), F.lit(""))).alias("mrz"),
-        F.trim(F.coalesce(col("date_of_birth"), F.lit(""))).alias("dob"),
-        F.trim(F.coalesce(col("issue_date"), F.lit(""))).alias("issue"),
-        F.trim(F.coalesce(col("expiry_date"), F.lit(""))).alias("expiry"),
-    )
-    return bind_once(inputs, _fake_body)
-
-
-def _check(cond: Column, score, reason: Column | str) -> Column:  # noqa: ANN001
-    """struct<score, reasons> for one rule."""
-    r = F.lit(reason) if isinstance(reason, str) else reason
-    s = score if isinstance(score, Column) else F.lit(float(score))
-    return F.struct(
-        F.when(cond, s).otherwise(F.lit(0.0)).alias("score"),
-        F.when(cond, F.array(r)).otherwise(_empty_arr()).alias("reasons"),
-    )
-
-
-def _fake_body(x: Column) -> Column:
-    text_lower = x["tl"]
-    first, last, full = x["first"], x["last"], x["full"]
-    doc_number, clean_num = x["num"], x["cnum"]
-
-    checks: list[Column] = []
-
-    # ---- F1 specimen keywords (:210-220): count ALL matches; the
-    # matched-keyword array is bound once (score + reason read it).
-    kw_arr = F.array(*[F.lit(k) for k in rules.SPECIMEN_KEYWORDS])
-    matched_kw = F.filter(kw_arr, lambda k: F.contains(text_lower, k))
-    checks.append(
-        bind_once(
-            matched_kw,
-            lambda m: F.struct(
-                F.when(
-                    F.size(m) > 0,
-                    F.least(F.size(m).cast("double") * 0.5, F.lit(1.0)),
-                ).otherwise(0.0).alias("score"),
-                F.when(
-                    F.size(m) > 0,
-                    F.array(
-                        F.concat(
-                            F.lit("Specimen keyword found: "), F.array_join(m, ", ")
-                        )
-                    ),
-                ).otherwise(_empty_arr()).alias("reasons"),
-            ),
-        )
-    )
-
-    # ---- F2 fake names (:223-264): first pair matching exactly OR by
-    # containment wins (loop breaks) — first-match filter over the
-    # constant-folded pair table, bound once.
-    pairs_arr = F.array(
-        *[
-            F.struct(F.lit(f).alias("f"), F.lit(l).alias("l"))
-            for f, l in rules.FAKE_NAME_PAIRS
-        ]
-    )
-    first_pair = F.try_element_at(
-        F.filter(
-            pairs_arr,
-            lambda p: ((first == p["f"]) & (last == p["l"]))
-            | (F.contains(first, p["f"]) & F.contains(last, p["l"])),
-        ),
-        F.lit(1),
-    )
-
-    def pair_check(p: Column) -> Column:
-        exact = (first == p["f"]) & (last == p["l"])
-        return F.struct(
-            F.when(p.isNull(), F.lit(0.0))
-            .when(exact, F.lit(1.0))
-            .otherwise(F.lit(0.7)).alias("score"),
-            F.when(p.isNull(), _empty_arr())
-            .when(
-                exact,
-                F.array(
-                    F.concat(
-                        F.lit("Known fake name: "),
-                        F.initcap(p["f"]), F.lit(" "), F.initcap(p["l"]),
-                    )
-                ),
-            )
-            .otherwise(
-                F.array(
-                    F.concat(
-                        F.lit("Suspicious name pattern: contains '"),
-                        p["f"], F.lit("' and '"), p["l"], F.lit("'"),
-                    )
-                )
-            ).alias("reasons"),
-        )
-
-    checks.append(bind_once(first_pair, pair_check))
-
-    first_single = F.try_element_at(
-        F.filter(
-            F.array(*[F.lit(s) for s in rules.FAKE_SINGLE_NAMES]),
-            lambda s: F.contains(first, s) | F.contains(last, s) | F.contains(full, s),
-        ),
-        F.lit(1),
-    )
-    checks.append(
-        bind_once(
-            first_single,
-            lambda s: _check(
-                s.isNotNull(), 0.8,
-                F.concat(F.lit("Fake name indicator: '"), s, F.lit("'")),
-            ),
-        )
-    )
-
-    # repeated-character names (>=4 chars, <=2 distinct)
-    for which, name_col in (("first", first), ("last", last)):
-        clean = F.replace(name_col, F.lit(" "), F.lit(""))
-        cond = (F.length(clean) >= 4) & (
-            F.size(F.array_distinct(F.split(clean, ""))) <= 2
-        )
-        checks.append(
-            _check(
-                cond, 0.5,
-                F.concat(
-                    F.lit(f"Suspicious {which} name: '"), name_col,
-                    F.lit("' (repeated characters)"),
-                ),
-            )
-        )
-
-    # ---- F3 fake document numbers (:267-314)
-    has_num = clean_num != ""
-    checks.append(
-        _check(
-            has_num & clean_num.isin(rules.KNOWN_SPECIMEN_DOC_NUMBERS),
-            1.0,
-            F.concat(F.lit("Known specimen document number: "), doc_number),
-        )
-    )
-    pattern_hit = F.exists(
-        F.array(*[F.lit(f"(?i){p}") for p in rules.FAKE_DOC_NUMBER_PATTERNS]),
-        lambda p: F.regexp_like(clean_num, p),
-    )
-    checks.append(
-        _check(
-            has_num & pattern_hit,
-            0.8,
-            F.concat(F.lit("Suspicious document number pattern: "), doc_number),
-        )
-    )
-
-    # sequential-digit ratio over the cleaned digits (:291-312), bound once
-    digits = F.split(clean_num, "")
-    n = F.size(digits)
-    is_digits = clean_num.rlike(r"^\d+$") & (F.length(clean_num) >= 5)
-    idx = F.sequence(F.lit(2), n)  # 1-based element_at positions 2..n
-
-    def _count_steps(step: int) -> Column:
-        return F.size(
-            F.filter(
-                idx,
-                lambda i: F.element_at(digits, i).cast("int")
-                == F.element_at(digits, i - 1).cast("int") + F.lit(step),
-            )
-        )
-
-    seq_ratio_e = F.when(
-        is_digits & (n > 1),
-        F.greatest(_count_steps(1), _count_steps(-1)).cast("double")
-        / (n - 1).cast("double"),
-    ).otherwise(F.lit(0.0))
-
-    def seq_check(r: Column) -> Column:
-        return F.struct(
-            F.when(~is_digits, 0.0)
-            .when(r == 1.0, 0.9)
-            .when(r >= 0.7, 0.7)
-            .when(r >= 0.5, 0.5)
-            .otherwise(0.0).alias("score"),
-            F.when(~is_digits | (r < 0.5), _empty_arr())
-            .when(
-                r == 1.0,
-                F.array(F.concat(F.lit("Sequential document number: "), doc_number)),
-            )
-            .when(
-                r >= 0.7,
-                F.array(
-                    F.concat(F.lit("Nearly sequential document number: "), doc_number)
-                ),
-            )
-            .otherwise(
-                F.array(
-                    F.concat(F.lit("Partially sequential document number: "), doc_number)
-                )
-            ).alias("reasons"),
-        )
-
-    checks.append(bind_once(seq_ratio_e, seq_check))
-
-    # ---- F4 suspicious dates (:317-361)
-    for field_name, field_key in (
-        ("date_of_birth", "dob"), ("issue_date", "issue"), ("expiry_date", "expiry")
-    ):
-        dval = x[field_key]
-        present = dval != ""
-        is_known = dval.isin(rules.SUSPICIOUS_DATES)
-        checks.append(
-            _check(
-                present & is_known,
-                0.6,
-                F.concat(F.lit(f"Suspicious {field_name}: "), dval),
-            )
-        )
-        if field_name == "date_of_birth":
-            # year parse per :340-346 ("-" -> first part; "/" -> last part
-            # if 4 chars else first part); known dates `continue` past this
-            year_e = (
-                F.when(
-                    dval.contains("-"),
-                    F.split(dval, "-")[0],
-                )
-                .when(
-                    dval.contains("/"),
-                    F.when(
-                        F.length(F.element_at(F.split(dval, "/"), -1)) == 4,
-                        F.element_at(F.split(dval, "/"), -1),
-                    ).otherwise(F.split(dval, "/")[0]),
-                )
-                .otherwise(F.lit(None))
-                # try_cast: the reference wraps int(year_str) in
-                # try/except -> None; bare cast throws under ANSI mode
-                # on a non-numeric year part instead of yielding NULL.
-                .try_cast("int")
-            )
-
-            def year_checks(year: Column) -> Column:
-                # closes over this iteration's present/is_known (the date
-                # loop only reaches here for date_of_birth, so late
-                # binding is safe)
-                checkable = present & ~is_known & year.isNotNull()
-                a = _check(
-                    checkable & year.isin(rules.SUSPICIOUS_BIRTH_YEARS),
-                    0.4,
-                    F.concat(F.lit("Suspicious birth year: "), year.cast("string")),
-                )
-                b = _check(
-                    checkable & (year < 1920),
-                    0.5,
-                    F.concat(F.lit("Unrealistic birth year: "), year.cast("string")),
-                )
-                return F.struct(
-                    (a["score"] + b["score"]).alias("score"),
-                    F.concat(a["reasons"], b["reasons"]).alias("reasons"),
-                )
-
-            checks.append(bind_once(year_e, year_checks))
-
-    # ---- F5 MRZ anomalies (:364-391)
-    mrz_upper = x["mrz"]
-    has_mrz = mrz_upper != ""
-    checks.append(
-        _check(
-            has_mrz & (mrz_upper.contains("SPECIMEN") | mrz_upper.contains("SAMPLE")),
-            1.0,
-            "MRZ contains SPECIMEN/SAMPLE text",
-        )
-    )
-    # (:381) all-filler check is dead code in the reference — omitted.
-    checks.append(
-        _check(
-            has_mrz & (mrz_upper.contains("DOEDOE") | mrz_upper.contains("JOHNJOHN")),
-            0.7,
-            "MRZ contains repeated name patterns",
-        )
-    )
-
-    # ---- F6 fake addresses (:394-410): first matching pattern only
-    addr = x["addr"]
-    first_addr = F.try_element_at(
-        F.filter(
-            F.array(*[F.lit(a) for a in rules.FAKE_ADDRESS_PATTERNS]),
-            lambda a: F.contains(addr, a),
-        ),
-        F.lit(1),
-    )
-    checks.append(
-        bind_once(
-            first_addr,
-            lambda a: _check(
-                (addr != "") & a.isNotNull(),
-                0.8,
-                F.concat(F.lit("Fake address pattern: '"), a, F.lit("'")),
-            ),
-        )
-    )
-
-    # ---- F-agg (:184-198): bind the check array once; total + reasons
-    # both read it.
-    def agg(cs: Column) -> Column:
-        total = F.aggregate(
-            cs, F.lit(0.0), lambda acc, c: acc + c["score"]
-        )
-        reasons = F.flatten(F.transform(cs, lambda c: c["reasons"]))
-        return bind_once(
-            total,
-            lambda t: F.struct(
-                (
-                    (F.round(F.least(t / 2.0, F.lit(1.0)), 2) >= 0.4) | (t >= 0.8)
-                ).alias("is_fake"),
-                F.round(F.least(t / 2.0, F.lit(1.0)), 2).alias("confidence"),
-                reasons.alias("reasons"),
-                F.array(
-                    *[
-                        F.lit(c)
-                        for c in (
-                            "specimen_keywords",
-                            "fake_names",
-                            "fake_document_numbers",
-                            "suspicious_dates",
-                            "mrz_anomalies",
-                            "fake_addresses",
-                        )
-                    ]
-                ).alias("checks_performed"),
-            ),
-        )
-
-    return bind_once(F.array(*checks), agg)
+    """The FakeDocumentResult struct of the field columns (+ optional
+    raw extracted text column)."""
+    raw = raw_text if raw_text is not None else F.lit(None).cast("string")
+    return _fake_detection(raw, *[F.col(prefix + n) for n in FIELD_NAMES])
 
 
 def with_fake_detection(

@@ -10,16 +10,14 @@ newlines/tabs -> space, collapse runs of spaces, trim — applied to
 address/full_name/first_name/last_name.
 
 Required-field check replicates document_extractor.py:190-201
-(missing = null or blank-after-strip among the 5 required fields).
+(missing = null or blank-after-strip among the 5 required fields), as a
+lambda-free projection.
 """
 
 from __future__ import annotations
 
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from webxtract.exprs import gateway_cached
 
 from webxtract.schemas import FIELD_NAMES, REQUIRED_FIELDS
 
@@ -65,48 +63,20 @@ def field_expr(text: Column, name: str) -> Column:
     return val
 
 
-@gateway_cached(maxsize=4)
-def _field_exprs(text_col: str) -> tuple:
-    text = F.col(text_col)
-    return tuple(field_expr(text, name).alias(name) for name in FIELD_NAMES)
-
-
 def with_fields(df: DataFrame, text_col: str = "extracted_text") -> DataFrame:
-    """Append the 13 field columns parsed from ``text_col``.
-
-    The parse expressions are pure functions of the column name, so the
-    (py4j-heavy) construction is cached per process: Column objects are
-    immutable expression trees, reusable across DataFrames and sessions
-    on the same JVM gateway."""
-    return df.select("*", *_field_exprs(text_col))
+    """Append the 13 field columns parsed from ``text_col``."""
+    text = F.col(text_col)
+    return df.select("*", *[field_expr(text, name).alias(name) for name in FIELD_NAMES])
 
 
 def missing_fields_expr(prefix: str = "") -> Column:
     """E7: array of required-field names that are null/blank
-    (document_extractor.py:190-201)."""
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(name).alias("name"),
-                F.col(prefix + name).alias("val"),
-            )
-            for name in REQUIRED_FIELDS
-        ]
-    )
-    return F.transform(
-        F.filter(
-            entries,
-            lambda e: e["val"].isNull() | (F.trim(e["val"]) == F.lit("")),
-        ),
-        lambda e: e["name"],
-    )
-
-
-def with_required_check(df: DataFrame) -> DataFrame:
-    """Append missing_fields + fields_valid columns."""
-    missing = missing_fields_expr()
-    return df.select(
-        "*",
-        missing.alias("missing_fields"),
-        (F.size(missing) == 0).alias("fields_valid"),
-    )
+    (document_extractor.py:190-201), in REQUIRED_FIELDS order. The names
+    are joined with ``concat_ws`` (which skips NULLs) and split again:
+    ``array_compact`` would be the direct form, but Spark rewrites it to
+    a ``filter`` lambda."""
+    names = [
+        F.when(F.col(prefix + n).isNull() | (F.trim(F.col(prefix + n)) == ""), F.lit(n))
+        for n in REQUIRED_FIELDS
+    ]
+    return F.array_remove(F.split(F.concat_ws(",", *names), ","), "")

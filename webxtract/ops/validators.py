@@ -3,13 +3,16 @@ one vectorized Arrow kernel.
 
 The reference runs 5 base validators + 1 type-specific validator per
 document on a thread pool (validation_service.py:306-327). Here the
-whole battery is ONE scalar Arrow UDF (``_battery``): Spark hands it a
+battery (``validate``) runs in a scalar Arrow UDF: Spark hands it a
 batch of the columns the rules read — the 13 field strings, the three
 dates parsed by ``with_parsed_dates`` (date semantics stay in Catalyst),
-``doc_type_enum``, ``run_date`` and ``minimum_age`` — and it returns the
-``array<ValidatorResult>`` column in one Arrow batch. The physical plan
-carries a single ``ArrowEvalPython`` node for the battery; no rule logic
-is analyzed, optimized or code-generated by Catalyst.
+``run_date`` and ``minimum_age`` — and it returns the
+``array<ValidatorResult>`` column in one Arrow batch. Inside
+``run_pipeline`` that UDF is the rule kernel (``pipeline._rule_kernel``),
+which also runs type detection and fake scoring; ``_battery`` serves the
+standalone entry points below. No rule logic is analyzed, optimized or
+code-generated by Catalyst. This module also holds what every rule
+kernel shares: ``Doc``, the Spark-semantics helpers and ``row_udf``.
 
 Each validator is a plain Python function over one document, written
 close to the reference class it replicates: the 5 base validators, the
@@ -52,7 +55,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import ArrayType, BooleanType
 
-from webxtract.exprs import gateway_cached
 from webxtract.rules import (
     COUNTRY_CODES,
     DATE_FORMATS_SPARK,
@@ -69,7 +71,6 @@ from webxtract.rules import (
 from webxtract.schemas import FIELD_NAMES, VALIDATOR_RESULT_TYPE
 
 RESULTS_TYPE = ArrayType(VALIDATOR_RESULT_TYPE)
-_RESULTS_ARROW = to_arrow_type(RESULTS_TYPE)
 
 # ------------------------------------------------------ Spark semantics
 
@@ -151,16 +152,36 @@ _EPOCH_1985 = 5479  # 1985-01-01 as an epoch day
 
 
 class Doc:
-    """One document as the battery sees it: raw field strings (``None``
-    when NULL), parsed dates as epoch days, and the run parameters."""
+    """One document as the rules see it: raw field strings (``None``
+    when NULL), parsed dates as epoch days, and the run parameters
+    (detection and fake scoring read the fields only)."""
 
     __slots__ = (*FIELD_NAMES, "dob", "issue", "exp", "run", "minimum_age")
 
-    def __init__(self, fields, dob, issue, exp, run, minimum_age):  # noqa: ANN001
+    def __init__(self, fields, dob=None, issue=None, exp=None, run=None,  # noqa: ANN001
+                 minimum_age=None):  # noqa: ANN001
         for name, v in zip(FIELD_NAMES, fields):
             setattr(self, name, v)
         self.dob, self.issue, self.exp = dob, issue, exp
         self.run, self.minimum_age = run, minimum_age
+
+
+def row_udf(return_type):  # noqa: ANN001, ANN201
+    """Decorator: turn ``fn(*values) -> row`` into a scalar Arrow UDF named
+    like ``fn`` that converts each batch to Python lists, applies ``fn``
+    to every row (tuples fill structs positionally) and returns one Arrow
+    array of ``return_type``."""
+    arrow_type = to_arrow_type(return_type)
+
+    def wrap(fn):  # noqa: ANN001, ANN202
+        def kernel(*cols: pa.Array) -> pa.Array:
+            rows = zip(*(c.to_pylist() for c in cols))
+            return pa.array([fn(*row) for row in rows], arrow_type)
+
+        kernel.__name__ = fn.__name__
+        return F.arrow_udf(kernel, return_type)
+
+    return wrap
 
 
 def _result(name: str, issues: list, warnings: list, fail: str, warn: str,
@@ -219,19 +240,14 @@ def parse_date_expr(col: Column) -> Column:
 # Pre-parsed date columns: the three date fields are parsed once per row
 # in Catalyst and handed to the kernel as epoch days.
 DOB_COL, ISSUE_COL, EXP_COL = "__dob_d", "__issue_d", "__exp_d"
-
-
-@gateway_cached(maxsize=4)
-def _parsed_date_exprs(prefix: str) -> dict:
-    return {
-        DOB_COL: parse_date_expr(F.col(prefix + "date_of_birth")),
-        ISSUE_COL: parse_date_expr(F.col(prefix + "issue_date")),
-        EXP_COL: parse_date_expr(F.col(prefix + "expiry_date")),
-    }
+DATE_COLS = (DOB_COL, ISSUE_COL, EXP_COL)
 
 
 def with_parsed_dates(df, prefix: str = ""):  # noqa: ANN001, ANN201
-    return df.withColumns(_parsed_date_exprs(prefix))
+    return df.withColumns({
+        c: parse_date_expr(F.col(prefix + f))
+        for c, f in zip(DATE_COLS, ("date_of_birth", "issue_date", "expiry_date"))
+    })
 
 
 # ------------------------------------------------------------- base five
@@ -1019,10 +1035,8 @@ def luhn_valid(number: str | None) -> bool:
     return total % 10 == 0
 
 
-@F.arrow_udf(BooleanType())
-def luhn_valid_expr(numbers: pa.Array) -> pa.Array:
-    """``luhn_valid`` over a string column, as one Arrow kernel."""
-    return pa.array([luhn_valid(n) for n in numbers.to_pylist()], pa.bool_())
+# ``luhn_valid`` over a string column, as one Arrow kernel.
+luhn_valid_expr = row_udf(BooleanType())(luhn_valid)
 
 
 _HC_FULL = _jre(r"^\d{10}[A-Z]{2}$")
@@ -1209,6 +1223,18 @@ _SPECIFIC = {
 }
 
 
+_ENUMS = set(_SPECIFIC) | {"generic_id", "unknown"}
+
+
+def doc_type_enum(document_type: str) -> str:
+    """document_type -> validator-lookup enum: dynamic ``<country>_passport``
+    types map to generic_passport (document_type_detector.py:449-461 +
+    DocumentTypeInfo.document_type_enum)."""
+    if document_type in _ENUMS:
+        return document_type
+    return "generic_passport" if document_type.endswith("_passport") else "unknown"
+
+
 def validate(doc_type_enum: str | None, d: Doc) -> list[tuple]:
     """The full battery for one document (validation_service.py:283-295):
     5 base validators + the dispatched type-specific one, when the type
@@ -1227,34 +1253,24 @@ _SELECT = {
 }
 
 
-@F.arrow_udf(RESULTS_TYPE)
-def _battery(which: pa.Array, enum: pa.Array, run: pa.Array, minimum_age: pa.Array,
-             *cols: pa.Array) -> pa.Array:
-    """The battery kernel over one Arrow batch: ``which`` selects the
-    battery, the type-specific validator only, or document expiry only;
-    ``cols`` are the 13 field columns then dob/issue/expiry epoch days."""
-    n = len(enum)
-    if n == 0:
-        return pa.array([], _RESULTS_ARROW)
-    select = _SELECT[which[0].as_py()]
-    py = [c.to_pylist() for c in (enum, run, minimum_age, *cols)]
-    out = []
-    for e, r, age, *vals in zip(*py):
-        doc = Doc(vals[:-3], *vals[-3:], r, age)
-        out.append([
-            {"validator_name": v, "status": s, "message": m, "details": det}
-            for v, s, m, det in select(e, doc)
-        ])
-    return pa.array(out, _RESULTS_ARROW)
+def doc_columns(prefix: str = "") -> list[Column]:
+    """The 13 field columns then the dob/issue/expiry epoch days, the
+    per-document inputs of every rule kernel (after ``with_parsed_dates``)."""
+    return [*[F.col(prefix + f) for f in FIELD_NAMES],
+            *[F.unix_date(F.col(c)) for c in DATE_COLS]]
+
+
+@row_udf(RESULTS_TYPE)
+def _battery(which: str, enum: str | None, run: int, minimum_age: int, *vals) -> list:  # noqa: ANN002
+    """``which`` selects the battery, the type-specific validator only, or
+    document expiry only; ``vals`` are ``doc_columns``."""
+    return _SELECT[which](enum, Doc(vals[:-3], *vals[-3:], run, minimum_age))
 
 
 def _kernel(which: str, doc_type_enum: Column, run_date: Column, minimum_age: int,
             prefix: str) -> Column:
-    return _battery(
-        F.lit(which), doc_type_enum, F.unix_date(run_date), F.lit(minimum_age),
-        *[F.col(prefix + f) for f in FIELD_NAMES],
-        *[F.unix_date(F.col(c)) for c in (DOB_COL, ISSUE_COL, EXP_COL)],
-    )
+    return _battery(F.lit(which), doc_type_enum, F.unix_date(run_date), F.lit(minimum_age),
+                    *doc_columns(prefix))
 
 
 def validation_results_expr(
@@ -1279,18 +1295,6 @@ def document_expiry_validator(run_date: Column, prefix: str = "") -> Column:
     """V2 alone, as a ValidatorResult struct."""
     return F.try_element_at(
         _kernel("document_expiry", F.lit(None).cast("string"), run_date, 18, prefix), F.lit(1)
-    )
-
-
-def doc_type_enum_expr(document_type: Column) -> Column:
-    """document_type string -> validator-lookup enum: dynamic
-    ``<country>_passport`` types map to generic_passport
-    (document_type_detector.py:449-461 + DocumentTypeInfo.document_type_enum)."""
-    known = sorted(set(_SPECIFIC) | {"generic_id", "unknown"})
-    return (
-        F.when(document_type.isin(*known), document_type)
-        .when(document_type.endswith("_passport"), F.lit("generic_passport"))
-        .otherwise(F.lit("unknown"))
     )
 
 

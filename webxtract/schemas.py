@@ -134,7 +134,8 @@ FAKE_RESULT_TYPE = StructType(
         StructField("is_fake", BooleanType(), True),
         StructField("confidence", DoubleType(), True),
         StructField("reasons", ArrayType(StringType()), True),
-        StructField("checks_performed", ArrayType(StringType()), True),
+        # the fixed list of the six check names
+        StructField("checks_performed", ArrayType(StringType(), False), False),
     ]
 )
 
