@@ -1,5 +1,5 @@
 """Offline fit of the hashed naive-Bayes language classifier served by
-``webxtract.textops.lang_id_clf_expr``.
+``webxtract.textops.lang_id_clf_frame``.
 
 The reference's language handling is implicit (its documents are
 English/French Canadian IDs); the rebuild's corpus-scale lang-id needs
@@ -17,9 +17,9 @@ deterministic, no RNG, no external data:
   (``textops.stable_hash60_expr``); weight = per-class log-odds vs the
   pooled background, Laplace alpha=0.5;
 - output: ``webxtract/lang_clf.py`` — a literal weight table the
-  serving expression ships in the plan (zero-shuffle, zero-join,
-  zero-Python scoring, the same 100-TB serving shape as
-  ``curation.classifier_score_expr``).
+  serving kernel ships with its closure (one zero-shuffle, zero-join
+  mapInPandas pass, the same 100-TB serving shape as
+  ``curation.classifier_scores_frame``).
 
 Run:  python scripts/fit_lang_clf.py   (rewrites webxtract/lang_clf.py,
 then self-evaluates on sf0.001 documents with planted stopwords).
@@ -100,7 +100,7 @@ def fit() -> tuple[list[str], dict[str, list[float]]]:
 
 
 def score(text: str, langs: list[str], weights: dict[str, list[float]]) -> str:
-    """Python twin of the serving expression (for self-evaluation)."""
+    """Python twin of the serving kernel (for self-evaluation)."""
     toks = text.strip().lower().split()
     if not toks:
         toks = [""]
@@ -120,8 +120,8 @@ def emit(langs: list[str], weights: dict[str, list[float]]) -> None:
         "",
         "Hashed multinomial-NB language-ID weight table: per language,",
         f"{N_BUCKETS} bucket log-odds vs the pooled background (md5-60",
-        "token hash, Laplace alpha=0.5). Served as a plan literal by",
-        'textops.lang_id_clf_expr; mirrored bucket-for-bucket by the',
+        "token hash, Laplace alpha=0.5). Served by the mapInPandas kernel",
+        'textops.lang_id_clf_frame; mirrored bucket-for-bucket by the',
         'DuckDB oracle (oracles._lang_clf_sql)."""',
         "",
         f"LANG_CLF_BUCKETS = {N_BUCKETS}",

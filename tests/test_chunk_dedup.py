@@ -80,7 +80,6 @@ def test_short_chunk_floor(spark):
 
 def test_rewrite_token_conservation(spark, docs):
     """kept tokens + dropped-chunk tokens == original tokens, per doc."""
-    spans = dedup.chunk_spans_expr(F.col("text"), boundary_mod=4)
     orig = {
         r.doc_id: r.n
         for r in docs.select(
@@ -93,11 +92,8 @@ def test_rewrite_token_conservation(spark, docs):
         for r in out.collect()
     }
     chunk_toks = {
-        r.doc_id: r.toks
-        for r in docs.select(
-            "doc_id",
-            F.transform(spans, lambda c: c["n_tok"]).alias("toks"),
-        ).collect()
+        r.doc_id: [n_tok for _, n_tok, _ in dedup.chunk_spans(r.text, 4)]
+        for r in docs.collect()
     }
     for d, n in orig.items():
         assert sum(chunk_toks[d]) == n  # chunking loses no tokens

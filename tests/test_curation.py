@@ -627,7 +627,7 @@ def test_dedup_keep_best_hand_computed(spark):
 def test_tag_topics_hand_computed(spark):
     """Known keyword counts per topic; ties go to the earlier taxonomy
     entry; no hits and NULL text tag 'other'."""
-    from webxtract.curation import tag_topics_exprs
+    from webxtract.curation import tag_topics_frame
 
     rows = [
         (1, "The startup software uses an algorithm. Great software."),
@@ -638,13 +638,7 @@ def test_tag_topics_hand_computed(spark):
         (4, None),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    e = tag_topics_exprs(F.col("text"))
-    out = {
-        r["doc_id"]: r.asDict()
-        for r in df.select(
-            "doc_id", *[v.alias(k) for k, v in e.items()]
-        ).collect()
-    }
+    out = {r["doc_id"]: r.asDict() for r in tag_topics_frame(df).collect()}
     # keyword hits counted per keyword (startup, software, algorithm),
     # not per occurrence (software twice still counts once)
     assert out[1]["n_technology"] == 3 and out[1]["topic"] == "technology"
@@ -715,7 +709,7 @@ def test_dsir_score_hand_computed(spark):
     NULL docs score 0.0 with n_grams 0."""
     import hashlib
 
-    from webxtract.curation import dsir_score_exprs
+    from webxtract.curation import dsir_scores_frame
 
     def bucket(g: str) -> int:
         return int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % 8
@@ -725,12 +719,9 @@ def test_dsir_score_hand_computed(spark):
     df = spark.createDataFrame(
         [(1, "a b c"), (2, "solo"), (3, None)], "doc_id long, text string"
     )
-    e = dsir_score_exprs(F.col("text"), lr, n_buckets=8)
     got = {
         r.doc_id: (r.n_grams, r.dsir_logweight)
-        for r in df.select(
-            "doc_id", *[v.alias(k) for k, v in e.items()]
-        ).collect()
+        for r in dsir_scores_frame(df, lr, n_buckets=8).collect()
     }
     assert got[1] == (2, exp)
     assert got[2] == (0, 0.0) and got[3] == (0, 0.0)
@@ -870,7 +861,7 @@ def test_classifier_score_matches_manual_sigmoid(spark):
     import hashlib
     import math
 
-    from webxtract.curation import classifier_score_expr, classifier_weights
+    from webxtract.curation import classifier_scores_frame, classifier_weights
 
     w = classifier_weights(64)
 
@@ -888,12 +879,9 @@ def test_classifier_score_matches_manual_sigmoid(spark):
 
     rows = [(1, "the quick brown fox"), (2, "a b a b a b"), (3, "solo")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    c = classifier_score_expr(F.col("text"), w)
     got = {
         r["doc_id"]: (r["n_feats"], r["clf_score"], r["clf_keep"])
-        for r in df.select("doc_id", c.alias("c"))
-        .select("doc_id", "c.*")
-        .collect()
+        for r in classifier_scores_frame(df, w).collect()
     }
     for doc_id, text in rows:
         n, s = manual(text)
@@ -906,13 +894,12 @@ def test_classifier_score_matches_manual_sigmoid(spark):
 def test_classifier_score_empty_and_null_text_agree(spark):
     """NULL and empty text take the same degenerate single-feature
     path (the '' token) — same score, no crash, no NULL verdict."""
-    from webxtract.curation import classifier_score_expr, classifier_weights
+    from webxtract.curation import classifier_scores_frame, classifier_weights
 
     df = spark.createDataFrame(
         [(1, None), (2, ""), (3, "   ")], "doc_id long, text string"
     )
-    c = classifier_score_expr(F.col("text"), classifier_weights(64))
-    rows = df.select("doc_id", c.alias("c")).select("doc_id", "c.*").collect()
+    rows = classifier_scores_frame(df, classifier_weights(64)).collect()
     scores = {r["doc_id"]: (r["n_feats"], r["clf_score"]) for r in rows}
     assert scores[1] == scores[2] == scores[3]
     assert all(r["clf_keep"] is not None for r in rows)

@@ -153,9 +153,12 @@ def test_outlinks_plan_is_narrow(spark):
     df = spark.createDataFrame(
         [("https://h.example/p", bytearray(html))], "url string, html binary"
     )
-    plan = outlinks(df)._jdf.queryExecution().executedPlan().toString()
+    from tests.test_plans import _plan, _python_node_names
+
+    out = outlinks(df)
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") <= 1  # exactly the distinct
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert _python_node_names(_plan(out)) == []
 
 
 def test_anchor_texts_zip_and_nofollow(spark):

@@ -31,6 +31,20 @@ def _nodes(plan: str, name: str) -> int:
     return len(set(re.findall(rf"\((\d+)\) {name}", plan)))
 
 
+_PYTHON_NODE = (
+    "MapInPandas|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas|MapInArrow"
+    "|ArrowEvalPython|BatchEvalPython"
+)
+
+
+def _python_node_names(plan: str) -> list[str]:
+    """Sorted names of the distinct physical nodes of an explain('formatted')
+    plan that run Python. A createDataFrame fixture's PythonRDD scan is
+    input, not Python evaluation, and is not counted."""
+    found = dict(re.findall(rf"\((\d+)\) ({_PYTHON_NODE})\b", plan))
+    return sorted(found.values())
+
+
 def test_q1_pushdown_pruning_partial_agg(spark):
     from webxtract.contract import q_tpch_q1_agg
 
@@ -246,13 +260,13 @@ def test_domain_filter_broadcast_anti(spark):
 def test_normalize_text_is_narrow_arrow(spark):
     """Text normalization is one narrow pass: the only exchange is the
     query's output orderBy, and the NFC step runs on the Arrow-batched
-    pandas path (ArrowEvalPython), never row-at-a-time Python."""
+    pandas path (ArrowEvalPython), never row-at-a-time Python: that one
+    node is the plan's only Python."""
     from webxtract.contract import q_normalize_text
 
     plan = _plan(q_normalize_text(spark, TESTDATA))
     assert _nodes(plan, "Exchange") == 1  # output sort only
-    assert "ArrowEvalPython" in plan
-    assert "BatchEvalPython" not in plan
+    assert _python_node_names(plan) == ["ArrowEvalPython"]
 
 
 def test_dedup_paragraphs_shuffle_budget(spark):
@@ -273,8 +287,7 @@ def test_dedup_paragraphs_shuffle_budget(spark):
     )
     assert agg_nodes >= 4
     assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
+    assert _python_node_names(plan) == []
 
 
 def test_top_tokens_partial_agg_topk(spark):
@@ -299,8 +312,7 @@ def test_dedup_incremental_hash_only_payload(spark):
 
     plan = _plan(q_dedup_incremental(spark, TESTDATA))
     assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
+    assert _python_node_names(plan) == []
     assert _nodes(plan, "Exchange") <= 4
     # map-side partial aggregation for the keep-first groups
     assert _nodes(plan, "HashAggregate") >= 2
@@ -388,7 +400,7 @@ def test_wet_records_is_narrow(spark):
     plan = _plan(q_wet_records(spark, TESTDATA))
     assert _nodes(plan, "Exchange") == 1
     assert "Join" not in plan and "Generate" not in plan
-    assert "Python" not in plan
+    assert _python_node_names(plan) == []
 
 
 def test_fix_mojibake_is_narrow(spark):
@@ -399,7 +411,7 @@ def test_fix_mojibake_is_narrow(spark):
     plan = _plan(q_fix_mojibake(spark, TESTDATA))
     assert _nodes(plan, "Exchange") == 1
     assert "Join" not in plan and "Generate" not in plan
-    assert "Python" not in plan
+    assert _python_node_names(plan) == []
 
 
 def test_postings_plan_bounded(spark):
@@ -411,20 +423,20 @@ def test_postings_plan_bounded(spark):
     plan = _plan(q_postings(spark, TESTDATA))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert "Python" not in plan
+    assert _python_node_names(plan) == []
     assert _nodes(plan, "Exchange") <= 6
 
 
 def test_tag_topics_is_narrow(spark):
-    """Topic tagging is one narrow projection (lit-array exists, no
-    rule-table join): zero joins/explodes/Python, one output-sort
-    exchange."""
+    """Topic tagging is one narrow mapInPandas kernel pass (no
+    rule-table join): exactly one Python node, zero joins/explodes, one
+    output-sort exchange."""
     from webxtract.contract import q_tag_topics
 
     plan = _plan(q_tag_topics(spark, TESTDATA))
     assert _nodes(plan, "Exchange") == 1
     assert "Join" not in plan and "Generate" not in plan
-    assert "Python" not in plan
+    assert _python_node_names(plan) == ["MapInPandas"]
 
 
 def test_value_percentiles_window_over_histogram(spark):
@@ -457,7 +469,7 @@ def test_host_cap_sample_two_phase_windows(spark):
     # salted phase ships at most cap rows per (host, salt) group
     assert _nodes(plan, "WindowGroupLimit") >= 2
     assert "Join" not in plan
-    assert "Python" not in plan
+    assert _python_node_names(plan) == []
 
 
 def test_bpe_pairs_vocab_reduce_then_topk(spark):
@@ -468,20 +480,21 @@ def test_bpe_pairs_vocab_reduce_then_topk(spark):
 
     plan = _plan(q_bpe_pairs(spark, TESTDATA))
     assert "TakeOrderedAndProject" in plan
-    assert "Join" not in plan and "Python" not in plan
+    assert "Join" not in plan and _python_node_names(plan) == []
     assert _nodes(plan, "HashAggregate") >= 3  # partial+final x2 aggs
     assert _nodes(plan, "Exchange") <= 2  # vocab reduce + pair reduce
 
 
 def test_dsir_scoring_is_narrow(spark):
-    """DSIR scoring ships the log-ratio table as ONE literal and folds
-    per document: no join, no aggregation shuffle beyond the output
-    sort, no Python."""
+    """DSIR scoring ships the log-ratio table with one mapInPandas kernel
+    that folds per document: exactly one Python node, no join, no
+    aggregation shuffle beyond the output sort (the bucket histogram is
+    collected before the scoring plan is built)."""
     from webxtract.contract import q_dsir_weights
 
     plan = _plan(q_dsir_weights(spark, TESTDATA))
     assert "Join" not in plan
-    assert "Python" not in plan
+    assert _python_node_names(plan) == ["MapInPandas"]
     assert _nodes(plan, "Exchange") == 1  # output sort only
     assert _nodes(plan, "HashAggregate") == 0
 
@@ -514,8 +527,8 @@ def test_semantic_dedup_blocked_kernel_no_lambdas(spark):
 
     plan = _plan(q_semantic_dedup(spark, TESTDATA))
     assert "CartesianProduct" not in plan
-    assert "FlatMapGroupsInPandas" in plan
-    assert "MapInPandas" in plan  # the assignment kernel
+    # the pair kernel and the assignment kernel, nothing else in Python
+    assert _python_node_names(plan) == ["FlatMapGroupsInPandas", "MapInPandas"]
     assert "Join" not in plan
     # exactly one hash exchange: group by cluster for the pair kernel
     # (the only other exchange is the output orderBy's range partition)
@@ -556,7 +569,7 @@ def test_split_sentences_is_narrow(spark):
 
     plan = _plan(q_split_sentences(spark, TESTDATA).limit(10))
     assert _nodes(plan, "Exchange") == 0
-    assert "Python" not in plan
+    assert _python_node_names(plan) == []
     assert "Join" not in plan
     assert _nodes(plan, "Generate") == 1  # the posexplode
 
@@ -589,19 +602,20 @@ def test_frontier_schedule_two_phase_salted_broadcast_delay(spark):
     assert "SortMergeJoin" not in plan
     # the robots fixture arrives via createDataFrame (a PythonRDD
     # scan); what must be absent is Python EVALUATION over the urls
-    assert "EvalPython" not in plan
+    assert _python_node_names(plan) == []
 
 
 def test_doc_containment_hash_only_shuffles_no_cartesian(spark):
-    """Containment detection never shuffles chunk text: the explode
-    emits (id, hash) before the set-dedup, the posting self-join keys
-    on the hash, and everything downstream carries two bigints. No
-    cartesian product, no sort-merge explosion on the text column."""
+    """Containment detection never shuffles chunk text: one mapInPandas
+    kernel emits each document's distinct (id, chunk_hash) set, the
+    posting buckets group on the hash, and everything downstream carries
+    bigints. Exactly one Python node, no cartesian product, no
+    sort-merge explosion on the text column."""
     from webxtract.contract import q_doc_containment
 
     plan = _plan(q_doc_containment(spark, TESTDATA))
     assert "CartesianProduct" not in plan
-    assert "EvalPython" not in plan
+    assert _python_node_names(plan) == ["MapInPandas"]
     # chunk text exists only below the hash projection: no Exchange
     # input schema may carry the chunk STRING column (`chunk#N`;
     # `chunk_hash#N` is the two-bigint payload and is expected)
@@ -616,7 +630,7 @@ def test_wat_records_is_narrow(spark):
 
     plan = _plan(q_wat_records(spark, TESTDATA).limit(5))
     assert _nodes(plan, "Exchange") == 0
-    assert "EvalPython" not in plan
+    assert _python_node_names(plan) == []
     assert "Join" not in plan
 
 
@@ -625,33 +639,20 @@ def test_robots_sitemaps_is_narrow(spark):
 
     plan = _plan(q_robots_sitemaps(spark, TESTDATA).limit(5))
     assert _nodes(plan, "Exchange") == 0
-    assert "EvalPython" not in plan
+    assert _python_node_names(plan) == []
 
 
 def test_classifier_score_is_narrow(spark):
-    """Model serving is one map pass: zero Python, zero joins — the
-    weight table is a literal. The OPERATOR adds zero exchanges (first
-    assert, on its own plan); the contract query adds only its output
-    orderBy (scan parallelism is the input layout's job — bench.py
-    re-chunks its fixture — not an in-query repartition)."""
-    from pyspark.sql import functions as F
-
+    """Model serving is one map pass: exactly one Python node (the
+    mapInPandas kernel, which carries the weight table), zero joins.
+    The contract query adds only its output orderBy (scan parallelism
+    is the input layout's job — bench.py re-chunks its fixture — not an
+    in-query repartition)."""
     from webxtract.contract import q_classifier_score
-    from webxtract.curation import classifier_score_expr, classifier_weights
-
-    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    op_plan = _plan(
-        df.select(
-            classifier_score_expr(F.col("text"), classifier_weights(64))
-        )
-    )
-    assert _nodes(op_plan, "Exchange") == 0
-    assert "EvalPython" not in op_plan
-    assert "Join" not in op_plan
 
     plan = _plan(q_classifier_score(spark, TESTDATA).limit(5))
     assert _nodes(plan, "Exchange") == 0  # orderBy+limit folds to TakeOrdered
-    assert "EvalPython" not in plan
+    assert _python_node_names(plan) == ["MapInPandas"]
     assert "Join" not in plan
 
 
@@ -662,7 +663,7 @@ def test_shard_assign_text_never_shuffles(spark):
 
     plan = _plan(q_shard_assign(spark, TESTDATA))
     assert "Join" not in plan
-    assert "EvalPython" not in plan
+    assert _python_node_names(plan) == []
     for m in re.finditer(r"\(\d+\) Exchange\n(?:.+\n)+?", plan):
         assert not re.search(r"\btext#\d", m.group(0))
 
@@ -672,7 +673,7 @@ def test_sitemap_entries_is_narrow(spark):
 
     plan = _plan(q_sitemap_entries(spark, TESTDATA).limit(5))
     assert _nodes(plan, "Exchange") == 0
-    assert "EvalPython" not in plan
+    assert _python_node_names(plan) == []
 
 
 def test_structured_metadata_is_narrow(spark):
@@ -680,4 +681,4 @@ def test_structured_metadata_is_narrow(spark):
 
     plan = _plan(q_structured_metadata(spark, TESTDATA).limit(5))
     assert _nodes(plan, "Exchange") == 0
-    assert "EvalPython" not in plan
+    assert _python_node_names(plan) == []

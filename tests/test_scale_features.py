@@ -690,20 +690,18 @@ def test_kmeans_assign_hand_computed(spark):
 def test_kmeans_assign_plan_is_narrow(spark):
     """Assignment is one narrow projection: centroids are a literal,
     so there is NO join, NO exchange, NO Python in the plan."""
-    import contextlib, io
+    from tests.test_plans import _plan, _python_node_names
+
     from webxtract.similarity import kmeans_assign
 
     df = spark.createDataFrame(
         [(1, [1.0, 0.0])], "vec_id long, embedding array<float>"
     )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        kmeans_assign(df, [[0.0, 0.0], [1.0, 1.0]]).explain("formatted")
-    plan = buf.getvalue()
+    plan = _plan(kmeans_assign(df, [[0.0, 0.0], [1.0, 1.0]]))
     assert "Join" not in plan and "Exchange" not in plan
     # the input fixture scan is a PythonRDD; the OPERATOR must add no
     # Python evaluation of its own
-    assert "EvalPython" not in plan and "MapInPandas" not in plan
+    assert _python_node_names(plan) == []
 
 
 def test_kmeans_update_hand_computed(spark):

@@ -53,57 +53,42 @@ def test_lang_id_clf_recovers_planted_languages(spark):
     """The trained hashed-NB classifier (offline fit, committed weight
     table) must classify text carrying a language's stopwords as that
     language — for every language it was trained on."""
-    from pyspark.sql import functions as F
-
-    from webxtract.textops import LANG_STOPWORDS, lang_id_clf_expr
+    from webxtract.textops import LANG_STOPWORDS, lang_id_clf_frame
 
     rows = [
         (i, f"filler words here {' '.join(words)}", lang)
         for i, (lang, words) in enumerate(LANG_STOPWORDS.items())
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    got = df.select(
-        "lang", lang_id_clf_expr(F.col("text")).alias("r")
-    ).collect()
+    got = lang_id_clf_frame(df, keep_cols=("doc_id", "lang")).collect()
     for r in got:
-        assert r["r"]["predicted_lang"] == r["lang"], r
+        assert r["predicted_lang"] == r["lang"], r
 
 
 def test_lang_id_clf_plan_is_narrow(spark):
-    """Serving is a literal-table fold: NO exchange, NO join, NO Python
-    in the plan — one map pass at any corpus size."""
-    import contextlib
-    import io
+    """Serving is one mapInPandas kernel pass: NO exchange, NO join, and
+    that kernel is the plan's only Python — one map pass at any corpus
+    size."""
+    from tests.test_plans import TESTDATA, _plan, _python_node_names
 
-    from pyspark.sql import functions as F
+    from webxtract.contract import q_lang_id_clf
 
-    from webxtract.textops import lang_id_clf_expr
-
-    df = spark.createDataFrame([(1, "the and of")], "doc_id long, text string")
-    out = df.select(lang_id_clf_expr(F.col("text")).alias("r"))
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
+    # orderBy + limit folds to TakeOrderedAndProject (no exchange)
+    plan = _plan(q_lang_id_clf(spark, TESTDATA).limit(5))
     assert "Exchange" not in plan
     assert "Join" not in plan
-    # no Python UDF evaluation in the operator (the fixture's
-    # createDataFrame source mentions applySchemaToPythonRDD — that is
-    # the test input, not the plan's evaluation path)
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert _python_node_names(plan) == ["MapInPandas"]
 
 
 def test_lang_id_clf_null_and_empty_text(spark):
     """NULL/empty text must not error (ANSI on) and must yield the
     deterministic tie-break/background argmax, not NULL."""
-    from pyspark.sql import functions as F
-
-    from webxtract.textops import lang_id_clf_expr
+    from webxtract.textops import lang_id_clf_frame
 
     df = spark.createDataFrame(
         [(1, None), (2, ""), (3, "   ")], "doc_id long, text string"
     )
-    got = df.select(lang_id_clf_expr(F.col("text")).alias("r")).collect()
+    got = lang_id_clf_frame(df).collect()
     for r in got:
-        assert r["r"]["predicted_lang"] is not None
-        assert r["r"]["lang_score"] is not None
+        assert r["predicted_lang"] is not None
+        assert r["lang_score"] is not None

@@ -451,15 +451,14 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_lang_id_clf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trained hashed-NB language ID (textops.lang_id_clf_expr) over
+    """Trained hashed-NB language ID (textops.lang_id_clf_frame) over
     documents with their OWN lang column's stopwords planted — the
     sandbox corpus text is language-neutral filler, so the plant gives
     the model a recoverable signal (same plant pattern as
     q_pii_redaction). The weight tables were fitted offline and
     deterministically by scripts/fit_lang_clf.py; serving is one
-    zero-shuffle literal-table fold per language. The DuckDB oracle
-    folds the identical bucket sequence through the identical weight
-    literals."""
+    zero-shuffle mapInPandas kernel. The DuckDB oracle folds the
+    identical bucket sequence through the identical weight literals."""
     from webxtract.textops import LANG_STOPWORDS, lang_id_clf_frame
 
     d = _t(spark, sf_dir, "documents")
@@ -774,9 +773,10 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR log importance weights: raw bucket histogram from the
     corpus (64-row collect), target distribution the closed form
-    p[b] = (b+1)/2080, log-ratio literal, then the zero-shuffle
-    per-document fold. Both engines build the same doubles from the
-    same rationals, so the in-order sums agree before the 6dp round."""
+    p[b] = (b+1)/2080, log-ratio table, then the zero-shuffle
+    per-document fold in the dsir_scores_frame kernel. Both engines
+    build the same doubles from the same rationals, so the in-order
+    sums agree before the 6dp round."""
     import math
 
     from webxtract.curation import bucket_counts, dsir_scores_frame
@@ -1457,9 +1457,8 @@ def q_script_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unicode-script profile per document: per-script character
     fractions + dominant script (first-wins ties in SCRIPTS order).
     Served by the mapInPandas classify-once kernel
-    (textops.script_signals_frame) — same columns/values as the
-    expression form, one character-classification pass instead of
-    7 regex-replace passes per document."""
+    (textops.script_signals_frame): one character-classification pass
+    per document."""
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return textops.script_signals_frame(d).orderBy("doc_id")
 

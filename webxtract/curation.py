@@ -928,11 +928,10 @@ def fix_mojibake_exprs(text: Column) -> dict[str, Column]:
 
 # Keyword-taxonomy topic tagging: the cheap domain/topic router used to
 # curate training mixtures (tag a crawl page news/tech/health/... so
-# mixture weights can be set per topic). Same expression machinery as
-# the reference's D2 keyword flags (document_type_detector.py:267-281)
-# generalized to an arbitrary taxonomy: per-topic hit count over a
-# literal keyword array, argmax with first-wins tie-break in taxonomy
-# order, 'other' when nothing matches.
+# mixture weights can be set per topic). The reference's D2 keyword
+# flags (document_type_detector.py:267-281) generalized to an arbitrary
+# taxonomy: per-topic keyword hit count, argmax with first-wins
+# tie-break in taxonomy order, 'other' when nothing matches.
 TOPIC_TAXONOMY: dict[str, tuple[str, ...]] = {
     "news": ("breaking news", "reported", "journalist", "press release",
              "correspondent", "editorial"),
@@ -953,57 +952,24 @@ TOPIC_TAXONOMY: dict[str, tuple[str, ...]] = {
 }
 
 
-def tag_topics_exprs(
-    text: Column, taxonomy: dict[str, tuple[str, ...]] | None = None
-) -> dict[str, Column]:
-    """Per-topic keyword hit counts plus the argmax topic. Pure
-    per-row expressions over constant-folded literal arrays — zero
-    shuffles/joins/Python, the same measured-cheaper form the
-    type-detection rule layer uses (lit-array + exists beats a
-    broadcast join at this table width). Hit = substring containment
-    on lowercased text, counted per keyword (not per occurrence).
-    NULL text counts zero everywhere and tags 'other'."""
-    tax = taxonomy or TOPIC_TAXONOMY
-    t = F.lower(F.coalesce(text, F.lit("")))
-    counts = {
-        topic: F.size(
-            F.filter(
-                F.array(*[F.lit(k) for k in kws]),
-                lambda kw: t.contains(kw),
-            )
-        )
-        for topic, kws in tax.items()
-    }
-    out: dict[str, Column] = {
-        f"n_{topic}": c.cast("long") for topic, c in counts.items()
-    }
-    # first-wins argmax as a single linear fold (exprs.first_wins_argmax
-    # — the chained-accumulator form this replaces duplicated every
-    # count subtree exponentially and hit a measured ~60x CPU cliff
-    # whenever evaluation fell to interpreted mode)
-    from webxtract.exprs import first_wins_argmax
-
-    out["topic"] = first_wins_argmax(
-        [(name, counts[name]) for name in tax], "other"
-    )
-    return out
-
-
 def tag_topics_frame(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     taxonomy: dict[str, tuple[str, ...]] | None = None,
 ) -> DataFrame:
-    """Frame-level form of ``tag_topics_exprs``: identical output
-    (id, n_<topic>..., topic) from ONE mapInPandas pass. The
-    expression form evaluates ~52 interpreted `contains` lambdas per
-    document (HOFs are CodegenFallback — measured 38 executor-CPU
-    core-s / 2.0 s wall at sf1.0); CPython's substring search does the
-    same containment test natively (~1 core-s). Semantics replicated
-    exactly: lowercase once, hit = substring containment counted per
-    keyword, argmax = first strictly-greater positive count in
-    taxonomy order, NULL text -> all zeros + 'other'."""
+    """Per-topic keyword hit counts plus the argmax topic: (id,
+    n_<topic>..., topic) from ONE mapInPandas pass — zero shuffles,
+    zero joins. Hit = substring containment on the lowercased text,
+    counted per keyword, not per occurrence. topic = the first topic in
+    taxonomy order with the strictly greatest positive count, 'other'
+    when nothing matches. NULL text counts zero everywhere and tags
+    'other'.
+
+    CPython's substring search does the containment test natively (~1
+    executor-CPU core-s at sf1.0, against 38 core-s / 2.0 s wall for
+    the ~52 interpreted `contains` lambdas per document of the
+    expression form this replaced)."""
     tax = taxonomy or TOPIC_TAXONOMY
     id_field = df.schema[id_col]
     topics = list(tax)
@@ -1165,7 +1131,7 @@ def bucket_counts(
     shuffle, so the reduce costs O(n_buckets * partitions) network
     regardless of corpus size. Callers collect the n_buckets rows
     (same class as the ANN query-vector fetch) to build the log-ratio
-    literal for dsir_score_exprs.
+    table for dsir_scores_frame.
 
     Round 6: the per-gram md5 + explode moved into a mapInPandas
     partial-count kernel — each task emits <= n_buckets (bucket,
@@ -1208,38 +1174,6 @@ def bucket_counts(
     )
 
 
-def dsir_score_exprs(
-    text: Column, log_ratio: list[float], n_buckets: int = 64
-) -> dict[str, Column]:
-    """Per-document DSIR log importance weight as a PURE projection:
-    the 64-entry log-ratio table ships as one array literal and the
-    score is a deterministic left fold over the document's bigrams
-    (addend order = gram order, so the DuckDB oracle's in-order
-    list_sum reproduces it bit-for-bit before the 6dp round). Zero
-    shuffles, zero joins, zero Python — scoring 10^12 documents is one
-    map pass. element_at's index is pmod(h, n)+1 in [1, n] by
-    construction (ANSI-safe)."""
-    from webxtract.textops import stable_hash60_expr, word_grams_expr
-
-    grams = word_grams_expr(F.coalesce(text, F.lit("")), 2)
-    lr = F.lit([float(x) for x in log_ratio])
-    score = F.aggregate(
-        grams,
-        F.lit(0.0),
-        lambda acc, g: acc
-        + F.element_at(
-            lr,
-            (F.pmod(stable_hash60_expr(g), F.lit(n_buckets)) + 1).cast(
-                "int"
-            ),
-        ),
-    )
-    return {
-        "n_grams": F.size(grams).cast("long"),
-        "dsir_logweight": F.round(score, 6),
-    }
-
-
 def dsir_scores_frame(
     df: DataFrame,
     log_ratio: list[float],
@@ -1247,16 +1181,25 @@ def dsir_scores_frame(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Frame-level form of ``dsir_score_exprs``: identical
-    (id, n_grams, dsir_logweight) from ONE mapInPandas pass. The
-    expression form folds an interpreted HOF lambda per bigram with a
-    per-gram md5 inside it (measured 24-27 executor-CPU core-s / 1.4 s
-    at sf1.0); CPython's hashlib md5 + a list lookup do the same per
-    gram at ~0.5 us (~1 core-s). Exactness: identical tokenization
-    (Java-semantics ASCII \\s split of space-trimmed text), identical
-    hash (low 15 hex chars of md5, 60-bit non-negative so ``%`` ==
-    pmod), float64 accumulation in gram order, Decimal HALF_UP round
-    (= Spark round())."""
+    """Per-document DSIR log importance weight: (id, n_grams,
+    dsir_logweight) from ONE mapInPandas pass — zero shuffles, zero
+    joins; scoring 10^12 documents is one map pass. The ``log_ratio``
+    table (one entry per bucket) ships with the kernel's closure.
+
+    Tokens are the ASCII-whitespace split (Java ``\\s``) of the
+    space-trimmed text; features are the word bigrams in document
+    order; bucket = low 15 hex digits of md5 (60-bit, non-negative, so
+    ``%`` == pmod) mod ``n_buckets``. dsir_logweight is the float64
+    left fold of ``log_ratio[bucket]`` in gram order (the DuckDB
+    oracle's in-order list_sum reproduces it bit for bit), rounded 6
+    dp via Decimal HALF_UP (= Spark ``round()``). n_grams counts the
+    bigrams; a document with fewer than two tokens, NULL text
+    included, has n_grams 0 and dsir_logweight 0.0.
+
+    hashlib md5 plus a list lookup cost ~0.5 us per gram (~1
+    executor-CPU core-s at sf1.0, against 24-27 core-s / 1.4 s for the
+    interpreted per-bigram lambda of the expression form this
+    replaced)."""
     id_field = df.schema[id_col]
     lr = [float(x) for x in log_ratio]
 
@@ -1315,12 +1258,30 @@ def classifier_scores_frame(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Frame-level form of ``classifier_score_expr``: identical
-    (id, n_feats, clf_score, clf_keep) from ONE mapInPandas pass
-    (expression form measured 30 CPU core-s / 1.5 s at sf1.0; ~1
-    core-s here). Same exactness contract as dsir_scores_frame; the
-    sigmoid uses libm exp on both sides and the score rounds 6 dp
-    before the keep comparison exactly as the expression form does."""
+    """FastText-style hashed linear quality classifier serving — the
+    model-based filter step of FineWeb-Edu / CCNet / Llama-style
+    curation (score every document with a cheap linear model, keep
+    above a threshold): (id, n_feats, clf_score, clf_keep) from ONE
+    mapInPandas pass — zero shuffles, zero joins, embarrassingly
+    parallel. ``weights`` (one per bucket; ``classifier_weights`` is
+    the deterministic stand-in for a trained model) ships with the
+    kernel's closure.
+
+    Features are all unigrams then all bigrams (document order,
+    multiplicity kept — fastText's word + wordNgrams=2 feature set) of
+    the ASCII-whitespace split of the space-trimmed text, hashed like
+    dsir_scores_frame into ``n_buckets``. logit = bias + mean of
+    ``weights[bucket]`` (float64 sum in feature order); clf_score =
+    sigmoid(logit) with libm exp, rounded 6 dp via Decimal HALF_UP
+    (= Spark ``round()``); clf_keep compares the ROUNDED score to
+    ``threshold``, so last-ulp exp() drift cannot flip the verdict
+    against the DuckDB oracle. The unigram leg always yields at least
+    one feature (NULL, empty and blank text tokenize to the single
+    empty token), so the mean never divides by zero and those rows
+    all score alike.
+
+    ~1 executor-CPU core-s at sf1.0, against 30 core-s / 1.5 s for the
+    interpreted fold of the expression form this replaced."""
     id_field = df.schema[id_col]
     w = [float(x) for x in weights]
     bias, threshold = float(bias), float(threshold)
@@ -1601,75 +1562,11 @@ def classifier_weights(n_buckets: int = 64) -> list[float]:
     doubles are EXACT and identical however each engine computes them
     (the k-means/LSH lesson: closed-form literals, never RNG). A real
     deployment swaps in trained fastText/logistic weights — the
-    serving plan below is identical either way."""
+    serving kernel (classifier_scores_frame) is identical either way."""
     return [
         ((37 * j) % n_buckets - (n_buckets / 2 - 0.5)) / n_buckets
         for j in range(n_buckets)
     ]
-
-
-def classifier_score_expr(
-    text: Column,
-    weights: list[float],
-    bias: float = -0.1,
-    n_buckets: int = 64,
-    threshold: float = 0.5,
-) -> Column:
-    """FastText-style hashed linear quality classifier serving — the
-    model-based filter step of FineWeb-Edu / CCNet / Llama-style
-    curation (score every document with a cheap linear model, keep
-    above a threshold) with the TRAINED model abstracted to a literal
-    weight table: features are all unigrams + all bigrams (document
-    order, multiplicity kept — fastText's word + wordNgrams=2 feature
-    set) hashed into ``n_buckets``; logit = bias + mean(w[bucket(f)])
-    (fastText averages feature vectors); score = sigmoid(logit);
-    ``clf_keep`` compares the 6dp-ROUNDED score to the threshold so
-    last-ulp libm drift in exp() cannot flip the verdict between
-    engines.
-
-    Scale shape: the weight table ships once as an array literal and
-    the whole classifier is a ZERO-shuffle, zero-join, zero-Python
-    deterministic left fold — scoring 10^12 documents is one map pass,
-    embarrassingly parallel, the same serving plan as dsir_score_exprs.
-    The unigram leg always yields >= 1 feature (empty text tokenizes
-    to ['']), so the mean never divides by zero — and both engines
-    agree on that degenerate feature by construction."""
-    from webxtract.exprs import bind_once
-    from webxtract.textops import (
-        stable_hash60_expr,
-        tokens_expr,
-        word_grams_expr,
-    )
-
-    padded = F.coalesce(text, F.lit(""))
-    feats = F.concat(tokens_expr(padded), word_grams_expr(padded, 2))
-    w = F.lit([float(x) for x in weights])
-
-    def mk(fts: Column) -> dict[str, Column]:
-        total = F.aggregate(
-            fts,
-            F.lit(0.0),
-            lambda acc, g: acc
-            + F.element_at(
-                w,
-                (F.pmod(stable_hash60_expr(g), F.lit(n_buckets)) + 1).cast(
-                    "int"
-                ),
-            ),
-        )
-        logit = F.lit(float(bias)) + total / F.size(fts).cast("double")
-        score = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6)
-        return {
-            "n_feats": F.size(fts).cast("long"),
-            "clf_score": score,
-            "clf_keep": score >= F.lit(float(threshold)),
-        }
-
-    # bind_once: the feature array feeds three outputs; without the
-    # bind Spark would re-derive the tokenize+gram tree per output
-    return bind_once(feats, lambda fts: F.struct(*[
-        v.alias(k) for k, v in mk(fts).items()
-    ]))
 
 
 def shard_assign(

@@ -39,10 +39,12 @@ without per-character lambdas.
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from webxtract.exprs import bind_once
 from webxtract.textops import FINGERPRINT_MOD, stable_hash60_expr, word_shingles_expr
 
 # (a, b) parameters for the K minhash permutations h_i(x) = (a*x+b) mod P.
@@ -68,38 +70,6 @@ def shingle_hashes_expr(text: Column, k: int = 2) -> Column:
             lambda s: stable_hash60_expr(s) % FINGERPRINT_MOD,
         )
     )
-
-
-def minhash_expr(text: Column, k: int = 2) -> Column:
-    """Array of MINHASH_K minhash values over word-k-shingles. The
-    shingle-hash array is bound once; each permutation is one
-    array_min(transform(...)) over it."""
-    def _perm(a: int, b: int):
-        # NB: pyspark derives lambda arity from the Python signature, so
-        # constants must be closed over, never default parameters.
-        return lambda h: (h * a + b) % FINGERPRINT_MOD
-
-    return bind_once(
-        shingle_hashes_expr(text, k),
-        lambda hs: F.array(
-            *[
-                F.array_min(F.transform(hs, _perm(a, b)))
-                for a, b in MINHASH_PARAMS
-            ]
-        ),
-    )
-
-
-def band_hashes_expr(minhashes: Column) -> Column:
-    """Combine each band's rows into one bucket key."""
-    rows_per_band = MINHASH_K // MINHASH_BANDS
-    bands = []
-    for b in range(MINHASH_BANDS):
-        acc = F.lit(0).cast("bigint")
-        for r in range(rows_per_band):
-            acc = (acc * 1_000_003 + F.element_at(minhashes, b * rows_per_band + r + 1)) % FINGERPRINT_MOD
-        bands.append(acc)
-    return F.array(*bands)
 
 
 def simhash_expr(text: Column, bits: int = SIMHASH_BITS) -> Column:
@@ -612,14 +582,22 @@ def ngram_jaccard_pairs(
 # ------------------------------------------------- substring-level dedup
 
 
-def chunk_spans_expr(text: Column, boundary_mod: int = 16) -> Column:
-    """Content-defined chunking of whitespace tokens:
-    ``array<struct<idx:int, n_tok:int, chunk:string>>``.
+_WS = re.compile(r"\s+", re.ASCII)  # Java regex \s: ASCII whitespace
 
-    A chunk boundary falls AFTER token *i* whenever
-    ``stable_hash60(token_i) % boundary_mod == 0`` — boundaries depend
-    only on local content, never on position, so a passage duplicated
-    across documents (or at a different offset in the same document)
+
+def chunk_spans(
+    text: str | None, boundary_mod: int = 16
+) -> list[tuple[int, int, str]]:
+    """Content-defined chunking of whitespace tokens: ``[(idx, n_tok,
+    chunk)]`` with 1-based ``idx`` and the chunk's tokens joined by
+    single spaces.
+
+    Tokens are the ASCII-whitespace split of the space-trimmed text. A
+    chunk boundary falls AFTER token *i* whenever ``md5-60(token_i) %
+    boundary_mod == 0`` (md5-60 = the low 15 hex digits of md5, the
+    ``stable_hash60_expr`` hash) — boundaries depend only on local
+    content, never on position, so a passage duplicated across
+    documents (or at a different offset in the same document)
     produces byte-identical interior chunks. This is the
     position-independence trick that lets substring-level dedup (the
     "train-data repeated-passage" problem, Lee et al. 2022's suffix-
@@ -627,84 +605,15 @@ def chunk_spans_expr(text: Column, boundary_mod: int = 16) -> Column:
     fixed-stride windows would misalign across documents, content-
     defined boundaries cannot. Expected chunk length ~= boundary_mod
     tokens; edge chunks of a shared passage differ (documented recall
-    loss vs exact maximal-repeat detection).
+    loss vs exact maximal-repeat detection). NULL, empty and
+    space-only text yield no chunks.
 
-    Pure expression layer: tokens bound once per row, one md5 per
-    token, no UDF, no shuffle.
-    """
-    from webxtract.exprs import bind_once
-    from webxtract.textops import tokens_expr
-
-    def hash60(s: Column) -> Column:
-        return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
-
-    def build(toks: Column) -> Column:
-        # bind_once at every level: HOF expressions are interpreted
-        # (CodegenFallback, no CSE), so a subtree referenced inside a
-        # lambda re-evaluates at EVERY reference site. Without the
-        # inner binding, each element_at(starts/ends, j) re-ran the
-        # full per-token md5 boundary filter — O(chunks x tokens)
-        # hashes per document (measured 64.9s for the rewrite query at
-        # sf0.1; the round-3 shingle lesson verbatim).
-        n = F.size(toks)
-        bidx = F.filter(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: hash60(F.element_at(toks, i)) % boundary_mod == 0,
-        )
-        bounds = F.struct(
-            F.concat(F.array(F.lit(1)), F.transform(bidx, lambda b: b + 1)).alias(
-                "s"
-            ),
-            F.concat(bidx, F.array(n)).alias("e"),
-        )
-        from webxtract.exprs import bind_once as _bind
-
-        return _bind(
-            bounds,
-            lambda se: F.transform(
-                F.sequence(F.lit(1), F.size(se["s"])),
-                lambda j: F.struct(
-                    j.cast("int").alias("idx"),
-                    (
-                        F.element_at(se["e"], j) - F.element_at(se["s"], j) + 1
-                    ).cast("int").alias("n_tok"),
-                    F.array_join(
-                        F.slice(
-                            toks,
-                            F.element_at(se["s"], j),
-                            F.element_at(se["e"], j)
-                            - F.element_at(se["s"], j)
-                            + 1,
-                        ),
-                        " ",
-                    ).alias("chunk"),
-                ),
-            ),
-        )
-
-    empty = F.array().cast(
-        "array<struct<idx:int,n_tok:int,chunk:string>>"
-    )
-    return F.when(
-        F.coalesce(F.trim(text), F.lit("")) == "", empty
-    ).otherwise(bind_once(tokens_expr(text), build))
-
-
-def _py_chunk_spans(text, boundary_mod: int):  # noqa: ANN001, ANN202
-    """CPython twin of ``chunk_spans_expr``: [(idx, n_tok, chunk)].
-    Identical semantics — space-only trim emptiness guard, Java-ASCII
-    \\s tokenization, boundary after token i when md5-60(token_i) %
-    boundary_mod == 0, chunks joined by single spaces, 1-based idx."""
-    import hashlib
-    import re
-
-    t = text or ""
-    if t.strip(" ") == "":
+    Runs inside the chunk kernels (``_chunk_meta_frame``,
+    ``dedup_chunks``, ``doc_containment``), one md5 per token."""
+    t = (text or "").strip(" ")
+    if t == "":
         return []
-    ws = _py_chunk_spans._ws
-    if ws is None:
-        ws = _py_chunk_spans._ws = re.compile(r"\s+", re.ASCII)
-    toks = ws.split(t.strip(" "))
+    toks = _WS.split(t)
     n = len(toks)
     starts, ends = [1], []
     for i in range(1, n):
@@ -721,34 +630,30 @@ def _py_chunk_spans(text, boundary_mod: int):  # noqa: ANN001, ANN202
     ]
 
 
-_py_chunk_spans._ws = None
-
-
 def _chunk_meta_frame(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     boundary_mod: int = 16,
 ) -> DataFrame:
-    """(id, idx, n_tok, chunk_hash) — the chunk META rows all three
-    chunk operators start from, produced by ONE mapInPandas pass
-    instead of the HOF chunker + explode + per-chunk md5 expression
-    (higher-order lambdas evaluate interpreted — this meta branch was
-    25-40 executor-CPU core-s per chunk query at sf1.0, ~2 core-s
-    here). Chunk text never leaves the task; only (id, idx, n_tok,
-    hash60) rows come back — the same two-bigint-ish shuffle payload
-    contract as before."""
+    """(id, idx, n_tok, chunk_hash) — one row per ``chunk_spans`` chunk,
+    with chunk_hash = md5-60 of the chunk text: the chunk META rows
+    duplicate_chunks and dedup_chunks start from, produced by ONE
+    mapInPandas pass (~2 executor-CPU core-s per chunk query at sf1.0,
+    against 25-40 core-s for the interpreted chunker + explode +
+    per-chunk md5 expression this replaced). Chunk text never leaves
+    the task; only (id, idx, n_tok, hash) rows come back, so no
+    exchange downstream carries text. NULL, empty and space-only
+    documents emit no rows."""
     id_field = docs.schema[id_col]
 
     def _kernel(batches):  # noqa: ANN001, ANN202
-        import hashlib
-
         import pandas as pd
 
         for pdf in batches:
             ids, idxs, ntoks, hs = [], [], [], []
             for rid, t in zip(pdf[id_col], pdf[text_col]):
-                for j, ntok, chunk in _py_chunk_spans(t, boundary_mod):
+                for j, ntok, chunk in chunk_spans(t, boundary_mod):
                     ids.append(rid)
                     idxs.append(j)
                     ntoks.append(ntok)
@@ -801,9 +706,9 @@ def duplicate_chunks(
     tokens that occurs more than once corpus-wide. The short-chunk
     floor keeps trivial fragments ("the end") out of the dup set.
 
-    Scale: one explode to (id, idx, n_tok, hash) — the chunk TEXT never
-    leaves its partition; the only shuffle carries the 60-bit hash plus
-    two ints, with map-side partial aggregation. No pair join anywhere,
+    Scale: one kernel pass to (id, idx, n_tok, hash) — the chunk TEXT
+    never leaves its partition; the only shuffle carries the 60-bit
+    hash plus two ints, with map-side partial aggregation. No pair join anywhere,
     so a million-fold-duplicated boilerplate chunk costs one group, not
     a quadratic bucket."""
     ch = _chunk_meta_frame(docs, id_col, text_col, boundary_mod)
@@ -838,9 +743,9 @@ def dedup_chunks(
     per-document drop lists (tiny: only documents that lose a chunk).
     Scan 2 joins the drop lists back by id (broadcast-eligible,
     unforced — AQE degrades to shuffle join instead of OOM when the
-    corpus is pathologically duplicated) and rebuilds the text with a
-    pure HOF filter over the same deterministic chunking. The rewrite
-    itself is exchange-free."""
+    corpus is pathologically duplicated) and rebuilds the text in one
+    mapInPandas kernel over the same ``chunk_spans`` chunking. The
+    rewrite itself is exchange-free."""
     from pyspark.sql.window import Window
 
     ch = _chunk_meta_frame(docs, id_col, text_col, boundary_mod)
@@ -868,7 +773,7 @@ def dedup_chunks(
             for rid, t, drop in zip(
                 pdf["id"], pdf[text_col], pdf["drop_idx"]
             ):
-                spans = _py_chunk_spans(t, boundary_mod)
+                spans = chunk_spans(t, boundary_mod)
                 if drop is None or (
                     hasattr(drop, "__len__") and len(drop) == 0
                 ):
@@ -1014,15 +919,13 @@ def doc_containment(
     id_field = docs.schema[id_col]
 
     def _kernel(batches):  # noqa: ANN001, ANN202
-        import hashlib
-
         import pandas as pd
 
         for pdf in batches:
             ids, hs, ns = [], [], []
             for rid, t in zip(pdf[id_col], pdf[text_col]):
                 seen = set()
-                for _j, ntok, chunk in _py_chunk_spans(t, boundary_mod):
+                for _j, ntok, chunk in chunk_spans(t, boundary_mod):
                     if ntok >= min_tok:
                         seen.add(
                             int(

@@ -84,15 +84,16 @@ def get_spark(
         # which deserializes its own copy of the (large) task binary —
         # size generously on the 128 GiB sandbox
         "spark.driver.memory": driver_mem,
-        # Throughput GC: the interpreted rule layer (HOF expressions)
-        # allocates heavily, and G1's pause-time-targeted collection
-        # left stage-level GC time equal to task CPU time (event-log
+        # Throughput GC: G1's pause-time-targeted collection left
+        # stage-level GC time equal to task CPU time (event-log
         # measured: 42 core-s GC vs 39 core-s CPU on the validator
         # stage). ParallelGC on the same 100k-doc pipeline: 112s -> 50s
         # typical, 20s best (ZGC measures similarly; ParallelGC is the
-        # standard batch-throughput choice). Executor option is a no-op
-        # in local mode but documents the cluster setting (a real
-        # executor would pin -Xms to spark.executor.memory the same way).
+        # standard batch-throughput choice). Measured while the document
+        # rules were still Catalyst expressions; not re-measured since.
+        # Executor option is a no-op in local mode but documents the
+        # cluster setting (a real executor would pin -Xms to
+        # spark.executor.memory the same way).
     }
     if extra_conf:
         conf.update(extra_conf)
@@ -109,29 +110,18 @@ def get_spark(
     # on a real cluster and kill every executor at launch. An explicit
     # extraJavaOptions in extra_conf wins.
     # -XX:NewRatio=1: with adaptive sizing off, ParallelGC's static
-    # default (NewRatio=2) gives the young gen only 1/3 of the heap,
-    # and the details-parity expression layer allocates almost entirely
-    # short-lived rows — measured on the 100k-doc pipeline (min-of-5,
-    # quiet box): warm wall 32.2s -> 22.7-25.2s and per-pass GC
-    # 250-600 -> 75-113 core-s just from giving the young gen half the
-    # heap. Fixed -Xmn24g/-Xmn28g cut GC further in single passes but
+    # default (NewRatio=2) gives the young gen only 1/3 of the heap —
+    # measured on the 100k-doc pipeline (min-of-5, quiet box): warm
+    # wall 32.2s -> 22.7-25.2s and per-pass GC 250-600 -> 75-113 core-s
+    # just from giving the young gen half the heap (measured while the
+    # document rules were still Catalyst expressions; not re-measured
+    # since). Fixed -Xmn24g/-Xmn28g cut GC further in single passes but
     # did not beat the walls and leave the old gen too small for the
     # resident broadcast/task state — rejected.
-    def _gc_opts(mem: str) -> str:
-        # WEBXTRACT_GC_OPTS overrides the whole option string (the A/B
-        # hook used for the round-6 GC matrix in BENCH/BASELINE.md and
-        # the cluster-side escape hatch).
-        env = os.environ.get("WEBXTRACT_GC_OPTS")
-        if env:
-            return env
-        return (
-            f"-XX:+UseParallelGC -Xms{mem} -XX:-UseAdaptiveSizePolicy"
-            " -XX:NewRatio=1"
-        )
-
     conf.setdefault(
         "spark.driver.extraJavaOptions",
-        _gc_opts(conf.get("spark.driver.memory", driver_mem)),
+        f"-XX:+UseParallelGC -Xms{conf['spark.driver.memory']}"
+        " -XX:-UseAdaptiveSizePolicy -XX:NewRatio=1",
     )
     # executors: pin -Xms ONLY when the executor heap is explicitly
     # configured here — this process cannot see cluster-side defaults

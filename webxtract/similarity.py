@@ -40,31 +40,6 @@ def _plane_weight(h: int, i: int) -> float:
 EMBED_DIM = 64
 
 
-def dot_expr(a: Column, b: Column) -> Column:
-    """Generic (variable-length) HOF dot product — kept for arrays of
-    unknown dimension. For the fixed-dim corpus embeddings use the
-    string-built unrolled kernels below: Spark evaluates zip_with/
-    aggregate lambdas INTERPRETED at ~1us/element, which made every
-    cosine-bearing operator scan-CPU-bound at volume."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm_expr(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
-        )
-    )
-
-
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 def _elem(sql: str, i: int) -> str:
     # try_element_at: 1-based, NULL (never an ANSI throw) out of range
     return f"CAST(try_element_at({sql}, {i + 1}) AS DOUBLE)"
@@ -212,19 +187,6 @@ def lsh_topk(
         .orderBy(F.desc("cosine"), F.col(id_col))
         .limit(k)
     )
-
-
-def band_bucket_expr(
-    vec_sql: str, dim: int, band: int, planes_per_band: int
-) -> Column:
-    """Bucket id for one band: planes band*P .. band*P+P-1 of the shared
-    deterministic plane family. ``vec_sql`` is the vector column's SQL
-    name/expression (see _proj_sql for why this is string-built)."""
-    terms = [
-        f"IF({_proj_sql(vec_sql, band * planes_per_band + j, dim)} >= 0, {2 ** j}, 0)"
-        for j in range(planes_per_band)
-    ]
-    return F.expr(" + ".join(terms))
 
 
 def near_dup_pairs(
@@ -388,8 +350,8 @@ def kmeans_assign(
     behind semantic-dedup / SemDeDup-style curation (cluster the
     corpus, then prune within clusters): assign every vector to its
     nearest centroid by squared L2, ties to the lower centroid index.
-    Returns (id, cluster, dist2) with dist2 rounded to 6 dp (the same
-    float64-stability contract as cosine_expr's oracle).
+    Returns (id, cluster, dist2) with dist2 rounded to 6 dp (the
+    float64-stability contract shared with the DuckDB oracle).
 
     Scale shape: centroids ship as ONE array<array<double>> literal
     (a single py4j Literal, not k*dim Column objects — the round-3
@@ -417,9 +379,9 @@ def assign_expr(v: Column, centroids: list[list[float]]) -> Column:
     a string-built unrolled variant (8*64*2 inline literals) was
     measured SLOWER (kmeans_update 4-5.8s), because here the tree
     feeds a generator rewrite that re-walks it; the unrolled kernels
-    win only where expressions are evaluated per candidate PAIR or
-    cloned into join-side filters (see dot_sql / assign_clusters,
-    which is also the form to use for k beyond ~16)."""
+    win only where expressions are evaluated per candidate PAIR (see
+    dot_sql). The literal grows as k*dim, so at k beyond ~16 assign in
+    a kernel instead, as semantic_dedup_pairs does."""
     cent = F.lit([[float(x) for x in c] for c in centroids])
     scored = F.transform(
         cent,
@@ -438,71 +400,6 @@ def assign_expr(v: Column, centroids: list[list[float]]) -> Column:
         ),
     )
     return F.array_min(scored)
-
-
-def assign_clusters(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Broadcast-join form of nearest-centroid assignment — same
-    (round-6dp dist2, lowest-cluster-wins) contract as assign_expr,
-    different physical shape: centroids become a k-row broadcast
-    DataFrame, each vector meets all k via BroadcastNestedLoopJoin,
-    and min(struct(dist2, cid)) per id picks the winner with map-side
-    partial aggregation (the k candidate rows for an id are produced
-    consecutively in one task, so the combine collapses them BEFORE
-    the shuffle — the exchange ships one (id, vector, cluster) row
-    per document, not k).
-
-    Why not assign_expr here: the literal form inlines a k*dim
-    constant into the expression tree, and any operator that makes
-    the optimizer COPY that tree (a self-join's inferred isnotnull
-    pushdown, as in semantic_dedup_pairs) multiplies a megabyte-scale
-    plan — at k=64 the plan alone cost more than the data pass
-    (measured: 15-30s warm at 2.2k rows vs <1s in this form). The
-    join form is also the only one that survives k in the thousands,
-    the regime SemDeDup actually runs at (k ~ N/target).
-
-    The distance itself is an UNROLLED left-to-right sum of
-    (v[i]-cv[i])^2 terms — plain codegen arithmetic, not a zip_with/
-    aggregate HOF: Spark evaluates higher-order-function lambdas
-    interpreted (~1us per element), which at k*dim*N elements was the
-    measured bottleneck (9M lambda evals ~ 10 core-s at sf0.1), and
-    the assignment projection runs at INPUT parallelism, before any
-    shuffle can widen it. Unrolling is possible precisely because the
-    join form makes cv a column: the term count is dim, independent
-    of k. Left-to-right association reproduces the oracle's in-order
-    1..dim float64 summation exactly.
-
-    Returns (id, v, cluster)."""
-    spark = df.sparkSession
-    dim = len(centroids[0])
-    cent = spark.createDataFrame(
-        [(j, [float(x) for x in c]) for j, c in enumerate(centroids)],
-        "cid bigint, cv array<double>",
-    )
-    diffs = [f"({_elem('v', i)} - {_elem('cv', i)})" for i in range(dim)]
-    d2 = F.expr(
-        "round(" + " + ".join(f"{d} * {d}" for d in diffs) + ", 6)"
-    )
-    return (
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .join(F.broadcast(cent))
-        .select(
-            "id",
-            "v",
-            F.struct(d2.alias("dist2"), F.col("cid").alias("cluster")).alias(
-                "__s"
-            ),
-        )
-        .groupBy("id")
-        .agg(
-            F.any_value("v").alias("v"),
-            F.min("__s").getField("cluster").alias("cluster"),
-        )
-    )
 
 
 def kmeans_update(
@@ -578,8 +475,7 @@ def semantic_dedup_pairs(
     broadcast-nested-loop join + groupBy(id) argmin, whose unrolled
     128-term distance evaluated interpreted (HotSpot 8 KB JIT cap,
     ~19 CPU core-s at sf1.0) and whose argmin exchange shipped every
-    vector once more. assign_clusters (the JVM broadcast-join form)
-    remains for callers at k beyond literal-table sizes.
+    vector once more.
 
     The pair stage is a per-cluster vectorized NumPy kernel
     (applyInPandas), not a JVM self-join. The round-5 self-join form

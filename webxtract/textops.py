@@ -1,10 +1,17 @@
 """Text-analysis operators for large-scale training-data pipelines:
 language ID, quality scoring, token counting, document fingerprinting.
 
-All pure built-in column expressions (JVM-side — no Python anywhere; the
-higher-order-function pieces evaluate interpreted, so every shared
-subexpression is bound once per row via webxtract.exprs.bind_once). Each
-has an exact DuckDB-SQL twin in webxtract.oracles for the driver check.
+Two implementation forms, one per operator:
+
+- built-in column expressions (JVM-side; the higher-order-function
+  pieces evaluate interpreted, so every shared subexpression is bound
+  once per row via webxtract.exprs.bind_once);
+- ``*_frame`` operators (``lang_id_clf_frame``, ``script_signals_frame``):
+  one ``mapInPandas`` kernel per batch, for the scorers whose
+  expression form was an interpreted per-token or per-character cliff.
+
+Each operator has an exact DuckDB-SQL twin in webxtract.oracles
+(checked by scripts/oracle_check.py).
 """
 
 from __future__ import annotations
@@ -53,7 +60,6 @@ LANG_ORDER = [
     "tr", "pl", "sv", "id", "hi",
 ]
 
-FINGERPRINT_BASE = 31
 FINGERPRINT_MOD = 2_147_483_647  # 2^31 - 1
 
 
@@ -64,10 +70,6 @@ def tokens_expr(text: Column) -> Column:
 
 def token_count_expr(text: Column) -> Column:
     return F.size(tokens_expr(text))
-
-
-def distinct_token_count_expr(text: Column) -> Column:
-    return F.size(F.array_distinct(tokens_expr(text)))
 
 
 # GPT-2-style pre-tokenizer pattern (contractions, letter runs, digit
@@ -221,117 +223,6 @@ def word_grams_expr(text: Column, k: int) -> Column:
     )
 
 
-def _run_length_cover_expr(sorted_grams: Column) -> Column:
-    """max over runs of (run length * gram length), lexicographic
-    (count, gram-length) tie-break, over a SORTED gram array. The O(T)
-    phase is a boundary filter of compares only — no per-element struct
-    allocation (a struct-accumulator aggregate measured ~3x slower)."""
-    from webxtract.exprs import bind_once
-
-    def scan(s: Column) -> Column:
-        n = F.size(s)
-        bounds = F.filter(
-            F.sequence(F.lit(1), n),
-            lambda i: (i == 1) | (F.element_at(s, i) != F.element_at(s, i - 1)),
-        )
-        nb = F.size(bounds)
-        ends = F.concat(F.slice(bounds, 2, nb - 1), F.array(n + 1))
-        runs = F.zip_with(
-            bounds,
-            ends,
-            lambda a, b: F.struct(
-                (b - a).cast("int").alias("cnt"),
-                F.length(F.element_at(s, a)).alias("glen"),
-            ),
-        )
-        best = F.array_max(runs)
-        return F.when(
-            n > 0, best["cnt"].cast("bigint") * best["glen"].cast("bigint")
-        ).otherwise(F.lit(0).cast("bigint"))
-
-    return bind_once(sorted_grams, scan)
-
-
-def top_gram_cover_expr(text: Column, k: int) -> Column:
-    """count(most frequent word k-gram) * len(that gram) — the Gopher
-    repetition filter's core statistic — computed DOCUMENT-LOCALLY as
-    one expression: sort the gram multiset, then run-length scan it,
-    keeping the lexicographic max of (count, gram-length) — the same
-    tie-break as a groupBy + max-struct form, with zero shuffles
-    instead of an explode + 2 aggregations + join per k. O(T log T)
-    sort + O(T) scan per document, all JVM-side. Empty/too-short
-    text -> 0."""
-    return _run_length_cover_expr(F.array_sort(word_grams_expr(text, k)))
-
-
-def top_gram_covers_expr(text: Column, ns: tuple) -> Column:
-    """Struct of ``top_gram_cover_expr`` for every n in ``ns``,
-    tokenizing the text ONCE (the per-k form re-splits per k — 3
-    tokenizations of every document for the standard {2,3,4})."""
-    from webxtract.exprs import bind_once
-
-    def build(toks: Column) -> Column:
-        def gram_lambda(k: int):
-            # factory closure: pyspark derives lambda arity from the
-            # signature, so `lambda i, k=k:` would be passed two Columns
-            return lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j) for j in range(k)]
-            )
-
-        covers = []
-        for k in ns:
-            grams = F.when(
-                F.size(toks) >= k,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(toks) - (k - 1)),
-                    gram_lambda(k),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-            covers.append(
-                _run_length_cover_expr(F.array_sort(grams)).alias(f"c{k}")
-            )
-        return F.struct(*covers)
-
-    return bind_once(tokens_expr(text), build)
-
-
-def line_repetition_exprs(text: Column) -> dict[str, Column]:
-    """Gopher-style intra-document line-repetition signals, pure
-    expressions: fraction of lines that are duplicate occurrences, and
-    fraction of line characters inside those duplicate occurrences
-    (beyond each line's first occurrence)."""
-    from webxtract.exprs import bind_once
-
-    def build(p: Column) -> Column:
-        lines, uniq = p["lines"], p["uniq"]
-        n = F.size(lines)
-        nd = F.size(uniq)
-        chars = F.aggregate(lines, F.lit(0), lambda a, l: a + F.length(l))
-        uchars = F.aggregate(uniq, F.lit(0), lambda a, l: a + F.length(l))
-        return F.struct(
-            F.when(n > 0, (n - nd) / n.cast("double")).otherwise(0.0).alias(
-                "dup_line_frac"
-            ),
-            F.when(chars > 0, (chars - uchars) / chars.cast("double"))
-            .otherwise(0.0)
-            .alias("dup_line_char_frac"),
-        )
-
-    s = bind_once(
-        F.struct(
-            F.split(F.coalesce(text, F.lit("")), r"\n").alias("lines"),
-            F.array_distinct(
-                F.split(F.coalesce(text, F.lit("")), r"\n")
-            ).alias("uniq"),
-        ),
-        build,
-    )
-    return {
-        "dup_line_frac": F.round(s["dup_line_frac"], 6),
-        "dup_line_char_frac": F.round(s["dup_line_char_frac"], 6),
-    }
-
-
 def lang_id_expr(text: Column) -> Column:
     """Stopword-overlap language ID: score per language = number of its
     stopwords present as tokens; argmax with fixed tie-break order.
@@ -371,96 +262,31 @@ def lang_id_expr(text: Column) -> Column:
     )
 
 
-def lang_id_clf_expr(text: Column) -> Column:
-    """Trained hashed-NB language ID — the model-based upgrade of the
-    ``lang_id_expr`` stopword toy (round-4 review task #7), served the
-    same way ``curation.classifier_score_expr`` serves its quality
-    model: the per-language log-odds weight tables (fitted offline and
-    deterministically by ``scripts/fit_lang_clf.py``, committed as
-    ``webxtract/lang_clf.py``) ship as plan literals, and scoring is a
-    ZERO-shuffle, zero-join, zero-Python projection — one map pass at
-    any corpus size.
-
-    Per row: tokens -> ONE md5-60 bucket per token (bound once — the
-    hash is the costly step and must not be re-evaluated per language),
-    then per language one literal-table fold
-    ``score = round(mean(w_lang[bucket]), 6)`` (6dp round BEFORE the
-    argmax so last-ulp libm drift cannot flip the winner between
-    engines), argmax with the fixed LANG_ORDER tie-break. Returns a
-    struct ``(predicted_lang string, lang_score double)``."""
-    from webxtract.exprs import bind_once
-    from webxtract.lang_clf import (
-        LANG_CLF_BUCKETS,
-        LANG_CLF_LANGS,
-        LANG_CLF_WEIGHTS,
-    )
-
-    toks = tokens_expr(F.lower(F.coalesce(text, F.lit(""))))
-    buckets = F.transform(
-        toks,
-        lambda t: (
-            F.pmod(stable_hash60_expr(t), F.lit(LANG_CLF_BUCKETS)) + 1
-        ).cast("int"),
-    )
-
-    def argmax(s: Column, best: Column) -> Column:
-        chain = None
-        for lang in LANG_CLF_LANGS:
-            cond = s[lang] == best
-            chain = F.when(cond, lang) if chain is None else chain.when(cond, lang)
-        return chain
-
-    def scores(bs: Column) -> Column:
-        n = F.size(bs).cast("double")
-        cols = []
-        for lang in LANG_CLF_LANGS:
-            # ONE parsed SQL array literal per language: F.lit(pylist)
-            # marshals the 256 doubles element-wise over py4j (measured
-            # 2.2 s of DRIVER time per plan build for the 16 tables vs
-            # 3 ms/table as an F.expr string — BASELINE.md round-3
-            # lesson applied to a trained table); execution is
-            # identical, the optimizer constant-folds either form to
-            # the same array Literal.
-            w = F.expr(
-                "array("
-                + ",".join(f"{float(x)!r}D" for x in LANG_CLF_WEIGHTS[lang])
-                + ")"
-            )
-            s = F.aggregate(
-                bs, F.lit(0.0), lambda acc, b: acc + F.element_at(w, b)
-            )
-            cols.append(F.round(s / n, 6).alias(lang))
-        return F.struct(*cols)
-
-    return bind_once(
-        buckets,
-        lambda bs: bind_once(
-            scores(bs),
-            lambda s: bind_once(
-                F.greatest(*[s[lang] for lang in LANG_CLF_LANGS]),
-                lambda best: F.struct(
-                    argmax(s, best).alias("predicted_lang"),
-                    best.alias("lang_score"),
-                ),
-            ),
-        ),
-    )
-
-
 def lang_id_clf_frame(
     df: "DataFrame",  # noqa: F821
     text_col: str = "text",
     keep_cols: tuple[str, ...] = ("doc_id",),
 ) -> "DataFrame":  # noqa: F821
-    """Frame-level form of ``lang_id_clf_expr``: identical
-    (keep_cols..., predicted_lang, lang_score) from ONE mapInPandas
-    pass. The expression form hashes every token with an interpreted
-    HOF lambda and folds 16 literal weight tables per document
-    (measured 18-19 executor-CPU core-s / 1.4 s at sf1.0; ~1 core-s
-    here). Exactness: identical lowercase + tokenization, identical
-    md5-60 bucket, per-language float64 sum in token order,
-    score = Decimal-HALF_UP round(sum/n, 6) (= Spark round()),
-    greatest + first-wins-equal argmax in LANG_CLF_LANGS order."""
+    """Trained hashed-NB language ID — the model-based upgrade of the
+    ``lang_id_expr`` stopword toy: (keep_cols..., predicted_lang,
+    lang_score) from ONE mapInPandas pass, zero shuffles, zero joins.
+    The per-language log-odds weight tables are fitted offline and
+    deterministically by ``scripts/fit_lang_clf.py`` and committed as
+    ``webxtract/lang_clf.py``; they ship to the workers with the
+    kernel's closure.
+
+    Per row: lowercase, trim spaces, split on ASCII whitespace (Java
+    ``\\s``), one md5-60 bucket per token (low 15 hex digits of md5 mod
+    LANG_CLF_BUCKETS), then per language the float64 sum of
+    ``w_lang[bucket]`` in token order and ``score = round(sum/n, 6)``
+    (Decimal HALF_UP, = Spark ``round()``). The score rounds BEFORE the
+    argmax so last-ulp drift cannot flip the winner against the DuckDB
+    oracle; the argmax is the greatest score, ties to the first
+    language in LANG_CLF_LANGS order. NULL, empty and blank text
+    tokenize to the single empty token, so they score like any other
+    one-token document and never yield NULL. The expression form this
+    replaced hashed every token with an interpreted lambda (18-19
+    executor-CPU core-s / 1.4 s at sf1.0; ~1 core-s here)."""
     from pyspark.sql.types import (
         DoubleType,
         StringType,
@@ -559,19 +385,6 @@ def fingerprint_expr(text: Column) -> Column:
     return stable_hash60_expr(text)
 
 
-def rolling_fingerprint_expr(text: Column) -> Column:
-    """The round-1 polynomial rolling hash, h = (h*31 + cp) mod (2^31-1)
-    over code points — kept for incremental/rolling use cases where a
-    recurrence (not a block hash) is the point. Per-character
-    interpreted: oracle slices only, never the 100 TB hot path."""
-    chars = F.split(text, "")
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("bigint"),
-        lambda acc, c: (acc * FINGERPRINT_BASE + F.ascii(c)) % FINGERPRINT_MOD,
-    )
-
-
 def word_shingles_expr(text: Column, k: int = 2) -> Column:
     """Distinct k-word shingles (space-joined). The token array is bound
     once per row (bind_once): inlining ``toks`` would re-run the
@@ -596,10 +409,10 @@ def word_shingles_expr(text: Column, k: int = 2) -> Column:
     )
 
 
-# Unicode scripts probed by script_signals_exprs: (column suffix,
-# Java regex class, script label). Java names the property IsLatin /
-# IsCyrillic / ...; DuckDB's RE2 twin uses \p{Latin} etc. — both read
-# the same Unicode script data, so membership agrees.
+# Unicode scripts probed by script_signals_frame: (column suffix,
+# script property). The kernel's `regex` module reads IsLatin /
+# IsCyrillic / ... like Java regex; DuckDB's RE2 twin uses \p{Latin}
+# etc. — all read the same Unicode script data, so membership agrees.
 SCRIPTS = [
     ("latin", r"\p{IsLatin}"),
     ("cyrillic", r"\p{IsCyrillic}"),
@@ -608,36 +421,6 @@ SCRIPTS = [
     ("hangul", r"\p{IsHangul}"),
     ("devanagari", r"\p{IsDevanagari}"),
 ]
-
-
-def script_signals_exprs(text: Column) -> dict[str, Column]:
-    """Per-document Unicode-script profile: per-script character
-    fractions (of non-space characters) plus the dominant script with
-    a deterministic first-wins tie-break in SCRIPTS order, 'other'
-    when no probed script occurs. Pure JVM-side regexp_replace/length
-    arithmetic — zero shuffles, zero UDFs — the cheap router that
-    decides which downstream language/quality stack a crawl document
-    enters before any model-based language ID runs."""
-    t = F.coalesce(text, F.lit(""))
-    base = F.length(F.regexp_replace(t, r"\s", ""))
-    counts = {
-        name: F.length(F.regexp_replace(t, f"[^{cls}]", ""))
-        for name, cls in SCRIPTS
-    }
-    out: dict[str, Column] = {}
-    for name in counts:
-        out[f"frac_{name}"] = F.round(
-            F.when(base > 0, counts[name] / base.cast("double")).otherwise(0.0), 6
-        )
-    # first-wins argmax as a single linear fold — the chained
-    # accumulator it replaces duplicated every regexp_replace count
-    # subtree exponentially (see exprs.first_wins_argmax)
-    from webxtract.exprs import first_wins_argmax
-
-    out["dominant_script"] = first_wins_argmax(
-        [(name, counts[name]) for name, _ in SCRIPTS], "other"
-    )
-    return out
 
 
 _SCRIPT_LUT: dict = {"arr": None, "res": None}
@@ -667,17 +450,25 @@ def script_signals_frame(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> "DataFrame":  # noqa: F821
-    """Frame-level form of ``script_signals_exprs``: identical output
-    (id, dominant_script, frac_<script>... in sorted column order) from
-    ONE mapInPandas pass. The expression form runs len(SCRIPTS)+1 full
-    Java-regex replace passes over every document (measured 46-66
-    executor-CPU core-s / 2.2 s wall at sf1.0); here each character is
-    classified once through a lazily-built codepoint lookup table and
-    counted with one bincount per document (~5 core-s). Float contract:
-    count/base is an exact int->float64 division on both sides;
-    fractions round via Decimal(repr(x)) HALF_UP (= Spark round());
-    dominant script replicates first_wins_argmax exactly (first
-    strictly-greater positive count in SCRIPTS order, else 'other')."""
+    """Per-document Unicode-script profile — the cheap router that
+    decides which downstream language/quality stack a crawl document
+    enters before any model-based language ID runs: (id,
+    dominant_script, frac_<script>... in sorted column order) from ONE
+    mapInPandas pass, zero shuffles.
+
+    frac_<script> = characters of that script / non-whitespace
+    characters (whitespace is Java regex ASCII ``\\s``), rounded 6 dp
+    via Decimal(repr(x)) HALF_UP (= Spark ``round()``); the division is
+    an exact int->float64 one. 0.0 when the text has no non-whitespace
+    character. dominant_script is the first script in SCRIPTS order
+    with the strictly greatest positive count, 'other' when no probed
+    script occurs. NULL text profiles as empty text.
+
+    Each character is classified once through a lazily-built codepoint
+    lookup table and counted with one bincount per document (~5
+    core-s at sf1.0, against 46-66 executor-CPU core-s for the
+    len(SCRIPTS)+1 Java regex-replace passes of the expression form
+    this replaced)."""
     from pyspark.sql.types import (
         DoubleType,
         StringType,
