@@ -110,17 +110,14 @@ def test_expression_layer_survives_garbage_ansi(spark):
     )
 
     def run():
-        from webxtract.ops.validators import type_specific_validator
-
         fields = with_parsed_dates(df)
         dt = doc_type_expr()
         fd = fake_result_expr()
         vr = validation_results_expr(
             dt["document_type"], F.to_date(F.lit("2026-01-15"))
         )
-        ts = type_specific_validator(
-            dt["document_type"], F.to_date(F.lit("2026-01-15"))
-        )
+        # the type-specific result, after the 5 base validators
+        ts = F.try_element_at(vr, F.lit(6))
         step = fields.select(
             "doc_id",
             dt["document_type"].alias("document_type"),

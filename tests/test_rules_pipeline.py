@@ -191,7 +191,7 @@ VALIDATOR_CASES = [
 
 @pytest.fixture(scope="module")
 def validator_statuses(spark):
-    from webxtract.ops.validators import type_specific_validator, with_parsed_dates
+    from webxtract.ops.validators import validation_results_expr, with_parsed_dates
 
     rows = []
     for name, venum, data, expect in VALIDATOR_CASES:
@@ -205,8 +205,10 @@ def validator_statuses(spark):
     res = df.select(
         "case",
         "expect_pass",
-        type_specific_validator(
-            F.col("venum"), F.to_date(F.lit(RUN_DATE))
+        # the type-specific result, after the 5 base validators
+        F.try_element_at(
+            validation_results_expr(F.col("venum"), F.to_date(F.lit(RUN_DATE))),
+            F.lit(6),
         ).alias("result"),
     ).toPandas()
     return res.set_index("case")

@@ -1,5 +1,6 @@
-"""Session construction: thread-count parsing of local masters and the
-contents of the shipped --py-files archive."""
+"""Session construction: thread-count parsing of local masters, the
+config a session gets, and the contents of the shipped --py-files
+archive."""
 
 from __future__ import annotations
 
@@ -29,3 +30,15 @@ def test_pyfiles_zip_ships_contract_not_oracles(tmp_path):
     assert "webxtract/contract.py" in names
     assert "webxtract/ops/validators.py" in names
     assert "webxtract/oracles.py" not in names
+
+
+def test_session_adds_no_jvm_flags_and_extra_conf_wins(spark):
+    conf = spark.sparkContext.getConf()
+    # conftest passes 4g through extra_conf over the derived 8g (local[4])
+    assert conf.get("spark.driver.memory") == "4g"
+    # Spark itself fills both options with its module and IPv6 flags; the
+    # session adds no heap (-Xms...) or GC (-XX:...) flag to either
+    for role in ("driver", "executor"):
+        opts = conf.get(f"spark.{role}.extraJavaOptions", "").split()
+        assert [o for o in opts
+                if o.startswith("-X") and o != "-XX:+IgnoreUnrecognizedVMOptions"] == []

@@ -917,11 +917,7 @@ GOLDENS = \
 
 @pytest.fixture(scope="module")
 def battery_results(spark):
-    from webxtract.ops.validators import (
-        type_specific_validator,
-        validation_results_expr,
-        with_parsed_dates,
-    )
+    from webxtract.ops.validators import validation_results_expr, with_parsed_dates
 
     rows = []
     for name, venum, data, _expect in VALIDATOR_CASES:
@@ -935,19 +931,15 @@ def battery_results(spark):
     res = df.select(
         "case",
         validation_results_expr(F.col("venum"), F.to_date(F.lit(RUN_DATE))).alias("base"),
-        type_specific_validator(F.col("venum"), F.to_date(F.lit(RUN_DATE))).alias("ts"),
     ).collect()
-    out = {}
-    for r in res:
-        mine = {
+    # the battery holds the 5 base validators and the type-specific one
+    return {
+        r["case"]: {
             b["validator_name"]: (b["status"], b["message"], dict(b["details"]))
             for b in r["base"]
         }
-        mine[r["ts"]["validator_name"]] = (
-            r["ts"]["status"], r["ts"]["message"], dict(r["ts"]["details"])
-        )
-        out[r["case"]] = mine
-    return out
+        for r in res
+    }
 
 
 def test_validator_messages_byte_exact(battery_results):

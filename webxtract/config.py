@@ -8,11 +8,9 @@ re-runnable jobs every "now" becomes one frozen ``run_date`` parameter
 
 from __future__ import annotations
 
-import os
-
 # Frozen "today" for all date arithmetic (expiry, age, ...). Override per
-# run with WEBXTRACT_RUN_DATE; tests always pin it explicitly.
-DEFAULT_RUN_DATE: str = os.environ.get("WEBXTRACT_RUN_DATE", "2026-01-15")
+# run with ``cli --run-date`` or an entry point's ``run_date=``.
+DEFAULT_RUN_DATE: str = "2026-01-15"
 
 # Minimum age requirement for the age validator
 # (reference: app/services/validation_service.py:104-116, default 18).

@@ -384,16 +384,6 @@ def robots_verdicts(
     return joined.select(*urls.columns, allowed.alias("allowed"))
 
 
-def filter_robots_allowed(
-    urls: DataFrame, robots: DataFrame, url_col: str = "url"
-) -> DataFrame:
-    """Urls whose path the host's robots rules allow (see
-    robots_verdicts)."""
-    return robots_verdicts(urls, robots, url_col).filter(
-        F.col("allowed")
-    ).drop("allowed")
-
-
 CRAWL_DELAY_RE = r"(?mi)^Crawl-delay: (\d+)"
 
 

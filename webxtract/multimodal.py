@@ -36,16 +36,6 @@ MAGIC = {
     "mp4_ftyp": b"ftyp",  # at offset 4
 }
 
-MEDIA_META_TYPE = StructType(
-    [
-        StructField("media_kind", StringType(), True),   # image|audio|video|unknown
-        StructField("format", StringType(), True),
-        StructField("n_bytes", LongType(), True),
-        StructField("width", IntegerType(), True),       # stub: -1
-        StructField("height", IntegerType(), True),      # stub: -1
-    ]
-)
-
 FEATURE_SCHEMA = StructType(
     [
         StructField("url", StringType(), False),

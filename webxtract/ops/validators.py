@@ -9,10 +9,11 @@ dates parsed by ``with_parsed_dates`` (date semantics stay in Catalyst),
 ``run_date`` and ``minimum_age`` — and it returns the
 ``array<ValidatorResult>`` column in one Arrow batch. Inside
 ``run_pipeline`` that UDF is the rule kernel (``pipeline._rule_kernel``),
-which also runs type detection and fake scoring; ``_battery`` serves the
-standalone entry points below. No rule logic is analyzed, optimized or
-code-generated by Catalyst. This module also holds what every rule
-kernel shares: ``Doc``, the Spark-semantics helpers and ``row_udf``.
+which also runs type detection and fake scoring; elsewhere
+``validation_results_expr`` runs it alone. No rule logic is analyzed,
+optimized or code-generated by Catalyst. This module also holds what
+every rule kernel shares: ``Doc``, the Spark-semantics helpers and
+``row_udf``.
 
 Each validator is a plain Python function over one document, written
 close to the reference class it replicates: the 5 base validators, the
@@ -1246,13 +1247,6 @@ def validate(doc_type_enum: str | None, d: Doc) -> list[tuple]:
     return out
 
 
-_SELECT = {
-    "battery": validate,
-    "specific": lambda e, d: [_SPECIFIC[e](d)] if e in _SPECIFIC else [],
-    "document_expiry": lambda _e, d: [document_expiry(d)],
-}
-
-
 def doc_columns(prefix: str = "") -> list[Column]:
     """The 13 field columns then the dob/issue/expiry epoch days, the
     per-document inputs of every rule kernel (after ``with_parsed_dates``)."""
@@ -1261,16 +1255,9 @@ def doc_columns(prefix: str = "") -> list[Column]:
 
 
 @row_udf(RESULTS_TYPE)
-def _battery(which: str, enum: str | None, run: int, minimum_age: int, *vals) -> list:  # noqa: ANN002
-    """``which`` selects the battery, the type-specific validator only, or
-    document expiry only; ``vals`` are ``doc_columns``."""
-    return _SELECT[which](enum, Doc(vals[:-3], *vals[-3:], run, minimum_age))
-
-
-def _kernel(which: str, doc_type_enum: Column, run_date: Column, minimum_age: int,
-            prefix: str) -> Column:
-    return _battery(F.lit(which), doc_type_enum, F.unix_date(run_date), F.lit(minimum_age),
-                    *doc_columns(prefix))
+def _battery(enum: str | None, run: int, minimum_age: int, *vals) -> list:  # noqa: ANN002
+    """``validate`` over one row; ``vals`` are ``doc_columns``."""
+    return validate(enum, Doc(vals[:-3], *vals[-3:], run, minimum_age))
 
 
 def validation_results_expr(
@@ -1280,21 +1267,9 @@ def validation_results_expr(
     (validation_service.py:283-295), over a frame that went through
     ``with_parsed_dates``. Never NULL."""
     return F.coalesce(
-        _kernel("battery", doc_type_enum, run_date, minimum_age, prefix),
+        _battery(doc_type_enum, F.unix_date(run_date), F.lit(minimum_age),
+                 *doc_columns(prefix)),
         F.array().cast(RESULTS_TYPE),
-    )
-
-
-def type_specific_validator(doc_type_enum: Column, run_date: Column, prefix: str = "") -> Column:
-    """The dispatched type-specific ValidatorResult; NULL when the type
-    has no validator (e.g. unknown)."""
-    return F.try_element_at(_kernel("specific", doc_type_enum, run_date, 18, prefix), F.lit(1))
-
-
-def document_expiry_validator(run_date: Column, prefix: str = "") -> Column:
-    """V2 alone, as a ValidatorResult struct."""
-    return F.try_element_at(
-        _kernel("document_expiry", F.lit(None).cast("string"), run_date, 18, prefix), F.lit(1)
     )
 
 

@@ -58,13 +58,6 @@ SPAN_TYPE = StructType(
 
 SPANS_TYPE = ArrayType(SPAN_TYPE)
 
-PAGE_TYPE = StructType(
-    [
-        StructField("page_number", IntegerType(), True),
-        StructField("text", StringType(), True),
-    ]
-)
-
 # Output of the extraction stage (per url).
 EXTRACTED_SCHEMA = StructType(
     [
@@ -110,10 +103,6 @@ REQUIRED_FIELDS = [
     "expiry_date",
 ]
 
-FIELDS_TYPE = StructType(
-    [StructField(name, StringType(), True) for name in FIELD_NAMES]
-)
-
 # ---------------------------------------------------------------- type info
 
 DOC_TYPE_INFO_TYPE = StructType(
@@ -149,18 +138,6 @@ VALIDATOR_RESULT_TYPE = StructType(
         StructField("status", StringType(), True),  # passed|failed|warning|skipped
         StructField("message", StringType(), True),
         StructField("details", MapType(StringType(), StringType()), True),
-    ]
-)
-
-VALIDATION_SUMMARY_TYPE = StructType(
-    [
-        StructField("overall_status", StringType(), True),
-        StructField("validation_score", DoubleType(), True),
-        StructField("total_checks", IntegerType(), True),
-        StructField("passed_checks", IntegerType(), True),
-        StructField("failed_checks", IntegerType(), True),
-        StructField("warning_checks", IntegerType(), True),
-        StructField("skipped_checks", IntegerType(), True),
     ]
 )
 
