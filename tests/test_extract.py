@@ -114,6 +114,74 @@ def test_no_shuffle_in_extraction_plan(spark, corpus):
     assert "Exchange" not in plan
 
 
+def test_extraction_plan_is_one_scan_one_kernel(spark, corpus):
+    """Every page takes its path inside one kernel: the plan scans the
+    input once and holds one MapInPandas, with no Filter/Union split."""
+    import contextlib
+    import io
+    import re
+
+    df = extract_pages(spark.read.parquet(corpus[0]))
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    plan = buf.getvalue()
+
+    def nodes(name: str) -> int:
+        return len(set(re.findall(rf"\((\d+)\) {name}", plan)))
+
+    assert (nodes("Scan parquet"), nodes("MapInPandas")) == (1, 1)
+    assert nodes("Union") == 0 and nodes("Filter") == 0
+
+
+_EDGE_PDF = b"%PDF-1.4\n%%PAGE 1\npdf text"
+_EDGE_SCAN = b"%PDF-1.4\n%%PAGE 1\n%%SCAN scanned words"
+_EDGE_HTML = b"<html><body><p>spaces only text falls through to html</p></body></html>"
+
+# url -> (html, text, (source_kind, parse_failure, extracted_text,
+#          n_pages, avg_confidence, n_bytes, [(span text, bbox.x_max)] or None))
+_EDGE_ROWS = {
+    "spaces": (_EDGE_HTML, "   ", (
+        "html", False, "spaces only text falls through to html", 1, 1.0, 71,
+        [("spaces only text falls through to html", 38.0)])),
+    "spaces_scan": (_EDGE_SCAN, "  ", (
+        "pdf_ocr", False, "scanned words", 1, 0.8, 38, [("scanned words", 13.0)])),
+    "spaces_only": (None, "  ", ("none", True, None, 0, 0.0, 0, None)),
+    "empty_text": (None, "", ("none", True, None, 0, 0.0, 0, None)),
+    "tab": (None, "\t", ("text", False, "\t", 1, 1.0, 0, [("\t", 1.0)])),
+    "nbsp": (None, "\u00a0", ("text", False, "\u00a0", 1, 1.0, 0, [("\u00a0", 1.0)])),
+    "newline": (None, " \n ", ("text", False, " \n ", 1, 1.0, 0, [(" \n ", 3.0)])),
+    "text_over_pdf": (_EDGE_PDF, "native wins", (
+        "text", False, "native wins", 1, 1.0, 26, [("native wins", 11.0)])),
+    "empty_html": (b"", None, ("html", True, None, 0, 0.0, 0, [])),
+    "bare_pdf": (b"%PDF-", None, ("pdf", True, None, 0, 0.0, 5, [])),
+    "nothing": (None, None, ("none", True, None, 0, 0.0, 0, None)),
+    "astral": (None, "\U0001d518\U0001d52b\U0001d526 x", (
+        "text", False, "\U0001d518\U0001d52b\U0001d526 x", 1, 1.0, 0,
+        [("\U0001d518\U0001d52b\U0001d526 x", 5.0)])),
+}
+
+
+def test_extraction_edge_rows(spark):
+    """Per-row dispatch on the edges: Spark trim semantics (only ' ' is
+    blank), text over PDF magic, empty and bare-magic payloads, no
+    payload at all, and bbox.x_max counted in code points."""
+    df = spark.createDataFrame(
+        [(url, None, html, text, "en") for url, (html, text, _) in _EDGE_ROWS.items()],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    got = {}
+    for r in extract_pages(df).collect():
+        spans = None if r["spans"] is None else [
+            (s["text"], s["bbox"]["x_max"]) for s in r["spans"]
+        ]
+        got[r["url"]] = (
+            r["source_kind"], r["parse_failure"], r["extracted_text"],
+            r["n_pages"], r["avg_confidence"], r["n_bytes"], spans,
+        )
+    assert got == {url: want for url, (_, _, want) in _EDGE_ROWS.items()}
+
+
 def test_fuzz_garbage_payloads_never_kill_tasks(spark):
     """100-TB ingestion reality: random bytes, truncated UTF-8, binary
     junk behind HTML/PDF magic, empty and NULL payloads. Every row must

@@ -110,7 +110,7 @@ def test_pipeline_battery_is_one_arrow_eval_above_the_exchange(spark, corpus):
     """Every document rule runs in ONE Arrow kernel on the reduce side of
     the salted exchange: above the Exchange the only Python node is one
     ArrowEvalPython evaluating the rule kernel; below it only the
-    extraction legs run Python; and no rule is a Catalyst lambda."""
+    extraction kernel runs Python; and no rule is a Catalyst lambda."""
     from webxtract.pipeline import run_pipeline
 
     pages_path, _ = corpus
@@ -118,7 +118,7 @@ def test_pipeline_battery_is_one_arrow_eval_above_the_exchange(spark, corpus):
     nodes = _python_nodes(qe.sparkPlan())
     assert [(n, f) for above, n, f in nodes if above] == [("ArrowEvalPython", ["_rule_kernel"])]
     below = sorted((n, f) for above, n, f in nodes if not above)
-    assert below == [("MapInPandas", ["_html_batches"]), ("MapInPandas", ["_pdf_batches"])]
+    assert below == [("MapInPandas", ["_extract_batches"])]
     assert "lambdafunction" not in qe.optimizedPlan().toString().lower()
 
 

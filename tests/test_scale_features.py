@@ -60,6 +60,46 @@ def test_audit_and_resume(spark, corpus, tmp_path):
     assert resume_filter(pages, out, spark).count() == 0
 
 
+def test_audit_read_back_lists_only_this_run(spark, corpus, tmp_path):
+    """With 20 prior runs committed, a job lists the history once (the
+    resume anti-join's done-set) and its audit reads back only its own
+    ``run_id=`` directory, whose name Spark escapes (':' and '/')."""
+    import os
+
+    from webxtract.audit import run_extraction_job
+    from webxtract.ops.extract import extract_pages
+
+    pages = spark.read.parquet(corpus[0])
+    old = pages.limit(60)
+    out = str(tmp_path / "out")
+    runs = spark.range(20).select(F.format_string("old-%02d", "id").alias("run_id"))
+    (
+        extract_pages(old).withColumn("partition_id", F.spark_partition_id())
+        .crossJoin(runs).repartition(2)
+        .write.partitionBy("run_id").parquet(out)
+    )
+
+    def parquet_files(d: str) -> int:
+        return sum(f.endswith(".parquet") for f in os.listdir(os.path.join(out, d)))
+
+    history = sum(parquet_files(d) for d in os.listdir(out) if d.startswith("run_id="))
+    assert history == 40
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.HiveCatalogMetrics
+    before = metrics.METRIC_FILES_DISCOVERED().getCount()
+    run_id = "2026-10-17T09:00:00/a:b"
+    m = run_extraction_job(
+        pages, out, str(tmp_path / "audit"), run_id, spark, num_partitions=2
+    )
+    discovered = metrics.METRIC_FILES_DISCOVERED().getCount() - before
+
+    this_run = parquet_files("run_id=2026-10-17T09%3A00%3A00%2Fa%3Ab")
+    assert discovered <= history + this_run
+    audit = spark.read.parquet(str(tmp_path / "audit")).toPandas()
+    assert set(audit["run_id"]) == {run_id}
+    assert audit["url_count"].sum() == m["urls"] == pages.count() - 60
+
+
 def test_streaming_extraction(spark, corpus, tmp_path):
     from webxtract.streaming import start_extraction_stream
 

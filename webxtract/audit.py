@@ -41,13 +41,6 @@ def partition_by_url(
     return df.repartition(num_partitions, key)
 
 
-def with_partition_metrics(df: DataFrame) -> DataFrame:
-    """Attach the partition id so audit metrics can be grouped per task
-    (the columnar analog of the reference's per-request RequestLogs row,
-    middleware.py:113-135 — one row per *partition* instead of per doc)."""
-    return df.withColumn("__pid", F.spark_partition_id())
-
-
 def audit_rows(
     extracted: DataFrame,
     run_id: str,
@@ -58,16 +51,12 @@ def audit_rows(
     per-request processingTimeMs, middleware.py:68,127, becomes a
     per-partition task wall).
 
-    If the frame already carries a ``partition_id`` column (recorded by
-    the writer via spark_partition_id()) it is used as-is — essential
-    for read-back audits, where recomputing partition ids would reflect
-    the read split layout, not the write tasks. ``wall_by_pid`` maps
-    write-task index -> task duration ms (from the scheduler's task
-    metrics); it is tiny (one entry per task) and joined broadcast."""
-    base = extracted
-    if "partition_id" not in base.columns:
-        base = with_partition_metrics(base).withColumnRenamed("__pid", "partition_id")
-    agg = base.groupBy("partition_id").agg(
+    The frame must carry the ``partition_id`` the writer recorded with
+    spark_partition_id(): a read-back audit groups by the write tasks,
+    not by the read split layout. ``wall_by_pid`` maps write-task index
+    -> task duration ms (from the scheduler's task metrics); it is tiny
+    (one entry per task) and joined broadcast."""
+    agg = extracted.groupBy("partition_id").agg(
         F.count(F.lit(1)).alias("url_count"),
         F.sum("n_bytes").alias("bytes_in"),
         F.sum(F.col("parse_failure").cast("long")).alias("parse_failures"),
@@ -122,9 +111,10 @@ def run_extraction_job(
 
     Run-level stats come from ``df.observe`` on the write itself — zero
     extra passes (SURVEY.md §2.1-S5). The per-partition audit rows are
-    computed from a run_id-pruned read-back of just-committed files
-    (never a rescan of the full history: at 10^12 accumulated urls a
-    full-table re-aggregation per incremental run is a non-starter).
+    computed from a read-back of this run's ``run_id=`` directory alone
+    (never a listing or rescan of the full history: at 10^12 accumulated
+    urls a full-table re-aggregation per incremental run is a
+    non-starter).
 
     ``transform`` swaps the per-page job body (default: extract_pages;
     the CLI passes the full validation pipeline for --mode pipeline) —
@@ -167,8 +157,15 @@ def run_extraction_job(
     stats = obs.get
     walls = _task_walls_for_group(spark, group)
 
-    this_run = spark.read.parquet(output_path).filter(F.col("run_id") == run_id)
-    audit = audit_rows(this_run.drop("run_id"), run_id, wall_by_pid=walls)
+    # list only this run's partition directory, named the way the writer
+    # names it; a run that wrote no rows has none
+    catalog_utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    run_dir = f"{output_path.rstrip('/')}/run_id={catalog_utils.escapePathName(run_id)}"
+    if _exists(run_dir, spark):
+        this_run = spark.read.parquet(run_dir)
+    else:
+        this_run = spark.createDataFrame([], extracted.drop("run_id").schema)
+    audit = audit_rows(this_run, run_id, wall_by_pid=walls)
     audit.write.mode("append").parquet(audit_path)
 
     return {

@@ -168,7 +168,7 @@ def q_extract_html_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_extract_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E2 analog through the PDF leg (magic-byte routing + page parse)."""
+    """E2 analog through the PDF path (magic-byte routing + page parse)."""
     pages = _pages_from_documents(spark, sf_dir, pdf=True)
     return extract_pages(pages).select(
         F.col("url").cast("bigint").alias("doc_id"),

@@ -1,22 +1,23 @@
 """The extraction stage: pages(url, warc_ts, html, text, lang) ->
 EXTRACTED_SCHEMA rows.
 
-Spark plan shape (SURVEY.md §3.1 trace / §4.4):
+Spark plan shape (SURVEY.md §3.1 trace / §4.4): one column-pruned scan
+of exactly (url, warc_ts, lang, html, text) feeding ONE ``MapInPandas``
+node, ``_extract_batches``. No Filter, no Union, no Exchange: the stage
+is a narrow map over its input splits and scales linearly with them.
 
-- column-pruned scan of exactly (url, warc_ts, lang, html, text);
-- a three-way *pipeline split* on cheap expression predicates — the
-  data-dependent recomputation prune the reference does with its
-  native-text-first fallback (ocr.py:144-150, operator E4):
-    1. rows with non-blank pre-extracted ``text`` never touch Python —
-       pure expression assembly (the fast path);
-    2. ``%PDF-`` magic rows (binary substring check, operator S2's
-       cheap dispatch, ocr.py:250-273) go to the PDF iterator-UDF;
-    3. remaining rows with html go to the HTML iterator-UDF;
-    4. rows with neither are quarantined as parse failures (the
-       HTTP-400 analog, ocr.py:73-78 — a filter, not an exception).
-- union of the four legs. Zero shuffles: every leg is a narrow map over
-  the same scan, so the whole stage is embarrassingly parallel and
-  scales linearly with input splits.
+The kernel picks each row's path once, the way the reference picks a
+request's path once (magic bytes -> PDF or image, else HTTP 400,
+ocr.py:250-273):
+
+1. non-blank pre-extracted ``text`` (Spark ``trim`` semantics: only
+   ``' '`` is stripped) is the document: one span, ``source_kind`` text;
+2. no ``html`` payload at all is quarantined as a parse failure
+   (``source_kind`` none — the HTTP-400 analog, ocr.py:73-78, a row
+   flag, not an exception);
+3. ``%PDF-`` magic goes to ``extract_pdf`` (native text first, forced
+   OCR when no page has text: operators E2-E4, ocr.py:144-150);
+4. anything else goes to ``extract_html``.
 """
 
 from __future__ import annotations
@@ -25,7 +26,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from webxtract.ops.extract_html import extract_html
 from webxtract.ops.extract_pdf import PDF_MAGIC, extract_pdf
@@ -56,116 +56,36 @@ def _result_frame(meta: pd.DataFrame, results: list[tuple]) -> pd.DataFrame:
     return out[[f.name for f in EXTRACTED_SCHEMA.fields]]
 
 
-def _html_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _extract(html: bytes | None, text: str | None) -> tuple:
+    """One page -> the ``_RESULT_COLS`` values, dispatched as above."""
+    if text is not None and text.strip(" "):
+        bbox = {"x_min": 0.0, "y_min": 0.0, "x_max": float(len(text)), "y_max": 0.0}
+        spans = [{"text": text, "confidence": 1.0, "bbox": bbox}]
+        return text, spans, 1, 1.0, "text", False, len(html) if html else 0
+    if html is None:
+        return None, None, 0, 0.0, "none", True, 0
+    if html.startswith(PDF_MAGIC):
+        extracted, spans, n_pages, failed, used_ocr = extract_pdf(html)
+        kind = "pdf_ocr" if used_ocr else "pdf"
+    else:
+        extracted, spans, failed = extract_html(html)
+        n_pages, kind = (0 if failed else 1), "html"
+    avg_conf = sum(s["confidence"] for s in spans) / len(spans) if spans else 0.0
+    return extracted, spans, n_pages, avg_conf, kind, failed, len(html)
+
+
+def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     # iterator-UDF pattern: any heavyweight init would go here, once per
     # task (the reference's lazy reader singleton, image_ocr.py:13-19).
-    for pdf_batch in batches:
-        results = []
-        for payload in pdf_batch["html"]:
-            payload = bytes(payload) if payload is not None else None
-            text, spans, failed = extract_html(payload)
-            avg_conf = (
-                sum(s["confidence"] for s in spans) / len(spans) if spans else 0.0
-            )
-            results.append(
-                (
-                    text,
-                    spans,
-                    0 if failed else 1,
-                    avg_conf,
-                    "html",
-                    failed,
-                    len(payload) if payload else 0,
-                )
-            )
-        yield _result_frame(pdf_batch[_META_COLS], results)
-
-
-def _pdf_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf_batch in batches:
-        results = []
-        for payload in pdf_batch["html"]:
-            payload = bytes(payload) if payload is not None else None
-            text, spans, n_pages, failed, used_ocr = extract_pdf(payload)
-            avg_conf = (
-                sum(s["confidence"] for s in spans) / len(spans) if spans else 0.0
-            )
-            results.append(
-                (
-                    text,
-                    spans,
-                    n_pages,
-                    avg_conf,
-                    "pdf_ocr" if used_ocr else "pdf",
-                    failed,
-                    len(payload) if payload else 0,
-                )
-            )
-        yield _result_frame(pdf_batch[_META_COLS], results)
+    for batch in batches:
+        results = [
+            _extract(bytes(html) if html is not None else None, text)
+            for html, text in zip(batch["html"], batch["text"])
+        ]
+        yield _result_frame(batch[_META_COLS], results)
 
 
 def extract_pages(pages: DataFrame) -> DataFrame:
-    """pages -> extracted (EXTRACTED_SCHEMA). Narrow-only plan, no shuffle."""
+    """pages -> extracted (EXTRACTED_SCHEMA): one scan, one kernel, no shuffle."""
     src = pages.select("url", "warc_ts", "lang", "html", "text")
-
-    has_text = F.col("text").isNotNull() & (F.trim(F.col("text")) != F.lit(""))
-    is_pdf = F.col("html").isNotNull() & (
-        F.substring(F.col("html"), 1, 5) == F.lit(PDF_MAGIC)
-    )
-    has_html = F.col("html").isNotNull()
-
-    # Leg 1 — native text: pure expressions, no Python.
-    native = src.filter(has_text).select(
-        "url",
-        "warc_ts",
-        "lang",
-        F.col("text").alias("extracted_text"),
-        F.array(
-            F.struct(
-                F.col("text").alias("text"),
-                F.lit(1.0).alias("confidence"),
-                F.struct(
-                    F.lit(0.0).alias("x_min"),
-                    F.lit(0.0).alias("y_min"),
-                    F.length("text").cast("double").alias("x_max"),
-                    F.lit(0.0).alias("y_max"),
-                ).alias("bbox"),
-            )
-        ).alias("spans"),
-        F.lit(1).alias("n_pages"),
-        F.lit(1.0).alias("avg_confidence"),
-        F.lit("text").alias("source_kind"),
-        F.lit(False).alias("parse_failure"),
-        F.coalesce(F.length("html").cast("long"), F.lit(0).cast("long")).alias(
-            "n_bytes"
-        ),
-    )
-
-    rest = src.filter(~has_text)
-
-    pdf = (
-        rest.filter(is_pdf)
-        .select("url", "warc_ts", "lang", "html")
-        .mapInPandas(_pdf_batches, schema=EXTRACTED_SCHEMA)
-    )
-    html = (
-        rest.filter(has_html & ~is_pdf)
-        .select("url", "warc_ts", "lang", "html")
-        .mapInPandas(_html_batches, schema=EXTRACTED_SCHEMA)
-    )
-
-    # Leg 4 — quarantine: no payload at all.
-    empty = rest.filter(~has_html).select(
-        "url",
-        "warc_ts",
-        "lang",
-        F.lit(None).cast("string").alias("extracted_text"),
-        F.lit(None).cast(EXTRACTED_SCHEMA["spans"].dataType).alias("spans"),
-        F.lit(0).alias("n_pages"),
-        F.lit(0.0).alias("avg_confidence"),
-        F.lit("none").alias("source_kind"),
-        F.lit(True).alias("parse_failure"),
-        F.lit(0).cast("long").alias("n_bytes"),
-    )
-
-    return native.unionByName(pdf).unionByName(html).unionByName(empty)
+    return src.mapInPandas(_extract_batches, schema=EXTRACTED_SCHEMA)

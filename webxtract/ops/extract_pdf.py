@@ -107,9 +107,7 @@ def native_pdf_pages(payload: bytes) -> list[str] | None:
     return pages
 
 
-def extract_pdf(
-    payload: bytes | None, ocr_fallback: bool = True
-) -> tuple[str | None, list[dict], int, bool, bool]:
+def extract_pdf(payload: bytes | None) -> tuple[str | None, list[dict], int, bool, bool]:
     """bytes -> (extracted_text, spans, n_pages, parse_failure, used_ocr).
 
     Native-text-first policy (operator E4, ocr.py:144-150): parse the
@@ -126,7 +124,7 @@ def extract_pdf(
     if pages is None:
         return None, [], 0, True, False
 
-    if ocr_fallback and not any(t.strip() for t in pages):
+    if not any(t.strip() for t in pages):
         # E4: all-blank native -> forced OCR (ocr.py:144-150)
         from webxtract.ops import ocr_backend
 

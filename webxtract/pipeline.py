@@ -2,7 +2,7 @@
 flagship request lifecycle, POST /ocr/extract/image?validate=true —
 SURVEY.md §3.3):
 
-    map side:    parquet scan -> extraction legs (mapInPandas)
+    map side:    parquet scan -> extraction kernel (mapInPandas)
                  -> 13 fields + missing_fields (one Catalyst projection)
     exchange:    salted url-hash repartition (audit.partition_by_url)
     reduce side: three parsed dates (Catalyst) -> ONE rule kernel (Arrow
@@ -10,9 +10,10 @@ SURVEY.md §3.3):
                  validator battery) -> integrity, summary, success
                  (Catalyst projection)
 
-The physical plan Spark builds has two stages around ONE Exchange (none
-without ``bucket_by_url``). Map side: the parquet scan, the extraction
-legs' ``MapInPandas`` nodes, and the field + missing-field projection. Reduce side: a projection parsing the three dates, then a
+The physical plan Spark builds has two stages around ONE Exchange. Map
+side: the parquet scan, the extraction kernel's one ``MapInPandas`` node
+(``_extract_batches``), and the field + missing-field projection.
+Reduce side: a projection parsing the three dates, then a
 single ``ArrowEvalPython`` node running ``_rule_kernel`` (it reuses the
 extraction's Python workers), then the integrity/summary/success
 projection. The Exchange only partitions: it carries the extracted text
@@ -27,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from webxtract.audit import partition_by_url
 from webxtract.config import DEFAULT_MINIMUM_AGE, DEFAULT_RUN_DATE
 from webxtract.ops.detect_type import detect
 from webxtract.ops.extract import extract_pages
@@ -132,28 +134,22 @@ def run_pipeline(
     pages: DataFrame,
     run_date: str = DEFAULT_RUN_DATE,
     minimum_age: int = DEFAULT_MINIMUM_AGE,
-    bucket_by_url: bool = True,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> full validation rows.
 
-    ``bucket_by_url`` inserts the salted url-hash repartition between the
-    field projection and the rule kernel. It buckets the output for the
-    resume anti-join and downstream joins, and spreads the byte-skew of
-    hot hosts (SURVEY.md §4.3.1) before the kernel, the costliest Python
-    step, runs. With it off the plan is fully narrow (zero shuffles)."""
+    The salted url-hash repartition sits between the field projection
+    and the rule kernel. It buckets the output for the resume anti-join
+    and downstream joins, and spreads the byte-skew of hot hosts
+    (SURVEY.md §4.3.1) before the kernel, the costliest Python step,
+    runs."""
     missing = missing_fields_expr()
     step1 = with_fields(extract_pages(pages)).select(
         "*",
         missing.alias("missing_fields"),
         (F.size(missing) == 0).alias("fields_valid"),
     )
-    if bucket_by_url:
-        from webxtract.audit import partition_by_url
-
-        n_part = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-        step1 = partition_by_url(step1, n_part)
-
-    ruled = with_rules(step1, run_date, minimum_age)
+    n_part = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    ruled = with_rules(partition_by_url(step1, n_part), run_date, minimum_age)
 
     # Integrity (ocr.py:296-312): integrity_score = max(0, 1 -
     # fake_confidence); valid = not fake. The full DocumentIntegrityResult

@@ -58,10 +58,11 @@ SPAN_TYPE = StructType(
 
 SPANS_TYPE = ArrayType(SPAN_TYPE)
 
-# Output of the extraction stage (per url).
+# Output of the extraction stage (per url). ``url`` is nullable: the
+# kernel passes the input's url through, and a parquet scan's is.
 EXTRACTED_SCHEMA = StructType(
     [
-        StructField("url", StringType(), False),
+        StructField("url", StringType(), True),
         StructField("warc_ts", TimestampType(), True),
         StructField("lang", StringType(), True),
         StructField("extracted_text", StringType(), True),

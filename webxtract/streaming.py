@@ -450,13 +450,13 @@ def read_warc_stream(
     max_files_per_trigger: int = 16,
 ) -> DataFrame:
     """File-source stream of WARC segment drops: binaryFile streaming
-    source -> the same Arrow-batched member/record parser the batch
-    reader uses (`webxtract.warc.read_warc`). New crawl segments landing
-    in ``input_path`` are picked up per microbatch; segment files are
-    the parallelism AND progress-tracking unit (file-source offsets in
-    the checkpoint record which segments are committed — exactly the
-    crawl-ingest contract: a segment is either fully extracted and
-    committed or replayed whole)."""
+    source -> ``warc.parse_segments``, the Arrow-batched member/record
+    parser the batch reader (``warc.read_warc``) runs. New crawl
+    segments landing in ``input_path`` are picked up per microbatch;
+    segment files are the parallelism AND progress-tracking unit
+    (file-source offsets in the checkpoint record which segments are
+    committed — exactly the crawl-ingest contract: a segment is either
+    fully extracted and committed or replayed whole)."""
     from webxtract import warc as W
 
     seg = (
@@ -471,28 +471,8 @@ def read_warc_stream(
         .load(input_path)
         .select("path", "content")
     )
-    # reuse the batch parser's closure via mapInPandas on the stream —
-    # stateless narrow transform, so it lifts unchanged
-    def parse(batches):
-        cols = [f.name for f in W.WARC_SCHEMA.fields]
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for path_, content in zip(pdf["path"], pdf["content"]):
-                for row in W._parse_segment(path_, bytes(content)):
-                    if row[3] == "response":
-                        rows.append(row)
-            out = pd.DataFrame(rows, columns=cols)
-            if len(out):
-                out["warc_ts"] = pd.to_datetime(
-                    out["warc_ts"], utc=True, errors="coerce", format="ISO8601"
-                ).dt.tz_localize(None)
-            else:
-                out["warc_ts"] = pd.Series([], dtype="datetime64[ns]")
-            yield out
-
-    return seg.mapInPandas(parse, schema=W.WARC_SCHEMA)
+    # the batch reader's parser: a stateless narrow map lifts unchanged
+    return W.parse_segments(seg, ("response",))
 
 
 def start_warc_extraction_stream(

@@ -500,9 +500,9 @@ def gen_pages(n_rows: int, run_date: dt.date | str, seed: int = SEED) -> tuple[p
             **{k: None for k, _ in _FIELD_LABELS},
         }
 
-        if r < 0.005:  # no payload at all -> quarantine leg
+        if r < 0.005:  # no payload at all -> quarantine path
             pass
-        elif r < 0.02:  # malformed binary -> html leg, parse failure
+        elif r < 0.02:  # malformed binary -> html path, parse failure
             html = bytes(rnd.randrange(256) for _ in range(rnd.randint(40, 200)))
             if html.startswith(b"%PDF-") or b"<" in html:
                 html = b"\x00\x01" + html  # keep it unparseable

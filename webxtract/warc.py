@@ -260,15 +260,10 @@ def _parse_segment(path: str, data: bytes) -> Iterator[tuple]:
             )
 
 
-def read_warc(
-    spark: SparkSession, path: str, record_types: tuple[str, ...] = ("response",)
-) -> DataFrame:
-    """Distributed WARC reader: ``binaryFile`` segment scan ->
-    Arrow-batched per-segment parse. Filter-by-type happens inside the
-    parser (rows never materialize), and the payload column stays
-    binary so Catalyst prunes it for metadata-only queries downstream
-    (CDX build reads headers only after this materialization point).
-    """
+def parse_segments(segments: DataFrame, record_types: tuple[str, ...]) -> DataFrame:
+    """(path, content) segment frame, batch or streaming -> WARC_SCHEMA
+    rows of ``record_types`` (every type when empty): the Arrow-batched
+    per-segment parse both WARC readers run."""
     import pandas as pd
 
     types = set(record_types) if record_types else None
@@ -290,8 +285,20 @@ def read_warc(
                 out["warc_ts"] = pd.Series([], dtype="datetime64[ns]")
             yield out
 
+    return segments.mapInPandas(parse, schema=WARC_SCHEMA)
+
+
+def read_warc(
+    spark: SparkSession, path: str, record_types: tuple[str, ...] = ("response",)
+) -> DataFrame:
+    """Distributed WARC reader: ``binaryFile`` segment scan ->
+    Arrow-batched per-segment parse. Filter-by-type happens inside the
+    parser (rows never materialize), and the payload column stays
+    binary so Catalyst prunes it for metadata-only queries downstream
+    (CDX build reads headers only after this materialization point).
+    """
     seg = spark.read.format("binaryFile").load(path).select("path", "content")
-    return seg.mapInPandas(parse, schema=WARC_SCHEMA)
+    return parse_segments(seg, record_types)
 
 
 def read_warc_record(path: str, offset: int, length: int) -> dict:
@@ -655,7 +662,7 @@ def zipnum_lookup(root: str, urlkey: str) -> list[str]:
 def warc_to_pages(warc: DataFrame) -> DataFrame:
     """Adapt response records onto the pages(url, warc_ts, html, text,
     lang) ingestion contract: text/plain payloads decode into ``text``
-    (the pre-extracted leg), everything else stays binary ``html`` for
+    (the pre-extracted path), everything else stays binary ``html`` for
     the extraction router's own sniffing (PDF magic, HTML tags)."""
     is_text = F.col("content_type").startswith("text/plain")
     # decode with the declared charset when it is latin-1; the default
@@ -666,7 +673,7 @@ def warc_to_pages(warc: DataFrame) -> DataFrame:
         F.col("charset") == "latin-1", F.decode("payload", "ISO-8859-1")
     ).otherwise(F.col("payload").cast("string"))
     # a zero-byte payload carries nothing to extract: map it to NULL on
-    # both legs so it routes to the quarantine leg exactly like a page
+    # both legs so it routes to the quarantine path exactly like a page
     # row with neither html nor text (the S1 parse-failure analog).
     nonempty = F.length("payload") > 0
     return warc.where(F.col("record_type") == "response").select(
