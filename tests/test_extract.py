@@ -100,28 +100,15 @@ def test_assembly_exprs_match_udf(spark, extracted):
 
 
 def test_no_shuffle_in_extraction_plan(spark, corpus):
-    """The extraction stage must stay narrow: no Exchange in the plan,
-    and the scan must prune to exactly the five input columns."""
-    import contextlib
-    import io
-
-    pages_path, _ = corpus
-    df = extract_pages(spark.read.parquet(pages_path))
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert "Exchange" not in plan
-
-
-def test_extraction_plan_is_one_scan_one_kernel(spark, corpus):
-    """Every page takes its path inside one kernel: the plan scans the
-    input once and holds one MapInPandas, with no Filter/Union split."""
+    """The extraction stage stays one narrow map: no Exchange, and every
+    page takes its path inside one kernel, so the plan scans the input
+    once and holds one MapInPandas, with no Filter/Union split."""
     import contextlib
     import io
     import re
 
-    df = extract_pages(spark.read.parquet(corpus[0]))
+    pages_path, _ = corpus
+    df = extract_pages(spark.read.parquet(pages_path))
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
@@ -130,6 +117,7 @@ def test_extraction_plan_is_one_scan_one_kernel(spark, corpus):
     def nodes(name: str) -> int:
         return len(set(re.findall(rf"\((\d+)\) {name}", plan)))
 
+    assert "Exchange" not in plan
     assert (nodes("Scan parquet"), nodes("MapInPandas")) == (1, 1)
     assert nodes("Union") == 0 and nodes("Filter") == 0
 
@@ -184,9 +172,9 @@ def test_extraction_edge_rows(spark):
 
 def test_fuzz_garbage_payloads_never_kill_tasks(spark):
     """100-TB ingestion reality: random bytes, truncated UTF-8, binary
-    junk behind HTML/PDF magic, empty and NULL payloads. Every row must
-    come back (quarantined, not raised) and a valid document in the
-    same batch must still extract."""
+    junk behind HTML/PDF magic, empty and NULL payloads, invalid UTF-8
+    in the text column. Every row must come back (quarantined, not
+    raised) and valid documents in the same batch must still extract."""
     import random
 
     from webxtract.ops.extract import extract_pages
@@ -215,15 +203,34 @@ def test_fuzz_garbage_payloads_never_kill_tasks(spark):
     rows.append(
         ("good", None, b"<html><body><p>real extractable content here</p></body></html>", None, "en")
     )
+    rows.append(("native", None, None, None, "en"))
     df = spark.createDataFrame(
         rows, "url string, warc_ts timestamp, html binary, text string, lang string"
+    )
+    # a string column can hold invalid UTF-8 (warc_to_pages casts a
+    # text/plain payload in any charset but latin-1 to string): it is
+    # still native text, and comes back byte-identical
+    df = df.withColumn(
+        "text", F.when(F.col("url") == "native", F.lit(b"caf\xe9 ok").cast("string"))
     )
     out = extract_pages(df).collect()
     assert len(out) == len(rows)  # nothing dropped, no task died
     by_url = {r["url"]: r for r in out}
     assert by_url["good"]["parse_failure"] is False
     assert "real extractable content" in by_url["good"]["extracted_text"]
-    garbage = [r for r in out if r["url"] != "good"]
+    native = extract_pages(df).where(F.col("url") == "native").select(
+        "source_kind", "parse_failure", "n_bytes",
+        F.hex(F.col("extracted_text").cast("binary")).alias("text_hex"),
+        F.hex(F.col("spans")[0]["text"].cast("binary")).alias("span_hex"),
+        F.col("spans")[0]["bbox"]["x_max"].alias("x_max"),
+        F.size("spans").alias("n_spans"),
+    )
+    assert native.collect()[0].asDict() == {
+        "source_kind": "text", "parse_failure": False, "n_bytes": 0,
+        "text_hex": "636166E9206F6B", "span_hex": "636166E9206F6B",
+        "x_max": 5.0, "n_spans": 1,
+    }
+    garbage = [r for r in out if r["url"] not in ("good", "native")]
     assert all(r["parse_failure"] for r in garbage)
     assert all(r["extracted_text"] is None for r in garbage)
 

@@ -204,6 +204,32 @@ def test_plain_warc_and_garbage_tail(tmp_path, spark):
     assert rec["payload"] == b"x0"
 
 
+def test_non_utf8_text_plain_extracts_byte_identical(tmp_path, spark):
+    """A text/plain record in a charset other than latin-1 reaches the
+    text column by a binary->string cast, so it may be invalid UTF-8:
+    extraction keeps it as native text, bytes unchanged, and the task
+    survives."""
+    from pyspark.sql import functions as F
+
+    from webxtract.ops.extract import extract_pages
+
+    payload = "café – 10 €".encode("cp1252")
+    path = str(tmp_path / "seg.warc.gz")
+    W.write_warc_gz(path, iter([
+        W.warc_response_record(
+            "http://cp1252.example.com/", "2025-06-01T00:00:00Z", payload,
+            content_type="text/plain; charset=windows-1252",
+        ),
+    ]))
+    out = extract_pages(W.warc_to_pages(W.read_warc(spark, str(tmp_path))))
+    got = out.select(
+        "source_kind", "parse_failure",
+        F.col("extracted_text").cast("binary").alias("text"),
+        F.col("spans")[0]["text"].cast("binary").alias("span"),
+    ).collect()
+    assert [tuple(r) for r in got] == [("text", False, payload, payload)]
+
+
 def test_warc_extraction_stream_incremental(spark, warc_dir, tmp_path):
     """Streaming crawl ingest: run 1 extracts segment drop A; run 2
     (same checkpoint) sees A+B but processes only B — segment-level

@@ -3,15 +3,17 @@ EXTRACTED_SCHEMA rows.
 
 Spark plan shape (SURVEY.md §3.1 trace / §4.4): one column-pruned scan
 of exactly (url, warc_ts, lang, html, text) feeding ONE ``MapInPandas``
-node, ``_extract_batches``. No Filter, no Union, no Exchange: the stage
-is a narrow map over its input splits and scales linearly with them.
+node, ``_extract_batches``, and one projection. No Filter, no Union, no
+Exchange: a narrow map that scales linearly with the input splits.
 
 The kernel picks each row's path once, the way the reference picks a
 request's path once (magic bytes -> PDF or image, else HTTP 400,
 ocr.py:250-273):
 
-1. non-blank pre-extracted ``text`` (Spark ``trim`` semantics: only
-   ``' '`` is stripped) is the document: one span, ``source_kind`` text;
+1. non-blank pre-extracted ``text`` (Spark ``trim``: only ``' '`` is
+   blank) is the document, ``source_kind`` text. It crosses the kernel as
+   raw bytes and the projection after it builds its text and span, so
+   invalid UTF-8 in a string column (``warc_to_pages``) is never decoded;
 2. no ``html`` payload at all is quarantined as a parse failure
    (``source_kind`` none — the HTTP-400 analog, ocr.py:73-78, a row
    flag, not an exception);
@@ -26,23 +28,17 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StructField, StructType
 
 from webxtract.ops.extract_html import extract_html
 from webxtract.ops.extract_pdf import PDF_MAGIC, extract_pdf
 from webxtract.schemas import EXTRACTED_SCHEMA
 
 _META_COLS = ["url", "warc_ts", "lang"]
-
-
-_RESULT_COLS = [
-    "extracted_text",
-    "spans",
-    "n_pages",
-    "avg_confidence",
-    "source_kind",
-    "parse_failure",
-    "n_bytes",
-]
+# EXTRACTED_SCHEMA plus ``native``: the raw bytes of a native-text row.
+_KERNEL_SCHEMA = StructType([*EXTRACTED_SCHEMA.fields, StructField("native", BinaryType())])
+_RESULT_COLS = _KERNEL_SCHEMA.fieldNames()[len(_META_COLS) :]
 
 
 def _result_frame(meta: pd.DataFrame, results: list[tuple]) -> pd.DataFrame:
@@ -53,17 +49,15 @@ def _result_frame(meta: pd.DataFrame, results: list[tuple]) -> pd.DataFrame:
         cols = ([] for _ in _RESULT_COLS)
     for name, values in zip(_RESULT_COLS, cols, strict=True):
         out[name] = list(values)
-    return out[[f.name for f in EXTRACTED_SCHEMA.fields]]
+    return out
 
 
-def _extract(html: bytes | None, text: str | None) -> tuple:
+def _extract(html: bytes | None, text: bytes | None) -> tuple:
     """One page -> the ``_RESULT_COLS`` values, dispatched as above."""
-    if text is not None and text.strip(" "):
-        bbox = {"x_min": 0.0, "y_min": 0.0, "x_max": float(len(text)), "y_max": 0.0}
-        spans = [{"text": text, "confidence": 1.0, "bbox": bbox}]
-        return text, spans, 1, 1.0, "text", False, len(html) if html else 0
+    if text is not None and text.strip(b" "):
+        return None, None, 1, 1.0, "text", False, len(html) if html else 0, text
     if html is None:
-        return None, None, 0, 0.0, "none", True, 0
+        return None, None, 0, 0.0, "none", True, 0, None
     if html.startswith(PDF_MAGIC):
         extracted, spans, n_pages, failed, used_ocr = extract_pdf(html)
         kind = "pdf_ocr" if used_ocr else "pdf"
@@ -71,7 +65,7 @@ def _extract(html: bytes | None, text: str | None) -> tuple:
         extracted, spans, failed = extract_html(html)
         n_pages, kind = (0 if failed else 1), "html"
     avg_conf = sum(s["confidence"] for s in spans) / len(spans) if spans else 0.0
-    return extracted, spans, n_pages, avg_conf, kind, failed, len(html)
+    return extracted, spans, n_pages, avg_conf, kind, failed, len(html), None
 
 
 def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -79,13 +73,28 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     # task (the reference's lazy reader singleton, image_ocr.py:13-19).
     for batch in batches:
         results = [
-            _extract(bytes(html) if html is not None else None, text)
-            for html, text in zip(batch["html"], batch["text"])
+            _extract(*(bytes(v) if v is not None else None for v in pair))
+            for pair in zip(batch["html"], batch["text"])
         ]
         yield _result_frame(batch[_META_COLS], results)
 
 
 def extract_pages(pages: DataFrame) -> DataFrame:
     """pages -> extracted (EXTRACTED_SCHEMA): one scan, one kernel, no shuffle."""
-    src = pages.select("url", "warc_ts", "lang", "html", "text")
-    return src.mapInPandas(_extract_batches, schema=EXTRACTED_SCHEMA)
+    text = F.col("text").cast("binary").alias("text")
+    out = pages.select(*_META_COLS, "html", text).mapInPandas(
+        _extract_batches, schema=_KERNEL_SCHEMA
+    )
+    native = F.col("native").cast("string")  # the input's bytes, unchanged
+    zero = F.lit(0.0)
+    bbox = F.struct(
+        zero.alias("x_min"), zero.alias("y_min"),
+        F.length(native).cast("double").alias("x_max"), zero.alias("y_max"),
+    )
+    span = F.struct(native.alias("text"), F.lit(1.0).alias("confidence"), bbox.alias("bbox"))
+    return out.select(
+        *_META_COLS,
+        F.coalesce(native, "extracted_text").alias("extracted_text"),
+        F.when(native.isNotNull(), F.array(span)).otherwise(F.col("spans")).alias("spans"),
+        *_RESULT_COLS[2:-1],
+    )
