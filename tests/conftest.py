@@ -25,6 +25,26 @@ def spark():
     yield spark
 
 
+@pytest.fixture
+def many_partitions(spark):
+    """The session with 16 shuffle partitions that AQE may not coalesce,
+    so a shuffle-partitioned kernel sees many small partitions. Both
+    settings are restored afterwards: the spark fixture is shared by
+    the whole session."""
+    conf = {
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.shuffle.partitions": "16",
+    }
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield spark
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
 @pytest.fixture(scope="session")
 def corpus(tmp_path_factory):
     """Synthetic corpus on disk: (pages_path, expected pandas frame)."""

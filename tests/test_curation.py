@@ -238,6 +238,124 @@ def test_dedup_components_transitive_chain(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
+def _union_find_components(pairs):
+    """Reference: {id: minimum id of its component} by a plain
+    union-find over non-NULL pairs."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _component_rounds(out) -> int:
+    """Rounds dedup_components ran: each round's labels are one
+    checkpointed scan in the output plan."""
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    return plan.count("LogicalRDD")
+
+
+def test_dedup_components_edge_case_rows(spark):
+    """Edge-case rows of the output contract: a
+    self-pair labels itself; a NULL end connects nothing and yields one
+    (NULL, NULL) row; pair orientation and repeats do not matter; no
+    pairs give no rows with the same schema."""
+    from webxtract.dedup import dedup_components
+
+    def run(rows):
+        out = dedup_components(spark.createDataFrame(rows, "a long, b long"))
+        assert out.schema.simpleString() == "struct<id:bigint,component:bigint>"
+        return sorted(map(tuple, out.collect()), key=str)
+
+    assert run([(5, 5)]) == [(5, 5)]
+    assert run([(7, None)]) == [(7, 7), (None, None)]
+    assert run([(None, None)]) == [(None, None)]
+    assert run([(7, None), (None, 3), (3, 4)]) == [
+        (3, 3), (4, 3), (7, 7), (None, None)
+    ]
+    assert run([(9, 8)]) == [(8, 8), (9, 8)]
+    assert run([(8, 9), (9, 8), (8, 9)]) == [(8, 8), (9, 8)]
+    assert run([]) == []
+
+
+def test_dedup_components_random_graphs_many_partitions(many_partitions):
+    """Across 16 uncoalesced partitions, random sparse graphs with
+    64-bit ids (above float64's exact range) match a union-find."""
+    import random
+
+    from webxtract.dedup import dedup_components
+
+    for seed in range(2):
+        rng = random.Random(seed)
+        ids = rng.sample(range(2**62), 300)
+        pairs = [tuple(rng.sample(ids, 2)) for _ in range(280)]
+        pairs += [(ids[0], ids[0])]
+        df = many_partitions.createDataFrame(pairs, "a long, b long")
+        got = {r.id: r.component for r in dedup_components(df).collect()}
+        assert got == _union_find_components(pairs)
+
+
+def test_dedup_components_chain_and_star_converge(many_partitions):
+    """Pinned round counts across 16 uncoalesced partitions: a
+    10^4-vertex chain with shuffled ids (each round contracts only what
+    one partition sees) and a 10^5-edge star (every edge shares its lo:
+    one partition, one round)."""
+    import random
+
+    from webxtract.dedup import dedup_components
+
+    ids = list(range(10_000))
+    random.Random(7).shuffle(ids)
+    chain = list(zip(ids, ids[1:]))
+    out = dedup_components(
+        many_partitions.createDataFrame(chain, "a long, b long")
+    )
+    assert _component_rounds(out) <= 26
+    got = out.groupBy("component").count().collect()
+    assert [tuple(r) for r in got] == [(0, 10_000)]
+
+    star = [(0, i) for i in range(1, 100_001)]
+    out = dedup_components(many_partitions.createDataFrame(star, "a long, b long"))
+    assert _component_rounds(out) == 1
+    got = out.groupBy("component").count().collect()
+    assert [tuple(r) for r in got] == [(0, 100_001)]
+
+
+def test_dedup_components_string_ids_many_partitions(many_partitions):
+    """String ids keep their labels across 16 partitions: the minimum is
+    the code-point (UTF-8 byte) minimum, non-ASCII included, and bytes
+    that are not valid UTF-8 come back unchanged."""
+    import random
+
+    from webxtract.dedup import dedup_components
+
+    rng = random.Random(3)
+    alphabet = ["a", "z", "é", "ß", "Ω", "中", "😀", "A", "-"]
+    ids = sorted({"".join(rng.choices(alphabet, k=3)) for _ in range(400)})
+    pairs = [tuple(rng.sample(ids, 2)) for _ in range(250)]
+    df = many_partitions.createDataFrame(pairs, "a string, b string")
+    got = {r.id: r.component for r in dedup_components(df).collect()}
+    assert got == _union_find_components(pairs)
+
+    raw = many_partitions.createDataFrame(
+        [(b"caf\xe9", b"cafe"), (b"cafe", b"\xff")], "a binary, b binary"
+    ).select(F.col("a").cast("string").alias("a"), F.col("b").cast("string").alias("b"))
+    out = dedup_components(raw).select(
+        F.col("id").cast("binary").alias("id"),
+        F.col("component").cast("binary").alias("component"),
+    )
+    got = {bytes(r.id): bytes(r.component) for r in out.collect()}
+    assert got == {b"cafe": b"cafe", b"caf\xe9": b"cafe", b"\xff": b"cafe"}
+
+
 def test_normalize_text_composition_and_controls(spark):
     """NFC composes decomposed accents (e + U+0301 -> é), maps
     singleton codepoints (ANGSTROM SIGN U+212B -> Å), strips
@@ -622,6 +740,37 @@ def test_dedup_keep_best_hand_computed(spark):
     assert got[4].keep is True and got[5].keep is False
     assert got[5].kept_id == 4
     assert got[9].keep is True and got[9].kept_id == 9 and got[9].component == 9
+
+
+def test_dedup_keep_best_job_budget(spark):
+    """One dedup_keep_best call on a curate-sized input (~420 docs, 144
+    pairs over 180 docs in small clusters), its result consumed, runs
+    at most 15 Spark jobs: AQE coalesces the pair list into one
+    partition, so one component round finishes."""
+    import random
+
+    from webxtract.dedup import dedup_keep_best
+
+    rng = random.Random(11)
+    ids = rng.sample(range(10**6), 420)
+    docs = spark.createDataFrame(
+        [(i, "x" * rng.randrange(1, 50)) for i in ids], "doc_id long, text string"
+    )
+    pairs = []
+    members = ids[:180]
+    for c in range(36):  # 36 clusters of 5 docs, 4 pairs each
+        group = members[5 * c : 5 * c + 5]
+        pairs += [(group[k], rng.choice(group[:k])) for k in range(1, 5)]
+    pairs = spark.createDataFrame(pairs, "a long, b long")
+    sc = spark.sparkContext
+    sc.setJobGroup("keep_best_budget", "dedup_keep_best job budget")
+    try:
+        rows = dedup_keep_best(docs, pairs).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("keep_best_budget"))
+    assert len(rows) == 420 and sum(r.keep for r in rows) == 420 - 144
+    assert n_jobs <= 15
 
 
 def test_tag_topics_hand_computed(spark):

@@ -351,6 +351,27 @@ def test_host_components_clusters_and_singleton_loop(spark):
     }
 
 
+def test_host_components_many_partitions_non_ascii(many_partitions):
+    """Across 16 uncoalesced partitions, a random host graph with
+    non-ASCII (IDN) hosts and self-loops gets the union-find labels:
+    the component is the code-point smallest host."""
+    import random
+
+    from tests.test_curation import _union_find_components
+    from webxtract.linkgraph import host_components
+
+    rng = random.Random(5)
+    labels = ["a", "b", "ü", "é", "中文", "xn--bcher-kva", "ß", "z"]
+    hosts = sorted(
+        {".".join(rng.choices(labels, k=2)) + ".example" for _ in range(200)}
+    )
+    edges = [tuple(rng.sample(hosts, 2)) for _ in range(150)]
+    edges += [(h, h) for h in hosts[:5]]
+    df = many_partitions.createDataFrame(edges, "src_host string, dst_host string")
+    got = {r["host"]: r["component"] for r in host_components(df).collect()}
+    assert got == _union_find_components(edges)
+
+
 def test_sitemap_entries_block_scoped_lastmod(spark):
     """lastmod attaches only to its OWN <url> block; loc whitespace is
     trimmed; a sitemapindex yields children but zero url entries; junk

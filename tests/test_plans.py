@@ -682,3 +682,23 @@ def test_structured_metadata_is_narrow(spark):
     plan = _plan(q_structured_metadata(spark, TESTDATA).limit(5))
     assert _nodes(plan, "Exchange") == 0
     assert _python_node_names(plan) == []
+
+
+def test_component_round_is_one_arrow_kernel(spark):
+    """A dedup_components round is two exchanges around one mapInArrow
+    kernel: the repartition on lo (the deduplication reuses it) and the
+    per-id aggregation. The components the rounds return are
+    materialised, so no Python runs again when they are read."""
+    from pyspark.sql import functions as F
+
+    from webxtract.dedup import _min_root_round, dedup_components
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 9)], "a long, b long")
+    edges = pairs.select(
+        F.col("a").alias("lo"), F.col("b").alias("hi"), F.lit(False).alias("nul")
+    )
+    plan = _plan(_min_root_round(edges))
+    assert _nodes(plan, "Exchange") == 2
+    assert "REPARTITION_BY_COL" in plan
+    assert _python_node_names(plan) == ["MapInArrow"]
+    assert _python_node_names(_plan(dedup_components(pairs))) == []

@@ -585,9 +585,9 @@ def q_benchmark_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the simhash near-dup pair graph
-    (same planted-copy construction as q_simhash_near_dup): iterative
-    min-label propagation, checked against a DuckDB recursive-CTE
-    transitive closure."""
+    (same planted-copy construction as q_simhash_near_dup): rounds of
+    the min-root union-find kernel, checked against a DuckDB
+    recursive-CTE transitive closure."""
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
     near = d.select(
         (F.col("doc_id") + 100000).alias("doc_id"),

@@ -434,91 +434,172 @@ def near_dedup_increment(
     )
 
 
+def _min_root_batches(batches):  # noqa: ANN001, ANN202
+    """One connected-components round over ONE partition of ``(lo, hi,
+    nul)`` edges: ``(id, root)`` for every vertex of the partition, root
+    = the minimum id of the vertex's component among this partition's
+    edges. Rows with a NULL ``lo`` carry no edge; ``nul`` marks a pair
+    that had a NULL end, which yields the one ``(NULL, NULL)`` row.
+
+    The ids are factorised with ``np.unique`` (sorted, so index order
+    is id order: Spark's ``min`` for numbers, and for binary ids the
+    unsigned byte order Spark uses for strings), then a vectorised
+    hook-and-compress union-find runs over the index pairs: every root
+    hooks to the smallest root across its edges (``np.minimum.at``),
+    then every label jumps to its root (``lab = lab[lab]`` until it
+    stops changing); repeat until no edge joins two roots. A label never
+    points at a larger index, so the component minimum is every
+    member's root."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    batches = list(batches)
+    if not batches:
+        return
+    t = pa.Table.from_batches(batches)
+    lo, hi = t.column("lo"), t.column("hi")
+    has_edge = pc.is_valid(lo)
+    lo = lo.filter(has_edge).to_numpy()
+    ids, inv = np.unique(
+        np.concatenate([lo, hi.filter(has_edge).to_numpy()]), return_inverse=True
+    )
+    u, v = inv[: len(lo)], inv[len(lo) :]
+    lab = np.arange(len(ids))
+    while True:
+        lu, lv = lab[u], lab[v]
+        hooked = lab.copy()
+        np.minimum.at(hooked, lu, lv)
+        np.minimum.at(hooked, lv, lu)
+        while True:
+            jumped = hooked[hooked]
+            if np.array_equal(jumped, hooked):
+                break
+            hooked = jumped
+        if np.array_equal(hooked, lab):
+            break
+        lab = hooked
+    id_type = t.schema.field("lo").type
+    out_id, out_root = ids, ids[lab]
+    if pc.any(t.column("nul")).as_py():
+        out_id = np.append(out_id, None)
+        out_root = np.append(out_root, None)
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(out_id, id_type), pa.array(out_root, id_type)],
+        ["id", "root"],
+    )
+
+
+def _min_root_round(edges: DataFrame) -> DataFrame:
+    """One round of dedup_components over ``(lo, hi, nul)`` edges:
+    ``(id, label, roots)`` — every local root of each vertex, and the
+    smallest as its label. One exchange feeds the kernel (the
+    deduplication reuses the ``lo`` partitioning) and one the
+    aggregation."""
+    from pyspark.sql.types import StructField, StructType
+
+    kt = edges.schema["lo"].dataType
+    return (
+        edges.repartition("lo")
+        .distinct()
+        .mapInArrow(
+            _min_root_batches,
+            StructType([StructField("id", kt), StructField("root", kt)]),
+        )
+        .groupBy("id")
+        .agg(F.min("root").alias("label"), F.collect_set("root").alias("roots"))
+    )
+
+
 def dedup_components(
     pairs: DataFrame,
     a_col: str = "a",
     b_col: str = "b",
-    max_iterations: int = 50,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair list: (id,
-    component) where component is the minimum doc id reachable through
+    component) where component is the minimum id reachable through
     the pair graph — the standard "cluster near-dups, keep one
-    canonical doc per cluster" step after any pair generator.
+    canonical doc per cluster" step after any pair generator. Ids are
+    integers or strings; strings compare by their UTF-8 bytes, which
+    is code-point order, as Spark's ``min`` does.
 
-    Algorithm: iterative min-label propagation with POINTER JUMPING
-    over the symmetrized edge list. Each round every vertex takes
-    min(own label, neighbors' labels), then additionally follows its
-    label's own label (label-of-label self-join) — the standard
-    doubling trick, so a chain of diameter d converges in O(log d)
-    rounds instead of O(d) (measured: 12 rounds -> 4 on a planted
-    diameter-11 chain). Each round is two joins + one aggregation; the
-    loop materializes labels per round (localCheckpoint, flat lineage)
-    and the convergence flag rides in the same materialized frame. At
-    10^12-doc scale the loop holds because labels/edges carry two
-    bigints per row.
+    Algorithm: rounds of a min-root kernel (Kiveris et al., SoCC 2014).
+    Each pair is normalised to ``(lo, hi)`` with least/greatest. A
+    round (``_min_root_round``) repartitions the edges on ``lo`` with
+    no partition count, so AQE sizes the partitions; one NumPy
+    union-find per partition (``_min_root_batches``) gives each vertex
+    its local root; ``groupBy("id")`` makes the smallest root the
+    vertex's label and turns each other root r into a contracted edge
+    ``(label, r)``, the next round's input. When no contracted edge is
+    left, the rounds' labels are composed with one left join per round.
+    A pair list AQE coalesces into one partition (the curate input)
+    finishes in one round.
 
-    Only vertices that appear in ``pairs`` are labeled (singletons are
-    their own trivial component and never needed the shuffle)."""
-    # materialize once: edges are re-read every round, and the upstream
-    # pair generation (LSH explode + self-join) must not re-execute per
-    # iteration
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    Termination needs no cap. A local root r is the minimum of its
+    local component, so it is the ``lo`` of its edges there, and all
+    edges with ``lo = r`` share one partition: each vertex is a root in
+    at most one partition, and the largest vertex of a component with
+    an edge is never a root. Counting (vertex, partition) incidences,
+    each round's contracted edge list is strictly shorter than its
+    input.
+
+    Each round is four Spark jobs under AQE: the two shuffle stages
+    and the count of contracted edges (map and result stage). That
+    count also fills the round's lazy localCheckpoint, which the next
+    round and the final joins read instead of the lineage. Nothing is
+    collected to the driver.
+
+    ``mapInArrow``, not ``mapInPandas``: a NULL end must reach the
+    kernel as NULL, and pandas turns a nullable bigint column into
+    float64, which corrupts ids above 2**53. String ids cross the
+    kernel as binary, so bytes that are not valid UTF-8 (a
+    binary->string cast does not check) are never decoded.
+
+    NULL connects nothing: a pair ``(x, NULL)`` gives ``x`` no
+    neighbour and adds one ``(NULL, NULL)`` row; a self-pair ``(x,
+    x)`` labels ``x`` with itself. Only vertices that appear in
+    ``pairs`` are labeled (singletons are their own trivial component
+    and never needed the shuffle)."""
+    from pyspark.sql.types import StringType
+
+    a, b = F.col(a_col), F.col(b_col)
+    edges = pairs.select(
+        F.least(a, b).alias("lo"),  # least/greatest skip a NULL end
+        F.greatest(a, b).alias("hi"),
+        (a.isNull() | b.isNull()).alias("nul"),
     )
-    labels = edges.select(F.col("src").alias("id")).distinct().select(
-        "id", F.col("id").alias("component")
-    )
-    for _ in range(max_iterations):
-        # neighbor minimum, then min with own label; the convergence
-        # flag rides along in the SAME materialized frame so the check
-        # is a filter over checkpointed data, not an extra join
-        neighbor_min = (
-            edges.join(labels, edges.src == labels.id)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("component").alias("nmin"))
+    id_type = edges.schema["lo"].dataType
+    as_bytes = isinstance(id_type, StringType)
+    if as_bytes:
+        edges = edges.select(
+            F.col("lo").cast("binary"), F.col("hi").cast("binary"), "nul"
         )
-        stepped = labels.join(neighbor_min, "id", "left").select(
-            "id",
-            F.col("component").alias("__old"),
-            F.least(
-                F.col("component"), F.coalesce(F.col("nmin"), F.col("component"))
-            ).alias("c1"),
+    rounds = []
+    while True:
+        step = _min_root_round(edges).localCheckpoint(eager=False)
+        rounds.append(step.select("id", "label"))
+        edges = step.select(
+            F.col("label").alias("lo"),
+            F.explode(F.array_remove("roots", F.col("label"))).alias("hi"),
+            F.lit(False).alias("nul"),
         )
-        # pointer jump: component <- label of my component
-        self_map = stepped.select(
-            F.col("id").alias("__cid"), F.col("c1").alias("__cc")
-        )
-        jumped = (
-            stepped.join(self_map, stepped.c1 == self_map.__cid, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("c1"), F.coalesce(F.col("__cc"), F.col("c1"))
-                ).alias("component"),
-                F.col("__old"),
-            )
-            .select(
-                "id",
-                "component",
-                (F.col("component") < F.col("__old")).alias("__changed"),
-            )
-            # LAZY checkpoint + a FULL count: the count computes every
-            # partition (through the narrow filter), persisting the
-            # round's labels, and doCheckpoint then truncates lineage
-            # without launching a second job — one job per round where
-            # the eager-checkpoint + limit(1).count() form paid two
-            # (measured ~0.2-0.3 s of pure scheduling per round at
-            # fixture scale).
-            .localCheckpoint(eager=False)
-        )
-        changed = jumped.filter(F.col("__changed")).count()
-        labels = jumped.drop("__changed")
-        if changed == 0:
+        # the full count computes every partition of the lazy checkpoint
+        # (persisting the round) in the round's one result job
+        if edges.count() == 0:
             break
-    return labels
+    comp = rounds.pop()
+    for step in reversed(rounds):
+        comp = step.join(
+            comp.select(F.col("id").alias("label"), F.col("label").alias("__root")),
+            "label",
+            "left",
+        ).select("id", F.coalesce("__root", "label").alias("label"))
+    out = comp.select("id", F.col("label").alias("component"))
+    if as_bytes:
+        out = out.select(
+            F.col("id").cast("string"), F.col("component").cast("string")
+        )
+    return out
 
 
 def ngram_jaccard_pairs(
@@ -828,7 +909,6 @@ def dedup_keep_best(
     score: Column | None = None,
     a_col: str = "a",
     b_col: str = "b",
-    max_iterations: int = 50,
 ) -> DataFrame:
     """Cluster-representative selection — the step every fuzzy-dedup
     pipeline runs after its pair generator: resolve near-dup pairs to
@@ -842,8 +922,10 @@ def dedup_keep_best(
     representative and `kept_id` points every dropped member at the doc
     that replaces it (the redirect map for provenance/audit).
 
-    Scale shape: components carry two bigints per row (see
-    dedup_components); the representative choice is one window over
+    Scale shape: the components come from dedup_components' min-root
+    kernel rounds — on a pair list AQE fits into one partition that is
+    one round of four Spark jobs — and its (id, component) output is
+    already materialised; the representative choice is one window over
     `component` whose rows are (id, score, component) only — `score` is
     computed BEFORE the join so document text never shuffles. Cluster
     sizes are candidate-pair bounded (the upstream generators cap
@@ -851,9 +933,7 @@ def dedup_keep_best(
     by construction."""
     from pyspark.sql import Window
 
-    comp = dedup_components(
-        pairs, a_col=a_col, b_col=b_col, max_iterations=max_iterations
-    )
+    comp = dedup_components(pairs, a_col=a_col, b_col=b_col)
     s = score if score is not None else F.length("text")
     base = docs.select(F.col(id_col).alias("id"), s.alias("__score"))
     j = base.join(comp, "id", "left").select(

@@ -460,25 +460,23 @@ def host_components(
     hedges: DataFrame,
     src_col: str = "src_host",
     dst_col: str = "dst_host",
-    max_iterations: int = 50,
 ) -> DataFrame:
     """Weakly-connected components of the host graph — the site-family
     / mirror-cluster grouping (CC's host web graph ships exactly this
     as its component column): ``(host, component)`` where component is
-    the lexicographically smallest host reachable through the
-    (symmetrized) edge list. Reuses the dedup pointer-jumping
-    min-label kernel verbatim — labels are strings here, and min/least
-    over Spark's binary string ordering matches DuckDB's default
-    binary collation, so the recursive-CTE oracle agrees byte-for-
-    byte. Same scale contract: O(log diameter) rounds, per-round
-    shuffles carry two strings per row, only hosts that appear in an
-    edge are labeled (isolated hosts are their own trivial component
-    and never needed the shuffle)."""
+    the lexicographically smallest host reachable through the edge
+    list, direction ignored. The dedup min-root kernel rounds
+    (dedup_components) with string ids: hosts cross the kernel as
+    bytes and the kernel's sort is unsigned byte order, the order of
+    Spark's string ``min`` and of DuckDB's default binary collation,
+    so the recursive-CTE oracle agrees byte-for-byte. Same scale
+    contract: a handful of Spark jobs per round, rows carry host names
+    only, and only hosts that appear in an edge are labeled (isolated
+    hosts are their own trivial component and never needed the
+    shuffle)."""
     from webxtract.dedup import dedup_components
 
-    comp = dedup_components(
-        hedges, a_col=src_col, b_col=dst_col, max_iterations=max_iterations
-    )
+    comp = dedup_components(hedges, a_col=src_col, b_col=dst_col)
     return comp.select(F.col("id").alias("host"), "component")
 
 
