@@ -14,11 +14,11 @@ deterministic, no RNG, no external data:
   fit to ~zero log-odds for all classes;
 - model: multinomial naive Bayes over tokens hashed into
   ``N_BUCKETS`` buckets with the engine-neutral md5-60 hash
-  (``textops.stable_hash60_expr``); weight = per-class log-odds vs the
+  (``kernels.md5_60``); weight = per-class log-odds vs the
   pooled background, Laplace alpha=0.5;
 - output: ``webxtract/lang_clf.py`` — a literal weight table the
   serving kernel ships with its closure (one zero-shuffle, zero-join
-  mapInPandas pass, the same 100-TB serving shape as
+  mapInArrow pass, the same 100-TB serving shape as
   ``curation.classifier_scores_frame``).
 
 Run:  python scripts/fit_lang_clf.py   (rewrites webxtract/lang_clf.py,
@@ -27,7 +27,6 @@ then self-evaluates on sf0.001 documents with planted stopwords).
 
 from __future__ import annotations
 
-import hashlib
 import math
 import os
 import sys
@@ -39,13 +38,10 @@ N_BUCKETS = 256
 ALPHA = 0.5
 
 
-def h60(token: str) -> int:
-    """Python twin of textops.stable_hash60_expr (md5 low-60-bit)."""
-    return int(hashlib.md5(token.encode("utf-8")).hexdigest()[:15], 16)
-
-
 def bucket(token: str) -> int:
-    return h60(token) % N_BUCKETS
+    from webxtract.kernels import md5_60
+
+    return md5_60(token) % N_BUCKETS
 
 
 def _background_vocab() -> list[str]:
@@ -120,7 +116,7 @@ def emit(langs: list[str], weights: dict[str, list[float]]) -> None:
         "",
         "Hashed multinomial-NB language-ID weight table: per language,",
         f"{N_BUCKETS} bucket log-odds vs the pooled background (md5-60",
-        "token hash, Laplace alpha=0.5). Served by the mapInPandas kernel",
+        "token hash, Laplace alpha=0.5). Served by the mapInArrow kernel",
         'textops.lang_id_clf_frame; mirrored bucket-for-bucket by the',
         'DuckDB oracle (oracles._lang_clf_sql)."""',
         "",

@@ -1,0 +1,159 @@
+"""The shared kernel rules (``webxtract.kernels``): Spark parity of
+md5-60, the Java ``\\s`` split and ``round``; ids that cross a Python
+kernel come back exactly; and no module restates the rules inline."""
+
+from pathlib import Path
+
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
+import webxtract
+from webxtract import curation, dedup, textops
+from webxtract.kernels import md5_60, spark_round, ws_split
+
+BIG = 2**60 + 1  # not a float64: pandas would turn it into 2**60
+TEXT = "the cat sat on the mat, the cat sat. Привет мир 你好"
+
+
+def test_md5_60_matches_stable_hash60_expr(spark):
+    strings = ["hello world", "café crème", "日本語", "astral 😀 𝄞", ""]
+    df = spark.createDataFrame([(s,) for s in strings], "s string")
+    got = [r[0] for r in df.select(textops.stable_hash60_expr(F.col("s"))).collect()]
+    assert got == [md5_60(s) for s in strings]
+
+
+def test_ws_split_matches_spark_split_trim(spark):
+    strings = ["", "   ", "a b", "  a  b ", "\ta\x0bb\x0cc\rd\n", "a b c"]
+    df = spark.createDataFrame([(s,) for s in strings], "s string")
+    got = [r[0] for r in df.select(textops.tokens_expr(F.col("s"))).collect()]
+    assert got == [ws_split(s) for s in strings]
+    assert ws_split(None) == [""]
+
+
+def test_spark_round_matches_f_round(spark):
+    cases = [
+        (2.675, 2),
+        (0.0000005, 6),
+        (1.0000005, 6),
+        (-0.0000015, 6),
+        (1e-7, 6),
+        (0.125, 2),
+        (np.float64(2.675), 2),
+        (np.float64(1.0000005), 6),
+    ]
+    row = spark.createDataFrame(
+        [tuple(float(x) for x, _ in cases)],
+        ", ".join(f"x{i} double" for i in range(len(cases))),
+    )
+    got = row.select(
+        *[F.round(f"x{i}", dp) for i, (_, dp) in enumerate(cases)]
+    ).first()
+    assert list(got) == [spark_round(x, dp) for x, dp in cases]
+
+
+SCORERS = {
+    "repetition_signals": lambda d: curation.repetition_signals(d),
+    "tag_topics_frame": lambda d: curation.tag_topics_frame(d),
+    "dsir_scores_frame": lambda d: curation.dsir_scores_frame(
+        d, [0.01 * b for b in range(64)]
+    ),
+    "classifier_scores_frame": lambda d: curation.classifier_scores_frame(
+        d, [0.01 * b - 0.3 for b in range(64)]
+    ),
+    "lang_id_clf_frame": lambda d: textops.lang_id_clf_frame(d),
+    "script_signals_frame": lambda d: textops.script_signals_frame(d),
+}
+
+
+@pytest.mark.parametrize("name", sorted(SCORERS))
+def test_scorer_ids_come_back_exactly(spark, name):
+    """One Arrow batch holding a NULL id, an id above 2**53 and a NULL
+    text: every id comes back as it went in, and a string-id twin
+    scores each document alike."""
+    score = SCORERS[name]
+    rows = [(None, TEXT), (BIG, TEXT), (7, None)]
+    got = score(
+        spark.createDataFrame(rows, "doc_id bigint, text string").coalesce(1)
+    ).collect()
+    assert [r[0] for r in got] == [None, BIG, 7]
+    assert got[0][1:] == got[1][1:]
+
+    srows = [(None, TEXT), ("d-ü", TEXT), ("7", None)]
+    sgot = score(
+        spark.createDataFrame(srows, "doc_id string, text string").coalesce(1)
+    ).collect()
+    assert [r[0] for r in sgot] == [None, "d-ü", "7"]
+    assert [r[1:] for r in sgot] == [r[1:] for r in got]
+
+
+PASSAGE = " ".join(f"w{i % 23} t{i % 7}" for i in range(60))
+CHUNK_DOCS = [
+    "lead in words " + PASSAGE + " tail one",
+    "other preamble " + PASSAGE,
+    PASSAGE + " and a different ending here",
+    "nothing shared with anyone at all",
+]
+
+
+def _chunk_outputs(df):  # noqa: ANN001, ANN202
+    return (
+        sorted(
+            map(tuple, dedup.duplicate_chunks(df, boundary_mod=4, min_dup_tokens=3).collect())
+        ),
+        dedup.dedup_chunks(df, boundary_mod=4, min_dup_tokens=3).collect(),
+        dedup.doc_containment(df, boundary_mod=4, min_tok=3, min_chunks=1).collect(),
+    )
+
+
+def test_chunk_kernels_take_string_ids(spark):
+    """A string-id frame gives the bigint frame's rows under the id
+    map (the map keeps the id order, which decides the kept copy)."""
+    ids = [1, 2, 3, 4]
+    sid = {i: f"doc-{i}" for i in ids}
+    num = spark.createDataFrame(list(zip(ids, CHUNK_DOCS)), "doc_id bigint, text string")
+    txt = spark.createDataFrame(
+        [(sid[i], t) for i, t in zip(ids, CHUNK_DOCS)], "doc_id string, text string"
+    )
+    n_dup, n_rew, n_con = _chunk_outputs(num)
+    s_dup, s_rew, s_con = _chunk_outputs(txt)
+    assert n_dup and s_dup == n_dup
+    assert sorted((sid[r.id], *r[1:]) for r in n_rew) == sorted(map(tuple, s_rew))
+    assert n_con
+    assert sorted((sid[r.a], sid[r.b], *r[2:]) for r in n_con) == sorted(
+        map(tuple, s_con)
+    )
+
+
+def test_chunk_kernels_carry_ids_exactly(spark):
+    """One Arrow batch holding a NULL id and an id above 2**53: each
+    chunk kernel returns the ids as they went in."""
+    rows = [(None, CHUNK_DOCS[0]), (BIG, CHUNK_DOCS[1]), (7, CHUNK_DOCS[2])]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string").coalesce(1)
+    dup, rew, con = _chunk_outputs(df)
+    assert dup
+    assert sorted(r.id for r in rew if r.id is not None) == [7, BIG]
+    assert sum(r.id is None for r in rew) == 1
+    meta = dedup._chunk_meta_frame(df, boundary_mod=4).select("id").distinct()
+    assert sorted(meta.collect(), key=lambda r: (r.id is not None, r.id)) == [
+        (None,),
+        (7,),
+        (BIG,),
+    ]
+    # containment pairs never include the NULL id (a.id != b.id)
+    assert {(r.a, r.b) for r in con} == {(BIG, 7), (7, BIG)}
+
+
+def test_spark_parity_rules_live_in_kernels():
+    """md5-60, Spark round and the Java \\s split are written once, in
+    webxtract/kernels.py (oracles.py holds their SQL twins)."""
+    root = Path(webxtract.__file__).parent
+    patterns = ["hexdigest()[:15]", "ROUND_HALF_UP", 're.compile(r"\\s+", re.ASCII)']
+    found = [
+        f"{p.relative_to(root)}: {pat}"
+        for p in sorted(root.rglob("*.py"))
+        if p.relative_to(root).as_posix() not in ("kernels.py", "oracles.py")
+        for pat in patterns
+        if pat in p.read_text(encoding="utf-8")
+    ]
+    assert found == []

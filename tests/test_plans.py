@@ -428,7 +428,7 @@ def test_postings_plan_bounded(spark):
 
 
 def test_tag_topics_is_narrow(spark):
-    """Topic tagging is one narrow mapInPandas kernel pass (no
+    """Topic tagging is one narrow mapInArrow kernel pass (no
     rule-table join): exactly one Python node, zero joins/explodes, one
     output-sort exchange."""
     from webxtract.contract import q_tag_topics
@@ -436,7 +436,7 @@ def test_tag_topics_is_narrow(spark):
     plan = _plan(q_tag_topics(spark, TESTDATA))
     assert _nodes(plan, "Exchange") == 1
     assert "Join" not in plan and "Generate" not in plan
-    assert _python_node_names(plan) == ["MapInPandas"]
+    assert _python_node_names(plan) == ["MapInArrow"]
 
 
 def test_value_percentiles_window_over_histogram(spark):
@@ -486,7 +486,7 @@ def test_bpe_pairs_vocab_reduce_then_topk(spark):
 
 
 def test_dsir_scoring_is_narrow(spark):
-    """DSIR scoring ships the log-ratio table with one mapInPandas kernel
+    """DSIR scoring ships the log-ratio table with one mapInArrow kernel
     that folds per document: exactly one Python node, no join, no
     aggregation shuffle beyond the output sort (the bucket histogram is
     collected before the scoring plan is built)."""
@@ -494,7 +494,7 @@ def test_dsir_scoring_is_narrow(spark):
 
     plan = _plan(q_dsir_weights(spark, TESTDATA))
     assert "Join" not in plan
-    assert _python_node_names(plan) == ["MapInPandas"]
+    assert _python_node_names(plan) == ["MapInArrow"]
     assert _nodes(plan, "Exchange") == 1  # output sort only
     assert _nodes(plan, "HashAggregate") == 0
 
@@ -606,7 +606,7 @@ def test_frontier_schedule_two_phase_salted_broadcast_delay(spark):
 
 
 def test_doc_containment_hash_only_shuffles_no_cartesian(spark):
-    """Containment detection never shuffles chunk text: one mapInPandas
+    """Containment detection never shuffles chunk text: one mapInArrow
     kernel emits each document's distinct (id, chunk_hash) set, the
     posting buckets group on the hash, and everything downstream carries
     bigints. Exactly one Python node, no cartesian product, no
@@ -615,7 +615,7 @@ def test_doc_containment_hash_only_shuffles_no_cartesian(spark):
 
     plan = _plan(q_doc_containment(spark, TESTDATA))
     assert "CartesianProduct" not in plan
-    assert _python_node_names(plan) == ["MapInPandas"]
+    assert _python_node_names(plan) == ["MapInArrow"]
     # chunk text exists only below the hash projection: no Exchange
     # input schema may carry the chunk STRING column (`chunk#N`;
     # `chunk_hash#N` is the two-bigint payload and is expected)
@@ -644,7 +644,7 @@ def test_robots_sitemaps_is_narrow(spark):
 
 def test_classifier_score_is_narrow(spark):
     """Model serving is one map pass: exactly one Python node (the
-    mapInPandas kernel, which carries the weight table), zero joins.
+    mapInArrow kernel, which carries the weight table), zero joins.
     The contract query adds only its output orderBy (scan parallelism
     is the input layout's job — bench.py re-chunks its fixture — not an
     in-query repartition)."""
@@ -652,7 +652,7 @@ def test_classifier_score_is_narrow(spark):
 
     plan = _plan(q_classifier_score(spark, TESTDATA).limit(5))
     assert _nodes(plan, "Exchange") == 0  # orderBy+limit folds to TakeOrdered
-    assert _python_node_names(plan) == ["MapInPandas"]
+    assert _python_node_names(plan) == ["MapInArrow"]
     assert "Join" not in plan
 
 

@@ -109,7 +109,7 @@ def test_streaming_extraction(spark, corpus, tmp_path):
     spark.read.parquet(pages_path).repartition(3).write.parquet(drops)
     out = str(tmp_path / "stream_out")
     ckpt = str(tmp_path / "ckpt")
-    q = start_extraction_stream(spark, drops, out, ckpt, available_now=True)
+    q = start_extraction_stream(spark, drops, out, ckpt)
     q.awaitTermination(300)
     res = spark.read.parquet(out).toPandas().set_index("url").sort_index()
     exp = expected.set_index("url").sort_index()
@@ -167,13 +167,13 @@ def test_streaming_checkpoint_exactly_once(spark, corpus, tmp_path):
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     a.coalesce(1).write.mode("append").parquet(drops)
-    q = start_extraction_stream(spark, drops, out, ckpt, available_now=True)
+    q = start_extraction_stream(spark, drops, out, ckpt)
     q.awaitTermination(300)
     n1 = spark.read.parquet(out).count()
     assert n1 == 40
 
     src.coalesce(1).write.mode("append").parquet(drops)  # drop B (full corpus again)
-    q2 = start_extraction_stream(spark, drops, out, ckpt, available_now=True)
+    q2 = start_extraction_stream(spark, drops, out, ckpt)
     q2.awaitTermination(300)
     res = spark.read.parquet(out)
     # run 2 processed ONLY the new file: 40 (run 1) + len(corpus) (run 2)
@@ -223,7 +223,7 @@ def test_pipeline_stream_end_to_end(spark, corpus, tmp_path):
     out = str(tmp_path / "pout")
     ckpt = str(tmp_path / "pckpt")
     src.limit(40).coalesce(1).write.mode("append").parquet(drops)
-    q = start_pipeline_stream(spark, drops, out, ckpt, available_now=True)
+    q = start_pipeline_stream(spark, drops, out, ckpt)
     q.awaitTermination(300)
     res1 = spark.read.parquet(out)
     assert res1.count() == 40
@@ -236,7 +236,7 @@ def test_pipeline_stream_end_to_end(spark, corpus, tmp_path):
 
     # restart with the same checkpoint over drops A+B: only B processed
     src.coalesce(1).write.mode("append").parquet(drops)
-    q2 = start_pipeline_stream(spark, drops, out, ckpt, available_now=True)
+    q2 = start_pipeline_stream(spark, drops, out, ckpt)
     q2.awaitTermination(300)
     assert spark.read.parquet(out).count() == 40 + len(expected)
 

@@ -66,7 +66,7 @@ def test_lang_id_clf_recovers_planted_languages(spark):
 
 
 def test_lang_id_clf_plan_is_narrow(spark):
-    """Serving is one mapInPandas kernel pass: NO exchange, NO join, and
+    """Serving is one mapInArrow kernel pass: NO exchange, NO join, and
     that kernel is the plan's only Python — one map pass at any corpus
     size."""
     from tests.test_plans import TESTDATA, _plan, _python_node_names
@@ -77,7 +77,7 @@ def test_lang_id_clf_plan_is_narrow(spark):
     plan = _plan(q_lang_id_clf(spark, TESTDATA).limit(5))
     assert "Exchange" not in plan
     assert "Join" not in plan
-    assert _python_node_names(plan) == ["MapInPandas"]
+    assert _python_node_names(plan) == ["MapInArrow"]
 
 
 def test_lang_id_clf_null_and_empty_text(spark):

@@ -457,7 +457,7 @@ def q_lang_id_clf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the model a recoverable signal (same plant pattern as
     q_pii_redaction). The weight tables were fitted offline and
     deterministically by scripts/fit_lang_clf.py; serving is one
-    zero-shuffle mapInPandas kernel. The DuckDB oracle folds the
+    zero-shuffle mapInArrow kernel. The DuckDB oracle folds the
     identical bucket sequence through the identical weight literals."""
     from webxtract.textops import LANG_STOPWORDS, lang_id_clf_frame
 
@@ -1456,7 +1456,7 @@ def q_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_script_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unicode-script profile per document: per-script character
     fractions + dominant script (first-wins ties in SCRIPTS order).
-    Served by the mapInPandas classify-once kernel
+    Served by the mapInArrow classify-once kernel
     (textops.script_signals_frame): one character-classification pass
     per document."""
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")

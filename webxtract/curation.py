@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import DoubleType, StructField
 
 from webxtract.dedup import shingle_hashes_expr
 
@@ -75,81 +75,53 @@ def repetition_signals(
     for self-overlapping grams; both engines define it identically).
 
     Scale shape: ZERO shuffles. n-gram counting is document-local and
-    runs in ONE vectorized-boundary mapInPandas kernel (Counter-based
-    top-gram per doc) instead of the round-4 HOF-expression form
-    (transform/array_sort/aggregate): Spark evaluates higher-order
-    lambdas interpreted — CodegenFallback, ~1 us/element — which made
-    this the 2nd most expensive narrow query at sf1.0 (11.4 s; the
-    Python kernel computes the same statistics in ~1.5 s, and only
-    (id, text) crosses the boundary once). Float contract: fractions
-    round via Decimal(repr(x)) HALF_UP — bit-equal to Spark round()'s
-    BigDecimal-over-shortest-repr path the oracle was verified
-    against. Tokenization replicates split(trim(text), '\\s+')
-    exactly: trim strips 0x20 only, \\s is the ASCII class (Java
-    semantics; re.ASCII), split keeps leading/trailing empties
-    (Java limit=-1)."""
-    id_field = df.schema[id_col]
+    runs in ONE mapInArrow kernel (``kernels.doc_scores``;
+    Counter-based top-gram per doc) instead of the round-4
+    HOF-expression form (transform/array_sort/aggregate): Spark
+    evaluates higher-order lambdas interpreted — CodegenFallback, ~1
+    us/element — which made this the 2nd most expensive narrow query
+    at sf1.0 (11.4 s; the Python kernel computes the same statistics
+    in ~1.5 s, and only (id, text) crosses the boundary once).
+    Fractions round 6 dp with ``kernels.spark_round``; tokens are
+    ``kernels.ws_split``."""
+    from collections import Counter
+
+    from webxtract.kernels import doc_scores, spark_round, ws_split
+
     ns = tuple(ns)
 
-    def _signals(batches):  # noqa: ANN001, ANN202
-        import re
-        from decimal import ROUND_HALF_UP, Decimal
+    def one(text):  # noqa: ANN001, ANN202
+        if text is None:
+            text = ""
+        lines = text.split("\n")
+        n = len(lines)
+        nd = len(dict.fromkeys(lines))
+        chars_l = sum(len(l) for l in lines)
+        uchars = sum(len(l) for l in dict.fromkeys(lines))
+        dup_line = spark_round((n - nd) / n, 6) if n > 0 else 0.0
+        dup_char = (
+            spark_round((chars_l - uchars) / chars_l, 6) if chars_l > 0 else 0.0
+        )
+        toks = ws_split(text)
+        chars = len(text)
+        out = [dup_line, dup_char]
+        for k in ns:
+            if len(toks) >= k and chars > 0:
+                grams = Counter(
+                    " ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)
+                )
+                cnt, glen = max((c, len(g)) for g, c in grams.items())
+                out.append(spark_round(cnt * glen / chars, 6))
+            else:
+                out.append(0.0)
+        return tuple(out)
 
-        import pandas as pd
-
-        ws = re.compile(r"\s+", re.ASCII)
-        q6 = Decimal("0.000001")
-
-        def r6(x: float) -> float:
-            return float(Decimal(repr(float(x))).quantize(q6, ROUND_HALF_UP))
-
-        def one(text):  # noqa: ANN001
-            if text is None:
-                text = ""
-            lines = text.split("\n")
-            n = len(lines)
-            nd = len(dict.fromkeys(lines))
-            chars_l = sum(len(l) for l in lines)
-            uchars = sum(len(l) for l in dict.fromkeys(lines))
-            dup_line = r6((n - nd) / n) if n > 0 else 0.0
-            dup_char = r6((chars_l - uchars) / chars_l) if chars_l > 0 else 0.0
-            toks = ws.split(text.strip(" "))
-            chars = len(text)
-            out = [dup_line, dup_char]
-            from collections import Counter
-
-            for k in ns:
-                if len(toks) >= k and chars > 0:
-                    grams = Counter(
-                        " ".join(toks[i : i + k])
-                        for i in range(len(toks) - k + 1)
-                    )
-                    cnt, glen = max(
-                        (c, len(g)) for g, c in grams.items()
-                    )
-                    out.append(r6(cnt * glen / chars))
-                else:
-                    out.append(0.0)
-            return out
-
-        cols = ["dup_line_frac", "dup_line_char_frac"] + [
-            f"top{k}gram_char_frac" for k in ns
-        ]
-        for pdf in batches:
-            sig = [one(t) for t in pdf[text_col]]
-            res = pd.DataFrame(sig, columns=cols, dtype="float64")
-            res.insert(0, id_col, pdf[id_col].to_numpy())
-            yield res
-
-    schema = StructType(
-        [id_field]
-        + [
-            StructField(nm, DoubleType(), True)
-            for nm in ["dup_line_frac", "dup_line_char_frac"]
-            + [f"top{k}gram_char_frac" for k in ns]
-        ]
-    )
-    return df.select(id_col, text_col).mapInPandas(_signals, schema)
+    fields = [
+        StructField(nm, DoubleType(), True)
+        for nm in ["dup_line_frac", "dup_line_char_frac"]
+        + [f"top{k}gram_char_frac" for k in ns]
+    ]
+    return doc_scores(df, (id_col,), text_col, fields, lambda: one)
 
 
 def remove_boilerplate_lines(
@@ -959,8 +931,8 @@ def tag_topics_frame(
     taxonomy: dict[str, tuple[str, ...]] | None = None,
 ) -> DataFrame:
     """Per-topic keyword hit counts plus the argmax topic: (id,
-    n_<topic>..., topic) from ONE mapInPandas pass — zero shuffles,
-    zero joins. Hit = substring containment on the lowercased text,
+    n_<topic>..., topic) from ONE mapInArrow pass
+    (``kernels.doc_scores``) — zero shuffles, zero joins. Hit = substring containment on the lowercased text,
     counted per keyword, not per occurrence. topic = the first topic in
     taxonomy order with the strictly greatest positive count, 'other'
     when nothing matches. NULL text counts zero everywhere and tags
@@ -970,47 +942,27 @@ def tag_topics_frame(
     executor-CPU core-s at sf1.0, against 38 core-s / 2.0 s wall for
     the ~52 interpreted `contains` lambdas per document of the
     expression form this replaced)."""
+    from pyspark.sql.types import LongType, StringType
+
+    from webxtract.kernels import doc_scores
+
     tax = taxonomy or TOPIC_TAXONOMY
-    id_field = df.schema[id_col]
     topics = list(tax)
     kw_lists = [list(map(str, tax[t])) for t in topics]
 
-    def _kernel(batches):  # noqa: ANN001, ANN202
-        import pandas as pd
+    def one(t):  # noqa: ANN001, ANN202
+        low = (t or "").lower()
+        counts = [sum(1 for kw in kws if kw in low) for kws in kw_lists]
+        best, top = 0, "other"
+        for c, name in zip(counts, topics):
+            if c > 0 and c > best:
+                best, top = c, name
+        return (*counts, top)
 
-        for pdf in batches:
-            rows = []
-            for t in pdf[text_col]:
-                low = (t or "").lower()
-                counts = [
-                    sum(1 for kw in kws if kw in low) for kws in kw_lists
-                ]
-                best, top = 0, "other"
-                for c, name in zip(counts, topics):
-                    if c > 0 and c > best:
-                        best, top = c, name
-                rows.append(counts + [top])
-            out = pd.DataFrame(
-                rows, columns=[f"n_{t}" for t in topics] + ["topic"]
-            )
-            for t in topics:
-                out[f"n_{t}"] = out[f"n_{t}"].astype("int64")
-            out.insert(0, id_col, pdf[id_col].to_numpy())
-            yield out
-
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [id_field]
-        + [StructField(f"n_{t}", LongType(), True) for t in topics]
-        + [StructField("topic", StringType(), True)]
-    )
-    return df.select(id_col, text_col).mapInPandas(_kernel, schema)
+    fields = [StructField(f"n_{t}", LongType(), True) for t in topics] + [
+        StructField("topic", StringType(), True)
+    ]
+    return doc_scores(df, (id_col,), text_col, fields, lambda: one)
 
 
 def value_percentiles(
@@ -1135,30 +1087,26 @@ def bucket_counts(
 
     Round 6: the per-gram md5 + explode moved into a mapInPandas
     partial-count kernel — each task emits <= n_buckets (bucket,
-    partial-count) rows from a CPython Counter (hashlib md5, identical
-    low-15-hex-digit bucket), and the groupBy sums the partials. Same
+    partial-count) rows from a CPython Counter (the bucket is
+    ``kernels.md5_60`` of the bigram, as in dsir_scores_frame), and
+    the groupBy sums the partials. Same
     map-side-collapsed shuffle shape, same exact integer counts,
     without the interpreted per-gram hash expression (12-27 CPU core-s
     of the dsir_weights query at sf1.0 was this prepass)."""
 
     def _partials(batches):  # noqa: ANN001, ANN202
-        import hashlib
-        import re
         from collections import Counter
 
         import pandas as pd
 
-        ws = re.compile(r"\s+", re.ASCII)
+        from webxtract.kernels import md5_60, ws_split
+
         c: Counter = Counter()
         for pdf in batches:
             for t in pdf[text_col]:
-                toks = ws.split((t or "").strip(" "))
+                toks = ws_split(t)
                 for i in range(len(toks) - 1):
-                    g = toks[i] + " " + toks[i + 1]
-                    h = int(
-                        hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16
-                    )
-                    c[h % n_buckets] += 1
+                    c[md5_60(toks[i] + " " + toks[i + 1]) % n_buckets] += 1
         yield pd.DataFrame(
             {
                 "bucket": pd.array(sorted(c), dtype="int64"),
@@ -1182,71 +1130,42 @@ def dsir_scores_frame(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-document DSIR log importance weight: (id, n_grams,
-    dsir_logweight) from ONE mapInPandas pass — zero shuffles, zero
-    joins; scoring 10^12 documents is one map pass. The ``log_ratio``
-    table (one entry per bucket) ships with the kernel's closure.
+    dsir_logweight) from ONE mapInArrow pass (``kernels.doc_scores``)
+    — zero shuffles, zero joins; scoring 10^12 documents is one map
+    pass. The ``log_ratio`` table (one entry per bucket) ships with
+    the kernel's closure.
 
-    Tokens are the ASCII-whitespace split (Java ``\\s``) of the
-    space-trimmed text; features are the word bigrams in document
-    order; bucket = low 15 hex digits of md5 (60-bit, non-negative, so
-    ``%`` == pmod) mod ``n_buckets``. dsir_logweight is the float64
-    left fold of ``log_ratio[bucket]`` in gram order (the DuckDB
-    oracle's in-order list_sum reproduces it bit for bit), rounded 6
-    dp via Decimal HALF_UP (= Spark ``round()``). n_grams counts the
-    bigrams; a document with fewer than two tokens, NULL text
-    included, has n_grams 0 and dsir_logweight 0.0.
+    Tokens are ``kernels.ws_split`` of the text; features are the word
+    bigrams in document order; bucket = ``kernels.md5_60`` mod
+    ``n_buckets``. dsir_logweight is the float64 left fold of
+    ``log_ratio[bucket]`` in gram order (the DuckDB oracle's in-order
+    list_sum reproduces it bit for bit), rounded 6 dp with
+    ``kernels.spark_round``. n_grams counts the bigrams; a document
+    with fewer than two tokens, NULL text included, has n_grams 0 and
+    dsir_logweight 0.0.
 
     hashlib md5 plus a list lookup cost ~0.5 us per gram (~1
     executor-CPU core-s at sf1.0, against 24-27 core-s / 1.4 s for the
     interpreted per-bigram lambda of the expression form this
     replaced)."""
-    id_field = df.schema[id_col]
+    from pyspark.sql.types import LongType
+
+    from webxtract.kernels import doc_scores, md5_60, spark_round, ws_split
+
     lr = [float(x) for x in log_ratio]
 
-    def _kernel(batches):  # noqa: ANN001, ANN202
-        import hashlib
-        import re
-        from decimal import ROUND_HALF_UP, Decimal
+    def one(t):  # noqa: ANN001, ANN202
+        toks = ws_split(t)
+        acc = 0.0
+        for i in range(len(toks) - 1):
+            acc = acc + lr[md5_60(toks[i] + " " + toks[i + 1]) % n_buckets]
+        return len(toks) - 1, spark_round(acc, 6)
 
-        import pandas as pd
-
-        ws = re.compile(r"\s+", re.ASCII)
-        q6 = Decimal("0.000001")
-        for pdf in batches:
-            n_g, sc = [], []
-            for t in pdf[text_col]:
-                toks = ws.split((t or "").strip(" "))
-                acc = 0.0
-                n = max(0, len(toks) - 1) if len(toks) >= 2 else 0
-                for i in range(n):
-                    g = toks[i] + " " + toks[i + 1]
-                    h = int(
-                        hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16
-                    )
-                    acc = acc + lr[h % n_buckets]
-                n_g.append(n)
-                sc.append(
-                    float(Decimal(repr(acc)).quantize(q6, ROUND_HALF_UP))
-                )
-            out = pd.DataFrame(
-                {
-                    "n_grams": pd.array(n_g, dtype="int64"),
-                    "dsir_logweight": pd.array(sc, dtype="float64"),
-                }
-            )
-            out.insert(0, id_col, pdf[id_col].to_numpy())
-            yield out
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema = StructType(
-        [
-            id_field,
-            StructField("n_grams", LongType(), True),
-            StructField("dsir_logweight", DoubleType(), True),
-        ]
-    )
-    return df.select(id_col, text_col).mapInPandas(_kernel, schema)
+    fields = [
+        StructField("n_grams", LongType(), True),
+        StructField("dsir_logweight", DoubleType(), True),
+    ]
+    return doc_scores(df, (id_col,), text_col, fields, lambda: one)
 
 
 def classifier_scores_frame(
@@ -1262,88 +1181,50 @@ def classifier_scores_frame(
     model-based filter step of FineWeb-Edu / CCNet / Llama-style
     curation (score every document with a cheap linear model, keep
     above a threshold): (id, n_feats, clf_score, clf_keep) from ONE
-    mapInPandas pass — zero shuffles, zero joins, embarrassingly
-    parallel. ``weights`` (one per bucket; ``classifier_weights`` is
-    the deterministic stand-in for a trained model) ships with the
-    kernel's closure.
+    mapInArrow pass (``kernels.doc_scores``) — zero shuffles, zero
+    joins, embarrassingly parallel. ``weights`` (one per bucket;
+    ``classifier_weights`` is the deterministic stand-in for a trained
+    model) ships with the kernel's closure.
 
     Features are all unigrams then all bigrams (document order,
     multiplicity kept — fastText's word + wordNgrams=2 feature set) of
-    the ASCII-whitespace split of the space-trimmed text, hashed like
-    dsir_scores_frame into ``n_buckets``. logit = bias + mean of
-    ``weights[bucket]`` (float64 sum in feature order); clf_score =
-    sigmoid(logit) with libm exp, rounded 6 dp via Decimal HALF_UP
-    (= Spark ``round()``); clf_keep compares the ROUNDED score to
-    ``threshold``, so last-ulp exp() drift cannot flip the verdict
-    against the DuckDB oracle. The unigram leg always yields at least
+    ``kernels.ws_split``, hashed like dsir_scores_frame into
+    ``n_buckets``. logit = bias + mean of ``weights[bucket]`` (float64
+    sum in feature order); clf_score = sigmoid(logit) with libm exp,
+    rounded 6 dp with ``kernels.spark_round``; clf_keep compares the
+    ROUNDED score to ``threshold``, so last-ulp exp() drift cannot
+    flip the verdict against the DuckDB oracle. The unigram leg always yields at least
     one feature (NULL, empty and blank text tokenize to the single
     empty token), so the mean never divides by zero and those rows
     all score alike.
 
     ~1 executor-CPU core-s at sf1.0, against 30 core-s / 1.5 s for the
     interpreted fold of the expression form this replaced."""
-    id_field = df.schema[id_col]
+    import math
+
+    from pyspark.sql.types import BooleanType, LongType
+
+    from webxtract.kernels import doc_scores, md5_60, spark_round, ws_split
+
     w = [float(x) for x in weights]
     bias, threshold = float(bias), float(threshold)
 
-    def _kernel(batches):  # noqa: ANN001, ANN202
-        import hashlib
-        import math
-        import re
-        from decimal import ROUND_HALF_UP, Decimal
+    def one(t):  # noqa: ANN001, ANN202
+        toks = ws_split(t)
+        feats = toks + [toks[i] + " " + toks[i + 1] for i in range(len(toks) - 1)]
+        acc = 0.0
+        for g in feats:
+            acc = acc + w[md5_60(g) % n_buckets]
+        logit = bias + acc / float(len(feats))
+        s = spark_round(1.0 / (1.0 + math.exp(-logit)), 6)
+        return len(feats), s, s >= threshold
 
-        import pandas as pd
-
-        ws = re.compile(r"\s+", re.ASCII)
-        q6 = Decimal("0.000001")
-        for pdf in batches:
-            n_f, sc, keep = [], [], []
-            for t in pdf[text_col]:
-                toks = ws.split((t or "").strip(" "))
-                feats = list(toks)
-                for i in range(len(toks) - 1):
-                    feats.append(toks[i] + " " + toks[i + 1])
-                acc = 0.0
-                for g in feats:
-                    h = int(
-                        hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16
-                    )
-                    acc = acc + w[h % n_buckets]
-                logit = bias + acc / float(len(feats))
-                s = float(
-                    Decimal(repr(1.0 / (1.0 + math.exp(-logit)))).quantize(
-                        q6, ROUND_HALF_UP
-                    )
-                )
-                n_f.append(len(feats))
-                sc.append(s)
-                keep.append(s >= threshold)
-            out = pd.DataFrame(
-                {
-                    "n_feats": pd.array(n_f, dtype="int64"),
-                    "clf_score": pd.array(sc, dtype="float64"),
-                    "clf_keep": pd.array(keep, dtype="bool"),
-                }
-            )
-            out.insert(0, id_col, pdf[id_col].to_numpy())
-            yield out
-
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            id_field,
-            StructField("n_feats", LongType(), True),
-            StructField("clf_score", DoubleType(), True),
-            StructField("clf_keep", BooleanType(), True),
-        ]
-    )
-    return df.select(id_col, text_col).mapInPandas(_kernel, schema)
+    fields = [
+        StructField("n_feats", LongType(), True),
+        StructField("clf_score", DoubleType(), True),
+        StructField("clf_keep", BooleanType(), True),
+    ]
+    return doc_scores(df, (id_col,), text_col, fields, lambda: one)
 
 
 def split_assign_expr(

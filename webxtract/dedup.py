@@ -39,12 +39,10 @@ without per-character lambdas.
 
 from __future__ import annotations
 
-import hashlib
-import re
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from webxtract.kernels import md5_60, ws_split
 from webxtract.textops import FINGERPRINT_MOD, stable_hash60_expr, word_shingles_expr
 
 # (a, b) parameters for the K minhash permutations h_i(x) = (a*x+b) mod P.
@@ -663,9 +661,6 @@ def ngram_jaccard_pairs(
 # ------------------------------------------------- substring-level dedup
 
 
-_WS = re.compile(r"\s+", re.ASCII)  # Java regex \s: ASCII whitespace
-
-
 def chunk_spans(
     text: str | None, boundary_mod: int = 16
 ) -> list[tuple[int, int, str]]:
@@ -673,10 +668,9 @@ def chunk_spans(
     chunk)]`` with 1-based ``idx`` and the chunk's tokens joined by
     single spaces.
 
-    Tokens are the ASCII-whitespace split of the space-trimmed text. A
-    chunk boundary falls AFTER token *i* whenever ``md5-60(token_i) %
-    boundary_mod == 0`` (md5-60 = the low 15 hex digits of md5, the
-    ``stable_hash60_expr`` hash) — boundaries depend only on local
+    Tokens are ``kernels.ws_split`` of the text. A chunk boundary
+    falls AFTER token *i* whenever ``kernels.md5_60(token_i) %
+    boundary_mod == 0`` — boundaries depend only on local
     content, never on position, so a passage duplicated across
     documents (or at a different offset in the same document)
     produces byte-identical interior chunks. This is the
@@ -691,17 +685,13 @@ def chunk_spans(
 
     Runs inside the chunk kernels (``_chunk_meta_frame``,
     ``dedup_chunks``, ``doc_containment``), one md5 per token."""
-    t = (text or "").strip(" ")
-    if t == "":
+    toks = ws_split(text)
+    if toks == [""]:
         return []
-    toks = _WS.split(t)
     n = len(toks)
     starts, ends = [1], []
     for i in range(1, n):
-        h = int(
-            hashlib.md5(toks[i - 1].encode("utf-8")).hexdigest()[:15], 16
-        )
-        if h % boundary_mod == 0:
+        if md5_60(toks[i - 1]) % boundary_mod == 0:
             ends.append(i)
             starts.append(i + 1)
     ends.append(n)
@@ -711,6 +701,40 @@ def chunk_spans(
     ]
 
 
+def _chunk_rows(frame: DataFrame, fields: list, rows_of) -> DataFrame:  # noqa: ANN001
+    """ONE ``mapInArrow`` pass over ``frame = (id, inputs...)``:
+    ``rows_of(*inputs)`` lists one document's output rows, and each
+    row leads with that document's id, taken from the Arrow id column
+    (``take``). A NULL, 64-bit or string id therefore comes back
+    exactly, never through a pandas int64 or float64 column."""
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructField, StructType
+
+    names = ["id"] + [f.name for f in fields]
+    types = [to_arrow_type(f.dataType) for f in fields]
+
+    def _kernel(batches):  # noqa: ANN001, ANN202
+        import pyarrow as pa
+
+        for b in batches:
+            src, rows = [], []
+            inputs = zip(*(c.to_pylist() for c in b.columns[1:]))
+            for i, args in enumerate(inputs):
+                for r in rows_of(*args):
+                    src.append(i)
+                    rows.append(r)
+            cols = list(zip(*rows)) or [()] * len(types)
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0).take(pa.array(src, pa.int64()))]
+                + [pa.array(c, t) for c, t in zip(cols, types)],
+                names,
+            )
+
+    id_type = frame.schema.fields[0].dataType
+    schema = StructType([StructField("id", id_type, True)] + fields)
+    return frame.mapInArrow(_kernel, schema)
+
+
 def _chunk_meta_frame(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -718,61 +742,28 @@ def _chunk_meta_frame(
     boundary_mod: int = 16,
 ) -> DataFrame:
     """(id, idx, n_tok, chunk_hash) — one row per ``chunk_spans`` chunk,
-    with chunk_hash = md5-60 of the chunk text: the chunk META rows
-    duplicate_chunks and dedup_chunks start from, produced by ONE
-    mapInPandas pass (~2 executor-CPU core-s per chunk query at sf1.0,
-    against 25-40 core-s for the interpreted chunker + explode +
-    per-chunk md5 expression this replaced). Chunk text never leaves
-    the task; only (id, idx, n_tok, hash) rows come back, so no
-    exchange downstream carries text. NULL, empty and space-only
-    documents emit no rows."""
-    id_field = docs.schema[id_col]
+    with chunk_hash = ``kernels.md5_60`` of the chunk text: the chunk
+    META rows duplicate_chunks and dedup_chunks start from, produced by
+    ONE mapInArrow pass (``_chunk_rows``; ~2 executor-CPU core-s per
+    chunk query at sf1.0, against 25-40 core-s for the interpreted
+    chunker + explode + per-chunk md5 expression this replaced). Chunk
+    text never leaves the task; only (id, idx, n_tok, hash) rows come
+    back, so no exchange downstream carries text. NULL, empty and
+    space-only documents emit no rows."""
+    from pyspark.sql.types import IntegerType, LongType, StructField
 
-    def _kernel(batches):  # noqa: ANN001, ANN202
-        import pandas as pd
-
-        for pdf in batches:
-            ids, idxs, ntoks, hs = [], [], [], []
-            for rid, t in zip(pdf[id_col], pdf[text_col]):
-                for j, ntok, chunk in chunk_spans(t, boundary_mod):
-                    ids.append(rid)
-                    idxs.append(j)
-                    ntoks.append(ntok)
-                    hs.append(
-                        int(
-                            hashlib.md5(chunk.encode("utf-8")).hexdigest()[
-                                :15
-                            ],
-                            16,
-                        )
-                    )
-            yield pd.DataFrame(
-                {
-                    "id": pd.array(ids, dtype="int64"),
-                    "idx": pd.array(idxs, dtype="int32"),
-                    "n_tok": pd.array(ntoks, dtype="int32"),
-                    "chunk_hash": pd.array(hs, dtype="int64"),
-                }
-            )
-
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("id", id_field.dataType, True),
-            StructField("idx", IntegerType(), True),
-            StructField("n_tok", IntegerType(), True),
-            StructField("chunk_hash", LongType(), True),
+    def rows_of(t):  # noqa: ANN001, ANN202
+        return [
+            (j, ntok, md5_60(chunk))
+            for j, ntok, chunk in chunk_spans(t, boundary_mod)
         ]
-    )
-    return docs.select(
-        F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)
-    ).mapInPandas(_kernel, schema)
+
+    fields = [
+        StructField("idx", IntegerType(), True),
+        StructField("n_tok", IntegerType(), True),
+        StructField("chunk_hash", LongType(), True),
+    ]
+    return _chunk_rows(docs.select(id_col, text_col), fields, rows_of)
 
 
 def duplicate_chunks(
@@ -825,8 +816,9 @@ def dedup_chunks(
     Scan 2 joins the drop lists back by id (broadcast-eligible,
     unforced — AQE degrades to shuffle join instead of OOM when the
     corpus is pathologically duplicated) and rebuilds the text in one
-    mapInPandas kernel over the same ``chunk_spans`` chunking. The
-    rewrite itself is exchange-free."""
+    mapInArrow kernel (``_chunk_rows``) over the same ``chunk_spans``
+    chunking. The rewrite itself is exchange-free."""
+    from pyspark.sql.types import IntegerType, StringType, StructField
     from pyspark.sql.window import Window
 
     ch = _chunk_meta_frame(docs, id_col, text_col, boundary_mod)
@@ -844,62 +836,22 @@ def dedup_chunks(
     joined = docs.select(
         F.col(id_col).alias("id"), F.col(text_col).alias(text_col)
     ).join(drops, "id", "left")
-    id_field = docs.schema[id_col]
 
-    def _rebuild(batches):  # noqa: ANN001, ANN202
-        import pandas as pd
+    def rebuild(t, drop):  # noqa: ANN001, ANN202
+        # the drop list filters the same deterministic chunking the
+        # meta rows came from
+        drop = drop or []
+        dropset = set(drop)
+        spans = chunk_spans(t, boundary_mod)
+        clean = " ".join(c for j, _, c in spans if j not in dropset)
+        return [(clean, len(spans), len(drop))]
 
-        for pdf in batches:
-            ids, cleans, n_ch, n_dr = [], [], [], []
-            for rid, t, drop in zip(
-                pdf["id"], pdf[text_col], pdf["drop_idx"]
-            ):
-                spans = chunk_spans(t, boundary_mod)
-                if drop is None or (
-                    hasattr(drop, "__len__") and len(drop) == 0
-                ):
-                    dropset, nd = set(), 0
-                else:
-                    dropset = {int(x) for x in drop}
-                    nd = len(drop)
-                cleans.append(
-                    " ".join(c for j, _, c in spans if j not in dropset)
-                )
-                ids.append(rid)
-                n_ch.append(len(spans))
-                n_dr.append(nd)
-            yield pd.DataFrame(
-                {
-                    "id": pd.array(ids, dtype="int64"),
-                    "clean_text": cleans,
-                    "n_chunks": pd.array(n_ch, dtype="int32"),
-                    "n_dropped": pd.array(n_dr, dtype="int32"),
-                }
-            )
-
-    from pyspark.sql.types import (
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("id", id_field.dataType, True),
-            StructField("clean_text", StringType(), True),
-            StructField("n_chunks", IntegerType(), True),
-            StructField("n_dropped", IntegerType(), True),
-        ]
-    )
-    # the rebuild kernel re-derives the deterministic chunking from the
-    # text and filters the drop list — same contract as the HOF
-    # rewrite, interpreted-lambda-free; the broadcast hint keeps the
-    # drop-list join off the shuffle path exactly as before (drops is
-    # bounded by documents-that-lose-a-chunk)
-    return joined.select("id", text_col, "drop_idx").mapInPandas(
-        _rebuild, schema
-    )
+    fields = [
+        StructField("clean_text", StringType(), True),
+        StructField("n_chunks", IntegerType(), True),
+        StructField("n_dropped", IntegerType(), True),
+    ]
+    return _chunk_rows(joined.select("id", text_col, "drop_idx"), fields, rebuild)
 
 
 def dedup_keep_best(
@@ -994,50 +946,21 @@ def doc_containment(
     for pairs that were already near-identical elsewhere, never create
     false pairs.
     """
-    from pyspark.sql.types import LongType, StructField, StructType
+    from pyspark.sql.types import LongType, StructField
 
-    id_field = docs.schema[id_col]
+    def rows_of(t):  # noqa: ANN001, ANN202
+        seen = {
+            md5_60(chunk)
+            for _j, ntok, chunk in chunk_spans(t, boundary_mod)
+            if ntok >= min_tok
+        }
+        return [(h, len(seen)) for h in seen]
 
-    def _kernel(batches):  # noqa: ANN001, ANN202
-        import pandas as pd
-
-        for pdf in batches:
-            ids, hs, ns = [], [], []
-            for rid, t in zip(pdf[id_col], pdf[text_col]):
-                seen = set()
-                for _j, ntok, chunk in chunk_spans(t, boundary_mod):
-                    if ntok >= min_tok:
-                        seen.add(
-                            int(
-                                hashlib.md5(
-                                    chunk.encode("utf-8")
-                                ).hexdigest()[:15],
-                                16,
-                            )
-                        )
-                n = len(seen)
-                for h in seen:
-                    ids.append(rid)
-                    hs.append(h)
-                    ns.append(n)
-            yield pd.DataFrame(
-                {
-                    "id": pd.array(ids, dtype="int64"),
-                    "chunk_hash": pd.array(hs, dtype="int64"),
-                    "n_chunks": pd.array(ns, dtype="int64"),
-                }
-            )
-
-    schema = StructType(
-        [
-            StructField("id", id_field.dataType, True),
-            StructField("chunk_hash", LongType(), True),
-            StructField("n_chunks", LongType(), True),
-        ]
-    )
-    sets = docs.select(
-        F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)
-    ).mapInPandas(_kernel, schema)
+    fields = [
+        StructField("chunk_hash", LongType(), True),
+        StructField("n_chunks", LongType(), True),
+    ]
+    sets = _chunk_rows(docs.select(id_col, text_col), fields, rows_of)
     buckets = (
         sets.groupBy("chunk_hash")
         .agg(F.collect_list(F.struct("id", "n_chunks")).alias("m"))

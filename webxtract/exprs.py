@@ -10,7 +10,7 @@ subtree in the plan and (b) exactly one evaluation per row, with every
 reference a cheap lambda-var access. The document rules (detection,
 fake scoring, validators) run in one Arrow kernel, and the scorers and
 chunkers that were interpreted cliffs (the ``*_frame`` operators and
-the chunk-dedup family) run in ``mapInPandas`` kernels; none of them
+the chunk-dedup family) run in ``mapInArrow`` kernels; none of them
 use this.
 """
 

@@ -26,12 +26,12 @@ Deliberate reference-quirk decisions (SURVEY.md §7.4.5):
 from __future__ import annotations
 
 import re
-from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from webxtract import rules
+from webxtract.kernels import spark_round
 from webxtract.ops.validators import _DIGITS, _SEP, Doc, _jre, _trim, row_udf
 from webxtract.schemas import FAKE_RESULT_TYPE, FIELD_NAMES
 
@@ -76,11 +76,6 @@ def _sequential_ratio(num: str) -> float:
     up = sum(a is not None and b is not None and b == a + 1 for a, b in steps)
     down = sum(a is not None and b is not None and b == a - 1 for a, b in steps)
     return max(up, down) / (len(v) - 1)
-
-
-def _round2(x: float) -> float:
-    """Spark ``round(x, 2)``: HALF_UP on the double's shortest decimal."""
-    return float(Decimal(repr(x)).quantize(Decimal("0.01"), ROUND_HALF_UP))
 
 
 def fake_result(d: Doc, raw_text: str | None = None) -> tuple:
@@ -164,7 +159,7 @@ def fake_result(d: Doc, raw_text: str | None = None) -> tuple:
     total = 0.0
     for score, _ in checks:
         total += score
-    confidence = _round2(min(total / 2.0, 1.0))
+    confidence = spark_round(min(total / 2.0, 1.0), 2)
     reasons = [r for _, rs in checks for r in rs]
     return confidence >= 0.4 or total >= 0.8, confidence, reasons, CHECKS_PERFORMED
 

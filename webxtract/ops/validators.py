@@ -56,6 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import ArrayType, BooleanType
 
+from webxtract.kernels import ws_split
 from webxtract.rules import (
     COUNTRY_CODES,
     DATE_FORMATS_SPARK,
@@ -87,7 +88,6 @@ def _jre(pattern: str) -> re.Pattern:
 
 _SEP = _jre(r"[\s\-]")
 _SEP_SLASH = _jre(r"[\s\-/]")
-_WS = _jre(r"\s+")
 _NON_AZ = _jre("[^A-Z]")
 _NON_DIGIT = _jre("[^0-9]")
 _ALPHA = _jre("[A-Z]")
@@ -363,7 +363,7 @@ def _last_name(variant: str | None, d: Doc) -> tuple[str, str]:
     full = d.full_name or ""
     field = _trim(d.last_name or "")
     comma = _trim(full.split(",", 1)[0])
-    words = _WS.split(_trim(full))
+    words = ws_split(full)
     has_comma = "," in full
     if variant == "first_word":
         if full and has_comma and comma:

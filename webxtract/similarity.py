@@ -227,7 +227,7 @@ def near_dup_pairs(
     x corpus) vector bytes once, this one without two join stages and
     a candidate shuffle. Kernel B receives one bucket's rows, applies
     the cap, generates a<b pairs and verifies exact cosine (in-order
-    dot, Decimal HALF_UP round inside a 0.5e-6 threshold margin);
+    dot, ``kernels.spark_round`` inside a 0.5e-6 threshold margin);
     survivors dedup on (a, b) across bands — band-identical values,
     so the kept row is well-defined."""
     planes = [
@@ -306,12 +306,11 @@ def near_dup_pairs(
         m = cos >= thr - 5.000001e-7
         if not m.any():
             return empty
-        from decimal import ROUND_HALF_UP, Decimal
+        from webxtract.kernels import spark_round
 
-        q6 = Decimal("0.000001")
         out_a, out_b, out_c = [], [], []
         for pa, pb, c in zip(ids[iu[m]], ids[ju[m]], cos[m]):
-            r = float(Decimal(repr(float(c))).quantize(q6, ROUND_HALF_UP))
+            r = spark_round(c, 6)
             if r >= thr:
                 out_a.append(int(pa))
                 out_b.append(int(pb))
@@ -469,7 +468,7 @@ def semantic_dedup_pairs(
     stage: a mapInPandas pass computes each vector's nearest centroid
     in NumPy — in-order float64 squared-L2 per (row, centroid), exact
     only-where-it-can-matter rounding (entries within 1.5e-6 of the
-    row minimum get the Decimal HALF_UP 6 dp round and the
+    row minimum get the ``kernels.spark_round`` 6 dp round and the
     (dist2, cluster) lexicographic tie-break; a gap above 1e-6 cannot
     be reordered by two sub-0.5e-6 rounds). This replaces the
     broadcast-nested-loop join + groupBy(id) argmin, whose unrolled
@@ -494,9 +493,8 @@ def semantic_dedup_pairs(
     norms accumulate in float64 left-to-right over dimensions — the
     kernel loops over dims, vectorized ACROSS pairs, so each pair's
     sum has exactly the oracle's in-order association; cosine =
-    dot / (na * nb); rounding reproduces Spark's round() (BigDecimal
-    HALF_UP over the shortest-repr decimal) via Decimal(repr(x)) on
-    the few pairs inside the 0.5e-6 margin of the threshold — below
+    dot / (na * nb); ``kernels.spark_round`` rounds only the few
+    pairs inside the 0.5e-6 margin of the threshold — below
     the margin a raw cosine cannot round up to the threshold, so the
     cheap vectorized comparison disposes of everything else."""
     dim = len(centroids[0])
@@ -504,18 +502,13 @@ def semantic_dedup_pairs(
     thr = float(threshold)
 
     def _assign(batches):  # noqa: ANN001, ANN202
-        from decimal import ROUND_HALF_UP, Decimal
-
         import numpy as np
         import pandas as pd
 
+        from webxtract.kernels import spark_round
+
         C = np.asarray(cents, dtype=np.float64)  # (k, dim)
         k = len(C)
-        q6 = Decimal("0.000001")
-
-        def r6(x: float) -> float:
-            return float(Decimal(repr(x)).quantize(q6, ROUND_HALF_UP))
-
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -536,7 +529,7 @@ def semantic_dedup_pairs(
                 if len(cand) == 1:
                     clusters[r] = cand[0]
                 else:
-                    best = min((r6(float(D[r, j])), int(j)) for j in cand)
+                    best = min((spark_round(D[r, j], 6), int(j)) for j in cand)
                     clusters[r] = best[1]
             yield pd.DataFrame(
                 {
@@ -575,9 +568,8 @@ def semantic_dedup_pairs(
             acc = acc + V[:, i] * V[:, i]
         nrm = np.sqrt(acc)
         out_a, out_b, out_c = [], [], []
-        from decimal import ROUND_HALF_UP, Decimal
+        from webxtract.kernels import spark_round
 
-        q6 = Decimal("0.000001")
         # chunk the upper-triangle pair set so peak memory stays
         # ~2 * chunk * dim * 8B per task regardless of cluster size
         chunk = 200_000
@@ -594,9 +586,7 @@ def semantic_dedup_pairs(
             if not m.any():
                 continue
             for pa, pb, c in zip(ids[ci[m]], ids[cj[m]], cos[m]):
-                r = float(
-                    Decimal(repr(float(c))).quantize(q6, ROUND_HALF_UP)
-                )
+                r = spark_round(c, 6)
                 if r >= thr:
                     out_a.append(int(pa))
                     out_b.append(int(pb))

@@ -31,32 +31,48 @@ def read_page_stream(
     )
 
 
+def _start_parquet_sink(
+    out: DataFrame, output_path: str, checkpoint_path: str
+) -> StreamingQuery:
+    """Append ``out`` to a parquet sink under ``Trigger.AvailableNow``:
+    the run processes every file present, then stops. Exactly-once via
+    the checkpoint (file-source offsets + file-sink manifest)."""
+    return (
+        out.writeStream.format("parquet")
+        .option("path", output_path)
+        .option("checkpointLocation", checkpoint_path)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _overwrite_run_partition(df: DataFrame, path: str) -> None:
+    """Write ``df`` (which carries a ``run_id`` column) to ``path``,
+    replacing only the run_id partitions it holds: a replayed
+    microbatch overwrites its own partition instead of appending
+    duplicates (foreachBatch is at-least-once)."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("run_id")
+        .parquet(path)
+    )
+
+
 def start_extraction_stream(
     spark: SparkSession,
     input_path: str,
     output_path: str,
     checkpoint_path: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
-    """pages stream -> extraction -> append parquet sink.
-
-    available_now=True processes everything present then stops —
-    the incremental batch mode; False runs continuously. Exactly-once
-    via the checkpoint (file-source offsets + file-sink manifest).
-    """
+    """pages stream -> extraction -> append parquet sink."""
     from webxtract.ops.extract import extract_pages
 
     stream = read_page_stream(spark, input_path)
-    extracted = extract_pages(stream)
-    writer = (
-        extracted.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
+    return _start_parquet_sink(
+        extract_pages(stream), output_path, checkpoint_path
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_pipeline_stream(
@@ -65,7 +81,6 @@ def start_pipeline_stream(
     output_path: str,
     checkpoint_path: str,
     run_date: str | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """pages stream -> FULL pipeline (extract -> fields -> type ->
     fake -> validators -> summary) -> append parquet sink.
@@ -79,15 +94,7 @@ def start_pipeline_stream(
 
     stream = read_page_stream(spark, input_path)
     out = run_pipeline(stream, run_date=run_date or DEFAULT_RUN_DATE)
-    writer = (
-        out.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(out, output_path, checkpoint_path)
 
 
 def start_audited_extraction_stream(
@@ -96,7 +103,6 @@ def start_audited_extraction_stream(
     output_path: str,
     audit_path: str,
     checkpoint_path: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Extraction stream with the batch job's audit contract: every
     microbatch appends output partitioned by run_id (= batch-<id>) AND
@@ -108,8 +114,6 @@ def start_audited_extraction_stream(
     the replayed batch replaces its own output partition AND its own
     audit partition instead of appending duplicates — foreachBatch is
     at-least-once, idempotence must come from the sink."""
-    from pyspark.sql import functions as F
-
     from webxtract.audit import audit_rows
     from webxtract.ops.extract import extract_pages
 
@@ -124,28 +128,19 @@ def start_audited_extraction_stream(
             .persist()
         )
         try:
-            (
-                out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("run_id")
-                .parquet(output_path)
-            )
-            (
-                audit_rows(out.drop("run_id"), run_id)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("run_id")
-                .parquet(audit_path)
+            _overwrite_run_partition(out, output_path)
+            _overwrite_run_partition(
+                audit_rows(out.drop("run_id"), run_id), audit_path
             )
         finally:
             out.unpersist()
 
-    writer = extracted.writeStream.foreachBatch(_write_batch).option(
-        "checkpointLocation", checkpoint_path
+    return (
+        extracted.writeStream.foreachBatch(_write_batch)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ----------------------------------------------- windowed aggregation
@@ -306,7 +301,6 @@ def start_dedup_stream(
     output_path: str,
     checkpoint_path: str,
     watermark: str = "24 hours",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming exact dedup: the streaming twin of
     ``dedup.exact_dedup``'s keep-first contract for incremental page
@@ -336,15 +330,7 @@ def start_dedup_stream(
     deduped = hashed.withWatermark(
         "warc_ts", watermark
     ).dropDuplicatesWithinWatermark(["text_hash"])
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(deduped, output_path, checkpoint_path)
 
 
 def start_near_dedup_stream(
@@ -355,7 +341,6 @@ def start_near_dedup_stream(
     checkpoint_path: str,
     max_hamming: int = 3,
     horizon: str | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming NEAR-dedup for incremental page drops — the
     hamming<=k twin of ``start_dedup_stream``. Near-dup needs a banded
@@ -411,12 +396,8 @@ def start_near_dedup_stream(
                 max_hamming=max_hamming,
             )
             survivors = pages.join(keep.select("url"), "url")
-            (
-                survivors.withColumn("run_id", F.lit(run_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("run_id")
-                .parquet(output_path)
+            _overwrite_run_partition(
+                survivors.withColumn("run_id", F.lit(run_id)), output_path
             )
             fps = (
                 keep.filter(F.col("simhash").isNotNull())
@@ -427,21 +408,16 @@ def start_near_dedup_stream(
                     F.lit(run_id).alias("run_id"),
                 )
             )
-            (
-                fps.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("run_id")
-                .parquet(fingerprint_path)
-            )
+            _overwrite_run_partition(fps, fingerprint_path)
         finally:
             pages.unpersist()
 
-    writer = stream.writeStream.foreachBatch(_write_batch).option(
-        "checkpointLocation", checkpoint_path
+    return (
+        stream.writeStream.foreachBatch(_write_batch)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_warc_stream(
@@ -480,7 +456,6 @@ def start_warc_extraction_stream(
     input_path: str,
     output_path: str,
     checkpoint_path: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """WARC segments -> pages contract -> extraction -> append parquet
     sink. The incremental crawl-ingest path: each AvailableNow run
@@ -491,13 +466,6 @@ def start_warc_extraction_stream(
     from webxtract.ops.extract import extract_pages
 
     pages = W.warc_to_pages(read_warc_stream(spark, input_path))
-    extracted = extract_pages(pages)
-    writer = (
-        extracted.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
+    return _start_parquet_sink(
+        extract_pages(pages), output_path, checkpoint_path
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -7,8 +7,9 @@ Two implementation forms, one per operator:
   pieces evaluate interpreted, so every shared subexpression is bound
   once per row via webxtract.exprs.bind_once);
 - ``*_frame`` operators (``lang_id_clf_frame``, ``script_signals_frame``):
-  one ``mapInPandas`` kernel per batch, for the scorers whose
-  expression form was an interpreted per-token or per-character cliff.
+  one ``mapInArrow`` kernel per batch (``kernels.doc_scores``), for
+  the scorers whose expression form was an interpreted per-token or
+  per-character cliff.
 
 Each operator has an exact DuckDB-SQL twin in webxtract.oracles
 (checked by scripts/oracle_check.py).
@@ -269,99 +270,53 @@ def lang_id_clf_frame(
 ) -> "DataFrame":  # noqa: F821
     """Trained hashed-NB language ID — the model-based upgrade of the
     ``lang_id_expr`` stopword toy: (keep_cols..., predicted_lang,
-    lang_score) from ONE mapInPandas pass, zero shuffles, zero joins.
-    The per-language log-odds weight tables are fitted offline and
-    deterministically by ``scripts/fit_lang_clf.py`` and committed as
-    ``webxtract/lang_clf.py``; they ship to the workers with the
-    kernel's closure.
+    lang_score) from ONE mapInArrow pass (``kernels.doc_scores``), zero
+    shuffles, zero joins. The per-language log-odds weight tables are
+    fitted offline and deterministically by ``scripts/fit_lang_clf.py``
+    and committed as ``webxtract/lang_clf.py``; they ship to the
+    workers with the kernel's closure.
 
-    Per row: lowercase, trim spaces, split on ASCII whitespace (Java
-    ``\\s``), one md5-60 bucket per token (low 15 hex digits of md5 mod
-    LANG_CLF_BUCKETS), then per language the float64 sum of
-    ``w_lang[bucket]`` in token order and ``score = round(sum/n, 6)``
-    (Decimal HALF_UP, = Spark ``round()``). The score rounds BEFORE the
-    argmax so last-ulp drift cannot flip the winner against the DuckDB
-    oracle; the argmax is the greatest score, ties to the first
+    Per row: lowercase, then ``kernels.ws_split``, one bucket per token
+    (``kernels.md5_60`` mod LANG_CLF_BUCKETS), then per language the
+    float64 sum of ``w_lang[bucket]`` in token order and ``score =
+    round(sum/n, 6)`` (``kernels.spark_round``). The score rounds
+    BEFORE the argmax so last-ulp drift cannot flip the winner against
+    the DuckDB oracle; the argmax is the greatest score, ties to the first
     language in LANG_CLF_LANGS order. NULL, empty and blank text
     tokenize to the single empty token, so they score like any other
     one-token document and never yield NULL. The expression form this
     replaced hashed every token with an interpreted lambda (18-19
     executor-CPU core-s / 1.4 s at sf1.0; ~1 core-s here)."""
-    from pyspark.sql.types import (
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import DoubleType, StringType, StructField
 
+    from webxtract.kernels import doc_scores, md5_60, spark_round, ws_split
     from webxtract.lang_clf import (
         LANG_CLF_BUCKETS,
         LANG_CLF_LANGS,
         LANG_CLF_WEIGHTS,
     )
 
-    keep_fields = [df.schema[c] for c in keep_cols]
     langs = list(LANG_CLF_LANGS)
     tables = [[float(x) for x in LANG_CLF_WEIGHTS[la]] for la in langs]
     nb = int(LANG_CLF_BUCKETS)
 
-    def _kernel(batches):  # noqa: ANN001, ANN202
-        import hashlib
-        import re
-        from decimal import ROUND_HALF_UP, Decimal
+    def one(t):  # noqa: ANN001, ANN202
+        buckets = [md5_60(tk) % nb for tk in ws_split((t or "").lower())]
+        n = float(len(buckets))
+        per = []
+        for tab in tables:
+            acc = 0.0
+            for b in buckets:
+                acc = acc + tab[b]
+            per.append(spark_round(acc / n, 6))
+        best_s = max(per)
+        return langs[per.index(best_s)], best_s
 
-        import pandas as pd
-
-        ws = re.compile(r"\s+", re.ASCII)
-        q6 = Decimal("0.000001")
-
-        def r6(x: float) -> float:
-            return float(Decimal(repr(x)).quantize(q6, ROUND_HALF_UP))
-
-        for pdf in batches:
-            preds, scores = [], []
-            for t in pdf[text_col]:
-                toks = ws.split((t or "").lower().strip(" "))
-                buckets = [
-                    int(
-                        hashlib.md5(tk.encode("utf-8")).hexdigest()[:15], 16
-                    )
-                    % nb
-                    for tk in toks
-                ]
-                n = float(len(buckets))
-                best_s, best_i = None, 0
-                per = []
-                for li, tab in enumerate(tables):
-                    acc = 0.0
-                    for b in buckets:
-                        acc = acc + tab[b]
-                    per.append(r6(acc / n))
-                best_s = max(per)
-                for li, s in enumerate(per):
-                    if s == best_s:
-                        best_i = li
-                        break
-                preds.append(langs[best_i])
-                scores.append(best_s)
-            out = pd.DataFrame(
-                {
-                    "predicted_lang": preds,
-                    "lang_score": pd.array(scores, dtype="float64"),
-                }
-            )
-            for i, c in enumerate(keep_cols):
-                out.insert(i, c, pdf[c].to_numpy())
-            yield out
-
-    schema = StructType(
-        keep_fields
-        + [
-            StructField("predicted_lang", StringType(), True),
-            StructField("lang_score", DoubleType(), True),
-        ]
-    )
-    return df.select(*keep_cols, text_col).mapInPandas(_kernel, schema)
+    fields = [
+        StructField("predicted_lang", StringType(), True),
+        StructField("lang_score", DoubleType(), True),
+    ]
+    return doc_scores(df, keep_cols, text_col, fields, lambda: one)
 
 
 def stable_hash60_expr(s: Column) -> Column:
@@ -454,12 +409,12 @@ def script_signals_frame(
     decides which downstream language/quality stack a crawl document
     enters before any model-based language ID runs: (id,
     dominant_script, frac_<script>... in sorted column order) from ONE
-    mapInPandas pass, zero shuffles.
+    mapInArrow pass (``kernels.doc_scores``), zero shuffles.
 
     frac_<script> = characters of that script / non-whitespace
     characters (whitespace is Java regex ASCII ``\\s``), rounded 6 dp
-    via Decimal(repr(x)) HALF_UP (= Spark ``round()``); the division is
-    an exact int->float64 one. 0.0 when the text has no non-whitespace
+    with ``kernels.spark_round``; the division is an exact
+    int->float64 one. 0.0 when the text has no non-whitespace
     character. dominant_script is the first script in SCRIPTS order
     with the strictly greatest positive count, 'other' when no probed
     script occurs. NULL text profiles as empty text.
@@ -469,30 +424,22 @@ def script_signals_frame(
     core-s at sf1.0, against 46-66 executor-CPU core-s for the
     len(SCRIPTS)+1 Java regex-replace passes of the expression form
     this replaced)."""
-    from pyspark.sql.types import (
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import DoubleType, StringType, StructField
 
-    id_field = df.schema[id_col]
+    from webxtract.kernels import doc_scores, spark_round
+
     names = [n for n, _ in SCRIPTS]
+    cols = ["dominant_script"] + [f"frac_{n}" for n in names]
+    out_cols = sorted(cols)
+    order = [cols.index(c) for c in out_cols]
 
-    def _kernel(batches):  # noqa: ANN001, ANN202
-        from decimal import ROUND_HALF_UP, Decimal
-
+    def make_score():  # noqa: ANN202
         import numpy as np
-        import pandas as pd
 
         lut, res = _script_lut()
         n_s = len(names)
-        q6 = Decimal("0.000001")
 
-        def r6(x: float) -> float:
-            return float(Decimal(repr(float(x))).quantize(q6, ROUND_HALF_UP))
-
-        def classify(cps):  # noqa: ANN001
+        def classify(cps):  # noqa: ANN001, ANN202
             fresh = cps[lut[cps] == 255]
             for cp in np.unique(fresh):
                 ch = chr(int(cp))
@@ -507,46 +454,32 @@ def script_signals_frame(
                 lut[cp] = cls
             return lut[cps]
 
-        for pdf in batches:
-            rows = []
-            for t in pdf[text_col]:
-                if t is None:
-                    t = ""
-                if t:
-                    cps = np.frombuffer(
-                        t.encode("utf-32-le"), dtype=np.uint32
-                    )
-                    counts = np.bincount(classify(cps), minlength=n_s + 2)
-                else:
-                    counts = np.zeros(n_s + 2, dtype=np.int64)
-                base = int(len(t) - counts[n_s])
-                fracs = [
-                    r6(int(counts[i]) / base) if base > 0 else 0.0
-                    for i in range(n_s)
-                ]
-                best, dom = 0, "other"
-                for i, nm in enumerate(names):
-                    c = int(counts[i])
-                    if c > 0 and c > best:
-                        best, dom = c, nm
-                rows.append([dom] + fracs)
-            out = pd.DataFrame(
-                rows, columns=["dominant_script"] + [f"frac_{n}" for n in names]
-            )
-            out.insert(0, id_col, pdf[id_col].to_numpy())
-            ordered = [id_col] + sorted(out.columns[1:])
-            yield out[ordered]
+        def one(t):  # noqa: ANN001, ANN202
+            if t:
+                cps = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32)
+                counts = np.bincount(classify(cps), minlength=n_s + 2)
+            else:
+                t, counts = "", np.zeros(n_s + 2, dtype=np.int64)
+            base = int(len(t) - counts[n_s])
+            fracs = [
+                spark_round(int(counts[i]) / base, 6) if base > 0 else 0.0
+                for i in range(n_s)
+            ]
+            best, dom = 0, "other"
+            for i, nm in enumerate(names):
+                c = int(counts[i])
+                if c > 0 and c > best:
+                    best, dom = c, nm
+            row = [dom] + fracs
+            return tuple(row[i] for i in order)
 
-    schema = StructType(
-        [id_field]
-        + [
-            StructField(nm, StringType() if nm == "dominant_script" else DoubleType(), True)
-            for nm in sorted(
-                ["dominant_script"] + [f"frac_{n}" for n in names]
-            )
-        ]
-    )
-    return df.select(id_col, text_col).mapInPandas(_kernel, schema)
+        return one
+
+    fields = [
+        StructField(c, StringType() if c == "dominant_script" else DoubleType(), True)
+        for c in out_cols
+    ]
+    return doc_scores(df, (id_col,), text_col, fields, make_score)
 
 
 def bm25_scores(
