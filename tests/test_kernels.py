@@ -41,6 +41,14 @@ def test_spark_round_matches_f_round(spark):
         (0.125, 2),
         (np.float64(2.675), 2),
         (np.float64(1.0000005), 6),
+        # non-finite values and values past 28 digits at dp
+        (float("inf"), 2),
+        (float("-inf"), 6),
+        (float("nan"), 6),
+        (1e30, 6),
+        (-1.2345678901234567e25, 6),
+        (1.7976931348623157e308, 2),
+        (5e-324, 6),
     ]
     row = spark.createDataFrame(
         [tuple(float(x) for x, _ in cases)],
@@ -49,7 +57,16 @@ def test_spark_round_matches_f_round(spark):
     got = row.select(
         *[F.round(f"x{i}", dp) for i, (_, dp) in enumerate(cases)]
     ).first()
-    assert list(got) == [spark_round(x, dp) for x, dp in cases]
+    # repr: NaN equals NaN, and -0.0 differs from 0.0
+    assert list(map(repr, got)) == [repr(spark_round(x, dp)) for x, dp in cases]
+
+
+def test_dsir_scores_carry_non_finite_log_ratios(spark):
+    """A -inf log-ratio (a bucket the target never hits) scores -inf,
+    as Spark's round leaves it, instead of failing the task."""
+    df = spark.createDataFrame([(1, "a b"), (2, None)], "doc_id bigint, text string")
+    got = curation.dsir_scores_frame(df, [float("-inf")] * 64).orderBy("doc_id").collect()
+    assert [tuple(r) for r in got] == [(1, 1, float("-inf")), (2, 0, 0.0)]
 
 
 SCORERS = {
@@ -146,14 +163,21 @@ def test_chunk_kernels_carry_ids_exactly(spark):
 
 def test_spark_parity_rules_live_in_kernels():
     """md5-60, Spark round and the Java \\s split are written once, in
-    webxtract/kernels.py (oracles.py holds their SQL twins)."""
+    webxtract/kernels.py (oracles.py holds their SQL twins), and only
+    kernels.py turns an Arrow column into Python values (``pylist``,
+    under one rule for invalid UTF-8)."""
     root = Path(webxtract.__file__).parent
-    patterns = ["hexdigest()[:15]", "ROUND_HALF_UP", 're.compile(r"\\s+", re.ASCII)']
+    patterns = {
+        "hexdigest()[:15]": ("kernels.py", "oracles.py"),
+        "ROUND_HALF_UP": ("kernels.py", "oracles.py"),
+        're.compile(r"\\s+", re.ASCII)': ("kernels.py", "oracles.py"),
+        ".to_pylist(": ("kernels.py",),
+    }
     found = [
         f"{p.relative_to(root)}: {pat}"
         for p in sorted(root.rglob("*.py"))
-        if p.relative_to(root).as_posix() not in ("kernels.py", "oracles.py")
-        for pat in patterns
-        if pat in p.read_text(encoding="utf-8")
+        for pat, homes in patterns.items()
+        if p.relative_to(root).as_posix() not in homes
+        and pat in p.read_text(encoding="utf-8")
     ]
     assert found == []

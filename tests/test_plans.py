@@ -499,6 +499,20 @@ def test_dsir_scoring_is_narrow(spark):
     assert _nodes(plan, "HashAggregate") == 0
 
 
+def test_bucket_counts_is_one_partial_count_kernel(spark):
+    """The DSIR bucket histogram is one mapInArrow partial-count kernel
+    per task, then a partial + final sum around ONE (bucket, n)
+    exchange: no join, and no text crosses the shuffle."""
+    from webxtract.curation import bucket_counts
+
+    docs = spark.read.parquet(f"{TESTDATA}/documents.parquet")
+    plan = _plan(bucket_counts(docs, n_buckets=64))
+    assert "Join" not in plan
+    assert _python_node_names(plan) == ["MapInArrow"]
+    assert _nodes(plan, "Exchange") == 1
+    assert _nodes(plan, "HashAggregate") == 2
+
+
 def test_bigram_perplexity_broadcast_stats(spark):
     """Scoring joins the top-k stats tables as BROADCASTS (three of
     them + the 1-row total); the corpus bigram stream itself never

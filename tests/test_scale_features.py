@@ -785,6 +785,44 @@ def test_semantic_dedup_blocks_by_cluster(spark):
     assert got == [(1, 2, 1.0)]
 
 
+def test_cosine_pairs_chunked_match_brute_force():
+    """One group of 42 vectors (861 pairs) verified 50 pairs at a time
+    gives the brute-force pairs: in-order float64 cosine, rounded 6 dp,
+    kept at >= threshold, a < b."""
+    import itertools
+    import math
+
+    import numpy as np
+
+    from webxtract.kernels import spark_round
+    from webxtract.similarity import _cosine_pairs
+
+    dim, thr = 8, 0.95
+    rng = np.random.default_rng(3)
+    base = rng.normal(size=(6, dim))
+    V = (np.repeat(base, 7, axis=0) + rng.normal(scale=0.1, size=(42, dim))).astype(
+        np.float32
+    )
+    ids = rng.permutation(1000)[:42].astype(np.int64)
+    pdf = pd.DataFrame({"id": ids, "v": list(V)})
+
+    def in_order(x, y):  # noqa: ANN001, ANN202
+        acc = float(x[0]) * float(y[0])
+        for i in range(1, dim):
+            acc = acc + float(x[i]) * float(y[i])
+        return acc
+
+    want = []
+    for (a, va), (b, vb) in itertools.combinations(sorted(zip(ids, V), key=lambda r: r[0]), 2):
+        c = in_order(va, vb) / (math.sqrt(in_order(va, va)) * math.sqrt(in_order(vb, vb)))
+        if spark_round(c, 6) >= thr:
+            want.append((int(a), int(b), spark_round(c, 6)))
+    got = _cosine_pairs(pdf, dim, thr, chunk=50)
+    assert 0 < len(want) < 861
+    assert list(got.itertuples(index=False, name=None)) == want
+    assert got.equals(_cosine_pairs(pdf, dim, thr))
+
+
 def test_near_dedup_stream_cross_drop_restart_and_horizon(spark, tmp_path):
     """Streaming near-dedup: a hamming<=3 variant WITHIN a drop is
     suppressed keep-smallest-url; a variant in a LATER drop is

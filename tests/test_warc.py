@@ -208,10 +208,12 @@ def test_non_utf8_text_plain_extracts_byte_identical(tmp_path, spark):
     """A text/plain record in a charset other than latin-1 reaches the
     text column by a binary->string cast, so it may be invalid UTF-8:
     extraction keeps it as native text, bytes unchanged, and the task
-    survives."""
+    survives. So does the whole pipeline, whose rule kernel reads the
+    text as ``make_valid_utf8`` of it."""
     from pyspark.sql import functions as F
 
     from webxtract.ops.extract import extract_pages
+    from webxtract.pipeline import run_pipeline
 
     payload = "café – 10 €".encode("cp1252")
     path = str(tmp_path / "seg.warc.gz")
@@ -221,13 +223,21 @@ def test_non_utf8_text_plain_extracts_byte_identical(tmp_path, spark):
             content_type="text/plain; charset=windows-1252",
         ),
     ]))
-    out = extract_pages(W.warc_to_pages(W.read_warc(spark, str(tmp_path))))
+    pages = W.warc_to_pages(W.read_warc(spark, str(tmp_path)))
+    out = extract_pages(pages)
     got = out.select(
         "source_kind", "parse_failure",
         F.col("extracted_text").cast("binary").alias("text"),
         F.col("spans")[0]["text"].cast("binary").alias("span"),
     ).collect()
     assert [tuple(r) for r in got] == [("text", False, payload, payload)]
+
+    # select a rule result, or the optimizer prunes the rule kernel
+    full = run_pipeline(pages).select(
+        F.col("extracted_text").cast("binary").alias("text"), "fake_detection"
+    ).collect()
+    assert [r.text for r in full] == [payload]
+    assert full[0].fake_detection is not None
 
 
 def test_warc_extraction_stream_incremental(spark, warc_dir, tmp_path):

@@ -75,7 +75,7 @@ def repetition_signals(
     for self-overlapping grams; both engines define it identically).
 
     Scale shape: ZERO shuffles. n-gram counting is document-local and
-    runs in ONE mapInArrow kernel (``kernels.doc_scores``;
+    runs in ONE mapInArrow kernel (``kernels.doc_rows``;
     Counter-based top-gram per doc) instead of the round-4
     HOF-expression form (transform/array_sort/aggregate): Spark
     evaluates higher-order lambdas interpreted — CodegenFallback, ~1
@@ -86,11 +86,11 @@ def repetition_signals(
     ``kernels.ws_split``."""
     from collections import Counter
 
-    from webxtract.kernels import doc_scores, spark_round, ws_split
+    from webxtract.kernels import doc_rows, spark_round, ws_split
 
     ns = tuple(ns)
 
-    def one(text):  # noqa: ANN001, ANN202
+    def rows_of(text):  # noqa: ANN001, ANN202
         if text is None:
             text = ""
         lines = text.split("\n")
@@ -114,14 +114,14 @@ def repetition_signals(
                 out.append(spark_round(cnt * glen / chars, 6))
             else:
                 out.append(0.0)
-        return tuple(out)
+        return [tuple(out)]
 
     fields = [
         StructField(nm, DoubleType(), True)
         for nm in ["dup_line_frac", "dup_line_char_frac"]
         + [f"top{k}gram_char_frac" for k in ns]
     ]
-    return doc_scores(df, (id_col,), text_col, fields, lambda: one)
+    return doc_rows(df, [id_col], [text_col], fields, lambda: rows_of)
 
 
 def remove_boilerplate_lines(
@@ -932,7 +932,7 @@ def tag_topics_frame(
 ) -> DataFrame:
     """Per-topic keyword hit counts plus the argmax topic: (id,
     n_<topic>..., topic) from ONE mapInArrow pass
-    (``kernels.doc_scores``) — zero shuffles, zero joins. Hit = substring containment on the lowercased text,
+    (``kernels.doc_rows``) — zero shuffles, zero joins. Hit = substring containment on the lowercased text,
     counted per keyword, not per occurrence. topic = the first topic in
     taxonomy order with the strictly greatest positive count, 'other'
     when nothing matches. NULL text counts zero everywhere and tags
@@ -944,25 +944,25 @@ def tag_topics_frame(
     expression form this replaced)."""
     from pyspark.sql.types import LongType, StringType
 
-    from webxtract.kernels import doc_scores
+    from webxtract.kernels import doc_rows
 
     tax = taxonomy or TOPIC_TAXONOMY
     topics = list(tax)
     kw_lists = [list(map(str, tax[t])) for t in topics]
 
-    def one(t):  # noqa: ANN001, ANN202
+    def rows_of(t):  # noqa: ANN001, ANN202
         low = (t or "").lower()
         counts = [sum(1 for kw in kws if kw in low) for kws in kw_lists]
         best, top = 0, "other"
         for c, name in zip(counts, topics):
             if c > 0 and c > best:
                 best, top = c, name
-        return (*counts, top)
+        return [(*counts, top)]
 
     fields = [StructField(f"n_{t}", LongType(), True) for t in topics] + [
         StructField("topic", StringType(), True)
     ]
-    return doc_scores(df, (id_col,), text_col, fields, lambda: one)
+    return doc_rows(df, [id_col], [text_col], fields, lambda: rows_of)
 
 
 def value_percentiles(
@@ -1085,8 +1085,9 @@ def bucket_counts(
     (same class as the ANN query-vector fetch) to build the log-ratio
     table for dsir_scores_frame.
 
-    Round 6: the per-gram md5 + explode moved into a mapInPandas
-    partial-count kernel — each task emits <= n_buckets (bucket,
+    Round 6: the per-gram md5 + explode moved into a partial-count
+    kernel, now one ``mapInArrow`` reading the text through
+    ``kernels.pylist`` — each task emits <= n_buckets (bucket,
     partial-count) rows from a CPython Counter (the bucket is
     ``kernels.md5_60`` of the bigram, as in dsir_scores_frame), and
     the groupBy sums the partials. Same
@@ -1097,26 +1098,25 @@ def bucket_counts(
     def _partials(batches):  # noqa: ANN001, ANN202
         from collections import Counter
 
-        import pandas as pd
+        import pyarrow as pa
 
-        from webxtract.kernels import md5_60, ws_split
+        from webxtract.kernels import md5_60, pylist, ws_split
 
         c: Counter = Counter()
-        for pdf in batches:
-            for t in pdf[text_col]:
+        for b in batches:
+            for t in pylist(b.column(0)):
                 toks = ws_split(t)
                 for i in range(len(toks) - 1):
                     c[md5_60(toks[i] + " " + toks[i + 1]) % n_buckets] += 1
-        yield pd.DataFrame(
-            {
-                "bucket": pd.array(sorted(c), dtype="int64"),
-                "n": pd.array([c[b] for b in sorted(c)], dtype="int64"),
-            }
+        keys = sorted(c)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(keys, pa.int64()), pa.array([c[k] for k in keys], pa.int64())],
+            ["bucket", "n"],
         )
 
     return (
         df.select(text_col)
-        .mapInPandas(_partials, "bucket long, n long")
+        .mapInArrow(_partials, "bucket long, n long")
         .groupBy("bucket")
         .agg(F.sum("n").cast("long").alias("n"))
     )
@@ -1130,7 +1130,7 @@ def dsir_scores_frame(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-document DSIR log importance weight: (id, n_grams,
-    dsir_logweight) from ONE mapInArrow pass (``kernels.doc_scores``)
+    dsir_logweight) from ONE mapInArrow pass (``kernels.doc_rows``)
     — zero shuffles, zero joins; scoring 10^12 documents is one map
     pass. The ``log_ratio`` table (one entry per bucket) ships with
     the kernel's closure.
@@ -1150,22 +1150,22 @@ def dsir_scores_frame(
     replaced)."""
     from pyspark.sql.types import LongType
 
-    from webxtract.kernels import doc_scores, md5_60, spark_round, ws_split
+    from webxtract.kernels import doc_rows, md5_60, spark_round, ws_split
 
     lr = [float(x) for x in log_ratio]
 
-    def one(t):  # noqa: ANN001, ANN202
+    def rows_of(t):  # noqa: ANN001, ANN202
         toks = ws_split(t)
         acc = 0.0
         for i in range(len(toks) - 1):
             acc = acc + lr[md5_60(toks[i] + " " + toks[i + 1]) % n_buckets]
-        return len(toks) - 1, spark_round(acc, 6)
+        return [(len(toks) - 1, spark_round(acc, 6))]
 
     fields = [
         StructField("n_grams", LongType(), True),
         StructField("dsir_logweight", DoubleType(), True),
     ]
-    return doc_scores(df, (id_col,), text_col, fields, lambda: one)
+    return doc_rows(df, [id_col], [text_col], fields, lambda: rows_of)
 
 
 def classifier_scores_frame(
@@ -1181,7 +1181,7 @@ def classifier_scores_frame(
     model-based filter step of FineWeb-Edu / CCNet / Llama-style
     curation (score every document with a cheap linear model, keep
     above a threshold): (id, n_feats, clf_score, clf_keep) from ONE
-    mapInArrow pass (``kernels.doc_scores``) — zero shuffles, zero
+    mapInArrow pass (``kernels.doc_rows``) — zero shuffles, zero
     joins, embarrassingly parallel. ``weights`` (one per bucket;
     ``classifier_weights`` is the deterministic stand-in for a trained
     model) ships with the kernel's closure.
@@ -1204,12 +1204,12 @@ def classifier_scores_frame(
 
     from pyspark.sql.types import BooleanType, LongType
 
-    from webxtract.kernels import doc_scores, md5_60, spark_round, ws_split
+    from webxtract.kernels import doc_rows, md5_60, spark_round, ws_split
 
     w = [float(x) for x in weights]
     bias, threshold = float(bias), float(threshold)
 
-    def one(t):  # noqa: ANN001, ANN202
+    def rows_of(t):  # noqa: ANN001, ANN202
         toks = ws_split(t)
         feats = toks + [toks[i] + " " + toks[i + 1] for i in range(len(toks) - 1)]
         acc = 0.0
@@ -1217,14 +1217,14 @@ def classifier_scores_frame(
             acc = acc + w[md5_60(g) % n_buckets]
         logit = bias + acc / float(len(feats))
         s = spark_round(1.0 / (1.0 + math.exp(-logit)), 6)
-        return len(feats), s, s >= threshold
+        return [(len(feats), s, s >= threshold)]
 
     fields = [
         StructField("n_feats", LongType(), True),
         StructField("clf_score", DoubleType(), True),
         StructField("clf_keep", BooleanType(), True),
     ]
-    return doc_scores(df, (id_col,), text_col, fields, lambda: one)
+    return doc_rows(df, [id_col], [text_col], fields, lambda: rows_of)
 
 
 def split_assign_expr(

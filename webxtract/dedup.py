@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from webxtract.kernels import md5_60, ws_split
+from webxtract.kernels import doc_rows, md5_60, ws_split
 from webxtract.textops import FINGERPRINT_MOD, stable_hash60_expr, word_shingles_expr
 
 # (a, b) parameters for the K minhash permutations h_i(x) = (a*x+b) mod P.
@@ -701,40 +701,6 @@ def chunk_spans(
     ]
 
 
-def _chunk_rows(frame: DataFrame, fields: list, rows_of) -> DataFrame:  # noqa: ANN001
-    """ONE ``mapInArrow`` pass over ``frame = (id, inputs...)``:
-    ``rows_of(*inputs)`` lists one document's output rows, and each
-    row leads with that document's id, taken from the Arrow id column
-    (``take``). A NULL, 64-bit or string id therefore comes back
-    exactly, never through a pandas int64 or float64 column."""
-    from pyspark.sql.pandas.types import to_arrow_type
-    from pyspark.sql.types import StructField, StructType
-
-    names = ["id"] + [f.name for f in fields]
-    types = [to_arrow_type(f.dataType) for f in fields]
-
-    def _kernel(batches):  # noqa: ANN001, ANN202
-        import pyarrow as pa
-
-        for b in batches:
-            src, rows = [], []
-            inputs = zip(*(c.to_pylist() for c in b.columns[1:]))
-            for i, args in enumerate(inputs):
-                for r in rows_of(*args):
-                    src.append(i)
-                    rows.append(r)
-            cols = list(zip(*rows)) or [()] * len(types)
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0).take(pa.array(src, pa.int64()))]
-                + [pa.array(c, t) for c, t in zip(cols, types)],
-                names,
-            )
-
-    id_type = frame.schema.fields[0].dataType
-    schema = StructType([StructField("id", id_type, True)] + fields)
-    return frame.mapInArrow(_kernel, schema)
-
-
 def _chunk_meta_frame(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -744,7 +710,7 @@ def _chunk_meta_frame(
     """(id, idx, n_tok, chunk_hash) — one row per ``chunk_spans`` chunk,
     with chunk_hash = ``kernels.md5_60`` of the chunk text: the chunk
     META rows duplicate_chunks and dedup_chunks start from, produced by
-    ONE mapInArrow pass (``_chunk_rows``; ~2 executor-CPU core-s per
+    ONE mapInArrow pass (``kernels.doc_rows``; ~2 executor-CPU core-s per
     chunk query at sf1.0, against 25-40 core-s for the interpreted
     chunker + explode + per-chunk md5 expression this replaced). Chunk
     text never leaves the task; only (id, idx, n_tok, hash) rows come
@@ -763,7 +729,8 @@ def _chunk_meta_frame(
         StructField("n_tok", IntegerType(), True),
         StructField("chunk_hash", LongType(), True),
     ]
-    return _chunk_rows(docs.select(id_col, text_col), fields, rows_of)
+    docs = docs.select(F.col(id_col).alias("id"), text_col)
+    return doc_rows(docs, ["id"], [text_col], fields, lambda: rows_of)
 
 
 def duplicate_chunks(
@@ -816,7 +783,7 @@ def dedup_chunks(
     Scan 2 joins the drop lists back by id (broadcast-eligible,
     unforced — AQE degrades to shuffle join instead of OOM when the
     corpus is pathologically duplicated) and rebuilds the text in one
-    mapInArrow kernel (``_chunk_rows``) over the same ``chunk_spans``
+    mapInArrow kernel (``kernels.doc_rows``) over the same ``chunk_spans``
     chunking. The rewrite itself is exchange-free."""
     from pyspark.sql.types import IntegerType, StringType, StructField
     from pyspark.sql.window import Window
@@ -833,9 +800,9 @@ def dedup_chunks(
     # unforced join, as before: AQE broadcasts the (small) drop list at
     # runtime but degrades to a shuffle join instead of OOMing on a
     # pathologically duplicated corpus
-    joined = docs.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias(text_col)
-    ).join(drops, "id", "left")
+    joined = docs.select(F.col(id_col).alias("id"), text_col).join(
+        drops, "id", "left"
+    )
 
     def rebuild(t, drop):  # noqa: ANN001, ANN202
         # the drop list filters the same deterministic chunking the
@@ -851,7 +818,7 @@ def dedup_chunks(
         StructField("n_chunks", IntegerType(), True),
         StructField("n_dropped", IntegerType(), True),
     ]
-    return _chunk_rows(joined.select("id", text_col, "drop_idx"), fields, rebuild)
+    return doc_rows(joined, ["id"], [text_col, "drop_idx"], fields, lambda: rebuild)
 
 
 def dedup_keep_best(
@@ -960,7 +927,8 @@ def doc_containment(
         StructField("chunk_hash", LongType(), True),
         StructField("n_chunks", LongType(), True),
     ]
-    sets = _chunk_rows(docs.select(id_col, text_col), fields, rows_of)
+    docs = docs.select(F.col(id_col).alias("id"), text_col)
+    sets = doc_rows(docs, ["id"], [text_col], fields, lambda: rows_of)
     buckets = (
         sets.groupBy("chunk_hash")
         .agg(F.collect_list(F.struct("id", "n_chunks")).alias("m"))

@@ -1,20 +1,39 @@
-"""The Spark-parity rules the Python kernels share, one implementation
-each. The DuckDB oracles (``webxtract.oracles``) check every kernel
-against these rules, so a kernel never restates them inline.
+"""The Python row boundary and the Spark-parity rules the Python kernels
+share, one implementation each. The DuckDB oracles
+(``webxtract.oracles``) check every kernel against these rules, so a
+kernel never restates them inline.
+
+Row boundary — the only place a Spark column becomes Python values:
+
+- ``row_udf``: a scalar ``arrow_udf`` applying ``fn`` to each row of
+  a batch (the rule kernel, the validator battery, type detection,
+  fake scoring, ``luhn_valid_expr``).
+- ``doc_rows``: one ``mapInArrow`` pass that maps each document to
+  0..n rows and carries its kept columns through as Arrow, exactly
+  (the per-document scorers and the chunk-dedup kernels).
+- ``pylist``: the reader both use, as does ``curation.bucket_counts``.
+  UTF-8 rule: a string column holding invalid UTF-8 (``warc_to_pages``'
+  binary->string cast makes such text) reads as Spark's
+  ``make_valid_utf8`` of it — each maximal invalid subsequence becomes
+  one U+FFFD. Columns a kernel does not produce pass through byte for
+  byte.
+
+Spark-parity rules:
 
 - ``md5_60``: the Python twin of ``textops.stable_hash60_expr``.
 - ``ws_split``: Spark's ``split(trim(text), '\\s+')``.
 - ``spark_round``: Spark's ``round(x, dp)`` on a double.
-- ``doc_scores``: one ``mapInArrow`` pass that scores each document
-  and carries its kept columns through as Arrow, exactly.
 """
 
 from __future__ import annotations
 
 import hashlib
+import math
 import re
-from decimal import ROUND_HALF_UP, Decimal
-from typing import Callable
+from decimal import ROUND_HALF_UP, Context, Decimal
+from typing import Callable, Iterable
+
+import pyarrow as pa
 
 _WS = re.compile(r"\s+", re.ASCII)  # Java regex \s: ASCII whitespace
 
@@ -37,29 +56,67 @@ def ws_split(text: str | None) -> list[str]:
 def spark_round(x: float, dp: int) -> float:
     """Spark's ``round(x, dp)`` on a double: HALF_UP on the shortest
     decimal repr of the double, as Spark's BigDecimal path rounds it.
-    ``float(x)`` first, so a NumPy scalar rounds like a Python float."""
-    return float(
-        Decimal(repr(float(x))).quantize(Decimal(1).scaleb(-dp), ROUND_HALF_UP)
-    )
+    ``float(x)`` first, so a NumPy scalar rounds like a Python float.
+    NaN and ±inf come back unchanged, as in Spark; the quantize runs
+    with enough digits for any double at ``dp``."""
+    x = float(x)
+    if not math.isfinite(x):
+        return x
+    d = Decimal(repr(x))
+    ctx = Context(prec=max(1, d.adjusted() + dp + 2))
+    return float(d.quantize(Decimal(1).scaleb(-dp), ROUND_HALF_UP, ctx))
 
 
-def doc_scores(
+def pylist(col: pa.Array) -> list:
+    """``col`` as Python values. A string batch holding invalid UTF-8
+    fails the fast ``to_pylist`` and only that batch is decoded from
+    its bytes with ``errors="replace"``, which equals Spark's
+    ``make_valid_utf8``."""
+    try:
+        return col.to_pylist()
+    except UnicodeDecodeError:
+        raw = col.cast(pa.large_binary()).to_pylist()
+        return [None if b is None else b.decode("utf-8", "replace") for b in raw]
+
+
+def row_udf(return_type):  # noqa: ANN001, ANN201
+    """Decorator: turn ``fn(*values) -> row`` into a scalar Arrow UDF
+    named like ``fn`` that reads each batch with ``pylist``, applies
+    ``fn`` to every row (tuples fill structs positionally) and returns
+    one Arrow array of ``return_type``."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    arrow_type = to_arrow_type(return_type)
+
+    def wrap(fn):  # noqa: ANN001, ANN202
+        def kernel(*cols: pa.Array) -> pa.Array:
+            return pa.array([fn(*row) for row in zip(*map(pylist, cols))], arrow_type)
+
+        kernel.__name__ = fn.__name__
+        return F.arrow_udf(kernel, return_type)
+
+    return wrap
+
+
+def doc_rows(
     df: "DataFrame",  # noqa: F821
-    keep_cols: tuple[str, ...] | list[str],
-    text_col: str,
+    keep_cols: Iterable[str],
+    input_cols: Iterable[str],
     fields: list["StructField"],  # noqa: F821
-    make_score: Callable[[], Callable[[str | None], tuple]],
+    make_rows: Callable[[], Callable[..., Iterable[tuple]]],
 ) -> "DataFrame":  # noqa: F821
     """(keep_cols..., fields...) from ONE ``mapInArrow`` pass over
-    ``(keep_cols..., text_col)``: zero shuffles, zero joins.
+    ``(keep_cols..., input_cols...)``: zero shuffles, zero joins.
 
-    ``make_score()`` runs once per task (per-task state, such as a
-    lookup table, lives in its closure) and returns ``score``, which
-    maps one text (None for NULL) to one tuple of values in ``fields``
-    order. The output columns are built with the Arrow types of
-    ``fields``; the ``keep_cols`` Arrow arrays pass through untouched.
-    A NULL or 64-bit id therefore comes back exactly, where pandas
-    turns a bigint column holding a NULL into float64."""
+    ``make_rows()`` runs once per task (per-task state, such as a
+    lookup table, lives in its closure) and returns ``rows_of``, which
+    maps one document's input values (None for NULL) to its 0..n output
+    rows, each a tuple in ``fields`` order. The output columns are
+    built with the Arrow types of ``fields``; each row's kept columns
+    are ``take``n from the input Arrow arrays, so a NULL, 64-bit or
+    string id comes back exactly, never through a pandas int64 or
+    float64 column."""
     from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import StructType
 
@@ -69,16 +126,21 @@ def doc_scores(
     types = [to_arrow_type(f.dataType) for f in fields]
 
     def _kernel(batches):  # noqa: ANN001, ANN202
-        import pyarrow as pa
-
-        score = make_score()
+        rows_of = make_rows()
         for b in batches:
-            rows = [score(t) for t in b.column(k).to_pylist()]
+            src, rows = [], []
+            for i, args in enumerate(zip(*map(pylist, b.columns[k:]))):
+                for r in rows_of(*args):
+                    src.append(i)
+                    rows.append(r)
+            idx = pa.array(src, pa.int64())
             cols = list(zip(*rows)) or [()] * len(types)
             yield pa.RecordBatch.from_arrays(
-                b.columns[:k] + [pa.array(c, t) for c, t in zip(cols, types)],
+                [c.take(idx) for c in b.columns[:k]]
+                + [pa.array(c, t) for c, t in zip(cols, types)],
                 names,
             )
 
-    schema = StructType([df.schema[c] for c in keep_cols] + list(fields))
-    return df.select(*keep_cols, text_col).mapInArrow(_kernel, schema)
+    src_df = df.select(*keep_cols, *input_cols)
+    schema = StructType([src_df.schema[c] for c in keep_cols] + list(fields))
+    return src_df.mapInArrow(_kernel, schema)

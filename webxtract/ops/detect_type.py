@@ -25,7 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from webxtract import rules
-from webxtract.ops.validators import _SEP, Doc, _jre, _trim, row_udf
+from webxtract.kernels import row_udf
+from webxtract.ops.validators import _SEP, Doc, _jre, _trim
 from webxtract.schemas import DOC_TYPE_INFO_TYPE, FIELD_NAMES
 
 # D3 lookups (detector :556-581): first key contained in the text wins,

@@ -31,8 +31,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from webxtract import rules
-from webxtract.kernels import spark_round
-from webxtract.ops.validators import _DIGITS, _SEP, Doc, _jre, _trim, row_udf
+from webxtract.kernels import row_udf, spark_round
+from webxtract.ops.validators import _DIGITS, _SEP, Doc, _jre, _trim
 from webxtract.schemas import FAKE_RESULT_TYPE, FIELD_NAMES
 
 _NUMBER_PATTERNS = [_jre(f"(?i){p}") for p in rules.FAKE_DOC_NUMBER_PATTERNS]

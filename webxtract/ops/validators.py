@@ -12,8 +12,9 @@ dates parsed by ``with_parsed_dates`` (date semantics stay in Catalyst),
 which also runs type detection and fake scoring; elsewhere
 ``validation_results_expr`` runs it alone. No rule logic is analyzed,
 optimized or code-generated by Catalyst. This module also holds what
-every rule kernel shares: ``Doc``, the Spark-semantics helpers and
-``row_udf``.
+every rule kernel shares: ``Doc`` and the Spark-semantics helpers; the
+UDF wrapper, ``row_udf``, lives in ``webxtract.kernels`` with the other
+readers of Spark columns.
 
 Each validator is a plain Python function over one document, written
 close to the reference class it replicates: the 5 base validators, the
@@ -50,13 +51,11 @@ from __future__ import annotations
 import json
 import re
 
-import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import ArrayType, BooleanType
 
-from webxtract.kernels import ws_split
+from webxtract.kernels import row_udf, ws_split
 from webxtract.rules import (
     COUNTRY_CODES,
     DATE_FORMATS_SPARK,
@@ -165,24 +164,6 @@ class Doc:
             setattr(self, name, v)
         self.dob, self.issue, self.exp = dob, issue, exp
         self.run, self.minimum_age = run, minimum_age
-
-
-def row_udf(return_type):  # noqa: ANN001, ANN201
-    """Decorator: turn ``fn(*values) -> row`` into a scalar Arrow UDF named
-    like ``fn`` that converts each batch to Python lists, applies ``fn``
-    to every row (tuples fill structs positionally) and returns one Arrow
-    array of ``return_type``."""
-    arrow_type = to_arrow_type(return_type)
-
-    def wrap(fn):  # noqa: ANN001, ANN202
-        def kernel(*cols: pa.Array) -> pa.Array:
-            rows = zip(*(c.to_pylist() for c in cols))
-            return pa.array([fn(*row) for row in rows], arrow_type)
-
-        kernel.__name__ = fn.__name__
-        return F.arrow_udf(kernel, return_type)
-
-    return wrap
 
 
 def _result(name: str, issues: list, warnings: list, fail: str, warn: str,

@@ -30,6 +30,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from webxtract.audit import partition_by_url
 from webxtract.config import DEFAULT_MINIMUM_AGE, DEFAULT_RUN_DATE
+from webxtract.kernels import row_udf
 from webxtract.ops.detect_type import detect
 from webxtract.ops.extract import extract_pages
 from webxtract.ops.fake import fake_result
@@ -39,7 +40,6 @@ from webxtract.ops.validators import (
     Doc,
     doc_columns,
     doc_type_enum,
-    row_udf,
     validate,
     validation_summary_expr,
     with_parsed_dates,

@@ -189,6 +189,74 @@ def lsh_topk(
     )
 
 
+_PAIR_CHUNK = 200_000  # upper-triangle pairs verified per NumPy step
+
+
+def _triu_chunks(n: int, chunk: int):  # noqa: ANN202
+    """The upper-triangle pairs (i < j) of n rows in row-major order
+    (``np.triu_indices(n, 1)``'s), as (i, j) index arrays over blocks
+    of whole rows holding at most ``max(chunk, n - 1)`` pairs each, so
+    the full triangle is never materialised."""
+    import numpy as np
+
+    step = max(1, chunk // max(1, n - 1))
+    for r in range(0, n - 1, step):
+        rows = np.arange(r, min(r + step, n - 1))
+        lens = n - 1 - rows
+        ci = np.repeat(rows, lens)
+        start = np.repeat(np.cumsum(lens) - lens, lens)
+        yield ci, np.arange(len(ci)) - start + ci + 1
+
+
+def _cosine_pairs(pdf, dim: int, thr: float, chunk: int = _PAIR_CHUNK):  # noqa: ANN001, ANN201
+    """(a, b, cosine) for the a < b pairs of one group's (id, v) rows
+    with cosine >= ``thr``: the pair verifier of near_dup_pairs and
+    semantic_dedup_pairs. The dot and the norms accumulate in float64
+    left to right over dimensions, vectorized across pairs, so each
+    pair's sum has the DuckDB oracle's in-order association; cosine =
+    dot / (na * nb). ``kernels.spark_round`` rounds only the pairs
+    inside the 0.5e-6 margin of the threshold (below it a raw cosine
+    cannot round up to ``thr``). The triangle is walked in
+    ``_triu_chunks``, so peak memory stays ~2 * chunk * dim * 8 B per
+    task whatever the group size."""
+    import numpy as np
+    import pandas as pd
+
+    from webxtract.kernels import spark_round
+
+    out_a, out_b, out_c = [], [], []
+    n = len(pdf)
+    if n >= 2:
+        ids = pdf["id"].to_numpy()
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        V = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
+        acc = V[:, 0] * V[:, 0]
+        for i in range(1, dim):
+            acc = acc + V[:, i] * V[:, i]
+        nrm = np.sqrt(acc)
+        for ci, cj in _triu_chunks(n, chunk):
+            A, B = V[ci], V[cj]
+            d = A[:, 0] * B[:, 0]
+            for i in range(1, dim):
+                d = d + A[:, i] * B[:, i]
+            cos = d / (nrm[ci] * nrm[cj])
+            m = cos >= thr - 5.000001e-7
+            for a, b, c in zip(ids[ci[m]], ids[cj[m]], cos[m]):
+                r = spark_round(c, 6)
+                if r >= thr:
+                    out_a.append(int(a))
+                    out_b.append(int(b))
+                    out_c.append(r)
+    return pd.DataFrame(
+        {
+            "a": np.asarray(out_a, dtype=np.int64),
+            "b": np.asarray(out_b, dtype=np.int64),
+            "cosine": np.asarray(out_c, dtype=np.float64),
+        }
+    )
+
+
 def near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.95,
@@ -226,10 +294,10 @@ def near_dup_pairs(
     after pair dedup, a deliberate trade: both designs move O(n_bands
     x corpus) vector bytes once, this one without two join stages and
     a candidate shuffle. Kernel B receives one bucket's rows, applies
-    the cap, generates a<b pairs and verifies exact cosine (in-order
-    dot, ``kernels.spark_round`` inside a 0.5e-6 threshold margin);
-    survivors dedup on (a, b) across bands — band-identical values,
-    so the kept row is well-defined."""
+    the cap and verifies the a<b pairs with ``_cosine_pairs`` (exact
+    in-order cosine, chunked over the upper triangle); survivors dedup
+    on (a, b) across bands — band-identical values, so the kept row is
+    well-defined."""
     planes = [
         [
             _plane_weight(band * planes_per_band + j, i)
@@ -276,54 +344,9 @@ def near_dup_pairs(
             )
 
     def _bucket_pairs(pdf):  # noqa: ANN001, ANN202
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {
-                "a": pd.Series(dtype="int64"),
-                "b": pd.Series(dtype="int64"),
-                "cosine": pd.Series(dtype="float64"),
-            }
-        )
-        n = len(pdf)
-        if n < 2 or (cap is not None and n > cap):
-            return empty
-        ids = pdf["id"].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        V = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
-        acc = V[:, 0] * V[:, 0]
-        for i in range(1, dim):
-            acc = acc + V[:, i] * V[:, i]
-        nrm = np.sqrt(acc)
-        iu, ju = np.triu_indices(n, 1)
-        A, B = V[iu], V[ju]
-        d = A[:, 0] * B[:, 0]
-        for i in range(1, dim):
-            d = d + A[:, i] * B[:, i]
-        cos = d / (nrm[iu] * nrm[ju])
-        m = cos >= thr - 5.000001e-7
-        if not m.any():
-            return empty
-        from webxtract.kernels import spark_round
-
-        out_a, out_b, out_c = [], [], []
-        for pa, pb, c in zip(ids[iu[m]], ids[ju[m]], cos[m]):
-            r = spark_round(c, 6)
-            if r >= thr:
-                out_a.append(int(pa))
-                out_b.append(int(pb))
-                out_c.append(r)
-        if not out_a:
-            return empty
-        return pd.DataFrame(
-            {
-                "a": np.asarray(out_a, dtype=np.int64),
-                "b": np.asarray(out_b, dtype=np.int64),
-                "cosine": np.asarray(out_c, dtype=np.float64),
-            }
-        )
+        if cap is not None and len(pdf) > cap:
+            pdf = pdf.iloc[:0]
+        return _cosine_pairs(pdf, dim, thr)
 
     vec_type = df.schema[vec_col].dataType.simpleString()
     posting = df.select(
@@ -489,14 +512,9 @@ def semantic_dedup_pairs(
     generated and filtered inside the worker, survivors only come
     back.
 
-    Float contract (bit-exact vs the DuckDB oracle): the dot and the
-    norms accumulate in float64 left-to-right over dimensions — the
-    kernel loops over dims, vectorized ACROSS pairs, so each pair's
-    sum has exactly the oracle's in-order association; cosine =
-    dot / (na * nb); ``kernels.spark_round`` rounds only the few
-    pairs inside the 0.5e-6 margin of the threshold — below
-    the margin a raw cosine cannot round up to the threshold, so the
-    cheap vectorized comparison disposes of everything else."""
+    The pair verifier is ``_cosine_pairs``, shared with near_dup_pairs:
+    bit-exact against the DuckDB oracle, and chunked over the upper
+    triangle so a large cluster never materialises all its pairs."""
     dim = len(centroids[0])
     cents = [[float(x) for x in c] for c in centroids]
     thr = float(threshold)
@@ -543,66 +561,10 @@ def semantic_dedup_pairs(
     a = df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
         _assign, f"id long, v {vec_type}, cluster long"
     )
-
-    def _cluster_pairs(pdf):  # noqa: ANN001, ANN202
-        import numpy as np
-        import pandas as pd
-
-        n = len(pdf)
-        empty = pd.DataFrame(
-            {
-                "a": pd.Series(dtype="int64"),
-                "b": pd.Series(dtype="int64"),
-                "cosine": pd.Series(dtype="float64"),
-            }
-        )
-        if n < 2:
-            return empty
-        ids = pdf["id"].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        V = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
-        # in-order sum of squares per row (vectorized across rows)
-        acc = V[:, 0] * V[:, 0]
-        for i in range(1, dim):
-            acc = acc + V[:, i] * V[:, i]
-        nrm = np.sqrt(acc)
-        out_a, out_b, out_c = [], [], []
-        from webxtract.kernels import spark_round
-
-        # chunk the upper-triangle pair set so peak memory stays
-        # ~2 * chunk * dim * 8B per task regardless of cluster size
-        chunk = 200_000
-        iu, ju = np.triu_indices(n, 1)
-        for s in range(0, len(iu), chunk):
-            ci, cj = iu[s : s + chunk], ju[s : s + chunk]
-            A, B = V[ci], V[cj]
-            d = A[:, 0] * B[:, 0]
-            for i in range(1, dim):
-                d = d + A[:, i] * B[:, i]
-            cos = d / (nrm[ci] * nrm[cj])
-            # margin: raw below thr - 0.5e-6 cannot round up to thr
-            m = cos >= thr - 5.000001e-7
-            if not m.any():
-                continue
-            for pa, pb, c in zip(ids[ci[m]], ids[cj[m]], cos[m]):
-                r = spark_round(c, 6)
-                if r >= thr:
-                    out_a.append(int(pa))
-                    out_b.append(int(pb))
-                    out_c.append(r)
-        if not out_a:
-            return empty
-        return pd.DataFrame(
-            {
-                "a": np.asarray(out_a, dtype=np.int64),
-                "b": np.asarray(out_b, dtype=np.int64),
-                "cosine": np.asarray(out_c, dtype=np.float64),
-            }
-        )
-
     return (
         a.select("cluster", "id", "v")
         .groupBy("cluster")
-        .applyInPandas(_cluster_pairs, "a long, b long, cosine double")
+        .applyInPandas(
+            lambda pdf: _cosine_pairs(pdf, dim, thr), "a long, b long, cosine double"
+        )
     )

@@ -7,7 +7,7 @@ Two implementation forms, one per operator:
   pieces evaluate interpreted, so every shared subexpression is bound
   once per row via webxtract.exprs.bind_once);
 - ``*_frame`` operators (``lang_id_clf_frame``, ``script_signals_frame``):
-  one ``mapInArrow`` kernel per batch (``kernels.doc_scores``), for
+  one ``mapInArrow`` kernel per batch (``kernels.doc_rows``), for
   the scorers whose expression form was an interpreted per-token or
   per-character cliff.
 
@@ -270,7 +270,7 @@ def lang_id_clf_frame(
 ) -> "DataFrame":  # noqa: F821
     """Trained hashed-NB language ID — the model-based upgrade of the
     ``lang_id_expr`` stopword toy: (keep_cols..., predicted_lang,
-    lang_score) from ONE mapInArrow pass (``kernels.doc_scores``), zero
+    lang_score) from ONE mapInArrow pass (``kernels.doc_rows``), zero
     shuffles, zero joins. The per-language log-odds weight tables are
     fitted offline and deterministically by ``scripts/fit_lang_clf.py``
     and committed as ``webxtract/lang_clf.py``; they ship to the
@@ -289,7 +289,7 @@ def lang_id_clf_frame(
     executor-CPU core-s / 1.4 s at sf1.0; ~1 core-s here)."""
     from pyspark.sql.types import DoubleType, StringType, StructField
 
-    from webxtract.kernels import doc_scores, md5_60, spark_round, ws_split
+    from webxtract.kernels import doc_rows, md5_60, spark_round, ws_split
     from webxtract.lang_clf import (
         LANG_CLF_BUCKETS,
         LANG_CLF_LANGS,
@@ -300,7 +300,7 @@ def lang_id_clf_frame(
     tables = [[float(x) for x in LANG_CLF_WEIGHTS[la]] for la in langs]
     nb = int(LANG_CLF_BUCKETS)
 
-    def one(t):  # noqa: ANN001, ANN202
+    def rows_of(t):  # noqa: ANN001, ANN202
         buckets = [md5_60(tk) % nb for tk in ws_split((t or "").lower())]
         n = float(len(buckets))
         per = []
@@ -310,13 +310,13 @@ def lang_id_clf_frame(
                 acc = acc + tab[b]
             per.append(spark_round(acc / n, 6))
         best_s = max(per)
-        return langs[per.index(best_s)], best_s
+        return [(langs[per.index(best_s)], best_s)]
 
     fields = [
         StructField("predicted_lang", StringType(), True),
         StructField("lang_score", DoubleType(), True),
     ]
-    return doc_scores(df, keep_cols, text_col, fields, lambda: one)
+    return doc_rows(df, keep_cols, [text_col], fields, lambda: rows_of)
 
 
 def stable_hash60_expr(s: Column) -> Column:
@@ -409,7 +409,7 @@ def script_signals_frame(
     decides which downstream language/quality stack a crawl document
     enters before any model-based language ID runs: (id,
     dominant_script, frac_<script>... in sorted column order) from ONE
-    mapInArrow pass (``kernels.doc_scores``), zero shuffles.
+    mapInArrow pass (``kernels.doc_rows``), zero shuffles.
 
     frac_<script> = characters of that script / non-whitespace
     characters (whitespace is Java regex ASCII ``\\s``), rounded 6 dp
@@ -426,14 +426,14 @@ def script_signals_frame(
     this replaced)."""
     from pyspark.sql.types import DoubleType, StringType, StructField
 
-    from webxtract.kernels import doc_scores, spark_round
+    from webxtract.kernels import doc_rows, spark_round
 
     names = [n for n, _ in SCRIPTS]
     cols = ["dominant_script"] + [f"frac_{n}" for n in names]
     out_cols = sorted(cols)
     order = [cols.index(c) for c in out_cols]
 
-    def make_score():  # noqa: ANN202
+    def make_rows():  # noqa: ANN202
         import numpy as np
 
         lut, res = _script_lut()
@@ -454,7 +454,7 @@ def script_signals_frame(
                 lut[cp] = cls
             return lut[cps]
 
-        def one(t):  # noqa: ANN001, ANN202
+        def rows_of(t):  # noqa: ANN001, ANN202
             if t:
                 cps = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32)
                 counts = np.bincount(classify(cps), minlength=n_s + 2)
@@ -471,15 +471,15 @@ def script_signals_frame(
                 if c > 0 and c > best:
                     best, dom = c, nm
             row = [dom] + fracs
-            return tuple(row[i] for i in order)
+            return [tuple(row[i] for i in order)]
 
-        return one
+        return rows_of
 
     fields = [
         StructField(c, StringType() if c == "dominant_script" else DoubleType(), True)
         for c in out_cols
     ]
-    return doc_scores(df, (id_col,), text_col, fields, make_score)
+    return doc_rows(df, [id_col], [text_col], fields, make_rows)
 
 
 def bm25_scores(
