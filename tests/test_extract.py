@@ -1,6 +1,8 @@
 """Extraction-stage tests: the byte-identical per-url text invariant
 (BASELINE.json) plus span/structure checks, end-to-end through Spark."""
 
+import datetime as dt
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -102,7 +104,7 @@ def test_assembly_exprs_match_udf(spark, extracted):
 def test_no_shuffle_in_extraction_plan(spark, corpus):
     """The extraction stage stays one narrow map: no Exchange, and every
     page takes its path inside one kernel, so the plan scans the input
-    once and holds one MapInPandas, with no Filter/Union split."""
+    once and holds one MapInArrow, with no Filter/Union split."""
     import contextlib
     import io
     import re
@@ -118,7 +120,7 @@ def test_no_shuffle_in_extraction_plan(spark, corpus):
         return len(set(re.findall(rf"\((\d+)\) {name}", plan)))
 
     assert "Exchange" not in plan
-    assert (nodes("Scan parquet"), nodes("MapInPandas")) == (1, 1)
+    assert (nodes("Scan parquet"), nodes("MapInArrow")) == (1, 1)
     assert nodes("Union") == 0 and nodes("Filter") == 0
 
 
@@ -347,3 +349,53 @@ def test_structured_metadata_garbage_and_null_safe(spark):
     for i in (2, 3, 4):
         assert got[i]["og_title"] == "" and got[i]["n_jsonld"] == 0
         assert got[i]["jsonld_type"] == "" and got[i]["published_time"] == ""
+
+
+_EPOCH = dt.datetime(1970, 1, 1)
+# outside pandas' nanosecond range (1677-09-21 .. 2262-04-11) but valid
+# Spark timestamps
+_FAR_DATES = [dt.datetime(1, 1, 1), dt.datetime(1500, 6, 1), dt.datetime(2300, 1, 1),
+              dt.datetime(9999, 12, 31)]
+_PAYLOADS = [
+    (b"<html><body><p>an ordinary page of prose</p></body></html>", None),
+    (None, "native text"),
+    (None, None),
+    (b"%PDF-1.4\n%%PAGE 1\npdf text", None),
+]
+
+
+def _meta_pages(spark, odd: bytes):  # noqa: ANN001, ANN202
+    """One page per path, its warc_ts far from the epoch; ``odd`` goes
+    into each url and lang, which are binary->string casts."""
+    rows = [
+        (bytearray(b"http://caf%s.example/%d" % (odd, i)),
+         (d - _EPOCH) // dt.timedelta(microseconds=1),
+         html and bytearray(html), text, bytearray(b"e%s%d" % (odd, i)))
+        for i, (d, (html, text)) in enumerate(zip(_FAR_DATES, _PAYLOADS))
+    ]
+    df = spark.createDataFrame(rows, "u binary, us bigint, html binary, text string, l binary")
+    pages = df.select(
+        F.col("u").cast("string").alias("url"), F.timestamp_micros("us").alias("warc_ts"),
+        "html", "text", F.col("l").cast("string").alias("lang"),
+    )
+    return rows, pages
+
+
+def test_warc_ts_far_from_the_epoch_comes_back_exactly(spark):
+    """warc_ts is a kept column: a timestamp pandas cannot hold comes
+    back exactly (compared as micros: collect() cannot build year 1)."""
+    rows, pages = _meta_pages(spark, b"e")
+    got = extract_pages(pages).select(F.unix_micros("warc_ts").alias("us"), "source_kind")
+    assert sorted(map(tuple, got.collect())) == sorted(
+        zip([r[1] for r in rows], ["html", "text", "none", "pdf"])
+    )
+
+
+def test_invalid_utf8_url_and_lang_come_back_byte_identical(spark):
+    rows, pages = _meta_pages(spark, b"\xe9\xff")
+    got = extract_pages(pages).select(
+        F.col("url").cast("binary").alias("u"), F.col("lang").cast("binary").alias("l")
+    )
+    assert sorted((bytes(r.u), bytes(r.l)) for r in got.collect()) == sorted(
+        (bytes(r[0]), bytes(r[4])) for r in rows
+    )

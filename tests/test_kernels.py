@@ -165,7 +165,9 @@ def test_spark_parity_rules_live_in_kernels():
     """md5-60, Spark round and the Java \\s split are written once, in
     webxtract/kernels.py (oracles.py holds their SQL twins), and only
     kernels.py turns an Arrow column into Python values (``pylist``,
-    under one rule for invalid UTF-8)."""
+    under one rule for invalid UTF-8). The per-row kernels of
+    extraction, the page explode, the media kernels and curation run
+    through ``kernels.doc_rows``, never a pandas scaffold."""
     root = Path(webxtract.__file__).parent
     patterns = {
         "hexdigest()[:15]": ("kernels.py", "oracles.py"),
@@ -179,5 +181,11 @@ def test_spark_parity_rules_live_in_kernels():
         for pat, homes in patterns.items()
         if p.relative_to(root).as_posix() not in homes
         and pat in p.read_text(encoding="utf-8")
+    ]
+    found += [
+        f"{name}: {pat}"
+        for name in ("ops/extract.py", "ops/rasterize.py", "multimodal.py", "curation.py")
+        for pat in ("mapInPandas(", "pandas_udf", "import pandas")
+        if pat in (root / name).read_text(encoding="utf-8")
     ]
     assert found == []

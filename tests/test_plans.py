@@ -97,8 +97,8 @@ def _python_nodes(node, above: bool = True) -> list:  # noqa: ANN001
     if name == "ArrowEvalPython":
         udfs = node.udfs()
         found.append((above, name, [udfs.apply(i).name() for i in range(udfs.size())]))
-    elif name in ("MapInPandas", "BatchEvalPython"):
-        found.append((above, name, [node.func().name()] if name == "MapInPandas" else []))
+    elif name in ("MapInPandas", "MapInArrow", "BatchEvalPython"):
+        found.append((above, name, [] if name == "BatchEvalPython" else [node.func().name()]))
     above = above and name != "Exchange"
     kids = node.children()
     for i in range(kids.size()):
@@ -118,7 +118,7 @@ def test_pipeline_battery_is_one_arrow_eval_above_the_exchange(spark, corpus):
     nodes = _python_nodes(qe.sparkPlan())
     assert [(n, f) for above, n, f in nodes if above] == [("ArrowEvalPython", ["_rule_kernel"])]
     below = sorted((n, f) for above, n, f in nodes if not above)
-    assert below == [("MapInPandas", ["_extract_batches"])]
+    assert below == [("MapInArrow", ["_extract_rows"])]
     assert "lambdafunction" not in qe.optimizedPlan().toString().lower()
 
 
@@ -259,14 +259,14 @@ def test_domain_filter_broadcast_anti(spark):
 
 def test_normalize_text_is_narrow_arrow(spark):
     """Text normalization is one narrow pass: the only exchange is the
-    query's output orderBy, and the NFC step runs on the Arrow-batched
-    pandas path (ArrowEvalPython), never row-at-a-time Python: that one
-    node is the plan's only Python."""
+    query's output orderBy, and the control strip, NFC and counts run in
+    one Arrow-batched kernel (MapInArrow), never row-at-a-time Python:
+    that one node is the plan's only Python."""
     from webxtract.contract import q_normalize_text
 
     plan = _plan(q_normalize_text(spark, TESTDATA))
     assert _nodes(plan, "Exchange") == 1  # output sort only
-    assert _python_node_names(plan) == ["ArrowEvalPython"]
+    assert _python_node_names(plan) == ["MapInArrow"]
 
 
 def test_dedup_paragraphs_shuffle_budget(spark):

@@ -14,7 +14,8 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField
 
-from webxtract import curation, dedup
+from webxtract import curation, dedup, multimodal
+from webxtract.ops import rasterize
 from webxtract.kernels import doc_rows, pylist
 
 # surrogate, overlong, > U+10FFFF, truncated and lone bytes, next to
@@ -105,16 +106,49 @@ def test_kernels_read_invalid_text_as_make_valid_utf8(spark, name):
 
 
 def test_normalize_text_pins_replacement(spark):
-    """``normalize_text`` keeps its own rule, pinned here: its JVM
-    regex pass decodes the text to a Java string, which reads the
-    encoded surrogate as ONE U+FFFD where ``make_valid_utf8`` writes
-    three. Spark's ``length`` counts the raw bytes' characters."""
+    """``normalize_text`` reads invalid text under the kernels' rule:
+    the encoded surrogate is three U+FFFD, as ``make_valid_utf8``
+    writes it, both counts are those of the repaired text, and a
+    repaired row is ``changed``."""
     df = _raw_frame(spark, [b"caf\xe9 \xed\xa0\x80 \x01x\xff"]).select("doc_id", "text")
     r = curation.normalize_text(df).select(
         F.col("text_norm").cast("binary").alias("norm"),
         "changed", "n_chars_before", "n_chars_after",
     ).first()
-    assert tuple(r) == ("caf\ufffd \ufffd x\ufffd".encode(), True, 10, 9)
+    assert tuple(r) == (
+        b"caf\xef\xbf\xbd \xef\xbf\xbd\xef\xbf\xbd\xef\xbf\xbd x\xef\xbf\xbd", True, 12, 11
+    )
+    # nothing to strip or compose: only the repair changed the row
+    only = _raw_frame(spark, [b"caf\xe9"]).select("doc_id", "text")
+    r = curation.normalize_text(only).select(
+        F.col("text_norm").cast("binary").alias("norm"),
+        "changed", "n_chars_before", "n_chars_after",
+    ).first()
+    assert tuple(r) == (b"caf\xef\xbf\xbd", True, 4, 4)
+
+
+BAD_URL = b"http://caf\xe9.example/\xff"
+BMP = b"BM" + b"x" * 3000
+PDF = b"%PDF-1.4\n%%PAGE 1\none\n%%PAGE 2\ntwo"
+MEDIA = {
+    "normalize_media": lambda d: multimodal.normalize_media(d),
+    "extract_features": lambda d: multimodal.extract_features(d),
+    "resize_images": lambda d: multimodal.resize_images(d),
+    "sample_frames": lambda d: multimodal.sample_frames(d),
+    "explode_pdf_pages": lambda d: rasterize.explode_pdf_pages(d, payload_col="payload"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(MEDIA))
+def test_media_kernels_carry_an_invalid_utf8_url(spark, name):
+    """The media kernels and the page explode complete on a url holding
+    invalid UTF-8 and return it byte-identical."""
+    payload = PDF if name == "explode_pdf_pages" else BMP
+    df = spark.createDataFrame(
+        [(bytearray(BAD_URL), bytearray(payload))], "u binary, payload binary"
+    ).select(F.col("u").cast("string").alias("url"), "payload")
+    got = MEDIA[name](df).select(F.col("url").cast("binary")).collect()
+    assert got and all(r[0] == BAD_URL for r in got)
 
 
 ID_TEXT = (

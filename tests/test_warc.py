@@ -204,6 +204,21 @@ def test_plain_warc_and_garbage_tail(tmp_path, spark):
     assert rec["payload"] == b"x0"
 
 
+CP1252 = "café – 10 €".encode("cp1252")
+
+
+def _cp1252_pages(spark, root):  # noqa: ANN001, ANN202
+    """pages from one WARC segment holding a windows-1252 text/plain
+    record: its text column is the binary->string cast of CP1252."""
+    W.write_warc_gz(str(root / "seg.warc.gz"), iter([
+        W.warc_response_record(
+            "http://cp1252.example.com/", "2025-06-01T00:00:00Z", CP1252,
+            content_type="text/plain; charset=windows-1252",
+        ),
+    ]))
+    return W.warc_to_pages(W.read_warc(spark, str(root)))
+
+
 def test_non_utf8_text_plain_extracts_byte_identical(tmp_path, spark):
     """A text/plain record in a charset other than latin-1 reaches the
     text column by a binary->string cast, so it may be invalid UTF-8:
@@ -215,15 +230,8 @@ def test_non_utf8_text_plain_extracts_byte_identical(tmp_path, spark):
     from webxtract.ops.extract import extract_pages
     from webxtract.pipeline import run_pipeline
 
-    payload = "café – 10 €".encode("cp1252")
-    path = str(tmp_path / "seg.warc.gz")
-    W.write_warc_gz(path, iter([
-        W.warc_response_record(
-            "http://cp1252.example.com/", "2025-06-01T00:00:00Z", payload,
-            content_type="text/plain; charset=windows-1252",
-        ),
-    ]))
-    pages = W.warc_to_pages(W.read_warc(spark, str(tmp_path)))
+    payload = CP1252
+    pages = _cp1252_pages(spark, tmp_path)
     out = extract_pages(pages)
     got = out.select(
         "source_kind", "parse_failure",
@@ -238,6 +246,29 @@ def test_non_utf8_text_plain_extracts_byte_identical(tmp_path, spark):
     ).collect()
     assert [r.text for r in full] == [payload]
     assert full[0].fake_detection is not None
+
+
+def test_wet_sink_writes_non_utf8_text_bytes_unchanged(tmp_path, spark):
+    """The cp1252 record -> extract -> WET -> read_warc: the conversion
+    record's payload is the extracted text's bytes, so the record's
+    Content-Length (Spark's octet_length of them) stays true."""
+    from pyspark.sql import functions as F
+
+    from webxtract.ops.extract import extract_pages
+
+    (tmp_path / "warc").mkdir()
+    ex = extract_pages(_cp1252_pages(spark, tmp_path / "warc"))
+    wet = ex.select(
+        W.wet_record_expr(F.col("url"), F.col("warc_ts"), F.col("extracted_text"))
+        .alias("wet_record")
+    )
+    out = str(tmp_path / "wet")
+    man = W.write_wet_segments(wet, out, "2026-01-15T00:00:00Z").collect()
+    assert sum(m.n_records for m in man) == 1
+    back = W.read_warc(spark, out, record_types=("conversion",)).collect()
+    assert [bytes(r.payload) for r in back] == [CP1252]
+    text = ex.select(F.col("extracted_text").cast("binary")).first()[0]
+    assert bytes(text) == CP1252
 
 
 def test_warc_extraction_stream_incremental(spark, warc_dir, tmp_path):

@@ -157,7 +157,7 @@ def _pages_from_documents(spark: SparkSession, sf_dir: str, pdf: bool = False) -
 
 
 def q_extract_html_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E1 analog end-to-end through the mapInPandas UDF: wrap each
+    """E1 analog end-to-end through the extraction kernel: wrap each
     document's text in boilerplated HTML, extract, demand byte-identity
     (the oracle is the original text)."""
     pages = _pages_from_documents(spark, sf_dir, pdf=False)
@@ -204,7 +204,7 @@ def q_field_extraction_e6(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pdf_page_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S3: all-pages PDF rasterize + explode (flatMap-shaped mapInPandas,
+    """S3: all-pages PDF rasterize + explode (flatMap-shaped mapInArrow,
     one row per page). Two-page synthetic PDFs with statically-known
     page texts; the render stub's dimensions are scale-deterministic."""
     from webxtract.ops import rasterize
@@ -295,7 +295,7 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame sampling: one row per sampled frame (flatMap-shaped
-    mapInPandas); the stub derives frame count from payload size."""
+    mapInArrow); the stub derives frame count from payload size."""
     from webxtract.multimodal import sample_frames
 
     d = _t(spark, sf_dir, "documents")

@@ -20,7 +20,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField
+from pyspark.sql.types import (
+    BooleanType, DoubleType, IntegerType, StringType, StructField,
+)
 
 from webxtract.dedup import shingle_hashes_expr
 
@@ -369,8 +371,8 @@ def benchmark_overlap(
 # ------------------------------------------------------- text normalize
 
 # C0 controls (minus \t \n \r, which are legitimate whitespace) + DEL.
-# Java-regex ∩ RE2 \xNN escapes, so the DuckDB oracle runs the byte-same
-# pattern.
+# The same \xNN class in Python ``re`` and RE2, so the DuckDB oracle
+# runs the byte-same pattern.
 CONTROL_CHAR_RE = r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]"
 
 # host of scheme://host[:port]/... — class excludes :/?# so the port and
@@ -384,51 +386,45 @@ def url_host_expr(url: Column) -> Column:
     return F.lower(F.regexp_extract(url, URL_HOST_RE, 1))
 
 
-def strip_control_chars_expr(text: Column) -> Column:
-    """Text with C0 control characters (except \\t \\n \\r) and DEL
-    removed — JVM regexp_replace, whole-stage codegen."""
-    return F.regexp_replace(text, CONTROL_CHAR_RE, "")
-
-
-def nfc_normalize_col(text: Column) -> Column:
-    """Unicode NFC normalization as an Arrow-batched scalar pandas UDF
-    (pandas ``str.normalize`` == ``unicodedata.normalize('NFC', ...)``,
-    the same Unicode-standard mapping DuckDB's nfc_normalize applies).
-    Spark has no native NFC function, so this is the one deliberate
-    Python step in the normalize path; it is vectorized per Arrow
-    batch and NULL-preserving."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _nfc(s):  # noqa: ANN001, ANN202 — pandas Series -> Series
-        return s.str.normalize("NFC")
-
-    return _nfc(text)
-
-
 def normalize_text(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Corpus text normalization: strip C0 control chars/DEL, then
-    Unicode-NFC the result — the standard first pass before hashing,
-    dedup, or tokenization so byte-different but canonically-equal
-    documents (decomposed accents, compatibility codepoints, stray
-    control bytes from charset sniffing) hash identically downstream.
+    Unicode-NFC the result (``unicodedata``, the same Unicode-standard
+    mapping DuckDB's nfc_normalize applies) — the standard first pass
+    before hashing, dedup, or tokenization so byte-different but
+    canonically-equal documents (decomposed accents, compatibility
+    codepoints, stray control bytes from charset sniffing) hash
+    identically downstream.
 
-    Scale shape: ZERO shuffles — one JVM regexp projection feeding one
-    Arrow-batched pandas UDF; NULL text stays NULL. Returns
-    (id, text_norm, changed, n_chars_before, n_chars_after)."""
-    raw = F.col(text_col)
-    norm = nfc_normalize_col(strip_control_chars_expr(raw))
-    return df.select(
-        F.col(id_col),
-        norm.alias("text_norm"),
-        F.coalesce(norm != raw, F.lit(False)).alias("changed"),
-        F.length(raw).alias("n_chars_before"),
-        F.length(norm).alias("n_chars_after"),
-    )
+    Scale shape: ZERO shuffles — one ``mapInArrow`` kernel
+    (``kernels.doc_rows``); NULL text stays NULL. Text holding invalid
+    UTF-8 reads as ``make_valid_utf8`` of it, like every kernel's, and
+    counts as ``changed``. Returns (id, text_norm, changed,
+    n_chars_before, n_chars_after); the counts are code points."""
+    import re
+    import unicodedata
+
+    from webxtract.kernels import doc_rows
+
+    control = re.compile(CONTROL_CHAR_RE)
+
+    def rows_of(text, valid):  # noqa: ANN001, ANN202
+        if text is None:
+            return [(None, False, None, None)]
+        norm = unicodedata.normalize("NFC", control.sub("", text))
+        return [(norm, not valid or norm != text, len(text), len(norm))]
+
+    fields = [
+        StructField("text_norm", StringType(), True),
+        StructField("changed", BooleanType(), False),
+        StructField("n_chars_before", IntegerType(), True),
+        StructField("n_chars_after", IntegerType(), True),
+    ]
+    valid = F.is_valid_utf8(text_col)
+    return doc_rows(df, [id_col], [text_col, valid], fields, lambda: rows_of)
 
 
 # ------------------------------------------------------- host analytics

@@ -10,7 +10,9 @@ Row boundary — the only place a Spark column becomes Python values:
   fake scoring, ``luhn_valid_expr``).
 - ``doc_rows``: one ``mapInArrow`` pass that maps each document to
   0..n rows and carries its kept columns through as Arrow, exactly
-  (the per-document scorers and the chunk-dedup kernels).
+  (extraction, the PDF page explode, the media kernels,
+  ``normalize_text``, the per-document scorers and the chunk-dedup
+  kernels).
 - ``pylist``: the reader both use, as does ``curation.bucket_counts``.
   UTF-8 rule: a string column holding invalid UTF-8 (``warc_to_pages``'
   binary->string cast makes such text) reads as Spark's
@@ -102,12 +104,14 @@ def row_udf(return_type):  # noqa: ANN001, ANN201
 def doc_rows(
     df: "DataFrame",  # noqa: F821
     keep_cols: Iterable[str],
-    input_cols: Iterable[str],
+    input_cols: Iterable["str | Column"],  # noqa: F821
     fields: list["StructField"],  # noqa: F821
     make_rows: Callable[[], Callable[..., Iterable[tuple]]],
 ) -> "DataFrame":  # noqa: F821
     """(keep_cols..., fields...) from ONE ``mapInArrow`` pass over
-    ``(keep_cols..., input_cols...)``: zero shuffles, zero joins.
+    ``(keep_cols..., input_cols...)``: zero shuffles, zero joins. An
+    input is a column name or a ``Column``; the kernel is named like
+    ``make_rows``.
 
     ``make_rows()`` runs once per task (per-task state, such as a
     lookup table, lives in its closure) and returns ``rows_of``, which
@@ -117,6 +121,7 @@ def doc_rows(
     are ``take``n from the input Arrow arrays, so a NULL, 64-bit or
     string id comes back exactly, never through a pandas int64 or
     float64 column."""
+    from pyspark.sql import functions as F
     from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import StructType
 
@@ -141,6 +146,10 @@ def doc_rows(
                 names,
             )
 
-    src_df = df.select(*keep_cols, *input_cols)
+    _kernel.__name__ = make_rows.__name__
+    # inputs are read by position; positional names keep an unnamed
+    # expression (or one named like a kept column) selectable
+    inputs = [F.col(c) if isinstance(c, str) else c for c in input_cols]
+    src_df = df.select(*keep_cols, *[c.alias(f"_in{i}") for i, c in enumerate(inputs)])
     schema = StructType([src_df.schema[c] for c in keep_cols] + list(fields))
     return src_df.mapInArrow(_kernel, schema)

@@ -1,24 +1,25 @@
 """Multimodal column handling: image/audio/video as opaque binary
 columns with typed metadata.
 
-The Spark-side plumbing (schemas, magic-byte sniffing, Arrow batch
-shape, mapInPandas signatures, partitioning by media kind) is real and
-tested; the actual decode/feature kernels are STUBBED behind
-deterministic fakes because the codec libraries (Pillow/ffmpeg/...)
+The Spark-side plumbing (schemas, magic-byte sniffing, the per-row
+``mapInArrow`` kernels of ``kernels.doc_rows``, partitioning by media
+kind) is real and tested; the actual decode/feature kernels are
+STUBBED behind deterministic fakes because the codec libraries (Pillow/ffmpeg/...)
 are not in this container — mirroring the reference's own
 ``is_available()`` capability probes (image_ocr.py:82-88).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType, IntegerType, LongType, StringType, StructField, StructType,
 )
+
+from webxtract.kernels import doc_rows
 
 # magic-byte signatures (operator S2's sniffing, ocr.py:250-273,
 # generalized beyond images)
@@ -120,8 +121,6 @@ def _convert_stub(payload: bytes) -> bytes:
     """Deterministic fake TIFF/BMP->PNG conversion: format-correct PNG
     magic + a digest of the source bytes (real conversion needs Pillow,
     absent here — the registry swaps it in when importable)."""
-    import hashlib
-
     return MAGIC["png"] + b"NORM" + hashlib.sha256(payload).digest()[:16]
 
 
@@ -154,9 +153,10 @@ NORMALIZED_SCHEMA = StructType(
 def normalize_media(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """S2 as a predicate-split pipeline: the cheap magic-byte sniff is a
     pure expression; ONLY rows whose sniffed format needs conversion
-    (TIFF/BMP) enter the Python convert leg — everything else is
-    expression-only passthrough. Narrow plan, no shuffle; the union
-    mirrors the E4 recomputation-prune shape."""
+    (TIFF/BMP) enter the Python convert leg, one ``mapInArrow``
+    (``kernels.doc_rows``) — everything else is expression-only
+    passthrough. Narrow plan, no shuffle; the union mirrors the E4
+    recomputation-prune shape."""
     meta = sniff_media_expr(payload_col)
     src = df.select(
         "url", F.col(payload_col).alias("payload"), meta["format"].alias("fmt")
@@ -174,21 +174,12 @@ def normalize_media(df: DataFrame, payload_col: str = "payload") -> DataFrame:
         .alias("media_type"),
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in it:
-            payloads, types = [], []
-            for payload, fmt in zip(b["payload"], b["fmt"], strict=True):
-                out, mt = normalize_image(
-                    bytes(payload) if payload is not None else b"", fmt
-                )
-                payloads.append(out)
-                types.append(mt)
-            yield pd.DataFrame(
-                {"url": b["url"], "payload": payloads, "media_type": types}
-            )
+    def rows_of(payload: bytes | None, fmt: str) -> list[tuple]:
+        return [normalize_image(payload or b"", fmt)]
 
-    converted = src.filter(needs_convert).mapInPandas(
-        batches, schema=NORMALIZED_SCHEMA
+    converted = doc_rows(
+        src.filter(needs_convert), ["url"], ["payload", "fmt"],
+        NORMALIZED_SCHEMA.fields[1:], lambda: rows_of,
     )
     return passthrough.unionByName(converted)
 
@@ -201,35 +192,26 @@ def _decode_stub(payload: bytes) -> bytes:
     way a real decoder would."""
     if not payload:
         raise ValueError("empty media payload")
-    import hashlib
-
     return hashlib.sha256(payload).digest()[:16]
 
 
 def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """binary media -> fixed-size feature rows via mapInPandas (Arrow
-    batches; one in-flight batch per task, iterator init pattern)."""
+    """binary media -> fixed-size feature rows: one ``mapInArrow``
+    (``kernels.doc_rows``) over the payload and its expression-sniffed
+    kind and size; ``url`` comes back exactly."""
     meta = sniff_media_expr(payload_col)
-    src = df.select("url", F.col(payload_col).alias("payload"), meta.alias("meta"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in it:
-            feats = []
-            for payload in b["payload"]:
-                try:
-                    feats.append(_decode_stub(bytes(payload) if payload is not None else b""))
-                except ValueError:
-                    feats.append(None)
-            yield pd.DataFrame(
-                {
-                    "url": b["url"],
-                    "media_kind": [m["media_kind"] for m in b["meta"]],
-                    "feature": feats,
-                    "n_bytes": [m["n_bytes"] for m in b["meta"]],
-                }
-            )
+    def rows_of(payload: bytes | None, kind: str, n_bytes: int) -> list[tuple]:
+        try:
+            feature = _decode_stub(payload or b"")
+        except ValueError:
+            feature = None
+        return [(kind, feature, n_bytes)]
 
-    return src.mapInPandas(batches, schema=FEATURE_SCHEMA)
+    return doc_rows(
+        df, ["url"], [payload_col, meta["media_kind"], meta["n_bytes"]],
+        FEATURE_SCHEMA.fields[1:], lambda: rows_of,
+    )
 
 
 # ------------------------------------------------------- image resize
@@ -249,8 +231,6 @@ def _resize_stub(payload: bytes, width: int, height: int) -> bytes:
     """Deterministic fake resize: PNG magic + an `RSZ{w}x{h}:` header +
     a digest of the source bytes — format-correct output whose bytes
     bind (source, target dims), reproducible by the DuckDB oracle."""
-    import hashlib
-
     return (
         MAGIC["png"]
         + f"RSZ{width}x{height}:".encode()
@@ -272,36 +252,23 @@ def resize_images(
     df: DataFrame, width: int = 224, height: int = 224, payload_col: str = "payload"
 ) -> DataFrame:
     """Batch image resize to a fixed (width, height) — the standard
-    vision-model preprocessing step — as an Arrow-batched mapInPandas.
-    Pillow-gated kernel; deterministic stub in this sandbox (codec libs
-    absent). Narrow plan: scan -> mapInPandas, no shuffle."""
-    src = df.select("url", F.col(payload_col).alias("payload"))
+    vision-model preprocessing step. Pillow-gated kernel; deterministic
+    stub in this sandbox (codec libs absent). Narrow plan: scan -> one
+    ``mapInArrow`` (``kernels.doc_rows``), no shuffle; ``url`` comes
+    back exactly and an empty payload gives a NULL image."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in it:
-            out = []
-            for payload in b["payload"]:
-                payload = bytes(payload) if payload is not None else b""
-                if not payload:
-                    out.append(None)
-                    continue
-                if HAVE_PIL:  # pragma: no cover
-                    try:
-                        out.append(_resize_via_pil(payload, width, height))
-                        continue
-                    except Exception:
-                        pass
-                out.append(_resize_stub(payload, width, height))
-            yield pd.DataFrame(
-                {
-                    "url": b["url"],
-                    "payload": out,
-                    "width": [width] * len(b),
-                    "height": [height] * len(b),
-                }
-            )
+    def resize(payload: bytes) -> bytes:
+        if HAVE_PIL:  # pragma: no cover
+            try:
+                return _resize_via_pil(payload, width, height)
+            except Exception:
+                pass
+        return _resize_stub(payload, width, height)
 
-    return src.mapInPandas(batches, schema=RESIZED_SCHEMA)
+    def rows_of(payload: bytes | None) -> list[tuple]:
+        return [(resize(payload) if payload else None, width, height)]
+
+    return doc_rows(df, ["url"], [payload_col], RESIZED_SCHEMA.fields[1:], lambda: rows_of)
 
 
 # ---------------------------------------------------- video frame sample
@@ -331,32 +298,20 @@ def sample_frames(
     max_frames: int = 8,
     payload_col: str = "payload",
 ) -> DataFrame:
-    """Video -> one row per sampled frame (flatMap-shaped mapInPandas,
-    like the S3 page explode). ffmpeg-gated kernel; the sandbox stub
-    derives a deterministic frame count from payload size and emits
-    JPEG-magic frames whose bytes bind (source, frame_no). Empty/null
-    payloads yield zero rows."""
-    import hashlib
+    """Video -> one row per sampled frame (flatMap-shaped ``mapInArrow``
+    via ``kernels.doc_rows``, like the S3 page explode). ffmpeg-gated
+    kernel; the sandbox stub derives a deterministic frame count from
+    payload size and emits JPEG-magic frames whose bytes bind (source,
+    frame_no). Empty/null payloads yield zero rows."""
 
-    src = df.select("url", F.col(payload_col).alias("payload"))
+    def rows_of(payload: bytes | None) -> list[tuple]:
+        if not payload:
+            return []
+        n = _frame_count_stub(len(payload), every_s, max_frames)
+        return [
+            (i, i * every_s,
+             MAGIC["jpeg"] + b"\xe0" + hashlib.sha256(payload + b"|frame=%d" % i).digest()[:16])
+            for i in range(n)
+        ]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in it:
-            out = {k: [] for k in ("url", "frame_no", "ts_sec", "frame")}
-            for url, payload in zip(b["url"], b["payload"]):
-                payload = bytes(payload) if payload is not None else b""
-                if not payload:
-                    continue
-                n = _frame_count_stub(len(payload), every_s, max_frames)
-                for i in range(n):
-                    out["url"].append(url)
-                    out["frame_no"].append(i)
-                    out["ts_sec"].append(i * every_s)
-                    out["frame"].append(
-                        MAGIC["jpeg"]
-                        + b"\xe0"
-                        + hashlib.sha256(payload + f"|frame={i}".encode()).digest()[:16]
-                    )
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(batches, schema=FRAME_SCHEMA)
+    return doc_rows(df, ["url"], [payload_col], FRAME_SCHEMA.fields[1:], lambda: rows_of)

@@ -2,9 +2,12 @@
 EXTRACTED_SCHEMA rows.
 
 Spark plan shape (SURVEY.md §3.1 trace / §4.4): one column-pruned scan
-of exactly (url, warc_ts, lang, html, text) feeding ONE ``MapInPandas``
-node, ``_extract_batches``, and one projection. No Filter, no Union, no
-Exchange: a narrow map that scales linearly with the input splits.
+of exactly (url, warc_ts, lang, html, text) feeding ONE ``MapInArrow``
+node (``kernels.doc_rows``, named ``_extract_rows``) and one
+projection. No Filter, no Union, no Exchange: a narrow map that scales
+linearly with the input splits. ``url``, ``warc_ts`` and ``lang`` are
+kept columns, carried through as Arrow, so any timestamp and any bytes
+in a string come back exactly.
 
 The kernel picks each row's path once, the way the reference picks a
 request's path once (magic bytes -> PDF or image, else HTTP 400,
@@ -24,32 +27,22 @@ ocr.py:250-273):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, StructField, StructType
+from pyspark.sql.types import BinaryType, StructField
 
+from webxtract.kernels import doc_rows
 from webxtract.ops.extract_html import extract_html
 from webxtract.ops.extract_pdf import PDF_MAGIC, extract_pdf
 from webxtract.schemas import EXTRACTED_SCHEMA
 
 _META_COLS = ["url", "warc_ts", "lang"]
-# EXTRACTED_SCHEMA plus ``native``: the raw bytes of a native-text row.
-_KERNEL_SCHEMA = StructType([*EXTRACTED_SCHEMA.fields, StructField("native", BinaryType())])
-_RESULT_COLS = _KERNEL_SCHEMA.fieldNames()[len(_META_COLS) :]
-
-
-def _result_frame(meta: pd.DataFrame, results: list[tuple]) -> pd.DataFrame:
-    out = meta.copy()
-    if results:
-        cols = zip(*results, strict=True)
-    else:  # empty Arrow batch: zip(*[]) would raise, yield empty columns
-        cols = ([] for _ in _RESULT_COLS)
-    for name, values in zip(_RESULT_COLS, cols, strict=True):
-        out[name] = list(values)
-    return out
+# EXTRACTED_SCHEMA's result fields plus ``native``: the raw bytes of a
+# native-text row.
+_RESULT_FIELDS = [
+    *EXTRACTED_SCHEMA.fields[len(_META_COLS) :], StructField("native", BinaryType())
+]
+_RESULT_COLS = [f.name for f in _RESULT_FIELDS]
 
 
 def _extract(html: bytes | None, text: bytes | None) -> tuple:
@@ -68,23 +61,17 @@ def _extract(html: bytes | None, text: bytes | None) -> tuple:
     return extracted, spans, n_pages, avg_conf, kind, failed, len(html), None
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    # iterator-UDF pattern: any heavyweight init would go here, once per
-    # task (the reference's lazy reader singleton, image_ocr.py:13-19).
-    for batch in batches:
-        results = [
-            _extract(*(bytes(v) if v is not None else None for v in pair))
-            for pair in zip(batch["html"], batch["text"])
-        ]
-        yield _result_frame(batch[_META_COLS], results)
+def _extract_rows():  # noqa: ANN202
+    """``rows_of`` for ``doc_rows``, built once per task (where the
+    reference builds its lazy reader singleton, image_ocr.py:13-19):
+    one page -> its one result row."""
+    return lambda html, text: [_extract(html, text)]
 
 
 def extract_pages(pages: DataFrame) -> DataFrame:
     """pages -> extracted (EXTRACTED_SCHEMA): one scan, one kernel, no shuffle."""
     text = F.col("text").cast("binary").alias("text")
-    out = pages.select(*_META_COLS, "html", text).mapInPandas(
-        _extract_batches, schema=_KERNEL_SCHEMA
-    )
+    out = doc_rows(pages, _META_COLS, ["html", text], _RESULT_FIELDS, _extract_rows)
     native = F.col("native").cast("string")  # the input's bytes, unchanged
     zero = F.lit(0.0)
     bbox = F.struct(

@@ -20,9 +20,10 @@ carries (char_start, block_ordinal, char_end, block_ordinal) — the DOM
 position proxy for EasyOCR's pixel boxes (image_ocr.py:58-69).
 
 This module is deliberately free of any Spark import: it is the
-per-batch worker body invoked from webxtract.ops.extract via mapInPandas
-(iterator-UDF pattern — init once per task, like the reference's lazy
-reader singleton, image_ocr.py:13-19).
+per-page worker body invoked from webxtract.ops.extract's one
+``mapInArrow`` kernel (``kernels.doc_rows``: ``rows_of`` is built once
+per task, like the reference's lazy reader singleton,
+image_ocr.py:13-19).
 """
 
 from __future__ import annotations

@@ -4,26 +4,26 @@ S3, app/routers/ocr.py:430-529: render page N — or every page — at a
 all-pages variant returns a ZIP).
 
 Spark mapping: the all-pages variant is the engine's only UDTF-shaped
-operator — a flatMap-style ``mapInPandas`` emitting ONE OUTPUT ROW PER
-PAGE instead of a ZIP (SURVEY.md §2.1-S3). The render kernel sits
-behind a capability registry: fitz ``get_pixmap`` when importable, else
-a deterministic synthetic renderer (the codec stack is absent in this
-sandbox) that still produces format-correct magic bytes and
-scale-proportional dimensions, so schema, batching, row-multiplication
-and downstream plumbing are exercised for real.
+operator — a flatMap-style ``mapInArrow`` (``kernels.doc_rows``)
+emitting ONE OUTPUT ROW PER PAGE instead of a ZIP (SURVEY.md §2.1-S3).
+The render kernel sits behind a capability registry: fitz
+``get_pixmap`` when importable, else a deterministic synthetic renderer
+(the codec stack is absent in this sandbox) that still produces
+format-correct magic bytes and scale-proportional dimensions, so
+schema, batching, row-multiplication and downstream plumbing are
+exercised for real.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType, DoubleType, IntegerType, StringType, StructField, StructType,
 )
 
+from webxtract.kernels import doc_rows
 from webxtract.ops.extract_pdf import HAVE_FITZ, PDF_MAGIC, native_pdf_pages
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
@@ -90,35 +90,23 @@ def explode_pdf_pages(
 ) -> DataFrame:
     """(url, ..., html BINARY) -> one row PER PAGE with the rendered
     image + native page text (the columnar form of the all-pages ZIP
-    endpoint). Narrow plan: scan -> mapInPandas (row-multiplying), no
-    shuffle; non-PDF / unparseable payloads yield zero rows (the
-    HTTP-400 analog is a missing row, not an exception)."""
+    endpoint). Narrow plan: scan -> mapInArrow (row-multiplying), no
+    shuffle; ``url`` comes back exactly. Non-PDF / unparseable payloads
+    yield zero rows (the HTTP-400 analog is a missing row, not an
+    exception)."""
     if fmt not in ("png", "jpeg"):
         raise ValueError(f"format must be png or jpeg, got {fmt!r}")
-    src = pages.select("url", payload_col)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in it:
-            out: dict[str, list] = {f.name: [] for f in PAGE_IMAGE_SCHEMA.fields}
-            for url, payload in zip(b["url"], b[payload_col], strict=True):
-                payload = bytes(payload) if payload is not None else None
-                if not payload or not payload.startswith(PDF_MAGIC):
-                    continue
-                texts = native_pdf_pages(payload)
-                if texts is None:
-                    continue
-                n = len(texts)
-                for page_no, text in enumerate(texts, start=1):
-                    img, w, h = render_page(payload, page_no, scale, fmt)
-                    out["url"].append(url)
-                    out["page_number"].append(page_no)
-                    out["n_pages"].append(n)
-                    out["page_text"].append(text)
-                    out["image"].append(img)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["format"].append(fmt)
-                    out["scale"].append(float(scale))
-            yield pd.DataFrame(out)
+    def rows_of(payload: bytes | None) -> list[tuple]:
+        if not payload or not payload.startswith(PDF_MAGIC):
+            return []
+        texts = native_pdf_pages(payload)
+        if texts is None:
+            return []
+        return [
+            (page_no, len(texts), text, *render_page(payload, page_no, scale, fmt),
+             fmt, float(scale))
+            for page_no, text in enumerate(texts, start=1)
+        ]
 
-    return src.mapInPandas(batches, schema=PAGE_IMAGE_SCHEMA)
+    return doc_rows(pages, ["url"], [payload_col], PAGE_IMAGE_SCHEMA.fields[1:], lambda: rows_of)

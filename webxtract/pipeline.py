@@ -2,7 +2,7 @@
 flagship request lifecycle, POST /ocr/extract/image?validate=true —
 SURVEY.md §3.3):
 
-    map side:    parquet scan -> extraction kernel (mapInPandas)
+    map side:    parquet scan -> extraction kernel (mapInArrow)
                  -> 13 fields + missing_fields (one Catalyst projection)
     exchange:    salted url-hash repartition (audit.partition_by_url)
     reduce side: three parsed dates (Catalyst) -> ONE rule kernel (Arrow
@@ -11,8 +11,9 @@ SURVEY.md §3.3):
                  (Catalyst projection)
 
 The physical plan Spark builds has two stages around ONE Exchange. Map
-side: the parquet scan, the extraction kernel's one ``MapInPandas`` node
-(``_extract_batches``), and the field + missing-field projection.
+side: the parquet scan, the extraction kernel's one ``MapInArrow`` node
+(``kernels.doc_rows``, named ``_extract_rows``), and the field +
+missing-field projection.
 Reduce side: a projection parsing the three dates, then a
 single ``ArrowEvalPython`` node running ``_rule_kernel`` (it reuses the
 extraction's Python workers), then the integrity/summary/success

@@ -825,55 +825,68 @@ def wet_warcinfo_record(filename: str, date_iso: str) -> bytes:
     return head + body + _CRLF2
 
 
-def write_wet_segments(
-    df: DataFrame, out_dir: str, run_date_iso: str, prefix: str = "seg"
+def _write_segments(
+    df: DataFrame, kind: str, out_dir: str, run_date_iso: str, prefix: str
 ) -> DataFrame:
-    """Distributed WET sink: each task serializes its partition of
-    ``wet_record`` strings into one ``{prefix}-{pid:05d}.warc.wet.gz``
-    of per-record gzip members (mtime=0 — segment bytes are a pure
-    function of partition content), headed by a warcinfo record.
-    Returns the manifest (wet_file, n_records, n_bytes) — the action
-    that drives the write, one row per segment file.
+    """The WET and WAT sink: each task writes the bytes of its
+    partition's ``{kind}_record`` column, unchanged (so each record's
+    ``Content-Length``, which Spark computed over them, stays true),
+    into one ``{prefix}-{pid:05d}.warc.{kind}.gz`` of per-record gzip
+    members (mtime=0 — segment bytes are a pure function of partition
+    content), headed by a warcinfo record. Returns the manifest
+    ({kind}_file, n_records, n_bytes) — the action that drives the
+    write, one row per segment file.
 
-    Scale: the writer is ``mapInPandas`` over only the record column,
-    so upstream partitioning (e.g. the pipeline's (host, shard) salt)
-    directly controls segment sizing; no shuffle is added here."""
+    Scale: the writer is one ``mapInArrow`` over only the record column
+    (read as binary), so upstream partitioning (e.g. the pipeline's
+    (host, shard) salt) directly controls segment sizing; no shuffle is
+    added here."""
     import os
 
-    import pandas as pd
-
+    import pyarrow as pa
     from pyspark import TaskContext
 
-    schema = "wet_file string, n_records long, n_bytes long"
+    from webxtract.kernels import pylist
 
-    def write(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    names = [f"{kind}_file", "n_records", "n_bytes"]
+
+    def write(batches):  # noqa: ANN001, ANN202
         pid = TaskContext.get().partitionId()
-        name = f"{prefix}-{pid:05d}.warc.wet.gz"
+        name = f"{prefix}-{pid:05d}.warc.{kind}.gz"
         path = os.path.join(out_dir, name)
         fh = None
         n = 0
-        for pdf in batches:
+        for b in batches:
             if fh is None:
                 os.makedirs(out_dir, exist_ok=True)
                 fh = open(path, "wb")
                 fh.write(
                     gzip.compress(wet_warcinfo_record(name, run_date_iso), mtime=0)
                 )
-            for rec in pdf["wet_record"]:
-                fh.write(gzip.compress(rec.encode("utf-8"), mtime=0))
+            for rec in pylist(b.column(0)):
+                fh.write(gzip.compress(rec, mtime=0))
                 n += 1
         if fh is None:
-            yield pd.DataFrame(
-                [], columns=["wet_file", "n_records", "n_bytes"]
-            ).astype({"n_records": "int64", "n_bytes": "int64"})
             return
         fh.close()
-        yield pd.DataFrame(
-            [(name, n, os.path.getsize(path))],
-            columns=["wet_file", "n_records", "n_bytes"],
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([name]), pa.array([n], pa.int64()),
+             pa.array([os.path.getsize(path)], pa.int64())],
+            names,
         )
 
-    return df.select("wet_record").mapInPandas(write, schema=schema)
+    record = F.col(f"{kind}_record").cast("binary")
+    schema = f"{names[0]} string, n_records long, n_bytes long"
+    return df.select(record).mapInArrow(write, schema)
+
+
+def write_wet_segments(
+    df: DataFrame, out_dir: str, run_date_iso: str, prefix: str = "seg"
+) -> DataFrame:
+    """Distributed WET sink: ``wet_record`` strings -> ``.warc.wet.gz``
+    segment files, one per task (``_write_segments``). Returns the
+    manifest (wet_file, n_records, n_bytes)."""
+    return _write_segments(df, "wet", out_dir, run_date_iso, prefix)
 
 
 def warc_revisit_record(
@@ -1036,45 +1049,7 @@ def write_wat_segments(
     df: DataFrame, out_dir: str, run_date_iso: str, prefix: str = "seg"
 ) -> DataFrame:
     """Distributed WAT sink — the metadata twin of write_wet_segments:
-    each task serializes its partition of ``wat_record`` strings into
-    one ``{prefix}-{pid:05d}.warc.wat.gz`` of per-record gzip members
-    (mtime=0), headed by a warcinfo record. Returns the manifest
-    (wat_file, n_records, n_bytes). Same scale contract: mapInPandas
-    over only the record column, upstream partitioning controls
-    segment sizing, no shuffle added here."""
-    import os
-
-    import pandas as pd
-
-    from pyspark import TaskContext
-
-    schema = "wat_file string, n_records long, n_bytes long"
-
-    def write(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        pid = TaskContext.get().partitionId()
-        name = f"{prefix}-{pid:05d}.warc.wat.gz"
-        path = os.path.join(out_dir, name)
-        fh = None
-        n = 0
-        for pdf in batches:
-            if fh is None:
-                os.makedirs(out_dir, exist_ok=True)
-                fh = open(path, "wb")
-                fh.write(
-                    gzip.compress(wet_warcinfo_record(name, run_date_iso), mtime=0)
-                )
-            for rec in pdf["wat_record"]:
-                fh.write(gzip.compress(rec.encode("utf-8"), mtime=0))
-                n += 1
-        if fh is None:
-            yield pd.DataFrame(
-                [], columns=["wat_file", "n_records", "n_bytes"]
-            ).astype({"n_records": "int64", "n_bytes": "int64"})
-            return
-        fh.close()
-        yield pd.DataFrame(
-            [(name, n, os.path.getsize(path))],
-            columns=["wat_file", "n_records", "n_bytes"],
-        )
-
-    return df.select("wat_record").mapInPandas(write, schema=schema)
+    ``wat_record`` strings -> ``.warc.wat.gz`` segment files, one per
+    task (``_write_segments``). Returns the manifest (wat_file,
+    n_records, n_bytes)."""
+    return _write_segments(df, "wat", out_dir, run_date_iso, prefix)
