@@ -33,7 +33,7 @@ def _nodes(plan: str, name: str) -> int:
 
 _PYTHON_NODE = (
     "MapInPandas|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas|MapInArrow"
-    "|ArrowEvalPython|BatchEvalPython"
+    "|FlatMapGroupsInArrow|ArrowEvalPython|BatchEvalPython"
 )
 
 
@@ -97,7 +97,7 @@ def _python_nodes(node, above: bool = True) -> list:  # noqa: ANN001
     if name == "ArrowEvalPython":
         udfs = node.udfs()
         found.append((above, name, [udfs.apply(i).name() for i in range(udfs.size())]))
-    elif name in ("MapInPandas", "MapInArrow", "BatchEvalPython"):
+    elif name in ("MapInPandas", "MapInArrow", "FlatMapGroupsInArrow", "BatchEvalPython"):
         found.append((above, name, [] if name == "BatchEvalPython" else [node.func().name()]))
     above = above and name != "Exchange"
     kids = node.children()
@@ -528,13 +528,13 @@ def test_bigram_perplexity_broadcast_stats(spark):
 def test_semantic_dedup_blocked_kernel_no_lambdas(spark):
     """SemDeDup pair stage (round-6 shape): (1) the within-cluster
     quadratic runs in ONE per-cluster vectorized NumPy kernel
-    (FlatMapGroupsInPandas) — never a JVM self-join whose per-pair
+    (FlatMapGroupsInArrow) — never a JVM self-join whose per-pair
     unrolled dot falls out of HotSpot JIT (8 KB bytecode cap; measured
     ~15 us/pair interpreted = 238 s at sf1.0 vs ~5 s here) and never a
     cartesian; (2) each (cluster, id, vector) row is shuffled exactly
     once (one Exchange on cluster beyond the assignment's broadcast);
     (3) no interpreted higher-order functions anywhere; (4) assignment
-    is the mapInPandas NumPy kernel — no joins of any kind in the
+    is the mapInArrow NumPy kernel — no joins of any kind in the
     whole plan (the round-5 BroadcastNestedLoopJoin centroid attach
     and its groupBy(id) argmin exchange are gone)."""
     from webxtract.contract import q_semantic_dedup
@@ -542,7 +542,7 @@ def test_semantic_dedup_blocked_kernel_no_lambdas(spark):
     plan = _plan(q_semantic_dedup(spark, TESTDATA))
     assert "CartesianProduct" not in plan
     # the pair kernel and the assignment kernel, nothing else in Python
-    assert _python_node_names(plan) == ["FlatMapGroupsInPandas", "MapInPandas"]
+    assert _python_node_names(plan) == ["FlatMapGroupsInArrow", "MapInArrow"]
     assert "Join" not in plan
     # exactly one hash exchange: group by cluster for the pair kernel
     # (the only other exchange is the output orderBy's range partition)

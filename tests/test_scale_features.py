@@ -577,6 +577,54 @@ def test_near_dup_bucket_cap(spark):
     assert uncapped.count() == 20 * 19 / 2 + 1
 
 
+def test_similarity_pairs_skip_null_ids_and_vectors(spark):
+    """Rows with a NULL id or a NULL vector join no pair, and 60-bit
+    ids come back exactly, when they share one partition with the
+    NULLs: both similarity operators return the one non-NULL pair,
+    which is also what their DuckDB oracles' l.vec_id < r.vec_id
+    self-joins give over the same rows."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+
+    from webxtract.oracles import ORACLES
+    from webxtract.similarity import near_dup_pairs, semantic_dedup_pairs
+
+    rng = np.random.default_rng(11)
+    v, w = rng.normal(size=(2, 64)).astype(np.float32).tolist()
+    ids = [2**60 + 1, 2**60 + 3, None, 2**60 + 5, 7]
+    vecs = [v, v, v, None, w]
+    df = spark.createDataFrame(
+        list(zip(ids, vecs)), "vec_id long, embedding array<float>"
+    ).coalesce(1)
+    cents = rng.normal(size=(64, 64)).astype(np.float32)
+    want = [(2**60 + 1, 2**60 + 3, 1.0)]
+
+    def rows(pairs):  # noqa: ANN001, ANN202
+        return sorted((r.a, r.b, r.cosine) for r in pairs.collect())
+
+    assert rows(near_dup_pairs(df, threshold=0.9)) == want
+    assert rows(semantic_dedup_pairs(df, cents.tolist(), threshold=0.999)) == want
+
+    con = duckdb.connect()
+    vec_type = pa.list_(pa.float32())
+    con.register("vecs", pa.table(
+        [pa.array(ids, pa.int64()), pa.array(vecs, vec_type)], names=["vec_id", "embedding"]
+    ))
+    # the semantic oracle's centroids are embeddings WHERE vec_id < 64
+    con.register("embeddings", pa.table(
+        [pa.array(range(64), pa.int64()), pa.array(cents.tolist(), vec_type)],
+        names=["vec_id", "embedding"],
+    ))
+    # each oracle over the test rows in place of its planted-copy base
+    near = ORACLES["embedding_near_dup"]
+    near = "WITH unioned AS (SELECT * FROM vecs),\n" + near[near.index("bk AS ("):]
+    sem = ORACLES["semantic_dedup"]
+    sem = "WITH base AS (SELECT * FROM vecs)," + sem[sem.index("\nc AS ("):]
+    assert con.sql(near).fetchall() == want
+    assert con.sql(sem).fetchall() == want
+
+
 def test_pair_generator_caps_default_on(spark):
     """The hot-bucket guards must protect with DEFAULT arguments: a
     bucket larger than the default cap (1000) is dropped without any
@@ -804,7 +852,6 @@ def test_cosine_pairs_chunked_match_brute_force():
         np.float32
     )
     ids = rng.permutation(1000)[:42].astype(np.int64)
-    pdf = pd.DataFrame({"id": ids, "v": list(V)})
 
     def in_order(x, y):  # noqa: ANN001, ANN202
         acc = float(x[0]) * float(y[0])
@@ -817,10 +864,10 @@ def test_cosine_pairs_chunked_match_brute_force():
         c = in_order(va, vb) / (math.sqrt(in_order(va, va)) * math.sqrt(in_order(vb, vb)))
         if spark_round(c, 6) >= thr:
             want.append((int(a), int(b), spark_round(c, 6)))
-    got = _cosine_pairs(pdf, dim, thr, chunk=50)
+    got = _cosine_pairs(ids, V, dim, thr, chunk=50)
     assert 0 < len(want) < 861
-    assert list(got.itertuples(index=False, name=None)) == want
-    assert got.equals(_cosine_pairs(pdf, dim, thr))
+    assert list(zip(*got)) == want
+    assert all(map(np.array_equal, got, _cosine_pairs(ids, V, dim, thr)))
 
 
 def test_near_dedup_stream_cross_drop_restart_and_horizon(spark, tmp_path):

@@ -271,6 +271,53 @@ def test_wet_sink_writes_non_utf8_text_bytes_unchanged(tmp_path, spark):
     assert bytes(text) == CP1252
 
 
+def test_wet_sink_skips_and_counts_null_records(tmp_path, spark):
+    """A page with a NULL url has no WARC-Target-URI, so its NULL
+    conversion record is skipped and counted in the manifest's
+    n_skipped; the other record is written and reads back."""
+    from pyspark.sql import functions as F
+
+    pages = spark.createDataFrame(
+        [(None, "some text"), ("http://a.example/", "x")],
+        "url string, text string",
+    ).coalesce(1)
+    wet = pages.select(
+        W.wet_record_expr(F.col("url"), F.lit(None).cast("timestamp"), F.col("text"))
+        .alias("wet_record")
+    )
+    out = str(tmp_path / "wet")
+    man = W.write_wet_segments(wet, out, "2026-01-15T00:00:00Z").collect()
+    assert [(m.n_records, m.n_skipped) for m in man] == [(1, 1)]
+    back = W.read_warc(spark, out, record_types=("conversion",)).collect()
+    assert [(r.url, bytes(r.payload)) for r in back] == [("http://a.example/", b"x")]
+
+
+def test_warc_date_forms_read_as_spark_timestamps(tmp_path, spark):
+    """warc_ts is Spark's string->timestamp cast of WARC-Date: a date
+    past pandas' nanosecond range (2262-04-11) comes back exactly, the
+    in-range ISO forms read as pandas reads them, and an unparseable
+    date is NULL."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    in_range = [
+        "2025-06-01T00:00:00Z",
+        "2025-06-01T00:00:00.123456Z",
+        "2025-06-01",
+        "2025-06-01T02:00:00+02:00",
+    ]
+    want = {d: pd.to_datetime(d, utc=True, format="ISO8601").value // 1000 for d in in_range}
+    want.update({"2300-01-01T00:00:00Z": 10413792000000000, "garbage": None})
+    date_of = {f"http://d{i}.example/": d for i, d in enumerate(want)}
+    W.write_warc_gz(str(tmp_path / "seg.warc.gz"), iter([
+        W.warc_response_record(url, d, b"x") for url, d in date_of.items()
+    ]))
+    got = W.read_warc(spark, str(tmp_path)).select(
+        "url", F.unix_micros("warc_ts").alias("us")
+    ).collect()
+    assert {date_of[r.url]: r.us for r in got} == want
+
+
 def test_warc_extraction_stream_incremental(spark, warc_dir, tmp_path):
     """Streaming crawl ingest: run 1 extracts segment drop A; run 2
     (same checkpoint) sees A+B but processes only B — segment-level

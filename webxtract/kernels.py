@@ -11,10 +11,11 @@ Row boundary — the only place a Spark column becomes Python values:
 - ``doc_rows``: one ``mapInArrow`` pass that maps each document to
   0..n rows and carries its kept columns through as Arrow, exactly
   (extraction, the PDF page explode, the media kernels,
-  ``normalize_text``, the per-document scorers and the chunk-dedup
-  kernels).
-- ``pylist``: the reader both use, as does ``curation.bucket_counts``.
-  UTF-8 rule: a string column holding invalid UTF-8 (``warc_to_pages``'
+  ``normalize_text``, the per-document scorers, the chunk-dedup
+  kernels and the WARC record parser).
+- ``pylist``: the reader both use, as do ``curation.bucket_counts``
+  and the WET/WAT and ZipNum writers in ``warc``. UTF-8 rule: a
+  string column holding invalid UTF-8 (``warc_to_pages``'
   binary->string cast makes such text) reads as Spark's
   ``make_valid_utf8`` of it — each maximal invalid subsequence becomes
   one U+FFFD. Columns a kernel does not produce pass through byte for

@@ -208,29 +208,36 @@ def _triu_chunks(n: int, chunk: int):  # noqa: ANN202
         yield ci, np.arange(len(ci)) - start + ci + 1
 
 
-def _cosine_pairs(pdf, dim: int, thr: float, chunk: int = _PAIR_CHUNK):  # noqa: ANN001, ANN201
-    """(a, b, cosine) for the a < b pairs of one group's (id, v) rows
-    with cosine >= ``thr``: the pair verifier of near_dup_pairs and
-    semantic_dedup_pairs. The dot and the norms accumulate in float64
-    left to right over dimensions, vectorized across pairs, so each
-    pair's sum has the DuckDB oracle's in-order association; cosine =
-    dot / (na * nb). ``kernels.spark_round`` rounds only the pairs
-    inside the 0.5e-6 margin of the threshold (below it a raw cosine
-    cannot round up to ``thr``). The triangle is walked in
-    ``_triu_chunks``, so peak memory stays ~2 * chunk * dim * 8 B per
-    task whatever the group size."""
+def _matrix(vecs):  # noqa: ANN001, ANN202
+    """An Arrow column of n equal-width vectors as an (n, width) float64 matrix."""
     import numpy as np
-    import pandas as pd
+
+    rows = vecs.to_numpy(zero_copy_only=False)
+    return np.stack(rows).astype(np.float64) if len(rows) else np.empty((0, 0))
+
+
+def _cosine_pairs(ids, V, dim: int, thr: float, chunk: int = _PAIR_CHUNK):  # noqa: ANN001, ANN201
+    """(a, b, cosine) NumPy arrays for the a < b pairs of one group's
+    int64 ``ids`` and (n, dim) vectors ``V`` with cosine >= ``thr``:
+    the pair verifier of near_dup_pairs and semantic_dedup_pairs. The
+    dot and the norms accumulate in float64 left to right over
+    dimensions, vectorized across pairs, so each pair's sum has the
+    DuckDB oracle's in-order association; cosine = dot / (na * nb).
+    ``kernels.spark_round`` rounds only the pairs inside the 0.5e-6
+    margin of the threshold (below it a raw cosine cannot round up to
+    ``thr``). The triangle is walked in ``_triu_chunks``, so peak
+    memory stays ~2 * chunk * dim * 8 B per task whatever the group
+    size."""
+    import numpy as np
 
     from webxtract.kernels import spark_round
 
     out_a, out_b, out_c = [], [], []
-    n = len(pdf)
+    n = len(ids)
     if n >= 2:
-        ids = pdf["id"].to_numpy()
         order = np.argsort(ids, kind="stable")
         ids = ids[order]
-        V = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
+        V = np.asarray(V, dtype=np.float64)[order]
         acc = V[:, 0] * V[:, 0]
         for i in range(1, dim):
             acc = acc + V[:, i] * V[:, i]
@@ -245,16 +252,33 @@ def _cosine_pairs(pdf, dim: int, thr: float, chunk: int = _PAIR_CHUNK):  # noqa:
             for a, b, c in zip(ids[ci[m]], ids[cj[m]], cos[m]):
                 r = spark_round(c, 6)
                 if r >= thr:
-                    out_a.append(int(a))
-                    out_b.append(int(b))
+                    out_a.append(a)
+                    out_b.append(b)
                     out_c.append(r)
-    return pd.DataFrame(
-        {
-            "a": np.asarray(out_a, dtype=np.int64),
-            "b": np.asarray(out_b, dtype=np.int64),
-            "cosine": np.asarray(out_c, dtype=np.float64),
-        }
+    return (
+        np.asarray(out_a, np.int64), np.asarray(out_b, np.int64), np.asarray(out_c, np.float64)
     )
+
+
+_PAIR_SCHEMA = "a long, b long, cosine double"
+
+
+def _pair_table(group, dim: int, thr: float):  # noqa: ANN001, ANN202
+    """``_cosine_pairs`` over one group's Arrow (id, v) table, as an
+    (a, b, cosine) Arrow table."""
+    import pyarrow as pa
+
+    pairs = _cosine_pairs(group.column("id").to_numpy(), _matrix(group.column("v")), dim, thr)
+    return pa.table(list(pairs), names=["a", "b", "cosine"])
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id long, v) of ``df`` without the rows whose id or vector is
+    NULL: such a row joins no pair, as in the oracles' ``l.vec_id <
+    r.vec_id`` self-joins."""
+    return df.select(
+        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
+    ).where(F.col("id").isNotNull() & F.col("v").isNotNull())
 
 
 def near_dup_pairs(
@@ -270,7 +294,7 @@ def near_dup_pairs(
     """Embedding-cosine near-duplicate pairs via banded hyperplane LSH:
     per band, bucket by a ``planes_per_band``-bit signed-projection
     signature; candidates are pairs sharing ANY band's bucket; exact
-    cosine verifies.
+    cosine verifies. A row whose id or vector is NULL joins no pair.
 
     Scale shape (round-6 form): 16 planes/band gives 65,536 buckets
     per band (vs 256), multiple bands restore recall, and
@@ -287,17 +311,17 @@ def near_dup_pairs(
     round-5 JVM form evaluated the 64-term unrolled cosine inside a
     self-join — past HotSpot's 8 KB JIT cap, hence interpreted — and
     the signed projections as interpreted HOF lambdas, ~2 ms/row at
-    production width). Kernel A computes each vector's ``n_bands``
-    bucket ids (in-order float64 projections, exactly the oracle's
-    association) and emits one (band, bucket, id, v) row per band —
-    the vector ships n_bands times instead of being re-joined twice
-    after pair dedup, a deliberate trade: both designs move O(n_bands
-    x corpus) vector bytes once, this one without two join stages and
-    a candidate shuffle. Kernel B receives one bucket's rows, applies
-    the cap and verifies the a<b pairs with ``_cosine_pairs`` (exact
-    in-order cosine, chunked over the upper triangle); survivors dedup
-    on (a, b) across bands — band-identical values, so the kept row is
-    well-defined."""
+    production width). Kernel A (``mapInArrow``) computes each
+    vector's ``n_bands`` bucket ids (in-order float64 projections,
+    exactly the oracle's association) and emits one (band, bucket, id,
+    v) row per band — the vector ships n_bands times instead of being
+    re-joined twice after pair dedup, a deliberate trade: both designs
+    move O(n_bands x corpus) vector bytes once, this one without two
+    join stages and a candidate shuffle. Kernel B (``applyInArrow``)
+    receives one bucket's rows, applies the cap and verifies the a<b
+    pairs with ``_cosine_pairs`` (exact in-order cosine, chunked over
+    the upper triangle); survivors dedup on (a, b) across bands —
+    band-identical values, so the kept row is well-defined."""
     planes = [
         [
             _plane_weight(band * planes_per_band + j, i)
@@ -311,53 +335,46 @@ def near_dup_pairs(
 
     def _bucketize(batches):  # noqa: ANN001, ANN202
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
         W = np.asarray(planes, dtype=np.float64)  # (n_bands*P, dim)
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            n = b.num_rows
+            if not n:
                 continue
-            ids = pdf[id_col].to_numpy()
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            V = _matrix(b.column(1))
             # in-order projection per plane: acc over dims, vectorized
             # across rows (same left-to-right association as _proj_sql)
-            out_band, out_bucket, out_id, out_v = [], [], [], []
+            buckets = []
             for band in range(n_bands):
-                bucket = np.zeros(len(V), dtype=np.int64)
+                bucket = np.zeros(n, dtype=np.int64)
                 for j in range(planes_per_band):
                     w = W[band * planes_per_band + j]
                     acc = V[:, 0] * w[0]
                     for i in range(1, dim):
                         acc = acc + V[:, i] * w[i]
                     bucket += (acc >= 0).astype(np.int64) << j
-                out_band.append(np.full(len(V), band, dtype=np.int32))
-                out_bucket.append(bucket)
-                out_id.append(ids)
-                out_v.append(pdf[vec_col].to_numpy())
-            yield pd.DataFrame(
-                {
-                    "band": np.concatenate(out_band),
-                    "bucket": np.concatenate(out_bucket),
-                    "id": np.concatenate(out_id),
-                    "v": np.concatenate(out_v),
-                }
+                buckets.append(bucket)
+            band = np.repeat(np.arange(n_bands, dtype=np.int32), n)
+            rows = pa.array(np.tile(np.arange(n), n_bands))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(band), pa.array(np.concatenate(buckets)),
+                 b.column(0).take(rows), b.column(1).take(rows)],
+                ["band", "bucket", "id", "v"],
             )
 
-    def _bucket_pairs(pdf):  # noqa: ANN001, ANN202
-        if cap is not None and len(pdf) > cap:
-            pdf = pdf.iloc[:0]
-        return _cosine_pairs(pdf, dim, thr)
+    def _bucket_pairs(group):  # noqa: ANN001, ANN202
+        if cap is not None and group.num_rows > cap:
+            group = group.slice(0, 0)
+        return _pair_table(group, dim, thr)
 
     vec_type = df.schema[vec_col].dataType.simpleString()
-    posting = df.select(
-        F.col(id_col).alias(id_col), F.col(vec_col).alias(vec_col)
-    ).mapInPandas(
-        _bucketize,
-        f"band int, bucket long, id long, v {vec_type}",
+    posting = _vectors(df, id_col, vec_col).mapInArrow(
+        _bucketize, f"band int, bucket long, id long, v {vec_type}"
     )
     return (
         posting.groupBy("band", "bucket")
-        .applyInPandas(_bucket_pairs, "a long, b long, cosine double")
+        .applyInArrow(_bucket_pairs, _PAIR_SCHEMA)
         .dropDuplicates(["a", "b"])
     )
 
@@ -481,26 +498,27 @@ def semantic_dedup_pairs(
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs: k-means clusters
     as the blocking key, exact cosine only WITHIN a cluster, pairs with
-    cosine >= threshold (a < b, cosine rounded 6 dp). Clustering turns
-    the O(N^2) all-pairs cosine into O(sum |c|^2): at 10^12 documents
-    the operator is run with k ~ N/target so each cluster holds ~1-10k
-    vectors and the per-cluster quadratic runs inside one task; the
-    shuffle ships each (cluster, id, vector) row exactly once.
+    cosine >= threshold (a < b, cosine rounded 6 dp). A row whose id or
+    vector is NULL joins no pair. Clustering turns the O(N^2) all-pairs
+    cosine into O(sum |c|^2): at 10^12 documents the operator is run
+    with k ~ N/target so each cluster holds ~1-10k vectors and the
+    per-cluster quadratic runs inside one task; the shuffle ships each
+    (cluster, id, vector) row exactly once.
 
     Assignment (round 6) runs in the SAME kernel family as the pair
-    stage: a mapInPandas pass computes each vector's nearest centroid
-    in NumPy — in-order float64 squared-L2 per (row, centroid), exact
-    only-where-it-can-matter rounding (entries within 1.5e-6 of the
-    row minimum get the ``kernels.spark_round`` 6 dp round and the
-    (dist2, cluster) lexicographic tie-break; a gap above 1e-6 cannot
-    be reordered by two sub-0.5e-6 rounds). This replaces the
+    stage: a ``mapInArrow`` pass computes each vector's nearest
+    centroid in NumPy — in-order float64 squared-L2 per (row,
+    centroid), exact only-where-it-can-matter rounding (entries within
+    1.5e-6 of the row minimum get the ``kernels.spark_round`` 6 dp
+    round and the (dist2, cluster) lexicographic tie-break; a gap above
+    1e-6 cannot be reordered by two sub-0.5e-6 rounds). This replaces the
     broadcast-nested-loop join + groupBy(id) argmin, whose unrolled
     128-term distance evaluated interpreted (HotSpot 8 KB JIT cap,
     ~19 CPU core-s at sf1.0) and whose argmin exchange shipped every
     vector once more.
 
     The pair stage is a per-cluster vectorized NumPy kernel
-    (applyInPandas), not a JVM self-join. The round-5 self-join form
+    (``applyInArrow``), not a JVM self-join. The round-5 self-join form
     evaluated one 64-term unrolled dot per candidate PAIR inside the
     SortMergeJoin condition; the generated method for that expression
     exceeds HotSpot's 8 KB JIT bytecode cap (DontCompileHugeMethods),
@@ -521,16 +539,16 @@ def semantic_dedup_pairs(
 
     def _assign(batches):  # noqa: ANN001, ANN202
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
         from webxtract.kernels import spark_round
 
         C = np.asarray(cents, dtype=np.float64)  # (k, dim)
         k = len(C)
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            V = _matrix(b.column(1))
             n = len(V)
             D = np.empty((n, k), dtype=np.float64)
             for j in range(k):
@@ -549,22 +567,15 @@ def semantic_dedup_pairs(
                 else:
                     best = min((spark_round(D[r, j], 6), int(j)) for j in cand)
                     clusters[r] = best[1]
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].to_numpy(),
-                    "v": pdf[vec_col].to_numpy(),
-                    "cluster": clusters,
-                }
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0), b.column(1), pa.array(clusters)], ["id", "v", "cluster"]
             )
 
+    def _cluster_pairs(group):  # noqa: ANN001, ANN202
+        return _pair_table(group, dim, thr)
+
     vec_type = df.schema[vec_col].dataType.simpleString()
-    a = df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
+    a = _vectors(df, id_col, vec_col).mapInArrow(
         _assign, f"id long, v {vec_type}, cluster long"
     )
-    return (
-        a.select("cluster", "id", "v")
-        .groupBy("cluster")
-        .applyInPandas(
-            lambda pdf: _cosine_pairs(pdf, dim, thr), "a long, b long, cosine double"
-        )
-    )
+    return a.groupBy("cluster").applyInArrow(_cluster_pairs, _PAIR_SCHEMA)

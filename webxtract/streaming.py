@@ -426,8 +426,8 @@ def read_warc_stream(
     max_files_per_trigger: int = 16,
 ) -> DataFrame:
     """File-source stream of WARC segment drops: binaryFile streaming
-    source -> ``warc.parse_segments``, the Arrow-batched member/record
-    parser the batch reader (``warc.read_warc``) runs. New crawl
+    source -> ``warc.parse_segments``, the ``kernels.doc_rows`` parser
+    the batch reader (``warc.read_warc``) runs. New crawl
     segments landing in ``input_path`` are picked up per microbatch;
     segment files are the parallelism AND progress-tracking unit
     (file-source offsets in the checkpoint record which segments are

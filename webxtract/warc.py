@@ -11,8 +11,8 @@ that shape:
 - ``warc_response_record`` / ``write_warc_gz``: a deterministic
   WARC/1.0 serializer (synth + test side; per-record gzip members,
   ``mtime=0`` so identical inputs give identical bytes);
-- ``read_warc``: ``binaryFile`` scan -> ``mapInPandas`` record parser
-  yielding one row per record with the member's exact
+- ``read_warc``: ``binaryFile`` scan -> ``kernels.doc_rows`` record
+  parser yielding one row per record with the member's exact
   ``(offset, length)`` inside its segment — the CDX random-access
   contract;
 - ``cdx_index``: the CDX-style index projection (SURT url key,
@@ -31,8 +31,8 @@ segment reader — one task parses one segment's member chain
 sequentially (gzip members cannot be split *within* a member anyway) —
 and every output row carries ``(warc_file, record_offset,
 record_length)`` lineage so downstream ops re-open single records
-without rescanning segments. No per-row Python: parsing is
-Arrow-batched ``mapInPandas`` over whole segments.
+without rescanning segments. Parsing is one ``mapInArrow`` pass
+(``kernels.doc_rows``) over whole segments.
 """
 
 from __future__ import annotations
@@ -262,37 +262,32 @@ def _parse_segment(path: str, data: bytes) -> Iterator[tuple]:
 
 def parse_segments(segments: DataFrame, record_types: tuple[str, ...]) -> DataFrame:
     """(path, content) segment frame, batch or streaming -> WARC_SCHEMA
-    rows of ``record_types`` (every type when empty): the Arrow-batched
-    per-segment parse both WARC readers run."""
-    import pandas as pd
+    rows of ``record_types`` (every type when empty): the per-segment
+    parse both WARC readers run, one ``kernels.doc_rows`` pass. The
+    kernel emits the raw ``WARC-Date`` string; ``warc_ts`` is Spark's
+    string->timestamp cast of it (NULL where it does not parse)."""
+    from webxtract.kernels import doc_rows
 
     types = set(record_types) if record_types else None
 
-    def parse(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        cols = [f.name for f in WARC_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for path_, content in zip(pdf["path"], pdf["content"]):
-                for row in _parse_segment(path_, bytes(content)):
-                    if types is None or row[3] in types:
-                        rows.append(row)
-            out = pd.DataFrame(rows, columns=cols)
-            if len(out):
-                out["warc_ts"] = pd.to_datetime(
-                    out["warc_ts"], utc=True, errors="coerce", format="ISO8601"
-                ).dt.tz_localize(None)
-            else:
-                out["warc_ts"] = pd.Series([], dtype="datetime64[ns]")
-            yield out
+    def _parse_records():  # noqa: ANN202
+        return lambda path, content: [
+            r for r in _parse_segment(path, content) if types is None or r[3] in types
+        ]
 
-    return segments.mapInPandas(parse, schema=WARC_SCHEMA)
+    fields = [
+        StructField("warc_ts", StringType(), True) if f.name == "warc_ts" else f
+        for f in WARC_SCHEMA.fields
+    ]
+    rows = doc_rows(segments, [], ["path", "content"], fields, _parse_records)
+    return rows.withColumn("warc_ts", F.col("warc_ts").try_cast("timestamp"))
 
 
 def read_warc(
     spark: SparkSession, path: str, record_types: tuple[str, ...] = ("response",)
 ) -> DataFrame:
     """Distributed WARC reader: ``binaryFile`` segment scan ->
-    Arrow-batched per-segment parse. Filter-by-type happens inside the
+    ``parse_segments``. Filter-by-type happens inside the
     parser (rows never materialize), and the payload column stays
     binary so Catalyst prunes it for metadata-only queries downstream
     (CDX build reads headers only after this materialization point).
@@ -533,20 +528,24 @@ def write_zipnum_shards(
     sorted within partitions by (shard, block, key) — exactly the sort
     a shard writer needs anyway, same contract as write_wet_segments.
     Only (shard, block_seq, urlkey, timestamp, line) flows through the
-    exchange. cluster.idx itself is corpus/lines_per_block rows (CC:
-    ~1M lines for a 3G-line crawl) — small enough that the caller
-    coalesces it to one file."""
+    exchange; the writer is one ``mapInArrow`` that reads those five
+    columns through ``kernels.pylist``. cluster.idx itself is
+    corpus/lines_per_block rows (CC: ~1M lines for a 3G-line crawl) —
+    small enough that the caller coalesces it to one file."""
     import os
 
-    import pandas as pd
+    import pyarrow as pa
+
+    from webxtract.kernels import pylist
 
     tagged = _zipnum_ranked(lines, lines_per_block, n_shards, prefix_len)
     schema = (
         "urlkey string, timestamp string, shard_file string, "
         "offset long, length long, block_seq long"
     )
+    cols = ["urlkey", "timestamp", "line", "shard", "block_seq"]
 
-    def write(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def write(batches):  # noqa: ANN001, ANN202
         os.makedirs(out_dir, exist_ok=True)
         out_rows: list[tuple] = []
         cur_shard = None
@@ -562,37 +561,21 @@ def write_zipnum_shards(
                 mtime=0,
             )
             fh.write(blob)
-            out_rows.append(
-                (
-                    block_rows[0][0],
-                    block_rows[0][1],
-                    f"cdx-{shard:05d}.gz",
-                    pos,
-                    len(blob),
-                    seq,
-                )
-            )
+            urlkey, ts = block_rows[0][:2]
+            out_rows.append((urlkey, ts, f"cdx-{shard:05d}.gz", pos, len(blob), seq))
             pos += len(blob)
 
         pending: list[tuple] = []
         cur_block = None
-        for pdf in batches:
-            for urlkey, ts, line, shard, seq in zip(
-                pdf["urlkey"],
-                pdf["timestamp"],
-                pdf["line"],
-                pdf["shard"],
-                pdf["block_seq"],
-            ):
+        for b in batches:
+            for urlkey, ts, line, shard, seq in zip(*(pylist(b.column(c)) for c in cols)):
                 if shard != cur_shard:
                     if pending:
                         flush(pending, cur_shard, cur_block)
                         pending = []
                     if fh is not None:
                         fh.close()
-                    fh = open(
-                        os.path.join(out_dir, f"cdx-{shard:05d}.gz"), "wb"
-                    )
+                    fh = open(os.path.join(out_dir, f"cdx-{shard:05d}.gz"), "wb")
                     cur_shard, pos = shard, 0
                     cur_block = seq
                 if seq != cur_block:
@@ -605,22 +588,17 @@ def write_zipnum_shards(
             flush(pending, cur_shard, cur_block)
         if fh is not None:
             fh.close()
-        yield pd.DataFrame(
-            out_rows,
-            columns=[
-                "urlkey",
-                "timestamp",
-                "shard_file",
-                "offset",
-                "length",
-                "block_seq",
-            ],
-        ).astype({"offset": "int64", "length": "int64", "block_seq": "int64"})
+        types = [pa.string()] * 3 + [pa.int64()] * 3
+        out_cols = list(zip(*out_rows)) or [()] * len(types)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c, t) for c, t in zip(out_cols, types)],
+            ["urlkey", "timestamp", "shard_file", "offset", "length", "block_seq"],
+        )
 
     idx = (
         tagged.repartition(max(n_shards, 1), "shard")
         .sortWithinPartitions("shard", "block_seq", "urlkey", "timestamp", "line")
-        .mapInPandas(write, schema=schema)
+        .mapInArrow(write, schema)
     )
     rows = sorted(idx.collect(), key=lambda r: (r.urlkey, r.timestamp))
     with open(os.path.join(out_dir, "cluster.idx"), "w") as f:
@@ -833,9 +811,11 @@ def _write_segments(
     ``Content-Length``, which Spark computed over them, stays true),
     into one ``{prefix}-{pid:05d}.warc.{kind}.gz`` of per-record gzip
     members (mtime=0 — segment bytes are a pure function of partition
-    content), headed by a warcinfo record. Returns the manifest
-    ({kind}_file, n_records, n_bytes) — the action that drives the
-    write, one row per segment file.
+    content), headed by a warcinfo record. A NULL record (a page with
+    a NULL url has no ``WARC-Target-URI``, which a record must carry)
+    is skipped and counted. Returns the manifest ({kind}_file,
+    n_records, n_bytes, n_skipped) — the action that drives the write,
+    one row per segment file.
 
     Scale: the writer is one ``mapInArrow`` over only the record column
     (read as binary), so upstream partitioning (e.g. the pipeline's
@@ -848,14 +828,14 @@ def _write_segments(
 
     from webxtract.kernels import pylist
 
-    names = [f"{kind}_file", "n_records", "n_bytes"]
+    names = [f"{kind}_file", "n_records", "n_bytes", "n_skipped"]
 
     def write(batches):  # noqa: ANN001, ANN202
         pid = TaskContext.get().partitionId()
         name = f"{prefix}-{pid:05d}.warc.{kind}.gz"
         path = os.path.join(out_dir, name)
         fh = None
-        n = 0
+        n = skipped = 0
         for b in batches:
             if fh is None:
                 os.makedirs(out_dir, exist_ok=True)
@@ -864,19 +844,22 @@ def _write_segments(
                     gzip.compress(wet_warcinfo_record(name, run_date_iso), mtime=0)
                 )
             for rec in pylist(b.column(0)):
+                if rec is None:
+                    skipped += 1
+                    continue
                 fh.write(gzip.compress(rec, mtime=0))
                 n += 1
         if fh is None:
             return
         fh.close()
         yield pa.RecordBatch.from_arrays(
-            [pa.array([name]), pa.array([n], pa.int64()),
-             pa.array([os.path.getsize(path)], pa.int64())],
+            [pa.array([name])]
+            + [pa.array([v], pa.int64()) for v in (n, os.path.getsize(path), skipped)],
             names,
         )
 
     record = F.col(f"{kind}_record").cast("binary")
-    schema = f"{names[0]} string, n_records long, n_bytes long"
+    schema = f"{names[0]} string, n_records long, n_bytes long, n_skipped long"
     return df.select(record).mapInArrow(write, schema)
 
 
@@ -885,7 +868,7 @@ def write_wet_segments(
 ) -> DataFrame:
     """Distributed WET sink: ``wet_record`` strings -> ``.warc.wet.gz``
     segment files, one per task (``_write_segments``). Returns the
-    manifest (wet_file, n_records, n_bytes)."""
+    manifest (wet_file, n_records, n_bytes, n_skipped)."""
     return _write_segments(df, "wet", out_dir, run_date_iso, prefix)
 
 
@@ -1051,5 +1034,5 @@ def write_wat_segments(
     """Distributed WAT sink — the metadata twin of write_wet_segments:
     ``wat_record`` strings -> ``.warc.wat.gz`` segment files, one per
     task (``_write_segments``). Returns the manifest (wat_file,
-    n_records, n_bytes)."""
+    n_records, n_bytes, n_skipped)."""
     return _write_segments(df, "wat", out_dir, run_date_iso, prefix)
