@@ -19,7 +19,8 @@ def spark():
         master="local[4]",
         shuffle_partitions=4,
         # UI on (random port): the audit's per-task wall_ms reads the
-        # status REST API, and tests assert it is populated
+        # driver's status store, which tests/test_cli.py's submissions
+        # keep with the UI off, so both settings are exercised
         extra_conf={"spark.ui.port": "0", "spark.driver.memory": "4g"},
     )
     yield spark

@@ -97,10 +97,12 @@ def test_spark_submit_pyfiles_and_resume(submit_env, spark):
     m1 = _submit(submit, stage, "r1")
     assert m1["urls"] == N_PAGES
     assert m1["parse_failures"] >= 0
+    assert m1["metrics_errors"] == []
 
     # resume: everything is committed, the second run processes nothing
     m2 = _submit(submit, stage, "r2")
     assert m2["urls"] == 0
+    assert m2["metrics_errors"] == []
 
     out_df = spark.read.parquet(str(stage / "out"))
     assert out_df.select("url").distinct().count() == N_PAGES
@@ -109,6 +111,9 @@ def test_spark_submit_pyfiles_and_resume(submit_env, spark):
     audit = spark.read.parquet(str(stage / "audit"))
     rows = audit.filter(audit.run_id == "r1").collect()
     assert sum(r["url_count"] for r in rows) == N_PAGES
+    # the task walls come from the driver's status store, which the
+    # submissions keep with the UI off
+    assert all(r["wall_ms"] is not None and r["wall_ms"] > 0 for r in rows)
 
 
 def test_cli_pipeline_mode_local(submit_env, spark, tmp_path):

@@ -30,6 +30,7 @@ def test_audit_and_resume(spark, corpus, tmp_path):
 
     m1 = run_extraction_job(half, out, audit, "run-1", spark, num_partitions=4)
     assert m1["urls"] == 200
+    assert m1["metrics_errors"] == []
 
     # resume: second run over the FULL input must only process the rest
     remaining = resume_filter(pages, out, spark)
@@ -98,6 +99,98 @@ def test_audit_read_back_lists_only_this_run(spark, corpus, tmp_path):
     audit = spark.read.parquet(str(tmp_path / "audit")).toPandas()
     assert set(audit["run_id"]) == {run_id}
     assert audit["url_count"].sum() == m["urls"] == pages.count() - 60
+
+
+def test_audit_leg_reads_status_store_not_rest_or_python_rows(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """The post-write leg takes task walls from the driver's status store
+    and builds no frame from Python rows: with the REST client and
+    ``createDataFrame`` both raising, a job and its all-resumed rerun
+    succeed, the audit rows equal a groupBy over the written ``run_id=``
+    directory, and each url_count / wall_ms is its write task's
+    ``recordsWritten`` / duration in the status store."""
+    import urllib.request
+
+    from pyspark.sql import SparkSession
+
+    from webxtract import audit as A
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("the audit leg must not call this")
+
+    pages = spark.read.parquet(corpus[0]).limit(240)
+    out, aud = str(tmp_path / "out"), str(tmp_path / "audit")
+    with monkeypatch.context() as m:
+        m.setattr(urllib.request, "urlopen", refuse)
+        m.setattr(SparkSession, "createDataFrame", refuse)
+        m1 = A.run_extraction_job(pages, out, aud, "pin-1", spark, num_partitions=3)
+        m2 = A.run_extraction_job(pages, out, aud, "pin-2", spark, num_partitions=3)
+    assert (m1["urls"], m1["metrics_errors"]) == (240, [])
+    assert (m2["urls"], m2["metrics_errors"]) == (0, [])
+
+    got = spark.read.parquet(aud)
+    assert {r.run_id for r in got.select("run_id").distinct().collect()} == {"pin-1"}
+    want = (
+        spark.read.parquet(f"{out}/run_id=pin-1")
+        .groupBy("partition_id")
+        .agg(
+            F.count(F.lit(1)).alias("url_count"),
+            F.sum("n_bytes").alias("bytes_in"),
+            F.sum(F.col("parse_failure").cast("long")).alias("parse_failures"),
+        )
+    )
+    cols = ["partition_id", "url_count", "bytes_in", "parse_failures"]
+    assert sorted(got.select(cols).collect()) == sorted(want.select(cols).collect())
+
+    tasks = [
+        t
+        for att in A._write_stage_attempts(spark, "webxtract-write-pin-1")
+        for t in att["tasks"].values()
+    ]
+    written = {
+        t["index"]: t["taskMetrics"]["outputMetrics"]["recordsWritten"] for t in tasks
+    }
+    assert {r.partition_id: r.url_count for r in got.collect()} == {
+        i: n for i, n in written.items() if n
+    }
+    walls = {t["index"]: float(t["duration"]) for t in tasks}
+    for r in got.collect():
+        assert r.wall_ms == walls[r.partition_id] > 0
+
+
+def test_task_wall_failures_are_reported_not_fatal(spark, corpus, tmp_path, monkeypatch):
+    """A status-store read that raises, or returns fewer walls than the
+    write had tasks, leaves the job committed with NULL wall_ms where a
+    wall is missing, and names the failure in ``metrics_errors``."""
+    from webxtract import audit as A
+
+    pages = spark.read.parquet(corpus[0]).limit(60)
+    read_attempts = A._write_stage_attempts
+
+    def broken(spark, group):
+        raise RuntimeError("status store unavailable")
+
+    def short(spark, group):
+        attempts = read_attempts(spark, group)
+        tasks = attempts[-1]["tasks"]
+        del tasks[min(tasks)]
+        return attempts
+
+    cases = (
+        ("raise", broken, 2, "task walls: RuntimeError: status store unavailable"),
+        ("short", short, 1, "task walls: 1 of 2 write tasks in the status store"),
+    )
+    for name, stub, null_walls, error in cases:
+        out, aud = str(tmp_path / name / "out"), str(tmp_path / name / "audit")
+        monkeypatch.setattr(A, "_write_stage_attempts", stub)
+        m = A.run_extraction_job(pages, out, aud, name, spark, num_partitions=2)
+        monkeypatch.undo()
+        assert (m["urls"], m["metrics_errors"]) == (60, [error])
+        assert spark.read.parquet(out).count() == 60
+        rows = spark.read.parquet(aud).collect()
+        assert sum(r.url_count for r in rows) == 60
+        assert sum(r.wall_ms is None for r in rows) == null_walls
 
 
 def test_streaming_extraction(spark, corpus, tmp_path):

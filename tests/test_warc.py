@@ -660,6 +660,28 @@ def test_zipnum_index_layout(spark):
             raise AssertionError(f"global sort over lines in plan: {ln}")
 
 
+def test_zipnum_writer_runs_once(spark, tmp_path):
+    """The returned cluster.idx frame holds the collected rows: an action
+    on it does not run the shard writer again. No lines give an empty
+    cluster.idx and an empty frame."""
+    lines = _zipnum_lines(spark, 100)
+    out = str(tmp_path / "zipnum")
+    idx = W.write_zipnum_shards(
+        lines, out, lines_per_block=37, n_shards=2, prefix_len=2
+    )
+    shard_files = [f for f in os.listdir(out) if f.startswith("cdx-")]
+    assert len(shard_files) == 2
+    for f in shard_files:
+        os.remove(os.path.join(out, f))
+    assert idx.count() == 3  # 100 lines / 37 per block
+    assert sorted(os.listdir(out)) == ["cluster.idx"]
+
+    empty = str(tmp_path / "empty")
+    assert W.write_zipnum_shards(lines.limit(0), empty, 37, 2, 2).count() == 0
+    assert os.listdir(empty) == ["cluster.idx"]
+    assert os.path.getsize(os.path.join(empty, "cluster.idx")) == 0
+
+
 def test_zipnum_write_and_lookup(spark, tmp_path):
     lines = _zipnum_lines(spark, 400)
     out = str(tmp_path / "zipnum")

@@ -14,6 +14,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from webxtract.schemas import AUDIT_SCHEMA
 
@@ -55,28 +56,27 @@ def audit_rows(
     spark_partition_id(): a read-back audit groups by the write tasks,
     not by the read split layout. ``wall_by_pid`` maps write-task index
     -> task duration ms (from the scheduler's task metrics); it is tiny
-    (one entry per task) and joined broadcast."""
+    (one entry per task) and becomes a literal map looked up by
+    ``partition_id``, so no join and no second frame. A partition with
+    no wall gets a NULL ``wall_ms``."""
     agg = extracted.groupBy("partition_id").agg(
         F.count(F.lit(1)).alias("url_count"),
         F.sum("n_bytes").alias("bytes_in"),
         F.sum(F.col("parse_failure").cast("long")).alias("parse_failures"),
     )
     if wall_by_pid:
-        spark = extracted.sparkSession
-        walls = spark.createDataFrame(
-            [(int(k), float(v)) for k, v in wall_by_pid.items()],
-            schema="partition_id int, wall_ms double",
-        )
-        agg = agg.join(F.broadcast(walls), "partition_id", "left")
+        pairs = sorted((int(k), float(v)) for k, v in wall_by_pid.items())
+        walls = F.create_map(*[F.lit(x) for pair in pairs for x in pair])
+        wall_ms = walls[F.col("partition_id")]
     else:
-        agg = agg.withColumn("wall_ms", F.lit(None).cast("double"))
+        wall_ms = F.lit(None).cast("double")
     return agg.select(
         F.lit(run_id).alias("run_id"),
         "partition_id",
         "url_count",
         "bytes_in",
         "parse_failures",
-        "wall_ms",
+        wall_ms.alias("wall_ms"),
     )
 
 
@@ -114,7 +114,10 @@ def run_extraction_job(
     computed from a read-back of this run's ``run_id=`` directory alone
     (never a listing or rescan of the full history: at 10^12 accumulated
     urls a full-table re-aggregation per incremental run is a
-    non-starter).
+    non-starter). Each row's ``wall_ms`` is its write task's duration
+    from the driver's status store. ``metrics_errors`` names every
+    metric read that failed or came back short (empty on success); the
+    job still commits, with NULL ``wall_ms`` where a wall is missing.
 
     ``transform`` swaps the per-page job body (default: extract_pages;
     the CLI passes the full validation pipeline for --mode pipeline) —
@@ -134,7 +137,7 @@ def run_extraction_job(
         .withColumn("run_id", F.lit(run_id))
         # recorded at write time: spark_partition_id() in the write
         # stage IS the write task index, so the read-back audit can
-        # group by the producing task and join its scheduler wall time
+        # group by the producing task and look up its scheduler wall time
         .withColumn("partition_id", F.spark_partition_id())
     )
 
@@ -155,16 +158,34 @@ def run_extraction_job(
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     stats = obs.get
-    walls = _task_walls_for_group(spark, group)
+    # the output is committed: a task-wall read that fails leaves
+    # wall_ms NULL and is reported in metrics_errors, never fails the job
+    metrics_errors: list[str] = []
+    walls: dict[int, float] = {}
+    try:
+        walls, n_tasks = _task_walls_for_group(spark, group)
+        if len(walls) < n_tasks:
+            metrics_errors.append(
+                f"task walls: {len(walls)} of {n_tasks} write tasks in the status store"
+            )
+    except Exception as e:
+        detail = " ".join(str(e).split())[:300]
+        metrics_errors.append(f"task walls: {type(e).__name__}: {detail}")
 
-    # list only this run's partition directory, named the way the writer
-    # names it; a run that wrote no rows has none
+    # read back only this run's partition directory, named the way the
+    # writer names it, and only the columns the audit aggregates, under
+    # the schema the write used; a run that wrote no rows has none
     catalog_utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     run_dir = f"{output_path.rstrip('/')}/run_id={catalog_utils.escapePathName(run_id)}"
+    read_back = StructType(
+        [extracted.schema[c] for c in ("partition_id", "n_bytes", "parse_failure")]
+    )
     if _exists(run_dir, spark):
-        this_run = spark.read.parquet(run_dir)
+        this_run = spark.read.schema(read_back).parquet(run_dir)
     else:
-        this_run = spark.createDataFrame([], extracted.drop("run_id").schema)
+        this_run = spark.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in read_back]
+        )
     audit = audit_rows(this_run, run_id, wall_by_pid=walls)
     audit.write.mode("append").parquet(audit_path)
 
@@ -173,46 +194,57 @@ def run_extraction_job(
         "urls": stats["urls"],
         "bytes_in": stats["bytes_in"],
         "parse_failures": stats["failures"],
+        "metrics_errors": metrics_errors,
     }
 
 
-def _task_walls_for_group(spark: SparkSession, group: str) -> dict[int, float]:
-    """Per-task wall-clock of the write stage, {task index: duration ms},
-    from the status REST API (the same task metrics a cluster history
-    server records). Returns {} when the UI/REST endpoint is disabled —
-    wall_ms then stays NULL rather than failing the job."""
+def _task_walls_for_group(
+    spark: SparkSession, group: str
+) -> tuple[dict[int, float], int]:
+    """Per-task wall-clock of the group's write stage, {task index:
+    duration ms}, and that stage's task count. Errors propagate to the
+    caller."""
+    attempts = _write_stage_attempts(spark, group)
+    walls: dict[int, float] = {}
+    for att in attempts:
+        for task in (att.get("tasks") or {}).values():
+            idx, dur = task.get("index"), task.get("duration")
+            if idx is not None and dur is not None:
+                walls[int(idx)] = float(dur)
+    return walls, max((att.get("numTasks") or 0 for att in attempts), default=0)
+
+
+def _write_stage_attempts(spark: SparkSession, group: str) -> list[dict]:
+    """Every attempt of the group's write stage with its tasks, as the
+    JSON the UI's REST API serves (``stages/{id}?details=true``), read
+    in one Py4J round trip from the driver's status store, which is
+    kept whether or not the UI runs. The listener bus fills the store
+    asynchronously, so it is drained first. [] when the group ran no
+    job."""
     import json
-    import urllib.request
 
     sc = spark.sparkContext
-    base = sc.uiWebUrl
-    if not base:
-        return {}
-    try:
-        tracker = sc.statusTracker()
-        stage_ids: list[int] = []
-        for jid in tracker.getJobIdsForGroup(group):
-            info = tracker.getJobInfo(jid)
-            if info:
-                stage_ids.extend(info.stageIds)
-        if not stage_ids:
-            return {}
-        # the ResultStage of the write job has the highest stage id
-        sid = max(stage_ids)
-        url = (
-            f"{base}/api/v1/applications/{sc.applicationId}"
-            f"/stages/{sid}?details=true"
-        )
-        attempts = json.load(urllib.request.urlopen(url, timeout=10))
-        walls: dict[int, float] = {}
-        for att in attempts:
-            for task in (att.get("tasks") or {}).values():
-                idx, dur = task.get("index"), task.get("duration")
-                if idx is not None and dur is not None:
-                    walls[int(idx)] = float(dur)
-        return walls
-    except Exception:
-        return {}
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    stage_ids: list[int] = []
+    for jid in tracker.getJobIdsForGroup(group):
+        info = tracker.getJobInfo(jid)
+        if info:
+            stage_ids.extend(info.stageIds)
+    if not stage_ids:
+        return []
+    # the ResultStage of the write job has the highest stage id
+    sid = max(stage_ids)
+    jvm = sc._jvm
+    mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+    mapper.registerModule(jvm.com.fasterxml.jackson.module.scala.DefaultScalaModule())
+    # stageData(id, details, taskStatus, withSummaries, quantiles); an
+    # empty taskStatus list keeps tasks of every status
+    data = jsc.statusStore().stageData(
+        sid, True, jvm.java.util.ArrayList(), False, sc._gateway.new_array(jvm.double, 0)
+    )
+    return json.loads(mapper.writeValueAsString(data))
 
 
 def _exists(path: str, spark: SparkSession) -> bool:

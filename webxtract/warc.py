@@ -521,7 +521,8 @@ def write_zipnum_shards(
     (one gzip member per block, mtime=0 for determinism) plus
     ``cluster.idx`` — the real Common-Crawl-servable layout — and
     returns the cluster.idx rows ``(urlkey, timestamp, shard_file,
-    offset, length, block_seq)`` with COMPRESSED coordinates.
+    offset, length, block_seq)`` with COMPRESSED coordinates, as a
+    frame over the rows already collected: the writer runs once.
 
     Scale shape: lines are hash-repartitioned on ``shard`` (every
     shard lands whole in one task; a task may own several shards) and
@@ -600,14 +601,18 @@ def write_zipnum_shards(
         .sortWithinPartitions("shard", "block_seq", "urlkey", "timestamp", "line")
         .mapInArrow(write, schema)
     )
-    rows = sorted(idx.collect(), key=lambda r: (r.urlkey, r.timestamp))
+    # the one run of the writer; the returned frame is built from the
+    # collected Arrow rows (no Python-row RDD), so an action on it
+    # writes nothing
+    table = idx.toArrow().sort_by([("urlkey", "ascending"), ("timestamp", "ascending")])
+    # no task creates out_dir when there are no lines
+    os.makedirs(out_dir, exist_ok=True)
     with open(os.path.join(out_dir, "cluster.idx"), "w") as f:
-        for r in rows:
-            f.write(
-                f"{r.urlkey} {r.timestamp}\t{r.shard_file}\t{r.offset}"
-                f"\t{r.length}\t{r.block_seq}\n"
-            )
-    return idx
+        for urlkey, ts, shard_file, offset, length, seq in zip(
+            *(pylist(c) for c in table.columns)
+        ):
+            f.write(f"{urlkey} {ts}\t{shard_file}\t{offset}\t{length}\t{seq}\n")
+    return lines.sparkSession.createDataFrame(table)
 
 
 def zipnum_lookup(root: str, urlkey: str) -> list[str]:
