@@ -10,8 +10,10 @@ in test_extract.test_no_shuffle_in_extraction_plan.)
 from __future__ import annotations
 
 import contextlib
+import gc
 import io
 import re
+import threading
 
 import pytest
 
@@ -123,10 +125,13 @@ def test_pipeline_battery_is_one_arrow_eval_above_the_exchange(spark, corpus):
 
 
 def test_pipeline_build_py4j_round_trips(spark, tmp_path):
-    """Building run_pipeline on a fresh input stays under 6,250 py4j round
-    trips, 1.25x the ~5,000 measured with every rule in the Arrow kernel
-    (counted, not timed; the expression forms of detection, fake scoring
-    and the battery cost ~39.5k and ~150k)."""
+    """Building run_pipeline on a fresh input stays under 2,700 py4j round
+    trips, 1.25x the ~2,150 measured with every rule in the Arrow kernel
+    and PySpark's per-call call-site capture off (counted, not timed;
+    with the capture on it was ~4,450, and the expression forms of
+    detection, fake scoring and the battery cost ~39.5k and ~150k). Only
+    this thread's round trips count: the session's Python-worker warm-up
+    may still be running on its own thread."""
     from webxtract import pipeline as P
     from webxtract.synth import gen_pages, to_parquet
 
@@ -138,8 +143,14 @@ def test_pipeline_build_py4j_round_trips(spark, tmp_path):
     send = client.send_command
     calls = []
 
+    # proxies other tests left for the collector would be deleted (one
+    # round trip each) inside the counted window
+    gc.collect()
+    me = threading.current_thread()
+
     def counting(*args, **kw):  # noqa: ANN002, ANN003, ANN202
-        calls.append(1)
+        if threading.current_thread() is me:
+            calls.append(1)
         return send(*args, **kw)
 
     client.send_command = counting
@@ -147,7 +158,7 @@ def test_pipeline_build_py4j_round_trips(spark, tmp_path):
         P.run_pipeline(df, run_date="2026-01-15")
     finally:
         del client.send_command
-    assert len(calls) < 6_250, len(calls)
+    assert len(calls) < 2_700, len(calls)
 
 
 def test_benchmark_overlap_broadcasts_benchmark_side(spark):

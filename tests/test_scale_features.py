@@ -159,6 +159,48 @@ def test_audit_leg_reads_status_store_not_rest_or_python_rows(
         assert r.wall_ms == walls[r.partition_id] > 0
 
 
+def test_empty_reruns_append_no_audit_file(spark, corpus, tmp_path):
+    """Three runs over the same pages: the two all-resumed reruns succeed
+    with urls == 0 and leave the audit table holding only the first
+    run's files."""
+    import os
+
+    from webxtract.audit import run_extraction_job
+
+    pages = spark.read.parquet(corpus[0]).limit(40)
+    out, aud = str(tmp_path / "out"), str(tmp_path / "audit")
+
+    def audit_files() -> list[str]:
+        return sorted(f for f in os.listdir(aud) if f.endswith(".parquet"))
+
+    assert run_extraction_job(pages, out, aud, "a", spark, num_partitions=2)["urls"] == 40
+    first = audit_files()
+    assert first
+    for run_id in ("b", "c"):
+        m = run_extraction_job(pages, out, aud, run_id, spark, num_partitions=2)
+        assert (m["urls"], m["metrics_errors"]) == (0, [])
+    assert audit_files() == first
+    rows = spark.read.parquet(aud).collect()
+    assert {r.run_id for r in rows} == {"a"}
+    assert sum(r.url_count for r in rows) == 40
+
+
+def test_audit_parquet_columns_are_audit_schema(spark, corpus, tmp_path):
+    """The written audit table has AUDIT_SCHEMA's (name, type) pairs, in
+    order. Nullability is not compared: a parquet write marks every
+    column nullable."""
+    from webxtract.audit import run_extraction_job
+    from webxtract.schemas import AUDIT_SCHEMA
+
+    pages = spark.read.parquet(corpus[0]).limit(20)
+    aud = str(tmp_path / "audit")
+    run_extraction_job(pages, str(tmp_path / "out"), aud, "s", spark, num_partitions=2)
+    written = spark.read.parquet(aud).schema
+    assert [(f.name, f.dataType) for f in written] == [
+        (f.name, f.dataType) for f in AUDIT_SCHEMA
+    ]
+
+
 def test_task_wall_failures_are_reported_not_fatal(spark, corpus, tmp_path, monkeypatch):
     """A status-store read that raises, or returns fewer walls than the
     write had tasks, leaves the job committed with NULL wall_ms where a

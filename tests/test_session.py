@@ -1,11 +1,17 @@
 """Session construction: thread-count parsing of local masters, the
-config a session gets, and the contents of the shipped --py-files
-archive."""
+config a session gets, the contents of the shipped --py-files archive,
+and the background start of a new context's Python workers."""
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import sys
+import textwrap
 import zipfile
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_local_threads_tolerates_star_and_zero():
@@ -42,3 +48,91 @@ def test_session_adds_no_jvm_flags_and_extra_conf_wins(spark):
         opts = conf.get(f"spark.{role}.extraJavaOptions", "").split()
         assert [o for o in opts
                 if o.startswith("-X") and o != "-XX:+IgnoreUnrecognizedVMOptions"] == []
+
+
+# Runs in a fresh interpreter: the shared test session's warm-up job ran
+# long before this test and may have left the status store's retained jobs.
+_WARMUP_PROBE = textwrap.dedent("""
+    import json, logging, sys, threading, time
+    sys.path.insert(0, sys.argv[1])
+    from pyspark.sql import SparkSession
+    from webxtract.session import WARMUP_GROUP, get_spark
+
+    warnings = []
+    handler = logging.Handler()
+    handler.emit = lambda r: warnings.append([r.getMessage(), r.exc_info[0].__name__])
+    logging.getLogger("webxtract.session").addHandler(handler)
+
+    def session():
+        return get_spark("warmup-probe", master="local[2]", extra_conf={
+            "spark.ui.enabled": "false", "spark.driver.memory": "1g"})
+
+    def join_warmups():
+        for t in threading.enumerate():
+            if t.name == WARMUP_GROUP:
+                t.join(60)
+
+    def identity(batches):
+        yield from batches
+
+    res = {}
+    spark = session()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 60
+    while True:
+        jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(WARMUP_GROUP)]
+        if (jobs and all(j.status == "SUCCEEDED" for j in jobs)) or time.monotonic() > deadline:
+            break
+        time.sleep(0.1)
+    res["statuses"] = [j.status for j in jobs]
+    res["tasks"] = [tracker.getStageInfo(s).numTasks for j in jobs for s in j.stageIds]
+    res["default_parallelism"] = sc.defaultParallelism
+    # a second get_spark on the same context starts no second warm-up
+    session()
+    join_warmups()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    res["jobs_after_second_call"] = len(tracker.getJobIdsForGroup(WARMUP_GROUP))
+    spark.stop()
+
+    # a warm-up cut short by spark.stop() logs no warning
+    session().stop()
+    join_warmups()
+    res["warnings_after_stop"] = list(warnings)
+
+    # a warm-up that fails is logged, and the session still runs Python
+    range_ = SparkSession.range
+    SparkSession.range = lambda *a, **k: 1 / 0
+    spark = session()
+    join_warmups()
+    SparkSession.range = range_
+    res["warnings_after_failure"] = list(warnings)
+    res["rows"] = spark.range(4, numPartitions=2).mapInArrow(identity, "id long").count()
+    spark.stop()
+    res["alive"] = sum(t.name == WARMUP_GROUP for t in threading.enumerate())
+    print(json.dumps(res))
+""")
+
+
+def test_new_context_starts_python_workers_once():
+    """A new context runs exactly one warm-up job of defaultParallelism
+    tasks, and it succeeds; a second get_spark on that context starts
+    none. A warm-up stopped by ``spark.stop()`` ends without a traceback
+    or warning; one that fails logs a warning and leaves the session
+    working."""
+    out = subprocess.run(
+        [sys.executable, "-c", _WARMUP_PROBE, REPO],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    res = json.loads(out.stdout.strip().splitlines()[-1])
+    assert res["statuses"] == ["SUCCEEDED"], res
+    assert res["tasks"] == [res["default_parallelism"]] == [2], res
+    assert res["jobs_after_second_call"] == 1, res
+    assert res["warnings_after_stop"] == [], res
+    [(message, error)] = res["warnings_after_failure"]
+    assert message.startswith("Python worker warm-up failed"), message
+    assert error == "ZeroDivisionError"
+    assert res["rows"] == 4
+    assert res["alive"] == 0, res
+    assert "Traceback" not in out.stderr, out.stderr[-3000:]

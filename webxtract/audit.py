@@ -58,7 +58,8 @@ def audit_rows(
     -> task duration ms (from the scheduler's task metrics); it is tiny
     (one entry per task) and becomes a literal map looked up by
     ``partition_id``, so no join and no second frame. A partition with
-    no wall gets a NULL ``wall_ms``."""
+    no wall gets a NULL ``wall_ms``. ``schemas.AUDIT_SCHEMA`` names,
+    orders and types the six columns."""
     agg = extracted.groupBy("partition_id").agg(
         F.count(F.lit(1)).alias("url_count"),
         F.sum("n_bytes").alias("bytes_in"),
@@ -70,13 +71,12 @@ def audit_rows(
         wall_ms = walls[F.col("partition_id")]
     else:
         wall_ms = F.lit(None).cast("double")
+    values = {"run_id": F.lit(run_id), "wall_ms": wall_ms}
     return agg.select(
-        F.lit(run_id).alias("run_id"),
-        "partition_id",
-        "url_count",
-        "bytes_in",
-        "parse_failures",
-        wall_ms.alias("wall_ms"),
+        *[
+            values.get(f.name, F.col(f.name)).cast(f.dataType).alias(f.name)
+            for f in AUDIT_SCHEMA
+        ]
     )
 
 
@@ -114,10 +114,12 @@ def run_extraction_job(
     computed from a read-back of this run's ``run_id=`` directory alone
     (never a listing or rescan of the full history: at 10^12 accumulated
     urls a full-table re-aggregation per incremental run is a
-    non-starter). Each row's ``wall_ms`` is its write task's duration
-    from the driver's status store. ``metrics_errors`` names every
-    metric read that failed or came back short (empty on success); the
-    job still commits, with NULL ``wall_ms`` where a wall is missing.
+    non-starter). A run that writes no rows (an all-resumed rerun) has
+    no such directory and appends nothing to the audit table. Each row's
+    ``wall_ms`` is its write task's duration from the driver's status
+    store. ``metrics_errors`` names every metric read that failed or
+    came back short (empty on success); the job still commits, with
+    NULL ``wall_ms`` where a wall is missing.
 
     ``transform`` swaps the per-page job body (default: extract_pages;
     the CLI passes the full validation pipeline for --mode pipeline) —
@@ -158,36 +160,32 @@ def run_extraction_job(
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     stats = obs.get
-    # the output is committed: a task-wall read that fails leaves
-    # wall_ms NULL and is reported in metrics_errors, never fails the job
     metrics_errors: list[str] = []
-    walls: dict[int, float] = {}
-    try:
-        walls, n_tasks = _task_walls_for_group(spark, group)
-        if len(walls) < n_tasks:
-            metrics_errors.append(
-                f"task walls: {len(walls)} of {n_tasks} write tasks in the status store"
-            )
-    except Exception as e:
-        detail = " ".join(str(e).split())[:300]
-        metrics_errors.append(f"task walls: {type(e).__name__}: {detail}")
-
     # read back only this run's partition directory, named the way the
     # writer names it, and only the columns the audit aggregates, under
-    # the schema the write used; a run that wrote no rows has none
+    # the schema the write used; a run that wrote no rows has no such
+    # directory and appends no audit file
     catalog_utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     run_dir = f"{output_path.rstrip('/')}/run_id={catalog_utils.escapePathName(run_id)}"
-    read_back = StructType(
-        [extracted.schema[c] for c in ("partition_id", "n_bytes", "parse_failure")]
-    )
     if _exists(run_dir, spark):
-        this_run = spark.read.schema(read_back).parquet(run_dir)
-    else:
-        this_run = spark.range(0).select(
-            *[F.lit(None).cast(f.dataType).alias(f.name) for f in read_back]
+        # the output is committed: a task-wall read that fails leaves
+        # wall_ms NULL and is reported in metrics_errors, never fails the job
+        walls: dict[int, float] = {}
+        try:
+            walls, n_tasks = _task_walls_for_group(spark, group)
+            if len(walls) < n_tasks:
+                metrics_errors.append(
+                    f"task walls: {len(walls)} of {n_tasks} write tasks in the status store"
+                )
+        except Exception as e:
+            detail = " ".join(str(e).split())[:300]
+            metrics_errors.append(f"task walls: {type(e).__name__}: {detail}")
+        read_back = StructType(
+            [extracted.schema[c] for c in ("partition_id", "n_bytes", "parse_failure")]
         )
-    audit = audit_rows(this_run, run_id, wall_by_pid=walls)
-    audit.write.mode("append").parquet(audit_path)
+        this_run = spark.read.schema(read_back).parquet(run_dir)
+        audit = audit_rows(this_run, run_id, wall_by_pid=walls)
+        audit.write.mode("append").parquet(audit_path)
 
     return {
         "run_id": run_id,

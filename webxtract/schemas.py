@@ -144,6 +144,10 @@ VALIDATOR_RESULT_TYPE = StructType(
 
 # ---------------------------------------------------------------- audit
 
+# Names, order and types of the audit table's columns (audit.audit_rows).
+# The written parquet matches it in (name, type) only: a parquet write
+# marks every column nullable, so the non-null flags document the
+# contract (every row has a run and a partition) rather than bind it.
 AUDIT_SCHEMA = StructType(
     [
         StructField("run_id", StringType(), False),

@@ -3,16 +3,32 @@
 Centralizes every config that affects correctness (timezone, ANSI mode)
 or 100TB-scale behavior (AQE, Arrow batch size, partition byte caps) so
 tests, bench and production jobs agree.
+
+A new SparkContext also gets its Python workers started in the
+background: right after the package zip is shipped, a daemon thread
+runs one small job (job group ``webxtract-python-workers``) whose
+``mapInArrow`` imports ``webxtract.kernels`` and pyarrow's pandas shim
+on every executor slot. PySpark's worker daemon, its forked workers and
+their imports are then ready while the driver reads, builds and plans
+the first real job, whose first Python stage takes the idle workers
+instead of starting them. ``get_spark`` never waits for that job.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 import re
+import threading
 
+from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
 
 from webxtract.config import ARROW_MAX_RECORDS_PER_BATCH
+
+WARMUP_GROUP = "webxtract-python-workers"
+
+log = logging.getLogger(__name__)
 
 
 def get_spark(
@@ -65,13 +81,19 @@ def get_spark(
         # Driver heap cap (-Xmx); the driver JVM hosts every local[N]
         # executor thread: 2 GB per thread, at most 64g.
         "spark.driver.memory": f"{min(64, 2 * (n_threads or 16))}g",
+        # No Python call-site capture: with it on, every wrapped F.* and
+        # DataFrame call walks the Python stack and makes 3 extra Py4J
+        # round trips (building run_pipeline: ~4,450 round trips, not
+        # ~2,150). Error messages lose only the Python call site.
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    _ship_package(spark)
+    if _ship_package(spark):
+        _start_python_workers(spark)
     return spark
 
 
@@ -88,16 +110,20 @@ def local_threads(master: str | None) -> int | None:
     return max(1, int(n)) if n.isdigit() else os.cpu_count() or 1
 
 
-def _ship_package(spark: SparkSession) -> None:
+def _ship_package(spark: SparkSession) -> bool:
     """Ship the webxtract package to Python workers.
 
     Executors unpickle the extraction UDFs by module reference, so the
     package must be importable on every worker — the in-code equivalent
-    of ``spark-submit --py-files webxtract.zip``. Idempotent per session.
+    of ``spark-submit --py-files webxtract.zip``. Idempotent per
+    SparkContext: True when this call added the zip, False when the
+    context already had it. ``get_spark`` starts the context's Python
+    workers after a True (``_start_python_workers``), so workers are
+    forked only once the zip is on their path.
     """
     sc = spark.sparkContext
     if getattr(sc, "_webxtract_shipped", False):
-        return
+        return False
     import pathlib
     import tempfile
 
@@ -105,6 +131,62 @@ def _ship_package(spark: SparkSession) -> None:
     build_pyfiles_zip(str(zip_path))
     sc.addPyFile(str(zip_path))
     sc._webxtract_shipped = True
+    return True
+
+
+def _start_python_workers(spark: SparkSession) -> None:
+    """Start one small job on a daemon thread, in job group
+    ``WARMUP_GROUP``: ``defaultParallelism`` one-row partitions through
+    one ``mapInArrow`` of ``_warm_worker``. It starts PySpark's worker
+    daemon and one worker per executor slot, which return to the
+    daemon's idle pool for the next Python stage, and loads the JVM's
+    first-job classes. Returns at once. A failed warm-up is logged and
+    changes nothing else: the first Python stage then starts the
+    workers itself. A warm-up cut short by ``spark.stop()`` ends with
+    no Python warning or traceback (the JVM logs its task aborts, as for
+    any job running at stop)."""
+    sc = spark.sparkContext
+
+    def run() -> None:
+        try:
+            sc.setJobGroup(WARMUP_GROUP, "start the Python workers", False)
+            n = sc.defaultParallelism
+            df = spark.range(n, numPartitions=n).mapInArrow(_warm_worker, "id long")
+            df.write.format("noop").mode("overwrite").save()
+        except Exception:
+            if not _stopped(sc):
+                log.warning(
+                    "Python worker warm-up failed; the first Python stage starts "
+                    "the workers instead",
+                    exc_info=True,
+                )
+
+    threading.Thread(target=run, name=WARMUP_GROUP, daemon=True).start()
+
+
+def _warm_worker(batches):  # noqa: ANN001, ANN201
+    """The warm-up's ``mapInArrow`` function: import the kernels and
+    build one Arrow array over Python objects (pyarrow imports pandas
+    on the first), as every kernel's first batch would; pass the batch
+    through."""
+    import pyarrow as pa
+
+    import webxtract.kernels  # noqa: F401
+
+    pa.array(["warm"])
+    yield from batches
+
+
+def _stopped(sc) -> bool:  # noqa: ANN001
+    """The SparkContext is stopped or stopping (its JVM side may already
+    be gone)."""
+    jsc = sc._jsc
+    if jsc is None:
+        return True
+    try:
+        return jsc.sc().isStopped()
+    except Py4JError:
+        return True
 
 
 def build_pyfiles_zip(zip_path: str) -> str:
