@@ -235,6 +235,173 @@ def test_task_wall_failures_are_reported_not_fatal(spark, corpus, tmp_path, monk
         assert sum(r.wall_ms is None for r in rows) == null_walls
 
 
+def _run_groupby(spark, out: str, run_id: str) -> list:
+    """The audit rows a committed ``run_id=`` directory must have, less
+    ``wall_ms``: a groupBy over the written rows by write task."""
+    return sorted(
+        spark.read.parquet(f"{out}/run_id={run_id}")
+        .groupBy("partition_id")
+        .agg(
+            F.count(F.lit(1)).alias("url_count"),
+            F.sum("n_bytes").alias("bytes_in"),
+            F.sum(F.col("parse_failure").cast("long")).alias("parse_failures"),
+        )
+        .select(F.lit(run_id).alias("run_id"), "*")
+        .collect()
+    )
+
+
+def _audit_of(spark, aud: str, run_id: str) -> list:
+    cols = ["run_id", "partition_id", "url_count", "bytes_in", "parse_failures"]
+    rows = spark.read.parquet(aud).filter(F.col("run_id") == run_id)
+    return sorted(rows.select(cols).collect())
+
+
+def test_same_run_id_rerun_commits_once(spark, corpus, tmp_path):
+    """A rerun under a run_id that already committed writes nothing and
+    leaves that run's audit rows as they were: one groupBy over its
+    ``run_id=`` directory, not two."""
+    from webxtract.audit import run_extraction_job
+
+    pages = spark.read.parquet(corpus[0]).limit(40)
+    out, aud = str(tmp_path / "out"), str(tmp_path / "audit")
+    assert run_extraction_job(pages, out, aud, "r1", spark, num_partitions=2)["urls"] == 40
+    m = run_extraction_job(pages, out, aud, "r1", spark, num_partitions=2)
+    assert (m["urls"], m["metrics_errors"]) == (0, [])
+    assert spark.read.parquet(out).count() == 40
+    audit = _audit_of(spark, aud, "r1")
+    assert audit == _run_groupby(spark, out, "r1")
+    assert sum(r.url_count for r in audit) == 40
+    assert spark.read.parquet(aud).count() == len(audit)
+
+
+def test_rerun_restores_missing_audit_rows(spark, corpus, tmp_path):
+    """An attempt that committed its output but lost its audit rows:
+    the same-run_id rerun restores them from the committed partition,
+    with NULL wall_ms and the reason in metrics_errors."""
+    import glob
+    import os
+
+    from webxtract.audit import run_extraction_job
+
+    pages = spark.read.parquet(corpus[0]).limit(40)
+    out, aud = str(tmp_path / "out"), str(tmp_path / "audit")
+    run_extraction_job(pages, out, aud, "r1", spark, num_partitions=2)
+    for f in glob.glob(os.path.join(aud, "*.parquet")):
+        os.remove(f)
+    m = run_extraction_job(pages, out, aud, "r1", spark, num_partitions=2)
+    assert m["urls"] == 0
+    assert m["metrics_errors"] and "r1" in m["metrics_errors"][0]
+    assert spark.read.parquet(out).count() == 40
+    assert _audit_of(spark, aud, "r1") == _run_groupby(spark, out, "r1")
+    assert all(r.wall_ms is None for r in spark.read.parquet(aud).collect())
+
+
+def test_audited_stream_replay_leaves_output_and_audit(spark, corpus, tmp_path):
+    """A microbatch replayed after its commit record is lost (the
+    stream died after foreachBatch returned) writes nothing again:
+    output files and audit rows are unchanged."""
+    import os
+
+    from webxtract.streaming import start_audited_extraction_stream
+
+    src = spark.read.parquet(corpus[0]).limit(60)
+    drops, out = str(tmp_path / "drops"), str(tmp_path / "out")
+    aud, ckpt = str(tmp_path / "audit"), str(tmp_path / "ckpt")
+    src.coalesce(1).write.parquet(drops)
+
+    def snapshot() -> tuple:
+        files = sorted(
+            os.path.relpath(os.path.join(d, f), out)
+            for d, _, fs in os.walk(out) for f in fs if f.endswith(".parquet")
+        )
+        return files, sorted(spark.read.parquet(aud).collect())
+
+    start_audited_extraction_stream(spark, drops, out, aud, ckpt).awaitTermination(300)
+    before = snapshot()
+    assert spark.read.parquet(out).count() == 60
+    assert _audit_of(spark, aud, "batch-0") == _run_groupby(spark, out, "batch-0")
+    commit = os.path.join(ckpt, "commits", "0")
+    os.remove(commit)
+    os.remove(os.path.join(ckpt, "commits", ".0.crc"))
+    start_audited_extraction_stream(spark, drops, out, aud, ckpt).awaitTermination(300)
+    assert os.path.exists(commit)  # batch 0 ran again
+    assert snapshot() == before
+
+
+def test_batch_and_stream_share_one_audit_table(spark, corpus, tmp_path):
+    """The batch job and the audited stream commit into one flat audit
+    table that reads back as one frame; the stream's rows carry their
+    write tasks' walls."""
+    from webxtract.audit import run_extraction_job
+    from webxtract.streaming import start_audited_extraction_stream
+
+    pages = spark.read.parquet(corpus[0])
+    drops, aud = str(tmp_path / "drops"), str(tmp_path / "audit")
+    run_extraction_job(pages.limit(30), str(tmp_path / "bout"), aud, "b1", spark,
+                       num_partitions=2)
+    pages.limit(50).coalesce(1).write.parquet(drops)
+    sout = str(tmp_path / "sout")
+    start_audited_extraction_stream(
+        spark, drops, sout, aud, str(tmp_path / "ckpt")
+    ).awaitTermination(300)
+
+    rows = spark.read.parquet(aud).collect()
+    by_run: dict = {}
+    for r in rows:
+        by_run.setdefault(r.run_id, []).append(r)
+    assert set(by_run) == {"b1", "batch-0"}
+    assert sum(r.url_count for r in by_run["b1"]) == 30
+    assert sum(r.url_count for r in by_run["batch-0"]) == 50
+    assert _audit_of(spark, aud, "batch-0") == _run_groupby(spark, sout, "batch-0")
+    assert all(r.wall_ms is not None and r.wall_ms > 0 for r in rows)
+
+
+def test_audited_stream_logs_metrics_errors(spark, corpus, tmp_path, monkeypatch, caplog):
+    """A microbatch whose wall read fails still commits, with NULL
+    wall_ms, and logs its metrics_errors at WARNING with its run_id."""
+    import logging
+
+    from webxtract import audit as A
+    from webxtract.streaming import start_audited_extraction_stream
+
+    def broken(spark, group):
+        raise RuntimeError("status store unavailable")
+
+    drops, aud = str(tmp_path / "drops"), str(tmp_path / "audit")
+    spark.read.parquet(corpus[0]).limit(20).coalesce(1).write.parquet(drops)
+    monkeypatch.setattr(A, "_write_stage_attempts", broken)
+    with caplog.at_level(logging.WARNING, logger="webxtract.streaming"):
+        start_audited_extraction_stream(
+            spark, drops, str(tmp_path / "out"), aud, str(tmp_path / "ckpt")
+        ).awaitTermination(300)
+    rows = spark.read.parquet(aud).collect()
+    assert sum(r.url_count for r in rows) == 20
+    assert all(r.wall_ms is None for r in rows)
+    assert any(
+        "batch-0" in r.getMessage() and "status store unavailable" in r.getMessage()
+        for r in caplog.records
+    )
+
+
+def test_audit_rows_and_run_overwrite_live_in_audit():
+    """One commit body: only webxtract/audit.py builds audit rows or
+    sets a partition overwrite mode."""
+    from pathlib import Path
+
+    import webxtract
+
+    root = Path(webxtract.__file__).parent
+    found = [
+        f"{p.relative_to(root)}: {pat}"
+        for p in sorted(root.rglob("*.py"))
+        if p.relative_to(root).as_posix() != "audit.py"
+        for pat in ("audit_rows(", "partitionOverwriteMode")
+        if pat in p.read_text(encoding="utf-8")
+    ]
+    assert found == []
+
+
 def test_streaming_extraction(spark, corpus, tmp_path):
     from webxtract.streaming import start_extraction_stream
 
@@ -444,6 +611,35 @@ def test_sessionize_stream_out_of_order_merge(spark, tmp_path):
     assert closed["n_events"] == 3
 
 
+def test_sessionize_stream_past_2262(spark, tmp_path):
+    """Events past pandas' nanosecond range (2262-04-11) sessionize:
+    event times cross the pandas operator as epoch micros."""
+    import datetime as dt
+
+    from webxtract.streaming import sessionize_stream
+
+    t0 = dt.datetime(2300, 1, 1, 0, 0, 0)
+    mins = lambda m: t0 + dt.timedelta(minutes=m)  # noqa: E731
+    schema = "user_id long, event_id long, ts timestamp, value double"
+    drops = str(tmp_path / "far")
+    # the third event is past the 30 min gap and closes the first session
+    rows = [(7, 1, mins(0), 1.5), (7, 2, mins(10), 2.0), (7, 3, mins(120), 1.0)]
+    spark.createDataFrame(rows, schema=schema).coalesce(1).write.parquet(drops)
+    stream = spark.readStream.schema(schema).parquet(drops)
+    q = (
+        sessionize_stream(stream, gap_seconds=1800, watermark="30 minutes")
+        .writeStream.format("memory")
+        .queryName("sess_far")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+    got = [tuple(r) for r in spark.table("sess_far").collect()]
+    assert got == [(7, mins(0), mins(10), 2, 3.5)]
+
+
 def test_sessionize_stream_stateful(spark, tmp_path):
     """applyInPandasWithState sessionizer: sessions that span microbatch
     boundaries continue via state; a session closes (and emits) as soon
@@ -567,8 +763,8 @@ def test_windowed_event_counts_batch_exact(spark):
     }
 
 
-def test_multimodal_sniff_and_features(spark):
-    from webxtract.multimodal import extract_features, sniff_media_expr
+def test_multimodal_sniff_media_expr(spark):
+    from webxtract.multimodal import sniff_media_expr
 
     rows = [
         ("u1", b"\x89PNG\r\n\x1a\n" + b"\x00" * 20),
@@ -591,11 +787,6 @@ def test_multimodal_sniff_and_features(spark):
     assert meta["u4"]["format"] == "mp4" and meta["u4"]["media_kind"] == "video"
     assert meta["u5"]["format"] == "pdf"
     assert meta["u6"]["format"] == "unknown"
-
-    feats = extract_features(df).toPandas().set_index("url")
-    assert feats.loc["u1", "feature"] is not None
-    assert len(bytes(feats.loc["u1", "feature"])) == 16
-    assert feats.loc["u7", "feature"] is None  # undecodable -> null, no crash
 
 
 def test_resize_and_frame_sample(spark):
@@ -661,29 +852,6 @@ def test_lsh_topk_recall_vs_bruteforce(spark):
     top = set(bf["vec_id"])
     assert len(set(multi["vec_id"]) & top) >= len(set(ann["vec_id"]) & top)
     assert 0 in set(multi["vec_id"])
-
-
-def test_posting_list_cap_bounds_hot_shingle(spark):
-    """A shingle shared by every document must not generate quadratic
-    candidate pairs when the df-cap is on (dedup.ngram_jaccard_pairs
-    max_doc_freq)."""
-    from webxtract.dedup import ngram_jaccard_pairs
-
-    # 40 docs: all share the hot prefix "common boiler plate words";
-    # docs 0/1 additionally share a long rare tail (true near-dups).
-    rows = []
-    for i in range(40):
-        tail = "alpha beta gamma delta epsilon zeta" if i < 2 else f"unique{i} " * 6
-        rows.append((i, f"common boiler plate words {tail}"))
-    df = spark.createDataFrame(rows, schema="doc_id long, text string")
-
-    capped = ngram_jaccard_pairs(df, shingle_k=3, threshold=0.5, max_doc_freq=5)
-    got = {(r["a"], r["b"]) for r in capped.collect()}
-    assert got == {(0, 1)}  # only the true near-dup survives
-
-    uncapped = ngram_jaccard_pairs(df, shingle_k=3, threshold=0.0, max_doc_freq=None)
-    # without the cap the hot shingles produce all-pairs candidates
-    assert uncapped.count() == 40 * 39 / 2
 
 
 def test_near_dup_bucket_cap(spark):
@@ -804,9 +972,8 @@ def _py_simhash(text: str, bits: int = 32) -> int:
 
 def test_simhash_near_dup_planted_bit_flip(spark):
     """A planted pair at hamming distance exactly 1 is found by the
-    banded near-dup operator (and missed by hamming-0 grouping); an
-    unrelated far document is not paired."""
-    from webxtract.dedup import simhash_dedup, simhash_near_dup_pairs
+    banded near-dup operator; an unrelated far document is not paired."""
+    from webxtract.dedup import simhash_near_dup_pairs
 
     base = "the quick brown fox jumps over the lazy dog near the river bank today"
     # search for an appended token that flips exactly one fingerprint bit
@@ -830,9 +997,6 @@ def test_simhash_near_dup_planted_bit_flip(spark):
         for r in simhash_near_dup_pairs(df, max_hamming=1).collect()
     }
     assert pairs == {(0, 1): 1}
-    # hamming-0 grouping treats them as distinct
-    groups = simhash_dedup(df).collect()
-    assert all(g["dup_count"] == 1 for g in groups)
 
 
 def test_minhash_banding_finds_planted_near_dup(spark):

@@ -132,7 +132,6 @@ BMP = b"BM" + b"x" * 3000
 PDF = b"%PDF-1.4\n%%PAGE 1\none\n%%PAGE 2\ntwo"
 MEDIA = {
     "normalize_media": lambda d: multimodal.normalize_media(d),
-    "extract_features": lambda d: multimodal.extract_features(d),
     "resize_images": lambda d: multimodal.resize_images(d),
     "sample_frames": lambda d: multimodal.sample_frames(d),
     "explode_pdf_pages": lambda d: rasterize.explode_pdf_pages(d, payload_col="payload"),

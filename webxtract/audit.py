@@ -2,6 +2,13 @@
 with salting for skewed hosts, per-partition lineage/metrics audit
 rows, and idempotent resume via anti-join against committed output.
 
+``commit_run`` is the one write-and-audit body: the batch job
+(``run_extraction_job``) and the audited stream's ``foreachBatch`` both
+commit through it into a ``run_id``-partitioned output and one flat
+audit table. A ``run_id`` names one commit: once its ``run_id=``
+partition exists nothing is written under it again, and its audit rows
+are appended only if the audit table holds none for it.
+
 On a real cluster the output + audit tables are Iceberg and resume uses
 snapshot ids; in this sandbox both are parquet directories and the
 lineage token is the run_id — the dataflow (observe-style metric
@@ -106,27 +113,17 @@ def run_extraction_job(
     transform=None,
 ) -> dict:
     """The production job shape: resume -> salt/partition -> extract ->
-    write output (+ run_id lineage column, hive-partitioned by run) ->
-    audit THIS run only. Returns this run's metrics.
+    ``commit_run``. Returns this run's metrics.
 
-    Run-level stats come from ``df.observe`` on the write itself — zero
-    extra passes (SURVEY.md §2.1-S5). The per-partition audit rows are
-    computed from a read-back of this run's ``run_id=`` directory alone
-    (never a listing or rescan of the full history: at 10^12 accumulated
-    urls a full-table re-aggregation per incremental run is a
-    non-starter). A run that writes no rows (an all-resumed rerun) has
-    no such directory and appends nothing to the audit table. Each row's
-    ``wall_ms`` is its write task's duration from the driver's status
-    store. ``metrics_errors`` names every metric read that failed or
-    came back short (empty on success); the job still commits, with
-    NULL ``wall_ms`` where a wall is missing.
+    The resume anti-join skips urls committed by any earlier run, so a
+    failed run is finished by a rerun under a fresh ``run_id``. A rerun
+    under a ``run_id`` that already committed writes nothing and only
+    restores that run's audit rows if they are missing (``commit_run``).
 
     ``transform`` swaps the per-page job body (default: extract_pages;
     the CLI passes the full validation pipeline for --mode pipeline) —
     it must preserve the url / n_bytes / parse_failure columns the
     observe stats and audit aggregation read."""
-    from pyspark.sql import Observation
-
     from webxtract.ops.extract import extract_pages
 
     if transform is None:
@@ -134,43 +131,93 @@ def run_extraction_job(
     todo = resume_filter(pages, output_path, spark)
     if num_partitions:
         todo = partition_by_url(todo, num_partitions)
+    return commit_run(transform(todo), output_path, audit_path, run_id, spark)
+
+
+def commit_run(
+    frame: DataFrame,
+    output_path: str,
+    audit_path: str,
+    run_id: str,
+    spark: SparkSession,
+) -> dict:
+    """Commit ``frame`` as run ``run_id``: publish it as the output's
+    ``run_id=`` partition and append one audit row per write task to the
+    flat audit table. The batch job and the audited stream (one call
+    per microbatch, ``run_id`` = ``batch-<id>``) both commit through
+    here, so they can share one audit table.
+
+    A ``run_id`` names one commit. The output partition is published by
+    a dynamic partition overwrite, one rename, so its directory exists
+    only once the whole write committed. If it already exists, nothing
+    is written again, and the audit rows are appended only when the
+    audit table holds none for this ``run_id``: an attempt that died
+    between the two writes gets its audit rows from a read-back of the
+    committed partition, with NULL ``wall_ms`` (the write's task walls
+    went with that attempt) and the reason in ``metrics_errors``. A
+    scheduler retry under the same id or a replayed microbatch thus
+    leaves output and audit as one commit left them.
+
+    Run-level stats come from ``df.observe`` on the write itself — zero
+    extra passes (SURVEY.md §2.1-S5); they count what this call wrote,
+    so an already-committed ``run_id`` reports 0 urls. The audit rows
+    are a groupBy over a read-back of this run's ``run_id=`` directory
+    alone (never a listing or rescan of the full history: at 10^12
+    accumulated urls a full-table re-aggregation per incremental run is
+    a non-starter). A run that writes no rows has no such directory and
+    appends nothing to the audit table. Each row's ``wall_ms`` is its
+    write task's duration from the driver's status store.
+    ``metrics_errors`` names every metric read that failed or came back
+    short (empty on success); the run still commits, with NULL
+    ``wall_ms`` where a wall is missing."""
+    from pyspark.sql import Observation
+
     extracted = (
-        transform(todo)
-        .withColumn("run_id", F.lit(run_id))
+        frame.withColumn("run_id", F.lit(run_id))
         # recorded at write time: spark_partition_id() in the write
         # stage IS the write task index, so the read-back audit can
         # group by the producing task and look up its scheduler wall time
         .withColumn("partition_id", F.spark_partition_id())
     )
-
-    obs = Observation(f"webxtract-{run_id}")
-    observed = extracted.observe(
-        obs,
-        F.count(F.lit(1)).alias("urls"),
-        F.coalesce(F.sum("n_bytes"), F.lit(0)).alias("bytes_in"),
-        F.coalesce(F.sum(F.col("parse_failure").cast("long")), F.lit(0)).alias(
-            "failures"
-        ),
-    )
-    group = f"webxtract-write-{run_id}"
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "extraction write", False)
-    try:
-        observed.write.mode("append").partitionBy("run_id").parquet(output_path)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    stats = obs.get
-    metrics_errors: list[str] = []
     # read back only this run's partition directory, named the way the
     # writer names it, and only the columns the audit aggregates, under
-    # the schema the write used; a run that wrote no rows has no such
-    # directory and appends no audit file
+    # the schema the write used
     catalog_utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     run_dir = f"{output_path.rstrip('/')}/run_id={catalog_utils.escapePathName(run_id)}"
+    stats = {"urls": 0, "bytes_in": 0, "parse_failures": 0}
+    metrics_errors: list[str] = []
+    walls: dict[int, float] = {}
     if _exists(run_dir, spark):
+        if _audited(audit_path, run_id, spark):
+            return {"run_id": run_id, **stats, "metrics_errors": metrics_errors}
+        metrics_errors.append(
+            f"audit restored from the committed run_id={run_id}: its write's task walls are gone"
+        )
+    else:
+        obs = Observation(f"webxtract-{run_id}")
+        observed = extracted.observe(
+            obs,
+            F.count(F.lit(1)).alias("urls"),
+            F.coalesce(F.sum("n_bytes"), F.lit(0)).alias("bytes_in"),
+            F.coalesce(F.sum(F.col("parse_failure").cast("long")), F.lit(0)).alias(
+                "parse_failures"
+            ),
+        )
+        group = f"webxtract-write-{run_id}"
+        sc = spark.sparkContext
+        # a foreachBatch call runs on the stream's thread, whose own job
+        # group is put back after the write
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            _overwrite_run_partition(observed, output_path)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", outer)
+        stats = obs.get
+        if not _exists(run_dir, spark):
+            return {"run_id": run_id, **stats, "metrics_errors": metrics_errors}
         # the output is committed: a task-wall read that fails leaves
-        # wall_ms NULL and is reported in metrics_errors, never fails the job
-        walls: dict[int, float] = {}
+        # wall_ms NULL and is reported in metrics_errors, never fails the run
         try:
             walls, n_tasks = _task_walls_for_group(spark, group)
             if len(walls) < n_tasks:
@@ -180,20 +227,34 @@ def run_extraction_job(
         except Exception as e:
             detail = " ".join(str(e).split())[:300]
             metrics_errors.append(f"task walls: {type(e).__name__}: {detail}")
-        read_back = StructType(
-            [extracted.schema[c] for c in ("partition_id", "n_bytes", "parse_failure")]
-        )
-        this_run = spark.read.schema(read_back).parquet(run_dir)
-        audit = audit_rows(this_run, run_id, wall_by_pid=walls)
-        audit.write.mode("append").parquet(audit_path)
+    read_back = StructType(
+        [extracted.schema[c] for c in ("partition_id", "n_bytes", "parse_failure")]
+    )
+    this_run = spark.read.schema(read_back).parquet(run_dir)
+    audit_rows(this_run, run_id, wall_by_pid=walls).write.mode("append").parquet(audit_path)
+    return {"run_id": run_id, **stats, "metrics_errors": metrics_errors}
 
-    return {
-        "run_id": run_id,
-        "urls": stats["urls"],
-        "bytes_in": stats["bytes_in"],
-        "parse_failures": stats["failures"],
-        "metrics_errors": metrics_errors,
-    }
+
+def _overwrite_run_partition(df: DataFrame, path: str) -> None:
+    """Write ``df`` (which carries a ``run_id`` column) to ``path``,
+    replacing only the run_id partitions it holds. Each partition is
+    written under a staging directory and published by one rename, so a
+    reader never sees half of it and a replayed write replaces instead
+    of appending duplicates (foreachBatch is at-least-once)."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("run_id")
+        .parquet(path)
+    )
+
+
+def _audited(audit_path: str, run_id: str, spark: SparkSession) -> bool:
+    """Whether the audit table holds any row of ``run_id``."""
+    if not _exists(audit_path, spark):
+        return False
+    rows = spark.read.schema(AUDIT_SCHEMA).parquet(audit_path)
+    return not rows.filter(F.col("run_id") == run_id).isEmpty()
 
 
 def _task_walls_for_group(

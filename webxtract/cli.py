@@ -22,9 +22,12 @@ Usage:
 Re-running with the same --output is idempotent: the job anti-joins
 committed urls and processes only the remainder (audit.resume_filter),
 so a failed run is resumed by resubmitting the identical command with
-a fresh --run-id. Prints ONE JSON metrics line (urls, bytes_in,
-parse_failures) on success — the batch analog of the reference's
-per-request processing_time_seconds field (ocr.py:80).
+a fresh --run-id. A --run-id names one commit (audit.commit_run): a
+resubmission under an id that already committed writes nothing and
+only restores that run's audit rows if they are missing. Prints ONE
+JSON metrics line (urls, bytes_in, parse_failures, metrics_errors) on
+success — the batch analog of the reference's per-request
+processing_time_seconds field (ocr.py:80).
 """
 
 from __future__ import annotations
@@ -46,7 +49,9 @@ def _parse_args(argv: list[str]) -> argparse.Namespace:
                         "this snapshot id (requires an iceberg: --input)")
     p.add_argument("--output", help="extracted-rows parquet path (run_id-partitioned)")
     p.add_argument("--audit", help="audit-table parquet path")
-    p.add_argument("--run-id", help="lineage id for this run (fresh per attempt)")
+    p.add_argument("--run-id", help="lineage id naming one commit: use a fresh id to "
+                        "resume a failed run; an id that already committed "
+                        "writes nothing again")
     p.add_argument("--mode", choices=["extract", "pipeline"], default="extract",
                    help="extract = text extraction only; pipeline = + fields/"
                         "detection/fake/validation")

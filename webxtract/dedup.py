@@ -243,16 +243,6 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact-simhash duplicate groups (hamming distance 0): one shuffle
-    on the 32-bit fingerprint."""
-    return (
-        df.select(simhash_expr(F.col(text_col)).alias("simhash"), F.col(id_col))
-        .groupBy("simhash")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("dup_count"))
-    )
-
-
 def _band_vals_expr(sh: Column, max_hamming: int, bits: int) -> Column:
     """The ``max_hamming + 1`` bit-bands of a simhash as an array —
     any pair within the hamming budget agrees exactly on at least one
@@ -598,64 +588,6 @@ def dedup_components(
             F.col("id").cast("string"), F.col("component").cast("string")
         )
     return out
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 3,
-    threshold: float = 0.5,
-    max_doc_freq: int | None = 100,
-) -> DataFrame:
-    """Exact n-gram Jaccard between candidate pairs found by sharing at
-    least one shingle hash (inverted-index join on shingle, the
-    suffix-array-free exact method). Quadratic only within a posting
-    list — and posting lists are CAPPED: shingles appearing in more
-    than ``max_doc_freq`` documents are dropped from candidate
-    generation (a df-cap "stop shingle" rule; such shingles are
-    boilerplate and near-dup pairs sharing ONLY them are below any
-    useful threshold anyway). Without the cap one hot shingle at
-    10^12 docs makes a quadratic posting-list self-join.
-
-    Recall contract of the default cap: a pair whose EVERY shared
-    shingle is corpus-common (> max_doc_freq docs) never becomes a
-    candidate, even above ``threshold`` — by construction such a pair
-    is made of boilerplate. Callers needing exhaustive recall on small
-    corpora pass ``max_doc_freq=None`` (the explicit opt-in)."""
-    df = df.repartition(F.col(id_col))
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        shingle_hashes_expr(F.col(text_col), shingle_k).alias("shingles"),
-    )
-    posting = sh.select("id", F.explode("shingles").alias("shingle"))
-    if max_doc_freq is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("shingle")
-        posting = (
-            posting.withColumn("__df", F.count(F.lit(1)).over(w))
-            .filter(F.col("__df") <= max_doc_freq)
-            .drop("__df")
-        )
-    cand = (
-        posting.alias("l")
-        .join(
-            posting.alias("r"),
-            (F.col("l.shingle") == F.col("r.shingle")) & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
-    joined = (
-        cand.join(sh.withColumnRenamed("id", "a").withColumnRenamed("shingles", "sa"), "a")
-        .join(sh.withColumnRenamed("id", "b").withColumnRenamed("shingles", "sb"), "b")
-    )
-    inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
-    union = F.size(F.col("sa")) + F.size(F.col("sb")) - inter
-    return joined.select(
-        "a", "b", F.round(inter / union.cast("double"), 6).alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
 
 
 # ------------------------------------------------- substring-level dedup

@@ -3,10 +3,11 @@ columns with typed metadata.
 
 The Spark-side plumbing (schemas, magic-byte sniffing, the per-row
 ``mapInArrow`` kernels of ``kernels.doc_rows``, partitioning by media
-kind) is real and tested; the actual decode/feature kernels are
-STUBBED behind deterministic fakes because the codec libraries (Pillow/ffmpeg/...)
-are not in this container — mirroring the reference's own
-``is_available()`` capability probes (image_ocr.py:82-88).
+kind) is real and tested; the actual codec kernels (convert, resize,
+frame sampling) are STUBBED behind deterministic fakes because the
+codec libraries (Pillow/ffmpeg/...) are not in this container —
+mirroring the reference's own ``is_available()`` capability probes
+(image_ocr.py:82-88).
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType, IntegerType, LongType, StringType, StructField, StructType,
+    BinaryType, IntegerType, StringType, StructField, StructType,
 )
 
 from webxtract.kernels import doc_rows
@@ -36,16 +37,6 @@ MAGIC = {
     "mp3": b"ID3",
     "mp4_ftyp": b"ftyp",  # at offset 4
 }
-
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("media_kind", StringType(), True),
-        StructField("feature", BinaryType(), True),      # stub: digest bytes
-        StructField("n_bytes", LongType(), True),
-    ]
-)
-
 
 def sniff_media_expr(payload_col: str = "payload"):
     """Pure-expression magic-byte format sniff (no Python)."""
@@ -182,36 +173,6 @@ def normalize_media(df: DataFrame, payload_col: str = "payload") -> DataFrame:
         NORMALIZED_SCHEMA.fields[1:], lambda: rows_of,
     )
     return passthrough.unionByName(converted)
-
-
-def _decode_stub(payload: bytes) -> bytes:
-    """STUB decode/feature-extract kernel. A real deployment drops in
-    Pillow/torchvision/ffmpeg here; the sandbox uses a deterministic
-    digest so the batch shape, schema and partitioning are exercised
-    end-to-end. Raises for genuinely undecodable (empty) payloads the
-    way a real decoder would."""
-    if not payload:
-        raise ValueError("empty media payload")
-    return hashlib.sha256(payload).digest()[:16]
-
-
-def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """binary media -> fixed-size feature rows: one ``mapInArrow``
-    (``kernels.doc_rows``) over the payload and its expression-sniffed
-    kind and size; ``url`` comes back exactly."""
-    meta = sniff_media_expr(payload_col)
-
-    def rows_of(payload: bytes | None, kind: str, n_bytes: int) -> list[tuple]:
-        try:
-            feature = _decode_stub(payload or b"")
-        except ValueError:
-            feature = None
-        return [(kind, feature, n_bytes)]
-
-    return doc_rows(
-        df, ["url"], [payload_col, meta["media_kind"], meta["n_bytes"]],
-        FEATURE_SCHEMA.fields[1:], lambda: rows_of,
-    )
 
 
 # ------------------------------------------------------- image resize

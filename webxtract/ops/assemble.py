@@ -1,31 +1,15 @@
-"""Span/page assembly as pure Catalyst column expressions (operators
-E1-assembly and E5 from SURVEY.md §2.2).
+"""Page assembly as a pure Catalyst column expression (operator E5
+from SURVEY.md §2.2).
 
-These are the expression-side twins of what the extraction UDFs do in
-Python — used on the native-text fast path, in driver-contract queries
-and in tests that cross-check UDF output.
+The expression-side twin of what the extraction kernel does in Python —
+used in driver-contract queries and in tests that cross-check the
+kernel's output.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def span_join_expr(spans: Column | str) -> Column:
-    """E1 full-text assembly: ``" ".join(block.text for block in spans)``
-    (reference image_ocr.py:77)."""
-    return F.concat_ws(" ", F.transform(spans, lambda s: s["text"]))
-
-
-def avg_confidence_expr(spans: Column | str) -> Column:
-    """E1 average confidence = total/len, 0.0 on empty
-    (reference image_ocr.py:78)."""
-    spans = F.col(spans) if isinstance(spans, str) else spans
-    return F.when(F.size(spans) > 0,
-                  F.aggregate(spans, F.lit(0.0),
-                              lambda acc, s: acc + s["confidence"])
-                  / F.size(spans)).otherwise(F.lit(0.0))
 
 
 def page_concat_expr(page_texts: Column | str) -> Column:

@@ -11,11 +11,15 @@ analog in this sandbox).
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from webxtract.schemas import PAGES_SCHEMA
+
+log = logging.getLogger(__name__)
 
 
 def read_page_stream(
@@ -44,19 +48,6 @@ def _start_parquet_sink(
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
-    )
-
-
-def _overwrite_run_partition(df: DataFrame, path: str) -> None:
-    """Write ``df`` (which carries a ``run_id`` column) to ``path``,
-    replacing only the run_id partitions it holds: a replayed
-    microbatch overwrites its own partition instead of appending
-    duplicates (foreachBatch is at-least-once)."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("run_id")
-        .parquet(path)
     )
 
 
@@ -105,38 +96,30 @@ def start_audited_extraction_stream(
     checkpoint_path: str,
 ) -> StreamingQuery:
     """Extraction stream with the batch job's audit contract: every
-    microbatch appends output partitioned by run_id (= batch-<id>) AND
-    writes its per-partition lineage/metrics rows to the audit table —
-    the streaming form of audit.run_extraction_job.
+    microbatch is one ``audit.commit_run`` under ``run_id`` =
+    ``batch-<id>``, so its output, observed stats, task walls and flat
+    audit rows are those of a batch run, and the stream can share its
+    audit table with ``audit.run_extraction_job``. A non-empty
+    ``metrics_errors`` is logged at WARNING with the ``run_id``.
 
     Replay safety: a recovered microbatch re-runs with the SAME batch
-    id, and BOTH writes use dynamic partition overwrite on run_id, so
-    the replayed batch replaces its own output partition AND its own
-    audit partition instead of appending duplicates — foreachBatch is
-    at-least-once, idempotence must come from the sink."""
-    from webxtract.audit import audit_rows
+    id. ``commit_run`` publishes a ``run_id=`` partition with one
+    rename and writes nothing under a ``run_id`` that already has one,
+    so a replayed batch leaves output and audit as they were, and one
+    that died between its two writes only gets its missing audit rows
+    (foreachBatch is at-least-once; idempotence comes from the sink)."""
+    from webxtract.audit import commit_run
     from webxtract.ops.extract import extract_pages
 
     stream = read_page_stream(spark, input_path)
-    extracted = extract_pages(stream)
 
-    def _write_batch(batch_df, batch_id):  # noqa: ANN001
-        run_id = f"batch-{batch_id}"
-        out = (
-            batch_df.withColumn("run_id", F.lit(run_id))
-            .withColumn("partition_id", F.spark_partition_id())
-            .persist()
-        )
-        try:
-            _overwrite_run_partition(out, output_path)
-            _overwrite_run_partition(
-                audit_rows(out.drop("run_id"), run_id), audit_path
-            )
-        finally:
-            out.unpersist()
+    def _commit_batch(batch_df, batch_id):  # noqa: ANN001
+        m = commit_run(batch_df, output_path, audit_path, f"batch-{batch_id}", spark)
+        if m["metrics_errors"]:
+            log.warning("run_id %s: metrics_errors %s", m["run_id"], m["metrics_errors"])
 
     return (
-        extracted.writeStream.foreachBatch(_write_batch)
+        extract_pages(stream).writeStream.foreachBatch(_commit_batch)
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
         .start()
@@ -179,8 +162,10 @@ def windowed_event_counts(
 # ------------------------------------------- stateful sessionization
 
 
-SESSION_OUT_SCHEMA = (
-    "user_id bigint, session_start timestamp, session_end timestamp, "
+# the operator's output: session bounds in epoch micros, turned into
+# timestamps after it (pandas timestamps stop at 2262-04-11)
+SESSION_US_SCHEMA = (
+    "user_id bigint, start_us bigint, end_us bigint, "
     "n_events bigint, total_value double"
 )
 # epoch-micros + counters; kept flat and integer-typed so state rows are
@@ -206,6 +191,11 @@ def sessionize_stream(
     (exactly the semantics a continuous pipeline wants; AvailableNow
     catch-up runs pick it up on the next increment).
 
+    Event times enter and leave the operator as epoch micros
+    (``unix_micros`` before it, ``timestamp_micros`` after it), so
+    pandas never holds a timestamp and any Spark timestamp, including
+    one past 2262, sessionizes.
+
     Watermark discipline: keep ``watermark`` <= ``gap_seconds`` (the
     default aligns them). Within that bound every admitted late event
     satisfies ``us >= last - gap``, so min/max merging into the single
@@ -228,8 +218,8 @@ def sessionize_stream(
             yield pd.DataFrame(
                 {
                     "user_id": [user_id],
-                    "session_start": [pd.Timestamp(start, unit="us")],
-                    "session_end": [pd.Timestamp(last, unit="us")],
+                    "start_us": [start],
+                    "end_us": [last],
                     "n_events": [n],
                     "total_value": [round(total, 6)],
                 }
@@ -237,22 +227,21 @@ def sessionize_stream(
             return
 
         rows = pd.concat(list(pdf_iter), ignore_index=True)
-        rows = rows.sort_values(["ts", "event_id"])
+        rows = rows.sort_values(["us", "event_id"])
         if state.exists:
             start, last, n, total = state.get
         else:
             start = last = None
             n, total = 0, 0.0
 
-        out = {k: [] for k in ("user_id", "session_start", "session_end", "n_events", "total_value")}
-        for ts, value in zip(rows["ts"], rows["value"]):
-            us = int(ts.value // 1000)  # pandas ns -> us
+        out = {k: [] for k in ("user_id", "start_us", "end_us", "n_events", "total_value")}
+        for us, value in zip(rows["us"].tolist(), rows["value"]):
             if start is None:
                 start, last, n, total = us, us, 1, float(value)
             elif us - last > gap_us:
                 out["user_id"].append(user_id)
-                out["session_start"].append(pd.Timestamp(start, unit="us"))
-                out["session_end"].append(pd.Timestamp(last, unit="us"))
+                out["start_us"].append(start)
+                out["end_us"].append(last)
                 out["n_events"].append(n)
                 out["total_value"].append(round(total, 6))
                 start, last, n, total = us, us, 1, float(value)
@@ -262,8 +251,8 @@ def sessionize_stream(
                 # cannot hold — emit it as its own closed session
                 # (best-effort, see docstring)
                 out["user_id"].append(user_id)
-                out["session_start"].append(pd.Timestamp(us, unit="us"))
-                out["session_end"].append(pd.Timestamp(us, unit="us"))
+                out["start_us"].append(us)
+                out["end_us"].append(us)
                 out["n_events"].append(1)
                 out["total_value"].append(round(float(value), 6))
             else:
@@ -282,15 +271,26 @@ def sessionize_stream(
         if out["user_id"]:
             yield pd.DataFrame(out)
 
+    timed = events.withWatermark("ts", watermark)
+    # the micros carry ts's watermark metadata, which marks the operator's
+    # input as event-timed (an EventTimeTimeout requires it)
+    us = F.unix_micros("ts").alias("us", metadata=timed.schema["ts"].metadata)
     return (
-        events.withWatermark("ts", watermark)
+        timed.select("user_id", "event_id", us, "value")
         .groupBy("user_id")
         .applyInPandasWithState(
             fn,
-            SESSION_OUT_SCHEMA,
+            SESSION_US_SCHEMA,
             SESSION_STATE_SCHEMA,
             "append",
             GroupStateTimeout.EventTimeTimeout,
+        )
+        .select(
+            "user_id",
+            F.timestamp_micros("start_us").alias("session_start"),
+            F.timestamp_micros("end_us").alias("session_end"),
+            "n_events",
+            "total_value",
         )
     )
 
@@ -368,7 +368,7 @@ def start_near_dedup_stream(
     page payloads are written once and never join-shuffled (survivor
     urls rejoin the persisted batch, which AQE broadcasts — a
     microbatch is small by construction)."""
-    from webxtract.audit import _exists
+    from webxtract.audit import _exists, _overwrite_run_partition
     from webxtract.dedup import near_dedup_increment
 
     stream = read_page_stream(spark, input_path)
