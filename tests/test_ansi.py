@@ -84,11 +84,8 @@ def test_expression_layer_survives_garbage_ansi(spark):
 
     from webxtract.ops.detect_type import doc_type_expr
     from webxtract.ops.fake import fake_result_expr
-    from webxtract.ops.validators import (
-        validation_results_expr,
-        validation_summary_expr,
-        with_parsed_dates,
-    )
+    from webxtract.ops.validators import validation_results_expr, with_parsed_dates
+    from webxtract.pipeline import with_rules
     from webxtract.schemas import FIELD_NAMES
 
     bad = [
@@ -104,13 +101,15 @@ def test_expression_layer_survives_garbage_ansi(spark):
         ",",  # comma-only full_name (empty comma part)
         "NoSpacesSingleWord",
     ]
-    rows = [tuple([i] + [v] * len(FIELD_NAMES)) for i, v in enumerate(bad)]
+    rows = [tuple([i, None] + [v] * len(FIELD_NAMES)) for i, v in enumerate(bad)]
     df = spark.createDataFrame(
-        rows, schema=["doc_id"] + list(FIELD_NAMES)
+        rows,
+        "doc_id int, extracted_text string, " + ", ".join(f"{f} string" for f in FIELD_NAMES),
     )
 
     def run():
-        fields = with_parsed_dates(df)
+        # the summary comes from the pipeline's rule kernel
+        fields = with_parsed_dates(with_rules(df, "2026-01-15"))
         dt = doc_type_expr()
         fd = fake_result_expr()
         vr = validation_results_expr(
@@ -118,26 +117,21 @@ def test_expression_layer_survives_garbage_ansi(spark):
         )
         # the type-specific result, after the 5 base validators
         ts = F.try_element_at(vr, F.lit(6))
-        step = fields.select(
+        s = F.col("validation_summary")
+        out = fields.select(
             "doc_id",
             dt["document_type"].alias("document_type"),
             dt["confidence"].alias("dt_conf"),
             F.array_join(dt["detected_features"], "; ").alias("features"),
             fd["is_fake"].alias("is_fake"),
             fd["confidence"].alias("fk_conf"),
-            vr.alias("results"),
+            s["overall_status"].alias("overall_status"),
+            s["validation_score"].alias("validation_score"),
             # to_json defeats column pruning: the FULL result structs —
             # including every details-map expression (ages, Luhn,
             # DOB-encoding, version messages) — must evaluate under ANSI
             F.to_json(vr).alias("results_json"),
             F.to_json(ts).alias("ts_json"),
-        )
-        s = validation_summary_expr(F.col("results"))
-        out = step.select(
-            "doc_id", "document_type", "dt_conf", "features", "is_fake",
-            "fk_conf", s["overall_status"].alias("overall_status"),
-            s["validation_score"].alias("validation_score"),
-            "results_json", "ts_json",
         )
         return _snapshot(out)
 

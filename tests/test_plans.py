@@ -124,12 +124,55 @@ def test_pipeline_battery_is_one_arrow_eval_above_the_exchange(spark, corpus):
     assert "lambdafunction" not in qe.optimizedPlan().toString().lower()
 
 
+def _above_arrow_eval(node) -> list | None:  # noqa: ANN001
+    """The nodes above the first ArrowEvalPython on the path to it (root
+    first), or None when this subtree holds none."""
+    if node.nodeName() == "ArrowEvalPython":
+        return []
+    kids = node.children()
+    for i in range(kids.size()):
+        path = _above_arrow_eval(kids.apply(i))
+        if path is not None:
+            return [node, *path]
+    return None
+
+
+def _expression_classes(expr) -> set[str]:  # noqa: ANN001
+    kids = expr.children()
+    return {expr.getClass().getSimpleName()}.union(
+        *[_expression_classes(kids.apply(i)) for i in range(kids.size())]
+    )
+
+
+def test_pipeline_projection_above_rule_kernel_only_selects(spark, corpus):
+    """Every per-document rule output comes from the rule kernel: the
+    projection above its ArrowEvalPython selects the kernel's outputs,
+    packs document_integrity and computes success, and holds no
+    conditional, counting, rounding, string-building or max expression."""
+    from webxtract.pipeline import run_pipeline
+
+    pages_path, _ = corpus
+    plan = run_pipeline(spark.read.parquet(pages_path))._jdf.queryExecution().sparkPlan()
+    above = _above_arrow_eval(plan)
+    assert above and {n.nodeName() for n in above} == {"Project"}
+    classes = set()
+    for node in above:
+        exprs = node.expressions()
+        for i in range(exprs.size()):
+            classes |= _expression_classes(exprs.apply(i))
+    assert "GetStructField" in classes and "CreateNamedStruct" in classes
+    banned = {"CaseWhen", "Size", "ArrayRemove", "Floor", "Concat", "Greatest"}
+    assert not classes & banned, sorted(classes & banned)
+
+
 def test_pipeline_build_py4j_round_trips(spark, tmp_path):
-    """Building run_pipeline on a fresh input stays under 2,700 py4j round
-    trips, 1.25x the ~2,150 measured with every rule in the Arrow kernel
-    and PySpark's per-call call-site capture off (counted, not timed;
-    with the capture on it was ~4,450, and the expression forms of
-    detection, fake scoring and the battery cost ~39.5k and ~150k). Only
+    """Building run_pipeline on a fresh input stays under 2,190 py4j round
+    trips, 1.25x the ~1,750 measured with every per-document rule output
+    from the Arrow kernel and PySpark's per-call call-site capture off
+    (counted, not timed). With the required-field check, the validation
+    summary and the integrity result as Catalyst projections it was
+    ~2,150; with the capture on ~4,450; the expression forms of
+    detection, fake scoring and the battery cost ~39.5k and ~150k. Only
     this thread's round trips count: the session's Python-worker warm-up
     may still be running on its own thread."""
     from webxtract import pipeline as P
@@ -158,7 +201,7 @@ def test_pipeline_build_py4j_round_trips(spark, tmp_path):
         P.run_pipeline(df, run_date="2026-01-15")
     finally:
         del client.send_command
-    assert len(calls) < 2_700, len(calls)
+    assert len(calls) < 2_190, len(calls)
 
 
 def test_benchmark_overlap_broadcasts_benchmark_side(spark):

@@ -1,7 +1,7 @@
 """Property-based checks (hypothesis) for the numeric/parsing kernels
-whose edge cases are easiest to get subtly wrong: Luhn checksums,
-round-half-to-even score rounding, the 23-format tolerant date parser,
-and the shingle generator. Each property generates its cases up front
+whose edge cases are easiest to get subtly wrong: Luhn checksums, the
+23-format tolerant date parser, and the shingle generator (the
+validation score's rounding is pinned by tests/test_summary_goldens.py). Each property generates its cases up front
 and evaluates them in ONE Spark round-trip (collect of a local
 DataFrame), so the suite stays fast.
 """
@@ -44,34 +44,6 @@ def test_luhn_matches_reference_implementation():
     exp = {n: _luhn_py(n) for n in numbers}
     assert got == exp
     assert any(exp.values()) and not all(exp.values())  # both classes present
-
-
-def test_round_half_even_matches_python_on_reachable_scores(spark):
-    """The score expr must equal Python round() on every value the
-    formula (passed + 0.5*warnings)/active can actually produce
-    (active 1..6, passed+warnings <= active). Ties at 2 decimals only
-    occur at eighths (active=4), which are binary-exact — arbitrary
-    decimals like 0.005 are unreachable and deliberately out of scope
-    (there the stored double sits off the tie and Python itself rounds
-    'up')."""
-    from webxtract.ops.validators import _round_half_even_2
-
-    xs = sorted(
-        {
-            (2 * p + w) / (2 * a)
-            for a in range(1, 7)
-            for p in range(0, a + 1)
-            for w in range(0, a - p + 1)
-        }
-    )
-    df = spark.createDataFrame([(x,) for x in xs], "x double")
-    got = {
-        r["x"]: r["y"]
-        for r in df.select("x", _round_half_even_2(F.col("x")).alias("y")).collect()
-    }
-    assert 0.125 in got  # the ADVICE tie case is exercised
-    for x in xs:
-        assert abs(got[x] - round(x, 2)) < 1e-9, (x, got[x], round(x, 2))
 
 
 def test_date_parser_roundtrips_every_format(spark):

@@ -384,3 +384,38 @@ def test_integrity_result_shape(full):
                 else:
                     assert details.get("issues"), (v["validator_name"], details)
     assert seen_failed > 0
+
+
+def test_with_rules_rejects_malformed_run_date(spark):
+    """A run_date that is not a strict YYYY-MM-DD date raises ValueError
+    naming it while with_rules builds, before any Spark job; a valid one
+    gives the battery the results it gives with the date parsed by
+    Spark."""
+    from webxtract.ops.validators import validation_results_expr, with_parsed_dates
+    from webxtract.pipeline import with_rules
+
+    rows = [(name, None, *[data.get(f) for f in FIELD_NAMES])
+            for name, _venum, data, _ in VALIDATOR_CASES]
+    schema = "case string, extracted_text string, " + ", ".join(
+        f"{f} string" for f in FIELD_NAMES)
+    df = spark.createDataFrame(rows, schema)
+    sc, group = spark.sparkContext, "run-date-check"
+    sc.setJobGroup(group, "with_rules on malformed run dates")
+    try:
+        for bad in ("2026-13-45", "15/01/2026", "2026-1-15", "2026"):
+            with pytest.raises(ValueError, match=repr(bad)):
+                with_rules(df, run_date=bad)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+        got = {r["case"]: r["validation_results"]
+               for r in with_rules(df, run_date=RUN_DATE).collect()}
+        assert sc.statusTracker().getJobIdsForGroup(group)  # the probe sees jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    ruled = with_parsed_dates(with_rules(df, run_date=RUN_DATE))
+    want = {r["case"]: r["results"] for r in ruled.select(
+        "case", validation_results_expr(F.col("doc_type_enum"),
+                                        F.to_date(F.lit(RUN_DATE))).alias("results")
+    ).collect()}
+    assert len(got) == len(VALIDATOR_CASES)
+    assert got == want

@@ -25,9 +25,9 @@ from webxtract.ops.fields import field_expr
 from webxtract.ops.validators import (
     luhn_valid_expr,
     validation_results_expr,
-    validation_summary_expr,
     with_parsed_dates,
 )
+from webxtract.pipeline import with_rules
 from webxtract.schemas import FIELD_NAMES
 
 RUN_DATE = "2026-01-15"
@@ -414,19 +414,17 @@ def q_luhn_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_validation_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full battery + V-agg summary on expiry-only records: exactly one
-    active check, statically predictable summary."""
+    """Full battery + V-agg summary on expiry-only records, through the
+    pipeline's rule kernel (``with_rules``): they detect as ``unknown``,
+    so exactly one check is active and the summary is statically
+    predictable."""
     d = _t(spark, sf_dir, "documents").select("doc_id")
     expiry = F.date_add(F.to_date(F.lit(RUN_DATE)), ((F.col("doc_id") % 100) - 50).cast("int"))
-    cols = {name: F.lit(None).cast("string") for name in FIELD_NAMES}
+    cols = {name: F.lit(None).cast("string") for name in ["extracted_text", *FIELD_NAMES]}
     cols["expiry_date"] = expiry.cast("string")
-    fields = with_parsed_dates(
-        d.select("doc_id", *[c.alias(n) for n, c in cols.items()])
-    )
-    results = validation_results_expr(F.lit("unknown"), F.to_date(F.lit(RUN_DATE)))
-    step = fields.select("doc_id", results.alias("results"))
-    s = validation_summary_expr(F.col("results"))
-    return step.select(
+    fields = d.select("doc_id", *[c.alias(n) for n, c in cols.items()])
+    s = F.col("validation_summary")
+    return with_rules(fields, RUN_DATE).select(
         "doc_id",
         s["overall_status"].alias("overall_status"),
         F.round(s["validation_score"], 2).alias("validation_score"),

@@ -173,11 +173,11 @@ def _doc_type(*fields: str | None) -> tuple:
     return detect(Doc(fields))
 
 
-def doc_type_expr(prefix: str = "") -> Column:
+def doc_type_expr() -> Column:
     """The DocumentTypeInfo struct of the 13 field columns."""
-    return _doc_type(*[F.col(prefix + n) for n in FIELD_NAMES])
+    return _doc_type(*[F.col(n) for n in FIELD_NAMES])
 
 
-def with_doc_type(df: DataFrame, prefix: str = "") -> DataFrame:
+def with_doc_type(df: DataFrame) -> DataFrame:
     """Append the ``doc_type`` struct column."""
-    return df.withColumn("doc_type", doc_type_expr(prefix))
+    return df.withColumn("doc_type", doc_type_expr())

@@ -169,15 +169,13 @@ def _fake_detection(raw_text: str | None, *fields: str | None) -> tuple:
     return fake_result(Doc(fields), raw_text)
 
 
-def fake_result_expr(prefix: str = "", raw_text: Column | None = None) -> Column:
+def fake_result_expr(raw_text: Column | None = None) -> Column:
     """The FakeDocumentResult struct of the field columns (+ optional
     raw extracted text column)."""
     raw = raw_text if raw_text is not None else F.lit(None).cast("string")
-    return _fake_detection(raw, *[F.col(prefix + n) for n in FIELD_NAMES])
+    return _fake_detection(raw, *[F.col(n) for n in FIELD_NAMES])
 
 
-def with_fake_detection(
-    df: DataFrame, prefix: str = "", raw_text_col: str | None = None
-) -> DataFrame:
+def with_fake_detection(df: DataFrame, raw_text_col: str | None = None) -> DataFrame:
     raw = F.col(raw_text_col) if raw_text_col else None
-    return df.withColumn("fake_detection", fake_result_expr(prefix, raw))
+    return df.withColumn("fake_detection", fake_result_expr(raw))

@@ -1,4 +1,4 @@
-"""Structured-field extraction (operators E6/E7, SURVEY.md §2.2).
+"""Structured-field extraction (operator E6, SURVEY.md §2.2).
 
 The reference's Claude-Vision extraction (document_extractor.py:204-314)
 is non-deterministic and external; the rebuild replaces it with a
@@ -9,9 +9,9 @@ Field cleanup replicates document_extractor.py:296-304 exactly:
 newlines/tabs -> space, collapse runs of spaces, trim — applied to
 address/full_name/first_name/last_name.
 
-Required-field check replicates document_extractor.py:190-201
-(missing = null or blank-after-strip among the 5 required fields), as a
-lambda-free projection.
+The required-field check (E7, document_extractor.py:190-201) is a rule
+over the parsed fields and runs in the rule kernel
+(``validators.missing_fields`` inside ``pipeline._rule_kernel``).
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from webxtract.schemas import FIELD_NAMES, REQUIRED_FIELDS
+from webxtract.schemas import FIELD_NAMES
 
 # Label used in the page text for each schema field.
 FIELD_LABELS: dict[str, str] = {
@@ -68,15 +68,3 @@ def with_fields(df: DataFrame, text_col: str = "extracted_text") -> DataFrame:
     text = F.col(text_col)
     return df.select("*", *[field_expr(text, name).alias(name) for name in FIELD_NAMES])
 
-
-def missing_fields_expr(prefix: str = "") -> Column:
-    """E7: array of required-field names that are null/blank
-    (document_extractor.py:190-201), in REQUIRED_FIELDS order. The names
-    are joined with ``concat_ws`` (which skips NULLs) and split again:
-    ``array_compact`` would be the direct form, but Spark rewrites it to
-    a ``filter`` lambda."""
-    names = [
-        F.when(F.col(prefix + n).isNull() | (F.trim(F.col(prefix + n)) == ""), F.lit(n))
-        for n in REQUIRED_FIELDS
-    ]
-    return F.array_remove(F.split(F.concat_ws(",", *names), ","), "")

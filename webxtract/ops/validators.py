@@ -9,12 +9,14 @@ dates parsed by ``with_parsed_dates`` (date semantics stay in Catalyst),
 ``run_date`` and ``minimum_age`` — and it returns the
 ``array<ValidatorResult>`` column in one Arrow batch. Inside
 ``run_pipeline`` that UDF is the rule kernel (``pipeline._rule_kernel``),
-which also runs type detection and fake scoring; elsewhere
-``validation_results_expr`` runs it alone. No rule logic is analyzed,
-optimized or code-generated by Catalyst. This module also holds what
-every rule kernel shares: ``Doc`` and the Spark-semantics helpers; the
-UDF wrapper, ``row_udf``, lives in ``webxtract.kernels`` with the other
-readers of Spark columns.
+which also runs type detection, fake scoring and integrity, the V-agg
+summary (``validation_summary``, scored with Python's own ``round`` as
+the reference scores it) and the E7 required-field check
+(``missing_fields``); elsewhere ``validation_results_expr`` runs the
+battery alone. No rule logic is analyzed, optimized or code-generated by
+Catalyst. This module also holds what every rule kernel shares: ``Doc``
+and the Spark-semantics helpers; the UDF wrapper, ``row_udf``, lives in
+``webxtract.kernels`` with the other readers of Spark columns.
 
 Each validator is a plain Python function over one document, written
 close to the reference class it replicates: the 5 base validators, the
@@ -69,7 +71,7 @@ from webxtract.rules import (
     US_STATE_FORMATS,
     US_STATE_INDICATORS,
 )
-from webxtract.schemas import FIELD_NAMES, VALIDATOR_RESULT_TYPE
+from webxtract.schemas import FIELD_NAMES, REQUIRED_FIELDS, VALIDATOR_RESULT_TYPE
 
 RESULTS_TYPE = ArrayType(VALIDATOR_RESULT_TYPE)
 
@@ -225,9 +227,9 @@ DOB_COL, ISSUE_COL, EXP_COL = "__dob_d", "__issue_d", "__exp_d"
 DATE_COLS = (DOB_COL, ISSUE_COL, EXP_COL)
 
 
-def with_parsed_dates(df, prefix: str = ""):  # noqa: ANN001, ANN201
+def with_parsed_dates(df):  # noqa: ANN001, ANN201
     return df.withColumns({
-        c: parse_date_expr(F.col(prefix + f))
+        c: parse_date_expr(F.col(f))
         for c, f in zip(DATE_COLS, ("date_of_birth", "issue_date", "expiry_date"))
     })
 
@@ -1228,10 +1230,10 @@ def validate(doc_type_enum: str | None, d: Doc) -> list[tuple]:
     return out
 
 
-def doc_columns(prefix: str = "") -> list[Column]:
+def doc_columns() -> list[Column]:
     """The 13 field columns then the dob/issue/expiry epoch days, the
     per-document inputs of every rule kernel (after ``with_parsed_dates``)."""
-    return [*[F.col(prefix + f) for f in FIELD_NAMES],
+    return [*[F.col(f) for f in FIELD_NAMES],
             *[F.unix_date(F.col(c)) for c in DATE_COLS]]
 
 
@@ -1242,61 +1244,33 @@ def _battery(enum: str | None, run: int, minimum_age: int, *vals) -> list:  # no
 
 
 def validation_results_expr(
-    doc_type_enum: Column, run_date: Column, minimum_age: int = 18, prefix: str = ""
+    doc_type_enum: Column, run_date: Column, minimum_age: int = 18
 ) -> Column:
     """Full battery: 5 base validators + the dispatched type-specific one
     (validation_service.py:283-295), over a frame that went through
     ``with_parsed_dates``. Never NULL."""
     return F.coalesce(
         _battery(doc_type_enum, F.unix_date(run_date), F.lit(minimum_age),
-                 *doc_columns(prefix)),
+                 *doc_columns()),
         F.array().cast(RESULTS_TYPE),
     )
 
 
-def _round_half_even_2(x: Column) -> Column:
-    """round(x, 2) with Python's round-half-to-even tie behavior (the
-    reference uses round(), validation_service.py:411; Spark's F.round is
-    HALF_UP, which diverges on exact ties like 0.125 -> 0.13 vs 0.12)."""
-    scaled = x * 100
-    fl = F.floor(scaled)
-    tie = (scaled - fl) == 0.5
-    hundredths = F.when(
-        tie, F.when(fl % 2 == 0, fl).otherwise(fl + 1)
-    ).otherwise(F.round(scaled, 0))
-    return hundredths / 100
+def validation_summary(results: list[tuple]) -> tuple:
+    """V-agg (validation_service.py:390-428): score = (passed +
+    0.5*warnings) / active, by Python's own ``round(x, 2)`` as the
+    reference scores it; FAILED > WARNING > PASSED > SKIPPED."""
+    statuses = [r[1] for r in results]
+    passed, failed = statuses.count("passed"), statuses.count("failed")
+    warnings, skipped = statuses.count("warning"), statuses.count("skipped")
+    active = len(statuses) - skipped
+    score = round((passed + warnings * 0.5) / active, 2) if active > 0 else 0.0
+    overall = ("failed" if failed else "warning" if warnings else
+               "passed" if passed else "skipped")
+    return overall, score, len(statuses), passed, failed, warnings, skipped
 
 
-def validation_summary_expr(results: Column) -> Column:
-    """V-agg (validation_service.py:390-428): score =
-    (passed + 0.5*warnings) / active; FAILED > WARNING > PASSED > SKIPPED.
-    Status counts are ``size - size(array_remove(statuses, s))`` — no
-    lambda, so the summary stays a code-generated projection."""
-    statuses = results["status"]
-    total = F.size(results)
-
-    def count(status: str) -> Column:
-        return total - F.size(F.array_remove(statuses, status))
-
-    passed, failed = count("passed"), count("failed")
-    warnings, skipped = count("warning"), count("skipped")
-    active = total - skipped
-    score = F.when(
-        active > 0,
-        _round_half_even_2((passed + warnings * 0.5) / active.cast("double")),
-    ).otherwise(F.lit(0.0))
-    overall = (
-        F.when(failed > 0, "failed")
-        .when(warnings > 0, "warning")
-        .when(passed > 0, "passed")
-        .otherwise("skipped")
-    )
-    return F.struct(
-        overall.alias("overall_status"),
-        score.alias("validation_score"),
-        total.alias("total_checks"),
-        passed.alias("passed_checks"),
-        failed.alias("failed_checks"),
-        warnings.alias("warning_checks"),
-        skipped.alias("skipped_checks"),
-    )
+def missing_fields(d: Doc) -> list[str]:
+    """E7: the required fields that are NULL or blank by Spark's ``trim``
+    (document_extractor.py:190-201), in REQUIRED_FIELDS order."""
+    return [f for f in REQUIRED_FIELDS if _blank(getattr(d, f))]

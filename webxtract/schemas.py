@@ -7,6 +7,7 @@ Mirrors the reference's Pydantic models (SURVEY.md §1.4):
 - type info:  app/models/document_types.py:53-61
 - fake:       app/models/responses.py:44-56
 - validation: app/models/responses.py:162-180
+- integrity:  app/models/responses.py:52-56, claude_integrity_analyzer.py:228-283
 """
 
 from __future__ import annotations
@@ -139,6 +140,45 @@ VALIDATOR_RESULT_TYPE = StructType(
         StructField("status", StringType(), True),  # passed|failed|warning|skipped
         StructField("message", StringType(), True),
         StructField("details", MapType(StringType(), StringType()), True),
+    ]
+)
+
+# V-agg summary of one document's results (validation_service.py:390-428).
+VALIDATION_SUMMARY_TYPE = StructType(
+    [
+        StructField("overall_status", StringType(), True),
+        StructField("validation_score", DoubleType(), True),
+        StructField("total_checks", IntegerType(), True),
+        StructField("passed_checks", IntegerType(), True),
+        StructField("failed_checks", IntegerType(), True),
+        StructField("warning_checks", IntegerType(), True),
+        StructField("skipped_checks", IntegerType(), True),
+    ]
+)
+
+# ---------------------------------------------------------------- integrity
+
+# X2 summary shape (claude_integrity_analyzer.get_summary, :228-283).
+INTEGRITY_SUMMARY_TYPE = StructType(
+    [
+        StructField("is_fraudulent", BooleanType(), True),
+        StructField("confidence", DoubleType(), True),
+        StructField("risk_level", StringType(), True),  # high|medium|low|minimal
+        StructField(
+            "issues_detected",
+            ArrayType(
+                StructType(
+                    [
+                        StructField("type", StringType(), True),
+                        StructField("confidence", DoubleType(), True),
+                        StructField("findings", ArrayType(StringType()), True),
+                    ]
+                )
+            ),
+            True,
+        ),
+        StructField("recommendation", StringType(), True),  # reject|approve
+        StructField("summary", StringType(), True),
     ]
 )
 

@@ -83,8 +83,8 @@ def get_spark(
         "spark.driver.memory": f"{min(64, 2 * (n_threads or 16))}g",
         # No Python call-site capture: with it on, every wrapped F.* and
         # DataFrame call walks the Python stack and makes 3 extra Py4J
-        # round trips (building run_pipeline: ~4,450 round trips, not
-        # ~2,150). Error messages lose only the Python call site.
+        # round trips (building run_pipeline: ~2,650 round trips, not
+        # ~1,750). Error messages lose only the Python call site.
         "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
     if extra_conf:
