@@ -145,3 +145,48 @@ def test_cli_requires_args():
         _parse_args(["--input", "x"])  # missing output/audit/run-id
     a = _parse_args(["--build-pyfiles", "z.zip"])  # offline flag needs nothing else
     assert a.build_pyfiles == "z.zip"
+
+
+def test_cli_rejects_num_partitions_in_pipeline_mode(monkeypatch, capsys):
+    """The pipeline partitions once, at spark.sql.shuffle.partitions; a
+    --num-partitions pre-partition would add a second exchange of the
+    raw pages, so the CLI refuses it before any Spark session starts."""
+    import webxtract.session
+    from webxtract.cli import main
+
+    def no_session(*a, **k):  # noqa: ANN002, ANN003, ANN202
+        raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(webxtract.session, "get_spark", no_session)
+    with pytest.raises(SystemExit) as exc:
+        main([
+            "--local", "2", "--input", "x", "--output", "o", "--audit", "a",
+            "--run-id", "r", "--mode", "pipeline", "--num-partitions", "4",
+        ])
+    assert exc.value.code == 2
+    assert "spark.sql.shuffle.partitions" in capsys.readouterr().err
+
+
+def test_cli_error_exit_leaves_no_warmup_task(tmp_path):
+    """A CLI run that fails while building its job (a malformed
+    --run-date) exits non-zero with its own ValueError, and the JVM's
+    shutdown aborts no task of the session's Python-worker warm-up: the
+    CLI waits for that job before it re-raises."""
+    from webxtract.synth import gen_pages, to_parquet
+
+    pages, _ = gen_pages(20, "2026-01-15")
+    to_parquet(pages, str(tmp_path / "pages.parquet"))
+    env = {**os.environ, "PYTHONPATH": REPO}
+    out = subprocess.run(
+        [
+            sys.executable, "-m", "webxtract.cli", "--local", "2",
+            "--input", str(tmp_path / "pages.parquet"),
+            "--output", str(tmp_path / "out"), "--audit", str(tmp_path / "audit"),
+            "--run-id", "bad-date", "--mode", "pipeline", "--run-date", "2026-13-45",
+        ],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode != 0
+    assert "ValueError: run_date must be a YYYY-MM-DD date, got '2026-13-45'" in out.stderr
+    assert "Python worker exited unexpectedly" not in out.stderr
+    assert "Aborting commit" not in out.stderr

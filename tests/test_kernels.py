@@ -2,6 +2,7 @@
 md5-60, the Java ``\\s`` split and ``round``; ids that cross a Python
 kernel come back exactly; and no module restates the rules inline."""
 
+import ast
 from pathlib import Path
 
 import numpy as np
@@ -191,3 +192,50 @@ def test_spark_parity_rules_live_in_kernels():
         if pat in p.read_text(encoding="utf-8")
     ]
     assert found == []
+
+
+# Run inputs a caller supplies at run time though no call site in the
+# repository passes one.
+_RUN_INPUTS = {("start_pipeline_stream", "run_date"), ("write_corpus", "seed")}
+
+
+def test_every_optional_parameter_is_set_somewhere():
+    """Each optional parameter of a public top-level function in
+    webxtract/ is passed by some call site in webxtract/,
+    __spark_entry__.py, perfbench/, scripts/, bench*.py or tests/ (by
+    keyword, by position, or by a ``*args``/``**kwargs`` forward, which
+    counts as passing every parameter). A default no caller overrides is
+    a constant, not a setting, and a value nothing runs is code nothing
+    checks. Call sites match by function name."""
+    root = Path(webxtract.__file__).parent
+    repo = root.parent
+    sources = [*root.rglob("*.py"), repo / "__spark_entry__.py", *repo.glob("bench*.py"),
+               *(repo / "perfbench").rglob("*.py"), *(repo / "scripts").rglob("*.py"),
+               *(repo / "tests").rglob("*.py")]
+    passed: dict[str, tuple[set, int, bool]] = {}  # name -> (keywords, max #positional, forward)
+    for path in sources:
+        for call in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if not isinstance(call, ast.Call):
+                continue
+            name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
+            kw, npos, fwd = passed.get(name, (set(), 0, False))
+            kw |= {k.arg for k in call.keywords if k.arg is not None}
+            fwd = fwd or any(k.arg is None for k in call.keywords) or any(
+                isinstance(a, ast.Starred) for a in call.args)
+            passed[name] = (kw, max(npos, len(call.args)), fwd)
+    unset = []
+    for path in sorted(root.rglob("*.py")):
+        for fn in ast.parse(path.read_text(encoding="utf-8")).body:
+            if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
+                continue
+            args = fn.args
+            pos = [a.arg for a in args.posonlyargs + args.args]
+            optional = pos[len(pos) - len(args.defaults):] + [
+                a.arg for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None]
+            kw, npos, fwd = passed.get(fn.name, (set(), 0, False))
+            unset += [
+                f"{path.relative_to(root)}: {fn.name}({o})" for o in optional
+                if not (fwd or o in kw or (o in pos and pos.index(o) < npos)
+                        or (fn.name, o) in _RUN_INPUTS)
+            ]
+    assert unset == []

@@ -442,7 +442,7 @@ def test_hot_host_salting_spreads_partitions(spark):
     sizes = {r["pid"]: r["count"] for r in parts}
     assert len(sizes) >= 2           # the hot host is NOT one task
     assert max(sizes.values()) < 2000
-    # ...but bounded locality: one host lands in at most salt_hot_hosts
+    # ...but bounded locality: one host lands in at most 4 shard
     # buckets (the (host, shard) key), not scattered over all 16
     assert len(sizes) <= 4
     # deterministic: same input -> same spread

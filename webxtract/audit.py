@@ -26,23 +26,19 @@ from pyspark.sql.types import StructType
 from webxtract.schemas import AUDIT_SCHEMA
 
 
-def partition_by_url(
-    df: DataFrame,
-    num_partitions: int,
-    salt_hot_hosts: int = 4,
-) -> DataFrame:
+def partition_by_url(df: DataFrame, num_partitions: int) -> DataFrame:
     """Repartition by (host, shard) — bounded host locality.
 
     Partitioning on plain hash(url) spreads rows but scatters every
     host across ALL partitions; partitioning on host alone serializes
     a Zipf-hot host into one task. The (host, shard) key with
-    shard = xxhash64(url) % salt_hot_hosts keeps each host's pages in
-    at most ``salt_hot_hosts`` buckets (locality for per-host work:
-    robots/rate metadata reuse, per-host dedup) while guaranteeing no
-    host exceeds ~1/salt_hot_hosts of its bytes per task. Deterministic
-    — the shard comes from the url hash, no RNG."""
+    shard = xxhash64(url) % 4 keeps each host's pages in at most 4
+    buckets (locality for per-host work: robots/rate metadata reuse,
+    per-host dedup) while guaranteeing no host exceeds ~1/4 of its
+    bytes per task. Deterministic — the shard comes from the url hash,
+    no RNG."""
     host = F.parse_url(F.col("url"), F.lit("HOST"))
-    shard = F.pmod(F.xxhash64("url"), F.lit(salt_hot_hosts)).cast("int")
+    shard = F.pmod(F.xxhash64("url"), F.lit(4)).cast("int")
     key = F.xxhash64(
         F.concat_ws("#", F.coalesce(host, F.col("url")), shard.cast("string"))
     )

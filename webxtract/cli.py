@@ -14,10 +14,15 @@ Usage:
     spark-submit --py-files webxtract.zip cli.py \
         --input s3://crawl/pages --output s3://out/extracted \
         --audit s3://out/audit --run-id 2026-01-15-a \
-        [--mode extract|pipeline] [--num-partitions N] \
-        [--run-date YYYY-MM-DD]
+        [--mode extract [--num-partitions N] | --mode pipeline \
+        [--run-date YYYY-MM-DD]]
 
     python -m webxtract.cli --build-pyfiles webxtract.zip   # make the archive
+
+``--num-partitions`` belongs to extract mode only: the pipeline
+partitions once, by the salted url key at ``spark.sql.shuffle.partitions``
+(set with spark-submit's ``--conf``), and a second repartition of the
+raw pages before it would add a shuffle of the html payload.
 
 Re-running with the same --output is idempotent: the job anti-joins
 committed urls and processes only the remainder (audit.resume_filter),
@@ -27,7 +32,10 @@ resubmission under an id that already committed writes nothing and
 only restores that run's audit rows if they are missing. Prints ONE
 JSON metrics line (urls, bytes_in, parse_failures, metrics_errors) on
 success — the batch analog of the reference's per-request
-processing_time_seconds field (ocr.py:80).
+processing_time_seconds field (ocr.py:80). A run that fails once its
+session exists first waits for the session's Python-worker warm-up
+(``session.wait_for_python_workers``), so its own error is the last
+thing it prints.
 """
 
 from __future__ import annotations
@@ -56,7 +64,9 @@ def _parse_args(argv: list[str]) -> argparse.Namespace:
                    help="extract = text extraction only; pipeline = + fields/"
                         "detection/fake/validation")
     p.add_argument("--num-partitions", type=int, default=None,
-                   help="salted (host, shard) repartition width before extraction")
+                   help="extract mode: salted (host, shard) repartition width "
+                        "before extraction (pipeline mode partitions once, at "
+                        "spark.sql.shuffle.partitions)")
     p.add_argument("--run-date", default=None,
                    help="validation 'today' (pipeline mode), YYYY-MM-DD")
     p.add_argument("--local", metavar="N", default=None,
@@ -68,6 +78,10 @@ def _parse_args(argv: list[str]) -> argparse.Namespace:
                    if not getattr(args, k)]
         if missing:
             p.error("required: --" + ", --".join(m.replace("_", "-") for m in missing))
+    if args.mode == "pipeline" and args.num_partitions is not None:
+        p.error("--num-partitions is for --mode extract: the pipeline partitions "
+                "once, by the salted url key at spark.sql.shuffle.partitions, "
+                "which spark-submit sets (--conf spark.sql.shuffle.partitions=N)")
     return args
 
 
@@ -90,30 +104,36 @@ def main(argv: list[str] | None = None) -> int:
 
         spark = SparkSession.builder.appName("webxtract-cli").getOrCreate()
 
-    from webxtract.audit import run_extraction_job
+    try:
+        from webxtract.audit import run_extraction_job
 
-    transform = None
-    if args.mode == "pipeline":
-        from webxtract.pipeline import run_pipeline
+        transform = None
+        if args.mode == "pipeline":
+            from webxtract.pipeline import run_pipeline
 
-        kw = {"run_date": args.run_date} if args.run_date else {}
-        transform = lambda df: run_pipeline(df, **kw)  # noqa: E731
+            kw = {"run_date": args.run_date} if args.run_date else {}
+            transform = lambda df: run_pipeline(df, **kw)  # noqa: E731
 
-    from webxtract.table_io import incremental_pages, load_pages
+        from webxtract.table_io import incremental_pages, load_pages
 
-    if args.since_snapshot is not None:
-        pages = incremental_pages(spark, args.input, args.since_snapshot)
-    else:
-        pages = load_pages(spark, args.input)
-    metrics = run_extraction_job(
-        pages,
-        output_path=args.output,
-        audit_path=args.audit,
-        run_id=args.run_id,
-        spark=spark,
-        num_partitions=args.num_partitions,
-        transform=transform,
-    )
+        if args.since_snapshot is not None:
+            pages = incremental_pages(spark, args.input, args.since_snapshot)
+        else:
+            pages = load_pages(spark, args.input)
+        metrics = run_extraction_job(
+            pages,
+            output_path=args.output,
+            audit_path=args.audit,
+            run_id=args.run_id,
+            spark=spark,
+            num_partitions=args.num_partitions,
+            transform=transform,
+        )
+    except BaseException:
+        from webxtract.session import wait_for_python_workers
+
+        wait_for_python_workers(spark)
+        raise
     print(json.dumps({"mode": args.mode, **metrics}), flush=True)
     return 0
 

@@ -1,9 +1,12 @@
-"""Run-level configuration.
+"""Run-level configuration: the default run date and the Arrow batch size.
 
 The reference calls ``datetime.now()`` in ~20 places (e.g.
 ``app/services/validators/document_expiry.py:32``); for deterministic,
 re-runnable jobs every "now" becomes one frozen ``run_date`` parameter
-(SURVEY.md §7.4.3).
+(SURVEY.md §7.4.3). Rule and heuristic thresholds are fixed constants in
+the one module that reads each: the minimum age in
+``ops.validators``, the block-length and link-density cut-offs in
+``ops.extract_html``.
 """
 
 from __future__ import annotations
@@ -11,14 +14,6 @@ from __future__ import annotations
 # Frozen "today" for all date arithmetic (expiry, age, ...). Override per
 # run with ``cli --run-date`` or an entry point's ``run_date=``.
 DEFAULT_RUN_DATE: str = "2026-01-15"
-
-# Minimum age requirement for the age validator
-# (reference: app/services/validation_service.py:104-116, default 18).
-DEFAULT_MINIMUM_AGE: int = 18
-
-# Extraction heuristics (HTML main-content classifier).
-MIN_BLOCK_CHARS: int = 8        # drop non-heading blocks shorter than this
-MAX_LINK_DENSITY: float = 0.5   # drop blocks whose link-char ratio >= this
 
 # Arrow batch size for the extraction UDFs. HTML blobs are KB–MB sized;
 # the Spark default of 10k rows/batch would make multi-hundred-MB batches

@@ -1251,7 +1251,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe variant: query bucket + every Hamming-distance-1
     bucket (single plane flipped). Higher recall than single-probe for
-    ~(n_planes+1)x candidate volume; same exact re-rank."""
+    ~(N_PLANES+1)x candidate volume; same exact re-rank."""
     q = _query_vec(spark, sf_dir)
     return similarity.lsh_topk(
         _t(spark, sf_dir, "embeddings"), q, k=10, multiprobe=True

@@ -63,15 +63,10 @@ def redact_pii_expr(text: Column) -> Column:
     return out
 
 
-def repetition_signals(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ns: tuple[int, ...] = (2, 3, 4),
-) -> DataFrame:
+def repetition_signals(df: DataFrame) -> DataFrame:
     """Gopher-style intra-document repetition signals per document:
     duplicate-line fraction, duplicate-line character fraction (pure
-    expressions), and for each n in ``ns`` the top-n-gram character
+    expressions), and for each n in (2, 3, 4) the top-n-gram character
     fraction — count(most frequent word n-gram) * len(gram) /
     len(text), the repetition filter's core statistic (can exceed 1
     for self-overlapping grams; both engines define it identically).
@@ -90,8 +85,6 @@ def repetition_signals(
 
     from webxtract.kernels import doc_rows, spark_round, ws_split
 
-    ns = tuple(ns)
-
     def rows_of(text):  # noqa: ANN001, ANN202
         if text is None:
             text = ""
@@ -107,7 +100,7 @@ def repetition_signals(
         toks = ws_split(text)
         chars = len(text)
         out = [dup_line, dup_char]
-        for k in ns:
+        for k in (2, 3, 4):
             if len(toks) >= k and chars > 0:
                 grams = Counter(
                     " ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)
@@ -121,18 +114,12 @@ def repetition_signals(
     fields = [
         StructField(nm, DoubleType(), True)
         for nm in ["dup_line_frac", "dup_line_char_frac"]
-        + [f"top{k}gram_char_frac" for k in ns]
+        + [f"top{k}gram_char_frac" for k in (2, 3, 4)]
     ]
-    return doc_rows(df, [id_col], [text_col], fields, lambda: rows_of)
+    return doc_rows(df, ["doc_id"], ["text"], fields, lambda: rows_of)
 
 
-def remove_boilerplate_lines(
-    df: DataFrame,
-    max_line_df: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_line_len: int = 0,
-) -> DataFrame:
+def remove_boilerplate_lines(df: DataFrame, max_line_df: int = 10) -> DataFrame:
     """Cross-document line-level boilerplate removal (the CCNet /
     RefinedWeb trick): a LINE that appears in more than ``max_line_df``
     distinct documents is navigation/footer/cookie-banner boilerplate —
@@ -155,14 +142,14 @@ def remove_boilerplate_lines(
     from webxtract.textops import stable_hash60_expr
 
     lines = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.posexplode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), r"\n")
+            F.split(F.coalesce(F.col("text"), F.lit("")), r"\n")
         ).alias("pos", "line"),
     ).withColumn("h", stable_hash60_expr(F.trim(F.col("line"))))
 
     line_df = (
-        lines.filter(F.length(F.trim("line")) > min_line_len)
+        lines.filter(F.length(F.trim("line")) > 0)
         .select("h", "id")
         .distinct()
         .groupBy("h")
@@ -188,22 +175,16 @@ def remove_boilerplate_lines(
                 lambda s: s["line"],
             ),
             "\n",
-        ).alias(text_col),
+        ).alias("text"),
         F.sum(F.col("__hot").cast("long")).alias("n_removed_lines"),
     )
     # a doc whose every line was hot keeps a row with empty text
     return rebuilt.select(
-        F.col("id").alias(id_col), text_col, "n_removed_lines"
+        F.col("id").alias("doc_id"), "text", "n_removed_lines"
     )
 
 
-def pack_sequences(
-    df: DataFrame,
-    token_budget: int,
-    n_shards: int = 1024,
-    tokens_col: str = "n_tokens",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def pack_sequences(df: DataFrame, token_budget: int, n_shards: int = 1024) -> DataFrame:
     """Token-budget sequence packing for training-data assembly: assign
     each document to a (shard, seq_no) training sequence such that
     sequences fill up to ``token_budget`` tokens.
@@ -226,30 +207,28 @@ def pack_sequences(
     from webxtract.textops import stable_hash60_expr
 
     shard = F.pmod(
-        stable_hash60_expr(F.col(id_col).cast("string")), F.lit(n_shards)
+        stable_hash60_expr(F.col("doc_id").cast("string")), F.lit(n_shards)
     ).cast("int")
     w = (
         Window.partitionBy("shard")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     with_cum = df.withColumn("shard", shard).withColumn(
-        "__cum", F.sum(tokens_col).over(w).cast("bigint")
+        "__cum", F.sum("n_tokens").over(w).cast("bigint")
     )
     # Integer floor-division (operands are non-negative, so `div` ==
     # floor) instead of double floor: exact at any cum magnitude and
     # engine-neutral with the oracle's `//`.
-    seq_no = F.expr(
-        f"(__cum - {tokens_col}) div {int(token_budget)}"
-    ).cast("bigint")
+    seq_no = F.expr(f"(__cum - n_tokens) div {int(token_budget)}").cast("bigint")
     return (
         with_cum.withColumn("seq_no", seq_no)
         .groupBy("shard", "seq_no")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(tokens_col).alias("total_tokens"),
-            F.min(id_col).alias("first_doc"),
-            F.max(id_col).alias("last_doc"),
+            F.sum("n_tokens").alias("total_tokens"),
+            F.min("doc_id").alias("first_doc"),
+            F.max("doc_id").alias("last_doc"),
         )
     )
 
@@ -260,8 +239,6 @@ SAMPLE_BUCKETS = 1_000_000
 def deterministic_sample(
     df: DataFrame,
     rates: dict[str, float],
-    source_col: str = "lang",
-    key_col: str = "doc_id",
     default_rate: float = 0.0,
 ) -> DataFrame:
     """Weighted source mixing with content-keyed deterministic sampling:
@@ -280,12 +257,12 @@ def deterministic_sample(
         pairs.append(F.lit(k))
         pairs.append(F.lit(float(r)))
     rate = F.coalesce(
-        F.create_map(*pairs)[F.col(source_col)], F.lit(float(default_rate))
+        F.create_map(*pairs)[F.col("lang")], F.lit(float(default_rate))
     )
     from webxtract.textops import stable_hash60_expr
 
     bucket = F.pmod(
-        stable_hash60_expr(F.col(key_col).cast("string")), F.lit(SAMPLE_BUCKETS)
+        stable_hash60_expr(F.col("doc_id").cast("string")), F.lit(SAMPLE_BUCKETS)
     )
     return df.filter(bucket < (rate * SAMPLE_BUCKETS).cast("bigint"))
 
@@ -334,8 +311,6 @@ def canonicalize_url_expr(url: Column) -> Column:
 def benchmark_overlap(
     docs: DataFrame,
     benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_k: int = 8,
     min_hits: int = 1,
 ) -> DataFrame:
@@ -352,13 +327,13 @@ def benchmark_overlap(
     """
     bench_sh = (
         benchmark.select(
-            F.explode(shingle_hashes_expr(F.col(text_col), shingle_k)).alias("h")
+            F.explode(shingle_hashes_expr(F.col("text"), shingle_k)).alias("h")
         )
         .distinct()
     )
     doc_sh = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(shingle_hashes_expr(F.col(text_col), shingle_k)).alias("h"),
+        F.col("doc_id").alias("id"),
+        F.explode(shingle_hashes_expr(F.col("text"), shingle_k)).alias("h"),
     )
     hits = doc_sh.join(F.broadcast(bench_sh), "h")
     return (
@@ -386,11 +361,7 @@ def url_host_expr(url: Column) -> Column:
     return F.lower(F.regexp_extract(url, URL_HOST_RE, 1))
 
 
-def normalize_text(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def normalize_text(df: DataFrame) -> DataFrame:
     """Corpus text normalization: strip C0 control chars/DEL, then
     Unicode-NFC the result (``unicodedata``, the same Unicode-standard
     mapping DuckDB's nfc_normalize applies) — the standard first pass
@@ -423,19 +394,14 @@ def normalize_text(
         StructField("n_chars_before", IntegerType(), True),
         StructField("n_chars_after", IntegerType(), True),
     ]
-    valid = F.is_valid_utf8(text_col)
-    return doc_rows(df, [id_col], [text_col, valid], fields, lambda: rows_of)
+    valid = F.is_valid_utf8("text")
+    return doc_rows(df, ["doc_id"], ["text", valid], fields, lambda: rows_of)
 
 
 # ------------------------------------------------------- host analytics
 
 
-def host_stats(
-    df: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
+def host_stats(df: DataFrame) -> DataFrame:
     """Per-host corpus statistics (doc count, char mass, mean doc
     length, distinct languages) — the host-level view quality pipelines
     rank/trim/blocklist from (a crawl's byte mass is Zipfian over
@@ -448,15 +414,15 @@ def host_stats(
     full-corpus shuffle). Hot hosts are exactly the skewed keys AQE
     skew-split handles; the payload entering the exchange is already
     per-(host[,lang]) partial rows, not documents."""
-    host = url_host_expr(F.col(url_col))
-    chars = F.length(F.coalesce(F.col(text_col), F.lit("")))
+    host = url_host_expr(F.col("url"))
+    chars = F.length(F.coalesce(F.col("text"), F.lit("")))
     agg = (
-        df.select(host.alias("host"), chars.alias("chars"), F.col(lang_col))
+        df.select(host.alias("host"), chars.alias("chars"), F.col("lang"))
         .groupBy("host")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("chars").cast("bigint").alias("total_chars"),
-            F.countDistinct(lang_col).alias("n_langs"),
+            F.countDistinct("lang").alias("n_langs"),
         )
     )
     # mean as one exact-int IEEE division (not F.avg): bit-identical in
@@ -471,12 +437,7 @@ def host_stats(
     )
 
 
-def filter_blocked_domains(
-    df: DataFrame,
-    blocked: DataFrame,
-    url_col: str = "url",
-    host_col: str = "host",
-) -> DataFrame:
+def filter_blocked_domains(df: DataFrame, blocked: DataFrame) -> DataFrame:
     """Drop every document whose URL host appears in a blocklist
     (spam/SEO/adult domain lists — the standard crawl-curation gate).
 
@@ -485,9 +446,9 @@ def filter_blocked_domains(
     deduplicated and broadcast and the join is a map-side LEFT ANTI —
     the corpus never shuffles and the scan stays embarrassingly
     parallel. Host matching is case-insensitive on both sides."""
-    host = url_host_expr(F.col(url_col))
+    host = url_host_expr(F.col("url"))
     bl = F.broadcast(
-        blocked.select(F.lower(F.col(host_col)).alias("__host")).distinct()
+        blocked.select(F.lower(F.col("host")).alias("__host")).distinct()
     )
     return (
         df.withColumn("__host", host)
@@ -499,11 +460,7 @@ def filter_blocked_domains(
 # ------------------------------------------------ paragraph-level dedup
 
 
-def dedup_paragraphs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dedup_paragraphs(df: DataFrame) -> DataFrame:
     """Corpus-wide keep-first paragraph deduplication (the RefinedWeb /
     Dolma pass that removes repeated paragraphs ACROSS documents, not
     just repeated lines within a host's template): paragraphs equal up
@@ -530,9 +487,9 @@ def dedup_paragraphs(
 
     paras = (
         df.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             F.posexplode(
-                F.split(F.coalesce(F.col(text_col), F.lit("")), r"\n{2,}")
+                F.split(F.coalesce(F.col("text"), F.lit("")), r"\n{2,}")
             ).alias("pos", "para"),
         )
         .withColumn("eligible", F.length(F.trim("para")) > 0)
@@ -559,22 +516,18 @@ def dedup_paragraphs(
                 lambda s: s["para"],
             ),
             "\n\n",
-        ).alias(text_col),
+        ).alias("text"),
         F.sum((~F.col("keep")).cast("long")).alias("n_removed_paras"),
     )
     return rebuilt.select(
-        F.col("id").alias(id_col), text_col, "n_removed_paras"
+        F.col("id").alias("doc_id"), "text", "n_removed_paras"
     )
 
 
 # ------------------------------------------------ corpus vocabulary
 
 
-def top_tokens(
-    df: DataFrame,
-    k: int = 50,
-    text_col: str = "text",
-) -> DataFrame:
+def top_tokens(df: DataFrame, k: int = 50) -> DataFrame:
     """Corpus-level top-k token frequencies — the vocabulary head every
     tokenizer-training / contamination / quality audit starts from.
     Whitespace tokens over trimmed text; empty tokens (empty or NULL
@@ -590,7 +543,7 @@ def top_tokens(
 
     toks = df.select(
         F.explode(
-            tokens_expr(F.coalesce(F.col(text_col), F.lit("")))
+            tokens_expr(F.coalesce(F.col("text"), F.lit("")))
         ).alias("token")
     ).filter(F.length("token") > 0)
     counted = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
@@ -604,8 +557,6 @@ def temperature_mix(
     df: DataFrame,
     n_target: int,
     temperature: float = 0.5,
-    source_col: str = "lang",
-    key_col: str = "doc_id",
 ) -> DataFrame:
     """Temperature-scaled source mixing (the multilingual/multi-source
     rebalancing rule of mC4/PaLM-style recipes): source s with n_s
@@ -629,7 +580,7 @@ def temperature_mix(
     (key, source)."""
     from webxtract.textops import stable_hash60_expr
 
-    counts = df.groupBy(F.col(source_col).alias("__src")).agg(
+    counts = df.groupBy(F.col("lang").alias("__src")).agg(
         F.count(F.lit(1)).alias("__n")
     )
     from pyspark.sql import Window
@@ -648,11 +599,11 @@ def temperature_mix(
         ).alias("__rate"),
     )
     bucket = F.pmod(
-        stable_hash60_expr(F.col(key_col).cast("string")), F.lit(SAMPLE_BUCKETS)
+        stable_hash60_expr(F.col("doc_id").cast("string")), F.lit(SAMPLE_BUCKETS)
     )
     return (
-        df.select(F.col(key_col), F.col(source_col))
-        .join(F.broadcast(rates), F.col(source_col) == F.col("__src"))
+        df.select(F.col("doc_id"), F.col("lang"))
+        .join(F.broadcast(rates), F.col("lang") == F.col("__src"))
         # explicit round before the bigint threshold: the 6-dp rate
         # times 1e6 is integer-valued up to FP error, and Spark's
         # double->bigint cast truncates while DuckDB's rounds — round
@@ -661,17 +612,11 @@ def temperature_mix(
             bucket
             < F.round(F.col("__rate") * SAMPLE_BUCKETS, 0).cast("bigint")
         )
-        .select(key_col, source_col)
+        .select("doc_id", "lang")
     )
 
 
-def chunk_tokens(
-    df: DataFrame,
-    chunk_size: int = 256,
-    overlap: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def chunk_tokens(df: DataFrame, chunk_size: int = 256, overlap: int = 32) -> DataFrame:
     """Sliding-window token chunking (context-window packing for
     pretraining, or RAG passage splitting): each document's whitespace
     tokens are windowed into chunks of ``chunk_size`` tokens advancing
@@ -689,7 +634,7 @@ def chunk_tokens(
     from webxtract.textops import tokens_expr
 
     toks = F.filter(
-        tokens_expr(F.coalesce(F.col(text_col), F.lit(""))),
+        tokens_expr(F.coalesce(F.col("text"), F.lit(""))),
         lambda t: F.length(t) > 0,
     )
 
@@ -699,7 +644,7 @@ def chunk_tokens(
         ).otherwise(F.array().cast("array<int>"))
 
     exploded = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         toks.alias("tk"),
     ).select(
         "id",
@@ -708,26 +653,20 @@ def chunk_tokens(
     )
     chunk = F.slice(F.col("tk"), F.col("s"), chunk_size)
     return exploded.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         ((F.col("s") - 1) / stride + 1).cast("int").alias("chunk_no"),
         F.size(chunk).alias("n_tokens"),
         F.array_join(chunk, " ").alias("chunk_text"),
     )
 
 
-def unigram_surprisal(
-    df: DataFrame,
-    vocab_k: int = 1000,
-    oov_count: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def unigram_surprisal(df: DataFrame, vocab_k: int = 1000) -> DataFrame:
     """Statistical language-model quality proxy (the KenLM-filter
     analog, deterministic): per-document mean unigram surprisal
     ``avg(-ln(c_w / T))`` against the corpus' own top-``vocab_k``
-    vocabulary, out-of-vocabulary tokens smoothed to ``oov_count``.
+    vocabulary, out-of-vocabulary tokens smoothed to a count of 0.5.
     Natural text scores near the corpus entropy; keyboard mash and
-    boilerplate-free gibberish (all-OOV) scores ~ln(T / oov_count), so
+    boilerplate-free gibberish (all-OOV) scores ~ln(T / 0.5), so
     a single threshold separates them — the cheap stand-in for the
     model-based perplexity filters of CCNet/DCLM-style pipelines.
     Returns (id, n_tokens, surprisal).
@@ -743,8 +682,8 @@ def unigram_surprisal(
     from webxtract.textops import tokens_expr
 
     base = df.filter(
-        F.col(text_col).isNotNull() & (F.trim(text_col) != "")
-    ).select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
+        F.col("text").isNotNull() & (F.trim("text") != "")
+    ).select(F.col("doc_id").alias("id"), F.col("text").alias("t"))
     tok = base.select("id", F.explode(tokens_expr(F.col("t"))).alias("w"))
     counts = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     total = counts.agg(F.sum("c").alias("tt"))
@@ -754,7 +693,7 @@ def unigram_surprisal(
         .crossJoin(F.broadcast(total))
         .select(
             "id",
-            (-F.log(F.coalesce(F.col("c"), F.lit(oov_count)) / F.col("tt"))).alias(
+            (-F.log(F.coalesce(F.col("c"), F.lit(0.5)) / F.col("tt"))).alias(
                 "s"
             ),
         )
@@ -765,12 +704,7 @@ def unigram_surprisal(
     )
 
 
-def crawl_diff(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
+def crawl_diff(old: DataFrame, new: DataFrame, id_col: str = "url") -> DataFrame:
     """Recrawl change detection between two crawl snapshots: per id,
     ``added`` (new only), ``removed`` (old only), ``changed``
     (fingerprint differs) or ``unchanged``. The downstream contract of
@@ -783,7 +717,7 @@ def crawl_diff(
     minimal-width equi-join form of the diff."""
     fp = lambda df, name: df.select(  # noqa: E731
         F.col(id_col).alias("id"),
-        F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias(name),
+        F.md5(F.coalesce(F.col("text"), F.lit(""))).alias(name),
     )
     j = fp(old, "old_fp").join(fp(new, "new_fp"), "id", "full_outer")
     status = (
@@ -920,17 +854,12 @@ TOPIC_TAXONOMY: dict[str, tuple[str, ...]] = {
 }
 
 
-def tag_topics_frame(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    taxonomy: dict[str, tuple[str, ...]] | None = None,
-) -> DataFrame:
+def tag_topics_frame(df: DataFrame) -> DataFrame:
     """Per-topic keyword hit counts plus the argmax topic: (id,
     n_<topic>..., topic) from ONE mapInArrow pass
     (``kernels.doc_rows``) — zero shuffles, zero joins. Hit = substring containment on the lowercased text,
     counted per keyword, not per occurrence. topic = the first topic in
-    taxonomy order with the strictly greatest positive count, 'other'
+    ``TOPIC_TAXONOMY`` order with the strictly greatest positive count, 'other'
     when nothing matches. NULL text counts zero everywhere and tags
     'other'.
 
@@ -942,9 +871,8 @@ def tag_topics_frame(
 
     from webxtract.kernels import doc_rows
 
-    tax = taxonomy or TOPIC_TAXONOMY
-    topics = list(tax)
-    kw_lists = [list(map(str, tax[t])) for t in topics]
+    topics = list(TOPIC_TAXONOMY)
+    kw_lists = [list(TOPIC_TAXONOMY[t]) for t in topics]
 
     def rows_of(t):  # noqa: ANN001, ANN202
         low = (t or "").lower()
@@ -958,12 +886,10 @@ def tag_topics_frame(
     fields = [StructField(f"n_{t}", LongType(), True) for t in topics] + [
         StructField("topic", StringType(), True)
     ]
-    return doc_rows(df, [id_col], [text_col], fields, lambda: rows_of)
+    return doc_rows(df, ["doc_id"], ["text"], fields, lambda: rows_of)
 
 
-def value_percentiles(
-    df: DataFrame, value: Column, id_col: str = "doc_id"
-) -> DataFrame:
+def value_percentiles(df: DataFrame, value: Column) -> DataFrame:
     """Exact corpus percent_rank of a per-document value (the relative
     quality/length thresholding primitive: 'drop the bottom 5% by
     length' without hand-picking absolute cutoffs).
@@ -979,7 +905,7 @@ def value_percentiles(
     every document sharing a value (ties share a rank). NULL values
     are excluded (no rank), matching the oracle's WHERE filter."""
     v = value.alias("__v")
-    base = df.select(F.col(id_col), v).where(F.col("__v").isNotNull())
+    base = df.select(F.col("doc_id"), v).where(F.col("__v").isNotNull())
     hist = base.groupBy("__v").agg(F.count(F.lit(1)).alias("__c"))
     from pyspark.sql import Window
 
@@ -1003,7 +929,7 @@ def value_percentiles(
         .alias("pct_rank"),
     )
     return base.join(F.broadcast(ranked), "__v").select(
-        id_col,
+        "doc_id",
         F.col("__v").alias("value"),
         F.round("pct_rank", 9).alias("pct_rank"),
     )
@@ -1066,12 +992,7 @@ def host_cap_sample(
 # the caller's (e.g. a quality-domain sample).
 
 
-def bucket_counts(
-    df: DataFrame,
-    n_buckets: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bucket_counts(df: DataFrame, n_buckets: int = 64) -> DataFrame:
     """Corpus histogram over hashed-bigram feature buckets — the 'raw'
     side of the DSIR ratio. One explode + one groupBy with only
     ``n_buckets`` groups: partial aggregation collapses every
@@ -1111,7 +1032,7 @@ def bucket_counts(
         )
 
     return (
-        df.select(text_col)
+        df.select("text")
         .mapInArrow(_partials, "bucket long, n long")
         .groupBy("bucket")
         .agg(F.sum("n").cast("long").alias("n"))
@@ -1122,8 +1043,6 @@ def dsir_scores_frame(
     df: DataFrame,
     log_ratio: list[float],
     n_buckets: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-document DSIR log importance weight: (id, n_grams,
     dsir_logweight) from ONE mapInArrow pass (``kernels.doc_rows``)
@@ -1161,22 +1080,14 @@ def dsir_scores_frame(
         StructField("n_grams", LongType(), True),
         StructField("dsir_logweight", DoubleType(), True),
     ]
-    return doc_rows(df, [id_col], [text_col], fields, lambda: rows_of)
+    return doc_rows(df, ["doc_id"], ["text"], fields, lambda: rows_of)
 
 
-def classifier_scores_frame(
-    df: DataFrame,
-    weights: list[float],
-    bias: float = -0.1,
-    n_buckets: int = 64,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def classifier_scores_frame(df: DataFrame, weights: list[float]) -> DataFrame:
     """FastText-style hashed linear quality classifier serving — the
     model-based filter step of FineWeb-Edu / CCNet / Llama-style
     curation (score every document with a cheap linear model, keep
-    above a threshold): (id, n_feats, clf_score, clf_keep) from ONE
+    from a score of 0.5 up): (id, n_feats, clf_score, clf_keep) from ONE
     mapInArrow pass (``kernels.doc_rows``) — zero shuffles, zero
     joins, embarrassingly parallel. ``weights`` (one per bucket;
     ``classifier_weights`` is the deterministic stand-in for a trained
@@ -1184,11 +1095,11 @@ def classifier_scores_frame(
 
     Features are all unigrams then all bigrams (document order,
     multiplicity kept — fastText's word + wordNgrams=2 feature set) of
-    ``kernels.ws_split``, hashed like dsir_scores_frame into
-    ``n_buckets``. logit = bias + mean of ``weights[bucket]`` (float64
+    ``kernels.ws_split``, hashed like dsir_scores_frame into 64
+    buckets. logit = -0.1 + mean of ``weights[bucket]`` (float64
     sum in feature order); clf_score = sigmoid(logit) with libm exp,
     rounded 6 dp with ``kernels.spark_round``; clf_keep compares the
-    ROUNDED score to ``threshold``, so last-ulp exp() drift cannot
+    ROUNDED score to 0.5, so last-ulp exp() drift cannot
     flip the verdict against the DuckDB oracle. The unigram leg always yields at least
     one feature (NULL, empty and blank text tokenize to the single
     empty token), so the mean never divides by zero and those rows
@@ -1203,24 +1114,23 @@ def classifier_scores_frame(
     from webxtract.kernels import doc_rows, md5_60, spark_round, ws_split
 
     w = [float(x) for x in weights]
-    bias, threshold = float(bias), float(threshold)
 
     def rows_of(t):  # noqa: ANN001, ANN202
         toks = ws_split(t)
         feats = toks + [toks[i] + " " + toks[i + 1] for i in range(len(toks) - 1)]
         acc = 0.0
         for g in feats:
-            acc = acc + w[md5_60(g) % n_buckets]
-        logit = bias + acc / float(len(feats))
+            acc = acc + w[md5_60(g) % 64]
+        logit = -0.1 + acc / float(len(feats))
         s = spark_round(1.0 / (1.0 + math.exp(-logit)), 6)
-        return [(len(feats), s, s >= threshold)]
+        return [(len(feats), s, s >= 0.5)]
 
     fields = [
         StructField("n_feats", LongType(), True),
         StructField("clf_score", DoubleType(), True),
         StructField("clf_keep", BooleanType(), True),
     ]
-    return doc_rows(df, [id_col], [text_col], fields, lambda: rows_of)
+    return doc_rows(df, ["doc_id"], ["text"], fields, lambda: rows_of)
 
 
 def split_assign_expr(
@@ -1259,25 +1169,16 @@ def split_assign_expr(
     return expr
 
 
-def bigram_perplexity(
-    df: DataFrame,
-    vocab_k: int = 1000,
-    bigram_k: int = 4000,
-    alpha: float = 0.7,
-    oov_count: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bigram_perplexity(df: DataFrame) -> DataFrame:
     """Interpolated bigram language-model perplexity against the
     corpus' own statistics — one rung up from unigram_surprisal toward
     the CCNet/DCLM KenLM filter, still fully deterministic:
-    ``p(w|prev) = alpha * c(prev,w)/c(prev) + (1-alpha) * c(w)/T``
-    with the bigram table truncated to the top ``bigram_k`` bigrams,
-    the unigram vocabulary to the top ``vocab_k`` (both (count DESC,
-    key ASC) at the boundary), and OOV unigrams smoothed to
-    ``oov_count``. Returns (id, n_bigrams, ppl = exp(-mean ln p)),
-    ppl rounded 6 dp; documents with <2 tokens (or NULL/blank text)
-    emit no row.
+    ``p(w|prev) = 0.7 * c(prev,w)/c(prev) + (1-0.7) * c(w)/T``
+    with the bigram table truncated to the top 4000 bigrams, the
+    unigram vocabulary to the top 1000 (both (count DESC, key ASC) at
+    the boundary), and OOV unigrams smoothed to a count of 0.5.
+    Returns (id, n_bigrams, ppl = exp(-mean ln p)), ppl rounded 6 dp;
+    documents with <2 tokens (or NULL/blank text) emit no row.
 
     Scale shape: the stats passes are partial-aggregated count
     reduces whose top-k heads are TakeOrderedAndProject; scoring
@@ -1290,12 +1191,12 @@ def bigram_perplexity(
     from webxtract.textops import tokens_expr, word_grams_expr
 
     base = df.filter(
-        F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
-    ).select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
+        F.col("text").isNotNull() & (F.trim(F.col("text")) != "")
+    ).select(F.col("doc_id").alias("id"), F.col("text").alias("t"))
     tok = base.select(F.explode(tokens_expr(F.col("t"))).alias("w"))
     uni = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     total = uni.agg(F.sum("c").alias("tt"))
-    vocab = uni.orderBy(F.col("c").desc(), "w").limit(vocab_k)
+    vocab = uni.orderBy(F.col("c").desc(), "w").limit(1000)
     bg = base.select(
         "id", F.explode(word_grams_expr(F.col("t"), 2)).alias("g")
     )
@@ -1303,7 +1204,7 @@ def bigram_perplexity(
         bg.groupBy("g")
         .agg(F.count(F.lit(1)).alias("cb"))
         .orderBy(F.col("cb").desc(), "g")
-        .limit(bigram_k)
+        .limit(4000)
     )
     split = bg.select(
         "id",
@@ -1327,10 +1228,10 @@ def bigram_perplexity(
         )
         .crossJoin(F.broadcast(total))
     )
-    p = F.lit(alpha) * F.coalesce(
+    p = F.lit(0.7) * F.coalesce(
         F.col("cb").cast("double") / F.col("cp").cast("double"), F.lit(0.0)
-    ) + F.lit(1.0 - alpha) * (
-        F.coalesce(F.col("cw").cast("double"), F.lit(float(oov_count)))
+    ) + F.lit(1.0 - 0.7) * (
+        F.coalesce(F.col("cw").cast("double"), F.lit(0.5))
         / F.col("tt").cast("double")
     )
     return (
@@ -1348,7 +1249,6 @@ def stratified_keep(
     value: Column,
     frac: float,
     strata_col: str = "lang",
-    id_col: str = "doc_id",
     mode: str = "rank",
 ) -> DataFrame:
     """Keep the top ``frac`` of documents per stratum by ``value`` —
@@ -1392,7 +1292,7 @@ def stratified_keep(
     cume = mode == "cume"
     rank_col = "cume_dist" if cume else "pct_rank"
     v = value.alias("__v")
-    base = df.select(F.col(id_col), F.col(strata_col).alias("__s"), v).where(
+    base = df.select(F.col("doc_id"), F.col(strata_col).alias("__s"), v).where(
         F.col("__v").isNotNull() & F.col("__s").isNotNull()
     )
     hist = base.groupBy("__s", "__v").agg(F.count(F.lit(1)).alias("__c"))
@@ -1424,7 +1324,7 @@ def stratified_keep(
         base.join(F.broadcast(ranked), ["__s", "__v"])
         .where(F.col(rank_col) >= F.lit(1.0 - frac))
         .select(
-            id_col,
+            "doc_id",
             F.col("__s").alias(strata_col),
             F.col("__v").alias("value"),
             rank_col,
@@ -1446,12 +1346,7 @@ def classifier_weights(n_buckets: int = 64) -> list[float]:
     ]
 
 
-def shard_assign(
-    df: DataFrame,
-    n_shards: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def shard_assign(df: DataFrame, n_shards: int) -> DataFrame:
     """Deterministic global-shuffle shard assignment — the last step
     before a training-data writer: every document gets ``(shard, pos,
     tok_offset)`` where shard = md5-60(id) mod n_shards, ``pos`` is
@@ -1476,12 +1371,12 @@ def shard_assign(
 
     from webxtract.textops import stable_hash60_expr, token_count_expr
 
-    h = stable_hash60_expr(F.col(id_col).cast("string"))
+    h = stable_hash60_expr(F.col("doc_id").cast("string"))
     base = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.pmod(h, F.lit(n_shards)).cast("int").alias("shard"),
         h.alias("__h"),
-        token_count_expr(F.coalesce(F.col(text_col), F.lit("")))
+        token_count_expr(F.coalesce(F.col("text"), F.lit("")))
         .cast("long")
         .alias("n_tokens"),
     )

@@ -17,15 +17,14 @@ Five strategies, all shuffle-conscious:
            shingle cannot go quadratic.
 - embedding cosine near-dup: see webxtract.similarity.
 
-Ordering contract for the pair generators' default hot-bucket caps: run
-EXACT dedup first. A cluster of >cap byte-identical documents (common
-boilerplate at crawl scale) saturates its LSH bucket and the default
-cap drops it from candidate generation — by design, because all-pairs
-inside it is quadratic poison — but exact_dedup collapses identical
-texts with a linear hash-groupBy, so after that pass the caps only ever
-suppress degenerate NEAR-duplicate clusters, where the boilerplate
-argument applies. Callers needing exhaustive pair recall without the
-exact-dedup pre-pass opt out with max_bucket_size=None.
+Ordering contract for the pair generators' hot-bucket cap
+(``MAX_BUCKET_SIZE``): run EXACT dedup first. A cluster of >cap
+byte-identical documents (common boilerplate at crawl scale) saturates
+its LSH bucket and the cap drops it from candidate generation — by
+design, because all-pairs inside it is quadratic poison — but
+exact_dedup collapses identical texts with a linear hash-groupBy, so
+after that pass the cap only ever suppresses degenerate NEAR-duplicate
+clusters, where the boilerplate argument applies.
 
 Hashing is ENGINE-NEUTRAL *and* JVM-fast: every shingle/token hash is
 the low 60 bits of md5 (one native call — Spark
@@ -59,6 +58,10 @@ MINHASH_BANDS = 4  # 4 bands x 3 rows
 
 SIMHASH_BITS = 32
 
+# Pair generators drop a band-bucket holding more documents than this
+# before their quadratic self-join or collect (module docstring).
+MAX_BUCKET_SIZE = 1000
+
 
 def shingle_hashes_expr(text: Column, k: int = 2) -> Column:
     """Distinct word-shingle hashes (bigint array, values in [0, 2^31-1))."""
@@ -70,8 +73,8 @@ def shingle_hashes_expr(text: Column, k: int = 2) -> Column:
     )
 
 
-def simhash_expr(text: Column, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash: per-token 60-bit hash (low ``bits`` used), one aggregate
+def simhash_expr(text: Column) -> Column:
+    """SimHash: per-token 60-bit hash (low ``SIMHASH_BITS`` used), one aggregate
     pass accumulating a per-bit +/-1 slot array, sign -> bit.
 
     Round-1 shape was 32 separate aggregate passes, each re-splitting
@@ -80,10 +83,10 @@ def simhash_expr(text: Column, bits: int = SIMHASH_BITS) -> Column:
     tok_hashes = F.transform(
         F.split(F.trim(text), r"\s+"), lambda t: stable_hash60_expr(t)
     )
-    pow2 = F.array(*[F.lit(2 ** b).cast("bigint") for b in range(bits)])
+    pow2 = F.array(*[F.lit(2 ** b).cast("bigint") for b in range(SIMHASH_BITS)])
     sums = F.aggregate(
         tok_hashes,
-        F.array_repeat(F.lit(0).cast("bigint"), bits),
+        F.array_repeat(F.lit(0).cast("bigint"), SIMHASH_BITS),
         lambda acc, h: F.zip_with(
             acc,
             pow2,
@@ -99,26 +102,20 @@ def simhash_expr(text: Column, bits: int = SIMHASH_BITS) -> Column:
     )
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact dedup groups: md5(text) -> (keep lowest id, dup count).
     Single shuffle on the 128-bit hash (never on the text payload)."""
     return (
-        df.select(F.md5(F.col(text_col)).alias("text_hash"), F.col(id_col))
+        df.select(F.md5(F.col("text")).alias("text_hash"), F.col("doc_id"))
         .groupBy("text_hash")
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count(F.lit(1)).alias("dup_count"),
         )
     )
 
 
-def dedup_incremental(
-    df: DataFrame,
-    seen: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_col: str = "text_hash",
-) -> DataFrame:
+def dedup_incremental(df: DataFrame, seen: DataFrame) -> DataFrame:
     """Cross-run incremental exact dedup — the resumable-curation
     primitive: a periodic crawl increment is deduplicated against the
     fingerprint table committed by all PRIOR runs (anti-join on the
@@ -135,33 +132,25 @@ def dedup_incremental(
     years-deep fingerprint table is large, so the anti-join is allowed
     to stay a shuffled join (AQE still broadcasts a small seen side)
     instead of OOMing on a forced build."""
-    inc = df.select(F.md5(F.col(text_col)).alias(hash_col), F.col(id_col))
-    fresh = inc.join(seen.select(hash_col), hash_col, "left_anti")
-    return fresh.groupBy(hash_col).agg(
-        F.min(id_col).alias("keep_id"),
+    inc = df.select(F.md5(F.col("text")).alias("text_hash"), F.col("doc_id"))
+    fresh = inc.join(seen.select("text_hash"), "text_hash", "left_anti")
+    return fresh.groupBy("text_hash").agg(
+        F.min("doc_id").alias("keep_id"),
         F.count(F.lit(1)).alias("dup_count"),
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.7,
-    shingle_k: int = 2,
-    max_bucket_size: int | None = 1000,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.7) -> DataFrame:
     """MinHash-LSH near-duplicate pairs (a < b) with exact Jaccard
     verification of band-bucket candidates.
 
     Scale shape: explode to (band, band_hash) keys -> shuffle on the
     bucket key only -> self-join inside buckets (tiny groups) -> exact
     verify. No all-pairs shuffle; skewed buckets are split by AQE.
-    ``max_bucket_size`` (default ON) drops band-buckets holding more
-    docs than the cap before the self-join: a bucket that large is a
-    boilerplate/near-constant signature cluster, and all-pairs inside
-    it is quadratic poison at 10^12 docs. Unbounded generation is the
-    explicit opt-in (``max_bucket_size=None``).
+    Band-buckets holding more than ``MAX_BUCKET_SIZE`` docs drop before
+    the self-join: a bucket that large is a boilerplate/near-constant
+    signature cluster, and all-pairs inside it is quadratic poison at
+    10^12 docs.
 
     The input is hash-repartitioned on the id first: signature hashing
     is the CPU-heavy stage and must use every core even when the scan
@@ -170,10 +159,10 @@ def minhash_lsh_pairs(
     yields thousands of splits and this exchange is a no-op cost-wise
     (it moves raw text once, before any per-candidate amplification).
     """
-    df = df.repartition(F.col(id_col))
+    df = df.repartition(F.col("doc_id"))
     sh = df.select(
-        F.col(id_col).alias("id"),
-        shingle_hashes_expr(F.col(text_col), shingle_k).alias("shingles"),
+        F.col("doc_id").alias("id"),
+        shingle_hashes_expr(F.col("text")).alias("shingles"),
     )
     # Signatures via explode + codegen'd min-aggregation instead of
     # 12 interpreted array passes: each permutation is plain JVM
@@ -205,17 +194,16 @@ def minhash_lsh_pairs(
     buckets = sigs.select(
         "id", F.posexplode("bands").alias("band", "band_hash")
     )
-    if max_bucket_size is not None:
-        # window count over the self-join's own shuffle key — cap for
-        # free (exchange reuse), no extra agg+join branches
-        from pyspark.sql import Window
+    # window count over the self-join's own shuffle key — cap for
+    # free (exchange reuse), no extra agg+join branches
+    from pyspark.sql import Window
 
-        w = Window.partitionBy("band", "band_hash")
-        buckets = (
-            buckets.withColumn("__n", F.count(F.lit(1)).over(w))
-            .filter(F.col("__n") <= max_bucket_size)
-            .drop("__n")
-        )
+    w = Window.partitionBy("band", "band_hash")
+    buckets = (
+        buckets.withColumn("__n", F.count(F.lit(1)).over(w))
+        .filter(F.col("__n") <= MAX_BUCKET_SIZE)
+        .drop("__n")
+    )
     cand = (
         buckets.alias("l")
         .join(
@@ -243,15 +231,15 @@ def minhash_lsh_pairs(
     )
 
 
-def _band_vals_expr(sh: Column, max_hamming: int, bits: int) -> Column:
+def _band_vals_expr(sh: Column, max_hamming: int) -> Column:
     """The ``max_hamming + 1`` bit-bands of a simhash as an array —
     any pair within the hamming budget agrees exactly on at least one
     band (pigeonhole), so equal band values are a 100%-recall candidate
     key. Shared by the batch pair generator and the incremental/
     streaming near-dedup."""
     n_bands = max_hamming + 1
-    base = bits // n_bands
-    sizes = [base + (1 if i < bits % n_bands else 0) for i in range(n_bands)]
+    base = SIMHASH_BITS // n_bands
+    sizes = [base + (1 if i < SIMHASH_BITS % n_bands else 0) for i in range(n_bands)]
     offs = [sum(sizes[:i]) for i in range(n_bands)]
     return F.array(
         *[
@@ -261,14 +249,7 @@ def _band_vals_expr(sh: Column, max_hamming: int, bits: int) -> Column:
     )
 
 
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    bits: int = SIMHASH_BITS,
-    max_bucket_size: int | None = 1000,
-) -> DataFrame:
+def simhash_near_dup_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-duplicate pairs (a < b, hamming distance <=
     ``max_hamming``) via the standard bit-band trick: split the
     fingerprint into ``max_hamming + 1`` bands — any pair within the
@@ -279,28 +260,23 @@ def simhash_near_dup_pairs(
 
     Scale shape: the posting rows carry (id, simhash, band, band_value)
     — one bigint of payload, no text — so the bucket shuffle is as
-    cheap as the key itself; ``max_bucket_size`` (default ON) drops
+    cheap as the key itself; ``MAX_BUCKET_SIZE`` drops
     degenerate bands (e.g. the all-zeros band of near-empty documents)
     before the quadratic self-join, same contract as the other pair
     generators."""
-    sh = df.select(
-        F.col(id_col).alias("id"), simhash_expr(F.col(text_col), bits).alias("sh")
-    )
+    from pyspark.sql import Window
+
+    sh = df.select(F.col("doc_id").alias("id"), simhash_expr(F.col("text")).alias("sh"))
     posting = sh.select(
         "id", "sh",
-        F.posexplode(_band_vals_expr(F.col("sh"), max_hamming, bits)).alias(
-            "band", "bval"
-        ),
+        F.posexplode(_band_vals_expr(F.col("sh"), max_hamming)).alias("band", "bval"),
     )
-    if max_bucket_size is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "bval")
-        posting = (
-            posting.withColumn("__n", F.count(F.lit(1)).over(w))
-            .filter(F.col("__n") <= max_bucket_size)
-            .drop("__n")
-        )
+    w = Window.partitionBy("band", "bval")
+    posting = (
+        posting.withColumn("__n", F.count(F.lit(1)).over(w))
+        .filter(F.col("__n") <= MAX_BUCKET_SIZE)
+        .drop("__n")
+    )
     cand = (
         posting.alias("l")
         .join(
@@ -329,8 +305,6 @@ def near_dedup_increment(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    bits: int = SIMHASH_BITS,
-    max_bucket_size: int | None = 1000,
 ) -> DataFrame:
     """Cross-run incremental NEAR-dedup — the hamming<=``max_hamming``
     twin of ``dedup_incremental``: a crawl increment is cleaned against
@@ -368,9 +342,7 @@ def near_dedup_increment(
     fingerprints) and never joins — it only shuffles its postings."""
     from pyspark.sql import Window
 
-    inc = df.select(
-        F.col(id_col).alias("id"), simhash_expr(F.col(text_col), bits).alias("sh")
-    )
+    inc = df.select(F.col(id_col).alias("id"), simhash_expr(F.col(text_col)).alias("sh"))
     null_id = F.lit(None).cast(inc.schema["id"].dataType)
 
     def postings(frame: DataFrame, is_seen: bool) -> DataFrame:
@@ -378,9 +350,7 @@ def near_dedup_increment(
             (F.col("id") if not is_seen else null_id).alias("id"),
             "sh",
             F.lit(is_seen).alias("is_seen"),
-            F.posexplode(_band_vals_expr(F.col("sh"), max_hamming, bits)).alias(
-                "band", "bval"
-            ),
+            F.posexplode(_band_vals_expr(F.col("sh"), max_hamming)).alias("band", "bval"),
         )
 
     u = postings(inc.filter(F.col("sh").isNotNull()), False).unionByName(
@@ -390,11 +360,10 @@ def near_dedup_increment(
         )
     )
     member = F.struct("id", "sh", "is_seen")
-    if max_bucket_size is not None:
-        w = Window.partitionBy("band", "bval")
-        member = F.when(
-            F.count(F.lit(1)).over(w) <= max_bucket_size, member
-        )  # otherwise NULL -> collect_list drops it: over-cap buckets go inert
+    w = Window.partitionBy("band", "bval")
+    member = F.when(
+        F.count(F.lit(1)).over(w) <= MAX_BUCKET_SIZE, member
+    )  # otherwise NULL -> collect_list drops it: over-cap buckets go inert
     buckets = (
         u.select("band", "bval", member.alias("m"))
         .groupBy("band", "bval")
@@ -633,12 +602,7 @@ def chunk_spans(
     ]
 
 
-def _chunk_meta_frame(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    boundary_mod: int = 16,
-) -> DataFrame:
+def _chunk_meta_frame(docs: DataFrame, boundary_mod: int) -> DataFrame:
     """(id, idx, n_tok, chunk_hash) — one row per ``chunk_spans`` chunk,
     with chunk_hash = ``kernels.md5_60`` of the chunk text: the chunk
     META rows duplicate_chunks and dedup_chunks start from, produced by
@@ -661,14 +625,12 @@ def _chunk_meta_frame(
         StructField("n_tok", IntegerType(), True),
         StructField("chunk_hash", LongType(), True),
     ]
-    docs = docs.select(F.col(id_col).alias("id"), text_col)
-    return doc_rows(docs, ["id"], [text_col], fields, lambda: rows_of)
+    docs = docs.select(F.col("doc_id").alias("id"), "text")
+    return doc_rows(docs, ["id"], ["text"], fields, lambda: rows_of)
 
 
 def duplicate_chunks(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     boundary_mod: int = 16,
     min_dup_tokens: int = 8,
 ) -> DataFrame:
@@ -682,7 +644,7 @@ def duplicate_chunks(
     hash plus two ints, with map-side partial aggregation. No pair join anywhere,
     so a million-fold-duplicated boilerplate chunk costs one group, not
     a quadratic bucket."""
-    ch = _chunk_meta_frame(docs, id_col, text_col, boundary_mod)
+    ch = _chunk_meta_frame(docs, boundary_mod)
     return (
         ch.filter(F.col("n_tok") >= min_dup_tokens)
         .groupBy("chunk_hash")
@@ -697,8 +659,6 @@ def duplicate_chunks(
 
 def dedup_chunks(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     boundary_mod: int = 16,
     min_dup_tokens: int = 8,
 ) -> DataFrame:
@@ -720,7 +680,7 @@ def dedup_chunks(
     from pyspark.sql.types import IntegerType, StringType, StructField
     from pyspark.sql.window import Window
 
-    ch = _chunk_meta_frame(docs, id_col, text_col, boundary_mod)
+    ch = _chunk_meta_frame(docs, boundary_mod)
     w = Window.partitionBy("chunk_hash").orderBy("id", "idx")
     drops = (
         ch.filter(F.col("n_tok") >= min_dup_tokens)
@@ -732,7 +692,7 @@ def dedup_chunks(
     # unforced join, as before: AQE broadcasts the (small) drop list at
     # runtime but degrades to a shuffle join instead of OOMing on a
     # pathologically duplicated corpus
-    joined = docs.select(F.col(id_col).alias("id"), text_col).join(
+    joined = docs.select(F.col("doc_id").alias("id"), "text").join(
         drops, "id", "left"
     )
 
@@ -750,22 +710,15 @@ def dedup_chunks(
         StructField("n_chunks", IntegerType(), True),
         StructField("n_dropped", IntegerType(), True),
     ]
-    return doc_rows(joined, ["id"], [text_col, "drop_idx"], fields, lambda: rebuild)
+    return doc_rows(joined, ["id"], ["text", "drop_idx"], fields, lambda: rebuild)
 
 
-def dedup_keep_best(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    score: Column | None = None,
-    a_col: str = "a",
-    b_col: str = "b",
-) -> DataFrame:
+def dedup_keep_best(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Cluster-representative selection — the step every fuzzy-dedup
     pipeline runs after its pair generator: resolve near-dup pairs to
     connected components, then keep exactly ONE member per cluster —
-    the highest-`score` document (ties break to the lowest id), the
-    "keep best, not first" policy quality-aware pipelines use instead
+    the longest document by `length(text)` (ties break to the lowest
+    id), the "keep best, not first" policy quality-aware pipelines use instead
     of arbitrary keep-first. Documents in no pair are their own
     singleton cluster and always keep themselves.
 
@@ -777,16 +730,15 @@ def dedup_keep_best(
     kernel rounds — on a pair list AQE fits into one partition that is
     one round of four Spark jobs — and its (id, component) output is
     already materialised; the representative choice is one window over
-    `component` whose rows are (id, score, component) only — `score` is
-    computed BEFORE the join so document text never shuffles. Cluster
+    `component` whose rows are (id, length, component) only — the
+    length is computed BEFORE the join so document text never shuffles. Cluster
     sizes are candidate-pair bounded (the upstream generators cap
     bucket fan-out), so the per-component window partition stays small
     by construction."""
     from pyspark.sql import Window
 
-    comp = dedup_components(pairs, a_col=a_col, b_col=b_col)
-    s = score if score is not None else F.length("text")
-    base = docs.select(F.col(id_col).alias("id"), s.alias("__score"))
+    comp = dedup_components(pairs)
+    base = docs.select(F.col("doc_id").alias("id"), F.length("text").alias("__score"))
     j = base.join(comp, "id", "left").select(
         "id",
         "__score",
@@ -806,8 +758,6 @@ def dedup_keep_best(
 
 def doc_containment(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     boundary_mod: int = 16,
     min_tok: int = 8,
     min_ratio: float = 0.8,
@@ -859,8 +809,8 @@ def doc_containment(
         StructField("chunk_hash", LongType(), True),
         StructField("n_chunks", LongType(), True),
     ]
-    docs = docs.select(F.col(id_col).alias("id"), text_col)
-    sets = doc_rows(docs, ["id"], [text_col], fields, lambda: rows_of)
+    docs = docs.select(F.col("doc_id").alias("id"), "text")
+    sets = doc_rows(docs, ["id"], ["text"], fields, lambda: rows_of)
     buckets = (
         sets.groupBy("chunk_hash")
         .agg(F.collect_list(F.struct("id", "n_chunks")).alias("m"))

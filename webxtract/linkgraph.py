@@ -29,7 +29,7 @@ rank is rounded to 9 dp in BOTH engines, so cross-engine float-sum
 ordering drift (~1e-16 relative per aggregation) is squashed each round
 instead of compounding; the final output rounds to 6 dp. Constants are
 computed with the same IEEE double operation sequence on both sides
-((1 - damping) / n, 1.0 / n).
+((1 - 0.85) / n, 1.0 / n).
 
 URL-resolution semantics (shared verbatim with the oracle SQL):
 fragments are stripped first; empty / javascript: / mailto: links drop;
@@ -74,23 +74,18 @@ def resolve_link_expr(link: Column, base_url: Column) -> Column:
     )
 
 
-def outlinks(
-    df: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    id_cols: tuple[str, ...] = (),
-) -> DataFrame:
+def outlinks(df: DataFrame, id_cols: tuple[str, ...] = ()) -> DataFrame:
     """Distinct (url, outlink) pairs per page: href extraction +
     resolution as one narrow expression layer over the page scan.
-    ``html_col`` is the binary page payload; it is read through the
+    ``html`` is the binary page payload; it is read through the
     binary->string cast (invalid bytes become replacement chars, never
     an ANSI MALFORMED_CHARACTER_CODING error — crawl payloads include
     PDFs and garbage, and href extraction over replacement-mangled
     bytes simply finds no links)."""
-    html_text = F.coalesce(F.col(html_col).cast("string"), F.lit(""))
+    html_text = F.coalesce(F.col("html").cast("string"), F.lit(""))
     exploded = df.select(
         *id_cols,
-        F.col(url_col).alias("url"),
+        "url",
         F.explode_outer(hrefs_expr(html_text)).alias("raw_link"),
     )
     resolved = exploded.select(
@@ -103,13 +98,13 @@ def outlinks(
     )
 
 
-def host_graph(links: DataFrame, src_col: str = "url", dst_col: str = "outlink") -> DataFrame:
+def host_graph(links: DataFrame) -> DataFrame:
     """Host-level edge weights from page-level links: (src_host,
     dst_host, n_links) — one partial-agged shuffle on the host pair."""
     return (
         links.select(
-            url_host_expr(F.col(src_col)).alias("src_host"),
-            url_host_expr(F.col(dst_col)).alias("dst_host"),
+            url_host_expr(F.col("url")).alias("src_host"),
+            url_host_expr(F.col("outlink")).alias("dst_host"),
         )
         .groupBy("src_host", "dst_host")
         .agg(F.count(F.lit(1)).alias("n_links"))
@@ -120,14 +115,12 @@ def pagerank(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    iterations: int = 5,
-    damping: float = 0.85,
     weight_col: str | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 3,
 ) -> DataFrame:
-    """Fixed-iteration PageRank with uniform dangling-mass
-    redistribution over a directed edge list. Returns (node, rank)
+    """Five-iteration PageRank (damping d = 0.85) with uniform
+    dangling-mass redistribution over a directed edge list. Returns (node, rank)
     with rank rounded to 6 dp; sum(rank) ≈ 1.
 
     Fault tolerance at cluster scale: each iteration truncates lineage
@@ -202,8 +195,8 @@ def pagerank(
     )
     n = base.count()
     ranks = base.withColumn("rank", F.lit(1.0 / n))
-    teleport = (1.0 - damping) / n
-    for it in range(iterations):
+    teleport = (1.0 - 0.85) / n
+    for it in range(5):
         contrib = (
             ranks.filter(F.col("out_deg") > 0)
             .join(e, ranks.node == e.src)
@@ -223,7 +216,7 @@ def pagerank(
                 "out_deg",
                 F.round(
                     F.lit(teleport)
-                    + F.lit(damping)
+                    + F.lit(0.85)
                     * (
                         F.coalesce(F.col("contrib"), F.lit(0.0))
                         + F.col("dm") / F.lit(float(n))
@@ -253,8 +246,6 @@ def anchor_pairs_expr(html_text: Column) -> Column:
 
 def anchor_texts(
     df: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
     id_cols: tuple[str, ...] = (),
     drop_nofollow: bool = False,
 ) -> DataFrame:
@@ -262,10 +253,10 @@ def anchor_texts(
     for link-context training data and search relevance. Same narrow
     expression shape as ``outlinks``; ``drop_nofollow`` excludes links
     whose <a> tag carries rel="nofollow" (crawl-politeness graphs)."""
-    html_text = F.coalesce(F.col(html_col).cast("string"), F.lit(""))
+    html_text = F.coalesce(F.col("html").cast("string"), F.lit(""))
     base = df.select(
         *id_cols,
-        F.col(url_col).alias("url"),
+        "url",
         F.explode_outer(anchor_pairs_expr(html_text)).alias("a"),
         F.regexp_extract_all(html_text, F.lit(NOFOLLOW_RE), 1).alias("__nf"),
     )
@@ -313,14 +304,12 @@ def _robots_text(col: Column) -> Column:
     return F.replace(F.coalesce(col, F.lit("")), F.lit("\r"), F.lit(""))
 
 
-def parse_robots_rules(
-    df: DataFrame, host_col: str = "host", robots_col: str = "robots_txt"
-) -> DataFrame:
+def parse_robots_rules(df: DataFrame) -> DataFrame:
     """(host, rules) with rules = array<(prefix, allow)> from the
     ``User-agent: *`` section; empty-path directives (``Disallow:``
     alone = allow all) drop. Pure regex expressions."""
     sec = F.regexp_extract(
-        _robots_text(F.col(robots_col)), ROBOTS_SECTION_RE, 1
+        _robots_text(F.col("robots_txt")), ROBOTS_SECTION_RE, 1
     )
 
     def tag(pat: str, allow: bool) -> Column:
@@ -332,7 +321,7 @@ def parse_robots_rules(
     rules = F.concat(
         tag(r"(?mi)^Disallow: (\S+)", False), tag(r"(?mi)^Allow: (\S+)", True)
     )
-    return df.select(F.col(host_col).alias("host"), rules.alias("rules"))
+    return df.select("host", rules.alias("rules"))
 
 
 def robots_allowed_expr(path: Column, rules: Column) -> Column:
@@ -361,9 +350,7 @@ def url_path_expr(url: Column) -> Column:
     return F.when(p == "", F.lit("/")).otherwise(p)
 
 
-def robots_verdicts(
-    urls: DataFrame, robots: DataFrame, url_col: str = "url"
-) -> DataFrame:
+def robots_verdicts(urls: DataFrame, robots: DataFrame) -> DataFrame:
     """Every input row plus a boolean ``allowed`` — the robots gate a
     crawl/curation pipeline applies before fetching or shipping a url.
 
@@ -374,12 +361,12 @@ def robots_verdicts(
     rules = parse_robots_rules(robots).groupBy("host").agg(
         F.flatten(F.collect_list("rules")).alias("rules")
     )
-    host = url_host_expr(F.col(url_col))
+    host = url_host_expr(F.col("url"))
     joined = urls.withColumn("__rhost", host).join(
         F.broadcast(rules), F.col("__rhost") == rules.host, "left"
     )
     allowed = robots_allowed_expr(
-        url_path_expr(F.col(url_col)), F.col("rules")
+        url_path_expr(F.col("url")), F.col("rules")
     )
     return joined.select(*urls.columns, allowed.alias("allowed"))
 
@@ -403,8 +390,6 @@ def crawl_delay_expr(robots_txt: Column) -> Column:
 def frontier_schedule(
     urls: DataFrame,
     robots: DataFrame | None = None,
-    priority_col: str = "priority",
-    url_col: str = "url",
     max_per_host: int = 1000,
     default_delay_sec: int = 1,
 ) -> DataFrame:
@@ -426,16 +411,16 @@ def frontier_schedule(
     from webxtract.curation import host_cap_sample
 
     base = urls.select(
-        F.col(url_col),
-        url_host_expr(F.col(url_col)).alias("host"),
-        F.col(priority_col),
+        F.col("url"),
+        url_host_expr(F.col("url")).alias("host"),
+        F.col("priority"),
     )
     ranked = host_cap_sample(
         base,
         cap=max_per_host,
         host_col="host",
-        id_col=url_col,
-        order_col=priority_col,
+        id_col="url",
+        order_col="priority",
     )
     delay = F.lit(int(default_delay_sec)).cast("long")
     if robots is not None:
@@ -448,19 +433,15 @@ def frontier_schedule(
         )
         delay = F.coalesce(F.col("__delay"), delay)
     return ranked.select(
-        url_col,
+        "url",
         "host",
-        priority_col,
+        "priority",
         "host_rank",
         ((F.col("host_rank") - 1) * delay).cast("long").alias("fetch_at_sec"),
     )
 
 
-def host_components(
-    hedges: DataFrame,
-    src_col: str = "src_host",
-    dst_col: str = "dst_host",
-) -> DataFrame:
+def host_components(hedges: DataFrame) -> DataFrame:
     """Weakly-connected components of the host graph — the site-family
     / mirror-cluster grouping (CC's host web graph ships exactly this
     as its component column): ``(host, component)`` where component is
@@ -476,7 +457,7 @@ def host_components(
     shuffle)."""
     from webxtract.dedup import dedup_components
 
-    comp = dedup_components(hedges, a_col=src_col, b_col=dst_col)
+    comp = dedup_components(hedges, a_col="src_host", b_col="dst_host")
     return comp.select(F.col("id").alias("host"), "component")
 
 

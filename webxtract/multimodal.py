@@ -38,9 +38,9 @@ MAGIC = {
     "mp4_ftyp": b"ftyp",  # at offset 4
 }
 
-def sniff_media_expr(payload_col: str = "payload"):
-    """Pure-expression magic-byte format sniff (no Python)."""
-    c = F.col(payload_col)
+def sniff_media_expr():
+    """Pure-expression magic-byte format sniff of ``payload`` (no Python)."""
+    c = F.col("payload")
     head = F.substring(c, 1, 8)
 
     def starts(sig: bytes):
@@ -141,17 +141,15 @@ NORMALIZED_SCHEMA = StructType(
 )
 
 
-def normalize_media(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def normalize_media(df: DataFrame) -> DataFrame:
     """S2 as a predicate-split pipeline: the cheap magic-byte sniff is a
     pure expression; ONLY rows whose sniffed format needs conversion
     (TIFF/BMP) enter the Python convert leg, one ``mapInArrow``
     (``kernels.doc_rows``) — everything else is expression-only
     passthrough. Narrow plan, no shuffle; the union mirrors the E4
     recomputation-prune shape."""
-    meta = sniff_media_expr(payload_col)
-    src = df.select(
-        "url", F.col(payload_col).alias("payload"), meta["format"].alias("fmt")
-    )
+    meta = sniff_media_expr()
+    src = df.select("url", "payload", meta["format"].alias("fmt"))
     needs_convert = F.col("fmt").isin(*_CONVERT_FORMATS)
 
     passthrough = src.filter(~needs_convert).select(
@@ -209,9 +207,7 @@ def _resize_via_pil(payload: bytes, width: int, height: int) -> bytes:  # pragma
     return buf.getvalue()
 
 
-def resize_images(
-    df: DataFrame, width: int = 224, height: int = 224, payload_col: str = "payload"
-) -> DataFrame:
+def resize_images(df: DataFrame, width: int = 224, height: int = 224) -> DataFrame:
     """Batch image resize to a fixed (width, height) — the standard
     vision-model preprocessing step. Pillow-gated kernel; deterministic
     stub in this sandbox (codec libs absent). Narrow plan: scan -> one
@@ -229,7 +225,7 @@ def resize_images(
     def rows_of(payload: bytes | None) -> list[tuple]:
         return [(resize(payload) if payload else None, width, height)]
 
-    return doc_rows(df, ["url"], [payload_col], RESIZED_SCHEMA.fields[1:], lambda: rows_of)
+    return doc_rows(df, ["url"], ["payload"], RESIZED_SCHEMA.fields[1:], lambda: rows_of)
 
 
 # ---------------------------------------------------- video frame sample
@@ -253,12 +249,7 @@ def _frame_count_stub(n_bytes: int, every_s: int, max_frames: int) -> int:
     return max(1, min(max_frames, duration_s // every_s))
 
 
-def sample_frames(
-    df: DataFrame,
-    every_s: int = 10,
-    max_frames: int = 8,
-    payload_col: str = "payload",
-) -> DataFrame:
+def sample_frames(df: DataFrame, every_s: int = 10, max_frames: int = 8) -> DataFrame:
     """Video -> one row per sampled frame (flatMap-shaped ``mapInArrow``
     via ``kernels.doc_rows``, like the S3 page explode). ffmpeg-gated
     kernel; the sandbox stub derives a deterministic frame count from
@@ -275,4 +266,4 @@ def sample_frames(
             for i in range(n)
         ]
 
-    return doc_rows(df, ["url"], [payload_col], FRAME_SCHEMA.fields[1:], lambda: rows_of)
+    return doc_rows(df, ["url"], ["payload"], FRAME_SCHEMA.fields[1:], lambda: rows_of)

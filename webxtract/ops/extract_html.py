@@ -30,7 +30,8 @@ from __future__ import annotations
 
 from html.parser import HTMLParser
 
-from webxtract.config import MAX_LINK_DENSITY, MIN_BLOCK_CHARS
+MIN_BLOCK_CHARS = 8        # drop non-heading blocks shorter than this
+MAX_LINK_DENSITY = 0.5     # drop blocks whose link-char ratio >= this
 
 BLOCK_TAGS = frozenset(
     "p h1 h2 h3 h4 h5 h6 li td th blockquote pre article section div".split()
@@ -117,11 +118,7 @@ class _BlockCollector(HTMLParser):
         self._flush()
 
 
-def extract_html(
-    payload: bytes | None,
-    min_block_chars: int = MIN_BLOCK_CHARS,
-    max_link_density: float = MAX_LINK_DENSITY,
-) -> tuple[str | None, list[dict], bool]:
+def extract_html(payload: bytes | None) -> tuple[str | None, list[dict], bool]:
     """bytes -> (extracted_text, spans, parse_failure).
 
     spans: [{"text", "confidence", "bbox": {x_min,y_min,x_max,y_max}}]
@@ -141,9 +138,9 @@ def extract_html(
     kept: list[tuple[str, float]] = []
     for text, link, total, heading in parser.blocks:
         ratio = (link / total) if total else 1.0
-        if ratio >= max_link_density:
+        if ratio >= MAX_LINK_DENSITY:
             continue
-        if not heading and total < min_block_chars:
+        if not heading and total < MIN_BLOCK_CHARS:
             continue
         kept.append((text, ratio))
 

@@ -63,8 +63,8 @@ def field_expr(text: Column, name: str) -> Column:
     return val
 
 
-def with_fields(df: DataFrame, text_col: str = "extracted_text") -> DataFrame:
-    """Append the 13 field columns parsed from ``text_col``."""
-    text = F.col(text_col)
+def with_fields(df: DataFrame) -> DataFrame:
+    """Append the 13 field columns parsed from ``extracted_text``."""
+    text = F.col("extracted_text")
     return df.select("*", *[field_expr(text, name).alias(name) for name in FIELD_NAMES])
 

@@ -6,7 +6,7 @@ document on a thread pool (validation_service.py:306-327). Here the
 battery (``validate``) runs in a scalar Arrow UDF: Spark hands it a
 batch of the columns the rules read — the 13 field strings, the three
 dates parsed by ``with_parsed_dates`` (date semantics stay in Catalyst),
-``run_date`` and ``minimum_age`` — and it returns the
+and ``run_date`` — and it returns the
 ``array<ValidatorResult>`` column in one Arrow batch. Inside
 ``run_pipeline`` that UDF is the rule kernel (``pipeline._rule_kernel``),
 which also runs type detection, fake scoring and integrity, the V-agg
@@ -155,17 +155,15 @@ _EPOCH_1985 = 5479  # 1985-01-01 as an epoch day
 
 class Doc:
     """One document as the rules see it: raw field strings (``None``
-    when NULL), parsed dates as epoch days, and the run parameters
-    (detection and fake scoring read the fields only)."""
+    when NULL), parsed dates and the run date as epoch days (detection
+    and fake scoring read the fields only)."""
 
-    __slots__ = (*FIELD_NAMES, "dob", "issue", "exp", "run", "minimum_age")
+    __slots__ = (*FIELD_NAMES, "dob", "issue", "exp", "run")
 
-    def __init__(self, fields, dob=None, issue=None, exp=None, run=None,  # noqa: ANN001
-                 minimum_age=None):  # noqa: ANN001
+    def __init__(self, fields, dob=None, issue=None, exp=None, run=None):  # noqa: ANN001
         for name, v in zip(FIELD_NAMES, fields):
             setattr(self, name, v)
-        self.dob, self.issue, self.exp = dob, issue, exp
-        self.run, self.minimum_age = run, minimum_age
+        self.dob, self.issue, self.exp, self.run = dob, issue, exp, run
 
 
 def _result(name: str, issues: list, warnings: list, fail: str, warn: str,
@@ -283,6 +281,10 @@ def document_expiry(d: Doc) -> tuple:
     return ("document_expiry", "passed", f"Document valid for {days} days", det)
 
 
+# The reference's default minimum age (validation_service.py:104-116).
+MINIMUM_AGE = 18
+
+
 def age_validation(d: Doc) -> tuple:
     """V3 (validators/age_validator.py:16-60) — warn (not fail) under the
     minimum age."""
@@ -291,12 +293,12 @@ def age_validation(d: Doc) -> tuple:
     if d.dob is None:
         return ("age_validation", "warning", "Could not parse date of birth format",
                 {"raw_dob": d.date_of_birth})
-    age, minimum = _age(d.run, d.dob), d.minimum_age
-    det = {"calculated_age": str(age), "minimum_age": str(minimum)}
-    if age < minimum:
+    age = _age(d.run, d.dob)
+    det = {"calculated_age": str(age), "minimum_age": str(MINIMUM_AGE)}
+    if age < MINIMUM_AGE:
         det["date_of_birth"] = _fmt_date(d.dob)
         return ("age_validation", "warning",
-                f"Person is {age} years old, minimum required is {minimum}", det)
+                f"Person is {age} years old, minimum required is {MINIMUM_AGE}", det)
     return ("age_validation", "passed", f"Age verification passed ({age} years old)", det)
 
 
@@ -1238,20 +1240,17 @@ def doc_columns() -> list[Column]:
 
 
 @row_udf(RESULTS_TYPE)
-def _battery(enum: str | None, run: int, minimum_age: int, *vals) -> list:  # noqa: ANN002
+def _battery(enum: str | None, run: int, *vals) -> list:  # noqa: ANN002
     """``validate`` over one row; ``vals`` are ``doc_columns``."""
-    return validate(enum, Doc(vals[:-3], *vals[-3:], run, minimum_age))
+    return validate(enum, Doc(vals[:-3], *vals[-3:], run))
 
 
-def validation_results_expr(
-    doc_type_enum: Column, run_date: Column, minimum_age: int = 18
-) -> Column:
+def validation_results_expr(doc_type_enum: Column, run_date: Column) -> Column:
     """Full battery: 5 base validators + the dispatched type-specific one
     (validation_service.py:283-295), over a frame that went through
     ``with_parsed_dates``. Never NULL."""
     return F.coalesce(
-        _battery(doc_type_enum, F.unix_date(run_date), F.lit(minimum_age),
-                 *doc_columns()),
+        _battery(doc_type_enum, F.unix_date(run_date), *doc_columns()),
         F.array().cast(RESULTS_TYPE),
     )
 

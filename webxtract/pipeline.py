@@ -42,7 +42,7 @@ from pyspark.sql.types import (
 )
 
 from webxtract.audit import partition_by_url
-from webxtract.config import DEFAULT_MINIMUM_AGE, DEFAULT_RUN_DATE
+from webxtract.config import DEFAULT_RUN_DATE
 from webxtract.kernels import row_udf
 from webxtract.ops.detect_type import detect
 from webxtract.ops.extract import extract_pages
@@ -105,11 +105,11 @@ _RULES_TYPE = StructType([
 
 
 @row_udf(_RULES_TYPE)
-def _rule_kernel(text: str | None, run: int, minimum_age: int, *vals) -> tuple:  # noqa: ANN002
+def _rule_kernel(text: str | None, run: int, *vals) -> tuple:  # noqa: ANN002
     """Every rule for one document: the required-field check,
     detection, fake scoring and integrity, the enum, the validator
     battery and its summary; ``vals`` are ``validators.doc_columns``."""
-    d = Doc(vals[:-3], *vals[-3:], run, minimum_age)
+    d = Doc(vals[:-3], *vals[-3:], run)
     missing = missing_fields(d)
     doc_type = detect(d)
     fake = fake_result(d, text)
@@ -133,18 +133,13 @@ def _epoch_day(run_date: str) -> int:
     raise ValueError(f"run_date must be a YYYY-MM-DD date, got {run_date!r}")
 
 
-def with_rules(
-    df: DataFrame,
-    run_date: str = DEFAULT_RUN_DATE,
-    minimum_age: int = DEFAULT_MINIMUM_AGE,
-) -> DataFrame:
+def with_rules(df: DataFrame, run_date: str = DEFAULT_RUN_DATE) -> DataFrame:
     """Append every per-document rule output (``_RULES_TYPE``'s fields)
     to a frame holding ``extracted_text`` and the 13 field columns, with
     one evaluation of the rule kernel per row. A ``run_date`` that is
     not a ``YYYY-MM-DD`` date raises ValueError here, before any job."""
     kernel = _rule_kernel(
-        F.col("extracted_text"), F.lit(_epoch_day(run_date)), F.lit(minimum_age),
-        *doc_columns(),
+        F.col("extracted_text"), F.lit(_epoch_day(run_date)), *doc_columns()
     )
     rules = F.col("__rules")
     return with_parsed_dates(df).select("*", kernel.alias("__rules")).select(
@@ -152,11 +147,7 @@ def with_rules(
     )
 
 
-def run_pipeline(
-    pages: DataFrame,
-    run_date: str = DEFAULT_RUN_DATE,
-    minimum_age: int = DEFAULT_MINIMUM_AGE,
-) -> DataFrame:
+def run_pipeline(pages: DataFrame, run_date: str = DEFAULT_RUN_DATE) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> full validation rows.
 
     The salted url-hash repartition sits between the field projection
@@ -166,7 +157,7 @@ def run_pipeline(
     runs."""
     fields = with_fields(extract_pages(pages))
     n_part = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    ruled = with_rules(partition_by_url(fields, n_part), run_date, minimum_age)
+    ruled = with_rules(partition_by_url(fields, n_part), run_date)
     return ruled.select(
         *fields.columns, "missing_fields", "fields_valid", "doc_type", "fake_detection",
         "integrity_score", "integrity_valid", "doc_type_enum",

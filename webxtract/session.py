@@ -161,7 +161,21 @@ def _start_python_workers(spark: SparkSession) -> None:
                     exc_info=True,
                 )
 
-    threading.Thread(target=run, name=WARMUP_GROUP, daemon=True).start()
+    sc._webxtract_warmup = threading.Thread(target=run, name=WARMUP_GROUP, daemon=True)
+    sc._webxtract_warmup.start()
+
+
+def wait_for_python_workers(spark: SparkSession) -> None:
+    """Wait, at most 60 s, until the warm-up job of ``spark``'s
+    context (job group ``WARMUP_GROUP``) has ended; a no-op when it has
+    ended already or was never started. A driver that exits on an error
+    calls this first: the JVM's shutdown then aborts no warm-up task,
+    so the error is not followed by Spark's task-abort traces. The job
+    is waited for, not cancelled: cancelling aborts its write, and
+    Spark logs that abort as ERROR traces of its own."""
+    thread = getattr(spark.sparkContext, "_webxtract_warmup", None)
+    if thread is not None:
+        thread.join(60)
 
 
 def _warm_worker(batches):  # noqa: ANN001, ANN201

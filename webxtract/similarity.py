@@ -98,13 +98,7 @@ def _inorder_sumsq(v) -> float:
     return s
 
 
-def brute_force_topk(
-    df: DataFrame,
-    query: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def brute_force_topk(df: DataFrame, query: list[float], k: int = 10) -> DataFrame:
     """Exact cosine top-k; ties broken by id for determinism. The
     cosine is the string-built unrolled kernel (see dot_sql): the
     whole-corpus scan is this operator's cost at 10^12 rows, and the
@@ -112,12 +106,12 @@ def brute_force_topk(
     interpreted lambda dispatch."""
     return (
         df.select(
-            F.col(id_col),
-            F.expr(cosine_sql(vec_col, list(query), len(query))).alias(
+            F.col("vec_id"),
+            F.expr(cosine_sql("embedding", list(query), len(query))).alias(
                 "cosine"
             ),
         )
-        .orderBy(F.desc("cosine"), F.col(id_col))
+        .orderBy(F.desc("cosine"), F.col("vec_id"))
         .limit(k)
     )
 
@@ -140,12 +134,12 @@ def _proj_sql(vec_sql: str, h: int, dim: int) -> str:
     )
 
 
-def bucket_expr(vec_sql: str, dim: int, n_planes: int = N_PLANES) -> Column:
-    """Signed-random-projection bucket id (0..2^n_planes-1).
+def bucket_expr(vec_sql: str, dim: int) -> Column:
+    """Signed-random-projection bucket id (0..2^N_PLANES-1).
     ``vec_sql`` is the vector column's SQL name/expression."""
     terms = [
         f"IF({_proj_sql(vec_sql, h, dim)} >= 0, {2 ** h}, 0)"
-        for h in range(n_planes)
+        for h in range(N_PLANES)
     ]
     return F.expr(" + ".join(terms))
 
@@ -154,9 +148,6 @@ def lsh_topk(
     df: DataFrame,
     query: list[float],
     k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_planes: int = N_PLANES,
     multiprobe: bool = False,
 ) -> DataFrame:
     """ANN top-k: restrict to the query's hyperplane bucket, then exact
@@ -166,25 +157,25 @@ def lsh_topk(
     ``multiprobe=True`` additionally probes every Hamming-distance-1
     bucket (each single plane flipped): vectors near a hyperplane land
     on either side by a hair, so the 1-flip neighborhood recovers most
-    of the single-probe recall loss for ~(n_planes+1)x the candidate
-    volume — still a 2^n_planes/(n_planes+1) fraction of the corpus,
+    of the single-probe recall loss for ~(N_PLANES+1)x the candidate
+    volume — still a 2^N_PLANES/(N_PLANES+1) fraction of the corpus,
     and the probe set is a driver-side constant (no extra pass)."""
     dim = len(query)
     qbucket = sum(
         (2 ** h) if sum(_plane_weight(h, i) * query[i] for i in range(dim)) >= 0 else 0
-        for h in range(n_planes)
+        for h in range(N_PLANES)
     )
     probes = [qbucket]
     if multiprobe:
-        probes += [qbucket ^ (1 << h) for h in range(n_planes)]
+        probes += [qbucket ^ (1 << h) for h in range(N_PLANES)]
     return (
-        df.withColumn("bucket", bucket_expr(vec_col, dim, n_planes))
+        df.withColumn("bucket", bucket_expr("embedding", dim))
         .filter(F.col("bucket").isin(probes))
         .select(
-            F.col(id_col),
-            F.expr(cosine_sql(vec_col, list(query), dim)).alias("cosine"),
+            F.col("vec_id"),
+            F.expr(cosine_sql("embedding", list(query), dim)).alias("cosine"),
         )
-        .orderBy(F.desc("cosine"), F.col(id_col))
+        .orderBy(F.desc("cosine"), F.col("vec_id"))
         .limit(k)
     )
 
@@ -272,20 +263,18 @@ def _pair_table(group, dim: int, thr: float):  # noqa: ANN001, ANN202
     return pa.table(list(pairs), names=["a", "b", "cosine"])
 
 
-def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(id long, v) of ``df`` without the rows whose id or vector is
-    NULL: such a row joins no pair, as in the oracles' ``l.vec_id <
-    r.vec_id`` self-joins."""
+def _vectors(df: DataFrame) -> DataFrame:
+    """(id long, v) of ``df``'s (vec_id, embedding) without the rows
+    whose id or vector is NULL: such a row joins no pair, as in the
+    oracles' ``l.vec_id < r.vec_id`` self-joins."""
     return df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
+        F.col("vec_id").cast("long").alias("id"), F.col("embedding").alias("v")
     ).where(F.col("id").isNotNull() & F.col("v").isNotNull())
 
 
 def near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     dim: int = 64,
     planes_per_band: int = 16,
     n_bands: int = 2,
@@ -368,8 +357,8 @@ def near_dup_pairs(
             group = group.slice(0, 0)
         return _pair_table(group, dim, thr)
 
-    vec_type = df.schema[vec_col].dataType.simpleString()
-    posting = _vectors(df, id_col, vec_col).mapInArrow(
+    vec_type = df.schema["embedding"].dataType.simpleString()
+    posting = _vectors(df).mapInArrow(
         _bucketize, f"band int, bucket long, id long, v {vec_type}"
     )
     return (
@@ -379,12 +368,7 @@ def near_dup_pairs(
     )
 
 
-def kmeans_assign(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def kmeans_assign(df: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """One Lloyd assignment step — the embedding-clustering primitive
     behind semantic-dedup / SemDeDup-style curation (cluster the
     corpus, then prune within clusters): assign every vector to its
@@ -402,9 +386,9 @@ def kmeans_assign(
     class as the 1-row query-vector fetch); full Lloyd iterations
     would alternate this map pass with a (cluster, dim)-keyed mean —
     the driver never touches corpus rows."""
-    best = assign_expr(F.col(vec_col), centroids)
+    best = assign_expr(F.col("embedding"), centroids)
     return df.select(
-        F.col(id_col),
+        F.col("vec_id"),
         best["cluster"].alias("cluster"),
         best["dist2"].alias("dist2"),
     )
@@ -441,12 +425,7 @@ def assign_expr(v: Column, centroids: list[list[float]]) -> Column:
     return F.array_min(scored)
 
 
-def kmeans_update(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def kmeans_update(df: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """The other half of a Lloyd iteration: per-cluster member count
     and the recomputed mean centroid (each dimension rounded 6 dp).
     Returns (cluster, n_members, centroid: array<double>); empty
@@ -466,8 +445,8 @@ def kmeans_update(
     # in ONE select loses the lambda-struct's field names (Spark 4
     # renames them col1/col2 during the generator rewrite)
     a = df.select(
-        assign_expr(F.col(vec_col), centroids)["cluster"].alias("cluster"),
-        F.col(vec_col).alias("__v"),
+        assign_expr(F.col("embedding"), centroids)["cluster"].alias("cluster"),
+        F.col("embedding").alias("__v"),
     ).select("cluster", F.posexplode("__v").alias("dim", "val"))
     per_dim = a.groupBy("cluster", "dim").agg(
         F.round(F.avg(F.col("val").cast("double")), 6).alias("m"),
@@ -493,8 +472,6 @@ def semantic_dedup_pairs(
     df: DataFrame,
     centroids: list[list[float]],
     threshold: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs: k-means clusters
     as the blocking key, exact cosine only WITHIN a cluster, pairs with
@@ -574,8 +551,8 @@ def semantic_dedup_pairs(
     def _cluster_pairs(group):  # noqa: ANN001, ANN202
         return _pair_table(group, dim, thr)
 
-    vec_type = df.schema[vec_col].dataType.simpleString()
-    a = _vectors(df, id_col, vec_col).mapInArrow(
+    vec_type = df.schema["embedding"].dataType.simpleString()
+    a = _vectors(df).mapInArrow(
         _assign, f"id long, v {vec_type}, cluster long"
     )
     return a.groupBy("cluster").applyInArrow(_cluster_pairs, _PAIR_SCHEMA)

@@ -22,15 +22,12 @@ from webxtract.schemas import PAGES_SCHEMA
 log = logging.getLogger(__name__)
 
 
-def read_page_stream(
-    spark: SparkSession,
-    input_path: str,
-    max_files_per_trigger: int = 16,
-) -> DataFrame:
-    """File-source stream of page parquet drops."""
+def read_page_stream(spark: SparkSession, input_path: str) -> DataFrame:
+    """File-source stream of page parquet drops, at most 16 files per
+    microbatch."""
     return (
         spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 16)
         .parquet(input_path)
     )
 
@@ -420,19 +417,15 @@ def start_near_dedup_stream(
     )
 
 
-def read_warc_stream(
-    spark: SparkSession,
-    input_path: str,
-    max_files_per_trigger: int = 16,
-) -> DataFrame:
+def read_warc_stream(spark: SparkSession, input_path: str) -> DataFrame:
     """File-source stream of WARC segment drops: binaryFile streaming
     source -> ``warc.parse_segments``, the ``kernels.doc_rows`` parser
     the batch reader (``warc.read_warc``) runs. New crawl
     segments landing in ``input_path`` are picked up per microbatch;
-    segment files are the parallelism AND progress-tracking unit
-    (file-source offsets in the checkpoint record which segments are
-    committed — exactly the crawl-ingest contract: a segment is either
-    fully extracted and committed or replayed whole)."""
+    segment files (at most 16 per microbatch) are the parallelism AND
+    progress-tracking unit (file-source offsets in the checkpoint record
+    which segments are committed — exactly the crawl-ingest contract: a
+    segment is either fully extracted and committed or replayed whole)."""
     from webxtract import warc as W
 
     seg = (
@@ -442,7 +435,7 @@ def read_warc_stream(
         .schema(
             "path string, modificationTime timestamp, length long, content binary"
         )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 16)
         .option("pathGlobFilter", "*.warc*")
         .load(input_path)
         .select("path", "content")

@@ -265,7 +265,6 @@ def lang_id_expr(text: Column) -> Column:
 
 def lang_id_clf_frame(
     df: "DataFrame",  # noqa: F821
-    text_col: str = "text",
     keep_cols: tuple[str, ...] = ("doc_id",),
 ) -> "DataFrame":  # noqa: F821
     """Trained hashed-NB language ID — the model-based upgrade of the
@@ -316,7 +315,7 @@ def lang_id_clf_frame(
         StructField("predicted_lang", StringType(), True),
         StructField("lang_score", DoubleType(), True),
     ]
-    return doc_rows(df, keep_cols, [text_col], fields, lambda: rows_of)
+    return doc_rows(df, keep_cols, ["text"], fields, lambda: rows_of)
 
 
 def stable_hash60_expr(s: Column) -> Column:
@@ -400,11 +399,7 @@ def _script_lut():  # noqa: ANN202
     return _SCRIPT_LUT["arr"], _SCRIPT_LUT["res"]
 
 
-def script_signals_frame(
-    df: "DataFrame",  # noqa: F821
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> "DataFrame":  # noqa: F821
+def script_signals_frame(df: "DataFrame") -> "DataFrame":  # noqa: F821
     """Per-document Unicode-script profile — the cheap router that
     decides which downstream language/quality stack a crawl document
     enters before any model-based language ID runs: (id,
@@ -479,23 +474,17 @@ def script_signals_frame(
         StructField(c, StringType() if c == "dominant_script" else DoubleType(), True)
         for c in out_cols
     ]
-    return doc_rows(df, [id_col], [text_col], fields, make_rows)
+    return doc_rows(df, ["doc_id"], ["text"], fields, make_rows)
 
 
-def bm25_scores(
-    df: "DataFrame",  # noqa: F821
-    terms: tuple[str, ...],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> "DataFrame":  # noqa: F821
+def bm25_scores(df: "DataFrame", terms: tuple[str, ...]) -> "DataFrame":  # noqa: F821
     """Okapi BM25 relevance of every document against a fixed query
     term set — the lexical scorer used for search relevance and
     quality-targeted data selection (select-by-query curation).
 
     idf(t) = ln((N - df_t + 0.5)/(df_t + 0.5) + 1)   (Lucene form)
     score  = Σ_t idf_t · tf_t·(k1+1) / (tf_t + k1·(1-b + b·dl/avgdl))
+    with k1 = 1.2 and b = 0.75.
 
     Scale shape: TWO corpus scans and ZERO wide shuffles — pass 1 is a
     partial-aggregated global reduce to one stats row (N, avgdl exact
@@ -512,15 +501,15 @@ def bm25_scores(
     from pyspark.sql import functions as F
 
     toks = F.filter(
-        tokens_expr(F.coalesce(F.col(text_col), F.lit(""))),
+        tokens_expr(F.coalesce(F.col("text"), F.lit(""))),
         lambda t: F.length(t) > 0,
     )
     def _tf(term: str):  # one-arg lambda: a 2-arg filter lambda would
         # receive the array INDEX as its second argument
         return F.size(F.filter(F.col("__toks"), lambda x: x == F.lit(term)))
 
-    base = df.select(F.col(id_col), toks.alias("__toks")).select(
-        id_col,
+    base = df.select(F.col("doc_id"), toks.alias("__toks")).select(
+        "doc_id",
         F.size("__toks").cast("long").alias("__dl"),
         *[_tf(t).cast("long").alias(f"__tf_{i}") for i, t in enumerate(terms)],
     )
@@ -541,11 +530,11 @@ def bm25_scores(
         idf = F.log(
             (n.cast("double") - dfr + F.lit(0.5)) / (dfr + F.lit(0.5)) + F.lit(1.0)
         )
-        norm = F.lit(1.0 - b) + F.lit(b) * (F.col("__dl").cast("double") / avgdl)
-        score = score + idf * (tf * F.lit(k1 + 1.0)) / (tf + F.lit(k1) * norm)
+        norm = F.lit(1.0 - 0.75) + F.lit(0.75) * (F.col("__dl").cast("double") / avgdl)
+        score = score + idf * (tf * F.lit(1.2 + 1.0)) / (tf + F.lit(1.2) * norm)
     return (
         base.crossJoin(F.broadcast(stats))
-        .select(id_col, F.round(score, 6).alias("bm25"))
+        .select("doc_id", F.round(score, 6).alias("bm25"))
     )
 
 
@@ -564,7 +553,6 @@ def extraction_eval(
     df: "DataFrame",  # noqa: F821
     gold_col: Column,
     cand_col: Column,
-    id_cols: tuple[str, ...] = ("doc_id",),
 ) -> "DataFrame":  # noqa: F821
     """Token-multiset precision / recall / F1 of a candidate extraction
     against gold text — the scoring function of the public
@@ -620,8 +608,8 @@ def extraction_eval(
     # skips lambda-variable trees), so the aggregate would run 3x/row.
     # CollapseProject leaves the split alone — the alias is non-cheap
     # and referenced more than once.
-    stage1 = df.select(*id_cols, bind_once(pair, _counts).alias("__m")).select(
-        *id_cols,
+    stage1 = df.select("doc_id", bind_once(pair, _counts).alias("__m")).select(
+        "doc_id",
         F.col("__m")["n_gold"].alias("n_gold"),
         F.col("__m")["n_cand"].alias("n_cand"),
         F.col("__m")["inter"].alias("inter_tokens"),
@@ -631,7 +619,7 @@ def extraction_eval(
     r_raw = iv.cast("double") / n_g.cast("double")
     f1_raw = F.lit(2.0) * p_raw * r_raw / (p_raw + r_raw)
     return stage1.select(
-        *id_cols,
+        "doc_id",
         "n_gold",
         "n_cand",
         "inter_tokens",
@@ -646,8 +634,6 @@ def extraction_eval(
 
 def build_postings(
     df: "DataFrame",  # noqa: F821
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_postings: int = 100,
     min_df: int = 1,
     n_salts: int = 16,
@@ -675,38 +661,36 @@ def build_postings(
     """
     from pyspark.sql import Window
 
-    toks = eval_tokens_expr(F.coalesce(F.col(text_col), F.lit("")))
+    toks = eval_tokens_expr(F.coalesce(F.col("text"), F.lit("")))
     tf = (
-        df.select(F.col(id_col), F.explode(toks).alias("term"))
-        .groupBy("term", id_col)
+        df.select(F.col("doc_id"), F.explode(toks).alias("term"))
+        .groupBy("term", "doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
     stats = tf.groupBy("term").agg(
         F.count(F.lit(1)).cast("long").alias("df"),
         F.sum("tf").cast("long").alias("total_tf"),
     )
-    salt = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts))
+    salt = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_salts))
     w_salt = Window.partitionBy("term", salt).orderBy(
-        F.desc("tf"), F.col(id_col)
+        F.desc("tf"), F.col("doc_id")
     )
     cand = tf.withColumn("__r", F.row_number().over(w_salt)).where(
         F.col("__r") <= max_postings
     )
-    w_term = Window.partitionBy("term").orderBy(F.desc("tf"), F.col(id_col))
+    w_term = Window.partitionBy("term").orderBy(F.desc("tf"), F.col("doc_id"))
     ranked = cand.withColumn("rank", F.row_number().over(w_term)).where(
         F.col("rank") <= max_postings
     )
     return (
         ranked.join(stats, "term")
         .where(F.col("df") >= min_df)
-        .select("term", "df", "total_tf", "rank", F.col(id_col), "tf")
+        .select("term", "df", "total_tf", "rank", F.col("doc_id"), "tf")
     )
 
 
 def bpe_pair_counts(
     df: "DataFrame",  # noqa: F821
-    text_col: str = "text",
-    id_col: str = "doc_id",
     top_k: int = 50,
 ) -> "DataFrame":  # noqa: F821
     """The first BPE merge step of tokenizer induction: adjacent
@@ -725,7 +709,7 @@ def bpe_pair_counts(
     → TakeOrderedAndProject (per-partition heaps + driver merge),
     never a full sort. Analyzer: eval_tokens_expr, shared with
     extraction-quality scoring and the postings build."""
-    toks = eval_tokens_expr(F.coalesce(F.col(text_col), F.lit("")))
+    toks = eval_tokens_expr(F.coalesce(F.col("text"), F.lit("")))
     vocab = (
         df.select(F.explode(toks).alias("word"))
         .groupBy("word")
@@ -751,11 +735,7 @@ def bpe_pair_counts(
 SENTENCE_RE = r"[^.!?]+[.!?]*"
 
 
-def split_sentences(
-    df: "DataFrame",  # noqa: F821
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> "DataFrame":  # noqa: F821
+def split_sentences(df: "DataFrame") -> "DataFrame":  # noqa: F821
     """Sentence segmentation: one row per sentence, ``(id, sent_idx,
     sentence)`` with 0-based post-filter indexes — the preprocessing
     step feeding per-sentence dedup, bitext alignment, and
@@ -778,7 +758,7 @@ def split_sentences(
     sents = F.filter(
         F.transform(
             F.regexp_extract_all(
-                F.coalesce(F.col(text_col), F.lit("")),
+                F.coalesce(F.col("text"), F.lit("")),
                 F.lit(SENTENCE_RE),
                 0,
             ),
@@ -790,8 +770,8 @@ def split_sentences(
         lambda s: s != "",
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(sents).alias("sent_idx", "sentence"),
     ).select(
-        id_col, F.col("sent_idx").cast("long").alias("sent_idx"), "sentence"
+        "doc_id", F.col("sent_idx").cast("long").alias("sent_idx"), "sentence"
     )

@@ -101,12 +101,11 @@ def warc_response_record(
     date_iso: str,
     payload: bytes,
     content_type: str = "text/html; charset=utf-8",
-    status: int = 200,
 ) -> bytes:
     """One uncompressed WARC/1.0 response record (WARC headers + an
-    HTTP/1.1 response block) with trailing record separator."""
+    HTTP/1.1 200 response block) with trailing record separator."""
     http = (
-        f"HTTP/1.1 {status} OK\r\n"
+        "HTTP/1.1 200 OK\r\n"
         f"Content-Type: {content_type}\r\n"
         f"Content-Length: {len(payload)}\r\n\r\n"
     ).encode("latin-1") + payload
@@ -432,28 +431,13 @@ def _zipnum_ranked(
 
 
 def cdx_line_expr(
-    urlkey: Column,
-    timestamp: Column,
-    url: Column,
-    mime: Column,
-    status: Column,
-    digest: Column | None = None,
-    length: Column | None = None,
-    offset: Column | None = None,
-    filename: Column | None = None,
+    urlkey: Column, timestamp: Column, url: Column, mime: Column, status: Column
 ) -> Column:
-    """The canonical space-separated CDX line (CDX-9 when the
-    random-access coordinate columns are given, the 5-field
-    SQL-derivable prefix otherwise). Pure concat — zero Python."""
-    parts = [urlkey, timestamp, url, mime, status.cast("string")]
-    if digest is not None:
-        parts += [
-            digest,
-            length.cast("string"),
-            offset.cast("string"),
-            filename,
-        ]
-    return F.concat_ws(" ", *parts)
+    """The space-separated 5-field CDX line (urlkey, timestamp, url,
+    mime, status): the SQL-derivable prefix of CDX-9, whose digest and
+    random-access coordinates only the segment writer knows. Pure
+    concat — zero Python."""
+    return F.concat_ws(" ", urlkey, timestamp, url, mime, status.cast("string"))
 
 
 def zipnum_index(
@@ -808,13 +792,11 @@ def wet_warcinfo_record(filename: str, date_iso: str) -> bytes:
     return head + body + _CRLF2
 
 
-def _write_segments(
-    df: DataFrame, kind: str, out_dir: str, run_date_iso: str, prefix: str
-) -> DataFrame:
+def _write_segments(df: DataFrame, kind: str, out_dir: str, run_date_iso: str) -> DataFrame:
     """The WET and WAT sink: each task writes the bytes of its
     partition's ``{kind}_record`` column, unchanged (so each record's
     ``Content-Length``, which Spark computed over them, stays true),
-    into one ``{prefix}-{pid:05d}.warc.{kind}.gz`` of per-record gzip
+    into one ``seg-{pid:05d}.warc.{kind}.gz`` of per-record gzip
     members (mtime=0 — segment bytes are a pure function of partition
     content), headed by a warcinfo record. A NULL record (a page with
     a NULL url has no ``WARC-Target-URI``, which a record must carry)
@@ -837,7 +819,7 @@ def _write_segments(
 
     def write(batches):  # noqa: ANN001, ANN202
         pid = TaskContext.get().partitionId()
-        name = f"{prefix}-{pid:05d}.warc.{kind}.gz"
+        name = f"seg-{pid:05d}.warc.{kind}.gz"
         path = os.path.join(out_dir, name)
         fh = None
         n = skipped = 0
@@ -868,13 +850,11 @@ def _write_segments(
     return df.select(record).mapInArrow(write, schema)
 
 
-def write_wet_segments(
-    df: DataFrame, out_dir: str, run_date_iso: str, prefix: str = "seg"
-) -> DataFrame:
+def write_wet_segments(df: DataFrame, out_dir: str, run_date_iso: str) -> DataFrame:
     """Distributed WET sink: ``wet_record`` strings -> ``.warc.wet.gz``
     segment files, one per task (``_write_segments``). Returns the
     manifest (wet_file, n_records, n_bytes, n_skipped)."""
-    return _write_segments(df, "wet", out_dir, run_date_iso, prefix)
+    return _write_segments(df, "wet", out_dir, run_date_iso)
 
 
 def warc_revisit_record(
@@ -1033,11 +1013,9 @@ def wat_record_expr(
     )
 
 
-def write_wat_segments(
-    df: DataFrame, out_dir: str, run_date_iso: str, prefix: str = "seg"
-) -> DataFrame:
+def write_wat_segments(df: DataFrame, out_dir: str, run_date_iso: str) -> DataFrame:
     """Distributed WAT sink — the metadata twin of write_wet_segments:
     ``wat_record`` strings -> ``.warc.wat.gz`` segment files, one per
     task (``_write_segments``). Returns the manifest (wat_file,
     n_records, n_bytes, n_skipped)."""
-    return _write_segments(df, "wat", out_dir, run_date_iso, prefix)
+    return _write_segments(df, "wat", out_dir, run_date_iso)
