@@ -204,6 +204,58 @@ def test_pipeline_build_py4j_round_trips(spark, tmp_path):
     assert len(calls) < 2_190, len(calls)
 
 
+def _write_plan_nodes(spark, run_id: str) -> list[str]:
+    """Node names of the physical plans that ran the jobs of
+    ``commit_run``'s write of ``run_id`` (job group
+    ``webxtract-write-{run_id}``), read from the driver's SQL status
+    store, which is kept with the UI off too. Only the last 100 SQL
+    executions are searched."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(f"webxtract-write-{run_id}")
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    execs = store.executionsList(max(0, n - 100), 100)
+    names = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if any(e.jobs().contains(j) for j in jobs):
+            nodes = store.planGraph(e.executionId()).allNodes()
+            names += [nodes.apply(k).name() for k in range(nodes.size())]
+    return names
+
+
+def test_commit_write_plans_no_sort(spark, tmp_path):
+    """commit_run adds the run_id literal right under the write, so the
+    write of its run_id partition plans no Sort (a sort by a constant
+    that takes a Tungsten page per write task): on the batch job with
+    the default transform and with run_pipeline, and on a microbatch of
+    the audited stream."""
+    from webxtract.audit import run_extraction_job
+    from webxtract.pipeline import run_pipeline
+    from webxtract.streaming import start_audited_extraction_stream
+    from webxtract.synth import gen_pages, to_parquet
+
+    pages, _ = gen_pages(20, "2026-01-15", seed=5)
+    to_parquet(pages, str(tmp_path / "pages.parquet"))
+    drops = str(tmp_path / "drops")
+    spark.read.parquet(str(tmp_path / "pages.parquet")).coalesce(1).write.parquet(drops)
+    df = spark.read.parquet(drops)
+    run_extraction_job(df, str(tmp_path / "x"), str(tmp_path / "xa"), "nosort-x", spark)
+    run_extraction_job(
+        df, str(tmp_path / "p"), str(tmp_path / "pa"), "nosort-p", spark,
+        transform=run_pipeline,
+    )
+    start_audited_extraction_stream(
+        spark, drops, str(tmp_path / "s"), str(tmp_path / "sa"), str(tmp_path / "ck")
+    ).awaitTermination(300)
+    assert spark.read.parquet(str(tmp_path / "s")).count() == 20
+    for run_id in ("nosort-x", "nosort-p", "batch-0"):
+        nodes = _write_plan_nodes(spark, run_id)
+        assert "WriteFiles" in nodes, (run_id, nodes)
+        assert "Sort" not in nodes, (run_id, nodes)
+
+
 def test_benchmark_overlap_broadcasts_benchmark_side(spark):
     """Decontamination must broadcast the (small) benchmark shingle
     set: the corpus side is the 100 TB table and must never shuffle

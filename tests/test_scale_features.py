@@ -61,6 +61,33 @@ def test_audit_and_resume(spark, corpus, tmp_path):
     assert resume_filter(pages, out, spark).count() == 0
 
 
+def test_num_partitions_with_transform_raises_before_any_job(spark, corpus, tmp_path):
+    """``num_partitions`` with a ``transform`` would shuffle the raw pages
+    and then the transform's own partitioning again: it is refused
+    before any Spark job starts, and nothing is written."""
+    import os
+
+    from webxtract.audit import run_extraction_job
+    from webxtract.pipeline import run_pipeline
+
+    pages = spark.read.parquet(corpus[0])
+    out = str(tmp_path / "out")
+    sc = spark.sparkContext
+    group = "num-partitions-with-transform"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        with pytest.raises(ValueError, match="num_partitions is for the default extract"):
+            run_extraction_job(pages, out, str(tmp_path / "audit"), "np", spark,
+                               num_partitions=4, transform=run_pipeline)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    assert tracker.getJobIdsForGroup(group) == []
+    assert tracker.getJobIdsForGroup("webxtract-write-np") == []
+    assert not os.path.exists(out)
+
+
 def test_audit_read_back_lists_only_this_run(spark, corpus, tmp_path):
     """With 20 prior runs committed, a job lists the history once (the
     resume anti-join's done-set) and its audit reads back only its own

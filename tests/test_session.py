@@ -50,6 +50,43 @@ def test_session_adds_no_jvm_flags_and_extra_conf_wins(spark):
                 if o.startswith("-X") and o != "-XX:+IgnoreUnrecognizedVMOptions"] == []
 
 
+def test_page_size_is_smallest_power_of_two_covering_the_heap():
+    """On a local master the Tungsten page is the smallest power of two,
+    at least 1 MiB, whose 8,192 pages (one task's page table) cover the
+    driver heap the session gets, derived or set in extra_conf."""
+    from webxtract.session import _mebibytes, session_conf
+
+    masters = [f"local[{n}]" for n in range(1, 65)] + ["local[*]"]
+    heaps = (None, {"spark.driver.memory": "4g"}, {"spark.driver.memory": "1536m"},
+             {"spark.driver.memory": "64g"})
+    for master in masters:
+        for extra in heaps:
+            conf = session_conf(master, None, extra)
+            page = _mebibytes(conf["spark.buffer.pageSize"])
+            heap = _mebibytes(conf["spark.driver.memory"])
+            assert page & (page - 1) == 0 and 1 <= page <= 64, (master, extra, page)
+            assert 8192 * page >= heap, (master, extra, page)
+            assert page == 1 or 8192 * page // 2 < heap, (master, extra, page)
+    pages = {n: session_conf(f"local[{n}]", None, None)["spark.buffer.pageSize"]
+             for n in (4, 32, 64)}
+    assert pages == {4: "1m", 32: "8m", 64: "8m"}
+
+
+def test_page_size_extra_conf_wins_and_non_local_keeps_spark_default():
+    from webxtract.session import session_conf
+
+    extra = {"spark.buffer.pageSize": "64m", "spark.driver.memory": "2g"}
+    assert session_conf("local[4]", None, extra)["spark.buffer.pageSize"] == "64m"
+    for master in ("yarn", "spark://host:7077", None):
+        assert "spark.buffer.pageSize" not in session_conf(master, None, None)
+
+
+def test_shared_local4_session_pages_are_1_mib(spark):
+    # the conftest session: local[4] with a 4g heap
+    memory_manager = spark.sparkContext._jsc.sc().env().memoryManager()
+    assert memory_manager.pageSizeBytes() == 1 << 20
+
+
 # Runs in a fresh interpreter: the shared test session's warm-up job ran
 # long before this test and may have left the status store's retained jobs.
 _WARMUP_PROBE = textwrap.dedent("""

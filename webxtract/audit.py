@@ -119,11 +119,21 @@ def run_extraction_job(
     ``transform`` swaps the per-page job body (default: extract_pages;
     the CLI passes the full validation pipeline for --mode pipeline) —
     it must preserve the url / n_bytes / parse_failure columns the
-    observe stats and audit aggregation read."""
+    observe stats and audit aggregation read. ``num_partitions`` is for
+    the default body only: with a ``transform`` too it raises
+    ValueError before any Spark job, since ``run_pipeline`` partitions
+    by the same key itself and a repartition of the raw pages before it
+    would shuffle the html twice."""
     from webxtract.ops.extract import extract_pages
 
     if transform is None:
         transform = extract_pages
+    elif num_partitions is not None:
+        raise ValueError(
+            "num_partitions is for the default extract transform: the pipeline "
+            "partitions once, by the salted url key at spark.sql.shuffle.partitions, "
+            "which spark-submit sets (--conf spark.sql.shuffle.partitions=N)"
+        )
     todo = resume_filter(pages, output_path, spark)
     if num_partitions:
         todo = partition_by_url(todo, num_partitions)
@@ -165,16 +175,23 @@ def commit_run(
     write task's duration from the driver's status store.
     ``metrics_errors`` names every metric read that failed or came back
     short (empty on success); the run still commits, with NULL
-    ``wall_ms`` where a wall is missing."""
+    ``wall_ms`` where a wall is missing.
+
+    ``run_id`` is added after the ``observe``, directly under the write.
+    The write partitions by ``run_id``, and Spark sorts each write task's
+    rows by its partition columns unless it can see they are constant.
+    Below the ``observe``, its CollectMetrics node hides the literal from
+    the write's planning: every write task then sorts its rows by one
+    constant, which takes a Tungsten page per task and, at scale,
+    buffers (and may spill) the whole partition. Above it the write plan
+    has no Sort. ``partition_id`` stays below the ``observe``: it is the
+    write task index either way."""
     from pyspark.sql import Observation
 
-    extracted = (
-        frame.withColumn("run_id", F.lit(run_id))
-        # recorded at write time: spark_partition_id() in the write
-        # stage IS the write task index, so the read-back audit can
-        # group by the producing task and look up its scheduler wall time
-        .withColumn("partition_id", F.spark_partition_id())
-    )
+    # recorded at write time: spark_partition_id() in the write stage IS
+    # the write task index, so the read-back audit can group by the
+    # producing task and look up its scheduler wall time
+    extracted = frame.withColumn("partition_id", F.spark_partition_id())
     # read back only this run's partition directory, named the way the
     # writer names it, and only the columns the audit aggregates, under
     # the schema the write used
@@ -198,7 +215,7 @@ def commit_run(
             F.coalesce(F.sum(F.col("parse_failure").cast("long")), F.lit(0)).alias(
                 "parse_failures"
             ),
-        )
+        ).withColumn("run_id", F.lit(run_id))
         group = f"webxtract-write-{run_id}"
         sc = spark.sparkContext
         # a foreachBatch call runs on the stream's thread, whose own job

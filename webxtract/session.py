@@ -2,7 +2,11 @@
 
 Centralizes every config that affects correctness (timezone, ANSI mode)
 or 100TB-scale behavior (AQE, Arrow batch size, partition byte caps) so
-tests, bench and production jobs agree.
+tests, bench and production jobs agree. On a local master the driver
+heap, the shuffle partitions and the Tungsten page size follow the
+thread count: the page is the smallest power of two, at least 1 MiB,
+whose 8,192 pages cover the heap (1 MiB at local[4], not the ~64 MB
+Spark would give each task's sorts, aggregates and Arrow queues).
 
 A new SparkContext also gets its Python workers started in the
 background: right after the package zip is shipped, a daemon thread
@@ -41,19 +45,36 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when that variable
     is set; on a real cluster it is supplied by spark-submit and must be
-    left None. The heap and shuffle-partition defaults follow the thread
-    count of a local master (``local_threads``); ``extra_conf`` overrides
-    any of them.
+    left None. The conf is ``session_conf``'s: the heap, the shuffle
+    partitions and the page size (``spark.buffer.pageSize``) follow the
+    thread count of a local master (``local_threads``), the page size
+    through the heap the session gets, an ``extra_conf``
+    ``spark.driver.memory`` included. A non-local master keeps Spark's
+    page size. ``extra_conf`` overrides any of them.
     """
     if master is None and os.environ.get("SPARK_GRAFT_CPUS"):
         cpus = os.environ["SPARK_GRAFT_CPUS"]
         master = f"local[{local_threads(f'local[{cpus}]')}]"
-    n_threads = local_threads(master)
 
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
+    for k, v in session_conf(master, shuffle_partitions, extra_conf).items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
+    if _ship_package(spark):
+        _start_python_workers(spark)
+    return spark
 
+
+def session_conf(
+    master: str | None,
+    shuffle_partitions: int | None,
+    extra_conf: dict[str, str] | None,
+) -> dict[str, str]:
+    """The conf ``get_spark`` builds a session of ``master`` with:
+    the package's settings, then ``extra_conf`` over them."""
+    n_threads = local_threads(master)
     conf = {
         # Determinism: frozen zone for all timestamp/date arithmetic.
         "spark.sql.session.timeZone": "UTC",
@@ -87,14 +108,39 @@ def get_spark(
         # ~1,750). Error messages lose only the Python call site.
         "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    if _ship_package(spark):
-        _start_python_workers(spark)
-    return spark
+    conf.update(extra_conf or {})
+    if n_threads is not None:
+        # Tungsten page size. Spark's default divides the execution
+        # memory by threads x 16, 64 MB at local[4] with an 8g heap, and
+        # every sort, aggregate, join, window and Arrow row queue of
+        # every task takes one such page, however few rows it holds.
+        # Here: the smallest power of two, at least 1 MiB, for which a
+        # task's 8,192 pages still cover the heap the session gets.
+        page = _page_size_mib(_mebibytes(conf["spark.driver.memory"]))
+        conf.setdefault("spark.buffer.pageSize", f"{page}m")
+    return conf
+
+
+def _page_size_mib(heap_mib: int) -> int:
+    """The Tungsten page size, in MiB, for a driver heap of ``heap_mib``
+    MiB: the smallest power of two, at least 1, whose 8,192 pages (the
+    page table of one task) cover the heap."""
+    mib = 1
+    while mib * 8192 < heap_mib:
+        mib *= 2
+    return mib
+
+
+def _mebibytes(size: str) -> int:
+    """MiB in a JVM memory string (``4g``, ``512m``, ``2048``: no unit
+    means MiB, as for ``spark.driver.memory``), rounded up."""
+    m = re.fullmatch(r"(\d+)(?:([kmgtp])b?)?", size.strip().lower())
+    if m is None:
+        raise ValueError(f"not a memory size: {size!r}")
+    n, unit = int(m.group(1)), m.group(2) or "m"
+    if unit == "k":
+        return -(-n // 1024)
+    return n * 1024 ** "mgtp".index(unit)
 
 
 def local_threads(master: str | None) -> int | None:
